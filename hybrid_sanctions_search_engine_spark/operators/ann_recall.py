@@ -24,6 +24,7 @@ import os
 
 import numpy as np
 
+from ..sources.tables import local_frame
 from .similarity import _LSH_TOP_BITS, lsh_signature_of
 
 
@@ -383,7 +384,6 @@ def recall_report(
     pq_refines = [1, 2, 4, 8]
     sq_refines = [1, 2, 4]
     pq_n_probe = 4
-    import pandas as pd
 
     base = workdir or tempfile.mkdtemp(prefix="ann_recall_")
     ivf_dir = os.path.join(base, "ivf")
@@ -398,10 +398,10 @@ def recall_report(
                 n=n, dim=dim, n_clusters=n_clusters, noise=noise, query_mode=mode
             )
             if mode == "member":  # x is identical across modes (same seed)
-                emb = spark.createDataFrame(
-                    pd.DataFrame(
-                        {"vec_id": np.arange(n, dtype=np.int64), "embedding": list(x)}
-                    )
+                emb = local_frame(
+                    spark,
+                    list(enumerate(x)),
+                    "vec_id long, embedding array<double>",
                 )
                 write_ivf_index(emb, ivf_dir, n_centroids=n_centroids)
                 from .pq import write_ivf_pq_index

@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
 from .postings import CorpusStats, build_postings, corpus_stats, doc_lengths
 
 K1 = 1.2
@@ -203,7 +204,8 @@ def bm25_topk_multi(
     scored = with_dl.withColumn("term_score", term_score).select(
         "doc_id", "term", "tf", "term_score"
     )
-    members = spark.createDataFrame(
+    members = local_frame(
+        spark,
         [
             (m, t)
             for m, ts, _ in modes
@@ -497,7 +499,7 @@ def batch_topk(
     ]
     out_schema = "query_id long, doc_id long, score double, rank int, n_terms_matched int"
     if not pairs:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     all_terms = sorted({t for _, t in pairs})
     qid_list = [qid for qid, _ in queries]
     qidx = {qid: i for i, qid in enumerate(qid_list)}

@@ -29,6 +29,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 # prepare_scorer(qn) -> score_masked(qi, masked_codes, masked_cells) -> scores
 PrepareScorer = Callable[
     [np.ndarray], Callable[[int, np.ndarray, np.ndarray], np.ndarray]
@@ -73,7 +75,7 @@ def fused_cell_probe_many(
     spark = indexed.sparkSession
     out_schema = f"query_id long, {id_col} long, cos_sim double"
     if not queries:
-        return [] if as_rows else spark.createDataFrame([], out_schema)
+        return [] if as_rows else local_frame(spark, [], out_schema)
     qids = np.asarray([q for q, _ in queries], dtype=np.int64)
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     qnorms = np.array(

@@ -37,6 +37,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_frame
+
 
 class _HnswGraph:
     """In-memory single-partition HNSW over a fixed matrix (rows = vectors,
@@ -187,7 +189,8 @@ def ann_design_report(
         n=n, dim=dim, n_clusters=n_clusters, n_queries=n_queries,
         seed=seed, query_mode="member",
     )
-    emb = spark.createDataFrame(
+    emb = local_frame(
+        spark,
         [(i, x[i].tolist()) for i in range(n)],
         "vec_id long, embedding array<double>",
     ).persist()
@@ -208,7 +211,8 @@ def ann_design_report(
             for i in range(q.shape[0])
         }
         union = sorted({c for cs in cells.values() for c in cs})
-        celldf = spark.createDataFrame(
+        celldf = local_frame(
+            spark,
             [(i, c) for i, cs in cells.items() for c in cs],
             "query_id long, ivf_cell int",
         )
@@ -320,7 +324,7 @@ def hnsw_probe_partitioned(
     spark = embeddings.sparkSession
     out_schema = f"query_id long, {id_col} long, cos_sim double"
     if not queries:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     qids = [q for q, _ in queries]
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     qmat = qmat / np.maximum(

@@ -12,6 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..plans.hybrid import SearchTraceStep
+from ..sources.tables import local_frame
 
 TRACE_SCHEMA = "query string, stage string, hits int, best_score double, took_ms double"
 
@@ -25,7 +26,7 @@ def traces_to_df(
         for query, steps in traces
         for s in steps
     ]
-    return spark.createDataFrame(rows, TRACE_SCHEMA)
+    return local_frame(spark, rows, TRACE_SCHEMA)
 
 
 def query_perf_stats(metrics: DataFrame) -> DataFrame:

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_col
 from ..sources.fs import fs_for
+from ..sources.tables import local_frame
 
 
 def cosine_to_query_udf(query_vec: list[float]):
@@ -107,7 +108,7 @@ def knn_bruteforce_many(
     spark = embeddings.sparkSession
     out_schema = f"query_id long, {id_col} long, cos_sim double"
     if not queries:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     qids = np.asarray([q for q, _ in queries], dtype=np.int64)
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     qnorms = np.maximum(np.linalg.norm(qmat, axis=1), 1e-300)
@@ -469,7 +470,7 @@ def knn_ivf_probe_many(
     spark = indexed.sparkSession
     out_schema = f"query_id long, {id_col} long, cos_sim double"
     if not queries:
-        return [] if as_rows else spark.createDataFrame([], out_schema)
+        return [] if as_rows else local_frame(spark, [], out_schema)
     qids = np.asarray([q for q, _ in queries], dtype=np.int64)
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     qnorms = np.array(

@@ -39,6 +39,7 @@ from ..operators.postings import (
     term_doc_freq,
 )
 from ..operators.similarity import knn_bruteforce
+from ..sources.tables import local_frame
 from .wand import query_terms
 
 
@@ -547,7 +548,8 @@ class HybridSearchPlan:
             msm_n = es_min_should_match(min_should_match, len(toks))
             present = [t for t in toks if t in dset]
             if not present or msm_n > len(present):
-                return self.docs.sparkSession.createDataFrame(
+                return local_frame(
+                    self.docs.sparkSession,
                     [], "doc_id long, score double"
                 )
             query_run, msm_run = present, msm_n
@@ -650,7 +652,8 @@ class HybridSearchPlan:
         else:
             weights = {}
         if not weights:
-            return self.docs.sparkSession.createDataFrame(
+            return local_frame(
+                self.docs.sparkSession,
                 [], "doc_id long, score double"
             )
         if self.index_df is not None:
@@ -669,7 +672,8 @@ class HybridSearchPlan:
             scored = score_terms(
                 self.postings, self.dl, list(weights), self.stats
             )
-            wdf = self.docs.sparkSession.createDataFrame(
+            wdf = local_frame(
+                self.docs.sparkSession,
                 [(t, w) for t, w in weights.items()],
                 "term string, term_weight double",
             )
@@ -700,7 +704,7 @@ class HybridSearchPlan:
         spark = self.docs.sparkSession
         have_base = self.embeddings is not None or self.ann_index_dir is not None
         if not have_base and self.delta_embeddings is None:
-            return spark.createDataFrame([], "doc_id long, score double, cos_sim double")
+            return local_frame(spark, [], "doc_id long, score double, cos_sim double")
         qv = self.encoder.encode_one(query)
         if self.ann_index_dir is not None and self.ann_kind == "ivf":
             from ..operators.similarity import knn_ivf_probe
@@ -920,7 +924,8 @@ class HybridSearchPlan:
 
                 dates, ids = extract_anchors(query)
                 if dates or ids:
-                    vector = spark.createDataFrame(
+                    vector = local_frame(
+                        spark,
                         [{"doc_id": d, "score": s} for d, s in vector_best.items()],
                         schema,
                     )
@@ -957,7 +962,8 @@ class HybridSearchPlan:
         if opts.threshold > 0.0:
             fused = {d: s for d, s in fused.items() if s >= opts.threshold}
         top = sorted(fused.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-        result = spark.createDataFrame(
+        result = local_frame(
+            spark,
             [{"doc_id": d, "score": s} for d, s in top], schema
         )
         trace.append(
@@ -1001,7 +1007,8 @@ class HybridSearchPlan:
             by_len.setdefault(min(len(t), 2), []).append((qid, t))
         cands = []
         for plen, pairs in sorted(by_len.items()):
-            qdf = spark.createDataFrame(
+            qdf = local_frame(
+                spark,
                 pairs, "query_id long, qterm string"
             ).withColumn("pfx", F.substring("qterm", 1, plen))
             cands.append(
@@ -1289,7 +1296,8 @@ class HybridSearchPlan:
                         triples.append(
                             (q, bi, (sig >> (bi * bb)) & ((1 << bb) - 1))
                         )
-                banddf = spark.createDataFrame(
+                banddf = local_frame(
+                    spark,
                     triples,
                     "query_id long, lsh_band_idx int, lsh_band_val int",
                 )
@@ -1335,7 +1343,8 @@ class HybridSearchPlan:
                             bs.add(b)
                     bands[q] = bs
                 union_bands = sorted({b for bs in bands.values() for b in bs})
-                banddf = spark.createDataFrame(
+                banddf = local_frame(
+                    spark,
                     [(q, b, sigs[q]) for q, bs in bands.items() for b in bs],
                     "query_id long, lsh_band int, qsig long",
                 )
@@ -1434,7 +1443,8 @@ class HybridSearchPlan:
             # qtext (for the L9 rerank) + pre-extracted anchors join in as a
             # broadcast side table; doc text joins only transiently for the
             # in-cluster exprs and never reaches the driver
-            qmeta = spark.createDataFrame(
+            qmeta = local_frame(
+                spark,
                 [
                     {
                         "query_id": q,
@@ -1585,7 +1595,8 @@ class HybridSearchPlan:
                 scored = score_terms(
                     self.postings, self.dl, all_terms, self.stats
                 )
-                wdf = spark.createDataFrame(
+                wdf = local_frame(
+                    spark,
                     [
                         (r["query_id"], r["term"], float(r["term_weight"]))
                         for r in expanded_rows
@@ -1894,7 +1905,8 @@ class HybridSearchPlan:
                 "escalated": qid in escalating,
                 "vector_fallback_used": use_vector,
             }
-        result = spark.createDataFrame(
+        result = local_frame(
+            spark,
             out_rows, "query_id long, doc_id long, score double, rank int"
         )
         with trace_lock:

@@ -40,6 +40,7 @@ from ..functions.codec import delta_decode
 from ..functions.tokenize import py_index_tokens
 from ..operators.bm25 import group_partitioned
 from ..sources.index_io import IndexMeta, load_index
+from ..sources.tables import local_frame
 
 RESULT_SCHEMA = StructType(
     [
@@ -158,7 +159,7 @@ def topk_search(
         index_df, meta = load_index(spark, index_dir)
     terms = query_terms(query) if isinstance(query, str) else list(query)
     if not terms:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_frame(spark, [], RESULT_SCHEMA)
     shard_of = _shard_of_terms(terms, meta.n_shards)
     shards = sorted(set(shard_of.values()))
 
@@ -236,7 +237,7 @@ def topk_search(
         .collect()
     )
     if not probe:
-        return spark.createDataFrame([], RESULT_SCHEMA)
+        return local_frame(spark, [], RESULT_SCHEMA)
 
     # msm_n resolved above against the DISTINCT term count: n_terms_matched
     # tallies distinct terms, and ES counts each duplicate clause as
@@ -319,7 +320,7 @@ def topk_search(
             .groupBy("chunk")
             .applyInPandas(score_fn, RESULT_SCHEMA)
         )
-    all_res = spark.createDataFrame(seed_res, RESULT_SCHEMA)
+    all_res = local_frame(spark, seed_res, RESULT_SCHEMA)
     if rest is not None:
         all_res = all_res.unionByName(rest)
     return all_res.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
@@ -418,7 +419,7 @@ def batch_topk_indexed(
         qid_list = tok_qids
     out_schema = "query_id long, doc_id long, score double, rank int, n_terms_matched int"
     if not triples:
-        return spark.createDataFrame([], out_schema)
+        return local_frame(spark, [], out_schema)
     all_terms = sorted({t for _, t, _ in triples})
     qidx = {qid: i for i, qid in enumerate(qid_list)}
     term_to_qidx: dict[str, list[tuple[int, float]]] = {}
@@ -664,7 +665,7 @@ def phrase_search(
         )
     terms = query_terms(phrase) if isinstance(phrase, str) else list(phrase)
     if not terms:
-        return spark.createDataFrame([], PHRASE_SCHEMA)
+        return local_frame(spark, [], PHRASE_SCHEMA)
     shard_of = _shard_of_terms(terms, meta.n_shards)
     shards = sorted(set(shard_of.values()))
     matched = index_df.where(
@@ -727,7 +728,7 @@ def batch_phrase_search(
     ]
     qterms = [(qid, ts) for qid, ts in qterms if ts]
     if not qterms:
-        return spark.createDataFrame([], BATCH_PHRASE_SCHEMA)
+        return local_frame(spark, [], BATCH_PHRASE_SCHEMA)
     all_terms = sorted({t for _, ts in qterms for t in ts})
     shard_of = _shard_of_terms(all_terms, meta.n_shards)
     shards = sorted(set(shard_of.values()))

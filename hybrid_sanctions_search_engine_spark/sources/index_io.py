@@ -197,6 +197,12 @@ def _aggregate_raw_rows(
     aggregation and the shard exchange were keyed compatibly, so one
     exchange can serve both).  A term's rows still all co-locate in the
     shard, so df stays derivable locally."""
+    if len(pdf) == 0:
+        i64, u64 = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64)
+        return (
+            i64, np.empty(0, dtype=object), i64, i64, u64, u64, i64,
+            i64 if store_positions else None,
+        )
     codes, uniqs = pd.factorize(pdf["term"])
     uniq_arr = np.asarray(uniqs, dtype=object)
     order_u = np.argsort(uniq_arr)  # lexicographic term order

@@ -8,8 +8,12 @@ column pruning) at test scale.
 from __future__ import annotations
 
 import os
+from typing import Any, Iterable
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -36,6 +40,35 @@ def load_table(spark: SparkSession, name: str, directory: str | None = None) -> 
 
 def load_documents(spark: SparkSession, directory: str | None = None) -> DataFrame:
     return load_table(spark, "documents", directory)
+
+
+def local_frame(
+    spark: SparkSession, rows: Iterable[Any], schema: StructType | str
+) -> DataFrame:
+    """A driver-side row list as a DataFrame that costs no Spark job.
+
+    ``rows`` are dicts (matched by field name) or tuples/``Row``s
+    (positional), exactly as ``spark.createDataFrame(rows, schema)`` reads
+    them; ``schema`` is a DDL string or a ``StructType``.  The rows go
+    through a ``pyarrow.Table``, which Spark plans as a ``LocalRelation``
+    (below ``spark.sql.execution.arrow.localRelationThreshold``), so
+    collecting or broadcasting the frame submits no job.  A Python list
+    goes through ``parallelize`` + ``applySchemaToPythonRDD`` instead, and
+    every action on it pays a whole job, even when it is empty (a 160-row
+    result collect: ~0.3 s as a list, ~30 ms as a LocalRelation, local[4]).
+    """
+    struct = schema if isinstance(schema, StructType) else StructType.fromDDL(schema)
+    names = struct.names
+    tuples = [
+        tuple(r.get(n) for n in names) if isinstance(r, dict) else r for r in rows
+    ]
+    columns = list(zip(*tuples)) if tuples else [()] * len(names)
+    arrow_schema = to_arrow_schema(struct)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 def write_bucketed(

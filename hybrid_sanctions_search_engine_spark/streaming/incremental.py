@@ -30,6 +30,7 @@ from ..operators.fusion import dedup_keep_best
 from ..operators.postings import build_postings
 from ..plans.wand import topk_search
 from ..sources.index_io import IndexMeta
+from ..sources.tables import local_frame
 
 
 def start_delta_stream(
@@ -704,7 +705,8 @@ def delta_bm25_topk(
     )
     if term_weights is not None:
         spark = delta_postings.sparkSession
-        wdf = spark.createDataFrame(
+        wdf = local_frame(
+            spark,
             [(t, float(w)) for t, w in term_weights.items()],
             "term string, term_weight double",
         )
@@ -765,7 +767,8 @@ def batch_delta_topk(
     )
 
     if not weighted_terms:
-        return spark.createDataFrame(
+        return local_frame(
+            spark,
             [], "query_id long, doc_id long, score double"
         )
     if delta_stats is not None:
@@ -901,7 +904,8 @@ def search_many_with_delta(
         top = sorted(per_q[qid], key=lambda kv: (-kv[1], kv[0]))[:k]
         for rank, (doc, s) in enumerate(top, start=1):
             out.append({"query_id": qid, "doc_id": doc, "score": s, "rank": rank})
-    return spark.createDataFrame(
+    return local_frame(
+        spark,
         out, "query_id long, doc_id long, score double, rank int"
     )
 

@@ -10,6 +10,7 @@ measurable surface for the F7–F11 morphology/role/diminutive/gender stack.
 from __future__ import annotations
 
 import json
+import os
 
 import pytest
 
@@ -20,10 +21,13 @@ from hybrid_sanctions_search_engine_spark.functions.person_names import (
 
 GOLDEN_PATH = "/root/reference/tests/golden_cases/golden_cases.json"
 
-with open(GOLDEN_PATH, encoding="utf-8") as fh:
-    CASES = json.load(fh)
+CASES = []
+if os.path.exists(GOLDEN_PATH):
+    with open(GOLDEN_PATH, encoding="utf-8") as fh:
+        CASES = json.load(fh)
 
 
+@pytest.mark.requires_reference(GOLDEN_PATH)
 @pytest.mark.parametrize("case", CASES, ids=[c["id"] for c in CASES])
 def test_golden_normalized(case):
     got = normalize_persons(case["input"], case.get("language", "auto"))

@@ -301,3 +301,16 @@ def test_raw_encode_matches_aggregated():
         a = [tuple(v) if isinstance(v, list) else v for v in out_raw[col]]
         b = [tuple(v) if isinstance(v, list) else v for v in out_agg[col]]
         assert a == b, col
+
+
+def test_raw_encode_empty_frame():
+    """An empty raw frame encodes to the empty shard frame (it raised an
+    IndexError before the early return)."""
+    import pandas as pd
+
+    from hybrid_sanctions_search_engine_spark.sources.index_io import (
+        _encode_posting_frame,
+    )
+
+    cols = ["term", "chunk", "doc_id", "doc_len", "pos"]
+    assert _encode_posting_frame(pd.DataFrame(columns=cols), 0, True, raw=True)[1:] == (0, 0)

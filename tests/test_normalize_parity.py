@@ -174,6 +174,7 @@ def test_tokenizer_stopword_fallback():
     assert tokens == ["⁇"]
 
 
+@pytest.mark.requires_reference(REF_SRC)
 def test_default_stopwords_match_reference():
     """P8: the engine's DEFAULT stop-word set equals the reference's full
     STOP_ALL dictionary (lowercased), not a curated subset."""

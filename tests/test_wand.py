@@ -616,6 +616,46 @@ def test_batch_scorer_partitioning_pinned(spark, corpus):
     assert "REPARTITION_BY_NUM" in below, below  # AQE-exempt form
 
 
+def test_pre_grouped_scorer_plans_zero_exchanges(spark, corpus):
+    """``pre_grouped=True`` over a standing plan's cached
+    ``pmod(chunk, batch_n_groups)`` layout plans NO exchange between the
+    cached scan and the Arrow scorer — the groupBy's distribution is
+    satisfied by the cache.  A group count that drifts from the cached
+    layout brings the per-batch shuffle back (the negative control).
+
+    The cache must be materialized (a standing plan's first batch does
+    that): until its adaptive plan is final, the cached scan reports no
+    output partitioning and Catalyst plans the exchange anyway."""
+    from hybrid_sanctions_search_engine_spark.plans.hybrid import HybridSearchPlan
+    from hybrid_sanctions_search_engine_spark.plans.wand import batch_topk_indexed
+
+    docs, index_dir, _, _ = corpus
+    plan = HybridSearchPlan(docs, index_dir=index_dir)
+    batch = [(1, "spark query"), (2, "table scan")]
+
+    def below_scorer(n_groups, pre_grouped):
+        df = batch_topk_indexed(
+            spark, index_dir, batch, k=5, index_df=plan.index_df,
+            meta=plan.index_meta, n_groups=n_groups, pre_grouped=pre_grouped,
+        )
+        text = df._jdf.queryExecution().executedPlan().toString()
+        pos = text.find("FlatMapGroupsInPandas")
+        end = text.find("InMemoryTableScan", pos)
+        assert 0 <= pos < end, text
+        return df, text[pos:end]
+
+    try:
+        plan.index_df.count()
+        df, below = below_scorer(plan._idx_n_groups, True)
+        assert "Exchange" not in below, below
+        want, _ = below_scorer(plan._idx_n_groups, False)
+        assert sorted(df.collect()) == sorted(want.collect())
+        _, drifted = below_scorer(plan._idx_n_groups + 1, True)
+        assert "Exchange hashpartitioning" in drifted, drifted
+    finally:
+        plan.close()
+
+
 def test_es_min_should_match_rules():
     """ES/Lucene resolution rules for the simple forms the reference uses:
     positive/negative int, positive/negative percent, floor rounding,
