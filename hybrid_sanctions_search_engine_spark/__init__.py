@@ -14,4 +14,8 @@ Layout:
     streaming/   incremental index maintenance (delta overlay)
 """
 
+from .functions.worker_env import install_zip_invalidate_check
+
 __version__ = "0.1.0"
+
+install_zip_invalidate_check()

@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import local_frame
 from .postings import CorpusStats, build_postings, corpus_stats, doc_lengths
+from .similarity import local_topk
 
 K1 = 1.2
 B = 0.75
@@ -398,7 +399,7 @@ def make_batch_group_scorer(
                     continue
                 d = docs_local[cand]
                 s = acc[bi, cand]
-                order = cand[np.lexsort((d, -s))[:kk]]
+                order = cand[local_topk(d, s, kk)]
                 out_q.append(np.full(order.size, qids_np[b0 + bi]))
                 out_d.append(docs_local[order])
                 out_s.append(acc[bi, order])

@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.tables import local_frame
+from .similarity import local_topk, merge_local_topk, vector_rows
 
 # prepare_scorer(qn) -> score_masked(qi, masked_codes, masked_cells) -> scores
 PrepareScorer = Callable[
@@ -70,8 +71,6 @@ def fused_cell_probe_many(
        gemv), merged driver-side the same way.  ``as_rows=True`` returns
        the merged (query_id, id, cos_sim) tuples directly.
     """
-    from .similarity import merge_local_topk
-
     spark = indexed.sparkSession
     out_schema = f"query_id long, {id_col} long, cos_sim double"
     if not queries:
@@ -115,7 +114,7 @@ def fused_cell_probe_many(
             mask = np.isin(cell, np.asarray(probe, dtype=np.int64))
             s = score_masked(qi, codes[mask], cell[mask])
             idsm = ids[mask]
-            top = np.lexsort((idsm, -s))[:nsel]
+            top = local_topk(idsm, s, nsel)
             out_q.append(np.full(top.size, qids[qi]))
             out_i.append(idsm[top])
             out_s.append(s[top])
@@ -149,9 +148,8 @@ def fused_cell_probe_many(
         if not pdfs:
             return
         pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+        x, norms = vector_rows(pdf[vec_col])
         ids = pdf[id_col].to_numpy(dtype=np.int64)
-        norms = np.maximum(np.linalg.norm(x, axis=1), 1e-300)
         out_q, out_i, out_s = [], [], []
         for qi in range(nq):
             mine = cand_arr.get(int(qids[qi]))
@@ -163,7 +161,7 @@ def fused_cell_probe_many(
             xs = x[mask]
             cos = (xs @ qmat[qi]) / (norms[mask] * qnorms[qi])
             idsm = ids[mask]
-            top = np.lexsort((idsm, -cos))[:k]
+            top = local_topk(idsm, cos, k)
             out_q.append(np.full(top.size, qids[qi]))
             out_i.append(idsm[top])
             out_s.append(cos[top])

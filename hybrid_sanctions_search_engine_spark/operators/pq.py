@@ -51,7 +51,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.fs import fs_for
-from .similarity import knn_bruteforce, train_ivf_centroids, assign_ivf_cells
+from .similarity import (
+    assign_ivf_cells,
+    knn_bruteforce,
+    local_topk,
+    train_ivf_centroids,
+)
 
 
 def _normalized(x: np.ndarray) -> np.ndarray:
@@ -237,7 +242,7 @@ def adc_scan_topn(
             s = lut[cols, codes].sum(axis=1)
             if cent_dots is not None:
                 s = s + cent_dots[pdf[cell_col].to_numpy(dtype=np.int64)]
-            order = np.lexsort((pdf[id_col].to_numpy(), -s))[:n]
+            order = local_topk(pdf[id_col].to_numpy(), s, n)
             yield pd.DataFrame(
                 {id_col: pdf[id_col].to_numpy()[order], "adc_score": s[order]}
             )

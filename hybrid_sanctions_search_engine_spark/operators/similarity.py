@@ -26,6 +26,16 @@ from ..sources.fs import fs_for
 from ..sources.tables import local_frame
 
 
+def vector_rows(vectors: pd.Series) -> tuple[np.ndarray, np.ndarray]:
+    """An Arrow batch's vector column as a float64 matrix (via ``tolist``)
+    plus its axis-1 row norms clamped at 1e-300: the op shapes every cosine
+    scorer shares, which keeps the single-query and batched refines
+    bit-identical.  Module-level, so a UDF body that calls it makes its
+    worker import the package (see ``functions/worker_env.py``)."""
+    x = np.array(vectors.tolist(), dtype=np.float64)
+    return x, np.maximum(np.linalg.norm(x, axis=1), 1e-300)
+
+
 def cosine_to_query_udf(query_vec: list[float]):
     """Arrow UDF scoring a whole batch against one query: ``X @ q / (|X||q|)``.
 
@@ -41,8 +51,7 @@ def cosine_to_query_udf(query_vec: list[float]):
 
     @pandas_udf(DoubleType())
     def cos(vs: pd.Series) -> pd.Series:
-        x = np.array(vs.tolist(), dtype=np.float64)
-        norms = np.maximum(np.linalg.norm(x, axis=1), 1e-300)
+        x, norms = vector_rows(vs)
         return pd.Series((x @ q) / (norms * qn))
 
     return cos
@@ -121,13 +130,12 @@ def knn_bruteforce_many(
         for pdf in it:
             if pdf.empty:
                 continue
-            x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+            x, norms = vector_rows(pdf[vec_col])
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            norms = np.maximum(np.linalg.norm(x, axis=1), 1e-300)
             out_q, out_i, out_s = [], [], []
             for qi in range(nq):
                 cos = (x @ qmat[qi]) / (norms * qnorms[qi])
-                top = np.lexsort((ids, -cos))[:kk]
+                top = local_topk(ids, cos, kk)
                 out_q.append(np.full(top.size, qids[qi]))
                 out_i.append(ids[top])
                 out_s.append(cos[top])
@@ -497,10 +505,9 @@ def knn_ivf_probe_many(
         if not pdfs:
             return
         pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        x = np.array(pdf[vec_col].tolist(), dtype=np.float64)
+        x, norms = vector_rows(pdf[vec_col])
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         cell = pdf[cell_col].to_numpy(dtype=np.int64)
-        norms = np.maximum(np.linalg.norm(x, axis=1), 1e-300)
         batch_cells = set(int(c) for c in np.unique(cell))
         out_q, out_i, out_s = [], [], []
         for qi in range(nq):
@@ -511,7 +518,7 @@ def knn_ivf_probe_many(
             xs = x[mask]
             cos = (xs @ qmat[qi]) / (norms[mask] * qnorms[qi])
             idsm = ids[mask]
-            top = np.lexsort((idsm, -cos))[:kk]
+            top = local_topk(idsm, cos, kk)
             out_q.append(np.full(top.size, qids[qi]))
             out_i.append(idsm[top])
             out_s.append(cos[top])
@@ -547,6 +554,15 @@ def knn_ivf_probe_many(
         .where(F.col("_rn") <= k)
         .drop("_rn")
     )
+
+
+def local_topk(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
+    """Positions of the top ``k`` scores under (score desc, id asc): the
+    task-local half of the engine's total order, ``merge_local_topk`` is
+    the driver half.  Every UDF body that selects a local top-k calls this
+    module-level function, so the worker that unpickles the body imports
+    the package (see ``functions/worker_env.py``)."""
+    return np.lexsort((ids, -scores))[:k]
 
 
 def merge_local_topk(
@@ -752,11 +768,9 @@ def cosine_pair_udf():
 
     @pandas_udf(DoubleType())
     def cos(a: pd.Series, b: pd.Series) -> pd.Series:
-        x = np.array(a.tolist(), dtype=np.float64)
-        y = np.array(b.tolist(), dtype=np.float64)
+        x, nx = vector_rows(a)
+        y, ny = vector_rows(b)
         dots = np.einsum("ij,ij->i", x, y)
-        nx = np.maximum(np.linalg.norm(x, axis=1), 1e-300)
-        ny = np.maximum(np.linalg.norm(y, axis=1), 1e-300)
         return pd.Series(dots / (nx * ny))
 
     return cos
@@ -794,9 +808,8 @@ def cosine_vs_queries_udf(qvecs: dict[int, list[float]]):
 
     @pandas_udf(DoubleType())
     def cos(emb: pd.Series, qid: pd.Series) -> pd.Series:
-        x = np.array(emb.tolist(), dtype=np.float64)
+        x, nx = vector_rows(emb)
         idx = qid.map(pos).to_numpy(dtype=np.int64)
-        nx = np.maximum(np.linalg.norm(x, axis=1), 1e-300)
         out = np.empty(x.shape[0], dtype=np.float64)
         for qi in np.unique(idx):
             m = idx == qi

@@ -47,7 +47,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.fs import fs_for
-from .similarity import knn_bruteforce, train_ivf_centroids, assign_ivf_cells
+from .similarity import (
+    assign_ivf_cells,
+    knn_bruteforce,
+    local_topk,
+    train_ivf_centroids,
+)
 
 
 def _normalized(x: np.ndarray) -> np.ndarray:
@@ -156,7 +161,7 @@ def sq8_scan_topn(
                 b"".join(pdf[code_col]), dtype=np.uint8
             ).reshape(len(pdf), dim)
             s = _sq8_scores(codes, w, b)
-            order = np.lexsort((pdf[id_col].to_numpy(), -s))[:n]
+            order = local_topk(pdf[id_col].to_numpy(), s, n)
             yield pd.DataFrame(
                 {id_col: pdf[id_col].to_numpy()[order], "sq_score": s[order]}
             )

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
 from ..functions.codec import delta_decode
 from ..functions.tokenize import py_index_tokens
 from ..operators.bm25 import group_partitioned
+from ..operators.similarity import local_topk
 from ..sources.index_io import IndexMeta, load_index
 from ..sources.tables import local_frame
 
@@ -106,7 +107,7 @@ def _score_chunks(
             qual = counts >= min_match
             uniq, sums, counts = uniq[qual], sums[qual], counts[qual]
         # exact per-chunk top-k under the global ordering (score desc, doc asc)
-        order = np.lexsort((uniq, -sums))[:k]
+        order = local_topk(uniq, sums, k)
         return pd.DataFrame(
             {
                 "doc_id": uniq[order],

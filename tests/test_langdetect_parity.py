@@ -39,7 +39,6 @@ def _ref_service():
 
 
 REF = _ref_service()
-needs_ref = pytest.mark.skipif(REF is None, reason="reference not importable")
 
 CURATED = [
     "",
@@ -158,7 +157,7 @@ def _ref_detect(texts):
     return out
 
 
-@needs_ref
+@pytest.mark.requires_reference(REF_SRC)
 def test_curated_cases_match_reference(spark):
     got = _spark_detect(spark, CURATED)
     want = _ref_detect(CURATED)
@@ -168,7 +167,7 @@ def test_curated_cases_match_reference(spark):
         assert g[1] == pytest.approx(w[1], abs=1e-9), (t, g, w)
 
 
-@needs_ref
+@pytest.mark.requires_reference(REF_SRC)
 def test_fuzz_corpus_matches_reference(spark):
     texts = _fuzz_corpus()
     got = _spark_detect(spark, texts)

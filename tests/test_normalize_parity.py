@@ -43,7 +43,6 @@ def _load_reference():
 
 
 REF_UNICODE, REF_TOKENIZER, REF_STOPS = _load_reference()
-needs_ref = pytest.mark.skipif(REF_UNICODE is None, reason="reference not importable")
 
 TRICKY = [
     "",
@@ -79,7 +78,7 @@ TRICKY = [
 ]
 
 
-@needs_ref
+@pytest.mark.requires_reference(REF_SRC)
 @pytest.mark.parametrize("text", TRICKY)
 def test_normalize_parity(text):
     ours = normalize_text(text)
@@ -87,7 +86,7 @@ def test_normalize_parity(text):
     assert ours == theirs, f"{text!r}: {ours!r} != {theirs!r}"
 
 
-@needs_ref
+@pytest.mark.requires_reference(REF_SRC)
 @pytest.mark.parametrize("text", TRICKY)
 def test_normalize_homoglyph_parity(text):
     ours = normalize_text(text, normalize_homoglyphs=True)
@@ -95,7 +94,7 @@ def test_normalize_homoglyph_parity(text):
     assert ours == theirs
 
 
-@needs_ref
+@pytest.mark.requires_reference(REF_SRC)
 @pytest.mark.parametrize("text", TRICKY)
 def test_tokenize_parity(text):
     ours_tokens, ours_quoted = strip_noise_and_tokenize(text, stop_words=REF_STOPS)
@@ -104,7 +103,7 @@ def test_tokenize_parity(text):
     assert ours_quoted == ref_meta.get("quoted_segments", [])
 
 
-@needs_ref
+@pytest.mark.requires_reference(REF_SRC)
 @settings(max_examples=300, deadline=None)
 @given(
     st.text(
@@ -147,7 +146,7 @@ def test_normalize_for_ac_basic():
     assert normalize_for_ac("O`Connor — і") == "O'Connor - i"
 
 
-@needs_ref
+@pytest.mark.requires_reference(REF_SRC)
 @pytest.mark.parametrize("text", TRICKY)
 def test_normalize_for_ac_parity(text):
     from ai_service.layers.patterns.high_recall_ac_generator import TextCanonicalizer
