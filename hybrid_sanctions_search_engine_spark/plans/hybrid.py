@@ -564,6 +564,7 @@ class HybridSearchPlan:
                 index_df=self.index_df,
                 meta=self.index_meta,
                 min_should_match=msm_run,
+                pre_grouped=True,
             ).select("doc_id", "score")
         else:
             base = bm25_topk(
@@ -667,6 +668,7 @@ class HybridSearchPlan:
                 index_df=self.index_df,
                 meta=self.index_meta,
                 term_weights=weights,
+                pre_grouped=True,
             ).select("doc_id", "score")
         else:
             scored = score_terms(

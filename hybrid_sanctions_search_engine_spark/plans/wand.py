@@ -16,7 +16,10 @@ over our own index):
     is unnecessary because chunk scoring is a vectorized numpy accumulation).
  4. surviving chunks are scored in parallel (`applyInPandas` per chunk:
     varint-decode gaps, sum float64 contributions with np.bincount, local
-    top-k), then merged with a global TakeOrderedAndProject.
+    top-k), then merged with a global TakeOrderedAndProject.  A standing
+    plan's index is cached with whole chunks per partition, so its
+    single-query calls score that cache in place instead (``pre_grouped``:
+    one wave of ``mapInPandas`` tasks, no exchange).
 
 Rank-identity vs the uncompressed DataFrame BM25 plan is asserted in
 tests/test_wand.py.
@@ -119,6 +122,64 @@ def _score_chunks(
     return score
 
 
+# the posting columns the scorers decode (the shard rows' block metadata and
+# positions stay in the scan)
+SCORE_COLS = ["term", "chunk", "df", "n_docs", "doc_gaps", "tfs", "doc_lens"]
+
+
+def _score_pre_grouped(
+    k: int,
+    meta: IndexMeta,
+    terms: list[str],
+    term_weights: dict[str, float] | None = None,
+    min_match: int = 1,
+):
+    """Single-query ``mapInPandas`` scorer over a cache whose partitions each
+    hold whole chunks (a standing plan's ``pmod(chunk, n_groups)`` layout),
+    coalesced into fewer tasks.  Rows carry their cached partition id in
+    ``part``; coalescing concatenates whole cached partitions, so each
+    partition's rows arrive contiguously and are scored — as one batch of
+    one query through ``make_batch_group_scorer`` — as soon as the next
+    partition's rows start.  Per-task memory stays at one cached
+    partition's postings.
+
+    Same per-doc results as ``_score_chunks`` over the same rows: the cache
+    is term-sorted within partitions, so both sum each doc's contributions
+    in term order (bit-parity pinned by tests/test_wand.py)."""
+    from ..operators.bm25 import make_batch_group_scorer
+    from ..sources.index_io import decode_shard_arrays
+
+    weights = term_weights or {}
+    score_group = make_batch_group_scorer(
+        {t: [(0, weights.get(t, 1.0))] for t in dict.fromkeys(terms)},
+        [0], meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
+        flatten=lambda pdf: decode_shard_arrays(pdf, include_df=True),
+        min_match_per_qidx=[min_match],
+    )
+
+    def flush(parts: list) -> pd.DataFrame:
+        out = score_group(None, pd.concat(parts, ignore_index=True))
+        return out[["doc_id", "score", "n_terms_matched"]]
+
+    def score(batches):
+        held, held_part = [], None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            parts = pdf["part"].to_numpy()
+            cuts = (np.flatnonzero(parts[1:] != parts[:-1]) + 1).tolist()
+            for lo, hi in zip([0, *cuts], [*cuts, len(pdf)]):
+                if held and parts[lo] != held_part:
+                    yield flush(held)
+                    held = []
+                held_part = parts[lo]
+                held.append(pdf.iloc[lo:hi])
+        if held:
+            yield flush(held)
+
+    return score
+
+
 def query_terms(query: str) -> list[str]:
     return py_index_tokens(query)
 
@@ -136,6 +197,7 @@ def topk_search(
     stats_out: dict | None = None,
     min_should_match: int | str = 1,
     one_shot_chunks: int = 64,
+    pre_grouped: bool = False,
 ) -> DataFrame:
     """Exact top-k BM25 over the compressed index → (doc_id, score,
     n_terms_matched) ordered (score desc, doc_id asc).
@@ -155,7 +217,14 @@ def topk_search(
     ``chunks_total`` (candidate chunks), ``chunks_scored`` (seed +
     survivors actually decoded), ``theta`` (the k-th seed score used as
     the pruning threshold).  Drives the Zipf-corpus pruning-effectiveness
-    bench (uniform corpora measure ~100% survival; see BENCH.md)."""
+    bench (uniform corpora measure ~100% survival; see BENCH.md).
+
+    ``pre_grouped``: every partition of ``index_df`` holds whole chunks (a
+    standing plan caches its index on ``pmod(chunk, n_groups)``).  The
+    one-shot branch then scores the cache in place — filter, coalesce to
+    ``defaultParallelism``, one ``mapInPandas`` (``_score_pre_grouped``) —
+    as one job with no exchange and at most one wave of Python tasks,
+    instead of shuffling the matched rows by chunk."""
     if index_df is None or meta is None:
         index_df, meta = load_index(spark, index_dir)
     terms = query_terms(query) if isinstance(query, str) else list(query)
@@ -181,16 +250,30 @@ def topk_search(
     # probing path.
     est_chunks = max(1, int(meta.n_docs) >> meta.chunk_bits)
     if stats_out is None and est_chunks <= max(seed_chunks * 2, one_shot_chunks):
-        score_fn = _score_chunks(k, meta, term_weights, min_match=msm_n)
-        return (
-            group_partitioned(
-                matched, F.col("chunk"), max(1, min(est_chunks, par * 2))
+        if pre_grouped:
+            # coalesce, not a groupBy over the cache's n_groups: each
+            # Python task costs ~40-60 ms of a core whatever its work, so
+            # one wave of tasks beats 2 × defaultParallelism of them
+            scored = (
+                matched.select(*SCORE_COLS, F.spark_partition_id().alias("part"))
+                .coalesce(par)
+                .mapInPandas(
+                    _score_pre_grouped(k, meta, terms, term_weights, msm_n),
+                    RESULT_SCHEMA,
+                )
             )
-            .groupBy("chunk")
-            .applyInPandas(score_fn, RESULT_SCHEMA)
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
+        else:
+            scored = (
+                group_partitioned(
+                    matched, F.col("chunk"), max(1, min(est_chunks, par * 2))
+                )
+                .groupBy("chunk")
+                .applyInPandas(
+                    _score_chunks(k, meta, term_weights, min_match=msm_n),
+                    RESULT_SCHEMA,
+                )
+            )
+        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     # Chunk upper bounds from block metadata only (no binary decode), kept
     # IN THE CLUSTER: chunk count grows linearly with the corpus
@@ -430,7 +513,7 @@ def batch_topk_indexed(
     shards = sorted(set(shard_of.values()))
     matched = index_df.where(
         F.col("shard").isin(shards) & F.col("term").isin(all_terms)
-    ).select("term", "chunk", "df", "n_docs", "doc_gaps", "tfs", "doc_lens")
+    ).select(*SCORE_COLS)
     if n_groups is None:
         n_groups = batch_n_groups(spark, meta)
 

@@ -182,12 +182,40 @@ def test_vector_stage_reaches_delta_docs(env):
     assert hits[0]["cos_sim"] == pytest.approx(1.0, abs=1e-9)
 
 
-def test_lexical_overlay_still_serves_marker_terms(env):
+def test_lexical_overlay_still_serves_marker_terms(env, monkeypatch):
     """zorblatt appears only in the delta — the full ladder's lexical side
-    must surface both streamed docs (the pre-round-6 behavior, preserved)."""
-    res, _ = env["plan"].search("zorblatt", SearchOpts(top_k=5))
+    must surface both streamed docs (the pre-round-6 behavior, preserved).
+
+    The base side of the overlay is scored in place on the plan's cache;
+    strong and escalated results, for msm 1 and "75%", must equal EXACTLY
+    those of ``topk_search``'s shuffle-by-chunk path over the same cache."""
+    from hybrid_sanctions_search_engine_spark.plans import wand
+
+    plan = env["plan"]
+    res, _ = plan.search("zorblatt", SearchOpts(top_k=5))
     ids = {r["doc_id"] for r in res.collect()}
     assert {900001, 900002} <= ids
+
+    cases = [
+        (q, SearchOpts(top_k=5, min_should_match=msm))
+        for q in ["zorblatt spark query", "zorblat sparc query", "spark query join window"]
+        for msm in (1, "75%")
+    ]
+
+    def served():
+        out = []
+        for q, opts in cases:
+            res, trace = plan.search(q, opts)
+            out.append(([t.stage for t in trace], [tuple(r) for r in res.collect()]))
+        return out
+
+    in_place = served()
+    assert any("FUZZY" in stages for stages, _ in in_place)
+    real = wand.topk_search
+    monkeypatch.setattr(
+        wand, "topk_search", lambda *a, pre_grouped=False, **kw: real(*a, **kw)
+    )
+    assert in_place == served()
 
 
 def test_escalating_ladder_equals_full_rebuild(env):

@@ -62,11 +62,18 @@ def test_fusion_bonus_applied(plan):
     assert all(t.took_ms >= 0 for t in trace)
 
 
-def test_index_backed_plan_matches_dataframe_plan(spark, sf_smoke_dir, tmp_path_factory):
+def test_index_backed_plan_matches_dataframe_plan(
+    spark, sf_smoke_dir, tmp_path_factory, monkeypatch
+):
     """Hybrid ladder over the compressed index == ladder over DataFrame
-    postings (AC stage rank-identity carries through the whole plan)."""
+    postings (AC stage rank-identity carries through the whole plan).
+
+    The index-backed plan scores its lexical stages in place on its cache;
+    strong and escalated results, for msm 1 and "75%", must equal EXACTLY
+    those of ``topk_search``'s shuffle-by-chunk path over the same cache."""
     import os
 
+    from hybrid_sanctions_search_engine_spark.plans import wand
     from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
 
     docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
@@ -83,6 +90,28 @@ def test_index_backed_plan_matches_dataframe_plan(spark, sf_smoke_dir, tmp_path_
         rb = [(r["doc_id"], round(r["score"], 9)) for r in b.collect()]
         assert ra == rb, q
         assert [t.stage for t in trace_a] == [t.stage for t in trace_b]
+
+    cases = [
+        (q, SearchOpts(top_k=10, min_should_match=msm, escalation_threshold=th))
+        for q in ["spark query join window", "sparc qurey join"]
+        for msm in (1, "75%")
+        for th in (0.6, 1e9)  # default gate; every query escalates
+    ]
+
+    def served():
+        out = []
+        for q, opts in cases:
+            res, trace = plan_idx.search(q, opts)
+            out.append(([t.stage for t in trace], [tuple(r) for r in res.collect()]))
+        return out
+
+    in_place = served()
+    assert any("FUZZY" not in stages for stages, _ in in_place)
+    real = wand.topk_search
+    monkeypatch.setattr(
+        wand, "topk_search", lambda *a, pre_grouped=False, **kw: real(*a, **kw)
+    )
+    assert in_place == served()
 
 
 def test_homoglyph_query_permutation(plan):

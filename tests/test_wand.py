@@ -656,6 +656,192 @@ def test_pre_grouped_scorer_plans_zero_exchanges(spark, corpus):
         plan.close()
 
 
+def _scorer_input(df, scan: str = "InMemoryTableScan") -> str:
+    """The executed plan from the Python scorer node down to the scan."""
+    import re
+
+    text = df._jdf.queryExecution().executedPlan().toString()
+    m = re.search(r"(FlatMapGroups|Map)InPandas", text)
+    assert m, text
+    end = text.find(scan, m.start())
+    assert end > m.start(), text
+    return text[m.start():end]
+
+
+def _jobs_and_tasks(spark, fn) -> tuple[int, int]:
+    """(jobs, tasks) that ``fn`` runs on this thread, counted through a
+    job group unique to the call (tests/test_local_frame.py's counter)."""
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"in-place-pin-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "in-place pin")
+    try:
+        fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
+    # a cached parent's shuffle stage is listed but skipped: count run tasks
+    return len(jobs), sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+
+
+def test_single_query_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
+    """A standing plan scores a single query's AC and fuzzy stages in place
+    on its ``pmod(chunk)``-partitioned cache: no exchange between the cached
+    scan and the Python scorer — before the cache is materialized too, as
+    ``mapInPandas`` requires no distribution — at most
+    ``defaultParallelism`` Python tasks, and exactly one job per lexical
+    stage of an escalated ``search()``.  A cold ``topk_search`` over the
+    parquet index still shuffles by chunk (the negative control)."""
+    from hybrid_sanctions_search_engine_spark.plans import hybrid
+    from hybrid_sanctions_search_engine_spark.plans.hybrid import (
+        HybridSearchPlan,
+        SearchOpts,
+    )
+
+    docs, index_dir, _, _ = corpus
+    par = spark.sparkContext.defaultParallelism
+    opts = SearchOpts(top_k=5, escalation_threshold=1e9)
+    plan = HybridSearchPlan(docs, index_dir=index_dir)
+    try:
+        # a fresh plan: building the AC frame submits no job, and the fuzzy
+        # stage's weighted call has the same shape
+        weighted = topk_search(
+            spark, index_dir, ["spark", "query"], k=5, index_df=plan.index_df,
+            meta=plan.index_meta, term_weights={"spark": 0.8, "query": 0.6},
+            pre_grouped=True,
+        )
+        for df in (plan.ac_stage("spark query join", 5), weighted):
+            assert "Exchange" not in _scorer_input(df)
+        plan.index_df.count()
+        for df in (
+            plan.ac_stage("spark query join", 5, "75%"),
+            plan.fuzzy_stage("sparc qurey", 5, opts),
+        ):
+            below = _scorer_input(df)
+            assert "Exchange" not in below and "Coalesce" in below, below
+            jobs, tasks = _jobs_and_tasks(spark, df.collect)
+            assert jobs == 1 and 0 < tasks <= par, (jobs, tasks)
+
+        class Inline:
+            """``_Async`` on the calling thread, inside the job group."""
+
+            def __init__(self, fn):
+                self._out = fn()
+
+            def result(self):
+                return self._out
+
+        monkeypatch.setattr(hybrid, "_Async", Inline)
+        out = {}
+        jobs, _ = _jobs_and_tasks(
+            spark, lambda: out.update(trace=plan.search("spark query join", opts)[1])
+        )
+        assert [t.stage for t in out["trace"]] == ["AC", "FUZZY", "HYBRID"]
+        assert jobs == 2
+    finally:
+        plan.close()
+    cold = topk_search(spark, index_dir, "spark query join", k=5)
+    assert "Exchange hashpartitioning" in _scorer_input(cold, scan="FileScan")
+
+
+def _zipf_shard_rows(seed: int, n_docs: int, vocab: int, chunk_bits: int):
+    """Encoded shard rows (one shard, term-sorted as the build writes them)
+    of a seeded Zipf corpus, built without Spark, and its IndexMeta."""
+    import numpy as np
+    import pandas as pd
+
+    from hybrid_sanctions_search_engine_spark.sources.index_io import (
+        BLOCK_SIZE,
+        IndexMeta,
+        _encode_posting_frame,
+    )
+
+    rng = np.random.default_rng(seed)
+    p = np.arange(1, vocab + 1, dtype=np.float64) ** -1.07
+    lens = rng.integers(20, 60, n_docs)
+    tokens = pd.DataFrame(
+        {
+            "doc_id": np.repeat(np.arange(n_docs), lens),
+            "term": np.char.add("t", rng.choice(vocab, lens.sum(), p=p / p.sum()).astype(str)),
+        }
+    )
+    post = tokens.groupby(["term", "doc_id"]).size().rename("tf").reset_index()
+    post["doc_len"] = lens[post["doc_id"]]
+    post["chunk"] = post["doc_id"].to_numpy() >> chunk_bits
+    rows, _, _ = _encode_posting_frame(post, shard=0, store_positions=False)
+    meta = IndexMeta(
+        n_docs=n_docs, avgdl=float(lens.mean()), n_shards=1,
+        chunk_bits=chunk_bits, block_size=BLOCK_SIZE, k1=1.2, b=0.75,
+    )
+    return rows, meta
+
+
+@pytest.mark.parametrize("msm", [1, "75%"])
+@pytest.mark.parametrize("weighted", [False, True], ids=["exact", "weighted"])
+def test_single_query_group_scorer_bit_identical_to_chunk_scorer(msm, weighted):
+    """Spark-free kernel pin: over the same term-sorted shard rows, the
+    batch scorer with one query per ``pmod(chunk)`` group — directly and
+    through the in-place ``mapInPandas`` body, fed cached partitions that
+    mix groups in odd-sized Arrow batches — returns the same top-k as
+    ``_score_chunks`` per chunk: doc ids, matched-term counts and every
+    bit of the scores.  Both sum a doc's terms in row order; a change to
+    either accumulation order breaks the equality."""
+    import numpy as np
+    import pandas as pd
+
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import (
+        es_min_should_match,
+        make_batch_group_scorer,
+    )
+    from hybrid_sanctions_search_engine_spark.plans.wand import (
+        _score_chunks,
+        _score_pre_grouped,
+    )
+    from hybrid_sanctions_search_engine_spark.sources.index_io import (
+        decode_shard_arrays,
+    )
+
+    k, n_groups, n_parts = 40, 8, 5
+    rows, meta = _zipf_shard_rows(seed=7, n_docs=3000, vocab=400, chunk_bits=6)
+    terms = ["t1", "t2", "t4", "t8", "t17", "t33"]
+    weights = (
+        {t: 1.0 - 0.07 * i for i, t in enumerate(terms)} if weighted else None
+    )
+    msm_n = es_min_should_match(msm, len(terms))
+    rows = rows[rows["term"].isin(terms)]
+
+    def top(parts) -> pd.DataFrame:
+        out = pd.concat(parts, ignore_index=True)
+        out = out.sort_values(["score", "doc_id"], ascending=[False, True])
+        return out.head(k)[["doc_id", "score", "n_terms_matched"]].reset_index(drop=True)
+
+    by_chunk = _score_chunks(k, meta, weights, min_match=msm_n)
+    want = top([by_chunk((c,), g) for c, g in rows.groupby("chunk", sort=False)])
+    by_group = make_batch_group_scorer(
+        {t: [(0, (weights or {}).get(t, 1.0))] for t in terms},
+        [0], meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
+        flatten=lambda pdf: decode_shard_arrays(pdf, include_df=True),
+        min_match_per_qidx=[msm_n],
+    )
+    got = top([by_group((g,), grp) for g, grp in rows.groupby(rows["chunk"] % n_groups)])
+    # a standing plan's cache: groups hashed onto fewer partitions, each
+    # partition term-sorted, streamed as 7-row Arrow batches
+    cached = rows.assign(part=(rows["chunk"] % n_groups) % n_parts)
+    cached = cached.sort_values(["part", "term"], kind="mergesort")
+    batches = [cached.iloc[i:i + 7] for i in range(0, len(cached), 7)]
+    served = top(list(_score_pre_grouped(k, meta, terms, weights, msm_n)(iter(batches))))
+    assert (want["n_terms_matched"] >= 3).sum() > k // 2  # multi-term sums
+    for res in (got, served):
+        assert res["doc_id"].tolist() == want["doc_id"].tolist()
+        assert res["n_terms_matched"].tolist() == want["n_terms_matched"].tolist()
+        assert np.array_equal(res["score"].to_numpy(), want["score"].to_numpy())
+
+
 def test_es_min_should_match_rules():
     """ES/Lucene resolution rules for the simple forms the reference uses:
     positive/negative int, positive/negative percent, floor rounding,

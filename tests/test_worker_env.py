@@ -233,6 +233,7 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
 
     expected = {
         "plans.wand._score_chunks.<locals>.score",
+        "plans.wand._score_pre_grouped.<locals>.score",
         "operators.bm25.make_batch_group_scorer.<locals>.score_group",
         "operators.similarity.knn_ivf_probe_many.<locals>.score",
         "operators.similarity.cosine_to_query_udf.<locals>.cos",
