@@ -7,7 +7,10 @@ machinery:
     prefix-bucketed dictionary join + ``F.levenshtein`` filter (no cross
     join: candidates must share the 2-char prefix, exactly like ES's
     prefix_length pruning — at web scale this join hits one dictionary
-    bucket per query term).
+    bucket per query term).  A serving plan above its in-RAM dictionary
+    cap fetches the candidates of many query terms in one filter
+    (``fuzzy_candidate_probe``) and prunes absent AC terms with a Bloom
+    filter of the dictionary (``dictionary_bloom``).
   * verification + score normalization (``hybrid_search_service.py:2354-2409``):
     edit-distance cap (≤3 below 15 chars, len/5 above), score =
     0.2·es_norm + 0.5·edit_ratio + 0.3·word_jaccard, ×0.7 penalty when
@@ -16,12 +19,14 @@ machinery:
     ID ×1.2 when extracted query anchors appear in the candidate.
   * tier boosts (``elasticsearch_adapters.py:447-466``).
 
-Everything is built-in Spark functions — fully codegen'd, no Python.
+Everything is built-in Spark functions — fully codegen'd — except two
+Arrow Python stages: partial_ratio and the Bloom filter build.
 """
 
 from __future__ import annotations
 
 import re
+from collections.abc import Iterable
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -52,6 +57,129 @@ def fuzzy_term_candidates(
         .orderBy(F.asc("edit_dist"), F.asc("term"))
         .limit(max_expansions)
     )
+
+
+def fuzzy_candidate_probe(
+    dictionary: DataFrame, query_terms: Iterable[str], max_edits: int = 1
+) -> list[str]:
+    """Every dictionary term within ``max_edits`` of some query term in that
+    query term's prefix bucket (``q[:2]``, or ``q[:1]`` for a 1-char term —
+    ``fuzzy_term_candidates``' buckets), as one narrow filter job.
+
+    The candidates are a superset of each query term's capped expansion, so
+    ranking and capping them on the driver gives the same rows as ranking
+    the whole dictionary.  One literal prefix → query-terms map per prefix
+    length keeps the filter a map lookup plus a few Levenshtein calls per
+    dictionary row, whatever the number of query terms."""
+    by_len: dict[int, dict[str, set[str]]] = {}
+    for q in set(query_terms):
+        plen = min(len(q), 2)
+        by_len.setdefault(plen, {}).setdefault(q[:plen], set()).add(q)
+    if not by_len:
+        return []
+    term = F.col("term")
+    cond = None
+    for plen, buckets in sorted(by_len.items()):
+        prefix_map = F.create_map(
+            *(
+                c
+                for pfx, qs in sorted(buckets.items())
+                for c in (F.lit(pfx), F.array(*map(F.lit, sorted(qs))))
+            )
+        )
+        hit = F.exists(
+            prefix_map[F.substring(term, 1, plen)],
+            lambda q: F.levenshtein(term, q) <= max_edits,
+        )
+        cond = hit if cond is None else cond | hit
+    return [r["term"] for r in dictionary.where(cond).select("term").collect()]
+
+
+# ---------------------------------------------------------------------------
+# Dictionary Bloom filter: AC term pruning above the in-RAM dictionary cap
+# ---------------------------------------------------------------------------
+
+BLOOM_HASHES = 7
+BLOOM_MAX_BITS = 1 << 26  # 8 MiB
+# hash_array keys: fixed, so every worker and the driver hash alike
+_BLOOM_KEYS = ("fulltext-bloom-1", "fulltext-bloom-2")
+
+
+def bloom_bits(n_terms: int) -> int:
+    """Filter size in bits: the next power of two ≥ 10 bits per term,
+    capped at ``BLOOM_MAX_BITS`` (past ~6.7M terms the false-positive rate
+    grows; a member is still never missed)."""
+    return min(BLOOM_MAX_BITS, 1 << max(6, (10 * n_terms - 1).bit_length()))
+
+
+def bloom_positions(terms, m: int) -> "np.ndarray":
+    """(len(terms), BLOOM_HASHES) bit positions in an ``m``-bit filter
+    (``m`` a power of two), by double hashing ``h1 + i·h2`` of two keyed
+    ``pd.util.hash_array`` values.  ``h2`` is forced odd, so a term's
+    positions are distinct.  Workers and the driver must share this
+    function: a filter built with one hash and read with another has false
+    negatives."""
+    import numpy as np
+    import pandas as pd
+
+    vals = np.asarray(terms, dtype=object)
+    h1, h2 = (
+        pd.util.hash_array(vals, hash_key=key, categorize=False)
+        for key in _BLOOM_KEYS
+    )
+    i = np.arange(BLOOM_HASHES, dtype=np.uint64)
+    return (h1[:, None] + i * (h2 | np.uint64(1))[:, None]) & np.uint64(m - 1)
+
+
+def bloom_add(bits: "np.ndarray", terms, m: int) -> None:
+    """Set ``terms``' positions in the packed (little-endian bit order)
+    uint8 filter ``bits`` in place."""
+    import numpy as np
+
+    pos = bloom_positions(terms, m).ravel()
+    np.bitwise_or.at(bits, pos >> 3, (1 << (pos & 7)).astype(np.uint8))
+
+
+class TermBloom:
+    """Membership filter over a term dictionary: ``t in bloom`` is True for
+    every member and, for a non-member, True with a small probability
+    (< 1% at 10 bits per term).  Serves AC term pruning, where a false
+    positive only lets a job run that finds nothing."""
+
+    __slots__ = ("bits", "m")
+
+    def __init__(self, bits: "np.ndarray", m: int):
+        self.bits = bits
+        self.m = m
+
+    def __contains__(self, term: str) -> bool:
+        pos = bloom_positions([term], self.m)[0]
+        return bool(((self.bits[pos >> 3] >> (pos & 7)) & 1).all())
+
+
+def dictionary_bloom(dictionary: DataFrame, n_terms: int) -> TermBloom:
+    """``TermBloom`` of ``dictionary``'s ``term`` column (``n_terms`` rows)
+    in one ``mapInPandas`` job: each task sets its terms' bits, and the
+    driver ORs the ≤ ``defaultParallelism`` task filters."""
+    import numpy as np
+    import pandas as pd
+
+    m = bloom_bits(n_terms)
+
+    def build(batches):
+        bits = np.zeros(m // 8, dtype=np.uint8)
+        for pdf in batches:
+            bloom_add(bits, pdf["term"].to_numpy(dtype=object), m)
+        yield pd.DataFrame({"bits": [bits.tobytes()]})
+
+    par = dictionary.sparkSession.sparkContext.defaultParallelism
+    bits = np.zeros(m // 8, dtype=np.uint8)
+    for r in (
+        dictionary.select("term").coalesce(par)
+        .mapInPandas(build, "bits binary").collect()
+    ):
+        bits |= np.frombuffer(r["bits"], dtype=np.uint8)
+    return TermBloom(bits, m)
 
 
 # ---------------------------------------------------------------------------

@@ -22,6 +22,7 @@ declarative Catalyst plan).
 from __future__ import annotations
 
 import itertools
+from collections.abc import Container
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
@@ -30,7 +31,7 @@ from pyspark.sql import functions as F
 _SPEC_GROUP_SEQ = itertools.count()
 
 from ..operators.bm25 import bm25_topk, score_terms
-from ..operators.fuzzy import fuzzy_term_candidates
+from ..operators.fuzzy import dictionary_bloom, fuzzy_candidate_probe
 from ..operators.postings import (
     CorpusStats,
     build_postings,
@@ -404,61 +405,63 @@ class HybridSearchPlan:
     def _expansion_dictionary(self) -> DataFrame:
         return self._fuzzy_dict if self._fuzzy_dict is not None else self.dictionary
 
-    # fuzzy expansion fast path: Lucene/ES serve fuzzy candidates from an
-    # in-RAM terms dictionary (the FST); when this plan's dictionary is
-    # small enough to hold on the driver, the batched expansion runs there
-    # — a 31-term synthetic dictionary was costing 1.7-1.9 s of Spark job
-    # floors per batch under stage contention at 960k (round-6 profile).
-    # Bounded: above the cap the Spark prefix-join path serves (a web-scale
-    # term dictionary does not fit one process).
+    # driver-side view of the dictionary: Lucene/ES serve fuzzy candidates
+    # and term lookups from an in-RAM terms dictionary (the FST).  Up to the
+    # cap the plan collects the term list — a 31-term synthetic dictionary
+    # was costing 1.7-1.9 s of Spark job floors per batch under stage
+    # contention at 960k (round-6 profile).  Above it (a web-scale term
+    # dictionary does not fit one process) the plan keeps a Bloom filter of
+    # the dictionary for AC pruning and fetches fuzzy candidates through one
+    # narrow filter job (operators.fuzzy.fuzzy_candidate_probe).
     driver_expansion_max_terms = 50_000
 
     def _driver_dictionary(self) -> list[str] | None:
-        """Collected term list (sorted) when ≤ the cap, else None; cached
-        per attach state (attach_delta/detach_delta invalidate)."""
+        """Collected term list (sorted) when ≤ the cap, else None.  Fills
+        the membership view ``_dict_present_set`` serves: the term set, or
+        above the cap the dictionary's ``TermBloom``.  Cached per attach
+        state (attach_delta/detach_delta invalidate)."""
         cached = getattr(self, "_driver_dict", ...)
         if cached is not ...:
             return cached
         d = self._expansion_dictionary()
         n = d.count()
-        self._driver_dict = (
-            [r["term"] for r in d.select("term").collect()]
-            if n <= self.driver_expansion_max_terms
-            else None
-        )
-        if self._driver_dict is not None:
-            self._driver_dict.sort()
-        self._driver_dict_set = (
-            set(self._driver_dict) if self._driver_dict is not None else None
-        )
-        return self._driver_dict
+        if n <= self.driver_expansion_max_terms:
+            terms = sorted(r["term"] for r in d.select("term").collect())
+            self._driver_dict_set = set(terms)
+        else:
+            terms = None
+            self._driver_dict_set = dictionary_bloom(d, n)
+        self._driver_dict = terms  # last: readers test it, then the view
+        return terms
 
-    def _dict_present_set(self) -> "set[str] | None":
-        """The in-RAM dictionary as a membership set — IF it is already
-        materialized (never triggers the collect itself, so a strong
-        first query on a cold plan pays no dictionary jobs).  Serves the
-        AC term-pruning fast path: a term absent from the (base ∪ delta)
-        dictionary has no postings anywhere, so dropping it — or skipping
-        the AC job entirely when nothing remains or the resolved
-        minimum_should_match exceeds the present distinct-term count —
-        is result-identical."""
-        cached = getattr(self, "_driver_dict", ...)
-        if cached is ... or cached is None:
+    def _dict_present_set(self) -> Container[str] | None:
+        """The dictionary's membership view — the term set, or above the
+        cap its Bloom filter — IF ``_driver_dictionary`` already built it
+        (never triggers the build itself, so a strong first query on a
+        cold plan pays no dictionary jobs).  Serves the AC term-pruning
+        fast path: a term absent from the (base ∪ delta) dictionary has no
+        postings anywhere, so dropping it — or skipping the AC job entirely
+        when nothing remains or the resolved minimum_should_match exceeds
+        the present distinct-term count — is result-identical.  The filter
+        never drops a member; a false positive only keeps a job that finds
+        nothing for that term."""
+        if getattr(self, "_driver_dict", ...) is ...:
             return None
-        s = getattr(self, "_driver_dict_set", None)
-        if s is None:
-            s = set(cached)
-            self._driver_dict_set = s
-        return s
+        return self._driver_dict_set
 
     def _expand_terms_driver(
         self, qids: list[int], qtext: dict[int, str], opts: SearchOpts,
         dict_terms: list[str],
     ) -> list[dict]:
-        """Driver-side twin of the Spark expansion — IDENTICAL rows (same
-        prefix-bucket candidates, same (edit asc, term asc) cap, same weight
-        arithmetic on the same ints, so the IEEE results match bit-for-bit);
-        parity pinned by tests/test_hybrid_batch.py."""
+        """The fuzzy expansion → rows (query_id, term, term_weight): per
+        distinct query term, the ``dict_terms`` within ``fuzzy_max_edits``
+        in its prefix bucket (``fuzzy_term_candidates``' ``q[:2]``), capped
+        at ``fuzzy_max_expansions`` by (edit asc, term asc), weighted by
+        edit ratio; a term reached from several query terms keeps its best
+        weight.  ``dict_terms`` is the whole dictionary or any superset of
+        the candidates (``_expand_terms_batch``) — the rows are the same.
+        Pinned against ``fuzzy_term_candidates`` by
+        tests/test_hybrid_batch.py."""
         buckets: dict[str, list[str]] = {}
         buckets1: dict[str, list[str]] = {}
         for t in dict_terms:
@@ -613,45 +616,10 @@ class HybridSearchPlan:
         """Expand each query term through the fuzzy dictionary (edit ≤ 1,
         same-prefix buckets), then score docs via BM25 with each expanded
         term's contribution discounted by its edit ratio."""
-        terms = query_terms(query)
-        dict_terms = self._driver_dictionary()
-        if dict_terms is not None:
-            # in-RAM dictionary fast path (Lucene-FST-style) — identical
-            # rows to the Spark expansion below, zero jobs
-            weights = {
-                r["term"]: float(r["term_weight"])
-                for r in self._expand_terms_driver(
-                    [0], {0: query}, opts, dict_terms
-                )
-            }
-        elif terms:
-            expansions = []
-            for t in terms:
-                cand = fuzzy_term_candidates(
-                    self._expansion_dictionary(),
-                    t,
-                    max_edits=opts.fuzzy_max_edits,
-                    max_expansions=opts.fuzzy_max_expansions,
-                ).select(
-                    F.col("term"),
-                    (
-                        1.0
-                        - F.col("edit_dist")
-                        / F.greatest(F.length("term"), F.lit(len(t)))
-                    ).alias("term_weight"),
-                )
-                expansions.append(cand)
-            expanded = expansions[0]
-            for e in expansions[1:]:
-                expanded = expanded.unionByName(e)
-            expanded = expanded.groupBy("term").agg(
-                F.max("term_weight").alias("term_weight")
-            )
-            weights = {
-                r["term"]: float(r["term_weight"]) for r in expanded.collect()
-            }
-        else:
-            weights = {}
+        weights = {
+            r["term"]: r["term_weight"]
+            for r in self._expand_terms_batch([0], {0: query}, opts)
+        }
         if not weights:
             return local_frame(
                 self.docs.sparkSession,
@@ -980,66 +948,19 @@ class HybridSearchPlan:
 
     def _expand_terms_batch(
         self, qids: list[int], qtext: dict[int, str], opts: SearchOpts
-    ) -> list:
-        """Per-term fuzzy dictionary expansion for a whole query set in ONE
-        job → rows (query_id, term, term_weight).
-
-        Equi-join on the shared prefix (hash join, one dictionary scan)
-        instead of a non-equi startswith condition (which nested-loops
-        |dict| × |qterms| at scale).  1-char query terms join on a 1-char
-        prefix to keep ``fuzzy_term_candidates``'s ``q[:2]`` semantics
-        exactly."""
-        spark = self.docs.sparkSession
+    ) -> list[dict]:
+        """Fuzzy dictionary expansion for a query set → rows (query_id,
+        term, term_weight), through ``_expand_terms_driver`` over the
+        in-RAM dictionary — or, above the cap, over the candidates one
+        narrow probe job fetches for all the set's query terms."""
         dict_terms = self._driver_dictionary()
-        if dict_terms is not None:
-            # in-RAM dictionary fast path (see _driver_dictionary): the 960k
-            # profile showed ~1.8 s of job floors per batch for a dictionary
-            # that fits in one list
-            return self._expand_terms_driver(qids, qtext, opts, dict_terms)
-        qterm_pairs = []
-        for qid in qids:
-            for t in dict.fromkeys(query_terms(qtext[qid])):
-                qterm_pairs.append((qid, t))
-        if not qterm_pairs:
-            return []
-        from pyspark.sql import Window
-
-        by_len: dict[int, list] = {}
-        for qid, t in qterm_pairs:
-            by_len.setdefault(min(len(t), 2), []).append((qid, t))
-        cands = []
-        for plen, pairs in sorted(by_len.items()):
-            qdf = local_frame(
-                spark,
-                pairs, "query_id long, qterm string"
-            ).withColumn("pfx", F.substring("qterm", 1, plen))
-            cands.append(
-                self._expansion_dictionary().withColumn(
-                    "pfx", F.substring("term", 1, plen)
-                ).join(F.broadcast(qdf), "pfx")
+        if dict_terms is None:
+            dict_terms = fuzzy_candidate_probe(
+                self._expansion_dictionary(),
+                (t for qid in qids for t in query_terms(qtext[qid])),
+                opts.fuzzy_max_edits,
             )
-        cand = cands[0]
-        for c in cands[1:]:
-            cand = cand.unionByName(c)
-        cand = cand.withColumn(
-            "edit_dist", F.levenshtein("term", "qterm")
-        ).where(F.col("edit_dist") <= opts.fuzzy_max_edits)
-        w = Window.partitionBy("query_id", "qterm").orderBy(
-            F.asc("edit_dist"), F.asc("term")
-        )
-        return (
-            cand.withColumn("rn", F.row_number().over(w))
-            .where(F.col("rn") <= opts.fuzzy_max_expansions)
-            .withColumn(
-                "term_weight",
-                1.0
-                - F.col("edit_dist")
-                / F.greatest(F.length("term"), F.length("qterm")),
-            )
-            .groupBy("query_id", "term")
-            .agg(F.max("term_weight").alias("term_weight"))
-            .collect()
-        )
+        return self._expand_terms_driver(qids, qtext, opts, dict_terms)
 
     def _merge_delta_fuzzy(
         self,
@@ -1122,10 +1043,9 @@ class HybridSearchPlan:
         # The per-term dictionary expansion depends only on the query texts,
         # not on the AC outcome — so it runs CONCURRENTLY with the AC job for
         # ALL queries and is filtered to the escalating subset afterwards
-        # (identical rows: the expansion window partitions per query).  The
-        # one speculative dictionary-probe job is wall-time-free (overlapped)
-        # and its resources are bounded by |query terms| broadcast-joined
-        # prefix buckets.
+        # (identical rows: the expansion is per query).  Above the in-RAM
+        # cap its one candidate-probe job is wall-time-free (overlapped):
+        # one narrow filter over the cached dictionary.
         # FUSED lexical path (round 7): when the in-RAM dictionary serves
         # expansion (driver-only, ~ms), the fuzzy SCORING rides in the SAME
         # batch job as the AC stage (disjoint query-id spaces, per-query
@@ -1144,9 +1064,8 @@ class HybridSearchPlan:
         fused_expanded_rows: list = []
         if fuse_lex:
             t_exp = time.monotonic()
-            fused_expanded_rows = self._expand_terms_driver(
-                [qid for qid, _ in queries], qtext, opts,
-                self._driver_dictionary(),
+            fused_expanded_rows = self._expand_terms_batch(
+                [qid for qid, _ in queries], qtext, opts
             )
             with trace_lock:
                 trace["expansion_ms"] = (time.monotonic() - t_exp) * 1000

@@ -97,3 +97,60 @@ def test_token_set_subset_scores_full(spark):
     # partial_ratio=1.0 (embedded) and token_set=1.0 (subset) -> the blend is
     # at least 0.25 + 0.2 even if the char measures contributed nothing
     assert score >= 0.45
+
+
+def _pseudo_words(rng, n: int) -> list[str]:
+    letters = list("abcdefghijklmnopqrstuvwxyz")
+    return ["".join(rng.choice(letters, k)) for k in rng.integers(3, 12, n)]
+
+
+def test_term_bloom_contract():
+    """Spark-free pin on a seeded 20k pseudo-word dictionary: every member
+    is found (the AC pruning that reads the filter relies on it), fewer
+    than 1% of 100k non-members pass, and the size is the next power of two
+    ≥ 10 bits per term, capped at 2^26 bits."""
+    import numpy as np
+
+    from hybrid_sanctions_search_engine_spark.operators.fuzzy import (
+        BLOOM_MAX_BITS,
+        TermBloom,
+        bloom_add,
+        bloom_bits,
+    )
+
+    rng = np.random.default_rng(20)
+    terms = sorted(set(_pseudo_words(rng, 20_000)))
+    m = bloom_bits(len(terms))
+    assert m == 1 << (10 * len(terms) - 1).bit_length() == 262_144
+    bits = np.zeros(m // 8, dtype=np.uint8)
+    bloom_add(bits, terms, m)
+    bloom = TermBloom(bits, m)
+    assert all(t in bloom for t in terms)
+    members = set(terms)
+    others = [w for w in _pseudo_words(rng, 110_000) if w not in members][:100_000]
+    assert len(others) == 100_000
+    assert sum(w in bloom for w in others) < 1_000
+    assert [bloom_bits(n) for n in (0, 1, 7, 1000)] == [64, 64, 128, 16_384]
+    assert bloom_bits(6_710_886) == BLOOM_MAX_BITS == 1 << 26
+    assert bloom_bits(50_000_000) == BLOOM_MAX_BITS
+
+
+def test_term_bloom_built_on_workers_matches_driver(spark):
+    """The filter ``dictionary_bloom`` builds on the workers, over a
+    dictionary spread across partitions, has the same bits as the driver's
+    ``bloom_add`` over the same terms: workers and the driver hash alike."""
+    import numpy as np
+
+    from hybrid_sanctions_search_engine_spark.operators.fuzzy import (
+        bloom_add,
+        dictionary_bloom,
+    )
+    from hybrid_sanctions_search_engine_spark.sources.tables import local_frame
+
+    terms = sorted(set(_pseudo_words(np.random.default_rng(21), 5_000)))
+    dictionary = local_frame(spark, [(t,) for t in terms], "term string").repartition(7)
+    bloom = dictionary_bloom(dictionary, len(terms))
+    want = np.zeros(bloom.m // 8, dtype=np.uint8)
+    bloom_add(want, terms, bloom.m)
+    assert np.array_equal(bloom.bits, want)
+    assert all(t in bloom for t in terms)

@@ -13,11 +13,19 @@ import os
 
 import pytest
 
+from pyspark.sql import functions as F
+
 from hybrid_sanctions_search_engine_spark.functions.vectors import pseudo_embedding
+from hybrid_sanctions_search_engine_spark.operators.fuzzy import (
+    TermBloom,
+    fuzzy_term_candidates,
+)
 from hybrid_sanctions_search_engine_spark.plans.hybrid import (
     HybridSearchPlan,
     SearchOpts,
 )
+from hybrid_sanctions_search_engine_spark.plans.wand import query_terms
+from hybrid_sanctions_search_engine_spark.sources.tables import local_frame
 
 DIM = 64
 
@@ -237,29 +245,119 @@ def test_search_many_parity_rerank_off_no_anchors(spark, corpus, tmp_path):
         plan.close()
 
 
+def _dense_word_docs(spark, seed: int):
+    """Docs over a seeded dictionary of 1–5-letter words on a 5-letter
+    alphabet — prefix buckets hold several terms one edit apart, so the
+    expansion cap binds — and typo'd queries over it, with 1-char and
+    duplicate terms."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    letters = list("abcde")
+    words = sorted({"".join(rng.choice(letters, n)) for n in rng.integers(1, 6, 400)})
+    docs = local_frame(
+        spark,
+        [(i, " ".join(rng.choice(words, 4))) for i in range(300)],
+        "doc_id long, text string",
+    )
+
+    def typo(w: str) -> str:
+        i = int(rng.integers(len(w)))
+        return w[:i] + str(rng.choice(letters + ["f"])) + w[i + 1:]
+
+    queries = [
+        (i, " ".join(typo(str(w)) for w in rng.choice(words, 3)))
+        for i in range(8)
+    ] + [(8, "c abd abd"), (9, "e")]
+    return docs, queries
+
+
+def _reference_expansion(plan, queries, opts) -> set:
+    """(query_id, term, term_weight) from ``fuzzy_term_candidates`` run per
+    distinct query term, weighted in Spark; best weight per (query, term)."""
+    best: dict = {}
+    for qid, text in queries:
+        for t in dict.fromkeys(query_terms(text)):
+            for r in fuzzy_term_candidates(
+                plan._expansion_dictionary(), t,
+                max_edits=opts.fuzzy_max_edits,
+                max_expansions=opts.fuzzy_max_expansions,
+            ).select(
+                "term",
+                (
+                    1.0 - F.col("edit_dist")
+                    / F.greatest(F.length("term"), F.lit(len(t)))
+                ).alias("term_weight"),
+            ).collect():
+                key = (qid, r["term"])
+                best[key] = max(best.get(key, r["term_weight"]), r["term_weight"])
+    return {(q, t, w) for (q, t), w in best.items()}
+
+
 def test_driver_expansion_twin_of_spark_path(spark, corpus):
-    """The in-RAM dictionary fast path (round 6) must produce EXACTLY the
-    Spark prefix-join expansion's rows — same candidates, same caps, same
-    weights to the last bit — or single/batch parity would silently drift
-    whenever a plan crosses the driver_expansion_max_terms threshold."""
-    docs, emb = corpus
-    plan = HybridSearchPlan(docs)
-    try:
-        opts = SearchOpts()
-        qids = [q for q, _ in QUERIES]
-        qtext = dict(QUERIES)
-        fast = plan._expand_terms_batch(qids, qtext, opts)
-        assert plan._driver_dictionary() is not None  # fast path exercised
-        plan.driver_expansion_max_terms = 0  # force the Spark path
+    """The fuzzy expansion is one driver function fed the in-RAM dictionary
+    below ``driver_expansion_max_terms`` and the candidate probe's terms
+    above it.  Both sides of the cap must give EXACTLY the rows of
+    ``fuzzy_term_candidates`` run per query term — same candidates, same
+    caps (also when ``fuzzy_max_expansions`` = 1 binds), same weights to
+    the last bit — and ``search()`` / ``search_many()`` the same results,
+    or a plan crossing the cap would silently change its answers."""
+    docs, _ = corpus
+    dense_docs, dense_queries = _dense_word_docs(spark, seed=11)
+    extra = [(6, "s qurey sparc sparc")]  # a 1-char and a duplicate term
+    cases = [
+        (HybridSearchPlan(docs), QUERIES + extra),
+        (HybridSearchPlan(dense_docs), dense_queries),
+    ]
+    as_set = lambda rows: {
+        (r["query_id"], r["term"], r["term_weight"]) for r in rows
+    }
+
+    def expansions(plan, queries, opts, cap):
+        plan.driver_expansion_max_terms = cap
         plan._driver_dict = ...
-        slow = plan._expand_terms_batch(qids, qtext, opts)
-        as_set = lambda rows: {
-            (r["query_id"], r["term"], r["term_weight"]) for r in rows
-        }
-        assert as_set(fast) == as_set(slow)
-        assert fast  # non-trivial comparison
+        rows = plan._expand_terms_batch(
+            [q for q, _ in queries], dict(queries), opts
+        )
+        assert (plan._driver_dictionary() is None) == (cap == 0)
+        return as_set(rows)
+
+    def served(plan, queries, cap):
+        plan.driver_expansion_max_terms = cap
+        plan._driver_dict = ...
+        plan._driver_dictionary()
+        out = []
+        for msm in (1, "75%"):
+            opts = SearchOpts(top_k=5, min_should_match=msm)
+            out.append(sorted(
+                tuple(r) for r in plan.search_many(queries, opts)[0].collect()
+            ))
+            out += [
+                [tuple(r) for r in plan.search(text, opts)[0].collect()]
+                for _, text in queries
+            ]
+        return out
+
+    try:
+        for plan, queries in cases:
+            rows = []
+            for opts in (SearchOpts(), SearchOpts(fuzzy_max_expansions=1)):
+                in_ram = expansions(plan, queries, opts, cap=50_000)
+                probed = expansions(plan, queries, opts, cap=0)
+                assert in_ram == probed == _reference_expansion(plan, queries, opts)
+                rows.append(in_ram)
+            assert rows[0]  # non-trivial comparison
+        # on the dense dictionary the 1-char query term "e" expands through
+        # its 1-char bucket, and a cap of 1 binds
+        one_char = [{t for q, t, _ in r if q == 9} for r in rows]
+        assert len(one_char[0]) > 1 and len(one_char[1]) == 1
+        assert len(rows[0]) > len(rows[1])
+        plan, queries = cases[0]
+        assert served(plan, queries, 50_000) == served(plan, queries, 0)
+        assert isinstance(plan._dict_present_set(), TermBloom)
     finally:
-        plan.close()
+        for plan, _ in cases:
+            plan.close()
 
 
 def test_search_many_parity_min_should_match(spark, corpus):

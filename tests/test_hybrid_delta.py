@@ -211,6 +211,28 @@ def test_lexical_overlay_still_serves_marker_terms(env, monkeypatch):
 
     in_place = served()
     assert any("FUZZY" in stages for stages, _ in in_place)
+
+    # above the in-RAM dictionary cap: the (base ∪ delta) Bloom filter lets
+    # the delta-only marker term through AC pruning, and results are the
+    # same; once the delta is detached, the marker term is pruned again
+    monkeypatch.setattr(plan, "driver_expansion_max_terms", 0)
+    plan._driver_dict = ...
+    assert plan._driver_dictionary() is None
+    assert "zorblatt" in plan._dict_present_set()
+    assert served() == in_place
+    delta = (plan.delta_docs, plan.delta_postings, plan.delta_stats,
+             plan.delta_embeddings)
+    try:
+        plan.detach_delta()
+        assert plan._dict_present_set() is None  # invalidated
+        plan._driver_dictionary()
+        assert "zorblatt" not in plan._dict_present_set()
+        assert plan.ac_stage("zorblatt", k=5).collect() == []
+    finally:
+        plan.attach_delta(*delta)
+    monkeypatch.undo()
+    plan._driver_dict = ...
+
     real = wand.topk_search
     monkeypatch.setattr(
         wand, "topk_search", lambda *a, pre_grouped=False, **kw: real(*a, **kw)

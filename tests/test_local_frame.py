@@ -28,6 +28,7 @@ from pyspark.sql.types import (
 
 import hybrid_sanctions_search_engine_spark as pkg
 from hybrid_sanctions_search_engine_spark.functions.vectors import pseudo_embedding
+from hybrid_sanctions_search_engine_spark.operators.fuzzy import TermBloom
 from hybrid_sanctions_search_engine_spark.plans.hybrid import (
     HybridSearchPlan,
     SearchOpts,
@@ -144,14 +145,83 @@ def test_search_many_result_collect_submits_no_job(spark, plan):
     assert {r["query_id"] for r in rows} <= set(meta)
 
 
-def test_ac_stage_absent_terms_submits_no_job(spark, plan):
-    """Terms absent from the in-RAM dictionary: the AC stage and the collect
-    of its (empty) result submit no job at all."""
-    rows = []
-    n = _jobs_run_by(
-        spark, lambda: rows.extend(plan.ac_stage("zzzqqq xyzzy", k=5).collect())
-    )
-    assert (n, rows) == (0, [])
+@pytest.mark.parametrize("cap", [None, 0], ids=["in-ram", "above-cap"])
+def test_ac_stage_absent_terms_submits_no_job(spark, plan, cap, monkeypatch):
+    """Terms absent from the dictionary — the in-RAM term set, or above the
+    cap the dictionary's Bloom filter once it is built: the AC stage and
+    the collect of its (empty) result submit no job at all."""
+    if cap is not None:
+        monkeypatch.setattr(plan, "driver_expansion_max_terms", cap)
+        plan._driver_dict = ...
+        assert plan._driver_dictionary() is None
+        assert isinstance(plan._dict_present_set(), TermBloom)
+    try:
+        rows = []
+        n = _jobs_run_by(
+            spark, lambda: rows.extend(plan.ac_stage("zzzqqq xyzzy", k=5).collect())
+        )
+        assert (n, rows) == (0, [])
+    finally:
+        monkeypatch.undo()
+        plan._driver_dict = ...
+        assert plan._driver_dictionary() is not None
+
+
+def test_typo_search_above_cap_runs_probe_and_scoring_only(
+    spark, tmp_path_factory, sf_smoke_dir, monkeypatch
+):
+    """Above the in-RAM dictionary cap, with the Bloom filter built, an
+    escalated typo'd ``search()`` runs exactly 2 jobs: the fuzzy candidate
+    probe — one narrow filter over the cached dictionary, no exchange — and
+    the in-place fuzzy scoring.  The AC stage submits none."""
+    from hybrid_sanctions_search_engine_spark.plans import hybrid
+    from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
+
+    docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
+    index_dir = str(tmp_path_factory.mktemp("above_cap_idx"))
+    build_index(docs, index_dir, n_shards=2, chunk_bits=7)
+    plan = HybridSearchPlan(docs, index_dir=index_dir)
+    plan.driver_expansion_max_terms = 0
+    query = "sparc qurey"
+
+    class Inline:
+        """``_Async`` on the calling thread, inside the job group."""
+
+        def __init__(self, fn):
+            self._out = fn()
+
+        def result(self):
+            return self._out
+
+    monkeypatch.setattr(hybrid, "_Async", Inline)
+    frame_cls = type(spark.range(1))
+    collect = frame_cls.collect
+    plans = []
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        return collect(self)
+
+    try:
+        assert plan._driver_dictionary() is None
+        assert not any(t in plan._dict_present_set() for t in query.split())
+        plan.search(query, SearchOpts(top_k=5))  # fills the index cache
+        monkeypatch.setattr(frame_cls, "collect", spy)
+        out = {}
+        n = _jobs_run_by(
+            spark, lambda: out.update(trace=plan.search(query, SearchOpts(top_k=5))[1])
+        )
+        monkeypatch.undo()
+        assert [t.stage for t in out["trace"]] == ["AC", "FUZZY", "HYBRID"]
+        assert out["trace"][1].hits > 0
+        assert n == 2
+        # the probe's plan above the cached dictionary (whose own lineage,
+        # the groupBy, ran once when the cache filled)
+        probe = [p.split("InMemoryRelation")[0] for p in plans if "levenshtein" in p]
+        assert len(probe) == 1, plans
+        assert "InMemoryTableScan" in probe[0] and "Exchange" not in probe[0], probe
+    finally:
+        plan.close()
 
 
 def test_topk_search_empty_query_submits_no_job(spark, tmp_path_factory, sf_smoke_dir):

@@ -230,8 +230,18 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
     for plan in plans.values():
         plan.search_many(QUERIES, SearchOpts(**ESCALATE))[0].collect()
     plans["ivf"].search("sparc qurey", SearchOpts(**ESCALATE))[0].collect()
+    # above the in-RAM dictionary cap: the Bloom filter build and the probe
+    plan = plans["ivf_sq8"]
+    plan.driver_expansion_max_terms = 0
+    plan._driver_dict = ...
+    try:
+        plan.search("sparc qurey", SearchOpts(**ESCALATE))[0].collect()
+    finally:
+        del plan.driver_expansion_max_terms
+        plan._driver_dict = ...
 
     expected = {
+        "operators.fuzzy.dictionary_bloom.<locals>.build",
         "plans.wand._score_chunks.<locals>.score",
         "plans.wand._score_pre_grouped.<locals>.score",
         "operators.bm25.make_batch_group_scorer.<locals>.score_group",
