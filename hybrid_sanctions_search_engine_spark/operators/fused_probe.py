@@ -4,8 +4,8 @@
 (operators/sq.py) differ ONLY in how a masked block of byte codes is
 scored against one query (ADC table lookups + per-cell centroid offsets
 vs the int8 decoded dot).  Everything else — the per-query cell probe,
-the union-pruned map-only candidate scan, the k-bounded window merge,
-the driver candidate assembly, and the exact re-rank pass — is one shape,
+the union-pruned map-only candidate scan, the driver candidate merge,
+and the exact re-rank pass (which can carry the rerank inputs) — is one shape,
 factored here so a fix to either path (tie-breaks, empty-candidate edges)
 cannot silently miss the other.
 
@@ -30,7 +30,17 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.tables import local_frame
-from .similarity import local_topk, merge_local_topk, vector_rows
+from .similarity import (
+    ProbeRerank,
+    local_topk,
+    merge_local_topk,
+    merge_probe_tops,
+    probe_input_cols,
+    probe_schema,
+    task_rows,
+    topk_record_batch,
+    vector_rows,
+)
 
 # prepare_scorer(qn) -> score_masked(qi, masked_codes, masked_cells) -> scores
 PrepareScorer = Callable[
@@ -53,6 +63,7 @@ def fused_cell_probe_many(
     vec_col: str = "embedding",
     cell_col: str = "ivf_cell",
     as_rows: bool = False,
+    rerank: ProbeRerank | None = None,
 ) -> "DataFrame | list[tuple[int, int, float]]":
     """TWO map-only passes for the whole query set → (query_id, id,
     cos_sim); the per-(query, doc) fan-out never leaves the Arrow task.
@@ -68,13 +79,13 @@ def fused_cell_probe_many(
     2. exact re-rank pass over ``id IN (∪ candidates)`` from the same
        pruned partitions: per-query gemv with ``cosine_to_query_udf``'s
        dtype ops (float64 tolist, axis-1 norms, 1e-300 clamps, raw-query
-       gemv), merged driver-side the same way.  ``as_rows=True`` returns
-       the merged (query_id, id, cos_sim) tuples directly.
+       gemv).  ``as_rows`` / ``rerank`` pick how its task-local tops
+       merge, exactly as in ``similarity.knn_ivf_probe_many``: with
+       ``rerank`` they come back un-merged carrying the rerank inputs.
     """
     spark = indexed.sparkSession
-    out_schema = f"query_id long, {id_col} long, cos_sim double"
     if not queries:
-        return [] if as_rows else local_frame(spark, [], out_schema)
+        return [] if as_rows else local_frame(spark, [], probe_schema(id_col, rerank))
     qids = np.asarray([q for q, _ in queries], dtype=np.int64)
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     qnorms = np.array(
@@ -143,56 +154,32 @@ def fused_cell_probe_many(
         qid: np.asarray(sorted(s), dtype=np.int64) for qid, s in cand.items()
     }
 
-    def rerank(it):
-        pdfs = [pdf for pdf in it if not pdf.empty]
-        if not pdfs:
+    def rerank_pass(it):
+        task = task_rows(it, [id_col, vec_col])
+        if task is None:
             return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+        rows, pdf = task
         x, norms = vector_rows(pdf[vec_col])
         ids = pdf[id_col].to_numpy(dtype=np.int64)
-        out_q, out_i, out_s = [], [], []
+        picks = []
         for qi in range(nq):
             mine = cand_arr.get(int(qids[qi]))
             if mine is None:
                 continue
-            mask = np.isin(ids, mine)
-            if not mask.any():
+            sel = np.flatnonzero(np.isin(ids, mine))
+            if not sel.size:
                 continue
-            xs = x[mask]
-            cos = (xs @ qmat[qi]) / (norms[mask] * qnorms[qi])
-            idsm = ids[mask]
-            top = local_topk(idsm, cos, k)
-            out_q.append(np.full(top.size, qids[qi]))
-            out_i.append(idsm[top])
-            out_s.append(cos[top])
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_i),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
+            cos = (x[sel] @ qmat[qi]) / (norms[sel] * qnorms[qi])
+            top = local_topk(ids[sel], cos, k)
+            picks.append((int(qids[qi]), sel[top], cos[top]))
+        if picks:
+            yield topk_record_batch(rows, picks, ids, id_col, rerank)
 
-    surv = pruned.where(F.col(id_col).isin(union_ids)).select(id_col, vec_col)
-    scored = surv.mapInPandas(rerank, out_schema)
-    if as_rows:
-        # rerank-free serving: driver-merge the re-ranked task-local tops
-        # (collect ≤ tasks × nq × k rows) — no final window, no further job
-        return merge_local_topk(
-            (
-                (r["query_id"], r[id_col], r["cos_sim"])
-                for r in scored.collect()
-            ),
-            k,
-        )
-    # lazy subplan (default): downstream joins keep probe+merge+join in one
-    # Spark action
-    from pyspark.sql import Window
-
-    w2 = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        scored.withColumn("_rn", F.row_number().over(w2))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
+    scored = (
+        pruned.where(F.col(id_col).isin(union_ids))
+        .select(*probe_input_cols([id_col, vec_col], rerank))
+        .mapInArrow(rerank_pass, probe_schema(id_col, rerank))
     )
+    if rerank is not None:
+        return scored
+    return merge_probe_tops(scored, k, id_col, as_rows)

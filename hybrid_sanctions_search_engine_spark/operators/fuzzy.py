@@ -389,27 +389,29 @@ def _make_partial_udf():
 _PARTIAL_UDF = None
 
 
-def _partial_udf():
+def partial_ratio_col(left: Column, right: Column) -> Column:
+    """``partial_ratio_series(left, right)`` as an Arrow UDF column."""
     global _PARTIAL_UDF
     if _PARTIAL_UDF is None:
         _PARTIAL_UDF = _make_partial_udf()
-    return _PARTIAL_UDF
+    return _PARTIAL_UDF(left, right)
 
 
 def rapidfuzz_rerank_expr(
     candidates: DataFrame,
-    query_col,
+    query_col: Column,
+    partial_col: Column,
     text_col: str = "text",
     score_col: str = "score",
     sort: bool = True,
 ) -> DataFrame:
-    """L9 rerank with the query as a COLUMN (per-row query text — the batched
-    msearch ladder joins each hit with its own query string): fuzz =
-    max(ratio, partial_ratio, token_sort_ratio) on a 0-100 scale; score ×1.2
-    when fuzz > 80, ×1.1 when fuzz > 60.  ratio/token_sort are JVM Columns;
-    partial_ratio is the Arrow UDF over the (small) candidate set."""
-    partial_udf = _partial_udf()
-
+    """L9 rerank with the query as a COLUMN (per-row query text): fuzz =
+    max(ratio, partial_ratio, token_sort_ratio) on a 0-100 scale; score
+    ×1.2 when fuzz > 80, ×1.1 when fuzz > 60.  ratio/token_sort are JVM
+    Columns; ``partial_col`` is ``partial_ratio_series(query, text)`` in
+    [0, 1] — the Arrow UDF over the (small) candidate set
+    (``partial_ratio_col``), or a column a probe task already computed for
+    its own top-k rows (the batched vector leg)."""
     q = F.lower(query_col)
     t = F.lower(F.col(text_col))
     ratio = (
@@ -420,7 +422,7 @@ def rapidfuzz_rerank_expr(
     token_sort = (
         1.0 - F.levenshtein(sq, st) / F.greatest(F.length(sq), F.length(st), F.lit(1))
     ) * 100.0
-    partial = partial_udf(query_col, F.col(text_col)) * 100.0
+    partial = partial_col * 100.0
     fuzz = F.greatest(ratio, partial, token_sort)
     boosted = (
         F.when(fuzz > 80, F.col(score_col) * 1.2)
@@ -443,8 +445,10 @@ def rapidfuzz_rerank(
 ) -> DataFrame:
     """L9: the reference's vector-fallback reranking
     (``hybrid_search_service.py:990-1030``) for a single query string."""
+    q = F.lit(query_text)
     return rapidfuzz_rerank_expr(
-        candidates, F.lit(query_text), text_col=text_col, score_col=score_col
+        candidates, q, partial_ratio_col(q, F.col(text_col)),
+        text_col=text_col, score_col=score_col,
     )
 
 

@@ -366,6 +366,7 @@ def knn_ivf_pq_probe_many(
     vec_col: str = "embedding",
     cell_col: str = "ivf_cell",
     as_rows: bool = False,
+    rerank=None,
 ) -> "DataFrame | list[tuple[int, int, float]]":
     """Batched IVF-PQ probe → (query_id, id, cos_sim): TWO map-only passes
     for the whole query set (the ``knn_ivf_probe_many`` fused shape,
@@ -375,9 +376,8 @@ def knn_ivf_pq_probe_many(
        ``(id, pq_code, cell)``: each Arrow batch masks every query to ITS
        probed cells, scores the masked codes against that query's lookup
        table (one fancy-index sum), and emits the batch-local top
-       ``refine·k``; a k-bounded window merge picks each query's global
-       candidates (driver collect: |queries|·refine·k ids, never scores a
-       corpus-sized set).
+       ``refine·k``; a driver merge picks each query's global candidates
+       (the collect is task-bounded, never a corpus-sized set).
     2. exact re-rank pass over ``id IN (∪ candidates)`` from the same
        pruned partitions: per-query gemv with ``cosine_to_query_udf``'s
        dtype ops (float64 tolist, axis-1 norms, 1e-300 clamps, raw-query
@@ -390,6 +390,9 @@ def knn_ivf_pq_probe_many(
        rather than one query's own survivor batch.  Parity is therefore
        pinned at 9 decimals with exact id sets — the same convention as
        ``knn_bruteforce_many`` (similarity.py) batch↔single tests.
+
+    ``as_rows`` / ``rerank`` pick how the re-ranked tops merge (see
+    ``fused_probe.fused_cell_probe_many``).
 
     The two-pass engine is shared with the SQ8 batch probe
     (``fused_probe.fused_cell_probe_many``); only the masked-block scorer
@@ -426,4 +429,5 @@ def knn_ivf_pq_probe_many(
         code_col="pq_code", code_width=m, score_col="adc_score",
         prepare_scorer=prepare, k=k, n_probe=n_probe, refine=refine,
         id_col=id_col, vec_col=vec_col, cell_col=cell_col, as_rows=as_rows,
+        rerank=rerank,
     )

@@ -16,14 +16,18 @@ equivalents:
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_col
 from ..sources.fs import fs_for
 from ..sources.tables import local_frame
+from .fuzzy import partial_ratio_series
 
 
 def vector_rows(vectors: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -90,7 +94,9 @@ def knn_bruteforce_many(
     k: int = 10,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-) -> DataFrame:
+    as_rows: bool = False,
+    rerank: ProbeRerank | None = None,
+) -> "DataFrame | list[tuple[int, int, float]]":
     """Exact cosine top-k for MANY queries in one shuffle-free scan →
     (query_id, id, cos_sim), per-query order (sim desc, id asc).
 
@@ -101,10 +107,11 @@ def knn_bruteforce_many(
     (``crossJoin(queries)`` + a per-query window) materializes
     |corpus| × |queries| rows through a shuffle — the exact per-(query, doc)
     fan-out CLAUDE.md bans for BM25.  Here the fan-out never leaves the Arrow
-    task: ``mapInPandas`` scores each record batch against the whole query
-    matrix in numpy and emits only the batch-local top-k per query (by the
-    compound (-cos, id) order, so the global window merge is EXACT — ties at
-    the k-th score keep the smallest id, same as ``knn_bruteforce``).
+    task: each record batch is scored against the whole query matrix in
+    numpy and only the batch-local top-k per query is emitted (by the
+    compound (-cos, id) order, so the global merge is EXACT — ties at the
+    k-th score keep the smallest id, same as ``knn_bruteforce``).
+    ``as_rows`` / ``rerank`` pick the merge as in ``knn_ivf_probe_many``.
 
     Scoring loops one ``X @ q`` gemv per query instead of a single
     ``X @ Q.T`` gemm on purpose: the gemv path is bit-identical to
@@ -112,12 +119,9 @@ def knn_bruteforce_many(
     ``search_many`` reproduces ``search()``'s scores exactly — the parity
     tests compare at 9 decimals.  At |queries| ≤ a few hundred the gemv loop
     is within ~2× of gemm and both are scan-dominated."""
-    from pyspark.sql import Window
-
     spark = embeddings.sparkSession
-    out_schema = f"query_id long, {id_col} long, cos_sim double"
     if not queries:
-        return local_frame(spark, [], out_schema)
+        return [] if as_rows else local_frame(spark, [], probe_schema(id_col, rerank))
     qids = np.asarray([q for q, _ in queries], dtype=np.int64)
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     qnorms = np.maximum(np.linalg.norm(qmat, axis=1), 1e-300)
@@ -125,39 +129,26 @@ def knn_bruteforce_many(
     kk = k
 
     def score_batches(it):
-        import pandas as pd
-
-        for pdf in it:
-            if pdf.empty:
+        for batch in it:
+            task = task_rows([batch], [id_col, vec_col])
+            if task is None:
                 continue
+            rows, pdf = task
             x, norms = vector_rows(pdf[vec_col])
             ids = pdf[id_col].to_numpy(dtype=np.int64)
-            out_q, out_i, out_s = [], [], []
+            picks = []
             for qi in range(nq):
                 cos = (x @ qmat[qi]) / (norms * qnorms[qi])
                 top = local_topk(ids, cos, kk)
-                out_q.append(np.full(top.size, qids[qi]))
-                out_i.append(ids[top])
-                out_s.append(cos[top])
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_i),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
+                picks.append((int(qids[qi]), top, cos[top]))
+            yield topk_record_batch(rows, picks, ids, id_col, rerank)
 
-    local = embeddings.select(id_col, vec_col).mapInPandas(
-        score_batches, out_schema
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.desc("cos_sim"), F.asc(id_col)
-    )
-    return (
-        local.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    local = embeddings.select(
+        *probe_input_cols([id_col, vec_col], rerank)
+    ).mapInArrow(score_batches, probe_schema(id_col, rerank))
+    if rerank is not None:
+        return local
+    return merge_probe_tops(local, k, id_col, as_rows)
 
 
 def knn_filtered(
@@ -450,35 +441,41 @@ def knn_ivf_probe_many(
     vec_col: str = "embedding",
     cell_col: str = "ivf_cell",
     as_rows: bool = False,
+    rerank: ProbeRerank | None = None,
 ) -> "DataFrame | list[tuple[int, int, float]]":
     """Batched IVF ANN probe in ONE map-only pass (round 6): each Arrow
-    batch of the pruned union-of-cells scan scores every query against only
-    the rows in THAT query's probed cells (an in-task cell mask), emits the
-    task-local top-k per query, and a DRIVER-side merge picks each query's
-    exact global top-k under the same (cos desc, id asc) order the former
-    window produced (round 7: the window exchange + its broadcast-rebuild
-    in downstream joins cost ~0.15-0.2 s of stage floors per batch; the
-    collect is ≤ tasks × |queries| × k rows — task-bounded, never corpus-
-    sized).  ``as_rows=True`` returns the merged (query_id, id, cos_sim)
-    tuples directly (the ladder consumes rows anyway); default returns a
-    DataFrame of exactly those rows.
+    task of the pruned union-of-cells scan scores every query against only
+    the rows in THAT query's probed cells (an in-task cell mask) and emits
+    the task-local top-k per query.
+
+    The merge to each query's exact global top-k (same (cos desc, id asc)
+    order) is picked by the arguments:
+
+      * ``rerank`` given: none — the un-merged task-local tops come back
+        lazily, each row carrying the rerank inputs (``ProbeRerank``; the
+        probed frame must hold the doc-text columns).  The caller projects
+        the rerank in the JVM and merges on the driver with
+        ``merge_local_topk``, so probe + rerank is one job, no exchange.
+      * ``as_rows=True``: on the driver, returning the merged
+        (query_id, id, cos_sim) tuples (the collect is ≤ tasks ×
+        |queries| × k rows — task-bounded, never corpus-sized).
+      * default: a lazy per-query window over the local tops.
 
     This replaces the broadcast-join + global-window shape, which
     DUPLICATED each candidate row per probing query (at 960k docs × 100
     speculative queries: ~1.1M fan-out rows through the cosine UDF and the
     window exchange).  Here the fan-out never leaves the Arrow task —
     the same argument ``knn_bruteforce_many`` makes for the exact scan —
-    and the task output is ≤ |queries| × k rows per batch.
+    and the task output is ≤ |queries| × k rows.
 
     Bit-parity: same op shapes as the single-query refine
     (``cosine_to_query_udf`` / ``knn_bruteforce_many`` — float64 from
     tolist, axis=1 doc norms, 1-D query norms, one gemv per query, local
-    top-k by (-cos, id) making the window merge exact), so
+    top-k by (-cos, id) making the merge exact), so
     search() ≡ search_many() holds on ANN-served plans."""
     spark = indexed.sparkSession
-    out_schema = f"query_id long, {id_col} long, cos_sim double"
     if not queries:
-        return [] if as_rows else local_frame(spark, [], out_schema)
+        return [] if as_rows else local_frame(spark, [], probe_schema(id_col, rerank))
     qids = np.asarray([q for q, _ in queries], dtype=np.int64)
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     qnorms = np.array(
@@ -496,64 +493,38 @@ def knn_ivf_probe_many(
     nq, kk = len(qids), k
 
     def score(it):
-        # concatenate the task's Arrow batches FIRST: the nq-query mask+gemv
-        # loop then runs once per TASK instead of once per ~10k-row batch
-        # (a 960k scan is ~96 batches over ~30 tasks — 3× fewer Python loop
-        # iterations, identical per-row float ops so results are bit-equal;
-        # memory stays bounded by the task's partition of (id, vec, cell)).
-        pdfs = [pdf for pdf in it if not pdf.empty]
-        if not pdfs:
+        # the task's Arrow batches as one table FIRST: the nq-query
+        # mask+gemv loop then runs once per TASK instead of once per
+        # ~10k-row batch (identical per-row float ops, so results are
+        # bit-equal; memory stays bounded by the task's partition)
+        task = task_rows(it, [id_col, vec_col, cell_col])
+        if task is None:
             return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+        rows, pdf = task
         x, norms = vector_rows(pdf[vec_col])
         ids = pdf[id_col].to_numpy(dtype=np.int64)
         cell = pdf[cell_col].to_numpy(dtype=np.int64)
         batch_cells = set(int(c) for c in np.unique(cell))
-        out_q, out_i, out_s = [], [], []
+        picks = []
         for qi in range(nq):
             probe = [c for c in cells[qi] if int(c) in batch_cells]
             if not probe:
                 continue
-            mask = np.isin(cell, np.asarray(probe, dtype=np.int64))
-            xs = x[mask]
-            cos = (xs @ qmat[qi]) / (norms[mask] * qnorms[qi])
-            idsm = ids[mask]
-            top = local_topk(idsm, cos, kk)
-            out_q.append(np.full(top.size, qids[qi]))
-            out_i.append(idsm[top])
-            out_s.append(cos[top])
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_i),
-                    "cos_sim": np.concatenate(out_s),
-                }
-            )
+            sel = np.flatnonzero(np.isin(cell, np.asarray(probe, dtype=np.int64)))
+            cos = (x[sel] @ qmat[qi]) / (norms[sel] * qnorms[qi])
+            top = local_topk(ids[sel], cos, kk)
+            picks.append((int(qids[qi]), sel[top], cos[top]))
+        if picks:
+            yield topk_record_batch(rows, picks, ids, id_col, rerank)
 
     local = (
         indexed.where(F.col(cell_col).isin(union))
-        .select(id_col, vec_col, cell_col)
-        .mapInPandas(score, out_schema)
+        .select(*probe_input_cols([id_col, vec_col, cell_col], rerank))
+        .mapInArrow(score, probe_schema(id_col, rerank))
     )
-    if as_rows:
-        # rerank-free serving: merge the task-local tops on the DRIVER
-        # (collect ≤ tasks × nq × k rows) — no window exchange, no
-        # further job for the consumer
-        return merge_local_topk(
-            ((r["query_id"], r[id_col], r["cos_sim"]) for r in local.collect()),
-            k,
-        )
-    # lazy subplan (default): consumers that JOIN the hits downstream keep
-    # the whole probe+merge+join as ONE Spark action
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
-    return (
-        local.withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= k)
-        .drop("_rn")
-    )
+    if rerank is not None:
+        return local
+    return merge_probe_tops(local, k, id_col, as_rows)
 
 
 def local_topk(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
@@ -565,23 +536,146 @@ def local_topk(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
     return np.lexsort((ids, -scores))[:k]
 
 
-def merge_local_topk(
-    rows, k: int
-) -> list[tuple[int, int, float]]:
+def merge_local_topk(rows, k: int) -> list[tuple]:
     """Exact driver-side merge of task-local top-k rows → per-query global
     top-k under (score desc, id asc) — the same total order the window
     merge produced, bit-for-bit (python float compare == Spark double
-    compare; ties at the k-th score keep the smallest id).  Input size is
-    ≤ tasks × |queries| × k."""
-    per_q: dict[int, list[tuple[int, int, float]]] = {}
-    for q, i, s in rows:
-        per_q.setdefault(q, []).append((q, i, s))
-    out: list[tuple[int, int, float]] = []
+    compare; ties at the k-th score keep the smallest id).  Each row is a
+    tuple (query_id, id, score, *payload); the payload rides along
+    untouched.  Input size is ≤ tasks × |queries| × k."""
+    per_q: dict[int, list[tuple]] = {}
+    for row in rows:
+        per_q.setdefault(row[0], []).append(tuple(row))
+    out: list[tuple] = []
     for q in sorted(per_q):
         lst = per_q[q]
         lst.sort(key=lambda t: (-t[2], t[1]))
         out.extend(lst[:k])
     return out
+
+
+def merge_probe_tops(
+    local: DataFrame, k: int, id_col: str, as_rows: bool
+) -> "DataFrame | list[tuple[int, int, float]]":
+    """Each query's exact top-k of a probe's task-local tops ``local``
+    (query_id, id, cos_sim) under (cos desc, id asc): merged on the driver
+    (``as_rows``: the rows, no further job) or as a lazy per-query window
+    (a frame; one exchange)."""
+    if as_rows:
+        return merge_local_topk(
+            ((r["query_id"], r[id_col], r["cos_sim"]) for r in local.collect()),
+            k,
+        )
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
+    return (
+        local.withColumn("_rn", F.row_number().over(w))
+        .where(F.col("_rn") <= k)
+        .drop("_rn")
+    )
+
+
+# -- probe task output: task-local top-k rows, optionally with rerank inputs
+
+# the doc-text columns a standing plan joins into its IVF-family ANN cache
+# (and its delta embeddings), so a probe task emits its hits' text itself
+DOC_TEXT_COL = "doc_text"
+HAS_DOC_COL = "has_doc"
+
+
+@dataclass(frozen=True)
+class ProbeRerank:
+    """The rerank inputs a probe task attaches to its task-local top-k
+    rows: per query id its text and L10 anchors (dates, ids), and whether
+    the L9 fuzz rerank is on (``partial``: the task computes
+    ``partial_ratio_series`` of query text vs doc text for those rows).
+    The probed frame must carry ``DOC_TEXT_COL`` and ``HAS_DOC_COL`` (null
+    where the vector has no doc row)."""
+
+    qtext: dict[int, str]
+    anchors: dict[int, tuple[list[str], list[str]]]
+    partial: bool
+
+
+def probe_schema(id_col: str, rerank: ProbeRerank | None) -> str:
+    """The DDL schema of a probe's task-local top-k rows."""
+    base = f"query_id long, {id_col} long, cos_sim double"
+    if rerank is None:
+        return base
+    return (
+        f"{base}, partial double, qtext string, qdates array<string>, "
+        f"qid_anchors array<string>, {DOC_TEXT_COL} string, "
+        f"{HAS_DOC_COL} boolean"
+    )
+
+
+def probe_input_cols(cols: list[str], rerank: ProbeRerank | None) -> list[str]:
+    """A probe's input columns: the scorer's, plus the doc text when the
+    rows carry rerank inputs — every other consumer leaves it unread."""
+    return [*cols, DOC_TEXT_COL, HAS_DOC_COL] if rerank is not None else cols
+
+
+def task_rows(batches, cols: list[str]) -> tuple[pa.Table, pd.DataFrame] | None:
+    """A ``mapInArrow`` task's input batches as one Arrow table, plus a
+    pandas frame of the scorer's ``cols`` (the doc text stays Arrow), or
+    None when the task has no rows."""
+    batches = [b for b in batches if b.num_rows]
+    if not batches:
+        return None
+    rows = pa.Table.from_batches(batches)
+    return rows, rows.select(cols).to_pandas()
+
+
+def topk_record_batch(
+    rows: pa.Table,
+    picks: list[tuple[int, np.ndarray, np.ndarray]],
+    ids: np.ndarray,
+    id_col: str,
+    rerank: ProbeRerank | None,
+) -> pa.RecordBatch:
+    """A probe task's top-k rows as one Arrow batch (``probe_schema``).
+    ``picks`` holds per query (query id, the positions ``local_topk``
+    selected in ``rows``, their cosines).  With ``rerank`` only those
+    rows' text is taken from ``rows``, so the task makes Python strings
+    for its local top-k alone."""
+    qid = np.concatenate(
+        [np.full(pos.size, q, dtype=np.int64) for q, pos, _ in picks]
+    )
+    pos = np.concatenate([p for _, p, _ in picks])
+    cols = {
+        "query_id": pa.array(qid, pa.int64()),
+        id_col: pa.array(ids[pos], pa.int64()),
+        "cos_sim": pa.array(np.concatenate([c for _, _, c in picks]), pa.float64()),
+    }
+    if rerank is not None:
+        at = pa.array(pos, pa.int64())
+        text = rows.column(DOC_TEXT_COL).take(at).combine_chunks()
+        qs = qid.tolist()
+        qtext = [rerank.qtext[q] for q in qs]
+        if rerank.partial:
+            partial = pa.array(
+                partial_ratio_series(
+                    pd.Series(qtext, dtype=object),
+                    pd.Series(text.to_pylist(), dtype=object),
+                ).to_numpy(dtype=np.float64),
+                pa.float64(),
+            )
+        else:
+            partial = pa.nulls(len(qs), pa.float64())
+        cols.update(
+            partial=partial,
+            qtext=pa.array(qtext, pa.string()),
+            qdates=pa.array([rerank.anchors[q][0] for q in qs], pa.list_(pa.string())),
+            qid_anchors=pa.array(
+                [rerank.anchors[q][1] for q in qs], pa.list_(pa.string())
+            ),
+            **{
+                DOC_TEXT_COL: text,
+                HAS_DOC_COL: rows.column(HAS_DOC_COL).take(at).combine_chunks(),
+            },
+        )
+    return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 
 
 _LSH_TOP_BITS = 8

@@ -266,16 +266,18 @@ def knn_ivf_sq8_probe_many(
     vec_col: str = "embedding",
     cell_col: str = "ivf_cell",
     as_rows: bool = False,
+    rerank=None,
 ) -> "DataFrame | list[tuple[int, int, float]]":
     """Batched IVF-SQ8 probe → (query_id, id, cos_sim): the fused
     ``knn_ivf_pq_probe_many`` two-pass shape — one map-only code scan over
     the union of all queries' probed cells (per-query cell mask + decoded
-    dot + batch-local top ``refine·k``, merged by a k-bounded window), one
+    dot + batch-local top ``refine·k``, merged on the driver), one
     exact re-rank pass over the candidate union.  Candidate SELECTION is
     bit-identical to per-query ``knn_ivf_sq8_probe`` (``_sq8_scores``'s
     row-local reduce + the (−score, id) tie-break); re-ranked cosines are
     pinned at 9 decimals with exact id sets — the ``knn_bruteforce_many``
-    convention (dgemv bits vary with matrix row count).
+    convention (dgemv bits vary with matrix row count).  ``as_rows`` /
+    ``rerank`` pick how the re-ranked tops merge.
 
     The two-pass engine is shared with the PQ batch probe
     (``fused_probe.fused_cell_probe_many``); only the masked-block scorer
@@ -303,4 +305,5 @@ def knn_ivf_sq8_probe_many(
         code_col="sq_code", code_width=dim, score_col="sq_score",
         prepare_scorer=prepare, k=k, n_probe=n_probe, refine=refine,
         id_col=id_col, vec_col=vec_col, cell_col=cell_col, as_rows=as_rows,
+        rerank=rerank,
     )

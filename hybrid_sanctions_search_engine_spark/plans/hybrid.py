@@ -39,7 +39,13 @@ from ..operators.postings import (
     doc_lengths,
     term_doc_freq,
 )
-from ..operators.similarity import knn_bruteforce
+from ..operators.similarity import (
+    DOC_TEXT_COL,
+    HAS_DOC_COL,
+    ProbeRerank,
+    knn_bruteforce,
+    merge_local_topk,
+)
 from ..sources.tables import local_frame
 from .wand import query_terms
 
@@ -106,6 +112,21 @@ class SearchOpts:
     # extra work (the non-escalating queries' scoring), cancelled via job
     # group when nothing escalates.
     speculative_fuzzy: bool = True
+
+
+# ANN layouts whose standing cache carries the doc text (plan open)
+_TEXT_CACHED_KINDS = ("ivf", "ivf_pq", "ivf_sq8")
+
+
+def _with_doc_text(vectors: DataFrame, docs: DataFrame, text_col: str) -> DataFrame:
+    """``vectors`` left-joined with each vec_id's doc text
+    (``DOC_TEXT_COL``; ``HAS_DOC_COL`` is null where no doc row exists)."""
+    text = docs.select(
+        F.col("doc_id").alias("vec_id"),
+        F.col(text_col).alias(DOC_TEXT_COL),
+        F.lit(True).alias(HAS_DOC_COL),
+    )
+    return vectors.join(text, "vec_id", "left")
 
 
 def _timed_into(trace: dict, name: str, fn, lock=None):
@@ -255,6 +276,23 @@ class HybridSearchPlan:
                 self.ann_df = docs.sparkSession.read.parquet(ann_index_dir)
             else:
                 raise ValueError(f"unknown ann_kind: {ann_kind!r}")
+            if ann_kind in _TEXT_CACHED_KINDS:
+                # the cache carries each vector's doc text (left join), so
+                # the batched probe reranks inside its own tasks instead of
+                # joining its hits into the doc store per batch.  Range-
+                # partitioned and sorted on the cell, the cached batches
+                # stay cell-clustered — the ivf_cell IN (...) filter still
+                # skips them by min/max stats — and the probe runs at most
+                # defaultParallelism tasks.
+                n_parts = min(
+                    docs.sparkSession.sparkContext.defaultParallelism,
+                    len(self.ann_centroids),
+                )
+                self.ann_df = (
+                    _with_doc_text(self.ann_df, docs, text_col)
+                    .repartitionByRange(n_parts, "ivf_cell")
+                    .sortWithinPartitions("ivf_cell", "vec_id")
+                )
             # the plan is a STANDING server (the .persist() cache replaces
             # the reference's TTL caches); re-reading the ANN parquet from
             # disk per batch cost ~5 s of the 960k vector stage — cached,
@@ -303,6 +341,9 @@ class HybridSearchPlan:
         self.delta_postings: DataFrame | None = None
         self.delta_stats: tuple[int, float] | None = None
         self.delta_embeddings: DataFrame | None = None
+        # delta_embeddings ⟕ delta_docs' text, cached while attached (the
+        # batched probe's delta twin of the text-carrying ANN cache)
+        self._delta_ann: DataFrame | None = None
         self._fuzzy_dict: DataFrame | None = None
 
     # -- streaming delta overlay ------------------------------------------
@@ -342,14 +383,14 @@ class HybridSearchPlan:
         old file set — n_docs/avgdl would over-report the rows the scans
         can see.  Call ``detach_delta()`` after compaction."""
         if delta_embeddings is not None and delta_docs is None:
-            # the rerank/anchor stages join vector hits against the doc-text
-            # store (base ∪ delta_docs) with an INNER join: a fresh delta
-            # doc surfaced by the vector stage would silently VANISH from
-            # the results whenever rerank or anchors are enabled — and stay
-            # on the rerank-free fast path — flipping results with opts.
-            # An embeddings overlay therefore requires the matching doc
-            # overlay (the reference's overlay serves docs with payloads,
-            # watchlist_index_service.py:85-222).
+            # the rerank/anchor stages drop vector hits without doc text
+            # (the inner-join semantics of the doc-text probe): a fresh
+            # delta doc surfaced by the vector stage would silently VANISH
+            # from the results whenever rerank or anchors are enabled — and
+            # stay on the rerank-free fast path — flipping results with
+            # opts.  An embeddings overlay therefore requires the matching
+            # doc overlay (the reference's overlay serves docs with
+            # payloads, watchlist_index_service.py:85-222).
             raise ValueError(
                 "attach_delta: delta_embeddings requires delta_docs — "
                 "vector hits on fresh docs need their text for the "
@@ -363,6 +404,13 @@ class HybridSearchPlan:
         self.delta_docs = delta_docs
         self.delta_postings = delta_postings
         self.delta_embeddings = delta_embeddings
+        if self._delta_ann is not None:
+            self._delta_ann.unpersist()
+            self._delta_ann = None
+        if delta_embeddings is not None and self._probe_reranks:
+            self._delta_ann = _with_doc_text(
+                delta_embeddings, delta_docs, self.text_col
+            ).persist()
         if delta_stats is None and delta_postings is not None:
             row = (
                 delta_postings.select("doc_id", "doc_len")
@@ -393,6 +441,16 @@ class HybridSearchPlan:
         """Drop the overlay (after compaction folds the delta into the base
         index + ANN layout)."""
         self.attach_delta(None, None, None, None)
+
+    @property
+    def _probe_reranks(self) -> bool:
+        """The batched vector leg reranks inside its probe tasks: the base
+        vectors are a text-carrying IVF-family ANN cache, or absent.  The
+        LSH layouts and the no-index brute-force scan join their hits into
+        the doc store instead."""
+        if self.ann_index_dir is not None:
+            return self.ann_kind in _TEXT_CACHED_KINDS
+        return self.embeddings is None
 
     @property
     def _delta_lex(self) -> bool:
@@ -522,6 +580,7 @@ class HybridSearchPlan:
             self.dl,
             self.dictionary,
             self.ann_df,
+            self._delta_ann,
             self._fuzzy_dict,
         ):
             if df is not None:
@@ -1001,13 +1060,371 @@ class HybridSearchPlan:
                 )[:k]
         return fz_rows
 
+    def _indexed_batch_tops(
+        self,
+        entries: list[tuple[int, str]],
+        k: int,
+        override: list[tuple[int, str, float]] | None = None,
+        min_should_match: int | str = 1,
+    ) -> list[tuple[int, int, float]]:
+        """One scoring job over the plan's pre-grouped index cache →
+        each query id's exact top-k as (query_id, doc_id, score): the
+        task-local tops (≤ n_groups × ids × k rows) merged on the driver,
+        so the job plans no exchange at all (``batch_topk_indexed``'s
+        per-query window would add one, and a second job)."""
+        from .wand import batch_topk_local
+
+        local = batch_topk_local(
+            self.docs.sparkSession, self.index_dir, entries, k=k,
+            index_df=self.index_df, meta=self.index_meta,
+            query_terms_override=override, min_should_match=min_should_match,
+            n_groups=self._idx_n_groups, pre_grouped=True,
+        )
+        return merge_local_topk(
+            (
+                (r["query_id"], r["doc_id"], r["score"])
+                for r in local.select("query_id", "doc_id", "score").collect()
+            ),
+            k,
+        )
+
+    # -- batched vector leg ---------------------------------------------
+
+    def _vector_stage_batch(
+        self,
+        targets: list[int],
+        qtext: dict[int, str],
+        opts: SearchOpts,
+        cancel=None,
+    ) -> dict[int, list[dict]]:
+        """Stage 3 for a query set → per query id its k-bounded vector rows
+        (doc_id, score, cos_sim, anchor_mult): the cosine top-k, the L9
+        fuzz rerank folded into ``score`` and the L10 anchor multiplier —
+        evaluated in-cluster, so no document text reaches the driver (at
+        web scale a 100-query × k × ~100 KB-doc collect would be ~100 MB).
+        Candidates come from a cell-pruned ANN probe or, with no ANN index,
+        from ``knn_bruteforce_many`` — the query×doc fan-out stays inside
+        numpy Arrow tasks, NEVER a crossJoin + window over
+        |corpus| × |queries| rows.  ``cancel``: an abandoned speculation
+        submits no further job once it is set."""
+        from ..operators.fuzzy import extract_anchors
+
+        vec_rows: dict[int, list[dict]] = {q: [] for q in targets}
+        have_vectors = (
+            self.embeddings is not None
+            or self.ann_index_dir is not None
+            or self.delta_embeddings is not None
+        )
+        if not (targets and have_vectors):
+            return vec_rows
+        qvecs = [(q, self.encoder.encode_one(qtext[q])) for q in targets]
+        anchors = {
+            q: extract_anchors(qtext[q]) if opts.enable_anchor_boost else ([], [])
+            for q in targets
+        }
+        # rerank-free fast path: with the fuzz rerank off and no query
+        # carrying anchors, the text could only give anchor_mult = 1.0 and
+        # an unchanged score — the rows skip it.  search() returns the same
+        # under the same opts (its rerank is gated on opts.rapidfuzz_rerank
+        # and empty anchors multiply by 1.0), so batch↔single parity holds.
+        need_text = opts.rapidfuzz_rerank or any(d or i for d, i in anchors.values())
+        stage = (
+            self._probe_vector_rows if self._probe_reranks
+            else self._joined_vector_rows
+        )
+        for q, doc, score, cos, mult in stage(
+            qvecs, qtext, anchors, opts, need_text, cancel
+        ):
+            vec_rows[q].append(
+                {"doc_id": doc, "score": score, "cos_sim": cos, "anchor_mult": mult}
+            )
+        return vec_rows
+
+    def _rerank_frame(
+        self, hits: DataFrame, partial, text_col: str, opts: SearchOpts, *keep: str
+    ) -> DataFrame:
+        """The L9 rerank and L10 anchor multiplier as JVM expressions over
+        hits carrying (query_id, doc_id, cos_sim, qtext, qdates,
+        qid_anchors, ``text_col``) → (query_id, doc_id, score, cos_sim,
+        anchor_mult, *keep).  ``partial`` is the partial-ratio column
+        ``rapidfuzz_rerank_expr`` takes."""
+        from ..operators.fuzzy import rapidfuzz_rerank_expr
+
+        df = hits.withColumn("score", F.col("cos_sim"))
+        if opts.rapidfuzz_rerank:
+            df = rapidfuzz_rerank_expr(
+                df, F.col("qtext"), partial, text_col=text_col,
+                score_col="score", sort=False,
+            )
+        # same containment × multiplier as operators.fuzzy.anchor_boost
+        # (dob ×1.2, id ×1.1); empty anchor arrays make both exists() false
+        anchor_mult = F.when(
+            F.exists(F.col("qdates"), lambda d: F.col(text_col).contains(d)),
+            F.lit(1.2),
+        ).otherwise(F.lit(1.0)) * F.when(
+            F.exists(F.col("qid_anchors"), lambda i: F.col(text_col).contains(i)),
+            F.lit(1.1),
+        ).otherwise(F.lit(1.0))
+        return df.select(
+            "query_id", "doc_id", "score", "cos_sim",
+            anchor_mult.alias("anchor_mult"), *keep,
+        )
+
+    def _probe_vector_rows(self, qvecs, qtext, anchors, opts, need_text, cancel):
+        """The batched vector leg over a text-carrying IVF-family cache (and
+        the delta overlay's text-carrying embeddings): each probe task
+        emits its local top-k with the rows' text, query text, anchors and
+        partial ratio; the rerank/anchor projection runs on that output in
+        the same job and drops the text before the collect; the driver
+        merges the local tops by (cos desc, doc asc), keeps k, and only then
+        drops hits with no doc row — the inner-join semantics of a doc-text
+        join (such a hit vanishes; the (k+1)-th does not replace it)."""
+        from ..operators.similarity import knn_bruteforce_many
+
+        k = opts.top_k
+        rerank = (
+            ProbeRerank(
+                qtext={q: qtext[q] for q, _ in qvecs},
+                anchors=anchors,
+                partial=opts.rapidfuzz_rerank,
+            )
+            if need_text
+            else None
+        )
+        kw = dict(k=k, as_rows=rerank is None, rerank=rerank)
+        kind = self.ann_kind if self.ann_index_dir is not None else None
+        parts = []
+        if kind == "ivf":
+            from ..operators.similarity import knn_ivf_probe_many
+
+            parts.append(knn_ivf_probe_many(
+                self.ann_df, self.ann_centroids, qvecs,
+                n_probe=self.ann_n_probe, **kw,
+            ))
+        elif kind == "ivf_pq":
+            # ADC over the union of probed cells, then one exact re-rank
+            # pass: candidate selection bit-identical to per-query probes,
+            # cosines exact, so batch↔single parity holds at 9 decimals
+            from ..operators.pq import knn_ivf_pq_probe_many
+
+            parts.append(knn_ivf_pq_probe_many(
+                self.ann_df, self.ann_centroids, self.ann_codebooks, qvecs,
+                n_probe=self.ann_n_probe, refine=self.ann_refine, **kw,
+            ))
+        elif kind == "ivf_sq8":
+            from ..operators.sq import knn_ivf_sq8_probe_many
+
+            parts.append(knn_ivf_sq8_probe_many(
+                self.ann_df, self.ann_centroids, self.ann_vmin, self.ann_vmax,
+                qvecs, n_probe=self.ann_n_probe, refine=self.ann_refine, **kw,
+            ))
+        if self._delta_ann is not None:
+            # exact batched gemv over the delta — the single path's
+            # knn_bruteforce op shape, so base ∪ delta merges bit-exactly
+            # (delta ids are disjoint from the base)
+            parts.append(knn_bruteforce_many(self._delta_ann, qvecs, **kw))
+        if rerank is None:
+            return [
+                (q, d, c, c, 1.0)
+                for q, d, c in merge_local_topk(
+                    (row for part in parts for row in part), k
+                )
+            ]
+        if cancel is not None and cancel.is_set():
+            return []  # abandoned: don't submit the final job
+        local = parts[0]
+        for part in parts[1:]:
+            local = local.unionByName(part)
+        scored = self._rerank_frame(
+            local.withColumnRenamed("vec_id", "doc_id"), F.col("partial"),
+            DOC_TEXT_COL, opts, HAS_DOC_COL,
+        )
+        merged = merge_local_topk(
+            (
+                (r["query_id"], r["doc_id"], r["cos_sim"], r["score"],
+                 r["anchor_mult"], r[HAS_DOC_COL])
+                for r in scored.collect()
+            ),
+            k,
+        )
+        return [(q, d, s, c, m) for q, d, c, s, m, has_doc in merged if has_doc]
+
+    def _joined_vector_rows(self, qvecs, qtext, anchors, opts, need_text, cancel):
+        """The batched vector leg over the LSH layouts or the no-index
+        embeddings scan: per-query windowed hits, joined with their text
+        (query text and anchors as a broadcast side table; the ≤ nq×k hits
+        broadcast into the base ∪ delta doc store) for the rerank/anchor
+        projection."""
+        from pyspark.sql import Window
+
+        from ..operators.fuzzy import partial_ratio_col
+        from ..operators.similarity import knn_bruteforce_many
+
+        spark = self.docs.sparkSession
+        k = opts.top_k
+        targets = [q for q, _ in qvecs]
+        qv = dict(qvecs)
+        if self.ann_index_dir is not None and self.ann_kind == "lsh_mb":
+            import os as _os
+
+            from ..operators.similarity import lsh_signature_of
+            from ..sources.fs import fs_for
+
+            mmeta = fs_for(self.ann_index_dir).read_json(
+                _os.path.join(self.ann_index_dir, "_lsh_mb_meta.json")
+            )
+            nb, bb = mmeta["n_bands"], mmeta["band_bits"]
+            triples = []
+            for q in targets:
+                sig = lsh_signature_of(
+                    qv[q], mmeta["dim"], nb * bb, mmeta["seed"]
+                )
+                for bi in range(nb):
+                    triples.append(
+                        (q, bi, (sig >> (bi * bb)) & ((1 << bb) - 1))
+                    )
+            banddf = local_frame(
+                spark,
+                triples,
+                "query_id long, lsh_band_idx int, lsh_band_val int",
+            )
+            # static isin prefilters prune the scan to (a superset of)
+            # the union of all queries' band directories — literal
+            # partition predicates, no DPP dependence; the broadcast
+            # equality join then refines exactly.  A vector can match
+            # several of a query's bands → dedup per (query, vec).
+            vals = sorted({v for _, _, v in triples})
+            base = (
+                self.ann_df
+                .where(F.col("lsh_band_val").isin(vals))
+                .join(
+                    F.broadcast(banddf), ["lsh_band_idx", "lsh_band_val"]
+                )
+                .dropDuplicates(["query_id", "vec_id"])
+            )
+        elif self.ann_index_dir is not None:
+            import itertools
+            import os as _os
+
+            from ..operators.similarity import (
+                _LSH_TOP_BITS,
+                lsh_signature_of,
+            )
+            from ..sources.fs import fs_for
+
+            lmeta = fs_for(self.ann_index_dir).read_json(
+                _os.path.join(self.ann_index_dir, "_lsh_meta.json")
+            )
+            n_planes = lmeta["n_planes"]
+            sigs, bands = {}, {}
+            for q in targets:
+                sg = lsh_signature_of(qv[q], lmeta["dim"], n_planes, lmeta["seed"])
+                sigs[q] = sg
+                qband = (sg >> (n_planes - _LSH_TOP_BITS)) & ((1 << _LSH_TOP_BITS) - 1)
+                bs = set()
+                for h in range(self.ann_max_hamming + 1):
+                    for flips in itertools.combinations(range(_LSH_TOP_BITS), h):
+                        b = qband
+                        for f in flips:
+                            b ^= 1 << f
+                        bs.add(b)
+                bands[q] = bs
+            union_bands = sorted({b for bs in bands.values() for b in bs})
+            banddf = local_frame(
+                spark,
+                [(q, b, sigs[q]) for q, bs in bands.items() for b in bs],
+                "query_id long, lsh_band int, qsig long",
+            )
+            base = (
+                self.ann_df
+                .where(F.col("lsh_band").isin(union_bands))
+                .join(F.broadcast(banddf), "lsh_band")
+                .where(
+                    F.bit_count(F.col("lsh_sig").bitwiseXOR(F.col("qsig")))
+                    <= self.ann_max_hamming
+                )
+            )
+        else:
+            base = None
+        w = Window.partitionBy("query_id").orderBy(
+            F.desc("cos_sim"), F.asc("doc_id")
+        )
+        if base is not None:
+            # Arrow cosine at EVERY dim: the batched probe scores
+            # |escalating| × cell-population pairs, and the interpreted HOF
+            # cosine_col walks each pair's arrays three times (dot + both
+            # norms) in Catalyst eval — ~6 s of the round-5 profile; the
+            # numpy batch UDF does one einsum.  The query matrix rides in
+            # the UDF closure keyed by query_id (cosine_vs_queries_udf)
+            # instead of a per-row qvec join column — half the Arrow
+            # traffic.
+            from ..operators.similarity import cosine_vs_queries_udf
+
+            cos = cosine_vs_queries_udf(qv)(F.col("embedding"), F.col("query_id"))
+            hits = (
+                base.withColumn("cos_sim", cos)
+                .select("query_id", F.col("vec_id").alias("doc_id"), "cos_sim")
+                .withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") <= k)
+                .drop("rn")
+            )
+        else:
+            # no ANN index: exact multi-query cosine in ONE shuffle-free
+            # scan (per-query gemv, batch-local top-k) — the scale-correct
+            # replacement for crossJoin + window
+            hits = knn_bruteforce_many(self.embeddings, qvecs, k=k).select(
+                "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
+            )
+        if self.delta_embeddings is not None:
+            # exact batched gemv over the delta embeddings — same per-query
+            # gemv shape as the single-path knn_bruteforce, so base ∪ delta
+            # re-top-k merges bit-exactly (delta ids disjoint from base)
+            dhits = knn_bruteforce_many(self.delta_embeddings, qvecs, k=k).select(
+                "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
+            )
+            hits = (
+                hits.unionByName(dhits)
+                .withColumn("rn", F.row_number().over(w))
+                .where(F.col("rn") <= k)
+                .drop("rn")
+            )
+        if cancel is not None and cancel.is_set():
+            return []  # abandoned: don't submit the final job
+        if not need_text:
+            return [
+                (r["query_id"], r["doc_id"], r["cos_sim"], r["cos_sim"], 1.0)
+                for r in hits.collect()
+            ]
+        qmeta = local_frame(
+            spark,
+            [
+                {
+                    "query_id": q, "qtext": qtext[q],
+                    "qdates": anchors[q][0], "qid_anchors": anchors[q][1],
+                }
+                for q in targets
+            ],
+            "query_id long, qtext string, qdates array<string>, "
+            "qid_anchors array<string>",
+        )
+        with_text = self._docs_for_text().join(
+            F.broadcast(hits.join(F.broadcast(qmeta), "query_id")), "doc_id"
+        )
+        scored = self._rerank_frame(
+            with_text, partial_ratio_col(F.col("qtext"), F.col(self.text_col)),
+            self.text_col, opts,
+        )
+        return [tuple(r) for r in scored.collect()]
+
     def search_many(
         self, queries: list[tuple[int, str]], opts: SearchOpts | None = None
     ) -> tuple[DataFrame, dict[int, dict]]:
         """The whole query set through the adaptive ladder in a BOUNDED number
-        of Spark jobs (the reference's msearch shape, S7): one batched AC job,
-        one fuzzy-expansion job + one fuzzy-scoring job for the escalating
-        subset, one batched vector job — instead of ~6 jobs per query.
+        of Spark jobs (the reference's msearch shape, S7) instead of ~6 jobs
+        per query.  On an indexed plan with an in-RAM dictionary and an
+        IVF vector index that is TWO jobs, neither with an exchange: the
+        fused AC+fuzzy scoring job and the vector probe that reranks inside
+        its tasks; both collect task-local tops the driver merges.
         Per-query semantics are identical to ``search()`` (parity-tested);
         returns ((query_id, doc_id, score, rank), {query_id: meta}).
 
@@ -1018,7 +1435,6 @@ class HybridSearchPlan:
 
         from ..functions.normalize import fold_homoglyphs
         from ..operators.bm25 import batch_topk
-        from ..operators.fuzzy import extract_anchors, rapidfuzz_rerank_expr
 
         t_start = time.monotonic()
         # per-stage wall times build in a LOCAL dict and publish as a
@@ -1083,359 +1499,6 @@ class HybridSearchPlan:
             else None
         )
 
-        # --- stage 3: batched vector for the escalating subset -------------
-        # Candidates come from a partition-pruned ANN probe (IVF cells / LSH
-        # bands) or — with no ANN index — from `knn_bruteforce_many`, a
-        # shuffle-free mapInPandas scan that keeps the query×doc fan-out
-        # inside numpy Arrow tasks (NEVER a crossJoin + window over
-        # |corpus| × |queries| rows).  The L9 rerank and L10 anchor
-        # containment run IN-CLUSTER as Column exprs over the k-bounded hits;
-        # the collect ships only (query_id, doc_id, score, cos_sim,
-        # anchor_mult) — no document text reaches the driver (at web scale a
-        # 100-query × k × ~100 KB-doc collect would be ~100 MB).
-        have_vectors = (
-            self.embeddings is not None
-            or self.ann_index_dir is not None
-            or self.delta_embeddings is not None
-        )
-
-        def _vector_stage_batch(targets: list[int], cancel=None) -> dict[int, list]:
-            vec_rows: dict[int, list] = {q: [] for q in targets}
-            if not (targets and have_vectors):
-                return vec_rows
-            from pyspark.sql import Window
-
-            import numpy as np
-
-            qvecs = {q: self.encoder.encode_one(qtext[q]) for q in targets}
-            # the L10 anchors decide — BEFORE the probe — whether a doc-text
-            # probe will run at all: with the fuzz rerank off and no anchors
-            # the merged rows can stay on the driver (zero further jobs),
-            # while the rerank path wants the probe as a LAZY subplan so the
-            # whole vector stage stays ONE Spark action (an eager probe
-            # collect + local re-broadcast measured ~0.5 s slower per batch
-            # at sf0.1 — two action round trips against one)
-            anchors = {
-                q: (
-                    extract_anchors(qtext[q])
-                    if opts.enable_anchor_boost
-                    else ([], [])
-                )
-                for q in targets
-            }
-            need_text_probe = opts.rapidfuzz_rerank or any(
-                a[0] or a[1] for a in anchors.values()
-            )
-            ivf_hits = None
-            hit_rows: list | None = None
-            if self.ann_index_dir is not None and self.ann_kind == "ivf":
-                # fused per-cell batched scorer (round 6): ONE map-only pass
-                # over the pruned cell union; each Arrow task masks each
-                # query to its own probed cells and emits k-bounded local
-                # top-ks — no per-(query, row) join fan-out.  as_rows
-                # (round 7, rerank-free path): the exact top-k merge happens
-                # DRIVER-side over the task-local tops (≤ tasks × nq × k
-                # rows), and no further job runs at all.
-                from ..operators.similarity import knn_ivf_probe_many
-
-                if need_text_probe:
-                    ivf_hits = knn_ivf_probe_many(
-                        self.ann_df, self.ann_centroids,
-                        [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe,
-                    ).select(
-                        "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
-                    )
-                else:
-                    hit_rows = knn_ivf_probe_many(
-                        self.ann_df, self.ann_centroids,
-                        [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe, as_rows=True,
-                    )
-                base = None
-            elif self.ann_index_dir is not None and self.ann_kind == "ivf_pq":
-                # same fused two-pass shape as the flat-IVF batch (ADC over
-                # the union of probed cells, one exact re-rank) — candidate
-                # selection is bit-identical to per-query probes, cosines
-                # exact, so batch↔single parity holds at 9 decimals
-                from ..operators.pq import knn_ivf_pq_probe_many
-
-                if need_text_probe:
-                    ivf_hits = knn_ivf_pq_probe_many(
-                        self.ann_df, self.ann_centroids, self.ann_codebooks,
-                        [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-                    ).select(
-                        "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
-                    )
-                else:
-                    hit_rows = knn_ivf_pq_probe_many(
-                        self.ann_df, self.ann_centroids, self.ann_codebooks,
-                        [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-                        as_rows=True,
-                    )
-                base = None
-            elif self.ann_index_dir is not None and self.ann_kind == "ivf_sq8":
-                # int8 layout, same fused two-pass shape; candidate
-                # selection bit-identical to per-query probes (row-local
-                # multiply-reduce scores), cosines exact after re-rank
-                from ..operators.sq import knn_ivf_sq8_probe_many
-
-                if need_text_probe:
-                    ivf_hits = knn_ivf_sq8_probe_many(
-                        self.ann_df, self.ann_centroids, self.ann_vmin,
-                        self.ann_vmax, [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-                    ).select(
-                        "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
-                    )
-                else:
-                    hit_rows = knn_ivf_sq8_probe_many(
-                        self.ann_df, self.ann_centroids, self.ann_vmin,
-                        self.ann_vmax, [(q, qvecs[q]) for q in targets],
-                        k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-                        as_rows=True,
-                    )
-                base = None
-            elif self.ann_index_dir is not None and self.ann_kind == "lsh_mb":
-                import os as _os
-
-                from ..operators.similarity import lsh_signature_of
-                from ..sources.fs import fs_for
-
-                mmeta = fs_for(self.ann_index_dir).read_json(
-                    _os.path.join(self.ann_index_dir, "_lsh_mb_meta.json")
-                )
-                nb, bb = mmeta["n_bands"], mmeta["band_bits"]
-                triples = []
-                for q in targets:
-                    sig = lsh_signature_of(
-                        qvecs[q], mmeta["dim"], nb * bb, mmeta["seed"]
-                    )
-                    for bi in range(nb):
-                        triples.append(
-                            (q, bi, (sig >> (bi * bb)) & ((1 << bb) - 1))
-                        )
-                banddf = local_frame(
-                    spark,
-                    triples,
-                    "query_id long, lsh_band_idx int, lsh_band_val int",
-                )
-                # static isin prefilters prune the scan to (a superset of)
-                # the union of all queries' band directories — literal
-                # partition predicates, no DPP dependence; the broadcast
-                # equality join then refines exactly.  A vector can match
-                # several of a query's bands → dedup per (query, vec).
-                vals = sorted({v for _, _, v in triples})
-                base = (
-                    self.ann_df
-                    .where(F.col("lsh_band_val").isin(vals))
-                    .join(
-                        F.broadcast(banddf), ["lsh_band_idx", "lsh_band_val"]
-                    )
-                    .dropDuplicates(["query_id", "vec_id"])
-                )
-            elif self.ann_index_dir is not None:
-                from ..operators.similarity import (
-                    _LSH_TOP_BITS,
-                    lsh_signature_of,
-                )
-                import itertools
-                import os as _os
-
-                from ..sources.fs import fs_for
-
-                lmeta = fs_for(self.ann_index_dir).read_json(
-                    _os.path.join(self.ann_index_dir, "_lsh_meta.json")
-                )
-                n_planes = lmeta["n_planes"]
-                sigs, bands = {}, {}
-                for q in targets:
-                    s = lsh_signature_of(qvecs[q], lmeta["dim"], n_planes, lmeta["seed"])
-                    sigs[q] = s
-                    qband = (s >> (n_planes - _LSH_TOP_BITS)) & ((1 << _LSH_TOP_BITS) - 1)
-                    bs = set()
-                    for h in range(self.ann_max_hamming + 1):
-                        for flips in itertools.combinations(range(_LSH_TOP_BITS), h):
-                            b = qband
-                            for f in flips:
-                                b ^= 1 << f
-                            bs.add(b)
-                    bands[q] = bs
-                union_bands = sorted({b for bs in bands.values() for b in bs})
-                banddf = local_frame(
-                    spark,
-                    [(q, b, sigs[q]) for q, bs in bands.items() for b in bs],
-                    "query_id long, lsh_band int, qsig long",
-                )
-                base = (
-                    self.ann_df
-                    .where(F.col("lsh_band").isin(union_bands))
-                    .join(F.broadcast(banddf), "lsh_band")
-                    .where(
-                        F.bit_count(F.col("lsh_sig").bitwiseXOR(F.col("qsig")))
-                        <= self.ann_max_hamming
-                    )
-                )
-            else:
-                base = None
-            if hit_rows is not None:
-                hits = None
-            elif ivf_hits is not None:
-                hits = ivf_hits
-            elif base is not None:
-                # Arrow cosine at EVERY dim: the batched probe scores
-                # |escalating| × cell-population pairs (~370k at 960k docs ×
-                # 34 queries), and the interpreted HOF cosine_col walks each
-                # pair's arrays three times (dot + both norms) in Catalyst
-                # eval — ~6 s of the round-5 profile; the numpy batch UDF
-                # does one einsum.  The query matrix rides in the UDF
-                # closure keyed by query_id (cosine_vs_queries_udf) instead
-                # of a per-row qvec join column — half the Arrow traffic.
-                # (Single-query probes keep the JVM expr: their post-prune
-                # volume is tiny and the job floor wins.)
-                from ..operators.similarity import cosine_vs_queries_udf
-
-                cos = cosine_vs_queries_udf(qvecs)(
-                    F.col("embedding"), F.col("query_id")
-                )
-                wv = Window.partitionBy("query_id").orderBy(
-                    F.desc("cos_sim"), F.asc("doc_id")
-                )
-                hits = (
-                    base.withColumn("cos_sim", cos)
-                    .select(
-                        "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
-                    )
-                    .withColumn("rn", F.row_number().over(wv))
-                    .where(F.col("rn") <= k)
-                    .drop("rn")
-                )
-            elif self.embeddings is not None:
-                # no ANN index: exact multi-query cosine in ONE shuffle-free
-                # scan (mapInPandas gemv per query, batch-local top-k) — the
-                # scale-correct replacement for crossJoin + window
-                from ..operators.similarity import knn_bruteforce_many
-
-                hits = knn_bruteforce_many(
-                    self.embeddings, [(q, qvecs[q]) for q in targets], k=k
-                ).select("query_id", F.col("vec_id").alias("doc_id"), "cos_sim")
-            else:
-                hits = None
-            if self.delta_embeddings is not None:
-                # overlay (round 6): exact batched gemv over the delta
-                # embeddings — same per-query gemv shape as the single-path
-                # knn_bruteforce, so base∪delta re-top-k merges bit-exactly
-                # with vector_stage()'s union (delta ids disjoint from base)
-                from ..operators.similarity import knn_bruteforce_many
-
-                dhits = knn_bruteforce_many(
-                    self.delta_embeddings, [(q, qvecs[q]) for q in targets], k=k
-                ).select("query_id", F.col("vec_id").alias("doc_id"), "cos_sim")
-                if hit_rows is not None:
-                    # base rows + collected delta top-k, re-top-k'd driver-
-                    # side under the same (cos desc, doc asc) order the
-                    # union+window produced (delta ids disjoint from base)
-                    from ..operators.similarity import merge_local_topk
-
-                    hit_rows = merge_local_topk(
-                        list(hit_rows)
-                        + [
-                            (r["query_id"], r["doc_id"], r["cos_sim"])
-                            for r in dhits.collect()
-                        ],
-                        k,
-                    )
-                elif hits is None:
-                    hits = dhits
-                else:
-                    wv2 = Window.partitionBy("query_id").orderBy(
-                        F.desc("cos_sim"), F.asc("doc_id")
-                    )
-                    hits = (
-                        hits.unionByName(dhits)
-                        .withColumn("rn", F.row_number().over(wv2))
-                        .where(F.col("rn") <= k)
-                        .drop("rn")
-                    )
-            if hits is not None:
-                hits = hits.withColumn("score", F.col("cos_sim"))
-            # qtext (for the L9 rerank) + pre-extracted anchors join in as a
-            # broadcast side table; doc text joins only transiently for the
-            # in-cluster exprs and never reaches the driver
-            qmeta = local_frame(
-                spark,
-                [
-                    {
-                        "query_id": q,
-                        "qtext": qtext[q],
-                        "qdates": anchors[q][0],
-                        "qid_anchors": anchors[q][1],
-                    }
-                    for q in targets
-                ],
-                "query_id long, qtext string, qdates array<string>, "
-                "qid_anchors array<string>",
-            )
-            # rerank-free fast path: when no query carries anchors and the
-            # fuzz rerank is off, the doc-text join would only ever compute
-            # anchor_mult = 1.0 and an unchanged score — skip the full doc
-            # scan (the text probe over a cached 960k corpus costs ~1-2 s
-            # per batch) and collect the k-bounded hits directly.  search()
-            # produces identical results under the same opts (its rerank is
-            # gated on opts.rapidfuzz_rerank and empty anchors multiply by
-            # 1.0), so batch↔single parity is preserved.
-            if cancel is not None and cancel.is_set():
-                return vec_rows  # abandoned: don't submit the final job
-            if not need_text_probe:
-                if hit_rows is not None:
-                    # driver-merged rows: ZERO further jobs on this path
-                    for q, d, c in hit_rows:
-                        vec_rows[q].append(
-                            {
-                                "query_id": q, "doc_id": d, "score": c,
-                                "cos_sim": c, "anchor_mult": 1.0,
-                            }
-                        )
-                    return vec_rows
-                for r in hits.withColumn(
-                    "anchor_mult", F.lit(1.0)
-                ).select(
-                    "query_id", "doc_id", "score", "cos_sim", "anchor_mult"
-                ).collect():
-                    vec_rows[r["query_id"]].append(r)
-                return vec_rows
-            # the ≤ nq×k hit set broadcasts INTO the doc store (base ∪ delta;
-            # the big side streams through a broadcast hash join — never
-            # shuffled), same shape as search()'s single-query text probe
-            with_text = self._docs_for_text().join(
-                F.broadcast(hits.join(F.broadcast(qmeta), "query_id")),
-                "doc_id",
-            )
-            if opts.rapidfuzz_rerank:
-                with_text = rapidfuzz_rerank_expr(
-                    with_text, F.col("qtext"), text_col=self.text_col,
-                    score_col="score", sort=False,
-                )
-            # L10 anchors in-cluster: same containment × multiplier as
-            # operators.fuzzy.anchor_boost (dob ×1.2, id ×1.1); empty anchor
-            # arrays make both exists() false → multiplier 1.0
-            tc = self.text_col
-            anchor_mult = F.when(
-                F.exists(F.col("qdates"), lambda d: F.col(tc).contains(d)),
-                F.lit(1.2),
-            ).otherwise(F.lit(1.0)) * F.when(
-                F.exists(F.col("qid_anchors"), lambda i: F.col(tc).contains(i)),
-                F.lit(1.1),
-            ).otherwise(F.lit(1.0))
-            for r in with_text.select(
-                "query_id", "doc_id", "score", "cos_sim",
-                anchor_mult.alias("anchor_mult"),
-            ).collect():
-                vec_rows[r["query_id"]].append(r)
-            return vec_rows
-
         # the speculative probe runs under its OWN job group (job groups are
         # thread-local on the driver, and the probe has its own daemon
         # thread) so an abandoned speculation can be CANCELLED instead of
@@ -1454,8 +1517,8 @@ class HybridSearchPlan:
                 spec_group, "speculative batched vector probe",
                 interruptOnCancel=True,
             )
-            return _vector_stage_batch(
-                [qid for qid, _ in queries], cancel=spec_cancel
+            return self._vector_stage_batch(
+                [qid for qid, _ in queries], qtext, opts, cancel=spec_cancel
             )
 
         vec_fut = (
@@ -1498,19 +1561,14 @@ class HybridSearchPlan:
                 # weighted batch scoring straight off the compressed
                 # index: the chunk-group Arrow scorer multiplies each
                 # expanded term's contribution by its edit-ratio weight
-                from .wand import batch_topk_indexed
-
-                fz_all = batch_topk_indexed(
-                    spark, self.index_dir, [], k=k,
-                    index_df=self.index_df, meta=self.index_meta,
-                    query_terms_override=[
+                for q, doc, sc in self._indexed_batch_tops(
+                    [], k,
+                    override=[
                         (r["query_id"], r["term"], float(r["term_weight"]))
                         for r in expanded_rows
                     ],
-                    n_groups=self._idx_n_groups, pre_grouped=True,
-                ).collect()
-                for r in fz_all:
-                    fz_rows[r["query_id"]].append((r["doc_id"], r["score"]))
+                ):
+                    fz_rows[q].append((doc, sc))
             elif expanded_rows:
                 all_terms = sorted({r["term"] for r in expanded_rows})
                 scored = score_terms(
@@ -1595,8 +1653,6 @@ class HybridSearchPlan:
             run_entries = [e for e in entries if _runnable(e[1])]
         fused_fz_rows: dict[int, list[tuple[int, float]]] = {}
         if self.index_df is not None:
-            from .wand import batch_topk_indexed
-
             ovr = None
             fz_off = 0
             if fuse_lex and fused_expanded_rows:
@@ -1614,37 +1670,35 @@ class HybridSearchPlan:
             if not run_entries and ovr is None:
                 ac_fz_all = []  # nothing can match: zero-job AC stage
             else:
-                ac_fz_all = batch_topk_indexed(
-                    spark, self.index_dir, run_entries, k=k,
-                    index_df=self.index_df, meta=self.index_meta,
+                ac_fz_all = self._indexed_batch_tops(
+                    run_entries, k, override=ovr,
                     # no tokenized entries left ⇒ msm is moot (override ids
                     # always keep minimum 1, and passing a real msm with an
                     # override-only call is rejected by contract)
                     min_should_match=(
                         opts.min_should_match if run_entries else 1
                     ),
-                    query_terms_override=ovr,
-                    n_groups=self._idx_n_groups, pre_grouped=True,
-                ).select("query_id", "doc_id", "score").collect()
+                )
             if ovr is not None:
                 max_entry = max(q for q, _ in entries)
-                ac_all = [r for r in ac_fz_all if r["query_id"] <= max_entry]
+                ac_all = [r for r in ac_fz_all if r[0] <= max_entry]
                 fused_fz_rows = {qid: [] for qid, _ in queries}
-                for r in ac_fz_all:
-                    if r["query_id"] > max_entry:
-                        fused_fz_rows[r["query_id"] - fz_off].append(
-                            (r["doc_id"], r["score"])
-                        )
+                for q, doc, sc in ac_fz_all:
+                    if q > max_entry:
+                        fused_fz_rows[q - fz_off].append((doc, sc))
             else:
                 ac_all = ac_fz_all
                 if fuse_lex:
                     fused_fz_rows = {qid: [] for qid, _ in queries}
         elif run_entries:
-            ac_all = batch_topk(
-                self.docs, run_entries, k=k, text_col=self.text_col,
-                postings=self.postings, stats=self.stats,
-                min_should_match=opts.min_should_match,
-            ).select("query_id", "doc_id", "score").collect()
+            ac_all = [
+                (r["query_id"], r["doc_id"], r["score"])
+                for r in batch_topk(
+                    self.docs, run_entries, k=k, text_col=self.text_col,
+                    postings=self.postings, stats=self.stats,
+                    min_should_match=opts.min_should_match,
+                ).select("query_id", "doc_id", "score").collect()
+            ]
         else:
             ac_all = []  # nothing can match: zero-job AC stage
         # per-ENTRY overlay first (base ∪ delta keep-best, truncated to k —
@@ -1652,10 +1706,10 @@ class HybridSearchPlan:
         # matching search()'s truncation order keeps single↔batch parity
         # even for docs at rank k+1 that the vector stage would later fuse
         entry_best: dict[int, dict[int, float]] = {q: {} for q, _ in entries}
-        for r in ac_all:
-            cur = entry_best[r["query_id"]]
-            if r["doc_id"] not in cur or r["score"] > cur[r["doc_id"]]:
-                cur[r["doc_id"]] = r["score"]
+        for q, doc, sc in ac_all:
+            cur = entry_best[q]
+            if doc not in cur or sc > cur[doc]:
+                cur[doc] = sc
         if self._delta_lex:
             from ..functions.tokenize import py_index_tokens
             from ..streaming.incremental import batch_delta_topk
@@ -1720,7 +1774,7 @@ class HybridSearchPlan:
             vec_fut = _Async(
                 _timed_into(
                     trace, "vector_ms",
-                    lambda: _vector_stage_batch(escalating),
+                    lambda: self._vector_stage_batch(escalating, qtext, opts),
                     lock=trace_lock,
                 )
             )

@@ -41,7 +41,7 @@ from pyspark.sql.types import (
 
 from ..functions.codec import delta_decode
 from ..functions.tokenize import py_index_tokens
-from ..operators.bm25 import group_partitioned
+from ..operators.bm25 import BATCH_SCORE_SCHEMA, group_partitioned
 from ..operators.similarity import local_topk
 from ..sources.index_io import IndexMeta, load_index
 from ..sources.tables import local_frame
@@ -435,19 +435,54 @@ def batch_topk_indexed(
     min_should_match: int | str = 1,
     pre_grouped: bool = False,
 ) -> DataFrame:
-    """Many queries in ONE job over the COMPRESSED index (the serving shape
-    ``operators.bm25.batch_topk`` provides over raw documents, minus its
-    corpus re-tokenize): shard+term-pruned scan → per-chunk-group numpy
-    scoring (one dense (local docs × queries) accumulator per task, local
-    top-k per query) → global per-query window rank ≤ k.
+    """Many queries in ONE job over the COMPRESSED index →
+    (query_id, doc_id, score, rank, n_terms_matched), rank ≤ k per query:
+    ``batch_topk_local``'s task-local tops under a per-query window
+    (score desc, doc_id asc).  A caller that collects anyway merges the
+    local tops on the driver instead (``similarity.merge_local_topk``) and
+    skips the window's exchange."""
+    from pyspark.sql import Window
+
+    local = batch_topk_local(
+        spark, index_dir, queries, k=k, index_df=index_df, meta=meta,
+        n_groups=n_groups, query_terms_override=query_terms_override,
+        min_should_match=min_should_match, pre_grouped=pre_grouped,
+    )
+    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
+    return (
+        local.withColumn("rank", F.row_number().over(w))
+        .where(F.col("rank") <= k)
+        .select("query_id", "doc_id", "score", "rank", "n_terms_matched")
+    )
+
+
+def batch_topk_local(
+    spark: SparkSession,
+    index_dir: str,
+    queries: list[tuple[int, str]],
+    k: int = 10,
+    index_df: DataFrame | None = None,
+    meta: IndexMeta | None = None,
+    n_groups: int | None = None,
+    query_terms_override: list[tuple[int, str, float]] | None = None,
+    min_should_match: int | str = 1,
+    pre_grouped: bool = False,
+) -> DataFrame:
+    """Many queries' task-local top-k over the COMPRESSED index (the
+    serving shape ``operators.bm25.batch_topk`` provides over raw
+    documents, minus its corpus re-tokenize): shard+term-pruned scan →
+    per-chunk-group numpy scoring (one dense (local docs × queries)
+    accumulator per task, local top-k per query) →
+    (query_id, doc_id, score, n_terms_matched), ≤ n_groups × |queries| × k
+    rows, un-merged.  Chunks partition the doc space, so each query's
+    global top-k is exactly the top k of its local rows.
 
     The round-2 shape (decode → broadcast (query, term) join → JVM
     per-(query, doc) hash aggregate) materialized ~|queries| × |corpus|
     aggregation groups — 215M joined rows / 92M groups / 62 s at 960k docs
     for a 100-query batch.  Scoring inside the Arrow task keeps the
     query×doc fan-out in numpy slice-adds and ships only n_groups × nq × k
-    rows out (same 960k-doc batch: 73 s → ~4 s).  Chunks partition the doc
-    space, so per-group top-k is exact.
+    rows out (same 960k-doc batch: 73 s → ~4 s).
 
     Scores use the same BM25 formula and stored df as the JVM path; sums run
     in a different float order (per-term numpy accumulation vs hash-agg
@@ -474,8 +509,6 @@ def batch_topk_indexed(
     would be meaningless: override-only calls reject the parameter, and
     fused calls apply it to the tokenized ids only (override ids keep
     minimum 1)."""
-    from pyspark.sql import Window
-
     from ..sources.index_io import decode_shard_arrays
 
     if index_df is None or meta is None:
@@ -501,9 +534,8 @@ def batch_topk_indexed(
     else:
         triples = tok_triples
         qid_list = tok_qids
-    out_schema = "query_id long, doc_id long, score double, rank int, n_terms_matched int"
     if not triples:
-        return local_frame(spark, [], out_schema)
+        return local_frame(spark, [], BATCH_SCORE_SCHEMA)
     all_terms = sorted({t for _, t, _ in triples})
     qidx = {qid: i for i, qid in enumerate(qid_list)}
     term_to_qidx: dict[str, list[tuple[int, float]]] = {}
@@ -517,11 +549,7 @@ def batch_topk_indexed(
     if n_groups is None:
         n_groups = batch_n_groups(spark, meta)
 
-    from ..operators.bm25 import (
-        BATCH_SCORE_SCHEMA,
-        es_min_should_match,
-        make_batch_group_scorer,
-    )
+    from ..operators.bm25 import es_min_should_match, make_batch_group_scorer
 
     msm_arr = None
     if min_should_match != 1:
@@ -555,16 +583,8 @@ def batch_topk_indexed(
     # §2.4: two operations keyed the same way share one exchange; here the
     # exchange moved into the one-time cache materialization).
     src = matched if pre_grouped else group_partitioned(matched, grp_key, n_groups)
-    local_topk = (
-        src
-        .groupBy(grp_key.alias("grp"))
-        .applyInPandas(score_group, BATCH_SCORE_SCHEMA)
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        local_topk.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score", "rank", "n_terms_matched")
+    return src.groupBy(grp_key.alias("grp")).applyInPandas(
+        score_group, BATCH_SCORE_SCHEMA
     )
 
 

@@ -341,17 +341,19 @@ def test_single_query_vector_stage_probes_standing_cache(spark, ivf_plan):
     # the serving scan is the in-memory one (the FileScan string nested
     # under InMemoryRelation is the cache-BUILD description, not a read)
     assert "InMemoryTableScan" in plan, plan
-    # functional proof: a cache-served scan blanks input_file_name (the
-    # round-5 cache-manager-substitution gotcha, used here as the signal) —
-    # a re-read from parquet would return real file paths
-    files = [
-        r[0]
-        for r in ivf_plan.ann_df.where(F.col("ivf_cell").isin([0, 1]))
-        .select(F.input_file_name())
-        .distinct()
-        .collect()
-    ]
-    assert files and all(f == "" for f in files), files
+    # functional proof: once the cache is filled, the stage still serves
+    # with the ANN directory moved away — a re-read from parquet would fail
+    # on the missing files.  (The cache joins the doc text in, so the
+    # input_file_name signal no longer applies: the expression rejects a
+    # two-source plan.)
+    ivf_plan.ann_df.count()
+    moved = ivf_plan.ann_index_dir + ".moved"
+    os.rename(ivf_plan.ann_index_dir, moved)
+    try:
+        rows = ivf_plan.vector_stage("spark query join", k=5, rerank=False).collect()
+    finally:
+        os.rename(moved, ivf_plan.ann_index_dir)
+    assert len(rows) == 5
 
 
 def test_batch_vector_stage_probes_standing_cache(spark, ivf_plan):

@@ -196,10 +196,11 @@ def test_typo_search_above_cap_runs_probe_and_scoring_only(
     monkeypatch.setattr(hybrid, "_Async", Inline)
     frame_cls = type(spark.range(1))
     collect = frame_cls.collect
-    plans = []
+    plans, columns = [], []
 
     def spy(self):
         plans.append(self._jdf.queryExecution().executedPlan().toString())
+        columns.append(self.columns)
         return collect(self)
 
     try:
@@ -222,6 +223,174 @@ def test_typo_search_above_cap_runs_probe_and_scoring_only(
         assert "InMemoryTableScan" in probe[0] and "Exchange" not in probe[0], probe
     finally:
         plan.close()
+
+
+def _tagged_jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` submits, counted through a job tag unique to the
+    call.  Tags are thread-local and additive, so the count survives the
+    job group a speculative stage sets on the (inlined) thread."""
+    sc = spark.sparkContext
+    tag = f"job-pin-{uuid.uuid4().hex}"
+    sc.addJobTag(tag)
+    try:
+        fn()
+    finally:
+        sc.removeJobTag(tag)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    listed = sc._jsc.sc().statusStore().jobsList(None)  # a Scala Seq
+    return sum(
+        1 for i in range(listed.size()) if listed.apply(i).jobTags().contains(tag)
+    )
+
+
+def test_broadcast_local_frame_costs_a_job(spark):
+    """Collecting a ``local_frame`` submits no job, but broadcasting one
+    does: each broadcast ``LocalRelation`` is one more job for the action
+    that joins it, the join into a cached frame included."""
+    from pyspark.sql import functions as F
+
+    cached = spark.range(2000).withColumn("v", F.col("id") * 2).persist()
+    try:
+        cached.count()
+        side = local_frame(spark, [(1, "a"), (2, "b")], "id long, tag string")
+        qmeta = local_frame(spark, [(1, "q")], "id long, qtext string")
+        left = local_frame(spark, [(i, float(i)) for i in range(100)], "id long, x double")
+        assert _tagged_jobs(spark, side.collect) == 0
+        assert _tagged_jobs(spark, cached.where(F.col("id").isin([1, 2])).collect) == 1
+        assert _tagged_jobs(spark, cached.join(F.broadcast(side), "id").collect) == 2
+        assert _tagged_jobs(spark, left.join(F.broadcast(side), "id").collect) == 2
+        nested = left.join(F.broadcast(side.join(F.broadcast(qmeta), "id")), "id")
+        assert _tagged_jobs(spark, nested.collect) == 3
+    finally:
+        cached.unpersist()
+
+
+# date and id anchors, a typo and a plain query: every one escalates
+ANCHOR_QUERIES = [
+    (1, "spark query join 2020-01-01"),
+    (2, "sparc qurey 1234567890"),
+    (3, "merge sort"),
+]
+
+
+@pytest.fixture(scope="module")
+def ivf_index_plan(spark, sf_smoke_dir, tmp_path_factory):
+    """A standing plan serving a lexical index and an IVF vector index."""
+    from hybrid_sanctions_search_engine_spark.operators.similarity import write_ivf_index
+    from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
+
+    docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
+    root = tmp_path_factory.mktemp("two_job_batch")
+    build_index(docs, str(root / "index"), n_shards=2, chunk_bits=7)
+    emb = local_frame(
+        spark,
+        [
+            (r["doc_id"], pseudo_embedding(r["text"], 64))
+            for r in docs.select("doc_id", "text").limit(200).collect()
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    write_ivf_index(emb, str(root / "ivf"), n_centroids=8, iters=8)
+    plan = HybridSearchPlan(
+        docs, embedding_dim=64, index_dir=str(root / "index"),
+        ann_index_dir=str(root / "ivf"), ann_kind="ivf", ann_n_probe=2,
+    )
+    yield plan
+    plan.close()
+
+
+def _counted_inline(spark, monkeypatch, fn) -> tuple[int, list[str], list[list[str]]]:
+    """(jobs, executed plans of the collects, their columns) of ``fn``
+    with ``_Async`` inlined on the calling thread."""
+    from hybrid_sanctions_search_engine_spark.plans import hybrid
+
+    class Inline:
+        """``_Async`` on the calling thread, inside the job tag."""
+
+        def __init__(self, fn):
+            self._out = fn()
+
+        def result(self):
+            return self._out
+
+    monkeypatch.setattr(hybrid, "_Async", Inline)
+    frame_cls = type(spark.range(1))
+    collect = frame_cls.collect
+    plans, columns = [], []
+
+    def spy(self):
+        plans.append(self._jdf.queryExecution().executedPlan().toString())
+        columns.append(self.columns)
+        return collect(self)
+
+    monkeypatch.setattr(frame_cls, "collect", spy)
+    try:
+        n = _tagged_jobs(spark, fn)
+    finally:
+        monkeypatch.undo()
+    # the part of each plan above its cached scan (whose own lineage — the
+    # cache build — ran once when the cache filled)
+    return n, [p.split("InMemoryRelation")[0] for p in plans], columns
+
+
+def test_escalated_ivf_search_many_runs_two_jobs(spark, ivf_index_plan, monkeypatch):
+    """An escalated ``search_many`` on an IVF plan, rerank on and anchor
+    queries in the batch, runs exactly 2 jobs: the fused AC+fuzzy scoring
+    job and the vector probe that reranks inside its tasks.  Neither plans
+    an exchange or a broadcast — both collects merge task-local tops on the
+    driver."""
+    plan = ivf_index_plan
+    opts = SearchOpts(top_k=5, escalation_threshold=1e9)
+    plan.search_many(ANCHOR_QUERIES, opts)  # fills the standing caches
+    out = {}
+    n, plans, columns = _counted_inline(
+        spark, monkeypatch,
+        lambda: out.update(meta=plan.search_many(ANCHOR_QUERIES, opts)[1]),
+    )
+    assert all(m["escalated"] for m in out["meta"].values())
+    assert n == 2, plans
+    assert len(plans) == 2 and all("InMemoryTableScan" in p for p in plans), plans
+    assert not [p for p in plans if "Exchange" in p], plans
+    # no document text reaches the driver
+    assert not [c for c in columns if {"text", "doc_text"} & set(c)], columns
+
+
+def test_windowed_text_join_composition_runs_more_jobs(spark, ivf_index_plan, monkeypatch):
+    """The negative control: the composition the two-job batch replaced —
+    windowed lexical tops, and windowed probe hits joined with the query
+    table and the doc store — plans exchanges and broadcasts and runs more
+    than 2 jobs for the same batch."""
+    from pyspark.sql import functions as F
+
+    from hybrid_sanctions_search_engine_spark.operators.similarity import (
+        knn_ivf_probe_many,
+    )
+    from hybrid_sanctions_search_engine_spark.plans.wand import batch_topk_indexed
+
+    plan = ivf_index_plan
+    plan.search_many(ANCHOR_QUERIES, SearchOpts(top_k=5))  # fills the caches
+    qmeta = local_frame(
+        spark, [(q, t) for q, t in ANCHOR_QUERIES], "query_id long, qtext string"
+    )
+
+    def windowed():
+        batch_topk_indexed(
+            spark, plan.index_dir, ANCHOR_QUERIES, k=5, index_df=plan.index_df,
+            meta=plan.index_meta, n_groups=plan._idx_n_groups, pre_grouped=True,
+        ).collect()
+        hits = knn_ivf_probe_many(
+            plan.ann_df, plan.ann_centroids,
+            [(q, plan.encoder.encode_one(t)) for q, t in ANCHOR_QUERIES],
+            k=5, n_probe=plan.ann_n_probe,
+        ).select("query_id", F.col("vec_id").alias("doc_id"), "cos_sim")
+        plan._docs_for_text().join(
+            F.broadcast(hits.join(F.broadcast(qmeta), "query_id")), "doc_id"
+        ).collect()
+
+    n, plans, _ = _counted_inline(spark, monkeypatch, windowed)
+    assert n > 2, plans
+    assert any("Exchange hashpartitioning" in p for p in plans), plans
+    assert any("BroadcastExchange" in p for p in plans), plans
 
 
 def test_topk_search_empty_query_submits_no_job(spark, tmp_path_factory, sf_smoke_dir):

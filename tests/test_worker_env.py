@@ -211,9 +211,11 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
     its worker paying the per-task re-read."""
     import pyspark.sql.udf
 
+    from hybrid_sanctions_search_engine_spark.functions.vectors import pseudo_embedding
     from hybrid_sanctions_search_engine_spark.operators import fuzzy
     from hybrid_sanctions_search_engine_spark.plans.hybrid import SearchOpts
     from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
+    from hybrid_sanctions_search_engine_spark.sources.tables import local_frame
 
     shipped = {}
     wrap = pyspark.sql.udf._wrap_function
@@ -230,6 +232,19 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
     for plan in plans.values():
         plan.search_many(QUERIES, SearchOpts(**ESCALATE))[0].collect()
     plans["ivf"].search("sparc qurey", SearchOpts(**ESCALATE))[0].collect()
+    # a delta overlay's vectors: the exact batched scan beside the probe
+    delta = [(10**6, "sparc query join fresh")]
+    plans["ivf"].attach_delta(
+        delta_docs=local_frame(spark, delta, "doc_id long, text string"),
+        delta_embeddings=local_frame(
+            spark, [(i, pseudo_embedding(t, DIM)) for i, t in delta],
+            "vec_id long, embedding array<double>",
+        ),
+    )
+    try:
+        plans["ivf"].search_many(QUERIES, SearchOpts(**ESCALATE))[0].collect()
+    finally:
+        plans["ivf"].detach_delta()
     # above the in-RAM dictionary cap: the Bloom filter build and the probe
     plan = plans["ivf_sq8"]
     plan.driver_expansion_max_terms = 0
@@ -245,11 +260,14 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
         "plans.wand._score_chunks.<locals>.score",
         "plans.wand._score_pre_grouped.<locals>.score",
         "operators.bm25.make_batch_group_scorer.<locals>.score_group",
+        # the batched vector leg's Arrow-map bodies: each emits its task's
+        # top-k with the rerank inputs (text, query text, partial ratio)
         "operators.similarity.knn_ivf_probe_many.<locals>.score",
+        "operators.similarity.knn_bruteforce_many.<locals>.score_batches",
+        "operators.fused_probe.fused_cell_probe_many.<locals>.rerank_pass",
         "operators.similarity.cosine_to_query_udf.<locals>.cos",
         "operators.fuzzy._make_partial_udf.<locals>.partial_udf",
         "operators.fused_probe.fused_cell_probe_many.<locals>.code_scan",
-        "operators.fused_probe.fused_cell_probe_many.<locals>.rerank",
     }
     assert {f"{PKG}.{name}" for name in expected} <= set(shipped), sorted(shipped)
     missing = [
