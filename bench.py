@@ -466,7 +466,7 @@ def main() -> None:
 
         # ANN recall curves at the reference's real 384 dims (the ef_search-
         # dial analogue of the ES HNSW config): recall@10 vs n_probe / vs
-        # max_hamming, on member (ANN-friendly) and boundary (adversarial)
+        # refine, on member (ANN-friendly) and boundary (adversarial)
         # queries.  Reported in extra only — not part of the headline wall
         # time (it is a quality table, not a throughput number).
         from hybrid_sanctions_search_engine_spark.operators.ann_recall import (
@@ -477,17 +477,6 @@ def main() -> None:
         rec = recall_report(spark, n=20_000, dim=384)
         rec["measure_sec"] = round(time.monotonic() - t0, 1)
         extra["ann_recall"] = rec
-
-        # IVF-vs-HNSW adjudication numbers (round 6 — DESIGN_100TB.md):
-        # build/probe wall + recall for both layouts on the same fixture
-        from hybrid_sanctions_search_engine_spark.operators.hnsw import (
-            ann_design_report,
-        )
-
-        t0 = time.monotonic()
-        design = ann_design_report(spark)
-        design["measure_sec"] = round(time.monotonic() - t0, 1)
-        extra["ann_design"] = design
 
         # block-max θ-pruning effectiveness on a Zipfian corpus — the regime
         # pruning exists for (the uniform harness corpus measures ~100%

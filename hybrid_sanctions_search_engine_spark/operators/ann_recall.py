@@ -3,29 +3,26 @@
 The reference's ES HNSW analogue publishes its ef_search trade-off dials
 (``/root/reference/src/ai_service/layers/embeddings/indexing/
 elasticsearch_index_manager.py:209-214``: ``num_candidates``/``ef_search``);
-this module publishes the equivalent curves for our two ANN layouts —
-recall@k vs ``n_probe`` (IVF) and vs ``max_hamming`` (LSH multi-probe) —
+this module publishes the equivalent curves for the served ANN layouts —
+recall@k vs ``n_probe`` (IVF) and vs ``refine`` (IVF-PQ, IVF-SQ8) —
 measured against brute-force ground truth on a clustered fixture.
 
 Methodology: the candidate sets are derived from the WRITTEN index's own
-partition columns (``ivf_cell`` / ``lsh_sig``), loaded once, with the probe
+columns (``ivf_cell`` and the codes), loaded once, with the probe
 selection replayed in numpy — semantically identical to
-``knn_ivf_probe`` / ``knn_lsh_probe`` (both prune to those candidates and
-exact-cosine rerank; the equivalence is pinned by
-``tests/test_ann_recall.py``), so a 5-dial × 50-query sweep costs one index
-read instead of 250 Spark jobs.
+``knn_ivf_probe`` / ``knn_ivf_pq_probe`` / ``knn_ivf_sq8_probe`` (each
+prunes to those candidates and exact-cosine reranks; the equivalence is
+pinned by ``tests/test_ann_recall.py``), so a 5-dial × 50-query sweep
+costs one index read instead of 250 Spark jobs.
 """
 
 from __future__ import annotations
 
-import itertools
-import json
 import os
 
 import numpy as np
 
 from ..sources.tables import local_frame
-from .similarity import _LSH_TOP_BITS, lsh_signature_of
 
 
 def make_clustered_fixture(
@@ -253,102 +250,6 @@ def ivf_sq8_recall_curve(
     return {r: hits[r] / (queries.shape[0] * k) for r in refines}
 
 
-def lsh_recall_curve(
-    index_dir: str,
-    x: np.ndarray,
-    queries: np.ndarray,
-    truth: np.ndarray,
-    max_hammings: list[int],
-    k: int = 10,
-) -> dict[int, float]:
-    """recall@k vs max_hamming, replaying ``knn_lsh_probe``'s candidate
-    selection (band enumeration + full-signature Hamming filter) from the
-    written index's signatures."""
-    import pyarrow.dataset as ds
-
-    meta = _read_meta(index_dir, "_lsh_meta.json")
-    dim, n_planes, seed = meta["dim"], meta["n_planes"], meta["seed"]
-    tbl = ds.dataset(index_dir, format="parquet", partitioning="hive").to_table(
-        columns=["vec_id", "lsh_sig"]
-    )
-    vec_ids = np.asarray(tbl["vec_id"], dtype=np.int64)
-    sigs = np.asarray(tbl["lsh_sig"], dtype=np.int64)
-    order = np.argsort(vec_ids)
-    vec_ids, sigs = vec_ids[order], sigs[order]
-    out: dict[int, float] = {}
-    for mh in max_hammings:
-        hits = 0
-        for i in range(queries.shape[0]):
-            qsig = lsh_signature_of(queries[i].tolist(), dim, n_planes, seed)
-            qband = (qsig >> (n_planes - _LSH_TOP_BITS)) & ((1 << _LSH_TOP_BITS) - 1)
-            bands = set()
-            for h in range(mh + 1):
-                for flips in itertools.combinations(range(_LSH_TOP_BITS), h):
-                    b = qband
-                    for f in flips:
-                        b ^= 1 << f
-                    bands.add(b)
-            band = (sigs >> (n_planes - _LSH_TOP_BITS)) & ((1 << _LSH_TOP_BITS) - 1)
-            # popcount via byte view (numpy < 2.0 has no bitwise_count)
-            xor = np.bitwise_xor(sigs, qsig)
-            ham = np.unpackbits(xor.view(np.uint8).reshape(-1, 8), axis=1).sum(axis=1)
-            mask = np.isin(band, list(bands)) & (ham <= mh)
-            cand = vec_ids[mask]
-            if cand.size == 0:
-                continue
-            s = x[cand] @ queries[i]
-            kk = min(k, cand.size)
-            top = cand[np.lexsort((cand, -s))[:kk]]
-            hits += len(set(top.tolist()) & set(truth[i].tolist()))
-        out[mh] = hits / (queries.shape[0] * k)
-    return out
-
-
-def lsh_multiband_recall_curve(
-    index_dir: str,
-    x: np.ndarray,
-    queries: np.ndarray,
-    truth: np.ndarray,
-    n_probe_bands_list: list[int],
-    k: int = 10,
-) -> dict[int, float]:
-    """recall@k vs bands probed, replaying ``knn_lsh_multiband_probe``'s
-    candidate selection (exact band equality, OR over probed bands) from
-    the written index's band assignments."""
-    import pyarrow.dataset as ds
-
-    meta = _read_meta(index_dir, "_lsh_mb_meta.json")
-    dim, n_bands, band_bits, seed = (
-        meta["dim"], meta["n_bands"], meta["band_bits"], meta["seed"],
-    )
-    tbl = ds.dataset(index_dir, format="parquet", partitioning="hive").to_table(
-        columns=["vec_id", "lsh_band_idx", "lsh_band_val"]
-    )
-    vec_ids = np.asarray(tbl["vec_id"], dtype=np.int64)
-    bidx = np.asarray(tbl["lsh_band_idx"], dtype=np.int64)
-    bval = np.asarray(tbl["lsh_band_val"], dtype=np.int64)
-    out: dict[int, float] = {}
-    for npb in n_probe_bands_list:
-        hits = 0
-        for i in range(queries.shape[0]):
-            sig = lsh_signature_of(
-                queries[i].tolist(), dim, n_bands * band_bits, seed
-            )
-            mask = np.zeros(vec_ids.size, dtype=bool)
-            for bi in range(min(npb, n_bands)):
-                v = (sig >> (bi * band_bits)) & ((1 << band_bits) - 1)
-                mask |= (bidx == bi) & (bval == v)
-            cand = np.unique(vec_ids[mask])
-            if cand.size == 0:
-                continue
-            s = x[cand] @ queries[i]
-            kk = min(k, cand.size)
-            top = cand[np.lexsort((cand, -s))[:kk]]
-            hits += len(set(top.tolist()) & set(truth[i].tolist()))
-        out[npb] = hits / (queries.shape[0] * k)
-    return out
-
-
 def recall_report(
     spark,
     n: int = 20_000,
@@ -356,31 +257,21 @@ def recall_report(
     n_clusters: int = 64,
     noise: float = 0.35,
     n_centroids: int = 64,
-    n_planes: int = 16,
     k: int = 10,
     n_probes: list[int] | None = None,
-    max_hammings: list[int] | None = None,
-    n_probe_bands: list[int] | None = None,
-    mb_bands: int = 8,
-    mb_band_bits: int = 8,
     workdir: str | None = None,
 ) -> dict:
-    """Build both ANN indexes over the clustered fixture and return the two
-    recall curves — the table bench.py publishes into BENCH_r{N}.json."""
+    """Build the three ANN indexes over the clustered fixture and return
+    their recall curves — the table bench.py publishes into
+    BENCH_r{N}.json."""
     import shutil
     import tempfile
 
-    from pyspark.sql import functions as F  # noqa: F401
-
-    from .similarity import (
-        write_ivf_index,
-        write_lsh_index,
-        write_lsh_multiband_index,
-    )
+    from .pq import write_ivf_pq_index
+    from .similarity import write_ivf_index
+    from .sq import write_ivf_sq8_index
 
     n_probes = n_probes or [1, 2, 4, 8, 16]
-    max_hammings = max_hammings or [0, 1, 2, 3]
-    n_probe_bands = n_probe_bands or [1, 2, 4, 8]
     pq_refines = [1, 2, 4, 8]
     sq_refines = [1, 2, 4]
     pq_n_probe = 4
@@ -389,8 +280,6 @@ def recall_report(
     ivf_dir = os.path.join(base, "ivf")
     pq_dir = os.path.join(base, "ivf_pq")
     sq_dir = os.path.join(base, "ivf_sq8")
-    lsh_dir = os.path.join(base, "lsh")
-    mb_dir = os.path.join(base, "lsh_mb")
     out: dict = {"n": n, "dim": dim, "k": k, "noise": noise}
     try:
         for mode in ("member", "boundary"):
@@ -404,19 +293,10 @@ def recall_report(
                     "vec_id long, embedding array<double>",
                 )
                 write_ivf_index(emb, ivf_dir, n_centroids=n_centroids)
-                from .pq import write_ivf_pq_index
-
                 write_ivf_pq_index(
                     emb, pq_dir, n_centroids=n_centroids, m=_pq_m_for_dim(dim)
                 )
-                from .sq import write_ivf_sq8_index
-
                 write_ivf_sq8_index(emb, sq_dir, n_centroids=n_centroids)
-                write_lsh_index(emb, lsh_dir, dim=dim, n_planes=n_planes)
-                write_lsh_multiband_index(
-                    emb, mb_dir, dim=dim, n_bands=mb_bands,
-                    band_bits=mb_band_bits,
-                )
             truth = brute_force_topk(x, q, k)
             out[f"ivf_recall_at_{k}_by_n_probe_{mode}"] = {
                 str(d): round(v, 4)
@@ -432,18 +312,6 @@ def recall_report(
                 str(d): round(v, 4)
                 for d, v in ivf_sq8_recall_curve(
                     sq_dir, x, q, truth, sq_refines, pq_n_probe, k
-                ).items()
-            }
-            out[f"lsh_recall_at_{k}_by_max_hamming_{mode}"] = {
-                str(d): round(v, 4)
-                for d, v in lsh_recall_curve(
-                    lsh_dir, x, q, truth, max_hammings, k
-                ).items()
-            }
-            out[f"lsh_mb_recall_at_{k}_by_bands_probed_{mode}"] = {
-                str(d): round(v, 4)
-                for d, v in lsh_multiband_recall_curve(
-                    mb_dir, x, q, truth, n_probe_bands, k
                 ).items()
             }
         return out

@@ -15,8 +15,9 @@ machinery:
     edit-distance cap (≤3 below 15 chars, len/5 above), score =
     0.2·es_norm + 0.5·edit_ratio + 0.3·word_jaccard, ×0.7 penalty when
     edit_ratio < 0.6, drop below 0.4/0.5 threshold.
-  * anchor boosts (``hybrid_search_service.py:1032-1089``): DoB ×1.3,
-    ID ×1.2 when extracted query anchors appear in the candidate.
+  * anchor extraction (``hybrid_search_service.py:1032-1089``): the DoB
+    and ID anchors of a query, which the vector leg's anchor multiplier
+    looks for in each candidate (``plans.hybrid._rerank_frame``).
   * tier boosts (``elasticsearch_adapters.py:447-466``).
 
 Everything is built-in Spark functions — fully codegen'd — except two
@@ -403,15 +404,15 @@ def rapidfuzz_rerank_expr(
     partial_col: Column,
     text_col: str = "text",
     score_col: str = "score",
-    sort: bool = True,
 ) -> DataFrame:
-    """L9 rerank with the query as a COLUMN (per-row query text): fuzz =
-    max(ratio, partial_ratio, token_sort_ratio) on a 0-100 scale; score
-    ×1.2 when fuzz > 80, ×1.1 when fuzz > 60.  ratio/token_sort are JVM
-    Columns; ``partial_col`` is ``partial_ratio_series(query, text)`` in
-    [0, 1] — the Arrow UDF over the (small) candidate set
-    (``partial_ratio_col``), or a column a probe task already computed for
-    its own top-k rows (the batched vector leg)."""
+    """L9 rerank, the reference's vector-fallback reranking
+    (``hybrid_search_service.py:990-1030``), with the query as a COLUMN
+    (per-row query text): fuzz = max(ratio, partial_ratio,
+    token_sort_ratio) on a 0-100 scale; score ×1.2 when fuzz > 80, ×1.1
+    when fuzz > 60.  ratio/token_sort are JVM Columns; ``partial_col`` is
+    ``partial_ratio_series(query, text)`` in [0, 1] — the Arrow UDF over a
+    (small) candidate set (``partial_ratio_col``), or a column a probe task
+    already computed for its own top-k rows (the vector leg)."""
     q = F.lower(query_col)
     t = F.lower(F.col(text_col))
     ratio = (
@@ -429,26 +430,8 @@ def rapidfuzz_rerank_expr(
         .when(fuzz > 60, F.col(score_col) * 1.1)
         .otherwise(F.col(score_col))
     )
-    out = candidates.withColumn("fuzz_score", fuzz).withColumn(
+    return candidates.withColumn("fuzz_score", fuzz).withColumn(
         score_col, boosted
-    )
-    # sort=False skips the global sort exchange when the caller re-ranks
-    # driver-side anyway (the batched ladder collects then fuses)
-    return out.orderBy(F.desc(score_col)) if sort else out
-
-
-def rapidfuzz_rerank(
-    candidates: DataFrame,
-    query_text: str,
-    text_col: str = "text",
-    score_col: str = "score",
-) -> DataFrame:
-    """L9: the reference's vector-fallback reranking
-    (``hybrid_search_service.py:990-1030``) for a single query string."""
-    q = F.lit(query_text)
-    return rapidfuzz_rerank_expr(
-        candidates, q, partial_ratio_col(q, F.col(text_col)),
-        text_col=text_col, score_col=score_col,
     )
 
 
@@ -471,30 +454,6 @@ def extract_anchors(query_text: str) -> tuple[list[str], list[str]]:
         dates.extend(rx.findall(query_text))
     ids = [m for m in _ID_RE.findall(query_text)]
     return dates, ids
-
-
-def anchor_boost(
-    candidates: DataFrame,
-    query_text: str,
-    text_col: str = "text",
-    score_col: str = "score",
-    dob_boost: float = 1.3,
-    id_boost: float = 1.2,
-) -> DataFrame:
-    """×1.3 when a query date appears in the candidate, ×1.2 for an ID."""
-    dates, ids = extract_anchors(query_text)
-    score = F.col(score_col)
-    if dates:
-        has_date = F.lit(False)
-        for d in dates:
-            has_date = has_date | F.col(text_col).contains(d)
-        score = F.when(has_date, score * dob_boost).otherwise(score)
-    if ids:
-        has_id = F.lit(False)
-        for i in ids:
-            has_id = has_id | F.col(text_col).contains(i)
-        score = F.when(has_id, score * id_boost).otherwise(score)
-    return candidates.withColumn(score_col, score)
 
 
 # ---------------------------------------------------------------------------

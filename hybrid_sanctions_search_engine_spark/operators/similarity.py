@@ -1,4 +1,4 @@
-"""Similarity search over embedding columns: exact kNN + LSH-bucketed ANN.
+"""Similarity search over embedding columns: exact kNN, LSH and IVF ANN.
 
 The reference's vector stage is an ES HNSW ``knn`` query
 (``elasticsearch_adapters.py:819-843``, cosine, dims=384).  Spark-native
@@ -9,9 +9,13 @@ equivalents:
     TakeOrderedAndProject.  Rank-stable; the correctness baseline.
   * ``knn_lsh`` — random-hyperplane LSH: 64-bit signatures precomputed per
     row (a narrow shuffle-free scan), query probes only rows whose signature
-    band matches → at web scale the scan prunes to a few buckets (partition
-    by band on write).  Exact cosine re-verifies candidates, so results are
-    exact *within the probed buckets* (standard ANN recall trade-off).
+    is within a Hamming radius.  Exact cosine re-verifies candidates, so
+    results are exact *within the probed buckets* (standard ANN recall
+    trade-off).
+  * ``knn_ivf_probe`` / ``knn_ivf_probe_many`` — inverted-file ANN over a
+    ``partitionBy(ivf_cell)`` layout (and the quantized ``ivf_pq`` /
+    ``ivf_sq8`` twins in pq.py / sq.py): the layouts a ``HybridSearchPlan``
+    serves (``ANN_KINDS``).
 """
 
 from __future__ import annotations
@@ -28,6 +32,10 @@ from ..functions.vectors import cosine_col
 from ..sources.fs import fs_for
 from ..sources.tables import local_frame
 from .fuzzy import partial_ratio_series
+
+# the ANN layouts a HybridSearchPlan serves (``ann_kind``) and
+# ``streaming.incremental.fold_delta_embeddings`` folds into
+ANN_KINDS = ("ivf", "ivf_pq", "ivf_sq8")
 
 
 def vector_rows(vectors: pd.Series) -> tuple[np.ndarray, np.ndarray]:
@@ -256,9 +264,8 @@ def knn_lsh(
     qsig = lsh_signature_of(query_vec, dim, n_planes, seed)
     hamming = F.bit_count(F.col(sig_col).bitwiseXOR(F.lit(qsig)))
     candidates = embeddings_with_sig.where(hamming <= max_hamming)
-    # arrow=True at every dim: the numpy gemv refine is bit-identical
-    # to the batched cosine_vs_queries_udf on the same candidates, so
-    # search() and search_many() score ANN hits identically
+    # arrow=True at every dim: the numpy gemv refine is bit-identical to
+    # the batched probes' gemv on the same candidates
     return knn_bruteforce(candidates, query_vec, k, id_col, vec_col,
                           arrow=True)
 
@@ -356,9 +363,8 @@ def knn_ivf(
     q = q / max(np.linalg.norm(q), 1e-12)
     probe = np.argsort(-(centroids @ q))[:n_probe].tolist()
     candidates = embeddings_with_cell.where(F.col(cell_col).isin(probe))
-    # arrow=True at every dim: the numpy gemv refine is bit-identical
-    # to the batched cosine_vs_queries_udf on the same candidates, so
-    # search() and search_many() score ANN hits identically
+    # arrow=True at every dim: the numpy gemv refine is bit-identical to
+    # the batched probes' gemv on the same candidates
     return knn_bruteforce(candidates, query_vec, k, id_col, vec_col,
                           arrow=True)
 
@@ -424,9 +430,8 @@ def knn_ivf_probe(
     q = q / max(np.linalg.norm(q), 1e-12)
     probe = [int(c) for c in np.argsort(-(centroids @ q))[:n_probe]]
     candidates = indexed.where(F.col("ivf_cell").isin(probe))
-    # arrow=True at every dim: the numpy gemv refine is bit-identical
-    # to the batched cosine_vs_queries_udf on the same candidates, so
-    # search() and search_many() score ANN hits identically
+    # arrow=True at every dim: the numpy gemv refine is bit-identical to
+    # the batched probes' gemv on the same candidates
     return knn_bruteforce(candidates, query_vec, k, id_col, vec_col,
                           arrow=True)
 
@@ -678,181 +683,6 @@ def topk_record_batch(
     return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 
 
-_LSH_TOP_BITS = 8
-
-
-def write_lsh_index(
-    embeddings: DataFrame,
-    path: str,
-    dim: int,
-    n_planes: int = 16,
-    seed: int = 42,
-    vec_col: str = "embedding",
-) -> None:
-    """Signature + ``partitionBy(lsh_band)`` parquet, band = top 8 signature
-    bits.  Any candidate within total Hamming ≤ h of the query is within
-    Hamming ≤ h in the band too, so a probe reads only the Σ C(8,i), i≤h
-    matching band directories (37/256 at h=2) — partition-pruned multi-probe."""
-    import os
-
-    with_sig = add_lsh_signature(embeddings, dim, n_planes, seed, vec_col)
-    banded = with_sig.withColumn(
-        "lsh_band",
-        F.shiftrightunsigned(F.col("lsh_sig"), n_planes - _LSH_TOP_BITS)
-        .bitwiseAND(F.lit((1 << _LSH_TOP_BITS) - 1))
-        .cast("int"),
-    )
-    banded.repartition("lsh_band").write.mode("overwrite").partitionBy(
-        "lsh_band"
-    ).parquet(path)
-    fs_for(path).commit_json(
-        os.path.join(path, "_lsh_meta.json"),
-        {"dim": dim, "n_planes": n_planes, "seed": seed},
-    )
-
-
-def knn_lsh_probe(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    max_hamming: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    df: DataFrame | None = None,
-) -> DataFrame:
-    """Partition-pruned LSH ANN: enumerate the band values within
-    ``max_hamming`` of the query's band (bounded: Σ C(8,i)), prune the scan
-    to those directories, then exact-signature Hamming filter + cosine.
-    ``df``: pre-loaded (typically cached) index DataFrame — a standing
-    server passes its persisted handle instead of re-reading parquet."""
-    import itertools
-    import os
-
-    meta = fs_for(path).read_json(os.path.join(path, "_lsh_meta.json"))
-    n_planes = meta["n_planes"]
-    qsig = lsh_signature_of(query_vec, meta["dim"], n_planes, meta["seed"])
-    qband = (qsig >> (n_planes - _LSH_TOP_BITS)) & ((1 << _LSH_TOP_BITS) - 1)
-    bands = set()
-    for h in range(max_hamming + 1):
-        for flips in itertools.combinations(range(_LSH_TOP_BITS), h):
-            b = qband
-            for f in flips:
-                b ^= 1 << f
-            bands.add(b)
-    if df is None:
-        df = spark.read.parquet(path)
-    candidates = df.where(F.col("lsh_band").isin(sorted(bands))).where(
-        F.bit_count(F.col("lsh_sig").bitwiseXOR(F.lit(qsig))) <= max_hamming
-    )
-    # arrow=True at every dim: the numpy gemv refine is bit-identical
-    # to the batched cosine_vs_queries_udf on the same candidates, so
-    # search() and search_many() score ANN hits identically
-    return knn_bruteforce(candidates, query_vec, k, id_col, vec_col,
-                          arrow=True)
-
-
-def write_lsh_multiband_index(
-    embeddings: DataFrame,
-    path: str,
-    dim: int,
-    n_bands: int = 8,
-    band_bits: int = 8,
-    seed: int = 42,
-    vec_col: str = "embedding",
-    id_col: str = "vec_id",
-) -> None:
-    """OR-amplified banded LSH (the classic b×r construction): the
-    ``n_bands × band_bits``-plane signature splits into ``n_bands``
-    independent bands; a vector is a candidate if ANY band matches the
-    query's exactly.  For same-cluster cosine c the per-band match
-    probability is ``(1 − arccos(c)/π)^band_bits`` and the OR over bands
-    amplifies it to ``1 − (1−p)^n_bands`` — much better recall than the
-    single-signature multi-probe layout at the same probe cost (measured:
-    BENCH.md ANN recall table).
-
-    Layout: rows duplicated per band, written
-    ``partitionBy(lsh_band_idx, lsh_band_val)`` — a probe reads exactly
-    ``n_bands`` partition directories by EQUALITY (no Hamming enumeration),
-    each holding ~n/2^band_bits rows.  The ×n_bands storage is the
-    standard LSH trade (every bucket stores its members); the embedding
-    rides along so the exact rerank needs no join back."""
-    import os
-
-    with_sig = add_lsh_signature(
-        embeddings, dim, n_bands * band_bits, seed, vec_col
-    )
-    bands = F.array(
-        *[
-            F.shiftrightunsigned(F.col("lsh_sig"), i * band_bits)
-            .bitwiseAND(F.lit((1 << band_bits) - 1))
-            .cast("int")
-            for i in range(n_bands)
-        ]
-    )
-    exploded = (
-        with_sig.withColumn("_bands", bands)
-        .select(
-            F.col(id_col),
-            F.col(vec_col),
-            F.posexplode("_bands").alias("lsh_band_idx", "lsh_band_val"),
-        )
-    )
-    (
-        exploded.repartition("lsh_band_idx", "lsh_band_val")
-        .write.mode("overwrite")
-        .partitionBy("lsh_band_idx", "lsh_band_val")
-        .parquet(path)
-    )
-    fs_for(path).commit_json(
-        os.path.join(path, "_lsh_mb_meta.json"),
-        {"dim": dim, "n_bands": n_bands, "band_bits": band_bits, "seed": seed},
-    )
-
-
-def knn_lsh_multiband_probe(
-    spark,
-    path: str,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe_bands: int | None = None,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    df: DataFrame | None = None,
-) -> DataFrame:
-    """ANN top-k over a ``write_lsh_multiband_index`` dataset: one equality
-    predicate per band prunes the scan to ``n_probe_bands`` directories
-    (recall dial: fewer bands probed = faster, lower recall), candidates
-    dedup by id, exact cosine reranks.  ``df``: pre-loaded (typically
-    cached) index DataFrame from a standing server."""
-    import os
-
-    meta = fs_for(path).read_json(os.path.join(path, "_lsh_mb_meta.json"))
-    n_bands, band_bits = meta["n_bands"], meta["band_bits"]
-    if n_probe_bands is None:
-        n_probe_bands = n_bands
-    sig = lsh_signature_of(
-        query_vec, meta["dim"], n_bands * band_bits, meta["seed"]
-    )
-    if df is None:
-        df = spark.read.parquet(path)
-    cond = None
-    for i in range(min(n_probe_bands, n_bands)):
-        v = (sig >> (i * band_bits)) & ((1 << band_bits) - 1)
-        c = (F.col("lsh_band_idx") == i) & (F.col("lsh_band_val") == v)
-        cond = c if cond is None else (cond | c)
-    candidates = (
-        df.where(cond)
-        .select(id_col, vec_col)
-        .dropDuplicates([id_col])
-    )
-    # arrow=True at every dim: the numpy gemv refine is bit-identical
-    # to the batched cosine_vs_queries_udf on the same candidates, so
-    # search() and search_many() score ANN hits identically
-    return knn_bruteforce(candidates, query_vec, k, id_col, vec_col,
-                          arrow=True)
-
-
 def cosine_pair_udf():
     """Arrow UDF: row-wise cosine of two array columns, one numpy pass per
     batch (for wide vectors where the interpreted-HOF `cosine_col` would cost
@@ -866,49 +696,6 @@ def cosine_pair_udf():
         y, ny = vector_rows(b)
         dots = np.einsum("ij,ij->i", x, y)
         return pd.Series(dots / (nx * ny))
-
-    return cos
-
-
-def cosine_vs_queries_udf(qvecs: dict[int, list[float]]):
-    """Arrow UDF: cosine of an embedding column against the query vector
-    selected by a ``query_id`` column — the k-bounded query matrix ships
-    ONCE in the closure instead of riding every candidate row as a
-    duplicated array column (at 960k docs × 34 escalating queries the
-    per-row qvec doubled the Arrow traffic through the python worker).
-
-    Scoring loops one ``x_sub @ q`` gemv per distinct query in the batch —
-    the SAME formula (dtype conversion, norm clamp, gemv shape) as
-    ``cosine_to_query_udf``, so the batched ANN refine is bit-identical to
-    the single-query probes' refine on the same candidate rows (the
-    search()≡search_many() parity discipline; einsum row-dots differ from
-    gemv in the last ulp)."""
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    qids = sorted(qvecs)
-    qmat = np.array([qvecs[q] for q in qids], dtype=np.float64)
-    # per-query 1-D norm, NOT an axis=1 matrix norm: numpy's 1-D norm goes
-    # through BLAS dot while the axis reduction is a pairwise add.reduce —
-    # they can differ in the last ulp, and cosine_to_query_udf uses the 1-D
-    # form
-    qnorm = np.array(
-        [
-            max(float(np.linalg.norm(np.asarray(qvecs[q], dtype=np.float64))), 1e-300)
-            for q in qids
-        ]
-    )
-    pos = {q: i for i, q in enumerate(qids)}
-
-    @pandas_udf(DoubleType())
-    def cos(emb: pd.Series, qid: pd.Series) -> pd.Series:
-        x, nx = vector_rows(emb)
-        idx = qid.map(pos).to_numpy(dtype=np.int64)
-        out = np.empty(x.shape[0], dtype=np.float64)
-        for qi in np.unique(idx):
-            m = idx == qi
-            out[m] = (x[m] @ qmat[qi]) / (nx[m] * qnorm[qi])
-        return pd.Series(out)
 
     return cos
 

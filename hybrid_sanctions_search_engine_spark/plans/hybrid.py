@@ -9,7 +9,8 @@ as driver-side control flow over DataFrame stages:
   stage 2  fuzzy         — per-term fuzzy dictionary expansion (edit ≤ 1,
                            prefix-bucketed) → BM25 over expanded terms with
                            edit-ratio-discounted contributions
-  stage 3  vector        — cosine kNN over the embeddings table (exact or LSH)
+  stage 3  vector        — cosine kNN over the embeddings (an IVF-family
+                           probe, or an exact scan), fuzz-reranked
   fusion                 — 0.6·AC + 0.4·vector (+0.1 shared bonus), dedup,
                            threshold, top-k
 
@@ -24,6 +25,7 @@ from __future__ import annotations
 import itertools
 from collections.abc import Container
 from dataclasses import dataclass, field
+from functools import partial
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -40,10 +42,11 @@ from ..operators.postings import (
     term_doc_freq,
 )
 from ..operators.similarity import (
+    ANN_KINDS,
     DOC_TEXT_COL,
     HAS_DOC_COL,
     ProbeRerank,
-    knn_bruteforce,
+    knn_bruteforce_many,
     merge_local_topk,
 )
 from ..sources.tables import local_frame
@@ -114,10 +117,6 @@ class SearchOpts:
     speculative_fuzzy: bool = True
 
 
-# ANN layouts whose standing cache carries the doc text (plan open)
-_TEXT_CACHED_KINDS = ("ivf", "ivf_pq", "ivf_sq8")
-
-
 def _with_doc_text(vectors: DataFrame, docs: DataFrame, text_col: str) -> DataFrame:
     """``vectors`` left-joined with each vec_id's doc text
     (``DOC_TEXT_COL``; ``HAS_DOC_COL`` is null where no doc row exists)."""
@@ -127,6 +126,34 @@ def _with_doc_text(vectors: DataFrame, docs: DataFrame, text_col: str) -> DataFr
         F.lit(True).alias(HAS_DOC_COL),
     )
     return vectors.join(text, "vec_id", "left")
+
+
+def _rerank_frame(local: DataFrame, opts: SearchOpts) -> DataFrame:
+    """The L9 rerank and L10 anchor multiplier as JVM expressions over a
+    probe's reranking rows (``similarity.probe_schema``) → (query_id,
+    doc_id, score, cos_sim, anchor_mult, ``HAS_DOC_COL``)."""
+    from ..operators.fuzzy import rapidfuzz_rerank_expr
+
+    df = local.withColumnRenamed("vec_id", "doc_id").withColumn(
+        "score", F.col("cos_sim")
+    )
+    if opts.rapidfuzz_rerank:
+        df = rapidfuzz_rerank_expr(
+            df, F.col("qtext"), F.col("partial"), text_col=DOC_TEXT_COL,
+            score_col="score",
+        )
+    # dob ×1.2, id ×1.1 when the doc text contains a query anchor; empty
+    # anchor arrays make both exists() false
+    text = F.col(DOC_TEXT_COL)
+    anchor_mult = F.when(
+        F.exists(F.col("qdates"), lambda d: text.contains(d)), F.lit(1.2)
+    ).otherwise(F.lit(1.0)) * F.when(
+        F.exists(F.col("qid_anchors"), lambda i: text.contains(i)), F.lit(1.1)
+    ).otherwise(F.lit(1.0))
+    return df.select(
+        "query_id", "doc_id", "score", "cos_sim",
+        anchor_mult.alias("anchor_mult"), HAS_DOC_COL,
+    )
 
 
 def _timed_into(trace: dict, name: str, fn, lock=None):
@@ -151,6 +178,67 @@ def _timed_into(trace: dict, name: str, fn, lock=None):
         return out
 
     return run
+
+
+def _fuse(
+    lexical_best: dict[int, float],
+    ac_n: int,
+    ac_best: float,
+    vec_rows: list[dict],
+    opts: SearchOpts,
+) -> tuple[list[tuple[int, float]], bool]:
+    """One query's stage-4 gating, vector post-boosts and fusion, on the
+    driver over k-bounded rows → (top-k (doc_id, score), vector used).
+    ``lexical_best``: the keep-best AC ∪ fuzzy scores; ``ac_n`` /
+    ``ac_best``: the AC stage's hit count and best score; ``vec_rows``:
+    the query's ``_vector_stage_batch`` rows.  ``search()`` and
+    ``search_many()`` both fuse here."""
+    # stage-4 gating (_should_use_vector_fallback,
+    # hybrid_search_service.py:930-955): no AC hits, AC very weak, or
+    # vectors decisively better — otherwise the vector hits are dropped
+    vec_best = max((r["score"] for r in vec_rows), default=0.0)
+    use_vector = bool(vec_rows) and opts.enable_vector_fallback and (
+        ac_n == 0
+        or ac_best < opts.weak_ac_threshold
+        or vec_best > opts.vector_better_factor * ac_best
+    )
+    fused = lexical_best
+    if use_vector:
+        # post-boosts on vector-fallback hits (hybrid_search_service.py:
+        # 1248-1260): cosine > 0.7 ⇒ ×1.3, > 0.5 ⇒ ×1.1, then the L10
+        # anchor multiplier the probe evaluated in-cluster — applied here,
+        # so the gate above sees the pre-boost score
+        vector_best: dict[int, float] = {}
+        for r in vec_rows:
+            s, cos = r["score"], r["cos_sim"]
+            if opts.enable_cosine_boost:
+                if cos > 0.7:
+                    s *= 1.3
+                elif cos > 0.5:
+                    s *= 1.1
+            s *= r["anchor_mult"]
+            doc = r["doc_id"]
+            if doc not in vector_best or s > vector_best[doc]:
+                vector_best[doc] = s
+        # fusion (combine_results semantics): ac_w·lex + vec_w·vec + shared
+        # bonus; empty lexical results escalate the vector weight to 1.0
+        # (reference no-AC fallback, fusion.combine_results)
+        vec_w = 1.0 if not lexical_best else opts.vector_weight
+        fused = {}
+        for doc in lexical_best.keys() | vector_best.keys():
+            lex = lexical_best.get(doc)
+            vec = vector_best.get(doc)
+            score = (lex or 0.0) * opts.ac_weight + (vec or 0.0) * vec_w
+            if lex is not None and vec is not None:
+                score += 0.1  # SHARED_HIT_BONUS
+            fused[doc] = score
+    # P2 final threshold (reference _process_results,
+    # hybrid_search_service.py:1205-1211) — applied BEFORE the top-k cut
+    # so the k results all qualify
+    if opts.threshold > 0.0:
+        fused = {d: s for d, s in fused.items() if s >= opts.threshold}
+    top = sorted(fused.items(), key=lambda kv: (-kv[1], kv[0]))[: opts.top_k]
+    return top, use_vector
 
 
 class _Async:
@@ -207,7 +295,6 @@ class HybridSearchPlan:
         ann_index_dir: str | None = None,
         ann_kind: str = "ivf",
         ann_n_probe: int = 3,
-        ann_max_hamming: int = 2,
         ann_refine: int = 4,
         encoder=None,
     ):
@@ -217,17 +304,17 @@ class HybridSearchPlan:
         from the index's term rows (no extra tokenize pass).
 
         ``ann_index_dir``: serve the vector stage from a partitioned ANN
-        index (``write_ivf_index`` / ``write_lsh_index`` output) instead of a
-        full embeddings scan — the reference's vector stage is an ES HNSW
-        query, never a scan (``elasticsearch_adapters.py:819-843``).  Each
-        probe reads only the matching partition directories (PartitionFilters
-        pruning); ``ann_kind`` picks the layout (``ivf`` / ``lsh`` /
-        ``lsh_mb`` / ``ivf_pq`` / ``ivf_sq8`` — the quantized pair over
+        index instead of a full embeddings scan — the reference's vector
+        stage is an ES HNSW query, never a scan
+        (``elasticsearch_adapters.py:819-843``).  ``ann_kind`` names the
+        layout (``ANN_KINDS``): ``ivf`` over ``write_ivf_index`` output, or
+        the quantized pair ``ivf_pq`` / ``ivf_sq8`` over
         ``write_ivf_pq_index`` / ``write_ivf_sq8_index`` output, whose
         candidate scans read 48-byte PQ / dim-byte int8 codes instead of
-        raw vectors — the int8 form is what ES applies to indexed
-        dense_vector fields by default); ``ann_n_probe`` /
-        ``ann_max_hamming`` / ``ann_refine`` are the recall dials.
+        raw vectors (the int8 form is what ES applies to indexed
+        dense_vector fields by default); ``ann_n_probe`` / ``ann_refine``
+        are the recall dials.  Without it, ``embeddings`` is scanned
+        exactly.
 
         ``encoder``: query-text embedding encoder satisfying the
         ``functions.encoder`` contract (dim / encode_one / encode_batch) —
@@ -237,6 +324,12 @@ class HybridSearchPlan:
         touching call sites."""
         from ..functions.encoder import PseudoEncoder
 
+        if ann_kind not in ANN_KINDS:
+            raise ValueError(
+                f"unknown ann_kind {ann_kind!r}: supported kinds are "
+                + ", ".join(ANN_KINDS)
+            )
+        spark = docs.sparkSession
         self.docs = docs
         self.text_col = text_col
         self.embeddings = embeddings
@@ -246,59 +339,66 @@ class HybridSearchPlan:
         self.ann_index_dir = ann_index_dir
         self.ann_kind = ann_kind
         self.ann_n_probe = ann_n_probe
-        self.ann_max_hamming = ann_max_hamming
         self.ann_refine = ann_refine
+        # the vector leg's one probe, bound here for the plan's layout:
+        # ``_probe(qvecs, k=, as_rows=, rerank=)`` over ``ann_df``, the
+        # standing text-carrying vector cache (the ANN index rows, or with
+        # no ANN index the embeddings, scanned exactly) — each vector
+        # left-joined with its doc text, so the probe reranks inside its tasks
+        # instead of joining its hits into the doc store per call.  The
+        # plan is a STANDING server (the .persist() cache replaces the
+        # reference's TTL caches); re-reading the ANN parquet per batch
+        # cost ~5 s of the 960k vector stage.
         self.ann_df = None
         self.ann_centroids = None
-        self.ann_codebooks = None
-        self.ann_vmin = None
-        self.ann_vmax = None
+        self._probe = None
+        n_parts = spark.sparkContext.defaultParallelism
         if ann_index_dir is not None:
             if ann_kind == "ivf":
-                from ..operators.similarity import load_ivf_index
+                from ..operators.similarity import knn_ivf_probe_many, load_ivf_index
 
-                self.ann_df, self.ann_centroids = load_ivf_index(
-                    docs.sparkSession, ann_index_dir
-                )
+                ann_df, self.ann_centroids = load_ivf_index(spark, ann_index_dir)
+                probe, layout = knn_ivf_probe_many, ()
             elif ann_kind == "ivf_pq":
-                from ..operators.pq import load_ivf_pq_index
+                # ADC over 48-byte codes picks refine·k candidates, an exact
+                # re-rank emits true cosines — the ladder is layout-blind
+                from ..operators.pq import knn_ivf_pq_probe_many, load_ivf_pq_index
 
-                self.ann_df, self.ann_centroids, self.ann_codebooks = (
-                    load_ivf_pq_index(docs.sparkSession, ann_index_dir)
+                ann_df, self.ann_centroids, *layout = load_ivf_pq_index(
+                    spark, ann_index_dir
                 )
-            elif ann_kind == "ivf_sq8":
-                from ..operators.sq import load_ivf_sq8_index
-
-                self.ann_df, self.ann_centroids, self.ann_vmin, self.ann_vmax = (
-                    load_ivf_sq8_index(docs.sparkSession, ann_index_dir)
-                )
-            elif ann_kind in ("lsh", "lsh_mb"):
-                self.ann_df = docs.sparkSession.read.parquet(ann_index_dir)
+                probe = partial(knn_ivf_pq_probe_many, refine=ann_refine)
             else:
-                raise ValueError(f"unknown ann_kind: {ann_kind!r}")
-            if ann_kind in _TEXT_CACHED_KINDS:
-                # the cache carries each vector's doc text (left join), so
-                # the batched probe reranks inside its own tasks instead of
-                # joining its hits into the doc store per batch.  Range-
-                # partitioned and sorted on the cell, the cached batches
-                # stay cell-clustered — the ivf_cell IN (...) filter still
-                # skips them by min/max stats — and the probe runs at most
-                # defaultParallelism tasks.
-                n_parts = min(
-                    docs.sparkSession.sparkContext.defaultParallelism,
-                    len(self.ann_centroids),
+                # int8 codes: decoded-dot candidate scan, exact re-rank
+                from ..operators.sq import knn_ivf_sq8_probe_many, load_ivf_sq8_index
+
+                ann_df, self.ann_centroids, *layout = load_ivf_sq8_index(
+                    spark, ann_index_dir
                 )
-                self.ann_df = (
-                    _with_doc_text(self.ann_df, docs, text_col)
-                    .repartitionByRange(n_parts, "ivf_cell")
-                    .sortWithinPartitions("ivf_cell", "vec_id")
+                probe = partial(knn_ivf_sq8_probe_many, refine=ann_refine)
+            # range-partitioned and sorted on the cell, the cached batches
+            # stay cell-clustered — the ivf_cell IN (...) filter still
+            # skips them by min/max stats — and the probe runs at most
+            # defaultParallelism tasks
+            self.ann_df = (
+                _with_doc_text(ann_df, docs, text_col)
+                .repartitionByRange(
+                    min(n_parts, len(self.ann_centroids)), "ivf_cell"
                 )
-            # the plan is a STANDING server (the .persist() cache replaces
-            # the reference's TTL caches); re-reading the ANN parquet from
-            # disk per batch cost ~5 s of the 960k vector stage — cached,
-            # the probe is the cosine + top-k only (~1.5 s).  Filters on
-            # the cached relation still prune via in-memory batch stats.
-            self.ann_df = self.ann_df.persist()
+                .sortWithinPartitions("ivf_cell", "vec_id")
+                .persist()
+            )
+            self._probe = partial(
+                probe, self.ann_df, self.ann_centroids, *layout,
+                n_probe=ann_n_probe,
+            )
+        elif embeddings is not None:
+            self.ann_df = (
+                _with_doc_text(embeddings, docs, text_col)
+                .coalesce(n_parts)
+                .persist()
+            )
+            self._probe = partial(knn_bruteforce_many, self.ann_df)
         if index_dir is not None:
             from ..sources.index_io import load_index
             from .wand import batch_n_groups
@@ -342,7 +442,7 @@ class HybridSearchPlan:
         self.delta_stats: tuple[int, float] | None = None
         self.delta_embeddings: DataFrame | None = None
         # delta_embeddings ⟕ delta_docs' text, cached while attached (the
-        # batched probe's delta twin of the text-carrying ANN cache)
+        # delta twin of the text-carrying ``ann_df``)
         self._delta_ann: DataFrame | None = None
         self._fuzzy_dict: DataFrame | None = None
 
@@ -364,11 +464,12 @@ class HybridSearchPlan:
           * AC / fuzzy — base result ∪ delta BM25 (each side under its own
             corpus stats, the reference's overlay-then-active keep-best);
             fuzzy expansion additionally sees the delta's term dictionary;
-          * vector     — ANN-probe(base) ∪ exact-gemv(delta embeddings),
+          * vector     — probe(base) ∪ exact-gemv(delta embeddings),
             re-top-k'd under the same (cos desc, doc asc) order — cosine is
             stats-free, so this equals a full index rebuild exactly (parity
             test: tests/test_hybrid_delta.py);
-          * rerank / anchors — the doc-text probes read base ∪ delta docs.
+          * rerank / anchors — the delta vectors carry the delta docs' text,
+            as the base vectors carry the base docs'.
 
         ``delta_stats`` from ``streaming.incremental.load_delta_stats`` (one
         manifest read, no stats job); ``delta_embeddings`` from
@@ -384,7 +485,7 @@ class HybridSearchPlan:
         can see.  Call ``detach_delta()`` after compaction."""
         if delta_embeddings is not None and delta_docs is None:
             # the rerank/anchor stages drop vector hits without doc text
-            # (the inner-join semantics of the doc-text probe): a fresh
+            # (the inner-join semantics of a doc-text join): a fresh
             # delta doc surfaced by the vector stage would silently VANISH
             # from the results whenever rerank or anchors are enabled — and
             # stay on the rerank-free fast path — flipping results with
@@ -407,7 +508,7 @@ class HybridSearchPlan:
         if self._delta_ann is not None:
             self._delta_ann.unpersist()
             self._delta_ann = None
-        if delta_embeddings is not None and self._probe_reranks:
+        if delta_embeddings is not None:
             self._delta_ann = _with_doc_text(
                 delta_embeddings, delta_docs, self.text_col
             ).persist()
@@ -441,16 +542,6 @@ class HybridSearchPlan:
         """Drop the overlay (after compaction folds the delta into the base
         index + ANN layout)."""
         self.attach_delta(None, None, None, None)
-
-    @property
-    def _probe_reranks(self) -> bool:
-        """The batched vector leg reranks inside its probe tasks: the base
-        vectors are a text-carrying IVF-family ANN cache, or absent.  The
-        LSH layouts and the no-index brute-force scan join their hits into
-        the doc store instead."""
-        if self.ann_index_dir is not None:
-            return self.ann_kind in _TEXT_CACHED_KINDS
-        return self.embeddings is None
 
     @property
     def _delta_lex(self) -> bool:
@@ -559,15 +650,6 @@ class HybridSearchPlan:
             {"query_id": q, "term": t, "term_weight": w}
             for (q, t), w in out.items()
         ]
-
-    def _docs_for_text(self) -> DataFrame:
-        """Doc-text store for rerank/anchor probes: base ∪ delta docs."""
-        base = self.docs.select("doc_id", self.text_col)
-        if self.delta_docs is not None:
-            return base.unionByName(
-                self.delta_docs.select("doc_id", self.text_col)
-            )
-        return base
 
     def close(self) -> None:
         """Release the plan's persisted frames (postings/doc-lengths/
@@ -721,94 +803,19 @@ class HybridSearchPlan:
         """kNN hits as (doc_id, score, cos_sim) — score starts as the cosine
         and picks up the L9 fuzz rerank; the raw cosine rides along for the
         stage-4 post-boosts (the reference boosts on ``trace['cosine']``,
-        hybrid_search_service.py:1248-1254).
-
-        With ``ann_index_dir`` set, the scan is a partition-pruned ANN probe
-        (IVF cells / LSH bands) instead of the full embeddings table.
-
-        With a delta attached (``attach_delta``), the stage serves
-        ANN-probe(base) ∪ exact-gemv(delta embeddings) re-top-k'd under the
-        same (cos desc, doc asc) order — delta ids are disjoint from the
-        base (compaction contract), so the union needs no keep-best."""
-        spark = self.docs.sparkSession
-        have_base = self.embeddings is not None or self.ann_index_dir is not None
-        if not have_base and self.delta_embeddings is None:
-            return local_frame(spark, [], "doc_id long, score double, cos_sim double")
-        qv = self.encoder.encode_one(query)
-        if self.ann_index_dir is not None and self.ann_kind == "ivf":
-            from ..operators.similarity import knn_ivf_probe
-
-            res = knn_ivf_probe(
-                self.ann_df, self.ann_centroids, qv, k=k, n_probe=self.ann_n_probe
-            )
-        elif self.ann_index_dir is not None and self.ann_kind == "ivf_pq":
-            # memory-bounded layout: ADC over 48-byte codes picks
-            # refine·k candidates, exact re-rank emits true cosines — the
-            # downstream ladder (escalation gate, fusion, rerank) is
-            # layout-blind because cos_sim is exact either way
-            from ..operators.pq import knn_ivf_pq_probe
-
-            res = knn_ivf_pq_probe(
-                self.ann_df, self.ann_centroids, self.ann_codebooks, qv,
-                k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-            )
-        elif self.ann_index_dir is not None and self.ann_kind == "ivf_sq8":
-            # int8 middle layout (the ES dense_vector default): decoded-dot
-            # candidate scan over dim-byte codes (4× less IO than raw
-            # vectors), exact re-rank — cos_sim exact, ladder layout-blind
-            from ..operators.sq import knn_ivf_sq8_probe
-
-            res = knn_ivf_sq8_probe(
-                self.ann_df, self.ann_centroids, self.ann_vmin, self.ann_vmax,
-                qv, k=k, n_probe=self.ann_n_probe, refine=self.ann_refine,
-            )
-        elif self.ann_index_dir is not None and self.ann_kind == "lsh_mb":
-            from ..operators.similarity import knn_lsh_multiband_probe
-
-            res = knn_lsh_multiband_probe(
-                spark, self.ann_index_dir, qv, k=k, df=self.ann_df
-            )
-        elif self.ann_index_dir is not None:
-            from ..operators.similarity import knn_lsh_probe
-
-            res = knn_lsh_probe(
-                spark, self.ann_index_dir, qv, k=k,
-                max_hamming=self.ann_max_hamming, df=self.ann_df,
-            )
-        elif self.embeddings is not None:
-            # arrow=True at every dim: the numpy gemv cosine is bit-identical
-            # to knn_bruteforce_many's per-query gemv, so search() and
-            # search_many() score identically (9-decimal parity tests)
-            res = knn_bruteforce(self.embeddings, qv, k=k, arrow=True)
-        else:
-            res = None
-        if self.delta_embeddings is not None:
-            # exact gemv over the (small, fresh) delta — same operator and
-            # arrow shape as the base refine, so cosines merge bit-exactly
-            delta_res = knn_bruteforce(self.delta_embeddings, qv, k=k, arrow=True)
-            res = (
-                delta_res
-                if res is None
-                else res.unionByName(delta_res)
-                .orderBy(F.desc("cos_sim"), F.asc("vec_id"))
-                .limit(k)
-            )
-        hits = res.select(
-            F.col("vec_id").alias("doc_id"),
-            F.col("cos_sim").alias("score"),
-            "cos_sim",
+        hybrid_search_service.py:1248-1254).  The batched vector leg on a
+        batch of one, anchors off (``_vector_stage_batch``)."""
+        opts = SearchOpts(
+            top_k=k, rapidfuzz_rerank=rerank, enable_anchor_boost=False
         )
-        if not rerank:
-            return hits
-        # L9: the reference reranks vector-fallback hits by string fuzz vs
-        # the candidate text (×1.2 when fuzz>80, ×1.1 when fuzz>60) — the
-        # join is broadcast (k rows) against the doc store (base ∪ delta)
-        from ..operators.fuzzy import rapidfuzz_rerank
-
-        with_text = self._docs_for_text().join(F.broadcast(hits), "doc_id")
-        return rapidfuzz_rerank(
-            with_text, query, text_col=self.text_col, score_col="score"
-        ).select("doc_id", "score", "cos_sim")
+        return local_frame(
+            self.docs.sparkSession,
+            [
+                (r["doc_id"], r["score"], r["cos_sim"])
+                for r in self._vector_stage_batch([0], {0: query}, opts)[0]
+            ],
+            "doc_id long, score double, cos_sim double",
+        )
 
     # -- plan -------------------------------------------------------------
 
@@ -822,7 +829,6 @@ class HybridSearchPlan:
         trace: list[SearchTraceStep] = []
         k = opts.top_k
         spark = self.docs.sparkSession
-        schema = "doc_id long, score double"
 
         # stage results are ≤ k rows — materialize each once on the driver
         # (one job per stage) instead of persist+agg+reuse (three jobs + a
@@ -870,11 +876,6 @@ class HybridSearchPlan:
             if doc not in lexical_best or sc > lexical_best[doc]:
                 lexical_best[doc] = sc
         vec_rows: list = []
-        have_vectors = (
-            self.embeddings is not None
-            or self.ann_index_dir is not None
-            or self.delta_embeddings is not None
-        )
         if escalate:
             # stages 2 and 3 are independent given the escalation decision
             # (fuzzy feeds nothing into the vector probe; both merge after)
@@ -886,11 +887,9 @@ class HybridSearchPlan:
             fz_fut = _Async(lambda: self.fuzzy_stage(query, k, opts).collect())
             vec_fut = (
                 _Async(
-                    lambda: self.vector_stage(
-                        query, k, rerank=opts.rapidfuzz_rerank
-                    ).collect()
+                    lambda: self._vector_stage_batch([0], {0: query}, opts)[0]
                 )
-                if have_vectors
+                if self._have_vectors
                 else None
             )
             fz_rows = fz_fut.result()
@@ -919,81 +918,11 @@ class HybridSearchPlan:
                     )
                 )
 
-        # stage-4 gating (_should_use_vector_fallback,
-        # hybrid_search_service.py:930-955): no AC hits, AC very weak, or
-        # vectors decisively better — otherwise the vector hits are dropped
-        vec_best = max((r["score"] for r in vec_rows), default=0.0)
-        use_vector = bool(vec_rows) and opts.enable_vector_fallback and (
-            ac_n == 0
-            or ac_best < opts.weak_ac_threshold
-            or vec_best > opts.vector_better_factor * ac_best
-        )
-
-        vector_best: dict[int, float] | None = None
-        if use_vector:
-            # post-boosts on vector-fallback hits (hybrid_search_service.py:
-            # 1248-1260): cosine > 0.7 ⇒ ×1.3, > 0.5 ⇒ ×1.1 — driver-side over
-            # the k-bounded collected rows, the cosine rides in the stage output
-            vector_best = {}
-            for r in vec_rows:
-                s, cos = r["score"], r["cos_sim"]
-                if opts.enable_cosine_boost:
-                    if cos > 0.7:
-                        s *= 1.3
-                    elif cos > 0.5:
-                        s *= 1.1
-                doc = r["doc_id"]
-                if doc not in vector_best or s > vector_best[doc]:
-                    vector_best[doc] = s
-            if opts.enable_anchor_boost:
-                # L10 anchors (dob ⇒ ×1.2, id ⇒ ×1.1): needs the candidate
-                # text — one broadcast semi-probe of ≤ k hits against the doc
-                # store, collected back for the driver-side fusion
-                from ..operators.fuzzy import anchor_boost, extract_anchors
-
-                dates, ids = extract_anchors(query)
-                if dates or ids:
-                    vector = local_frame(
-                        spark,
-                        [{"doc_id": d, "score": s} for d, s in vector_best.items()],
-                        schema,
-                    )
-                    with_text = self._docs_for_text().join(
-                        F.broadcast(vector), "doc_id"
-                    )
-                    vector_best = {
-                        r["doc_id"]: r["score"]
-                        for r in anchor_boost(
-                            with_text, query, text_col=self.text_col,
-                            dob_boost=1.2, id_boost=1.1,
-                        ).select("doc_id", "score").collect()
-                    }
-
-        # fusion (combine_results semantics, driver-side over ≤ 3k rows):
-        # ac_w·lex + vec_w·vec + shared bonus; empty AC escalates the vector
-        # weight to 1.0 (reference no-AC fallback, fusion.combine_results)
-        if vector_best is not None:
-            vec_w = 1.0 if not lexical_best else opts.vector_weight
-            fused: dict[int, float] = {}
-            for doc in lexical_best.keys() | vector_best.keys():
-                lex = lexical_best.get(doc)
-                vec = vector_best.get(doc)
-                score = (lex or 0.0) * opts.ac_weight + (vec or 0.0) * vec_w
-                if lex is not None and vec is not None:
-                    score += 0.1  # SHARED_HIT_BONUS
-                fused[doc] = score
-        else:
-            fused = lexical_best
-
-        # P2 final threshold (reference _process_results,
-        # hybrid_search_service.py:1205-1211) — applied BEFORE the top-k cut
-        # so the k results all qualify
-        if opts.threshold > 0.0:
-            fused = {d: s for d, s in fused.items() if s >= opts.threshold}
-        top = sorted(fused.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
+        top, use_vector = _fuse(lexical_best, ac_n, ac_best, vec_rows, opts)
         result = local_frame(
             spark,
-            [{"doc_id": d, "score": s} for d, s in top], schema
+            [{"doc_id": d, "score": s} for d, s in top],
+            "doc_id long, score double",
         )
         trace.append(
             SearchTraceStep(
@@ -1090,6 +1019,10 @@ class HybridSearchPlan:
 
     # -- batched vector leg ---------------------------------------------
 
+    @property
+    def _have_vectors(self) -> bool:
+        return self._probe is not None or self._delta_ann is not None
+
     def _vector_stage_batch(
         self,
         targets: list[int],
@@ -1102,20 +1035,13 @@ class HybridSearchPlan:
         fuzz rerank folded into ``score`` and the L10 anchor multiplier —
         evaluated in-cluster, so no document text reaches the driver (at
         web scale a 100-query × k × ~100 KB-doc collect would be ~100 MB).
-        Candidates come from a cell-pruned ANN probe or, with no ANN index,
-        from ``knn_bruteforce_many`` — the query×doc fan-out stays inside
-        numpy Arrow tasks, NEVER a crossJoin + window over
-        |corpus| × |queries| rows.  ``cancel``: an abandoned speculation
-        submits no further job once it is set."""
+        The one vector leg of every call shape: ``search()`` serves a batch
+        of one.  ``cancel``: an abandoned speculation submits no further
+        job once it is set."""
         from ..operators.fuzzy import extract_anchors
 
         vec_rows: dict[int, list[dict]] = {q: [] for q in targets}
-        have_vectors = (
-            self.embeddings is not None
-            or self.ann_index_dir is not None
-            or self.delta_embeddings is not None
-        )
-        if not (targets and have_vectors):
+        if not (targets and self._have_vectors):
             return vec_rows
         qvecs = [(q, self.encoder.encode_one(qtext[q])) for q in targets]
         anchors = {
@@ -1124,15 +1050,9 @@ class HybridSearchPlan:
         }
         # rerank-free fast path: with the fuzz rerank off and no query
         # carrying anchors, the text could only give anchor_mult = 1.0 and
-        # an unchanged score — the rows skip it.  search() returns the same
-        # under the same opts (its rerank is gated on opts.rapidfuzz_rerank
-        # and empty anchors multiply by 1.0), so batch↔single parity holds.
+        # an unchanged score — the rows skip it
         need_text = opts.rapidfuzz_rerank or any(d or i for d, i in anchors.values())
-        stage = (
-            self._probe_vector_rows if self._probe_reranks
-            else self._joined_vector_rows
-        )
-        for q, doc, score, cos, mult in stage(
+        for q, doc, score, cos, mult in self._probe_vector_rows(
             qvecs, qtext, anchors, opts, need_text, cancel
         ):
             vec_rows[q].append(
@@ -1140,47 +1060,15 @@ class HybridSearchPlan:
             )
         return vec_rows
 
-    def _rerank_frame(
-        self, hits: DataFrame, partial, text_col: str, opts: SearchOpts, *keep: str
-    ) -> DataFrame:
-        """The L9 rerank and L10 anchor multiplier as JVM expressions over
-        hits carrying (query_id, doc_id, cos_sim, qtext, qdates,
-        qid_anchors, ``text_col``) → (query_id, doc_id, score, cos_sim,
-        anchor_mult, *keep).  ``partial`` is the partial-ratio column
-        ``rapidfuzz_rerank_expr`` takes."""
-        from ..operators.fuzzy import rapidfuzz_rerank_expr
-
-        df = hits.withColumn("score", F.col("cos_sim"))
-        if opts.rapidfuzz_rerank:
-            df = rapidfuzz_rerank_expr(
-                df, F.col("qtext"), partial, text_col=text_col,
-                score_col="score", sort=False,
-            )
-        # same containment × multiplier as operators.fuzzy.anchor_boost
-        # (dob ×1.2, id ×1.1); empty anchor arrays make both exists() false
-        anchor_mult = F.when(
-            F.exists(F.col("qdates"), lambda d: F.col(text_col).contains(d)),
-            F.lit(1.2),
-        ).otherwise(F.lit(1.0)) * F.when(
-            F.exists(F.col("qid_anchors"), lambda i: F.col(text_col).contains(i)),
-            F.lit(1.1),
-        ).otherwise(F.lit(1.0))
-        return df.select(
-            "query_id", "doc_id", "score", "cos_sim",
-            anchor_mult.alias("anchor_mult"), *keep,
-        )
-
     def _probe_vector_rows(self, qvecs, qtext, anchors, opts, need_text, cancel):
-        """The batched vector leg over a text-carrying IVF-family cache (and
-        the delta overlay's text-carrying embeddings): each probe task
-        emits its local top-k with the rows' text, query text, anchors and
-        partial ratio; the rerank/anchor projection runs on that output in
+        """The plan's probe over its text-carrying vector cache, and the
+        exact gemv over the delta's: each probe task emits its local top-k
+        with the rows' text, query text, anchors and partial ratio; the
+        rerank/anchor projection (``_rerank_frame``) runs on that output in
         the same job and drops the text before the collect; the driver
         merges the local tops by (cos desc, doc asc), keeps k, and only then
         drops hits with no doc row — the inner-join semantics of a doc-text
         join (such a hit vanishes; the (k+1)-th does not replace it)."""
-        from ..operators.similarity import knn_bruteforce_many
-
         k = opts.top_k
         rerank = (
             ProbeRerank(
@@ -1192,36 +1080,12 @@ class HybridSearchPlan:
             else None
         )
         kw = dict(k=k, as_rows=rerank is None, rerank=rerank)
-        kind = self.ann_kind if self.ann_index_dir is not None else None
         parts = []
-        if kind == "ivf":
-            from ..operators.similarity import knn_ivf_probe_many
-
-            parts.append(knn_ivf_probe_many(
-                self.ann_df, self.ann_centroids, qvecs,
-                n_probe=self.ann_n_probe, **kw,
-            ))
-        elif kind == "ivf_pq":
-            # ADC over the union of probed cells, then one exact re-rank
-            # pass: candidate selection bit-identical to per-query probes,
-            # cosines exact, so batch↔single parity holds at 9 decimals
-            from ..operators.pq import knn_ivf_pq_probe_many
-
-            parts.append(knn_ivf_pq_probe_many(
-                self.ann_df, self.ann_centroids, self.ann_codebooks, qvecs,
-                n_probe=self.ann_n_probe, refine=self.ann_refine, **kw,
-            ))
-        elif kind == "ivf_sq8":
-            from ..operators.sq import knn_ivf_sq8_probe_many
-
-            parts.append(knn_ivf_sq8_probe_many(
-                self.ann_df, self.ann_centroids, self.ann_vmin, self.ann_vmax,
-                qvecs, n_probe=self.ann_n_probe, refine=self.ann_refine, **kw,
-            ))
+        if self._probe is not None:
+            parts.append(self._probe(qvecs, **kw))
         if self._delta_ann is not None:
-            # exact batched gemv over the delta — the single path's
-            # knn_bruteforce op shape, so base ∪ delta merges bit-exactly
-            # (delta ids are disjoint from the base)
+            # exact batched gemv over the delta (ids disjoint from the
+            # base), merged with the base under the same order
             parts.append(knn_bruteforce_many(self._delta_ann, qvecs, **kw))
         if rerank is None:
             return [
@@ -1235,186 +1099,15 @@ class HybridSearchPlan:
         local = parts[0]
         for part in parts[1:]:
             local = local.unionByName(part)
-        scored = self._rerank_frame(
-            local.withColumnRenamed("vec_id", "doc_id"), F.col("partial"),
-            DOC_TEXT_COL, opts, HAS_DOC_COL,
-        )
         merged = merge_local_topk(
             (
                 (r["query_id"], r["doc_id"], r["cos_sim"], r["score"],
                  r["anchor_mult"], r[HAS_DOC_COL])
-                for r in scored.collect()
+                for r in _rerank_frame(local, opts).collect()
             ),
             k,
         )
         return [(q, d, s, c, m) for q, d, c, s, m, has_doc in merged if has_doc]
-
-    def _joined_vector_rows(self, qvecs, qtext, anchors, opts, need_text, cancel):
-        """The batched vector leg over the LSH layouts or the no-index
-        embeddings scan: per-query windowed hits, joined with their text
-        (query text and anchors as a broadcast side table; the ≤ nq×k hits
-        broadcast into the base ∪ delta doc store) for the rerank/anchor
-        projection."""
-        from pyspark.sql import Window
-
-        from ..operators.fuzzy import partial_ratio_col
-        from ..operators.similarity import knn_bruteforce_many
-
-        spark = self.docs.sparkSession
-        k = opts.top_k
-        targets = [q for q, _ in qvecs]
-        qv = dict(qvecs)
-        if self.ann_index_dir is not None and self.ann_kind == "lsh_mb":
-            import os as _os
-
-            from ..operators.similarity import lsh_signature_of
-            from ..sources.fs import fs_for
-
-            mmeta = fs_for(self.ann_index_dir).read_json(
-                _os.path.join(self.ann_index_dir, "_lsh_mb_meta.json")
-            )
-            nb, bb = mmeta["n_bands"], mmeta["band_bits"]
-            triples = []
-            for q in targets:
-                sig = lsh_signature_of(
-                    qv[q], mmeta["dim"], nb * bb, mmeta["seed"]
-                )
-                for bi in range(nb):
-                    triples.append(
-                        (q, bi, (sig >> (bi * bb)) & ((1 << bb) - 1))
-                    )
-            banddf = local_frame(
-                spark,
-                triples,
-                "query_id long, lsh_band_idx int, lsh_band_val int",
-            )
-            # static isin prefilters prune the scan to (a superset of)
-            # the union of all queries' band directories — literal
-            # partition predicates, no DPP dependence; the broadcast
-            # equality join then refines exactly.  A vector can match
-            # several of a query's bands → dedup per (query, vec).
-            vals = sorted({v for _, _, v in triples})
-            base = (
-                self.ann_df
-                .where(F.col("lsh_band_val").isin(vals))
-                .join(
-                    F.broadcast(banddf), ["lsh_band_idx", "lsh_band_val"]
-                )
-                .dropDuplicates(["query_id", "vec_id"])
-            )
-        elif self.ann_index_dir is not None:
-            import itertools
-            import os as _os
-
-            from ..operators.similarity import (
-                _LSH_TOP_BITS,
-                lsh_signature_of,
-            )
-            from ..sources.fs import fs_for
-
-            lmeta = fs_for(self.ann_index_dir).read_json(
-                _os.path.join(self.ann_index_dir, "_lsh_meta.json")
-            )
-            n_planes = lmeta["n_planes"]
-            sigs, bands = {}, {}
-            for q in targets:
-                sg = lsh_signature_of(qv[q], lmeta["dim"], n_planes, lmeta["seed"])
-                sigs[q] = sg
-                qband = (sg >> (n_planes - _LSH_TOP_BITS)) & ((1 << _LSH_TOP_BITS) - 1)
-                bs = set()
-                for h in range(self.ann_max_hamming + 1):
-                    for flips in itertools.combinations(range(_LSH_TOP_BITS), h):
-                        b = qband
-                        for f in flips:
-                            b ^= 1 << f
-                        bs.add(b)
-                bands[q] = bs
-            union_bands = sorted({b for bs in bands.values() for b in bs})
-            banddf = local_frame(
-                spark,
-                [(q, b, sigs[q]) for q, bs in bands.items() for b in bs],
-                "query_id long, lsh_band int, qsig long",
-            )
-            base = (
-                self.ann_df
-                .where(F.col("lsh_band").isin(union_bands))
-                .join(F.broadcast(banddf), "lsh_band")
-                .where(
-                    F.bit_count(F.col("lsh_sig").bitwiseXOR(F.col("qsig")))
-                    <= self.ann_max_hamming
-                )
-            )
-        else:
-            base = None
-        w = Window.partitionBy("query_id").orderBy(
-            F.desc("cos_sim"), F.asc("doc_id")
-        )
-        if base is not None:
-            # Arrow cosine at EVERY dim: the batched probe scores
-            # |escalating| × cell-population pairs, and the interpreted HOF
-            # cosine_col walks each pair's arrays three times (dot + both
-            # norms) in Catalyst eval — ~6 s of the round-5 profile; the
-            # numpy batch UDF does one einsum.  The query matrix rides in
-            # the UDF closure keyed by query_id (cosine_vs_queries_udf)
-            # instead of a per-row qvec join column — half the Arrow
-            # traffic.
-            from ..operators.similarity import cosine_vs_queries_udf
-
-            cos = cosine_vs_queries_udf(qv)(F.col("embedding"), F.col("query_id"))
-            hits = (
-                base.withColumn("cos_sim", cos)
-                .select("query_id", F.col("vec_id").alias("doc_id"), "cos_sim")
-                .withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") <= k)
-                .drop("rn")
-            )
-        else:
-            # no ANN index: exact multi-query cosine in ONE shuffle-free
-            # scan (per-query gemv, batch-local top-k) — the scale-correct
-            # replacement for crossJoin + window
-            hits = knn_bruteforce_many(self.embeddings, qvecs, k=k).select(
-                "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
-            )
-        if self.delta_embeddings is not None:
-            # exact batched gemv over the delta embeddings — same per-query
-            # gemv shape as the single-path knn_bruteforce, so base ∪ delta
-            # re-top-k merges bit-exactly (delta ids disjoint from base)
-            dhits = knn_bruteforce_many(self.delta_embeddings, qvecs, k=k).select(
-                "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
-            )
-            hits = (
-                hits.unionByName(dhits)
-                .withColumn("rn", F.row_number().over(w))
-                .where(F.col("rn") <= k)
-                .drop("rn")
-            )
-        if cancel is not None and cancel.is_set():
-            return []  # abandoned: don't submit the final job
-        if not need_text:
-            return [
-                (r["query_id"], r["doc_id"], r["cos_sim"], r["cos_sim"], 1.0)
-                for r in hits.collect()
-            ]
-        qmeta = local_frame(
-            spark,
-            [
-                {
-                    "query_id": q, "qtext": qtext[q],
-                    "qdates": anchors[q][0], "qid_anchors": anchors[q][1],
-                }
-                for q in targets
-            ],
-            "query_id long, qtext string, qdates array<string>, "
-            "qid_anchors array<string>",
-        )
-        with_text = self._docs_for_text().join(
-            F.broadcast(hits.join(F.broadcast(qmeta), "query_id")), "doc_id"
-        )
-        scored = self._rerank_frame(
-            with_text, partial_ratio_col(F.col("qtext"), F.col(self.text_col)),
-            self.text_col, opts,
-        )
-        return [tuple(r) for r in scored.collect()]
 
     def search_many(
         self, queries: list[tuple[int, str]], opts: SearchOpts | None = None
@@ -1827,51 +1520,11 @@ class HybridSearchPlan:
             for doc, sc in fz_rows.get(qid, []):
                 if doc not in lexical_best or sc > lexical_best[doc]:
                     lexical_best[doc] = sc
-            vrows = vec_rows.get(qid, [])
-            ac_n = len(ac_rows[qid])
-            ac_best = max((s for _, s in ac_rows[qid]), default=0.0)
-            vec_best = max((r["score"] for r in vrows), default=0.0)
-            use_vector = bool(vrows) and opts.enable_vector_fallback and (
-                ac_n == 0
-                or ac_best < opts.weak_ac_threshold
-                or vec_best > opts.vector_better_factor * ac_best
+            top, use_vector = _fuse(
+                lexical_best, len(ac_rows[qid]),
+                max((s for _, s in ac_rows[qid]), default=0.0),
+                vec_rows.get(qid, []), opts,
             )
-            vector_best: dict[int, float] | None = None
-            if use_vector:
-                vector_best = {}
-                for r in vrows:
-                    s, cos = r["score"], r["cos_sim"]
-                    if opts.enable_cosine_boost:
-                        if cos > 0.7:
-                            s *= 1.3
-                        elif cos > 0.5:
-                            s *= 1.1
-                    # L10 anchors were evaluated in-cluster (anchor_mult
-                    # column); the multiplication happens here so the stage-4
-                    # gate above still sees the pre-boost score, exactly like
-                    # search()
-                    s *= r["anchor_mult"]
-                    doc = r["doc_id"]
-                    if doc not in vector_best or s > vector_best[doc]:
-                        vector_best[doc] = s
-            if vector_best is not None:
-                vec_w = 1.0 if not lexical_best else opts.vector_weight
-                fused: dict[int, float] = {}
-                for doc in lexical_best.keys() | vector_best.keys():
-                    lex = lexical_best.get(doc)
-                    vec = vector_best.get(doc)
-                    score = (lex or 0.0) * opts.ac_weight + (vec or 0.0) * vec_w
-                    if lex is not None and vec is not None:
-                        score += 0.1  # SHARED_HIT_BONUS
-                    fused[doc] = score
-            else:
-                fused = lexical_best
-            # P2 final threshold — identical to search()'s pre-top-k filter
-            if opts.threshold > 0.0:
-                fused = {
-                    d: s for d, s in fused.items() if s >= opts.threshold
-                }
-            top = sorted(fused.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
             for rank, (doc, s) in enumerate(top, start=1):
                 out_rows.append(
                     {"query_id": qid, "doc_id": doc, "score": s, "rank": rank}

@@ -204,10 +204,7 @@ def fold_delta_embeddings(
                  like base rows;
       * ivf_sq8 — same cell assignment, plus each vector is int8-coded with
                  the stored per-dimension (vmin, vmax) quantizer — folded
-                 rows are code-scannable exactly like base rows;
-      * lsh    — hyperplane signature with the stored (dim, n_planes, seed),
-                 append into ``lsh_band=…``;
-      * lsh_mb — per-band rows appended into ``lsh_band_idx=…/lsh_band_val=…``.
+                 rows are code-scannable exactly like base rows.
 
     Crash-safe + idempotent per delta fingerprint: the assigned rows land in
     a dot-prefixed STAGE directory first (invisible to readers), a pending
@@ -230,17 +227,15 @@ def fold_delta_embeddings(
     import hashlib
     import time
 
+    from ..operators.similarity import ANN_KINDS
     from ..sources.fs import fs_for
 
-    meta_name = {
-        "ivf": "_ivf_meta.json",
-        "ivf_pq": "_ivf_pq_meta.json",
-        "ivf_sq8": "_ivf_sq8_meta.json",
-        "lsh": "_lsh_meta.json",
-        "lsh_mb": "_lsh_mb_meta.json",
-    }[kind]
+    if kind not in ANN_KINDS:
+        raise ValueError(
+            f"unknown ann kind {kind!r}: supported kinds are " + ", ".join(ANN_KINDS)
+        )
     fs = fs_for(ann_index_dir)
-    meta_path = os.path.join(ann_index_dir, meta_name)
+    meta_path = os.path.join(ann_index_dir, f"_{kind}_meta.json")
     meta = fs.read_json(meta_path)
     t0 = time.monotonic()
 
@@ -348,90 +343,46 @@ def fold_delta_embeddings(
     if n_vecs == 0:
         return {"folded_vecs": 0, "noop": "empty delta", "fp": fp}
 
-    if kind in ("ivf", "ivf_pq", "ivf_sq8"):
-        from ..operators.similarity import assign_ivf_cells
+    import numpy as np
 
-        import numpy as np
+    from ..operators.similarity import assign_ivf_cells
 
-        cents = np.asarray(meta["centroids"], dtype=np.float64)
-        staged = assign_ivf_cells(delta_embeddings, cents)
-        if kind == "ivf_pq":
-            # residual-code with the STORED centroids+codebooks — parquet
-            # is self-describing, so the appended files' column order need
-            # not match the base
-            from ..operators.pq import encode_pq
+    cents = np.asarray(meta["centroids"], dtype=np.float64)
+    staged = assign_ivf_cells(delta_embeddings, cents)
+    if kind == "ivf_pq":
+        # residual-code with the STORED centroids+codebooks — parquet
+        # is self-describing, so the appended files' column order need
+        # not match the base
+        from ..operators.pq import encode_pq
 
-            if not meta.get("residual"):
-                # mirror load_ivf_pq_index's refusal: appending
-                # residual-coded rows next to raw-coded base rows would
-                # permanently mix two incompatible encodings in one index
-                raise ValueError(
-                    "pre-residual ivf_pq index format; rebuild with "
-                    "write_ivf_pq_index before folding deltas"
-                )
-
-            staged = encode_pq(
-                staged,
-                np.asarray(meta["codebooks"], dtype=np.float64),
-                centroids=cents,
+        if not meta.get("residual"):
+            # mirror load_ivf_pq_index's refusal: appending
+            # residual-coded rows next to raw-coded base rows would
+            # permanently mix two incompatible encodings in one index
+            raise ValueError(
+                "pre-residual ivf_pq index format; rebuild with "
+                "write_ivf_pq_index before folding deltas"
             )
-        elif kind == "ivf_sq8":
-            # int8-code with the STORED per-dim quantizer (no retrain —
-            # scans must decode folded rows with the same (vmin, vmax))
-            from ..operators.sq import encode_sq8
 
-            staged = encode_sq8(
-                staged,
-                np.asarray(meta["vmin"], dtype=np.float64),
-                np.asarray(meta["vmax"], dtype=np.float64),
-            )
-        part_cols = ["ivf_cell"]
-        staged.repartition(*part_cols).write.mode("overwrite").partitionBy(
-            *part_cols
-        ).parquet(stage_dir)
-    elif kind == "lsh":
-        from ..operators.similarity import _LSH_TOP_BITS, add_lsh_signature
+        staged = encode_pq(
+            staged,
+            np.asarray(meta["codebooks"], dtype=np.float64),
+            centroids=cents,
+        )
+    elif kind == "ivf_sq8":
+        # int8-code with the STORED per-dim quantizer (no retrain —
+        # scans must decode folded rows with the same (vmin, vmax))
+        from ..operators.sq import encode_sq8
 
-        n_planes = meta["n_planes"]
-        with_sig = add_lsh_signature(
-            delta_embeddings, meta["dim"], n_planes, meta["seed"]
+        staged = encode_sq8(
+            staged,
+            np.asarray(meta["vmin"], dtype=np.float64),
+            np.asarray(meta["vmax"], dtype=np.float64),
         )
-        staged = with_sig.withColumn(
-            "lsh_band",
-            F.shiftrightunsigned(F.col("lsh_sig"), n_planes - _LSH_TOP_BITS)
-            .bitwiseAND(F.lit((1 << _LSH_TOP_BITS) - 1))
-            .cast("int"),
-        )
-        part_cols = ["lsh_band"]
-        staged.repartition(*part_cols).write.mode("overwrite").partitionBy(
-            *part_cols
-        ).parquet(stage_dir)
-    elif kind == "lsh_mb":
-        from ..operators.similarity import add_lsh_signature
-
-        n_bands, band_bits = meta["n_bands"], meta["band_bits"]
-        with_sig = add_lsh_signature(
-            delta_embeddings, meta["dim"], n_bands * band_bits, meta["seed"]
-        )
-        bands = F.array(
-            *[
-                F.shiftrightunsigned(F.col("lsh_sig"), i * band_bits)
-                .bitwiseAND(F.lit((1 << band_bits) - 1))
-                .cast("int")
-                for i in range(n_bands)
-            ]
-        )
-        staged = with_sig.withColumn("_bands", bands).select(
-            "vec_id",
-            "embedding",
-            F.posexplode("_bands").alias("lsh_band_idx", "lsh_band_val"),
-        )
-        part_cols = ["lsh_band_idx", "lsh_band_val"]
-        staged.repartition(*part_cols).write.mode("overwrite").partitionBy(
-            *part_cols
-        ).parquet(stage_dir)
-    else:
-        raise ValueError(f"unknown ann kind: {kind!r}")
+    part_cols = ["ivf_cell"]
+    staged.repartition(*part_cols).write.mode("overwrite").partitionBy(
+        *part_cols
+    ).parquet(stage_dir)
 
     # enumerate staged partition files → deterministic move plan
     moves: list[list[str]] = []

@@ -29,13 +29,15 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def main() -> None:
+    from hybrid_sanctions_search_engine_spark.operators.similarity import ANN_KINDS
+
     parser = argparse.ArgumentParser(description=__doc__)
     parser.add_argument("--index-dir", required=True)
     parser.add_argument("--delta-dir", required=True)
     parser.add_argument("--ann-index-dir", default=None)
     parser.add_argument(
         "--ann-kind", default="ivf",
-        choices=["ivf", "ivf_pq", "ivf_sq8", "lsh", "lsh_mb"],
+        choices=ANN_KINDS,
     )
     parser.add_argument("--keep-delta", action="store_true")
     parser.add_argument("--cores", type=int, default=0, help="local[N] for testing")

@@ -3,12 +3,13 @@ recall floors at the serving defaults.
 
 The reference's ES HNSW layer publishes its ef_search/num_candidates dials
 (``elasticsearch_index_manager.py:209-214``); ``operators.ann_recall``
-publishes the recall@k-vs-dial analogue for IVF (n_probe) and LSH
-(max_hamming).  The curve machinery replays probe selection in numpy from
-the written index's own columns — these tests pin (a) that the replay is
-EXACTLY the candidate selection ``knn_ivf_probe`` / ``knn_lsh_probe``
-perform, and (b) recall floors at the default dials on the clustered
-384-dim fixture (deterministic seed, so the floors are tight)."""
+publishes the recall@k-vs-dial analogue for IVF (n_probe) and IVF-PQ /
+IVF-SQ8 (refine).  The curve machinery replays probe selection in numpy
+from the written index's own columns — these tests pin (a) that the replay
+is EXACTLY the candidate selection ``knn_ivf_probe`` / ``knn_ivf_pq_probe``
+/ ``knn_ivf_sq8_probe`` perform, and (b) recall floors at the default dials
+on the clustered 384-dim fixture (deterministic seed, so the floors are
+tight), read from one report built once for the module."""
 
 from __future__ import annotations
 
@@ -19,7 +20,6 @@ import pytest
 from hybrid_sanctions_search_engine_spark.operators.ann_recall import (
     brute_force_topk,
     ivf_recall_curve,
-    lsh_recall_curve,
     make_clustered_fixture,
     recall_report,
 )
@@ -31,18 +31,22 @@ N, DIM = 4000, 384
 def built(spark, tmp_path_factory):
     from hybrid_sanctions_search_engine_spark.operators.similarity import (
         write_ivf_index,
-        write_lsh_index,
     )
 
     x, q = make_clustered_fixture(n=N, dim=DIM, query_mode="boundary")
     emb = spark.createDataFrame(
         pd.DataFrame({"vec_id": np.arange(N, dtype=np.int64), "embedding": list(x)})
     )
-    base = tmp_path_factory.mktemp("ann_recall")
-    ivf_dir, lsh_dir = str(base / "ivf"), str(base / "lsh")
+    ivf_dir = str(tmp_path_factory.mktemp("ann_recall") / "ivf")
     write_ivf_index(emb, ivf_dir, n_centroids=16)
-    write_lsh_index(emb, lsh_dir, dim=DIM, n_planes=16)
-    return x, q, emb, ivf_dir, lsh_dir
+    return x, q, emb, ivf_dir
+
+
+@pytest.fixture(scope="module")
+def report(spark):
+    """The recall report on the 8k × 384 clustered fixture, built once for
+    every floor check."""
+    return recall_report(spark, n=8000, dim=DIM, n_probes=[1, 2, 3])
 
 
 def test_ivf_replay_matches_real_probe(spark, built):
@@ -52,7 +56,7 @@ def test_ivf_replay_matches_real_probe(spark, built):
         load_ivf_index,
     )
 
-    x, q, _, ivf_dir, _ = built
+    x, q, _, ivf_dir = built
     indexed, cents = load_ivf_index(spark, ivf_dir)
     truth = brute_force_topk(x, q[:3], 10)
     # recall computed by the curve on these 3 queries ...
@@ -64,26 +68,6 @@ def test_ivf_replay_matches_real_probe(spark, built):
             r["vec_id"]
             for r in knn_ivf_probe(indexed, cents, q[i].tolist(), k=10, n_probe=2)
             .collect()
-        ]
-        hits += len(set(got) & set(truth[i].tolist()))
-    assert curve[2] == pytest.approx(hits / 30)
-
-
-def test_lsh_replay_matches_real_probe(spark, built):
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        knn_lsh_probe,
-    )
-
-    x, q, _, _, lsh_dir = built
-    truth = brute_force_topk(x, q[:3], 10)
-    curve = lsh_recall_curve(lsh_dir, x, q[:3], truth, [2], k=10)
-    hits = 0
-    for i in range(3):
-        got = [
-            r["vec_id"]
-            for r in knn_lsh_probe(
-                spark, lsh_dir, q[i].tolist(), k=10, max_hamming=2
-            ).collect()
         ]
         hits += len(set(got) & set(truth[i].tolist()))
     assert curve[2] == pytest.approx(hits / 30)
@@ -101,7 +85,7 @@ def test_ivf_pq_replay_matches_real_probe(spark, built, tmp_path_factory):
         write_ivf_pq_index,
     )
 
-    x, q, emb, _, _ = built
+    x, q, emb, _ = built
     pq_dir = str(tmp_path_factory.mktemp("ann_recall_pq") / "ivf_pq")
     write_ivf_pq_index(emb, pq_dir, n_centroids=16, m=48)
     indexed, cents, books = load_ivf_pq_index(spark, pq_dir)
@@ -132,7 +116,7 @@ def test_ivf_sq8_replay_matches_real_probe(spark, built, tmp_path_factory):
         write_ivf_sq8_index,
     )
 
-    x, q, emb, _, _ = built
+    x, q, emb, _ = built
     sq_dir = str(tmp_path_factory.mktemp("ann_recall_sq") / "ivf_sq8")
     write_ivf_sq8_index(emb, sq_dir, n_centroids=16)
     indexed, cents, vmin, vmax = load_ivf_sq8_index(spark, sq_dir)
@@ -151,74 +135,31 @@ def test_ivf_sq8_replay_matches_real_probe(spark, built, tmp_path_factory):
     assert curve[2] == pytest.approx(hits / 30)
 
 
-def test_recall_floors_at_default_dials(spark):
-    """Floors at the serving defaults (HybridSearchPlan: n_probe=3,
-    max_hamming=2) on the 8k × 384 clustered fixture — measured
-    {ivf member@1: 1.0, ivf boundary@2: 1.0, lsh member@2: 0.552,
-    lsh member@3: 0.776}; floors leave margin for BLAS variation only."""
-    rep = recall_report(
-        spark, n=8000, dim=DIM, n_probes=[1, 2, 3], max_hammings=[2, 3]
-    )
-    assert rep["ivf_recall_at_10_by_n_probe_member"]["1"] >= 0.95
-    assert rep["ivf_recall_at_10_by_n_probe_boundary"]["2"] >= 0.95
-    assert rep["ivf_recall_at_10_by_n_probe_boundary"]["3"] >= 0.95
-    assert rep["lsh_recall_at_10_by_max_hamming_member"]["2"] >= 0.45
-    assert rep["lsh_recall_at_10_by_max_hamming_member"]["3"] >= 0.65
+def test_recall_floors_at_default_dials(report):
+    """IVF floors at the serving default (HybridSearchPlan: n_probe=3) —
+    measured {member@1: 1.0, boundary@2: 1.0}; floors leave margin for
+    BLAS variation only."""
+    assert report["ivf_recall_at_10_by_n_probe_member"]["1"] >= 0.95
+    assert report["ivf_recall_at_10_by_n_probe_boundary"]["2"] >= 0.95
+    assert report["ivf_recall_at_10_by_n_probe_boundary"]["3"] >= 0.95
     # the curves are monotone in the dial
-    ivf_b = rep["ivf_recall_at_10_by_n_probe_boundary"]
+    ivf_b = report["ivf_recall_at_10_by_n_probe_boundary"]
     assert ivf_b["1"] <= ivf_b["2"] <= ivf_b["3"]
 
 
-def test_lsh_multiband_replay_matches_real_probe(spark, built, tmp_path_factory):
-    """OR-amplified banded LSH: the numpy replay selects exactly the
-    candidates knn_lsh_multiband_probe does (band equality, union over
-    probed bands), and recall at full width beats the single-signature
-    multi-probe layout at its widest dial on the same fixture."""
-    from hybrid_sanctions_search_engine_spark.operators.ann_recall import (
-        lsh_multiband_recall_curve,
-        lsh_recall_curve,
-    )
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        knn_lsh_multiband_probe,
-        write_lsh_multiband_index,
-    )
-
-    x, q, emb, _, lsh_dir = built
-    mb_dir = str(tmp_path_factory.mktemp("ann_mb") / "mb")
-    write_lsh_multiband_index(emb, mb_dir, dim=DIM, n_bands=8, band_bits=8)
-    truth = brute_force_topk(x, q[:3], 10)
-    curve = lsh_multiband_recall_curve(mb_dir, x, q[:3], truth, [4], k=10)
-    hits = 0
-    for i in range(3):
-        got = [
-            r["vec_id"]
-            for r in knn_lsh_multiband_probe(
-                spark, mb_dir, q[i].tolist(), k=10, n_probe_bands=4
-            ).collect()
-        ]
-        hits += len(set(got) & set(truth[i].tolist()))
-    assert curve[4] == pytest.approx(hits / 30)
-
-    # OR-amplification beats single-signature multi-probe at its widest
-    # documented dial on the full query set
-    truth_all = brute_force_topk(x, q, 10)
-    mb_full = lsh_multiband_recall_curve(mb_dir, x, q, truth_all, [8], k=10)[8]
-    sp_widest = lsh_recall_curve(lsh_dir, x, q, truth_all, [3], k=10)[3]
-    assert mb_full >= sp_widest
-
-
-def test_multiband_recall_floor_at_defaults(spark):
-    """Floors at the 8×8 defaults on the 8k × 384 clustered fixture —
-    measured member recall by bands probed {1: 0.342, 2: 0.584, 4: 0.782,
-    8: 0.916} at n=20k; floors leave margin for the smaller fixture."""
-    rep = recall_report(
-        spark, n=8000, dim=DIM,
-        n_probes=[1], max_hammings=[2], n_probe_bands=[4, 8],
-    )
-    mb = rep["lsh_mb_recall_at_10_by_bands_probed_member"]
-    assert mb["8"] >= 0.8
-    assert mb["4"] >= 0.6
-    assert mb["8"] >= mb["4"]
+def test_quantized_recall_floors_at_default_refine(report):
+    """IVF-PQ / IVF-SQ8 floors at the serving default refine=4 (n_probe=4)
+    — measured {pq member: 0.692, pq boundary: 0.872, sq8 member: 1.0,
+    sq8 boundary: 1.0}; refine widens the exact re-rank, so recall is
+    monotone in it."""
+    pq = report["ivf_pq_recall_at_10_by_refine_member_n_probe_4"]
+    sq8 = report["ivf_sq8_recall_at_10_by_refine_member_n_probe_4"]
+    assert pq["4"] >= 0.6
+    assert report["ivf_pq_recall_at_10_by_refine_boundary_n_probe_4"]["4"] >= 0.8
+    assert sq8["4"] >= 0.95
+    assert report["ivf_sq8_recall_at_10_by_refine_boundary_n_probe_4"]["4"] >= 0.95
+    assert pq["1"] <= pq["2"] <= pq["4"] <= pq["8"]
+    assert sq8["1"] <= sq8["2"] <= sq8["4"]
 
 
 def test_pq_m_for_dim_divides():

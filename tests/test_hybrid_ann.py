@@ -1,7 +1,7 @@
 """Hybrid ladder × partitioned ANN + stage-4 vector-fallback parity.
 
 Round-3 verdict items 2 and 5: the vector stage must probe the partitioned
-IVF/LSH index (reference: ES HNSW, ``elasticsearch_adapters.py:819-843``)
+IVF-family index (reference: ES HNSW, ``elasticsearch_adapters.py:819-843``)
 instead of a full embeddings scan, and ``search()`` must implement the
 reference's ``_should_use_vector_fallback`` gating
 (``hybrid_search_service.py:930-955``) plus the cosine / anchor post-boosts
@@ -174,24 +174,22 @@ def test_sq8_backed_vector_stage_rank_parity(spark, corpus, tmp_path):
     ]
 
 
-def test_lsh_backed_vector_stage(spark, corpus, tmp_path):
-    """ann_kind='lsh': the stage probes the band-partitioned index and
-    returns cosine-ranked hits."""
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        write_lsh_index,
+@pytest.mark.parametrize("kind", ["lsh", "lsh_mb"])
+def test_removed_ann_layouts_are_rejected(spark, corpus, tmp_path, kind):
+    """The LSH serving layouts are gone: a plan and a delta fold asked for
+    one raise a ValueError naming the three supported kinds."""
+    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
+        fold_delta_embeddings,
     )
 
     docs, emb = corpus
-    path = str(tmp_path / "lsh")
-    write_lsh_index(emb, path, dim=DIM, n_planes=16)
-    plan = HybridSearchPlan(
-        docs, embeddings=emb, embedding_dim=DIM,
-        ann_index_dir=path, ann_kind="lsh", ann_max_hamming=6,
-    )
-    hits = plan.vector_stage("spark query join", k=5, rerank=False).collect()
-    assert len(hits) > 0
-    scores = [r["cos_sim"] for r in hits]
-    assert scores == sorted(scores, reverse=True)
+    with pytest.raises(ValueError, match="ivf, ivf_pq, ivf_sq8"):
+        HybridSearchPlan(
+            docs, embeddings=emb, embedding_dim=DIM,
+            ann_index_dir=str(tmp_path), ann_kind=kind,
+        )
+    with pytest.raises(ValueError, match="ivf, ivf_pq, ivf_sq8"):
+        fold_delta_embeddings(spark, str(tmp_path), emb, kind=kind)
 
 
 def test_search_through_ann_matches_bruteforce_ladder(ivf_plan, corpus):
@@ -333,19 +331,13 @@ def test_anchor_boost_wired_into_ladder(spark):
 def test_single_query_vector_stage_probes_standing_cache(spark, ivf_plan):
     """Round-6 verdict item 8 (the q_hybrid_escalated_ann drift watch): the
     single-query vector stage must consume the plan's persisted ``ann_df``
-    exactly like the batch path — an InMemoryTableScan in the executed plan,
-    and NO parquet FileScan of the ANN directory (a re-read per stage cost
-    ~5 s/batch at 960k before the round-5 standing cache)."""
-    df = ivf_plan.vector_stage("spark query join", k=5, rerank=False)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    # the serving scan is the in-memory one (the FileScan string nested
-    # under InMemoryRelation is the cache-BUILD description, not a read)
-    assert "InMemoryTableScan" in plan, plan
-    # functional proof: once the cache is filled, the stage still serves
-    # with the ANN directory moved away — a re-read from parquet would fail
-    # on the missing files.  (The cache joins the doc text in, so the
-    # input_file_name signal no longer applies: the expression rejects a
-    # two-source plan.)
+    exactly like the batch path — it IS the batch path on a batch of one,
+    and NO parquet re-read of the ANN directory (a re-read per stage cost
+    ~5 s/batch at 960k before the round-5 standing cache).  Once the cache
+    is filled, the stage still serves with the ANN directory moved away —
+    a re-read from parquet would fail on the missing files.  (The stage
+    returns a driver-built frame of its collected rows, so its own plan
+    shows no scan at all.)"""
     ivf_plan.ann_df.count()
     moved = ivf_plan.ann_index_dir + ".moved"
     os.rename(ivf_plan.ann_index_dir, moved)

@@ -109,6 +109,23 @@ def test_search_many_parity_ivf_pq(spark, corpus, tmp_path):
     _assert_parity(plan, SearchOpts(top_k=8))
 
 
+def test_search_many_parity_ivf_sq8(spark, corpus, tmp_path):
+    """SQ8-backed batched vector stage ≡ per-query knn_ivf_sq8_probe path
+    (int8 candidate scan, exact re-rank cosines at 9dp)."""
+    from hybrid_sanctions_search_engine_spark.operators.sq import (
+        write_ivf_sq8_index,
+    )
+
+    docs, emb = corpus
+    path = str(tmp_path / "ivfsq8b")
+    write_ivf_sq8_index(emb, path, n_centroids=8, iters=8)
+    plan = HybridSearchPlan(
+        docs, embeddings=emb, embedding_dim=DIM,
+        ann_index_dir=path, ann_kind="ivf_sq8", ann_n_probe=3, ann_refine=4,
+    )
+    _assert_parity(plan, SearchOpts(top_k=8))
+
+
 def test_search_many_parity_no_rerank_with_anchor(spark, corpus):
     """Anchor boosts flow through the batched driver-side path identically
     (rerank off isolates the anchor multiplication)."""
@@ -139,44 +156,11 @@ def test_search_many_parity_index_backed(spark, sf_smoke_dir, corpus, tmp_path):
     _assert_parity(plan, SearchOpts(top_k=8))
 
 
-def test_search_many_parity_lsh(spark, corpus, tmp_path):
-    """LSH-band-backed batched vector stage ≡ per-query knn_lsh_probe path."""
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        write_lsh_index,
-    )
-
-    docs, emb = corpus
-    path = str(tmp_path / "lshb")
-    write_lsh_index(emb, path, dim=DIM, n_planes=16)
-    plan = HybridSearchPlan(
-        docs, embeddings=emb, embedding_dim=DIM,
-        ann_index_dir=path, ann_kind="lsh", ann_max_hamming=6,
-    )
-    _assert_parity(plan, SearchOpts(top_k=8))
-
-
 def test_search_many_empty_and_unknown(spark, corpus):
     docs, emb = corpus
     plan = HybridSearchPlan(docs, embeddings=emb, embedding_dim=DIM)
     res, meta = plan.search_many([], SearchOpts(top_k=5))
     assert res.count() == 0 and meta == {}
-
-
-def test_search_many_parity_lsh_multiband(spark, corpus, tmp_path):
-    """Banded-LSH-backed (ann_kind='lsh_mb') batched vector stage ≡ the
-    per-query knn_lsh_multiband_probe path."""
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        write_lsh_multiband_index,
-    )
-
-    docs, emb = corpus
-    path = str(tmp_path / "lsh_mb")
-    write_lsh_multiband_index(emb, path, dim=DIM, n_bands=8, band_bits=8)
-    plan = HybridSearchPlan(
-        docs, embeddings=emb, embedding_dim=DIM,
-        ann_index_dir=path, ann_kind="lsh_mb",
-    )
-    _assert_parity(plan, SearchOpts(top_k=8))
 
 
 def test_search_many_no_escalation_skips_vector(spark, corpus, tmp_path):

@@ -503,42 +503,10 @@ def test_fold_crash_resume_no_duplicates(spark, env, ann_copy, monkeypatch):
     )
 
 
-def test_fold_delta_embeddings_lsh_mb(spark, env, tmp_path):
-    """The banded-LSH layout folds too: signatures use the stored seam
-    (dim, seed), so a post-fold probe finds the streamed doc."""
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        knn_lsh_multiband_probe,
-        write_lsh_multiband_index,
-    )
-
-    path = str(tmp_path / "lshmb")
-    write_lsh_multiband_index(
-        env["base_emb"], path, dim=DIM, n_bands=4, band_bits=6
-    )
-    demb = load_delta_embeddings(spark, env["delta_dir"])
-    rep = fold_delta_embeddings(spark, path, demb, kind="lsh_mb")
-    assert rep["folded_vecs"] == len(DELTA_DOCS)
-    hits = knn_lsh_multiband_probe(
-        spark, path, pseudo_embedding(DELTA_DOCS[1][1], DIM), k=3
-    ).collect()
-    assert hits[0]["vec_id"] == DELTA_DOCS[1][0]
-
-
-def test_delta_overlay_with_lsh_plan(spark, env, tmp_path):
-    """The vector overlay is layout-agnostic: an LSH-served plan with the
-    same delta attached also surfaces the streamed doc at cosine 1.0, and
-    search ≡ search_many holds."""
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        write_lsh_index,
-    )
-
-    base_docs = env["plan"].docs
-    path = str(tmp_path / "lsh")
-    write_lsh_index(env["base_emb"], path, dim=DIM, n_planes=16)
-    plan = HybridSearchPlan(
-        base_docs, embeddings=env["base_emb"], embedding_dim=DIM,
-        ann_index_dir=path, ann_kind="lsh", ann_max_hamming=3,
-    )
+def _assert_delta_overlay(spark, env, plan):
+    """Attach the streamed delta to ``plan``: the streamed doc surfaces at
+    cosine 1.0 (it is served by the exact delta gemv, never quantized), and
+    search ≡ search_many holds.  Closes ``plan``."""
     plan.attach_delta(
         delta_docs=spark.createDataFrame(DELTA_DOCS, SCHEMA),
         delta_postings=load_delta_postings(spark, env["delta_dir"]),
@@ -569,67 +537,42 @@ def test_delta_overlay_with_lsh_plan(spark, env, tmp_path):
 
 
 def test_delta_overlay_with_ivf_pq_plan(spark, env, tmp_path):
-    """The vector overlay composes with the PQ-coded base layout too: the
-    streamed doc surfaces at cosine 1.0 (it is served by the exact delta
-    gemv, never quantized), and search ≡ search_many holds."""
+    """The vector overlay composes with the PQ-coded base layout too."""
     from hybrid_sanctions_search_engine_spark.operators.pq import (
         write_ivf_pq_index,
     )
 
-    base_docs = env["plan"].docs
     path = str(tmp_path / "ivf_pq")
     write_ivf_pq_index(env["base_emb"], path, n_centroids=4, m=16, iters=6)
     plan = HybridSearchPlan(
-        base_docs, embeddings=env["base_emb"], embedding_dim=DIM,
+        env["plan"].docs, embeddings=env["base_emb"], embedding_dim=DIM,
         ann_index_dir=path, ann_kind="ivf_pq", ann_n_probe=4, ann_refine=8,
     )
-    plan.attach_delta(
-        delta_docs=spark.createDataFrame(DELTA_DOCS, SCHEMA),
-        delta_postings=load_delta_postings(spark, env["delta_dir"]),
-        delta_stats=load_delta_stats(env["delta_dir"]),
-        delta_embeddings=load_delta_embeddings(spark, env["delta_dir"]),
-    )
-    try:
-        hits = plan.vector_stage(DELTA_DOCS[0][1], k=3, rerank=False).collect()
-        assert hits[0]["doc_id"] == DELTA_DOCS[0][0]
-        assert hits[0]["cos_sim"] == pytest.approx(1.0, abs=1e-9)
-        queries = [(1, GIBBERISH_QUERY), (2, "zorblatt"), (3, DELTA_DOCS[2][1])]
-        opts = SearchOpts(top_k=5)
-        batched, meta = plan.search_many(queries, opts)
-        got: dict[int, list] = {}
-        for r in batched.collect():
-            got.setdefault(r["query_id"], []).append(
-                (r["rank"], r["doc_id"], round(r["score"], 9))
-            )
-        for qid, text in queries:
-            res, trace = plan.search(text, opts)
-            want = [
-                (i + 1, r["doc_id"], round(r["score"], 9))
-                for i, r in enumerate(res.collect())
-            ]
-            assert sorted(got.get(qid, [])) == want, (qid, text)
-    finally:
-        plan.close()
+    _assert_delta_overlay(spark, env, plan)
 
 
-def test_fold_delta_embeddings_lsh(spark, env, tmp_path):
-    """The single-signature LSH layout folds too (band from the stored
-    meta); post-fold probe finds the streamed doc."""
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        knn_lsh_probe,
-        write_lsh_index,
+def test_delta_overlay_with_ivf_sq8_plan(spark, env, tmp_path):
+    """The vector overlay composes with the int8-coded base layout too."""
+    from hybrid_sanctions_search_engine_spark.operators.sq import (
+        write_ivf_sq8_index,
     )
 
-    path = str(tmp_path / "lsh_fold")
-    write_lsh_index(env["base_emb"], path, dim=DIM, n_planes=16)
-    demb = load_delta_embeddings(spark, env["delta_dir"])
-    rep = fold_delta_embeddings(spark, path, demb, kind="lsh")
-    assert rep["folded_vecs"] == len(DELTA_DOCS)
-    hits = knn_lsh_probe(
-        spark, path, pseudo_embedding(DELTA_DOCS[0][1], DIM), k=3,
-        max_hamming=0,
-    ).collect()
-    assert hits and hits[0]["vec_id"] == DELTA_DOCS[0][0]
+    path = str(tmp_path / "ivf_sq8")
+    write_ivf_sq8_index(env["base_emb"], path, n_centroids=4, iters=6)
+    plan = HybridSearchPlan(
+        env["plan"].docs, embeddings=env["base_emb"], embedding_dim=DIM,
+        ann_index_dir=path, ann_kind="ivf_sq8", ann_n_probe=4, ann_refine=8,
+    )
+    _assert_delta_overlay(spark, env, plan)
+
+
+def test_delta_overlay_with_no_index_plan(spark, env):
+    """Without an ANN index the base embeddings are scanned exactly, and the
+    delta's text-carrying embeddings overlay that scan the same way."""
+    plan = HybridSearchPlan(
+        env["plan"].docs, embeddings=env["base_emb"], embedding_dim=DIM,
+    )
+    _assert_delta_overlay(spark, env, plan)
 
 
 def test_fold_file_ledger_excludes_already_folded(spark, env, ann_copy, tmp_path):

@@ -355,6 +355,44 @@ def test_escalated_ivf_search_many_runs_two_jobs(spark, ivf_index_plan, monkeypa
     assert not [c for c in columns if {"text", "doc_text"} & set(c)], columns
 
 
+def test_escalated_ivf_search_vector_leg_runs_one_job(spark, ivf_index_plan, monkeypatch):
+    """A single escalated ``search()`` on an IVF plan, rerank on and a
+    date-anchored query, serves its vector leg as a batch of one: exactly 1
+    job, the probe that reranks inside its tasks — counted by job tag on the
+    stage's own thread."""
+    plan = ivf_index_plan
+    opts = SearchOpts(top_k=5, escalation_threshold=1e9)
+    query = ANCHOR_QUERIES[0][1]
+    plan.search(query, opts)  # fills the standing caches
+    stage, jobs = plan._vector_stage_batch, []
+
+    def counted(*args, **kwargs):
+        out = {}
+        jobs.append(_tagged_jobs(spark, lambda: out.update(rows=stage(*args, **kwargs))))
+        return out["rows"]
+
+    monkeypatch.setattr(plan, "_vector_stage_batch", counted)
+    _, trace = plan.search(query, opts)
+    assert [t.stage for t in trace] == ["AC", "FUZZY", "SEMANTIC", "HYBRID"]
+    assert trace[2].hits > 0
+    assert jobs == [1]
+
+
+def test_no_index_search_many_vector_leg_plans_no_exchange(spark, plan, monkeypatch):
+    """With no ANN index, the batched vector leg scans the plan's cached
+    text-carrying embeddings and reranks in the same tasks: its collect
+    plans no exchange and no broadcast."""
+    opts = SearchOpts(top_k=5, escalation_threshold=1e9)
+    plan.search_many(ANCHOR_QUERIES, opts)  # fills the standing caches
+    _, plans, columns = _counted_inline(
+        spark, monkeypatch, lambda: plan.search_many(ANCHOR_QUERIES, opts)
+    )
+    vector = [p for p, c in zip(plans, columns) if "anchor_mult" in c]
+    assert len(vector) == 1, plans
+    assert "InMemoryTableScan" in vector[0], vector
+    assert "Exchange" not in vector[0], vector
+
+
 def test_windowed_text_join_composition_runs_more_jobs(spark, ivf_index_plan, monkeypatch):
     """The negative control: the composition the two-job batch replaced —
     windowed lexical tops, and windowed probe hits joined with the query
@@ -383,7 +421,7 @@ def test_windowed_text_join_composition_runs_more_jobs(spark, ivf_index_plan, mo
             [(q, plan.encoder.encode_one(t)) for q, t in ANCHOR_QUERIES],
             k=5, n_probe=plan.ann_n_probe,
         ).select("query_id", F.col("vec_id").alias("doc_id"), "cos_sim")
-        plan._docs_for_text().join(
+        plan.docs.select("doc_id", "text").join(
             F.broadcast(hits.join(F.broadcast(qmeta), "query_id")), "doc_id"
         ).collect()
 

@@ -2,12 +2,13 @@
 lexical job merges its local tops on the driver — both must return exactly
 what the windowed compositions they replace returned.
 
-* Vector leg: an IVF-family plan caches each vector's doc text, so the
-  probe task emits its local top-k with text, query text, anchors and the
-  partial ratio, and the driver merges.  The oracle is the windowed
-  composition: per-query windowed hits ⋈ the doc store (base ∪ delta) →
-  ``rapidfuzz_rerank_expr`` with the partial-ratio UDF → anchor multiplier.
-  Rows must agree in ids, score bits, ``cos_sim`` and ``anchor_mult``.
+* Vector leg: every plan — IVF-family or no-index — caches each vector's
+  doc text, so the probe task emits its local top-k with text, query text,
+  anchors and the partial ratio, and the driver merges.  The oracle is the
+  windowed composition: per-query windowed hits ⋈ the doc store (base ∪
+  delta) → ``rapidfuzz_rerank_expr`` with the partial-ratio UDF → anchor
+  multiplier.  Rows must agree in ids, score bits, ``cos_sim`` and
+  ``anchor_mult``.
 * Lexical leg: ``merge_local_topk`` over ``batch_topk_local`` must equal
   ``batch_topk_indexed``'s windowed rows in ids, score bits and order.
 """
@@ -26,8 +27,8 @@ from hybrid_sanctions_search_engine_spark.operators.fuzzy import (
     rapidfuzz_rerank_expr,
 )
 from hybrid_sanctions_search_engine_spark.operators.similarity import (
+    ProbeRerank,
     knn_bruteforce_many,
-    knn_ivf_probe_many,
     merge_local_topk,
 )
 from hybrid_sanctions_search_engine_spark.plans.hybrid import (
@@ -106,34 +107,21 @@ def plans(spark, corpus, tmp_path_factory):
         )
         for kind in ("ivf", "ivf_pq", "ivf_sq8")
     }
+    out["no-index"] = HybridSearchPlan(docs, embeddings=emb, embedding_dim=DIM)
     yield out
     for plan in out.values():
         plan.close()
 
 
 def _windowed_hits(plan, qvecs):
-    """Per-query windowed top-k (query_id, doc_id, cos_sim): the probe's
-    default frame, unioned with the delta's and re-windowed."""
+    """Per-query windowed top-k (query_id, doc_id, cos_sim): the plan's
+    probe with its default (windowed) merge, unioned with the delta's and
+    re-windowed."""
     from pyspark.sql import Window
 
-    from hybrid_sanctions_search_engine_spark.operators.pq import knn_ivf_pq_probe_many
-    from hybrid_sanctions_search_engine_spark.operators.sq import knn_ivf_sq8_probe_many
-
-    if plan.ann_kind == "ivf":
-        hits = knn_ivf_probe_many(
-            plan.ann_df, plan.ann_centroids, qvecs, k=K, n_probe=plan.ann_n_probe
-        )
-    elif plan.ann_kind == "ivf_pq":
-        hits = knn_ivf_pq_probe_many(
-            plan.ann_df, plan.ann_centroids, plan.ann_codebooks, qvecs,
-            k=K, n_probe=plan.ann_n_probe, refine=plan.ann_refine,
-        )
-    else:
-        hits = knn_ivf_sq8_probe_many(
-            plan.ann_df, plan.ann_centroids, plan.ann_vmin, plan.ann_vmax, qvecs,
-            k=K, n_probe=plan.ann_n_probe, refine=plan.ann_refine,
-        )
-    hits = hits.select("query_id", F.col("vec_id").alias("doc_id"), "cos_sim")
+    hits = plan._probe(qvecs, k=K).select(
+        "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
+    )
     if plan.delta_embeddings is not None:
         # the delta's cached embeddings, so both sides score the same rows
         # in the same batches (gemv bits depend on the batch)
@@ -168,14 +156,17 @@ def _oracle_rows(spark, plan, queries, opts):
             "query_id long, qtext string, qdates array<string>, "
             "qid_anchors array<string>",
         )
-        with_text = plan._docs_for_text().join(
+        docs = plan.docs.select("doc_id", "text")
+        if plan.delta_docs is not None:
+            docs = docs.unionByName(plan.delta_docs.select("doc_id", "text"))
+        with_text = docs.join(
             F.broadcast(hits.join(F.broadcast(qmeta), "query_id")), "doc_id"
         )
         if opts.rapidfuzz_rerank:
             with_text = rapidfuzz_rerank_expr(
                 with_text, F.col("qtext"),
                 partial_ratio_col(F.col("qtext"), F.col("text")),
-                text_col="text", sort=False,
+                text_col="text",
             )
         mult = F.when(
             F.exists(F.col("qdates"), lambda d: F.col("text").contains(d)), F.lit(1.2)
@@ -215,7 +206,7 @@ OPTS = {
 
 @pytest.mark.parametrize("delta", [False, True], ids=["base", "delta"])
 @pytest.mark.parametrize("mode", sorted(OPTS))
-@pytest.mark.parametrize("kind", ["ivf", "ivf_pq", "ivf_sq8"])
+@pytest.mark.parametrize("kind", ["ivf", "ivf_pq", "ivf_sq8", "no-index"])
 def test_probe_rerank_equals_windowed_join(spark, corpus, plans, kind, mode, delta):
     _, _, delta_docs, delta_emb = corpus
     plan = plans[kind]
@@ -239,6 +230,25 @@ def test_probe_rerank_equals_windowed_join(spark, corpus, plans, kind, mode, del
     else:
         assert {1.1, 1.2} & mults and not no_text & served
         assert len(got[5]) == K - 1
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivf_pq", "ivf_sq8", "no-index"])
+def test_empty_query_batch(plans, kind):
+    """Every layout's probe takes an empty query batch: no merged rows, and
+    an empty frame with the schema a non-empty batch's frame has — with
+    rerank inputs or without — so base and delta frames still union."""
+    plan = plans[kind]
+    qtext = dict(QUERIES[:1])
+    qvecs = [(q, pseudo_embedding(t, DIM)) for q, t in qtext.items()]
+    rerank = ProbeRerank(
+        qtext=qtext, anchors={q: extract_anchors(t) for q, t in qtext.items()},
+        partial=True,
+    )
+    assert plan._probe([], k=K, as_rows=True) == []
+    for rr in (None, rerank):
+        empty = plan._probe([], k=K, rerank=rr)
+        assert empty.schema == plan._probe(qvecs, k=K, rerank=rr).schema
+        assert empty.collect() == []
 
 
 @pytest.fixture(scope="module")

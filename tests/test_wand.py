@@ -685,8 +685,12 @@ def _jobs_and_tasks(spark, fn) -> tuple[int, int]:
     tracker = sc.statusTracker()
     jobs = tracker.getJobIdsForGroup(group)
     stages = [s for j in jobs for s in tracker.getJobInfo(j).stageIds]
-    # a cached parent's shuffle stage is listed but skipped: count run tasks
-    return len(jobs), sum(tracker.getStageInfo(s).numCompletedTasks for s in stages)
+    # a cached parent's shuffle stage is listed but skipped: count run
+    # tasks.  Past ``spark.ui.retainedStages`` the status store evicts
+    # skipped stages first (they have no completion time), so a listed
+    # stage may already be gone: it ran no task
+    infos = [tracker.getStageInfo(s) for s in stages]
+    return len(jobs), sum(i.numCompletedTasks for i in infos if i is not None)
 
 
 def test_single_query_stages_score_the_cache_in_place(spark, corpus, monkeypatch):

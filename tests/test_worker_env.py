@@ -212,7 +212,6 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
     import pyspark.sql.udf
 
     from hybrid_sanctions_search_engine_spark.functions.vectors import pseudo_embedding
-    from hybrid_sanctions_search_engine_spark.operators import fuzzy
     from hybrid_sanctions_search_engine_spark.plans.hybrid import SearchOpts
     from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
     from hybrid_sanctions_search_engine_spark.sources.tables import local_frame
@@ -225,8 +224,6 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
         return wrap(sc, func, returnType)
 
     monkeypatch.setattr(pyspark.sql.udf, "_wrap_function", spy)
-    # the partial-ratio UDF is built once per process; rebuild it under the spy
-    monkeypatch.setattr(fuzzy, "_PARTIAL_UDF", None)
     index_dir, plans = served
     topk_search(spark, index_dir, "spark query join", k=5).collect()
     for plan in plans.values():
@@ -265,8 +262,6 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
         "operators.similarity.knn_ivf_probe_many.<locals>.score",
         "operators.similarity.knn_bruteforce_many.<locals>.score_batches",
         "operators.fused_probe.fused_cell_probe_many.<locals>.rerank_pass",
-        "operators.similarity.cosine_to_query_udf.<locals>.cos",
-        "operators.fuzzy._make_partial_udf.<locals>.partial_udf",
         "operators.fused_probe.fused_cell_probe_many.<locals>.code_scan",
     }
     assert {f"{PKG}.{name}" for name in expected} <= set(shipped), sorted(shipped)
