@@ -418,6 +418,165 @@ def make_batch_group_scorer(
     return score_group
 
 
+def batch_query_terms(
+    queries: list[tuple[int, str]],
+    query_terms_override: list[tuple[int, str, float]] | None = None,
+    min_should_match: int | str = 1,
+) -> tuple[list[int], dict, list[int] | None] | None:
+    """A query set's batch-scorer inputs → (qid_list, term_to_qidx,
+    per-query minimum matched-term counts or None), or None when no query
+    has a term.  ``queries`` are tokenized, each distinct term at weight
+    1.0; ``query_terms_override`` adds explicit (query_id, term, weight)
+    triples — an expanded term contributes at its edit-ratio discount.
+
+    When BOTH are given (the fused AC+fuzzy shape — one scan and decode
+    pass instead of two jobs over the same postings) the two query-id
+    spaces must be DISJOINT; each id is scored independently, so the fused
+    result is row-identical to two separate calls.
+
+    ``min_should_match`` (ES semantics, resolved PER QUERY against its own
+    distinct-term count) applies only to the tokenized ``queries``: an
+    override id's per-doc count tallies matched expansion VARIANTS, not
+    query terms, so override-only calls reject it and override ids keep
+    minimum 1."""
+    from ..functions.tokenize import py_index_tokens
+
+    tokens = {qid: list(dict.fromkeys(py_index_tokens(q))) for qid, q in queries}
+    triples = [(qid, t, 1.0) for qid, _ in queries for t in tokens[qid]]
+    qid_list = [qid for qid, _ in queries]
+    if query_terms_override is not None:
+        ovr = list(query_terms_override)
+        ovr_qids = list(dict.fromkeys(q for q, _, _ in ovr))
+        if set(ovr_qids) & set(qid_list):
+            raise ValueError(
+                "fused batch: override query ids must be disjoint from "
+                "tokenized query ids"
+            )
+        if min_should_match != 1 and not queries:
+            raise ValueError(
+                "min_should_match cannot combine with query_terms_override"
+            )
+        triples += ovr
+        qid_list += ovr_qids
+    if not triples:
+        return None
+    qidx = {qid: i for i, qid in enumerate(qid_list)}
+    term_to_qidx: dict[str, list[tuple[int, float]]] = {}
+    for qid, t, wgt in triples:
+        term_to_qidx.setdefault(t, []).append((qidx[qid], float(wgt)))
+    msm_arr = None
+    if min_should_match != 1:
+        msm_arr = [
+            es_min_should_match(min_should_match, len(tokens[qid]))
+            if qid in tokens
+            else 1
+            for qid in qid_list
+        ]
+    return qid_list, term_to_qidx, msm_arr
+
+
+def score_pre_grouped(score_group):
+    """The in-place scoring body: a ``mapInPandas`` function over a
+    standing cache whose every partition holds ALL the postings of its docs
+    (term-sorted within the partition), coalesced into fewer tasks.  Rows
+    carry their cached partition id in ``part``; coalescing concatenates
+    whole cached partitions, so each partition's rows arrive contiguously
+    and are scored through ``score_group`` (``make_batch_group_scorer``)
+    as soon as the next partition's rows start.  A cached partition is a
+    doc group, so its local top-k per query is exact; per-task memory
+    stays at one cached partition's postings."""
+    import numpy as np
+    import pandas as pd
+
+    def flush(parts: list) -> pd.DataFrame:
+        return score_group(None, pd.concat(parts, ignore_index=True))
+
+    def score(batches):
+        held, held_part = [], None
+        for pdf in batches:
+            if pdf.empty:
+                continue
+            parts = pdf["part"].to_numpy()
+            cuts = (np.flatnonzero(parts[1:] != parts[:-1]) + 1).tolist()
+            for lo, hi in zip([0, *cuts], [*cuts, len(pdf)]):
+                if held and parts[lo] != held_part:
+                    yield flush(held)
+                    held = []
+                held_part = parts[lo]
+                held.append(pdf.iloc[lo:hi])
+        if held:
+            yield flush(held)
+
+    return score
+
+
+def topk_pre_grouped(matched: DataFrame, score_group) -> DataFrame:
+    """Task-local tops (``BATCH_SCORE_SCHEMA``) of ``matched`` — a filter
+    over a standing cache laid out as ``score_pre_grouped`` requires —
+    scored in place: tag ``spark_partition_id()``, ``coalesce`` to
+    ``defaultParallelism``, one ``mapInPandas``.  One job with no exchange,
+    fresh cache or not (``mapInPandas`` requires no distribution), and at
+    most one wave of Python tasks: each costs ~40-60 ms of a core whatever
+    its work, so one wave beats a groupBy over the cache's partitions."""
+    par = matched.sparkSession.sparkContext.defaultParallelism
+    return (
+        matched.withColumn("part", F.spark_partition_id())
+        .coalesce(par)
+        .mapInPandas(score_pre_grouped(score_group), BATCH_SCORE_SCHEMA)
+    )
+
+
+RAW_CACHE_COLS = ["term", "doc_id", "tf", "doc_len", "df"]
+
+
+def raw_postings_cache(postings: DataFrame, df: DataFrame) -> DataFrame:
+    """A standing raw postings cache: ``postings`` (term, doc_id, tf,
+    doc_len) ⋈ the (term, df) table, hash-partitioned by doc_id to
+    ``defaultParallelism`` and term-sorted within partitions — the layout
+    ``topk_pre_grouped`` scores in place (a partition holds every posting
+    of its docs).  Persisted; the first scoring job materializes it."""
+    par = postings.sparkSession.sparkContext.defaultParallelism
+    return (
+        postings.select("term", "doc_id", "tf", "doc_len")
+        .join(df.select("term", "df"), "term")
+        .repartition(par, "doc_id")
+        .sortWithinPartitions("term")
+        .persist()
+    )
+
+
+def cached_topk_local(
+    cached: DataFrame,
+    queries: list[tuple[int, str]],
+    k: int = 10,
+    *,
+    n_docs: float,
+    avgdl: float,
+    query_terms_override: list[tuple[int, str, float]] | None = None,
+    min_should_match: int | str = 1,
+    k1: float = K1,
+    b: float = B,
+) -> DataFrame:
+    """Many queries' task-local top-k over a ``raw_postings_cache``, scored
+    in place under the given corpus statistics → (query_id, doc_id, score,
+    n_terms_matched), ≤ tasks × |queries| × k rows, un-merged (the caller
+    merges them, ``similarity.merge_local_topk``).  The raw twin of
+    ``plans.wand.batch_topk_local(pre_grouped=True)``: same inputs
+    (``batch_query_terms``), same scorer, no varint decode."""
+    spec = batch_query_terms(queries, query_terms_override, min_should_match)
+    if spec is None:
+        return local_frame(cached.sparkSession, [], BATCH_SCORE_SCHEMA)
+    qid_list, term_to_qidx, msm_arr = spec
+    score_group = make_batch_group_scorer(
+        term_to_qidx, qid_list, n_docs, avgdl, k1, b, k,
+        min_match_per_qidx=msm_arr,
+    )
+    matched = cached.where(F.col("term").isin(sorted(term_to_qidx))).select(
+        *RAW_CACHE_COLS
+    )
+    return topk_pre_grouped(matched, score_group)
+
+
 def _aggregate_exploded_rows(pdf):
     """Raw exploded token rows (term, doc_id, doc_len, df) → the numpy
     dict shape ``make_batch_group_scorer`` consumes, with tf computed by a

@@ -4,7 +4,8 @@ Re-expresses ``HybridSearchService._hybrid_search``
 (``/root/reference/src/ai_service/layers/search/hybrid_search_service.py:728-910``)
 as driver-side control flow over DataFrame stages:
 
-  stage 1  AC/lexical    — top-k BM25 (compressed WAND path or DataFrame plan)
+  stage 1  AC/lexical    — top-k BM25, scored in place on a standing cache
+                           (the compressed index, or raw postings ⋈ df)
   escalate?              — no hits, or best score < escalation_threshold (0.6)
   stage 2  fuzzy         — per-term fuzzy dictionary expansion (edit ≤ 1,
                            prefix-bucketed) → BM25 over expanded terms with
@@ -27,18 +28,15 @@ from collections.abc import Container
 from dataclasses import dataclass, field
 from functools import partial
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-_SPEC_GROUP_SEQ = itertools.count()
-
-from ..operators.bm25 import bm25_topk, score_terms
+from ..operators.bm25 import cached_topk_local, raw_postings_cache
 from ..operators.fuzzy import dictionary_bloom, fuzzy_candidate_probe
 from ..operators.postings import (
     CorpusStats,
     build_postings,
     corpus_stats,
-    doc_lengths,
     term_doc_freq,
 )
 from ..operators.similarity import (
@@ -50,7 +48,9 @@ from ..operators.similarity import (
     merge_local_topk,
 )
 from ..sources.tables import local_frame
-from .wand import query_terms
+from .wand import batch_topk_local, query_terms
+
+_SPEC_GROUP_SEQ = itertools.count()
 
 
 @dataclass
@@ -93,28 +93,6 @@ class SearchOpts:
     # cosine > 0.7 ⇒ ×1.3, > 0.5 ⇒ ×1.1; dob anchor ⇒ ×1.2, id anchor ⇒ ×1.1
     enable_cosine_boost: bool = True
     enable_anchor_boost: bool = True
-    # search_many only: launch the batched vector probe for ALL queries at
-    # t0, concurrently with the AC job, and keep only the escalating subset's
-    # results (identical semantics — per-query vector results are
-    # independent, and non-escalating queries' rows are discarded before
-    # gating).  Trades bounded speculative work for taking the vector stage
-    # off the critical path.  ONLY applies when an ANN index serves the
-    # vector stage (partition-pruned, k-bounded per query): the brute-force
-    # fallback is a full corpus scan, so speculating it would pay O(corpus)
-    # for queries that never escalate — that path stays lazy regardless of
-    # this flag.  Disable to serve strictly-lazy like search().
-    speculative_vector: bool = True
-    # search_many only (round 6): also run the fuzzy SCORING job
-    # speculatively for all queries — it depends only on the expansion
-    # (itself speculative), not on the AC result, so chaining it off the
-    # expansion future takes the last post-AC stage off the critical path
-    # (the 960k profile showed wall = AC + fuzzy with vector already
-    # overlapped; after this, wall = max(AC, expansion+fuzzy, vector)).
-    # Per-query scoring is independent, so filtering to the escalating
-    # subset afterwards is identical to scoring only that subset.  Bounded
-    # extra work (the non-escalating queries' scoring), cancelled via job
-    # group when nothing escalates.
-    speculative_fuzzy: bool = True
 
 
 def _with_doc_text(vectors: DataFrame, docs: DataFrame, text_col: str) -> DataFrame:
@@ -181,18 +159,22 @@ def _timed_into(trace: dict, name: str, fn, lock=None):
 
 
 def _fuse(
-    lexical_best: dict[int, float],
-    ac_n: int,
-    ac_best: float,
+    ac_rows: list[tuple[int, float]],
+    fz_rows: list[tuple[int, float]],
     vec_rows: list[dict],
     opts: SearchOpts,
 ) -> tuple[list[tuple[int, float]], bool]:
     """One query's stage-4 gating, vector post-boosts and fusion, on the
     driver over k-bounded rows → (top-k (doc_id, score), vector used).
-    ``lexical_best``: the keep-best AC ∪ fuzzy scores; ``ac_n`` /
-    ``ac_best``: the AC stage's hit count and best score; ``vec_rows``:
-    the query's ``_vector_stage_batch`` rows.  ``search()`` and
-    ``search_many()`` both fuse here."""
+    ``ac_rows`` / ``fz_rows``: the query's AC and fuzzy (doc_id, score)
+    tops, merged keep-best; ``vec_rows``: its ``_vector_stage_batch``
+    rows."""
+    lexical_best: dict[int, float] = {}
+    for doc, sc in [*ac_rows, *fz_rows]:
+        if doc not in lexical_best or sc > lexical_best[doc]:
+            lexical_best[doc] = sc
+    ac_n = len(ac_rows)
+    ac_best = max((s for _, s in ac_rows), default=0.0)
     # stage-4 gating (_should_use_vector_fallback,
     # hybrid_search_service.py:930-955): no AC hits, AC very weak, or
     # vectors decisively better — otherwise the vector hits are dropped
@@ -399,19 +381,22 @@ class HybridSearchPlan:
                 .persist()
             )
             self._probe = partial(knn_bruteforce_many, self.ann_df)
+        # the lexical stages' one scorer, bound here for the plan's layout:
+        # ``_score_base(entries, k=, query_terms_override=,
+        # min_should_match=)`` → task-local tops over a STANDING cache
+        # partitioned so that each partition holds every posting of its
+        # docs, term-sorted — scored in place, one job with no exchange
+        # (``operators.bm25.topk_pre_grouped``); ``_lexical_tops`` runs it
         if index_dir is not None:
             from ..sources.index_io import load_index
             from .wand import batch_n_groups
 
-            self.index_df, self.index_meta = load_index(docs.sparkSession, index_dir)
-            # standing server: cache the index PRE-PARTITIONED on the batch
-            # scorer's doc-group key (same batch_n_groups formula) and
-            # term-sorted within partitions — every search_many lexical job
-            # then runs with ZERO exchange (the shuffle is paid once at
-            # cache materialization, not per query batch), and the term
-            # IN (...) filter prunes term-contiguous cached batches by
-            # min/max stats (guide §2.4/§6)
-            self._idx_n_groups = batch_n_groups(docs.sparkSession, self.index_meta)
+            self.index_df, self.index_meta = load_index(spark, index_dir)
+            # the compressed index, cached on its chunk groups (whole chunks
+            # per partition; the shuffle is paid once, at materialization)
+            # and term-sorted, so the term IN (...) filter prunes cached
+            # batches by min/max stats (guide §2.4/§6)
+            self._idx_n_groups = batch_n_groups(spark, self.index_meta)
             self.index_df = (
                 self.index_df.repartition(
                     self._idx_n_groups,
@@ -424,19 +409,26 @@ class HybridSearchPlan:
                 n_docs=self.index_meta.n_docs, avgdl=self.index_meta.avgdl
             )
             self.postings = None
-            self.dl = None
-            self.dictionary = (
-                self.index_df.groupBy("term")
-                .agg(F.max("df").alias("df"))
-                .persist()
+            self._score_base = partial(
+                batch_topk_local, spark, index_dir, index_df=self.index_df,
+                meta=self.index_meta, pre_grouped=True,
             )
+            lexical = self.index_df
         else:
+            # no index: the raw postings ⋈ df, cached by doc_id
             self.index_df = None
             self.index_meta = None
-            self.postings = build_postings(docs, text_col, positions=False).persist()
-            self.dl = doc_lengths(docs, text_col).persist()
+            postings = build_postings(docs, text_col, positions=False)
+            self.postings = raw_postings_cache(postings, term_doc_freq(postings))
             self.stats: CorpusStats = corpus_stats(docs, text_col)
-            self.dictionary = term_doc_freq(self.postings).persist()
+            self._score_base = partial(
+                cached_topk_local, self.postings,
+                n_docs=self.stats.n_docs, avgdl=self.stats.avgdl,
+            )
+            lexical = self.postings
+        self.dictionary = (
+            lexical.groupBy("term").agg(F.max("df").alias("df")).persist()
+        )
         self.delta_docs: DataFrame | None = None
         self.delta_postings: DataFrame | None = None
         self.delta_stats: tuple[int, float] | None = None
@@ -444,6 +436,10 @@ class HybridSearchPlan:
         # delta_embeddings ⟕ delta_docs' text, cached while attached (the
         # delta twin of the text-carrying ``ann_df``)
         self._delta_ann: DataFrame | None = None
+        # the delta's raw postings ⋈ df cache and its bound scorer, while
+        # attached
+        self._delta_cache: DataFrame | None = None
+        self._score_delta = None
         self._fuzzy_dict: DataFrame | None = None
 
     # -- streaming delta overlay ------------------------------------------
@@ -458,12 +454,13 @@ class HybridSearchPlan:
         """Overlay a streamed delta on EVERY ladder stage (round 6 — the
         reference's overlay search covers its vector index too,
         ``watchlist_index_service.py:85-222``; pre-round-6 only the lexical
-        ``search_with_delta`` path existed, so fresh docs were invisible to
-        escalation until compaction):
+        overlay existed, so fresh docs were invisible to escalation until
+        compaction):
 
-          * AC / fuzzy — base result ∪ delta BM25 (each side under its own
-            corpus stats, the reference's overlay-then-active keep-best);
-            fuzzy expansion additionally sees the delta's term dictionary;
+          * AC / fuzzy — base ∪ delta BM25 in the same scoring job, the
+            delta scored in place on its own cache under its own corpus
+            stats (the reference's overlay-then-active keep-best); fuzzy
+            expansion additionally sees the delta's term dictionary;
           * vector     — probe(base) ∪ exact-gemv(delta embeddings),
             re-top-k'd under the same (cos desc, doc asc) order — cosine is
             stats-free, so this equals a full index rebuild exactly (parity
@@ -474,8 +471,8 @@ class HybridSearchPlan:
         ``delta_stats`` from ``streaming.incremental.load_delta_stats`` (one
         manifest read, no stats job); ``delta_embeddings`` from
         ``load_delta_embeddings``.  The delta sides rely on the compaction
-        contract: delta doc_ids are DISJOINT from the base (new docs only),
-        so union + re-top-k needs no cross-side dedup.  After the stream
+        contract: delta doc_ids are DISJOINT from the base (new docs only);
+        the lexical merge still keeps the best score per doc.  After the stream
         appends, re-attach with FRESHLY LOADED frames
         (``load_delta_postings`` / ``load_delta_embeddings`` again): a
         DataFrame pins its parquet file listing at read() time
@@ -497,17 +494,16 @@ class HybridSearchPlan:
                 "vector hits on fresh docs need their text for the "
                 "rerank/anchor stages"
             )
-        if self._fuzzy_dict is not None:
-            self._fuzzy_dict.unpersist()
-            self._fuzzy_dict = None
+        for df in (self._fuzzy_dict, self._delta_cache, self._delta_ann):
+            if df is not None:
+                df.unpersist()
+        self._fuzzy_dict = self._delta_cache = self._delta_ann = None
+        self._score_delta = None
         self._driver_dict = ...  # invalidate the driver-side FST-style cache
         self._driver_dict_set = None
         self.delta_docs = delta_docs
         self.delta_postings = delta_postings
         self.delta_embeddings = delta_embeddings
-        if self._delta_ann is not None:
-            self._delta_ann.unpersist()
-            self._delta_ann = None
         if delta_embeddings is not None:
             self._delta_ann = _with_doc_text(
                 delta_embeddings, delta_docs, self.text_col
@@ -521,16 +517,25 @@ class HybridSearchPlan:
             )
             delta_stats = (int(row["n"]), float(row["avgdl"] or 1.0))
         self.delta_stats = delta_stats
-        if delta_postings is not None and (delta_stats or (1,))[0] > 0:
+        if delta_postings is not None and delta_stats[0] > 0:
+            # the base's raw twin: df counted once per attach (a map-side
+            # combined groupBy), scored under the delta's own statistics
+            self._delta_cache = raw_postings_cache(
+                delta_postings,
+                delta_postings.groupBy("term").agg(F.count("*").alias("df")),
+            )
+            self._score_delta = partial(
+                cached_topk_local, self._delta_cache,
+                n_docs=int(delta_stats[0]), avgdl=float(delta_stats[1] or 1.0),
+            )
             # fuzzy expansion must see delta-only terms; df ride-along keeps
             # the dictionary schema (expansion ranks by edit distance only)
+            df_type = self.dictionary.schema["df"].dataType.simpleString()
             self._fuzzy_dict = (
                 self.dictionary.select("term", "df")
                 .unionByName(
-                    delta_postings.groupBy("term").agg(
-                        F.count("*").cast(
-                            self.dictionary.schema["df"].dataType.simpleString()
-                        ).alias("df")
+                    self._delta_cache.groupBy("term").agg(
+                        F.max("df").cast(df_type).alias("df")
                     )
                 )
                 .groupBy("term")
@@ -542,14 +547,6 @@ class HybridSearchPlan:
         """Drop the overlay (after compaction folds the delta into the base
         index + ANN layout)."""
         self.attach_delta(None, None, None, None)
-
-    @property
-    def _delta_lex(self) -> bool:
-        return (
-            self.delta_postings is not None
-            and self.delta_stats is not None
-            and self.delta_stats[0] > 0
-        )
 
     def _expansion_dictionary(self) -> DataFrame:
         return self._fuzzy_dict if self._fuzzy_dict is not None else self.dictionary
@@ -652,152 +649,23 @@ class HybridSearchPlan:
         ]
 
     def close(self) -> None:
-        """Release the plan's persisted frames (postings/doc-lengths/
-        dictionary or the loaded index).  Results already returned by
+        """Release the plan's persisted frames (the lexical caches, the
+        dictionary, the vector caches).  Results already returned by
         ``search()`` stay valid — they are built from collected stage rows,
         not from the cached lineage."""
         for df in (
             self.index_df,
             self.postings,
-            self.dl,
             self.dictionary,
             self.ann_df,
             self._delta_ann,
+            self._delta_cache,
             self._fuzzy_dict,
         ):
             if df is not None:
                 df.unpersist()
 
     # -- stages -----------------------------------------------------------
-
-    def ac_stage(
-        self, query: str, k: int, min_should_match: int | str = 1
-    ) -> DataFrame:
-        # driver-dictionary term pruning (zero-job fast path): terms absent
-        # from the (base ∪ delta) dictionary have no postings anywhere, so
-        # a query with none present — or whose resolved minimum_should_match
-        # exceeds the present distinct-term count — is empty WITHOUT
-        # submitting any Spark job (the gibberish/typo queries that always
-        # escalate previously still paid the AC probe job).  msm resolves
-        # against the ORIGINAL distinct term count before pruning, so the
-        # filter semantics are unchanged.
-        dset = self._dict_present_set()
-        query_run: str | list[str] = query
-        msm_run: int | str = min_should_match
-        if dset is not None:
-            from ..operators.bm25 import es_min_should_match
-            from .wand import query_terms
-
-            toks = list(dict.fromkeys(query_terms(query)))
-            msm_n = es_min_should_match(min_should_match, len(toks))
-            present = [t for t in toks if t in dset]
-            if not present or msm_n > len(present):
-                return local_frame(
-                    self.docs.sparkSession,
-                    [], "doc_id long, score double"
-                )
-            query_run, msm_run = present, msm_n
-        if self.index_df is not None:
-            from .wand import topk_search
-
-            base = topk_search(
-                self.docs.sparkSession,
-                self.index_dir,
-                query_run,
-                k=k,
-                index_df=self.index_df,
-                meta=self.index_meta,
-                min_should_match=msm_run,
-                pre_grouped=True,
-            ).select("doc_id", "score")
-        else:
-            base = bm25_topk(
-                self.docs,
-                query_run,
-                k=k,
-                text_col=self.text_col,
-                postings=self.postings,
-                dl=self.dl,
-                stats=self.stats,
-                min_should_match=msm_run,
-            ).select("doc_id", "score")
-        return self._overlay_lexical(
-            base, query, k, min_should_match=min_should_match
-        )
-
-    def _overlay_lexical(
-        self,
-        base: DataFrame,
-        query: str | list[str],
-        k: int,
-        term_weights: dict[str, float] | None = None,
-        min_should_match: int | str = 1,
-    ) -> DataFrame:
-        """base ∪ delta BM25, keep-best per doc, re-top-k — the same overlay
-        shape as ``streaming.incremental.search_with_delta`` (each side
-        scored under its own corpus stats, reference overlay semantics).
-        One plan → the caller's single collect stays a single job."""
-        if not self._delta_lex:
-            return base
-        from ..operators.fusion import dedup_keep_best
-        from ..streaming.incremental import delta_bm25_topk
-
-        delta = delta_bm25_topk(
-            self.delta_postings, query, k=k,
-            delta_stats=self.delta_stats, term_weights=term_weights,
-            min_should_match=min_should_match,
-        ).select("doc_id", "score")
-        return (
-            dedup_keep_best(base.unionByName(delta))
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    def fuzzy_stage(self, query: str, k: int, opts: SearchOpts) -> DataFrame:
-        """Expand each query term through the fuzzy dictionary (edit ≤ 1,
-        same-prefix buckets), then score docs via BM25 with each expanded
-        term's contribution discounted by its edit ratio."""
-        weights = {
-            r["term"]: r["term_weight"]
-            for r in self._expand_terms_batch([0], {0: query}, opts)
-        }
-        if not weights:
-            return local_frame(
-                self.docs.sparkSession,
-                [], "doc_id long, score double"
-            )
-        if self.index_df is not None:
-            from .wand import topk_search
-
-            base = topk_search(
-                self.docs.sparkSession,
-                self.index_dir,
-                list(weights),
-                k=k,
-                index_df=self.index_df,
-                meta=self.index_meta,
-                term_weights=weights,
-                pre_grouped=True,
-            ).select("doc_id", "score")
-        else:
-            scored = score_terms(
-                self.postings, self.dl, list(weights), self.stats
-            )
-            wdf = local_frame(
-                self.docs.sparkSession,
-                [(t, w) for t, w in weights.items()],
-                "term string, term_weight double",
-            )
-            weighted = scored.join(F.broadcast(wdf), "term").withColumn(
-                "term_score", F.col("term_score") * F.col("term_weight")
-            )
-            base = (
-                weighted.groupBy("doc_id")
-                .agg(F.sum("term_score").alias("score"))
-                .orderBy(F.desc("score"), F.asc("doc_id"))
-                .limit(k)
-            )
-        return self._overlay_lexical(base, list(weights), k, term_weights=weights)
 
     def vector_stage(self, query: str, k: int, rerank: bool = True) -> DataFrame:
         """kNN hits as (doc_id, score, cos_sim) — score starts as the cosine
@@ -817,123 +685,6 @@ class HybridSearchPlan:
             "doc_id long, score double, cos_sim double",
         )
 
-    # -- plan -------------------------------------------------------------
-
-    def search(
-        self, query: str, opts: SearchOpts | None = None
-    ) -> tuple[DataFrame, list[SearchTraceStep]]:
-        """Run the adaptive ladder; returns (results, trace)."""
-        import time
-
-        opts = opts or SearchOpts()
-        trace: list[SearchTraceStep] = []
-        k = opts.top_k
-        spark = self.docs.sparkSession
-
-        # stage results are ≤ k rows — materialize each once on the driver
-        # (one job per stage) instead of persist+agg+reuse (three jobs + a
-        # cache leak per search call)
-        t0 = time.monotonic()
-        ac_rows = self.ac_stage(query, k, opts.min_should_match).collect()
-        # homoglyph permutation search (reference: _handle_search_layer
-        # multi-search, unified_orchestrator.py:647-731): when the query mixes
-        # scripts, also search the homoglyph-folded variant, keep best per doc
-        from ..functions.normalize import fold_homoglyphs
-
-        folded, n_folds = fold_homoglyphs(query)
-        if n_folds > 0 and folded != query:
-            folded_rows = self.ac_stage(
-                folded, k, opts.min_should_match
-            ).collect()
-            # driver-side merge is k-BOUNDED: both row sets are top-k collects
-            # (≤ 2k rows total), never O(corpus) — safe at any scale
-            best: dict[int, float] = {}
-            for r in list(ac_rows) + list(folded_rows):
-                doc, sc = r["doc_id"], r["score"]
-                if doc not in best or sc > best[doc]:
-                    best[doc] = sc
-            ac_rows = [
-                {"doc_id": d, "score": s}
-                for d, s in sorted(best.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-            ]
-        ac_n = len(ac_rows)
-        ac_best = max((r["score"] for r in ac_rows), default=0.0)
-        trace.append(
-            SearchTraceStep("AC", ac_n, ac_best, (time.monotonic() - t0) * 1000)
-        )
-
-        # escalation decision (_should_escalate, hybrid_search_service.py:912-928)
-        escalate = opts.enable_escalation and (
-            ac_n == 0 or ac_best < opts.escalation_threshold
-        )
-
-        # lexical keep-best merge is driver-side over k-bounded row sets
-        # (≤ 2k rows) — every stage result is already collected, so fusing
-        # through Spark jobs would only add per-job scheduling floors
-        lexical_best: dict[int, float] = {}
-        for r in ac_rows:
-            doc, sc = r["doc_id"], r["score"]
-            if doc not in lexical_best or sc > lexical_best[doc]:
-                lexical_best[doc] = sc
-        vec_rows: list = []
-        if escalate:
-            # stages 2 and 3 are independent given the escalation decision
-            # (fuzzy feeds nothing into the vector probe; both merge after)
-            # — run them CONCURRENTLY, exactly like search_many overlaps
-            # them (round 6: the sequential ladder paid 0.8 s fuzzy + 1.0 s
-            # vector back-to-back on an escalated ANN query).  Each stage's
-            # took_ms is its own wall; the trace keeps the ladder order.
-            t1 = time.monotonic()
-            fz_fut = _Async(lambda: self.fuzzy_stage(query, k, opts).collect())
-            vec_fut = (
-                _Async(
-                    lambda: self._vector_stage_batch([0], {0: query}, opts)[0]
-                )
-                if self._have_vectors
-                else None
-            )
-            fz_rows = fz_fut.result()
-            fz_ms = (time.monotonic() - t1) * 1000
-            for r in fz_rows:
-                doc, sc = r["doc_id"], r["score"]
-                if doc not in lexical_best or sc > lexical_best[doc]:
-                    lexical_best[doc] = sc
-            trace.append(
-                SearchTraceStep(
-                    "FUZZY",
-                    len(fz_rows),
-                    max((r["score"] for r in fz_rows), default=0.0),
-                    fz_ms,
-                )
-            )
-            if vec_fut is not None:
-                vec_rows = vec_fut.result()
-                trace.append(
-                    SearchTraceStep(
-                        "SEMANTIC",
-                        len(vec_rows),
-                        max((r["score"] for r in vec_rows), default=0.0),
-                        (time.monotonic() - t1) * 1000,
-                        {"ann": self.ann_kind if self.ann_index_dir else "bruteforce"},
-                    )
-                )
-
-        top, use_vector = _fuse(lexical_best, ac_n, ac_best, vec_rows, opts)
-        result = local_frame(
-            spark,
-            [{"doc_id": d, "score": s} for d, s in top],
-            "doc_id long, score double",
-        )
-        trace.append(
-            SearchTraceStep(
-                "HYBRID", -1, ac_best, 0.0,
-                {"escalated": escalate, "vector_fallback_used": use_vector},
-            )
-        )
-        return result, trace
-
-    # -- batched msearch ladder --------------------------------------------
-
     def _expand_terms_batch(
         self, qids: list[int], qtext: dict[int, str], opts: SearchOpts
     ) -> list[dict]:
@@ -950,72 +701,71 @@ class HybridSearchPlan:
             )
         return self._expand_terms_driver(qids, qtext, opts, dict_terms)
 
-    def _merge_delta_fuzzy(
-        self,
-        fz_rows: dict[int, list[tuple[int, float]]],
-        expanded_rows: list,
-        tset,
-        k: int,
-    ) -> dict[int, list[tuple[int, float]]]:
-        """Overlay (round 6): the expanded terms also score against the
-        delta postings (delta's own stats + the same edit-ratio weights),
-        then each query's base ∪ delta keep-bests and truncates to k —
-        exactly fuzzy_stage()'s overlay + limit.  Shared by the
-        speculative fuzzy job and the fused AC+fuzzy path."""
-        if not expanded_rows or not self._delta_lex:
-            return fz_rows
-        from ..streaming.incremental import batch_delta_topk
-
-        delta_fz = batch_delta_topk(
-            self.docs.sparkSession, self.delta_postings,
-            [
-                (r["query_id"], r["term"], float(r["term_weight"]))
-                for r in expanded_rows
-            ],
-            sorted(tset), k=k, delta_stats=self.delta_stats,
-        ).collect()
-        if delta_fz:
-            for qid in fz_rows:
-                best: dict[int, float] = {}
-                for doc, sc in fz_rows[qid]:
-                    if doc not in best or sc > best[doc]:
-                        best[doc] = sc
-                for r in (x for x in delta_fz if x["query_id"] == qid):
-                    d, sc = r["doc_id"], r["score"]
-                    if d not in best or sc > best[d]:
-                        best[d] = sc
-                fz_rows[qid] = sorted(
-                    best.items(), key=lambda kv: (-kv[1], kv[0])
-                )[:k]
-        return fz_rows
-
-    def _indexed_batch_tops(
+    def _lexical_tops(
         self,
         entries: list[tuple[int, str]],
         k: int,
         override: list[tuple[int, str, float]] | None = None,
-        min_should_match: int | str = 1,
+        msm: int | str = 1,
     ) -> list[tuple[int, int, float]]:
-        """One scoring job over the plan's pre-grouped index cache →
-        each query id's exact top-k as (query_id, doc_id, score): the
-        task-local tops (≤ n_groups × ids × k rows) merged on the driver,
-        so the job plans no exchange at all (``batch_topk_indexed``'s
-        per-query window would add one, and a second job)."""
-        from .wand import batch_topk_local
+        """Every lexical stage's scoring: ONE job over the plan's standing
+        lexical caches → each query id's exact top-k (query_id, doc_id,
+        score) over base ∪ delta.  ``entries`` are tokenized (the AC
+        stage, ``msm`` its minimum_should_match); ``override`` adds
+        weighted (query_id, term, weight) ids (the fuzzy stage, fused into
+        the same job when both are given — ``operators.bm25.
+        batch_query_terms``).  Each cache — the base (the pre-grouped
+        compressed index, or the raw postings ⋈ df cache) and, while
+        attached, the delta's raw cache — is scored in place under its own
+        corpus statistics (the reference overlay semantics); the job
+        collects their task-local tops, and the driver keeps the best score
+        per (query, doc) and each query's k, so the job plans no
+        exchange."""
+        local = None
+        for score in (self._score_base, self._score_delta):
+            if score is None:
+                continue
+            part = score(
+                entries, k=k, query_terms_override=override,
+                min_should_match=msm,
+            ).select("query_id", "doc_id", "score")
+            local = part if local is None else local.unionByName(part)
+        best: dict[tuple[int, int], float] = {}
+        for q, doc, sc in local.collect():
+            if (q, doc) not in best or sc > best[(q, doc)]:
+                best[(q, doc)] = sc
+        return merge_local_topk(((q, d, s) for (q, d), s in best.items()), k)
 
-        local = batch_topk_local(
-            self.docs.sparkSession, self.index_dir, entries, k=k,
-            index_df=self.index_df, meta=self.index_meta,
-            query_terms_override=override, min_should_match=min_should_match,
-            n_groups=self._idx_n_groups, pre_grouped=True,
-        )
-        return merge_local_topk(
-            (
-                (r["query_id"], r["doc_id"], r["score"])
-                for r in local.select("query_id", "doc_id", "score").collect()
-            ),
-            k,
-        )
+    def _fuzzy_tops(
+        self,
+        targets: list[int],
+        qtext: dict[int, str],
+        opts: SearchOpts,
+        expanded: list[dict] | None = None,
+        cancel=None,
+    ) -> dict[int, list[tuple[int, float]]]:
+        """Stage 2 for a query set → per query id its top-k (doc_id,
+        score): the fuzzy expansion (``expanded``, when a speculative
+        expansion already produced it), each expanded term scored at its
+        edit-ratio weight through ``_lexical_tops``.  ``cancel``: an
+        abandoned speculation submits no job once it is set."""
+        rows: dict[int, list[tuple[int, float]]] = {q: [] for q in targets}
+        if not targets:
+            return rows
+        if expanded is None:
+            expanded = self._expand_terms_batch(targets, qtext, opts)
+        if cancel is not None and cancel.is_set():
+            return rows
+        tset = set(targets)
+        override = [
+            (r["query_id"], r["term"], float(r["term_weight"]))
+            for r in expanded
+            if r["query_id"] in tset
+        ]
+        if override:
+            for q, doc, sc in self._lexical_tops([], opts.top_k, override=override):
+                rows[q].append((doc, sc))
+        return rows
 
     # -- batched vector leg ---------------------------------------------
 
@@ -1109,6 +859,47 @@ class HybridSearchPlan:
         )
         return [(q, d, s, c, m) for q, d, c, s, m, has_doc in merged if has_doc]
 
+    # -- the ladder -------------------------------------------------------
+
+    def search(
+        self, query: str, opts: SearchOpts | None = None
+    ) -> tuple[DataFrame, list[SearchTraceStep]]:
+        """Run the adaptive ladder on one query → (results (doc_id, score),
+        trace): ``search_many``'s ladder on a batch of one."""
+        opts = opts or SearchOpts()
+        tops, stages, escalating, ms = self._ladder([(0, query)], opts)
+        top, use_vector = tops[0]
+
+        def step(name: str, scores: list[float], took: str, meta=None):
+            return SearchTraceStep(
+                name, len(scores), max(scores, default=0.0), ms[took], meta or {}
+            )
+
+        ac = step("AC", [s for _, s in stages["AC"][0]], "ac_ms")
+        trace = [ac]
+        if escalating:
+            trace.append(step("FUZZY", [s for _, s in stages["FUZZY"][0]], "fuzzy_ms"))
+            if self._have_vectors:
+                trace.append(
+                    step(
+                        "SEMANTIC", [r["score"] for r in stages["SEMANTIC"][0]],
+                        "vector_ms",
+                        {"ann": self.ann_kind if self.ann_index_dir else "bruteforce"},
+                    )
+                )
+        trace.append(
+            SearchTraceStep(
+                "HYBRID", -1, ac.best_score, 0.0,
+                {"escalated": bool(escalating), "vector_fallback_used": use_vector},
+            )
+        )
+        result = local_frame(
+            self.docs.sparkSession,
+            [{"doc_id": d, "score": s} for d, s in top],
+            "doc_id long, score double",
+        )
+        return result, trace
+
     def search_many(
         self, queries: list[tuple[int, str]], opts: SearchOpts | None = None
     ) -> tuple[DataFrame, dict[int, dict]]:
@@ -1118,217 +909,129 @@ class HybridSearchPlan:
         IVF vector index that is TWO jobs, neither with an exchange: the
         fused AC+fuzzy scoring job and the vector probe that reranks inside
         its tasks; both collect task-local tops the driver merges.
-        Per-query semantics are identical to ``search()`` (parity-tested);
-        returns ((query_id, doc_id, score, rank), {query_id: meta}).
+        ``search()`` is this ladder on a batch of one; returns ((query_id,
+        doc_id, score, rank), {query_id: meta}), and publishes the call's
+        per-stage wall times as ``self.last_batch_trace``."""
+        opts = opts or SearchOpts()
+        tops, _, escalating, ms = self._ladder(queries, opts)
+        eset = set(escalating)
+        out_rows = []
+        meta: dict[int, dict] = {}
+        for qid, _text in queries:
+            top, use_vector = tops[qid]
+            for rank, (doc, s) in enumerate(top, start=1):
+                out_rows.append(
+                    {"query_id": qid, "doc_id": doc, "score": s, "rank": rank}
+                )
+            meta[qid] = {"escalated": qid in eset, "vector_fallback_used": use_vector}
+        self.last_batch_trace = ms
+        result = local_frame(
+            self.docs.sparkSession,
+            out_rows, "query_id long, doc_id long, score double, rank int"
+        )
+        return result, meta
 
-        Per-query latency in ``search()`` is dominated by Spark's per-job
-        scheduling floor; batching amortizes it across the set — the same
-        argument ``operators.bm25.batch_topk`` makes for plain BM25."""
+    def _ladder(self, queries: list[tuple[int, str]], opts: SearchOpts):
+        """The ladder for a query set → (per query id (top-k (doc_id,
+        score), vector used), per stage name the per-query-id stage rows,
+        the escalating query ids, per-stage wall times in ms).
+
+        Speculation only when the set holds more than one query: then the
+        fuzzy expansion — and with it the fuzzy scoring — and, on an
+        ANN-served plan, the vector probe depend on the query texts only,
+        not on the AC outcome, so they run for ALL queries beside the AC
+        job and are kept for the escalating subset afterwards (per-query
+        results are independent, so the rows are identical).  With the
+        in-RAM dictionary the expansion is driver-only (~ms) and the fuzzy
+        scoring rides in the AC job itself (disjoint query-id spaces).  A
+        single query stays lazy: it builds no expansion and no driver
+        dictionary before AC and fuses nothing, so a strong query is one
+        job — speculating it cost a strong ``single_zipf`` query 910 ms
+        instead of 237.  The brute-force vector fallback is never
+        speculated: it scans the corpus."""
+        import threading
         import time
 
         from ..functions.normalize import fold_homoglyphs
-        from ..operators.bm25 import batch_topk
 
         t_start = time.monotonic()
-        # per-stage wall times build in a LOCAL dict and publish as a
-        # snapshot on return (self.last_batch_trace) — concurrent
-        # search_many calls on one plan each get a self-consistent trace,
-        # and an abandoned speculative thread can only write into its own
-        # call's local dict, never a later call's published one
+        # per-stage wall times build in a LOCAL dict returned as a snapshot:
+        # an abandoned speculative thread can only write into its own call's
+        # dict, and every such writer takes the lock, so publication never
+        # iterates a dict that is changing size
         trace: dict[str, float] = {}
-        import threading
-
-        # every speculative writer takes this lock for its trace insert,
-        # and publication snapshots under it — an abandoned thread that
-        # finishes after cancellation can no longer mutate the dict while
-        # the main thread iterates it (review finding, round 6)
         trace_lock = threading.Lock()
-        opts = opts or SearchOpts()
         k = opts.top_k
         spark = self.docs.sparkSession
         qtext = dict(queries)
-
-        # --- speculative fuzzy expansion, overlapped with AC ---------------
-        # The per-term dictionary expansion depends only on the query texts,
-        # not on the AC outcome — so it runs CONCURRENTLY with the AC job for
-        # ALL queries and is filtered to the escalating subset afterwards
-        # (identical rows: the expansion is per query).  Above the in-RAM
-        # cap its one candidate-probe job is wall-time-free (overlapped):
-        # one narrow filter over the cached dictionary.
-        # FUSED lexical path (round 7): when the in-RAM dictionary serves
-        # expansion (driver-only, ~ms), the fuzzy SCORING rides in the SAME
-        # batch job as the AC stage (disjoint query-id spaces, per-query
-        # independent scoring — row-identical to two jobs by construction).
-        # The two jobs previously scanned, shuffled and varint-decoded the
-        # SAME matched postings concurrently (960k profile: AC ~5.4 s +
-        # fuzzy ~6.3 s isolated, most of each being that shared work);
-        # fused, the postings pass is paid once (guide §1.2: remove
-        # passes/shuffles before tuning per-task work).
-        fuse_lex = (
-            opts.enable_escalation
-            and opts.speculative_fuzzy
-            and self.index_df is not None
-            and self._driver_dictionary() is not None
-        )
-        fused_expanded_rows: list = []
+        qids = [qid for qid, _ in queries]
+        speculate = opts.enable_escalation and len(queries) > 1
+        fuse_lex = speculate and self._driver_dictionary() is not None
+        expanded: list = []
         if fuse_lex:
             t_exp = time.monotonic()
-            fused_expanded_rows = self._expand_terms_batch(
-                [qid for qid, _ in queries], qtext, opts
-            )
-            with trace_lock:
-                trace["expansion_ms"] = (time.monotonic() - t_exp) * 1000
-        exp_fut = (
-            _Async(
+            expanded = self._expand_terms_batch(qids, qtext, opts)
+            trace["expansion_ms"] = (time.monotonic() - t_exp) * 1000
+
+        # a speculative stage runs under its OWN job group (job groups are
+        # thread-local, and it has its own thread) so an abandoned one can
+        # be CANCELLED; spec_cancel is set BEFORE cancelJobGroup, which does
+        # not reach jobs a thread still blocked upstream submits later
+        spec_cancel = threading.Event()
+        spec_groups: dict[str, str] = {}
+
+        def speculative(name: str, fn):
+            group = f"spec{name}-{next(_SPEC_GROUP_SEQ)}"
+            spec_groups[name] = group
+
+            def run():
+                spark.sparkContext.setJobGroup(
+                    group, f"speculative {name}", interruptOnCancel=True
+                )
+                return fn()
+
+            return _Async(_timed_into(trace, f"{name}_ms", run, lock=trace_lock))
+
+        fz_fut = vec_fut = None
+        if speculate and not fuse_lex:
+            # above the in-RAM cap the expansion is one candidate-probe job
+            exp_fut = _Async(
                 _timed_into(
                     trace, "expansion_ms",
-                    lambda: self._expand_terms_batch(
-                        [qid for qid, _ in queries], qtext, opts
-                    ),
+                    lambda: self._expand_terms_batch(qids, qtext, opts),
                     lock=trace_lock,
                 )
             )
-            if opts.enable_escalation and not fuse_lex
-            else None
-        )
-
-        # the speculative probe runs under its OWN job group (job groups are
-        # thread-local on the driver, and the probe has its own daemon
-        # thread) so an abandoned speculation can be CANCELLED instead of
-        # silently burning executor cores to completion with no consumer
-        # (review finding, round 5)
-        spec_group = f"specvec-{next(_SPEC_GROUP_SEQ)}"
-        # set BEFORE cancelJobGroup: a speculative thread still blocked on
-        # an upstream future would otherwise submit its jobs AFTER the
-        # cancellation (cancelJobGroup does not apply to later submissions)
-        import threading as _threading
-
-        spec_cancel = _threading.Event()
-
-        def _speculative_probe():
-            spark.sparkContext.setJobGroup(
-                spec_group, "speculative batched vector probe",
-                interruptOnCancel=True,
+            fz_fut = speculative(
+                "fuzzy",
+                lambda: self._fuzzy_tops(
+                    qids, qtext, opts, exp_fut.result(), spec_cancel
+                ),
             )
-            return self._vector_stage_batch(
-                [qid for qid, _ in queries], qtext, opts, cancel=spec_cancel
+        if speculate and self.ann_index_dir is not None:
+            vec_fut = speculative(
+                "vector",
+                lambda: self._vector_stage_batch(qids, qtext, opts, spec_cancel),
             )
 
-        vec_fut = (
-            _Async(_timed_into(trace, "vector_ms", _speculative_probe, lock=trace_lock))
-            # ANN-served probes only: the brute-force fallback is an
-            # O(corpus) scan and must not run for queries that may never
-            # escalate (review finding, round 4)
-            if opts.speculative_vector and opts.enable_escalation
-            and self.ann_index_dir is not None
-            else None
-        )
-
-        # --- stage 2 scoring, speculative (round 6): the fuzzy SCORING job
-        # depends only on the expansion result, never on AC — chaining it
-        # off exp_fut at t0 takes the last post-AC stage off the critical
-        # path (960k profile: wall was AC + fuzzy with vector already
-        # overlapped).  Per-query scoring is independent, so the post-AC
-        # filter to the escalating subset returns exactly what scoring only
-        # that subset would have.
-        def _fuzzy_stage_batch(
-            targets: list[int],
-            cancel=None,
-        ) -> dict[int, list[tuple[int, float]]]:
-            from pyspark.sql import Window
-
-            fz_rows: dict[int, list[tuple[int, float]]] = {q: [] for q in targets}
-            if not targets or exp_fut is None:
-                return fz_rows
-            tset = set(targets)
-            expanded_rows = [
-                r for r in exp_fut.result() if r["query_id"] in tset
-            ]
-            # the speculative thread blocks on the expansion future ABOVE —
-            # cancelJobGroup only kills ACTIVE jobs, so a cancellation that
-            # arrived while we waited must stop us from SUBMITTING the
-            # scoring jobs now (they would run to completion unconsumed)
-            if cancel is not None and cancel.is_set():
-                return fz_rows
-            if expanded_rows and self.index_df is not None:
-                # weighted batch scoring straight off the compressed
-                # index: the chunk-group Arrow scorer multiplies each
-                # expanded term's contribution by its edit-ratio weight
-                for q, doc, sc in self._indexed_batch_tops(
-                    [], k,
-                    override=[
-                        (r["query_id"], r["term"], float(r["term_weight"]))
-                        for r in expanded_rows
-                    ],
-                ):
-                    fz_rows[q].append((doc, sc))
-            elif expanded_rows:
-                all_terms = sorted({r["term"] for r in expanded_rows})
-                scored = score_terms(
-                    self.postings, self.dl, all_terms, self.stats
-                )
-                wdf = local_frame(
-                    spark,
-                    [
-                        (r["query_id"], r["term"], float(r["term_weight"]))
-                        for r in expanded_rows
-                    ],
-                    "query_id long, term string, term_weight double",
-                )
-                w2 = Window.partitionBy("query_id").orderBy(
-                    F.desc("score"), F.asc("doc_id")
-                )
-                fz_all = (
-                    scored.join(F.broadcast(wdf), "term")
-                    .withColumn(
-                        "term_score", F.col("term_score") * F.col("term_weight")
-                    )
-                    .groupBy("query_id", "doc_id")
-                    .agg(F.sum("term_score").alias("score"))
-                    .withColumn("rn", F.row_number().over(w2))
-                    .where(F.col("rn") <= k)
-                    .collect()
-                )
-                for r in fz_all:
-                    fz_rows[r["query_id"]].append((r["doc_id"], r["score"]))
-            if cancel is not None and cancel.is_set():
-                return fz_rows  # abandoned: skip the delta scoring job too
-            return self._merge_delta_fuzzy(fz_rows, expanded_rows, tset, k)
-
-        spec_fz_group = f"specfz-{next(_SPEC_GROUP_SEQ)}"
-
-        def _speculative_fuzzy():
-            spark.sparkContext.setJobGroup(
-                spec_fz_group, "speculative batched fuzzy scoring",
-                interruptOnCancel=True,
-            )
-            return _fuzzy_stage_batch(
-                [qid for qid, _ in queries], cancel=spec_cancel
-            )
-
-        fz_fut = (
-            _Async(_timed_into(trace, "fuzzy_ms", _speculative_fuzzy, lock=trace_lock))
-            if opts.speculative_fuzzy and opts.enable_escalation
-            and not fuse_lex
-            else None
-        )
-
-        # --- stage 1: batched AC (+ homoglyph variants as extra entries) ---
+        # --- stage 1: AC (+ homoglyph variants as extra entries) ----------
+        # homoglyph permutation search (reference: _handle_search_layer
+        # multi-search, unified_orchestrator.py:647-731): a mixed-script
+        # query also searches its folded variant, keep-best per doc
         entries = list(queries)
         variant_of: dict[int, int] = {}
-        next_id = max((q for q, _ in queries), default=0) + 1
+        next_id = max(qids, default=0) + 1
         for qid, text in queries:
             folded, n_folds = fold_homoglyphs(text)
             if n_folds > 0 and folded != text:
                 entries.append((next_id, folded))
                 variant_of[next_id] = qid
                 next_id += 1
-        # driver-dictionary entry pruning (mirrors ac_stage): entries with
-        # no dictionary-present term — or an unattainable resolved
-        # minimum_should_match — contribute no rows, so they are dropped
-        # from the batch job (and the job itself is skipped when nothing
-        # remains); msm resolves against each entry's ORIGINAL distinct
-        # token count, so filter semantics are unchanged
+        # driver-dictionary pruning, once the dictionary view exists: an
+        # entry with no dictionary-present term — or an unattainable
+        # resolved minimum_should_match — has no postings anywhere, so it
+        # leaves the job (skipped when nothing remains); msm resolves
+        # against each entry's ORIGINAL distinct token count
         run_entries = entries
         dset = self._dict_present_set()
         if dset is not None:
@@ -1337,133 +1040,72 @@ class HybridSearchPlan:
             def _runnable(text: str) -> bool:
                 toks = list(dict.fromkeys(query_terms(text)))
                 present = sum(1 for t in toks if t in dset)
-                if present == 0:
-                    return False
-                return es_min_should_match(
+                return present > 0 and es_min_should_match(
                     opts.min_should_match, len(toks)
                 ) <= present
 
             run_entries = [e for e in entries if _runnable(e[1])]
-        fused_fz_rows: dict[int, list[tuple[int, float]]] = {}
-        if self.index_df is not None:
-            ovr = None
-            fz_off = 0
-            if fuse_lex and fused_expanded_rows:
-                # fuzzy ids ride above every entry id (offset shifted past
-                # negative query ids too) so the fused job's rows split
-                # back unambiguously
-                max_entry = max(q for q, _ in entries)
-                min_qid = min(q for q, _ in queries)
-                fz_off = max_entry + 1 - min(0, min_qid)
-                ovr = [
-                    (r["query_id"] + fz_off, r["term"],
-                     float(r["term_weight"]))
-                    for r in fused_expanded_rows
-                ]
-            if not run_entries and ovr is None:
-                ac_fz_all = []  # nothing can match: zero-job AC stage
-            else:
-                ac_fz_all = self._indexed_batch_tops(
-                    run_entries, k, override=ovr,
-                    # no tokenized entries left ⇒ msm is moot (override ids
-                    # always keep minimum 1, and passing a real msm with an
-                    # override-only call is rejected by contract)
-                    min_should_match=(
-                        opts.min_should_match if run_entries else 1
-                    ),
-                )
-            if ovr is not None:
-                max_entry = max(q for q, _ in entries)
-                ac_all = [r for r in ac_fz_all if r[0] <= max_entry]
-                fused_fz_rows = {qid: [] for qid, _ in queries}
-                for q, doc, sc in ac_fz_all:
-                    if q > max_entry:
-                        fused_fz_rows[q - fz_off].append((doc, sc))
-            else:
-                ac_all = ac_fz_all
-                if fuse_lex:
-                    fused_fz_rows = {qid: [] for qid, _ in queries}
-        elif run_entries:
-            ac_all = [
-                (r["query_id"], r["doc_id"], r["score"])
-                for r in batch_topk(
-                    self.docs, run_entries, k=k, text_col=self.text_col,
-                    postings=self.postings, stats=self.stats,
-                    min_should_match=opts.min_should_match,
-                ).select("query_id", "doc_id", "score").collect()
+        max_entry = max((q for q, _ in entries), default=0)
+        override = None
+        fz_off = 0
+        if expanded:
+            # fuzzy ids ride above every entry id (shifted past negative
+            # query ids too), so the fused job's rows split back
+            fz_off = max_entry + 1 - min(0, min(qids))
+            override = [
+                (r["query_id"] + fz_off, r["term"], float(r["term_weight"]))
+                for r in expanded
             ]
-        else:
-            ac_all = []  # nothing can match: zero-job AC stage
-        # per-ENTRY overlay first (base ∪ delta keep-best, truncated to k —
-        # exactly ac_stage()'s limit), THEN the homoglyph-variant merge:
-        # matching search()'s truncation order keeps single↔batch parity
-        # even for docs at rank k+1 that the vector stage would later fuse
-        entry_best: dict[int, dict[int, float]] = {q: {} for q, _ in entries}
-        for q, doc, sc in ac_all:
-            cur = entry_best[q]
-            if doc not in cur or sc > cur[doc]:
-                cur[doc] = sc
-        if self._delta_lex:
-            from ..functions.tokenize import py_index_tokens
-            from ..streaming.incremental import batch_delta_topk
-
-            weighted = [
-                (qid, t, 1.0)
-                for qid, q in entries
-                for t in dict.fromkeys(py_index_tokens(q))
-            ]
-            from ..operators.bm25 import es_min_should_match
-
-            msm_per_qid = {
-                qid: es_min_should_match(
-                    opts.min_should_match,
-                    len(dict.fromkeys(py_index_tokens(q))),
-                )
-                for qid, q in entries
-            }
-            for r in batch_delta_topk(
-                spark, self.delta_postings, weighted,
-                [qid for qid, _ in entries], k=k,
-                delta_stats=self.delta_stats,
-                min_match_per_qid=msm_per_qid,
-            ).collect():
-                cur = entry_best[r["query_id"]]
-                if r["doc_id"] not in cur or r["score"] > cur[r["doc_id"]]:
-                    cur[r["doc_id"]] = r["score"]
-        ac_best_rows: dict[int, dict[int, float]] = {q: {} for q, _ in queries}
-        for eqid, best in entry_best.items():
-            qid = variant_of.get(eqid, eqid)
-            cur = ac_best_rows[qid]
-            for doc, sc in sorted(best.items(), key=lambda kv: (-kv[1], kv[0]))[:k]:
+        lex = (
+            self._lexical_tops(
+                run_entries, k, override,
+                # override-only: msm is moot (and rejected by contract)
+                opts.min_should_match if run_entries else 1,
+            )
+            if run_entries or override
+            else []
+        )
+        entry_rows: dict[int, list[tuple[int, float]]] = {q: [] for q, _ in entries}
+        fused_fz: dict[int, list[tuple[int, float]]] = {q: [] for q in qids}
+        for q, doc, sc in lex:
+            if q > max_entry:
+                fused_fz[q - fz_off].append((doc, sc))
+            else:
+                entry_rows[q].append((doc, sc))
+        # each entry is already its own top-k over base ∪ delta; the
+        # variant merge keeps the best per doc, then k
+        ac_best: dict[int, dict[int, float]] = {q: {} for q in qids}
+        for eqid, rows in entry_rows.items():
+            cur = ac_best[variant_of.get(eqid, eqid)]
+            for doc, sc in rows:
                 if doc not in cur or sc > cur[doc]:
                     cur[doc] = sc
         ac_rows = {
             qid: sorted(best.items(), key=lambda kv: (-kv[1], kv[0]))[:k]
-            for qid, best in ac_best_rows.items()
+            for qid, best in ac_best.items()
         }
-
         trace["ac_ms"] = (time.monotonic() - t_start) * 1000
 
+        # escalation decision (_should_escalate, hybrid_search_service.py:912-928)
         escalating = [
-            qid for qid, _ in queries
+            qid for qid in qids
             if opts.enable_escalation and (
                 not ac_rows[qid]
                 or max(s for _, s in ac_rows[qid]) < opts.escalation_threshold
             )
         ]
 
-        # --- stages 2+3: both futures may already be in flight (speculative,
-        # launched at t0); lazy fallbacks cover the non-speculative opts.
-        # Wall time is max(AC, expansion+fuzzy, vector), not the sum.
-        if fz_fut is None and escalating and not fuse_lex:
+        # --- stages 2+3: independent given the escalation decision, so they
+        # run concurrently; wall time is max(fuzzy, vector), not the sum
+        if escalating and not speculate:
             fz_fut = _Async(
                 _timed_into(
                     trace, "fuzzy_ms",
-                    lambda: _fuzzy_stage_batch(escalating),
+                    lambda: self._fuzzy_tops(escalating, qtext, opts),
                     lock=trace_lock,
                 )
             )
-        if vec_fut is None and escalating:
+        if escalating and vec_fut is None and self._have_vectors:
             vec_fut = _Async(
                 _timed_into(
                     trace, "vector_ms",
@@ -1471,80 +1113,31 @@ class HybridSearchPlan:
                     lock=trace_lock,
                 )
             )
-        suppress_vec_trace = suppress_fz_trace = False
-        if not escalating:
-            # nothing escalated: don't block on the speculative stages at
-            # all — a future launched before the AC result existed is
-            # abandoned AND its in-flight Spark jobs cancelled via its job
-            # group, so the dead work stops consuming executor cores; the
-            # cancellation exception stays inside the never-joined daemon
-            # thread and the stage's ms never lands in the trace (review
-            # findings, round 5)
-            spec_cancel.set()  # stops NOT-YET-SUBMITTED speculative jobs
+        fz_rows: dict[int, list[tuple[int, float]]] = {}
+        vec_rows: dict[int, list[dict]] = {}
+        if escalating:
+            fz_all = fused_fz if fz_fut is None else fz_fut.result()
+            fz_rows = {q: fz_all.get(q, []) for q in escalating}
             if vec_fut is not None:
-                spark.sparkContext.cancelJobGroup(spec_group)
-                suppress_vec_trace = True
-            if fz_fut is not None:
-                spark.sparkContext.cancelJobGroup(spec_fz_group)
-                suppress_fz_trace = True
-            vec_rows: dict[int, list] = {}
-            fz_rows: dict[int, list[tuple[int, float]]] = {}
+                vec_all = vec_fut.result()
+                vec_rows = {q: vec_all.get(q, []) for q in escalating}
         else:
-            # speculative results cover ALL queries — keep only the
-            # escalating subset so gating sees exactly what search() would
-            # have computed
-            if fuse_lex:
-                # fused results cover ALL queries — keep the escalating
-                # subset, then apply the delta-overlay merge exactly as the
-                # speculative fuzzy job would have
-                eset = set(escalating)
-                fz_rows = self._merge_delta_fuzzy(
-                    {q: fused_fz_rows.get(q, []) for q in escalating},
-                    [
-                        r for r in fused_expanded_rows
-                        if r["query_id"] in eset
-                    ],
-                    eset, k,
-                )
-            else:
-                fz_all_res = fz_fut.result() if fz_fut is not None else {}
-                fz_rows = {q: fz_all_res.get(q, []) for q in escalating}
-            vec_all = vec_fut.result()
-            vec_rows = {q: vec_all.get(q, []) for q in escalating}
+            # nothing escalated: the speculative stages are abandoned, not
+            # joined, and their in-flight jobs cancelled; their wall times
+            # stay out of the trace
+            spec_cancel.set()
+            for group in spec_groups.values():
+                spark.sparkContext.cancelJobGroup(group)
 
-        # --- driver-side gating + boosts + fusion per query -----------------
-        out_rows = []
-        meta: dict[int, dict] = {}
-        for qid, _text in queries:
-            lexical_best: dict[int, float] = dict(ac_rows[qid])
-            for doc, sc in fz_rows.get(qid, []):
-                if doc not in lexical_best or sc > lexical_best[doc]:
-                    lexical_best[doc] = sc
-            top, use_vector = _fuse(
-                lexical_best, len(ac_rows[qid]),
-                max((s for _, s in ac_rows[qid]), default=0.0),
-                vec_rows.get(qid, []), opts,
-            )
-            for rank, (doc, s) in enumerate(top, start=1):
-                out_rows.append(
-                    {"query_id": qid, "doc_id": doc, "score": s, "rank": rank}
-                )
-            meta[qid] = {
-                "escalated": qid in escalating,
-                "vector_fallback_used": use_vector,
-            }
-        result = local_frame(
-            spark,
-            out_rows, "query_id long, doc_id long, score double, rank int"
-        )
+        tops = {
+            qid: _fuse(ac_rows[qid], fz_rows.get(qid, []), vec_rows.get(qid, []), opts)
+            for qid in qids
+        }
         with trace_lock:
             trace["total_ms"] = (time.monotonic() - t_start) * 1000
-            self.last_batch_trace = {
-                k: v
-                for k, v in trace.items()
-                if not (
-                    (suppress_vec_trace and k == "vector_ms")
-                    or (suppress_fz_trace and k == "fuzzy_ms")
-                )
+            ms = {
+                name: v for name, v in trace.items()
+                if escalating or name.removesuffix("_ms") not in spec_groups
             }
-        return result, meta
+        stages = {"AC": ac_rows, "FUZZY": fz_rows, "SEMANTIC": vec_rows}
+        return tops, stages, escalating, ms

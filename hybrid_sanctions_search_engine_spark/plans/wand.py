@@ -17,9 +17,8 @@ over our own index):
  4. surviving chunks are scored in parallel (`applyInPandas` per chunk:
     varint-decode gaps, sum float64 contributions with np.bincount, local
     top-k), then merged with a global TakeOrderedAndProject.  A standing
-    plan's index is cached with whole chunks per partition, so its
-    single-query calls score that cache in place instead (``pre_grouped``:
-    one wave of ``mapInPandas`` tasks, no exchange).
+    plan scores its cached index in place instead, every query shape
+    through ``batch_topk_local(pre_grouped=True)``.
 
 Rank-identity vs the uncompressed DataFrame BM25 plan is asserted in
 tests/test_wand.py.
@@ -127,59 +126,6 @@ def _score_chunks(
 SCORE_COLS = ["term", "chunk", "df", "n_docs", "doc_gaps", "tfs", "doc_lens"]
 
 
-def _score_pre_grouped(
-    k: int,
-    meta: IndexMeta,
-    terms: list[str],
-    term_weights: dict[str, float] | None = None,
-    min_match: int = 1,
-):
-    """Single-query ``mapInPandas`` scorer over a cache whose partitions each
-    hold whole chunks (a standing plan's ``pmod(chunk, n_groups)`` layout),
-    coalesced into fewer tasks.  Rows carry their cached partition id in
-    ``part``; coalescing concatenates whole cached partitions, so each
-    partition's rows arrive contiguously and are scored — as one batch of
-    one query through ``make_batch_group_scorer`` — as soon as the next
-    partition's rows start.  Per-task memory stays at one cached
-    partition's postings.
-
-    Same per-doc results as ``_score_chunks`` over the same rows: the cache
-    is term-sorted within partitions, so both sum each doc's contributions
-    in term order (bit-parity pinned by tests/test_wand.py)."""
-    from ..operators.bm25 import make_batch_group_scorer
-    from ..sources.index_io import decode_shard_arrays
-
-    weights = term_weights or {}
-    score_group = make_batch_group_scorer(
-        {t: [(0, weights.get(t, 1.0))] for t in dict.fromkeys(terms)},
-        [0], meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
-        flatten=lambda pdf: decode_shard_arrays(pdf, include_df=True),
-        min_match_per_qidx=[min_match],
-    )
-
-    def flush(parts: list) -> pd.DataFrame:
-        out = score_group(None, pd.concat(parts, ignore_index=True))
-        return out[["doc_id", "score", "n_terms_matched"]]
-
-    def score(batches):
-        held, held_part = [], None
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            parts = pdf["part"].to_numpy()
-            cuts = (np.flatnonzero(parts[1:] != parts[:-1]) + 1).tolist()
-            for lo, hi in zip([0, *cuts], [*cuts, len(pdf)]):
-                if held and parts[lo] != held_part:
-                    yield flush(held)
-                    held = []
-                held_part = parts[lo]
-                held.append(pdf.iloc[lo:hi])
-        if held:
-            yield flush(held)
-
-    return score
-
-
 def query_terms(query: str) -> list[str]:
     return py_index_tokens(query)
 
@@ -197,7 +143,6 @@ def topk_search(
     stats_out: dict | None = None,
     min_should_match: int | str = 1,
     one_shot_chunks: int = 64,
-    pre_grouped: bool = False,
 ) -> DataFrame:
     """Exact top-k BM25 over the compressed index → (doc_id, score,
     n_terms_matched) ordered (score desc, doc_id asc).
@@ -217,14 +162,7 @@ def topk_search(
     ``chunks_total`` (candidate chunks), ``chunks_scored`` (seed +
     survivors actually decoded), ``theta`` (the k-th seed score used as
     the pruning threshold).  Drives the Zipf-corpus pruning-effectiveness
-    bench (uniform corpora measure ~100% survival; see BENCH.md).
-
-    ``pre_grouped``: every partition of ``index_df`` holds whole chunks (a
-    standing plan caches its index on ``pmod(chunk, n_groups)``).  The
-    one-shot branch then scores the cache in place — filter, coalesce to
-    ``defaultParallelism``, one ``mapInPandas`` (``_score_pre_grouped``) —
-    as one job with no exchange and at most one wave of Python tasks,
-    instead of shuffling the matched rows by chunk."""
+    bench (uniform corpora measure ~100% survival; see BENCH.md)."""
     if index_df is None or meta is None:
         index_df, meta = load_index(spark, index_dir)
     terms = query_terms(query) if isinstance(query, str) else list(query)
@@ -250,29 +188,16 @@ def topk_search(
     # probing path.
     est_chunks = max(1, int(meta.n_docs) >> meta.chunk_bits)
     if stats_out is None and est_chunks <= max(seed_chunks * 2, one_shot_chunks):
-        if pre_grouped:
-            # coalesce, not a groupBy over the cache's n_groups: each
-            # Python task costs ~40-60 ms of a core whatever its work, so
-            # one wave of tasks beats 2 × defaultParallelism of them
-            scored = (
-                matched.select(*SCORE_COLS, F.spark_partition_id().alias("part"))
-                .coalesce(par)
-                .mapInPandas(
-                    _score_pre_grouped(k, meta, terms, term_weights, msm_n),
-                    RESULT_SCHEMA,
-                )
+        scored = (
+            group_partitioned(
+                matched, F.col("chunk"), max(1, min(est_chunks, par * 2))
             )
-        else:
-            scored = (
-                group_partitioned(
-                    matched, F.col("chunk"), max(1, min(est_chunks, par * 2))
-                )
-                .groupBy("chunk")
-                .applyInPandas(
-                    _score_chunks(k, meta, term_weights, min_match=msm_n),
-                    RESULT_SCHEMA,
-                )
+            .groupBy("chunk")
+            .applyInPandas(
+                _score_chunks(k, meta, term_weights, min_match=msm_n),
+                RESULT_SCHEMA,
             )
+        )
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     # Chunk upper bounds from block metadata only (no binary decode), kept
@@ -492,99 +417,50 @@ def batch_topk_local(
     Memory note: the accumulator is dense in the query set (8 B × local docs
     × nq per task) — split query sets of many thousands into sub-batches.
 
-    ``query_terms_override``: explicit (query_id, term, weight) triples
-    instead of tokenizing ``queries`` — each term's BM25 contribution is
-    multiplied by its weight (the batched fuzzy-expansion shape, where an
-    expanded term contributes at its edit-ratio discount).  When BOTH
-    ``queries`` and ``query_terms_override`` are given (the fused
-    AC+fuzzy serving shape — one scan/decode pass instead of two jobs over
-    the same postings), the two query-id spaces must be DISJOINT; each id
-    is scored independently, so the fused result is row-identical to
-    running the two jobs separately.
+    ``query_terms_override`` / ``min_should_match``: explicit weighted
+    (query_id, term, weight) triples beside or instead of the tokenized
+    ``queries``, and the ES minimum_should_match of the tokenized ones
+    (``operators.bm25.batch_query_terms`` holds the rules).
 
-    ``min_should_match`` (ES semantics, resolved PER QUERY against its own
-    distinct-term count) applies only to the tokenized ``queries`` — for
-    ``query_terms_override`` ids the per-doc count tallies matched
-    expansion VARIANTS, not original query terms, so a minimum over it
-    would be meaningless: override-only calls reject the parameter, and
-    fused calls apply it to the tokenized ids only (override ids keep
-    minimum 1)."""
+    ``pre_grouped``: every partition of ``index_df`` holds whole chunks (a
+    standing plan caches its index on ``pmod(chunk, batch_n_groups(…))``,
+    term-sorted).  The cache is then scored in place
+    (``operators.bm25.topk_pre_grouped``): one job, no exchange, at most
+    ``defaultParallelism`` Python tasks, and ``n_groups`` plays no part.
+    Without it the matched rows shuffle to ``n_groups`` chunk groups."""
+    from ..operators.bm25 import (
+        batch_query_terms,
+        make_batch_group_scorer,
+        topk_pre_grouped,
+    )
     from ..sources.index_io import decode_shard_arrays
 
     if index_df is None or meta is None:
         index_df, meta = load_index(spark, index_dir)
-    tok_triples = [
-        (qid, t, 1.0)
-        for qid, q in queries
-        for t in dict.fromkeys(py_index_tokens(q))
-    ]
-    tok_qids = [qid for qid, _ in queries]
-    if query_terms_override is not None:
-        ovr = list(query_terms_override)
-        ovr_qids = [
-            q for q in dict.fromkeys(q for q, _, _ in ovr)
-        ]
-        if queries and set(ovr_qids) & set(tok_qids):
-            raise ValueError(
-                "fused batch: override query ids must be disjoint from "
-                "tokenized query ids"
-            )
-        triples = tok_triples + ovr
-        qid_list = tok_qids + ovr_qids
-    else:
-        triples = tok_triples
-        qid_list = tok_qids
-    if not triples:
+    spec = batch_query_terms(queries, query_terms_override, min_should_match)
+    if spec is None:
         return local_frame(spark, [], BATCH_SCORE_SCHEMA)
-    all_terms = sorted({t for _, t, _ in triples})
-    qidx = {qid: i for i, qid in enumerate(qid_list)}
-    term_to_qidx: dict[str, list[tuple[int, float]]] = {}
-    for qid, t, wgt in triples:
-        term_to_qidx.setdefault(t, []).append((qidx[qid], float(wgt)))
+    qid_list, term_to_qidx, msm_arr = spec
+    all_terms = sorted(term_to_qidx)
     shard_of = _shard_of_terms(all_terms, meta.n_shards)
     shards = sorted(set(shard_of.values()))
     matched = index_df.where(
         F.col("shard").isin(shards) & F.col("term").isin(all_terms)
     ).select(*SCORE_COLS)
-    if n_groups is None:
-        n_groups = batch_n_groups(spark, meta)
-
-    from ..operators.bm25 import es_min_should_match, make_batch_group_scorer
-
-    msm_arr = None
-    if min_should_match != 1:
-        if query_terms_override is not None and not queries:
-            raise ValueError(
-                "min_should_match cannot combine with query_terms_override"
-            )
-        n_terms_of = {
-            qid: len(dict.fromkeys(py_index_tokens(q))) for qid, q in queries
-        }
-        # override (fuzzy-expansion) ids always keep minimum 1: their
-        # per-doc counts tally matched VARIANTS, not query terms
-        msm_arr = [
-            es_min_should_match(min_should_match, n_terms_of[qid])
-            if qid in n_terms_of
-            else 1
-            for qid in qid_list
-        ]
     score_group = make_batch_group_scorer(
         term_to_qidx, qid_list, meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
         flatten=lambda pdf: decode_shard_arrays(pdf, include_df=True),
         min_match_per_qidx=msm_arr,
     )
+    if pre_grouped:
+        return topk_pre_grouped(matched, score_group)
+    if n_groups is None:
+        n_groups = batch_n_groups(spark, meta)
     grp_key = F.pmod(F.col("chunk"), F.lit(n_groups))
-    # ``pre_grouped``: the caller's index_df is ALREADY hash-partitioned on
-    # this exact group key (a standing plan caches it that way, with the
-    # same batch_n_groups count) — the groupBy's ClusteredDistribution is
-    # then satisfied by the cached layout and Catalyst plans NO exchange
-    # (asserted in tests/test_wand.py), so the per-batch job skips the
-    # shuffle write+read of the matched posting blobs entirely (guide
-    # §2.4: two operations keyed the same way share one exchange; here the
-    # exchange moved into the one-time cache materialization).
-    src = matched if pre_grouped else group_partitioned(matched, grp_key, n_groups)
-    return src.groupBy(grp_key.alias("grp")).applyInPandas(
-        score_group, BATCH_SCORE_SCHEMA
+    return (
+        group_partitioned(matched, grp_key, n_groups)
+        .groupBy(grp_key.alias("grp"))
+        .applyInPandas(score_group, BATCH_SCORE_SCHEMA)
     )
 
 

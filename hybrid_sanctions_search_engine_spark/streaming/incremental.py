@@ -9,10 +9,10 @@ watchlist_index_service.py:64-222, 387-456``).  The Spark-native equivalent:
     query tokenizes them (same JVM expressions as the batch build) and appends
     postings to a **delta postings table** (parquet, partitioned by shard)
     under exactly-once file-sink semantics (checkpointed).
-  * queries run against base index ∪ delta: base via the compressed WAND
-    path, delta via the DataFrame BM25 plan, merged keep-best per doc
-    (SO4 semantics — each side scored under its own corpus stats, exactly
-    like the reference overlay).
+  * queries run against base index ∪ delta through a standing plan
+    (``plans.hybrid.HybridSearchPlan.attach_delta``): each side scored in
+    place on its own cache under its own corpus stats, merged keep-best
+    per doc (SO4 semantics, exactly like the reference overlay).
   * ``compact_delta`` folds the delta into the main index by rebuilding only
     the shards the delta touches (tree-wise merge of sorted posting runs) and
     then truncating the delta — the reference's atomic swap.
@@ -26,11 +26,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.fusion import dedup_keep_best
 from ..operators.postings import build_postings
-from ..plans.wand import topk_search
 from ..sources.index_io import IndexMeta
-from ..sources.tables import local_frame
 
 
 def start_delta_stream(
@@ -606,261 +603,6 @@ def load_delta_postings(spark: SparkSession, delta_dir: str) -> DataFrame | None
         return None
 
 
-def delta_bm25_topk(
-    delta_postings: DataFrame,
-    query: str | list[str],
-    k: int = 10,
-    k1: float = 1.2,
-    b: float = 0.75,
-    delta_stats: tuple[int, float] | None = None,
-    term_weights: dict[str, float] | None = None,
-    min_should_match: int | str = 1,
-) -> DataFrame:
-    """BM25 top-k directly over streamed delta postings
-    (term, doc_id, doc_len, tf) — stats from the delta manifest when the
-    caller passes them (``load_delta_stats``), else derived with one
-    distinct().agg() job.
-
-    ``query`` may be a raw string or a pre-expanded term list;
-    ``term_weights`` multiplies each term's contribution (the fuzzy stage's
-    edit-ratio discount — same contract as ``wand.topk_search``).
-    ``min_should_match`` (ES semantics) keeps the OVERLAY side consistent
-    with the base index's filter — both sides of the keep-best union must
-    qualify docs identically or the overlay admits under-matched docs."""
-    from ..plans.wand import query_terms
-
-    terms = query_terms(query) if isinstance(query, str) else list(query)
-    if delta_stats is not None:
-        n_docs, avgdl = int(delta_stats[0]), float(delta_stats[1] or 1.0)
-    else:
-        docs_dl = delta_postings.select("doc_id", "doc_len").distinct()
-        row = docs_dl.agg(
-            F.count("*").alias("n"), F.avg("doc_len").alias("avgdl")
-        ).collect()[0]
-        n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 1.0)
-    from pyspark.sql import Window
-
-    # df via a count window over the matched rows' term partition — the
-    # broadcast aggregate subquery it replaces re-evaluated the delta
-    # postings subtree a second time per overlay query
-    matched = delta_postings.where(F.col("term").isin(terms))
-    dfc = F.count(F.lit(1)).over(Window.partitionBy("term")).cast("double")
-    scored = (
-        matched.withColumn("df", dfc)
-        .withColumn(
-            "term_score",
-            F.log(F.lit(1.0) + (F.lit(float(n_docs)) - F.col("df") + 0.5) / (F.col("df") + 0.5))
-            * (F.col("tf") * (k1 + 1.0))
-            / (F.col("tf") + k1 * (1.0 - b + b * F.col("doc_len") / F.lit(avgdl))),
-        )
-    )
-    if term_weights is not None:
-        spark = delta_postings.sparkSession
-        wdf = local_frame(
-            spark,
-            [(t, float(w)) for t, w in term_weights.items()],
-            "term string, term_weight double",
-        )
-        # LEFT join + coalesce(1.0): terms absent from the dict keep full
-        # weight, matching wand's `term_weights.get(term, 1.0)` contract —
-        # an inner join silently DROPPED unweighted matched terms (round-6
-        # review finding)
-        scored = scored.join(F.broadcast(wdf), "term", "left").withColumn(
-            "term_score",
-            F.col("term_score") * F.coalesce(F.col("term_weight"), F.lit(1.0)),
-        )
-    agg = scored.groupBy("doc_id").agg(
-        F.sum("term_score").alias("score"),
-        F.count("*").cast("int").alias("n_terms_matched"),
-    )
-    from ..operators.bm25 import es_min_should_match
-
-    # distinct count (same rule as bm25_topk / wand.topk_search): ES counts
-    # duplicate clauses as matched, and n_terms_matched tallies distinct
-    # terms — the overlay must qualify docs exactly like the base side
-    msm = es_min_should_match(min_should_match, len(dict.fromkeys(terms)))
-    if msm > 1:
-        agg = agg.where(F.col("n_terms_matched") >= msm)
-    return (
-        agg.select("doc_id", "score")
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(k)
-    )
-
-
-def batch_delta_topk(
-    spark: SparkSession,
-    delta_postings: DataFrame,
-    weighted_terms: list[tuple[int, str, float]],
-    qid_list: list[int],
-    k: int = 10,
-    delta_stats: tuple[int, float] | None = None,
-    k1: float = 1.2,
-    b: float = 0.75,
-    min_match_per_qid: dict[int, int] | None = None,
-) -> DataFrame:
-    """Whole-query-set BM25 over the delta postings in ONE Arrow-scored job
-    → (query_id, doc_id, score), k-bounded per query.
-
-    ``weighted_terms``: (query_id, term, weight) rows — weight 1.0 for plain
-    msearch, edit-ratio discounts for the batched fuzzy stage.  The scorer
-    is the same dense local-docs × queries numpy block as the base index's
-    (``make_batch_group_scorer``), with ``group_partitioned`` keeping AQE
-    from collapsing the scoring shuffle to one task.
-
-    ``min_match_per_qid``: per-query RESOLVED minimum matched-term counts
-    (ES minimum_should_match) — only meaningful for weight-1.0 exact terms,
-    where matched rows tally matched query terms."""
-    from ..operators.bm25 import (
-        BATCH_SCORE_SCHEMA,
-        group_partitioned,
-        make_batch_group_scorer,
-    )
-
-    if not weighted_terms:
-        return local_frame(
-            spark,
-            [], "query_id long, doc_id long, score double"
-        )
-    if delta_stats is not None:
-        n_docs, avgdl = int(delta_stats[0]), float(delta_stats[1] or 1.0)
-    else:
-        row = (
-            delta_postings.select("doc_id", "doc_len")
-            .distinct()
-            .agg(F.count("*").alias("n"), F.avg("doc_len").alias("avgdl"))
-            .collect()[0]
-        )
-        n_docs, avgdl = int(row["n"]), float(row["avgdl"] or 1.0)
-    all_terms = sorted({t for _, t, _ in weighted_terms})
-    qidx = {qid: i for i, qid in enumerate(qid_list)}
-    term_to_qidx: dict[str, list[tuple[int, float]]] = {}
-    for qid, t, w in weighted_terms:
-        term_to_qidx.setdefault(t, []).append((qidx[qid], float(w)))
-    from pyspark.sql import Window
-
-    matched = delta_postings.where(F.col("term").isin(all_terms))
-    flat = matched.withColumn(
-        "df", F.count(F.lit(1)).over(Window.partitionBy("term")).cast("double")
-    ).select("term", "doc_id", "tf", "doc_len", "df")
-    n_groups = max(8, spark.sparkContext.defaultParallelism)
-    msm_arr = (
-        [min_match_per_qid.get(qid, 1) for qid in qid_list]
-        if min_match_per_qid
-        else None
-    )
-    scorer = make_batch_group_scorer(
-        term_to_qidx, qid_list, n_docs, avgdl, k1, b, k,
-        min_match_per_qidx=msm_arr,
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    grp_key = F.pmod(F.col("doc_id"), F.lit(n_groups))
-    return (
-        group_partitioned(flat, grp_key, n_groups)
-        .groupBy(grp_key.alias("grp"))
-        .applyInPandas(scorer, BATCH_SCORE_SCHEMA)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select("query_id", "doc_id", "score")
-    )
-
-
-def search_with_delta(
-    spark: SparkSession,
-    index_dir: str,
-    delta_postings: DataFrame | None,
-    query: str,
-    k: int = 10,
-    index_df: DataFrame | None = None,
-    meta: IndexMeta | None = None,
-    delta_stats: tuple[int, float] | None = None,
-) -> DataFrame:
-    """Overlay query: base compressed index ∪ delta postings, keep-best per
-    doc (reference overlay semantics: each side scored under its own stats).
-
-    ``delta_stats`` (from ``load_delta_stats``) skips both the isEmpty probe
-    and the stats job — the manifest already says whether the delta holds
-    documents and what its (n_docs, avgdl) are."""
-    base = topk_search(
-        spark, index_dir, query, k=k, index_df=index_df, meta=meta
-    ).select("doc_id", "score")
-    if delta_postings is None or (
-        delta_stats[0] == 0 if delta_stats is not None else delta_postings.isEmpty()
-    ):
-        return base.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-    delta = delta_bm25_topk(
-        delta_postings, query, k=k, delta_stats=delta_stats
-    ).select("doc_id", "score")
-    merged = dedup_keep_best(base.unionByName(delta))
-    return merged.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-
-def search_many_with_delta(
-    spark: SparkSession,
-    index_dir: str,
-    delta_postings: DataFrame | None,
-    queries: list[tuple[int, str]],
-    k: int = 10,
-    index_df: DataFrame | None = None,
-    meta: IndexMeta | None = None,
-    delta_stats: tuple[int, float] | None = None,
-) -> DataFrame:
-    """Batched overlay serving: the whole query set against base ∪ delta in
-    two jobs (one ``batch_topk_indexed`` over the compressed base, one
-    Arrow-scored batch over the delta postings under the delta's own stats),
-    merged keep-best per (query, doc) driver-side over the k-bounded rows —
-    per-query semantics identical to ``search_with_delta``
-    (parity-tested).
-
-    ``delta_stats`` (from ``load_delta_stats``, maintained by the delta
-    stream's manifest) removes the per-call isEmpty probe + distinct().agg()
-    stats job — round-3 verdict item 8."""
-    from ..functions.tokenize import py_index_tokens
-    from ..plans.wand import batch_topk_indexed
-
-    base_rows = batch_topk_indexed(
-        spark, index_dir, queries, k=k, index_df=index_df, meta=meta
-    ).select("query_id", "doc_id", "score").collect()
-    best: dict[tuple[int, int], float] = {}
-    for r in base_rows:
-        key = (r["query_id"], r["doc_id"])
-        if key not in best or r["score"] > best[key]:
-            best[key] = r["score"]
-
-    has_delta = delta_postings is not None and (
-        delta_stats[0] > 0 if delta_stats is not None else not delta_postings.isEmpty()
-    )
-    if has_delta:
-        weighted = [
-            (qid, t, 1.0)
-            for qid, q in queries
-            for t in dict.fromkeys(py_index_tokens(q))
-        ]
-        delta_rows = batch_delta_topk(
-            spark, delta_postings, weighted, [qid for qid, _ in queries],
-            k=k, delta_stats=delta_stats,
-        ).collect()
-        for r in delta_rows:
-            key = (r["query_id"], r["doc_id"])
-            if key not in best or r["score"] > best[key]:
-                best[key] = r["score"]
-
-    per_q: dict[int, list[tuple[int, float]]] = {qid: [] for qid, _ in queries}
-    for (qid, doc), s in best.items():
-        per_q[qid].append((doc, s))
-    out = []
-    for qid, _ in queries:
-        top = sorted(per_q[qid], key=lambda kv: (-kv[1], kv[0]))[:k]
-        for rank, (doc, s) in enumerate(top, start=1):
-            out.append({"query_id": qid, "doc_id": doc, "score": s, "rank": rank})
-    return local_frame(
-        spark,
-        out, "query_id long, doc_id long, score double, rank int"
-    )
-
-
 MERGE_SUMMARY_SCHEMA = "shard int, manifest_json string"
 
 
@@ -882,7 +624,8 @@ def merge_compact(
 
     Contract: the delta contains NEW documents only (doc_ids disjoint from
     the base).  Updated documents must go through the query-time overlay
-    (``search_with_delta``, which keep-bests per doc) until a full rebuild
+    (``HybridSearchPlan.attach_delta``, which keep-bests per doc) until a
+    full rebuild
     (``compact_delta``) — folding an update in place would need tombstones
     in every shard holding the old version's postings.
 

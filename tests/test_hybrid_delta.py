@@ -188,8 +188,9 @@ def test_lexical_overlay_still_serves_marker_terms(env, monkeypatch):
 
     The base side of the overlay is scored in place on the plan's cache;
     strong and escalated results, for msm 1 and "75%", must equal EXACTLY
-    those of ``topk_search``'s shuffle-by-chunk path over the same cache."""
-    from hybrid_sanctions_search_engine_spark.plans import wand
+    those of ``batch_topk_local``'s shuffle-by-group path over the same
+    cache."""
+    from functools import partial
 
     plan = env["plan"]
     res, _ = plan.search("zorblatt", SearchOpts(top_k=5))
@@ -227,15 +228,18 @@ def test_lexical_overlay_still_serves_marker_terms(env, monkeypatch):
         assert plan._dict_present_set() is None  # invalidated
         plan._driver_dictionary()
         assert "zorblatt" not in plan._dict_present_set()
-        assert plan.ac_stage("zorblatt", k=5).collect() == []
+        res, trace = plan.search(
+            "zorblatt", SearchOpts(top_k=5, enable_escalation=False)
+        )
+        assert res.collect() == [] and trace[0].hits == 0
     finally:
         plan.attach_delta(*delta)
     monkeypatch.undo()
     plan._driver_dict = ...
 
-    real = wand.topk_search
+    # the plan's bound base scorer, patched back to the shuffle path
     monkeypatch.setattr(
-        wand, "topk_search", lambda *a, pre_grouped=False, **kw: real(*a, **kw)
+        plan, "_score_base", partial(plan._score_base, pre_grouped=False)
     )
     assert in_place == served()
 

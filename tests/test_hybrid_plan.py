@@ -70,10 +70,11 @@ def test_index_backed_plan_matches_dataframe_plan(
 
     The index-backed plan scores its lexical stages in place on its cache;
     strong and escalated results, for msm 1 and "75%", must equal EXACTLY
-    those of ``topk_search``'s shuffle-by-chunk path over the same cache."""
+    those of ``batch_topk_local``'s shuffle-by-group path over the same
+    cache."""
     import os
+    from functools import partial
 
-    from hybrid_sanctions_search_engine_spark.plans import wand
     from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
 
     docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
@@ -107,9 +108,9 @@ def test_index_backed_plan_matches_dataframe_plan(
 
     in_place = served()
     assert any("FUZZY" not in stages for stages, _ in in_place)
-    real = wand.topk_search
+    # the plan's bound base scorer, patched back to the shuffle path
     monkeypatch.setattr(
-        wand, "topk_search", lambda *a, pre_grouped=False, **kw: real(*a, **kw)
+        plan_idx, "_score_base", partial(plan_idx._score_base, pre_grouped=False)
     )
     assert in_place == served()
 

@@ -146,25 +146,86 @@ def test_search_many_result_collect_submits_no_job(spark, plan):
 
 
 @pytest.mark.parametrize("cap", [None, 0], ids=["in-ram", "above-cap"])
-def test_ac_stage_absent_terms_submits_no_job(spark, plan, cap, monkeypatch):
+def test_absent_terms_search_submits_no_job(spark, plan, cap, monkeypatch):
     """Terms absent from the dictionary — the in-RAM term set, or above the
-    cap the dictionary's Bloom filter once it is built: the AC stage and
-    the collect of its (empty) result submit no job at all."""
+    cap the dictionary's Bloom filter once it is built: with escalation
+    off, a ``search()`` and a ``search_many()`` of them, and the collects
+    of their (empty) results, submit no job at all."""
     if cap is not None:
         monkeypatch.setattr(plan, "driver_expansion_max_terms", cap)
         plan._driver_dict = ...
         assert plan._driver_dictionary() is None
         assert isinstance(plan._dict_present_set(), TermBloom)
+    opts = SearchOpts(top_k=5, enable_escalation=False)
     try:
         rows = []
         n = _jobs_run_by(
-            spark, lambda: rows.extend(plan.ac_stage("zzzqqq xyzzy", k=5).collect())
+            spark,
+            lambda: (
+                rows.extend(plan.search("zzzqqq xyzzy", opts)[0].collect()),
+                rows.extend(
+                    plan.search_many([(1, "zzzqqq xyzzy"), (2, "xyzzy")], opts)[0].collect()
+                ),
+            ),
         )
         assert (n, rows) == (0, [])
     finally:
         monkeypatch.undo()
         plan._driver_dict = ...
         assert plan._driver_dictionary() is not None
+
+
+@pytest.mark.parametrize("shape", ["indexed", "no-index", "above-cap"])
+def test_strong_search_runs_one_job(spark, plan, ivf_index_plan, shape, monkeypatch):
+    """A strong single ``search()`` is the ladder on a batch of one, which
+    never speculates: exactly 1 job, the in-place AC scoring, on an indexed
+    plan, on a no-index plan, and above the in-RAM dictionary cap — where
+    it builds no Bloom filter and runs no candidate probe."""
+    target = plan if shape == "no-index" else ivf_index_plan
+    opts = SearchOpts(top_k=5)
+    query = "spark query join window"
+    target.search(query, opts)  # fills the standing caches
+    if shape == "above-cap":
+        monkeypatch.setattr(target, "driver_expansion_max_terms", 0)
+        monkeypatch.setattr(target, "_driver_dict", ..., raising=False)
+    out = {}
+    n = _jobs_run_by(spark, lambda: out.update(trace=target.search(query, opts)[1]))
+    assert [t.stage for t in out["trace"]] == ["AC", "HYBRID"]
+    assert out["trace"][0].hits > 0
+    assert n == 1
+    if shape == "above-cap":
+        assert target._dict_present_set() is None
+
+
+@pytest.mark.parametrize("shape", ["indexed", "no-index"])
+def test_fresh_plan_first_batch_scores_in_place(
+    spark, sf_smoke_dir, tmp_path_factory, shape, monkeypatch
+):
+    """A fresh plan's first ``search_many`` batch — the lexical cache not
+    yet materialized — plans no exchange between the Python scorer
+    (``MapInPandas``) and the cached scan: the cache's own shuffle runs
+    once, inside its materialization."""
+    from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
+
+    docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
+    index_dir = None
+    if shape == "indexed":
+        index_dir = str(tmp_path_factory.mktemp("fresh_plan_idx"))
+        build_index(docs, index_dir, n_shards=2, chunk_bits=7)
+    fresh = HybridSearchPlan(docs, index_dir=index_dir)
+    queries = [(1, "spark query join window"), (2, "merge sort")]
+    try:
+        _, plans, _ = _counted_inline(
+            spark, monkeypatch,
+            lambda: fresh.search_many(queries, SearchOpts(top_k=5, enable_escalation=False)),
+        )
+        lexical = [p for p in plans if "InPandas" in p]
+        assert len(lexical) == 1, plans
+        scorer = lexical[0].find("MapInPandas")
+        assert scorer >= 0 and "InMemoryTableScan" in lexical[0][scorer:], lexical
+        assert "Exchange" not in lexical[0][scorer:], lexical
+    finally:
+        fresh.close()
 
 
 def test_typo_search_above_cap_runs_probe_and_scoring_only(

@@ -11,11 +11,39 @@ from hybrid_sanctions_search_engine_spark.sources.index_io import build_index, l
 from hybrid_sanctions_search_engine_spark.streaming.incremental import (
     compact_delta,
     load_delta_postings,
-    search_with_delta,
     start_delta_stream,
 )
 
 SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
+
+
+def _overlay(docs, index_dir, delta, queries, k, delta_stats=None, single=False):
+    """Overlay serving: the base index ∪ the delta postings through a
+    standing plan's lexical ladder, escalation off → {query_id: [(doc_id,
+    score)]} in rank order.  ``single``: one ``search()`` per query
+    instead of one ``search_many`` batch."""
+    from hybrid_sanctions_search_engine_spark.plans.hybrid import (
+        HybridSearchPlan,
+        SearchOpts,
+    )
+
+    plan = HybridSearchPlan(docs, index_dir=index_dir)
+    opts = SearchOpts(top_k=k, enable_escalation=False)
+    try:
+        if delta is not None:
+            plan.attach_delta(delta_postings=delta, delta_stats=delta_stats)
+        if single:
+            return {
+                qid: [(r["doc_id"], r["score"]) for r in plan.search(q, opts)[0].collect()]
+                for qid, q in queries
+            }
+        out: dict[int, list] = {qid: [] for qid, _ in queries}
+        rows = plan.search_many(queries, opts)[0].collect()
+        for r in sorted(rows, key=lambda r: (r["query_id"], r["rank"])):
+            out[r["query_id"]].append((r["doc_id"], r["score"]))
+        return out
+    finally:
+        plan.close()
 
 
 @pytest.fixture(scope="module")
@@ -64,13 +92,12 @@ def test_streaming_overlay_and_compaction(spark, sf_smoke_dir, dirs):
     assert delta.where(F.col("term") == "zyzzyva").count() == 2
 
     # overlay search finds streamed docs without rebuilding the base index
-    res = search_with_delta(spark, dirs["index"], delta, "zyzzyva", k=5)
-    ids = [r["doc_id"] for r in res.collect()]
+    res = _overlay(base_docs, dirs["index"], delta, [(1, "zyzzyva"), (2, "window")], k=5)
+    ids = [d for d, _ in res[1]]
     assert set(ids) == {100001, 100002}
 
     # base-only terms still served by base
-    res2 = search_with_delta(spark, dirs["index"], delta, "window", k=5)
-    assert res2.count() == 5
+    assert len(res[2]) == 5
 
     # compaction folds delta into the base index (only touched shards rebuild)
     delta_docs = spark.read.parquet(dirs["input"])
@@ -463,16 +490,20 @@ def test_half_finished_object_store_swap(spark, sf_smoke_dir, tmp_path):
 
 
 def test_search_many_with_delta_parity(spark, sf_smoke_dir, tmp_path):
-    """Batched overlay serving ≡ per-query search_with_delta for a mixed
-    query set (hits in base only, delta only, both, and nowhere)."""
+    """Overlay serving — batched and per query — ≡ the overlay computed
+    from its definition: the base index's top-k and the delta docs' own
+    BM25 top-k (under the delta's statistics), keep-best per doc, re-top-k;
+    for a mixed query set (hits in base only, delta only, both, and
+    nowhere).  An empty delta degenerates to the plain indexed batch."""
     import os as _os
 
     from pyspark.sql import functions as F
 
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import bm25_topk
     from hybrid_sanctions_search_engine_spark.operators.postings import build_postings
-    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
-        search_many_with_delta,
-        search_with_delta,
+    from hybrid_sanctions_search_engine_spark.plans.wand import (
+        batch_topk_indexed,
+        topk_search,
     )
 
     docs = spark.read.parquet(_os.path.join(sf_smoke_dir, "documents.parquet"))
@@ -490,22 +521,32 @@ def test_search_many_with_delta_parity(spark, sf_smoke_dir, tmp_path):
         (3, "zzz_nothing"),
         (4, "merge sort customer"),
     ]
-    batched = search_many_with_delta(spark, idx_dir, delta, queries, k=8)
-    got: dict[int, list] = {qid: [] for qid, _ in queries}
-    for r in batched.collect():
-        got[r["query_id"]].append((r["rank"], r["doc_id"], round(r["score"], 9)))
+    batched = _overlay(base_docs, idx_dir, delta, queries, k=8)
+    single = _overlay(base_docs, idx_dir, delta, queries, k=8, single=True)
+    delta_ids = {r["doc_id"] for r in delta_docs.select("doc_id").collect()}
     for qid, q in queries:
+        best: dict[int, float] = {}
+        for r in [
+            *topk_search(spark, idx_dir, q, k=8).collect(),
+            *bm25_topk(delta_docs, q, k=8).collect(),
+        ]:
+            best[r["doc_id"]] = max(best.get(r["doc_id"], r["score"]), r["score"])
         want = [
-            (i + 1, r["doc_id"], round(r["score"], 9))
-            for i, r in enumerate(
-                search_with_delta(spark, idx_dir, delta, q, k=8).collect()
-            )
+            (d, round(s, 9))
+            for d, s in sorted(best.items(), key=lambda kv: (-kv[1], kv[0]))[:8]
         ]
-        assert sorted(got[qid]) == want, q
+        for got in (batched[qid], single[qid]):
+            assert [(d, round(s, 9)) for d, s in got] == want, q
+    assert not batched[3]  # nowhere
+    served = {d for rows in batched.values() for d, _ in rows}
+    assert served & delta_ids and served - delta_ids  # both sides serve
 
     # empty delta degenerates to the plain indexed batch
-    empty = search_many_with_delta(spark, idx_dir, None, queries[:2], k=5)
-    assert empty.count() > 0
+    empty = _overlay(base_docs, idx_dir, None, queries[:2], k=5)
+    plain = batch_topk_indexed(spark, idx_dir, queries[:2], k=5).collect()
+    assert empty[1] and sorted(
+        (qid, d, round(s, 9)) for qid, rows in empty.items() for d, s in rows
+    ) == sorted((r["query_id"], r["doc_id"], round(r["score"], 9)) for r in plain)
 
 
 def test_delta_stats_manifest(spark, tmp_path):
@@ -521,8 +562,6 @@ def test_delta_stats_manifest(spark, tmp_path):
         _fold_delta_stats,
         load_delta_postings,
         load_delta_stats,
-        search_many_with_delta,
-        search_with_delta,
         start_delta_stream,
     )
 
@@ -572,22 +611,17 @@ def test_delta_stats_manifest(spark, tmp_path):
     assert load_delta_stats(d["delta"]) == before
 
     queries = [(1, "zyzzyva"), (2, "spark query"), (3, "nothing_zz")]
-    with_stats = search_many_with_delta(
-        spark, d["index"], delta, queries, k=5, delta_stats=stats
-    ).collect()
-    without = search_many_with_delta(
-        spark, d["index"], delta, queries, k=5
-    ).collect()
-    key = lambda r: (r["query_id"], r["rank"], r["doc_id"], round(r["score"], 9))
-    assert sorted(map(key, with_stats)) == sorted(map(key, without))
+    with_stats = _overlay(base_docs, d["index"], delta, queries, k=5, delta_stats=stats)
+    without = _overlay(base_docs, d["index"], delta, queries, k=5)
+    key = lambda rows: {q: [(doc, round(s, 9)) for doc, s in r] for q, r in rows.items()}
+    assert key(with_stats) == key(without)
+    assert with_stats[1] and with_stats[2] and not with_stats[3]
 
-    one_with = search_with_delta(
-        spark, d["index"], delta, "zyzzyva", k=5, delta_stats=stats
-    ).collect()
-    one_without = search_with_delta(spark, d["index"], delta, "zyzzyva", k=5).collect()
-    assert [(r["doc_id"], round(r["score"], 9)) for r in one_with] == [
-        (r["doc_id"], round(r["score"], 9)) for r in one_without
-    ]
+    one_with = _overlay(
+        base_docs, d["index"], delta, queries[:1], k=5, delta_stats=stats, single=True
+    )
+    one_without = _overlay(base_docs, d["index"], delta, queries[:1], k=5, single=True)
+    assert key(one_with) == key(one_without) == {1: key(with_stats)[1]}
 
 
 def test_delta_stats_survive_compaction_and_new_lineage(spark, tmp_path):

@@ -618,14 +618,12 @@ def test_batch_scorer_partitioning_pinned(spark, corpus):
 
 def test_pre_grouped_scorer_plans_zero_exchanges(spark, corpus):
     """``pre_grouped=True`` over a standing plan's cached
-    ``pmod(chunk, batch_n_groups)`` layout plans NO exchange between the
-    cached scan and the Arrow scorer — the groupBy's distribution is
-    satisfied by the cache.  A group count that drifts from the cached
-    layout brings the per-batch shuffle back (the negative control).
-
-    The cache must be materialized (a standing plan's first batch does
-    that): until its adaptive plan is final, the cached scan reports no
-    output partitioning and Catalyst plans the exchange anyway."""
+    ``pmod(chunk, batch_n_groups)`` layout scores the cache in place: NO
+    exchange between the cached scan and the Arrow scorer — on a fresh,
+    unmaterialized cache too, as ``mapInPandas`` requires no distribution.
+    The shuffle-by-group path (``pre_grouped=False``) over the same cache
+    plans its exchange (the negative control), and both return the same
+    rows."""
     from hybrid_sanctions_search_engine_spark.plans.hybrid import HybridSearchPlan
     from hybrid_sanctions_search_engine_spark.plans.wand import batch_topk_indexed
 
@@ -633,25 +631,20 @@ def test_pre_grouped_scorer_plans_zero_exchanges(spark, corpus):
     plan = HybridSearchPlan(docs, index_dir=index_dir)
     batch = [(1, "spark query"), (2, "table scan")]
 
-    def below_scorer(n_groups, pre_grouped):
+    def below_scorer(pre_grouped):
         df = batch_topk_indexed(
             spark, index_dir, batch, k=5, index_df=plan.index_df,
-            meta=plan.index_meta, n_groups=n_groups, pre_grouped=pre_grouped,
+            meta=plan.index_meta, n_groups=plan._idx_n_groups,
+            pre_grouped=pre_grouped,
         )
-        text = df._jdf.queryExecution().executedPlan().toString()
-        pos = text.find("FlatMapGroupsInPandas")
-        end = text.find("InMemoryTableScan", pos)
-        assert 0 <= pos < end, text
-        return df, text[pos:end]
+        return df, _scorer_input(df)
 
     try:
-        plan.index_df.count()
-        df, below = below_scorer(plan._idx_n_groups, True)
-        assert "Exchange" not in below, below
-        want, _ = below_scorer(plan._idx_n_groups, False)
+        df, below = below_scorer(True)
+        assert "Exchange" not in below and "Coalesce" in below, below
+        want, shuffled = below_scorer(False)
+        assert "Exchange hashpartitioning" in shuffled, shuffled
         assert sorted(df.collect()) == sorted(want.collect())
-        _, drifted = below_scorer(plan._idx_n_groups + 1, True)
-        assert "Exchange hashpartitioning" in drifted, drifted
     finally:
         plan.close()
 
@@ -693,13 +686,14 @@ def _jobs_and_tasks(spark, fn) -> tuple[int, int]:
     return len(jobs), sum(i.numCompletedTasks for i in infos if i is not None)
 
 
-def test_single_query_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
-    """A standing plan scores a single query's AC and fuzzy stages in place
-    on its ``pmod(chunk)``-partitioned cache: no exchange between the cached
-    scan and the Python scorer — before the cache is materialized too, as
-    ``mapInPandas`` requires no distribution — at most
-    ``defaultParallelism`` Python tasks, and exactly one job per lexical
-    stage of an escalated ``search()``.  A cold ``topk_search`` over the
+def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
+    """A standing plan scores every lexical stage in place on its
+    ``pmod(chunk)``-partitioned cache, whatever the call shape: the scoring
+    frames of an AC entry set, a weighted (fuzzy) set and a fused set plan
+    no exchange between the cached scan and the Python scorer — before the
+    cache is materialized too — each runs as one job of at most
+    ``defaultParallelism`` Python tasks, and an escalated ``search()`` runs
+    exactly one job per lexical stage.  A cold ``topk_search`` over the
     parquet index still shuffles by chunk (the negative control)."""
     from hybrid_sanctions_search_engine_spark.plans import hybrid
     from hybrid_sanctions_search_engine_spark.plans.hybrid import (
@@ -711,21 +705,24 @@ def test_single_query_stages_score_the_cache_in_place(spark, corpus, monkeypatch
     par = spark.sparkContext.defaultParallelism
     opts = SearchOpts(top_k=5, escalation_threshold=1e9)
     plan = HybridSearchPlan(docs, index_dir=index_dir)
-    try:
-        # a fresh plan: building the AC frame submits no job, and the fuzzy
-        # stage's weighted call has the same shape
-        weighted = topk_search(
-            spark, index_dir, ["spark", "query"], k=5, index_df=plan.index_df,
-            meta=plan.index_meta, term_weights={"spark": 0.8, "query": 0.6},
-            pre_grouped=True,
+    weighted = [(7, "spark", 0.8), (7, "query", 0.6)]
+    shapes = [
+        dict(entries=[(1, "spark query join")], override=None, msm="75%"),
+        dict(entries=[], override=weighted, msm=1),
+        dict(entries=[(1, "spark query join"), (2, "sort")], override=weighted, msm=1),
+    ]
+
+    def frame(entries, override, msm):
+        return plan._score_base(
+            entries, k=5, query_terms_override=override, min_should_match=msm
         )
-        for df in (plan.ac_stage("spark query join", 5), weighted):
-            assert "Exchange" not in _scorer_input(df)
+
+    try:
+        for shape in shapes:  # a fresh plan: building a frame submits no job
+            assert "Exchange" not in _scorer_input(frame(**shape))
         plan.index_df.count()
-        for df in (
-            plan.ac_stage("spark query join", 5, "75%"),
-            plan.fuzzy_stage("sparc qurey", 5, opts),
-        ):
+        for shape in shapes:
+            df = frame(**shape)
             below = _scorer_input(df)
             assert "Exchange" not in below and "Coalesce" in below, below
             jobs, tasks = _jobs_and_tasks(spark, df.collect)
@@ -741,6 +738,7 @@ def test_single_query_stages_score_the_cache_in_place(spark, corpus, monkeypatch
                 return self._out
 
         monkeypatch.setattr(hybrid, "_Async", Inline)
+        plan.search("spark query join", opts)  # builds the driver dictionary
         out = {}
         jobs, _ = _jobs_and_tasks(
             spark, lambda: out.update(trace=plan.search("spark query join", opts)[1])
@@ -789,11 +787,14 @@ def _zipf_shard_rows(seed: int, n_docs: int, vocab: int, chunk_bits: int):
 @pytest.mark.parametrize("weighted", [False, True], ids=["exact", "weighted"])
 def test_single_query_group_scorer_bit_identical_to_chunk_scorer(msm, weighted):
     """Spark-free kernel pin: over the same term-sorted shard rows, the
-    batch scorer with one query per ``pmod(chunk)`` group — directly and
-    through the in-place ``mapInPandas`` body, fed cached partitions that
-    mix groups in odd-sized Arrow batches — returns the same top-k as
+    batch scorer — one query, or a 3-query batch mixing exact, weighted
+    (override) and minimum_should_match queries — per ``pmod(chunk)``
+    group, directly and through the in-place ``mapInPandas`` body fed
+    cached partitions that mix groups in odd-sized Arrow batches, and
+    through that body over the same postings as a raw ``flatten=None``
+    frame partitioned by doc — returns each query's top-k of
     ``_score_chunks`` per chunk: doc ids, matched-term counts and every
-    bit of the scores.  Both sum a doc's terms in row order; a change to
+    bit of the scores.  All sum a doc's terms in row order; a change to
     either accumulation order breaks the equality."""
     import numpy as np
     import pandas as pd
@@ -801,11 +802,9 @@ def test_single_query_group_scorer_bit_identical_to_chunk_scorer(msm, weighted):
     from hybrid_sanctions_search_engine_spark.operators.bm25 import (
         es_min_should_match,
         make_batch_group_scorer,
+        score_pre_grouped,
     )
-    from hybrid_sanctions_search_engine_spark.plans.wand import (
-        _score_chunks,
-        _score_pre_grouped,
-    )
+    from hybrid_sanctions_search_engine_spark.plans.wand import _score_chunks
     from hybrid_sanctions_search_engine_spark.sources.index_io import (
         decode_shard_arrays,
     )
@@ -816,34 +815,74 @@ def test_single_query_group_scorer_bit_identical_to_chunk_scorer(msm, weighted):
     weights = (
         {t: 1.0 - 0.07 * i for i, t in enumerate(terms)} if weighted else None
     )
-    msm_n = es_min_should_match(msm, len(terms))
+    # query 0 is the parametrized one; 1 is weighted like an expanded
+    # fuzzy id, 2 an exact query under the same minimum_should_match spec
+    queries = {
+        0: (terms, weights, es_min_should_match(msm, len(terms))),
+        1: (["t2", "t8", "t33"], {"t2": 0.9, "t8": 0.5, "t33": 0.75}, 1),
+        2: (["t1", "t4", "t17", "t33"], None, es_min_should_match(msm, 4)),
+    }
     rows = rows[rows["term"].isin(terms)]
 
-    def top(parts) -> pd.DataFrame:
+    def top(parts, q) -> pd.DataFrame:
         out = pd.concat(parts, ignore_index=True)
+        if "query_id" in out.columns:
+            out = out[out["query_id"] == q]
         out = out.sort_values(["score", "doc_id"], ascending=[False, True])
         return out.head(k)[["doc_id", "score", "n_terms_matched"]].reset_index(drop=True)
 
-    by_chunk = _score_chunks(k, meta, weights, min_match=msm_n)
-    want = top([by_chunk((c,), g) for c, g in rows.groupby("chunk", sort=False)])
-    by_group = make_batch_group_scorer(
-        {t: [(0, (weights or {}).get(t, 1.0))] for t in terms},
-        [0], meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
-        flatten=lambda pdf: decode_shard_arrays(pdf, include_df=True),
-        min_match_per_qidx=[msm_n],
-    )
-    got = top([by_group((g,), grp) for g, grp in rows.groupby(rows["chunk"] % n_groups)])
+    want = {}
+    for q, (ts, w, msm_n) in queries.items():
+        by_chunk = _score_chunks(k, meta, w, min_match=msm_n)
+        sub = rows[rows["term"].isin(ts)]
+        want[q] = top([by_chunk((c,), g) for c, g in sub.groupby("chunk", sort=False)], q)
+
     # a standing plan's cache: groups hashed onto fewer partitions, each
     # partition term-sorted, streamed as 7-row Arrow batches
     cached = rows.assign(part=(rows["chunk"] % n_groups) % n_parts)
     cached = cached.sort_values(["part", "term"], kind="mergesort")
     batches = [cached.iloc[i:i + 7] for i in range(0, len(cached), 7)]
-    served = top(list(_score_pre_grouped(k, meta, terms, weights, msm_n)(iter(batches))))
-    assert (want["n_terms_matched"] >= 3).sum() > k // 2  # multi-term sums
-    for res in (got, served):
-        assert res["doc_id"].tolist() == want["doc_id"].tolist()
-        assert res["n_terms_matched"].tolist() == want["n_terms_matched"].tolist()
-        assert np.array_equal(res["score"].to_numpy(), want["score"].to_numpy())
+    # the same postings decoded to raw (term, doc_id, tf, doc_len, df) rows,
+    # cached by doc: every posting of a doc in one term-sorted partition
+    flat = decode_shard_arrays(rows, include_df=True)
+    raw = pd.DataFrame(
+        {
+            "term": flat["uniq_terms"][flat["term_codes"]],
+            "doc_id": flat["doc_id"],
+            "tf": flat["tf"],
+            "doc_len": flat["doc_len"],
+            "df": flat["df"],
+        }
+    )
+    raw = raw.assign(part=raw["doc_id"] % n_parts)
+    raw = raw.sort_values(["part", "term"], kind="mergesort")
+    raw_batches = [raw.iloc[i:i + 7] for i in range(0, len(raw), 7)]
+
+    for batch in ([0], [0, 1, 2]):
+        term_to_qidx: dict = {}
+        for i, q in enumerate(batch):
+            ts, w, _ = queries[q]
+            for t in ts:
+                term_to_qidx.setdefault(t, []).append((i, (w or {}).get(t, 1.0)))
+        msms = [queries[q][2] for q in batch]
+
+        def scorer(flatten):
+            return make_batch_group_scorer(
+                term_to_qidx, batch, meta.n_docs, meta.avgdl, meta.k1, meta.b,
+                k, flatten=flatten, min_match_per_qidx=msms,
+            )
+
+        by_group = scorer(lambda pdf: decode_shard_arrays(pdf, include_df=True))
+        got = [by_group((g,), grp) for g, grp in rows.groupby(rows["chunk"] % n_groups)]
+        served = list(score_pre_grouped(by_group)(iter(batches)))
+        served_raw = list(score_pre_grouped(scorer(None))(iter(raw_batches)))
+        for q in batch:
+            multi = 3 if q == 0 else 2  # multi-term sums
+            assert (want[q]["n_terms_matched"] >= multi).sum() > k // 2
+            for res in (top(got, q), top(served, q), top(served_raw, q)):
+                assert res["doc_id"].tolist() == want[q]["doc_id"].tolist()
+                assert res["n_terms_matched"].tolist() == want[q]["n_terms_matched"].tolist()
+                assert np.array_equal(res["score"].to_numpy(), want[q]["score"].to_numpy())
 
 
 def test_es_min_should_match_rules():

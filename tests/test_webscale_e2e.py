@@ -50,7 +50,7 @@ def test_webscale_pipeline_end_to_end(spark, sf_smoke_dir, tmp_path):
     # chunk_bits=48: xxhash64(url) doc ids span the full 64-bit range, so
     # doc-range chunking must use coarse chunks (the build handles any
     # doc-id distribution; chunks partition the hash space)
-    idx, meta = load_index(spark, index_dir)
+    _, meta = load_index(spark, index_dir)
     assert meta.n_docs == n_docs
 
     from hybrid_sanctions_search_engine_spark.operators.similarity import (
@@ -88,7 +88,6 @@ def test_webscale_pipeline_end_to_end(spark, sf_smoke_dir, tmp_path):
         load_delta_postings,
         load_delta_stats,
         merge_compact,
-        search_many_with_delta,
         start_delta_stream,
     )
 
@@ -120,11 +119,13 @@ def test_webscale_pipeline_end_to_end(spark, sf_smoke_dir, tmp_path):
     )
     assert stats[0] == int(row["n"]) and stats[1] == pytest.approx(row["a"])
 
-    overlay = search_many_with_delta(
-        spark, index_dir, delta, [(7, "zyzzyva")], k=5,
-        index_df=idx, meta=meta, delta_stats=stats,
+    plan = HybridSearchPlan(docs, index_dir=index_dir)
+    plan.attach_delta(delta_postings=delta, delta_stats=stats)
+    overlay, _ = plan.search_many(
+        [(7, "zyzzyva")], SearchOpts(top_k=5, enable_escalation=False)
     )
     assert {r["doc_id"] for r in overlay.collect()} == {9_000_001, 9_000_002}
+    plan.close()
 
     # --- 5. merge compaction folds the delta; folded index serves it ---
     delta_files = [

@@ -255,8 +255,9 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
     expected = {
         "operators.fuzzy.dictionary_bloom.<locals>.build",
         "plans.wand._score_chunks.<locals>.score",
-        "plans.wand._score_pre_grouped.<locals>.score",
-        "operators.bm25.make_batch_group_scorer.<locals>.score_group",
+        # every lexical stage's one in-place body (the batch scorer rides
+        # inside it)
+        "operators.bm25.score_pre_grouped.<locals>.score",
         # the batched vector leg's Arrow-map bodies: each emits its task's
         # top-k with the rerank inputs (text, query text, partial ratio)
         "operators.similarity.knn_ivf_probe_many.<locals>.score",
