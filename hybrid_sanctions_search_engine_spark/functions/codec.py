@@ -1,10 +1,12 @@
-"""Vectorized LEB128 varint + delta codecs for posting-list compression.
+"""Vectorized LEB128 varint codecs for posting-list compression.
 
 Posting lists are stored as delta-encoded doc-id gaps packed with LEB128
 varints (the compression family named by the north star; PForDelta would be a
 drop-in swap at the same call sites).  Both encode and decode are pure numpy
 — no per-element Python loops — so they run fast inside ``applyInPandas``
-index-build / query stages.
+index-build / query stages.  ``sources.index_io`` is the only package
+module that calls them: it owns the shard byte format (the gap deltas
+and their segmented prefix sums live there).
 """
 
 from __future__ import annotations
@@ -91,20 +93,3 @@ def varint_decode(buf: bytes) -> np.ndarray:
     )
     return np.add.reduceat(contrib, starts)
 
-
-def delta_encode(sorted_ids: np.ndarray) -> bytes:
-    """Strictly-increasing int64 ids → varint(first, gaps...)."""
-    ids = np.asarray(sorted_ids, dtype=np.int64)
-    if ids.size == 0:
-        return b""
-    gaps = np.empty(ids.size, dtype=np.uint64)
-    gaps[0] = np.uint64(ids[0])
-    gaps[1:] = np.diff(ids).astype(np.uint64)
-    return varint_encode(gaps)
-
-
-def delta_decode(buf: bytes) -> np.ndarray:
-    gaps = varint_decode(buf)
-    if gaps.size == 0:
-        return np.empty(0, dtype=np.int64)
-    return np.cumsum(gaps.astype(np.int64))

@@ -280,9 +280,10 @@ def make_batch_group_scorer(
     the round-2 batch path's scale wall (215M joined rows / 92M groups /
     62 s at 960k docs for 100 queries; this shape: ~4 s of numpy).
 
-    ``flatten``: optional pdf→pdf adapter producing flat posting rows
-    (term, doc_id, tf, doc_len, df) — the compressed-index path passes the
-    varint decoder; raw posting frames pass None.
+    ``flatten``: optional adapter from the group's rows to flat postings —
+    the compressed-index paths pass ``sources.index_io.decode_shard_arrays``
+    (a dict of arrays); raw (term, doc_id, tf, doc_len, df) posting frames
+    pass None.
 
     Memory is BOUNDED regardless of batch size: the dense accumulator is
     built per query-column BLOCK sized so 8 B × local docs × block ≤
@@ -306,7 +307,7 @@ def make_batch_group_scorer(
         else np.ones(nq, dtype=np.int32)
     )
 
-    def score_group(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def score_group(key, pdf):
         empty = pd.DataFrame(
             {
                 "query_id": np.array([], dtype=np.int64),

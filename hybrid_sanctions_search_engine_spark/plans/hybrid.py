@@ -33,12 +33,7 @@ from pyspark.sql import functions as F
 
 from ..operators.bm25 import cached_topk_local, raw_postings_cache
 from ..operators.fuzzy import dictionary_bloom, fuzzy_candidate_probe
-from ..operators.postings import (
-    CorpusStats,
-    build_postings,
-    corpus_stats,
-    term_doc_freq,
-)
+from ..operators.postings import CorpusStats, build_postings, term_doc_freq
 from ..operators.similarity import (
     ANN_KINDS,
     DOC_TEXT_COL,
@@ -420,7 +415,15 @@ class HybridSearchPlan:
             self.index_meta = None
             postings = build_postings(docs, text_col, positions=False)
             self.postings = raw_postings_cache(postings, term_doc_freq(postings))
-            self.stats: CorpusStats = corpus_stats(docs, text_col)
+            # the statistics come off the cache, not a second tokenize: a
+            # doc's Σ tf is its token count, and the sum fills the cache the
+            # first lexical call scores (n_docs and Σ doc_len as
+            # build_index observes them: a null-text doc counts, at length 0)
+            n_docs = docs.count()
+            total = self.postings.agg(F.sum("tf")).collect()[0][0] or 0
+            self.stats: CorpusStats = CorpusStats(
+                n_docs=n_docs, avgdl=float(total) / max(n_docs, 1)
+            )
             self._score_base = partial(
                 cached_topk_local, self.postings,
                 n_docs=self.stats.n_docs, avgdl=self.stats.avgdl,

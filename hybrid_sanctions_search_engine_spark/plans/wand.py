@@ -15,10 +15,14 @@ over our own index):
     pruning applied at chunk granularity (per-posting pivoting inside a chunk
     is unnecessary because chunk scoring is a vectorized numpy accumulation).
  4. surviving chunks are scored in parallel (`applyInPandas` per chunk:
-    varint-decode gaps, sum float64 contributions with np.bincount, local
-    top-k), then merged with a global TakeOrderedAndProject.  A standing
-    plan scores its cached index in place instead, every query shape
-    through ``batch_topk_local(pre_grouped=True)``.
+    ``sources.index_io.decode_shard_arrays`` decodes the rows, and
+    ``operators.bm25.make_batch_group_scorer`` on a batch of one sums the
+    float64 contributions and keeps the local top-k), then merged with a
+    global TakeOrderedAndProject.  A standing plan scores its cached index
+    in place instead, every query shape through
+    ``batch_topk_local(pre_grouped=True)``.  Phrase queries decode position
+    streams through the same reader; a single phrase is a batch of one
+    (``batch_phrase_search``).
 
 Rank-identity vs the uncompressed DataFrame BM25 plan is asserted in
 tests/test_wand.py.
@@ -38,11 +42,14 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.codec import delta_decode
 from ..functions.tokenize import py_index_tokens
-from ..operators.bm25 import BATCH_SCORE_SCHEMA, group_partitioned
-from ..operators.similarity import local_topk
-from ..sources.index_io import IndexMeta, load_index
+from ..operators.bm25 import (
+    BATCH_SCORE_SCHEMA,
+    es_min_should_match,
+    group_partitioned,
+    make_batch_group_scorer,
+)
+from ..sources.index_io import IndexMeta, decode_shard_arrays, load_index
 from ..sources.tables import local_frame
 
 RESULT_SCHEMA = StructType(
@@ -60,65 +67,6 @@ def _shard_of_terms(terms: list[str], n_shards: int) -> dict[str, int]:
     from ..functions.xxhash import shard_of_term
 
     return {t: shard_of_term(t, n_shards) for t in terms}
-
-
-def _score_chunks(
-    k: int,
-    meta: IndexMeta,
-    term_weights: dict[str, float] | None = None,
-    min_match: int = 1,
-):
-    """Per-chunk scorer: decodes tf + doc_len streams and computes the exact
-    BM25 contribution from IndexMeta (idf from the stored per-term df) — the
-    same float64 numpy expression the old in-encoder scoring used, so results
-    stay bitwise identical to the DataFrame plan.
-
-    ``min_match``: drop docs matching fewer than this many query terms
-    BEFORE the local top-k (ES minimum_should_match, resolved by the
-    caller).  Chunks partition the doc space and hold every query term's
-    postings for their docs, so the per-chunk count is the doc's full
-    count and the filter composes exactly with θ-pruning (the chunk upper
-    bound still bounds every qualifying doc's score)."""
-    from ..functions.codec import varint_decode
-
-    k1, b = meta.k1, meta.b
-    n_docs, avgdl = float(meta.n_docs), float(meta.avgdl)
-
-    def score(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        ids_parts = []
-        score_parts = []
-        for term, gaps, tfs_blob, dls_blob, df in zip(
-            pdf["term"], pdf["doc_gaps"], pdf["tfs"], pdf["doc_lens"], pdf["df"]
-        ):
-            ids_parts.append(delta_decode(gaps))
-            tf = varint_decode(tfs_blob).astype(np.float64)
-            dl = varint_decode(dls_blob).astype(np.float64)
-            idf = np.log(1.0 + (n_docs - float(df) + 0.5) / (float(df) + 0.5))
-            contrib = idf * (tf * (k1 + 1.0)) / (
-                tf + k1 * (1.0 - b + b * dl / avgdl)
-            )
-            if term_weights is not None:
-                contrib = contrib * term_weights.get(term, 1.0)
-            score_parts.append(contrib)
-        ids = np.concatenate(ids_parts)
-        contrib = np.concatenate(score_parts)
-        uniq, inv = np.unique(ids, return_inverse=True)
-        sums = np.bincount(inv, weights=contrib)
-        counts = np.bincount(inv)
-        if min_match > 1:
-            qual = counts >= min_match
-            uniq, sums, counts = uniq[qual], sums[qual], counts[qual]
-        # exact per-chunk top-k under the global ordering (score desc, doc asc)
-        order = local_topk(uniq, sums, k)
-        return pd.DataFrame(
-            {
-                "doc_id": uniq[order],
-                "score": sums[order],
-                "n_terms_matched": counts[order].astype(np.int32),
-            }
-        )
-
-    return score
 
 
 # the posting columns the scorers decode (the shard rows' block metadata and
@@ -175,10 +123,35 @@ def topk_search(
         F.col("shard").isin(shards) & F.col("term").isin(terms)
     )
 
-    from ..operators.bm25 import es_min_should_match
-
+    # msm_n resolved against the DISTINCT term count: n_terms_matched
+    # tallies distinct terms, and ES counts each duplicate clause as
+    # matched — a duplicate-token query resolved against the duplicate-
+    # inclusive count over-filtered (possibly to empty) and diverged from
+    # the batch paths
     msm_n = es_min_should_match(min_should_match, len(dict.fromkeys(terms)))
     par = spark.sparkContext.defaultParallelism
+    # the batch scorer on a batch of one (query id 0): chunks partition the
+    # doc space, so each chunk group's local top-k is exact, and the
+    # minimum_should_match filter runs before it
+    weights = term_weights or {}
+    score_fn = make_batch_group_scorer(
+        {t: [(0, weights.get(t, 1.0))] for t in dict.fromkeys(terms)},
+        [0], meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
+        flatten=lambda pdf: decode_shard_arrays(pdf, include_df=True),
+        min_match_per_qidx=[msm_n],
+    )
+
+    def score(rows: DataFrame, n_parts: int) -> DataFrame:
+        # explicit AQE-exempt partitioning: the decode+score work per chunk
+        # is CPU-bound, so byte-based AQE coalescing must not serialize it
+        # (operators.bm25.group_partitioned)
+        return (
+            group_partitioned(rows.select(*SCORE_COLS), F.col("chunk"), n_parts)
+            .groupBy("chunk")
+            .applyInPandas(score_fn, BATCH_SCORE_SCHEMA)
+            .drop("query_id")
+        )
+
     # metadata-only fast path: when the WHOLE index has at most
     # one_shot_chunks chunks (dense-id estimate from IndexMeta), every
     # query's candidate set fits the one-shot bound — skip the UB probe
@@ -188,16 +161,7 @@ def topk_search(
     # probing path.
     est_chunks = max(1, int(meta.n_docs) >> meta.chunk_bits)
     if stats_out is None and est_chunks <= max(seed_chunks * 2, one_shot_chunks):
-        scored = (
-            group_partitioned(
-                matched, F.col("chunk"), max(1, min(est_chunks, par * 2))
-            )
-            .groupBy("chunk")
-            .applyInPandas(
-                _score_chunks(k, meta, term_weights, min_match=msm_n),
-                RESULT_SCHEMA,
-            )
-        )
+        scored = score(matched, max(1, min(est_chunks, par * 2)))
         return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
     # Chunk upper bounds from block metadata only (no binary decode), kept
@@ -248,25 +212,10 @@ def topk_search(
     if not probe:
         return local_frame(spark, [], RESULT_SCHEMA)
 
-    # msm_n resolved above against the DISTINCT term count: n_terms_matched
-    # tallies distinct terms, and ES counts each duplicate clause as
-    # matched — a duplicate-token query resolved against the duplicate-
-    # inclusive count over-filtered (possibly to empty) and diverged from
-    # the batch paths
-    score_fn = _score_chunks(k, meta, term_weights, min_match=msm_n)
-
     def run(chunks: list[int]) -> DataFrame:
-        # explicit AQE-exempt partitioning: the decode+score work per chunk
-        # is CPU-bound, so byte-based AQE coalescing must not serialize it
-        # (operators.bm25.group_partitioned)
-        return (
-            group_partitioned(
-                matched.where(F.col("chunk").isin(chunks)),
-                F.col("chunk"),
-                max(1, min(len(chunks), par * 2)),
-            )
-            .groupBy("chunk")
-            .applyInPandas(score_fn, RESULT_SCHEMA)
+        return score(
+            matched.where(F.col("chunk").isin(chunks)),
+            max(1, min(len(chunks), par * 2)),
         )
 
     # the probe saw the COMPLETE UB ranking iff it wasn't truncated at the
@@ -320,15 +269,7 @@ def topk_search(
         survivor_chunks = ubs_df.where(
             (F.col("ub") >= theta) & ~F.col("chunk").isin(seed)
         ).select("chunk")
-        rest = (
-            group_partitioned(
-                matched.join(survivor_chunks, "chunk", "left_semi"),
-                F.col("chunk"),
-                par * 2,
-            )
-            .groupBy("chunk")
-            .applyInPandas(score_fn, RESULT_SCHEMA)
-        )
+        rest = score(matched.join(survivor_chunks, "chunk", "left_semi"), par * 2)
     all_res = local_frame(spark, seed_res, RESULT_SCHEMA)
     if rest is not None:
         all_res = all_res.unionByName(rest)
@@ -428,12 +369,7 @@ def batch_topk_local(
     (``operators.bm25.topk_pre_grouped``): one job, no exchange, at most
     ``defaultParallelism`` Python tasks, and ``n_groups`` plays no part.
     Without it the matched rows shuffle to ``n_groups`` chunk groups."""
-    from ..operators.bm25 import (
-        batch_query_terms,
-        make_batch_group_scorer,
-        topk_pre_grouped,
-    )
-    from ..sources.index_io import decode_shard_arrays
+    from ..operators.bm25 import batch_query_terms, topk_pre_grouped
 
     if index_df is None or meta is None:
         index_df, meta = load_index(spark, index_dir)
@@ -464,8 +400,9 @@ def batch_topk_local(
     )
 
 
-PHRASE_SCHEMA = StructType(
+BATCH_PHRASE_SCHEMA = StructType(
     [
+        StructField("query_id", LongType()),
         StructField("doc_id", LongType()),
         StructField("n_occurrences", IntegerType()),
     ]
@@ -475,69 +412,23 @@ PHRASE_SCHEMA = StructType(
 _PHRASE_POS_BITS = 40  # positions < 2^40 — far beyond any document length
 
 
-def _phrase_chunk_scorer(
-    ordered_terms: list[str], chunk_bits: int, slop: int = 0,
-    ordered: bool = True, lucene: bool = False,
-):
-    """Per-chunk phrase matcher over decoded postings + position streams.
-
-    Fully vectorized: each term's postings flatten to packed int64 keys
-    ``(doc_id_within_chunk << 40) | (pos − term_offset)`` (within one chunk,
-    local doc ids fit in ``chunk_bits`` bits), and a phrase occurrence is a
-    key present for EVERY term — one ``np.intersect1d`` chain per chunk, no
-    per-candidate-doc Python loop (round-3 verdict item 8; the loop version
-    cost O(candidate docs) interpreter iterations per chunk).
-
-    ``slop`` (anchored contract shared with ``operators.bm25.phrase_match``):
-    term i may sit anywhere in ``[p+i, p+i+slop]`` — its keys are expanded
-    to the ≤ slop+1 shifted copies before the intersect.  ``ordered=False``
-    widens the window to the symmetric ``[p+i-slop, p+i+slop]`` (ES-style
-    reordering; 2·slop+1 copies).  A shift that borrows below a document's
-    position 0 produces a key no anchor can match (anchors are real
-    positions), so no masking is needed.  ``lucene=True`` switches to the
-    exact span-budget contract (operators/bm25.py::phrase_match docstring;
-    anchors drawn from EVERY term's adjusted positions, bias-packed
-    because adjusted positions can be negative)."""
-    from ..functions.codec import varint_decode
-
-    def match(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        empty = pd.DataFrame({"doc_id": [], "n_occurrences": []}).astype(
-            {"doc_id": np.int64, "n_occurrences": np.int32}
-        )
-        chunk_base = int(key[0]) << chunk_bits
-        per_term = _decode_position_keys(pdf, chunk_base)
-        keys = _phrase_intersect(per_term, ordered_terms, slop, ordered, lucene)
-        if keys is None or keys.size == 0:
-            return empty
-        docs, counts = np.unique(keys >> _PHRASE_POS_BITS, return_counts=True)
-        return pd.DataFrame(
-            {
-                "doc_id": docs + chunk_base,
-                "n_occurrences": counts.astype(np.int32),
-            }
-        )
-
-    return match
-
-
 def _decode_position_keys(pdf: pd.DataFrame, chunk_base: int) -> dict:
-    """Per-term packed (local_doc << 40) | position key arrays for one
-    chunk's rows — positions via segmented cumsum of the flat delta stream
-    (segment k = posting k's tf deltas), all-numpy."""
-    from ..functions.codec import varint_decode
+    """Per-term packed ``(doc_id − chunk_base) << 40 | position`` key arrays
+    for one chunk group's rows, ascending (docs ascend within a row,
+    positions within a posting), from one ``decode_shard_arrays`` pass.
 
-    per_term: dict[str, np.ndarray] = {}
-    for _, row in pdf.iterrows():
-        ids = delta_decode(row["doc_gaps"]).astype(np.int64)
-        tfs = varint_decode(row["tfs"]).astype(np.int64)
-        deltas = varint_decode(row["positions"]).astype(np.int64)
-        c = np.cumsum(deltas)
-        starts = np.concatenate(([0], np.cumsum(tfs)[:-1]))
-        seg_base = np.where(starts > 0, c[starts - 1], 0)
-        pos = c - np.repeat(seg_base, tfs)
-        local = np.repeat(ids - chunk_base, tfs)
-        per_term[row["term"]] = (local << _PHRASE_POS_BITS) | pos
-    return per_term
+    Within one chunk a local doc id fits in ``chunk_bits`` bits, so a
+    phrase occurrence is a key present for EVERY term after the term's
+    offset shift — one ``np.intersect1d`` chain per chunk
+    (``_phrase_intersect``), no per-candidate-doc Python loop.  Shard rows
+    are keyed (term, chunk), so each term has one row here and its keys
+    are one contiguous run of the stream."""
+    flat = decode_shard_arrays(pdf, positions=True)
+    tf = flat["tf"]
+    local = np.repeat(flat["doc_id"] - chunk_base, tf)
+    keys = (local << _PHRASE_POS_BITS) | flat["positions"]
+    cuts = np.cumsum(np.bincount(np.repeat(flat["term_codes"], tf)))[:-1]
+    return dict(zip(flat["uniq_terms"].tolist(), np.split(keys, cuts)))
 
 
 def _phrase_intersect(
@@ -548,7 +439,9 @@ def _phrase_intersect(
     needs term i within [p + i, p + i + slop] (ordered contract) or the
     symmetric [p + i − slop, p + i + slop] (``ordered=False``, ES-style
     reordering) — shift each term's keys by its offset (and the slop
-    window's extra displacements) and intersect.
+    window's extra displacements) and intersect.  A shift that borrows
+    below a document's position 0 produces a key no anchor can match
+    (anchors are real positions), so no masking is needed.
 
     ``lucene=True`` (exact span-budget contract, see
     operators/bm25.py::phrase_match): anchors are drawn from EVERY term's
@@ -634,45 +527,15 @@ def phrase_search(
     ``elasticsearch_watchlist_adapter.py:218-229``) verified from the
     varint position streams per chunk.
 
+    A single phrase is a batch of one: ``batch_phrase_search`` with the
+    query id dropped, ordered by ``doc_id``.
+
     Rank-identity vs the DataFrame ``operators.bm25.phrase_match`` is
     asserted in tests/test_wand.py (slop 0, 1, 2; all three contracts)."""
-    if index_df is None or meta is None:
-        index_df, meta = load_index(spark, index_dir)
-    if not meta.has_positions:
-        raise ValueError(
-            "index was built without positions (store_positions=False); "
-            "rebuild with build_index(..., store_positions=True)"
-        )
-    terms = query_terms(phrase) if isinstance(phrase, str) else list(phrase)
-    if not terms:
-        return local_frame(spark, [], PHRASE_SCHEMA)
-    shard_of = _shard_of_terms(terms, meta.n_shards)
-    shards = sorted(set(shard_of.values()))
-    matched = index_df.where(
-        F.col("shard").isin(shards) & F.col("term").isin(terms)
-    )
-    est_chunks = max(1, int(meta.n_docs) >> meta.chunk_bits)
-    n_parts = max(
-        8, min(spark.sparkContext.defaultParallelism * 2, est_chunks)
-    )
-    return (
-        group_partitioned(matched, F.col("chunk"), n_parts)
-        .groupBy("chunk")
-        .applyInPandas(
-            _phrase_chunk_scorer(terms, meta.chunk_bits, slop, ordered, lucene),
-            PHRASE_SCHEMA,
-        )
-        .orderBy("doc_id")
-    )
-
-
-BATCH_PHRASE_SCHEMA = StructType(
-    [
-        StructField("query_id", LongType()),
-        StructField("doc_id", LongType()),
-        StructField("n_occurrences", IntegerType()),
-    ]
-)
+    return batch_phrase_search(
+        spark, index_dir, [(0, phrase)], index_df=index_df, meta=meta,
+        slop=slop, ordered=ordered, lucene=lucene,
+    ).drop("query_id")
 
 
 def batch_phrase_search(
@@ -692,9 +555,9 @@ def batch_phrase_search(
     term's position keys ONCE, and every phrase's intersect chain runs over
     the shared decode → (query_id, doc_id, n_occurrences).
 
-    Per-phrase results are identical to ``phrase_search`` (parity-tested);
-    the win is one job + one decode for the whole batch instead of a job
-    and a decode per phrase."""
+    ``phrase_search`` is this on a batch of one; a batch costs one job and
+    one decode for all its phrases instead of a job and a decode per
+    phrase."""
     if index_df is None or meta is None:
         index_df, meta = load_index(spark, index_dir)
     if not meta.has_positions:
@@ -717,7 +580,7 @@ def batch_phrase_search(
     )
     chunk_bits = meta.chunk_bits
 
-    def match_many(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def match_many(key, pdf):
         chunk_base = int(key[0]) << chunk_bits
         per_term = _decode_position_keys(pdf, chunk_base)
         out_q, out_d, out_n = [], [], []

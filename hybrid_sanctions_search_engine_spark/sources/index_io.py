@@ -46,6 +46,7 @@ import json
 import os
 import time
 from dataclasses import asdict, dataclass
+from itertools import chain
 
 import numpy as np
 import pandas as pd
@@ -62,7 +63,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..functions.codec import varint_encode_grouped
+from ..functions.codec import varint_decode, varint_encode_grouped
 from ..operators.postings import CorpusStats
 from .fs import LocalIndexFS, fs_for
 
@@ -150,11 +151,10 @@ def completed_shards(index_dir: str, n_shards: int, fs=None) -> list[int]:
 
 def _encode_shard(
     index_dir: str, store_positions: bool, salted: bool = False, fs=None,
-    raw: bool = False,
 ):
     """Factory for the per-shard applyInPandas encoder.
 
-    Receives raw (term, chunk, doc_id, tf, doc_len) postings for one shard;
+    Receives (term, chunk, doc_id, tf, doc_len) postings for one shard;
     computes df (all of a term's postings are co-located here — that is the
     point of hash-sharding by term) and stores the raw tf + doc_len streams.
     BM25 contributions are computed at QUERY time (``plans.wand``) from
@@ -168,12 +168,12 @@ def _encode_shard(
     the executor no longer assumes ``index_dir`` is a shared POSIX path."""
     fs = fs or LocalIndexFS()
 
-    def encode(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def encode(key, pdf):
         shard = int(key[0])
         salt = int(key[1]) if salted else None
         t0 = time.monotonic()
         out, n_postings, n_docs_seen = _encode_posting_frame(
-            pdf, shard, store_positions, df_precomputed=salted, raw=raw
+            pdf, shard, store_positions, df_precomputed=salted
         )
         return _write_shard(
             out, shard, salt, n_docs_seen, n_postings, index_dir, fs, t0
@@ -182,119 +182,34 @@ def _encode_shard(
     return encode
 
 
-def _aggregate_raw_rows(
-    pdf: pd.DataFrame, store_positions: bool
-) -> tuple:
-    """RAW exploded token rows (term, chunk, doc_id, doc_len[, pos]) →
-    per-posting arrays (term_codes, uniq_terms, chunk, doc_id, tf,
-    doc_len, df, flat_positions|None) in the exact (term asc, chunk asc,
-    doc asc[, pos asc]) order the aggregated path produces.
-
-    This is the shuffle-remover's worker half: the index build no longer
-    pre-aggregates (term, doc_id) → tf in a separate JVM exchange — raw
-    tokens move ONCE to their shard and collapse to postings here with a
-    numpy lexsort + run-length pass (guide §1.2/§2.4: the (term, doc_id)
-    aggregation and the shard exchange were keyed compatibly, so one
-    exchange can serve both).  A term's rows still all co-locate in the
-    shard, so df stays derivable locally."""
-    if len(pdf) == 0:
-        i64, u64 = np.empty(0, dtype=np.int64), np.empty(0, dtype=np.uint64)
-        return (
-            i64, np.empty(0, dtype=object), i64, i64, u64, u64, i64,
-            i64 if store_positions else None,
-        )
-    codes, uniqs = pd.factorize(pdf["term"])
-    uniq_arr = np.asarray(uniqs, dtype=object)
-    order_u = np.argsort(uniq_arr)  # lexicographic term order
-    rank_of = np.empty(len(uniq_arr), dtype=np.int64)
-    rank_of[order_u] = np.arange(len(uniq_arr))
-    rank = rank_of[codes]
-    ids0 = pdf["doc_id"].to_numpy(dtype=np.int64)
-    dls0 = pdf["doc_len"].to_numpy(dtype=np.int64)
-    chunk0 = pdf["chunk"].to_numpy(dtype=np.int64)
-    if store_positions:
-        pos0 = pdf["pos"].to_numpy(dtype=np.int64)
-        order = np.lexsort((pos0, ids0, rank))
-        flat_pos = pos0[order]
-    else:
-        order = np.lexsort((ids0, rank))
-        flat_pos = None
-    rank_s = rank[order]
-    ids_s = ids0[order]
-    # posting boundaries: (term, doc) change — chunk is doc-derived, so it
-    # never splits a (term, doc) run
-    newpost = np.empty(ids_s.size, dtype=bool)
-    newpost[0] = True
-    newpost[1:] = (rank_s[1:] != rank_s[:-1]) | (ids_s[1:] != ids_s[:-1])
-    p_starts = np.flatnonzero(newpost)
-    tf = np.diff(np.append(p_starts, ids_s.size)).astype(np.uint64)
-    rank_p = rank_s[p_starts]
-    ids_p = ids_s[p_starts]
-    chunk_p = chunk0[order][p_starts]
-    dls_p = dls0[order][p_starts].astype(np.uint64)
-    # df per term = its posting count (one posting per distinct doc)
-    counts_by_rank = np.bincount(rank_p, minlength=len(uniq_arr))
-    dfv = counts_by_rank[rank_p].astype(np.int64)
-    return (
-        rank_p, uniq_arr[order_u], chunk_p, ids_p, tf, dls_p, dfv, flat_pos
-    )
-
-
-def _prepare_aggregated_rows(
-    pdf: pd.DataFrame, store_positions: bool, df_precomputed: bool
-) -> tuple:
-    """Pre-aggregated postings (term, chunk, doc_id, tf, doc_len
-    [, positions][, df]) → the same per-posting array tuple as
-    ``_aggregate_raw_rows`` (the original encoder input shape, kept for the
-    salted build path and the merge compactor)."""
-    pdf = pdf.sort_values(["term", "chunk", "doc_id"], kind="mergesort")
-    if df_precomputed:
-        # a salted sub-group sees only part of a term's postings, so df
-        # arrives precomputed (one global agg) instead of derived here
-        df_all = pdf["df"]
-    else:
-        df_all = pdf.groupby("term", sort=False)["doc_id"].transform("size")
-    term_codes, uniq_terms = pd.factorize(pdf["term"])  # sorted input
-    tfs = pdf["tf"].to_numpy(dtype=np.uint64)
-    flat_pos = None
-    if store_positions:
-        from itertools import chain
-
-        flat_pos = np.fromiter(
-            chain.from_iterable(pdf["positions"]), dtype=np.int64,
-            count=int(tfs.sum()),
-        )
-    return (
-        term_codes,
-        np.asarray(uniq_terms, dtype=object),
-        pdf["chunk"].to_numpy(dtype=np.int64),
-        pdf["doc_id"].to_numpy(dtype=np.int64),
-        tfs,
-        pdf["doc_len"].to_numpy(dtype=np.uint64),
-        df_all.to_numpy(dtype=np.int64),
-        flat_pos,
-    )
-
-
 def _encode_posting_frame(
     pdf: pd.DataFrame, shard: int, store_positions: bool,
-    df_precomputed: bool = False, raw: bool = False,
+    df_precomputed: bool = False,
 ) -> tuple[pd.DataFrame, int, int]:
-    """Postings → (SHARD_SCHEMA pandas frame, n_postings, distinct docs
-    seen).  ``raw=True`` takes un-aggregated exploded token rows (the
-    one-shuffle build pipeline); otherwise pre-aggregated postings.
+    """Postings (term, chunk, doc_id, tf, doc_len[, positions][, df]) →
+    (SHARD_SCHEMA pandas frame, n_postings, distinct docs seen).
+
+    ``df_precomputed``: a salted sub-group sees only part of a term's
+    postings, so df arrives precomputed (one global agg) instead of
+    derived here.
 
     Fully vectorized group encode: ZERO per-group pandas iteration (a groupby
     loop here cost ~0.4 ms/group of pure overhead — 240k (term, chunk) groups
     made it the dominant build cost)."""
-    if raw:
-        (term_codes, uniq_terms, chunk_np, ids, tfs, dls, dfv,
-         flat_pos) = _aggregate_raw_rows(pdf, store_positions)
+    pdf = pdf.sort_values(["term", "chunk", "doc_id"], kind="mergesort")
+    if df_precomputed:
+        dfv = pdf["df"].to_numpy(dtype=np.int64)
     else:
-        (term_codes, uniq_terms, chunk_np, ids, tfs, dls, dfv,
-         flat_pos) = _prepare_aggregated_rows(
-            pdf, store_positions, df_precomputed
+        dfv = (
+            pdf.groupby("term", sort=False)["doc_id"].transform("size")
+            .to_numpy(dtype=np.int64)
         )
+    term_codes, uniq_terms = pd.factorize(pdf["term"])  # sorted input
+    uniq_terms = np.asarray(uniq_terms, dtype=object)
+    chunk_np = pdf["chunk"].to_numpy(dtype=np.int64)
+    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
+    tfs = pdf["tf"].to_numpy(dtype=np.uint64)
+    dls = pdf["doc_len"].to_numpy(dtype=np.uint64)
     n_postings = ids.size
     n_docs_seen = int(np.unique(ids).size)
     if n_postings == 0:
@@ -328,6 +243,10 @@ def _encode_posting_frame(
     bmin_dl = np.minimum.reduceat(dls, block_starts).astype(np.int32)
     pos_blobs: list = [None] * len(starts)
     if store_positions:
+        flat_pos = np.fromiter(
+            chain.from_iterable(pdf["positions"]), dtype=np.int64,
+            count=int(tfs.sum()),
+        )
         # delta within each posting (absolute at posting starts); one
         # grouped varint pass over the flat position stream
         pos_ends = np.cumsum(tfs.astype(np.int64))
@@ -442,88 +361,68 @@ def _write_shard(
     return pd.DataFrame({"shard": [shard], "manifest_json": [json.dumps(manifest)]})
 
 
-def decode_shard_rows(pdf: pd.DataFrame, include_df: bool = False) -> pd.DataFrame:
-    """Inverse of ``_encode_posting_frame`` (positions excluded) → raw
-    postings (term, doc_id, tf, doc_len[, df]).  Used by the merge compactor
-    (re-encode a shard without re-tokenizing any document) and the indexed
-    batch server (score straight off the stored streams)."""
-    from ..functions.codec import varint_decode
-
-    has_df = include_df and "df" in pdf.columns
-    if len(pdf) == 0:
-        cols = {"term": [], "doc_id": [], "tf": [], "doc_len": []}
-        if include_df:
-            cols["df"] = []
-        return pd.DataFrame(cols).astype(
-            {"doc_id": np.int64, "tf": np.int64, "doc_len": np.int64,
-             **({"df": np.int64} if include_df else {})}
-        )
-    # ZERO per-row iteration (the loop version paid one python iteration +
-    # three decoder calls per (term, chunk) row): each blob column joins
-    # into ONE buffer and decodes in a single vectorized pass; the stored
-    # ``n_docs`` column gives the per-row value counts, so doc ids come
-    # back via a segmented cumsum over the concatenated gap stream (each
-    # row's first gap is the absolute id — the same pattern the phrase
-    # chunk scorer uses for position streams).
-    counts = pdf["n_docs"].to_numpy(dtype=np.int64)
-    gaps = varint_decode(b"".join(pdf["doc_gaps"])).astype(np.int64)
+def _undelta(deltas: np.ndarray, counts: np.ndarray) -> np.ndarray:
+    """Segmented prefix sums: segment i is the next ``counts[i]`` values of
+    ``deltas``, its first value absolute and the rest gaps — one cumsum over
+    the whole stream, each segment rebased on the previous one's total."""
+    c = np.cumsum(deltas)
     starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    c = np.cumsum(gaps)
     seg_base = np.where(starts > 0, c[starts - 1], 0)
-    ids = c - np.repeat(seg_base, counts)
-    out = {
-        "term": np.repeat(pdf["term"].to_numpy(dtype=object), counts),
-        "doc_id": ids,
-        "tf": varint_decode(b"".join(pdf["tfs"])).astype(np.int64),
-        "doc_len": varint_decode(b"".join(pdf["doc_lens"])).astype(np.int64),
-    }
-    if has_df:
-        out["df"] = np.repeat(pdf["df"].to_numpy(dtype=np.int64), counts)
-    return pd.DataFrame(out)
+    return c - np.repeat(seg_base, counts)
 
 
-def decode_shard_arrays(pdf: pd.DataFrame, include_df: bool = False) -> dict:
-    """Numpy-native twin of ``decode_shard_rows`` for scoring hot paths →
-    ``{"term_codes", "uniq_terms", "doc_id", "tf", "doc_len"[, "df"]}``.
+def decode_shard_arrays(
+    pdf: pd.DataFrame, include_df: bool = False, positions: bool = False
+) -> dict:
+    """Inverse of ``_encode_posting_frame``: shard rows → per-posting arrays
+    ``{"term_codes", "uniq_terms", "doc_id", "tf", "doc_len"[, "df"]
+    [, "positions"]}`` in row order, postings doc-ascending within a row.
+    The one reader of the shard byte format: every scorer, the phrase
+    matcher and the merge compactor decode through it.
 
-    Same decoded values in the same row order, but terms stay as small
-    integer codes (factorized over the ~rows-level term column, first-
-    appearance order — identical to ``pd.unique`` over the repeated
-    column) instead of an O(postings) repeated object array, and no
-    intermediate pandas frame is built.  The 960k profile measured
-    0.24 s/group for the pandas form vs ~0.05 s for this one — the object
-    ``term`` column repeat + frame construction dominated, not the varint
-    decode itself (guide §4.2: hand whole batches to vectorized native
-    code, don't round-trip through row-oriented containers)."""
-    from ..functions.codec import varint_decode
+    Terms stay small integer codes (factorized over the row-level term
+    column, first-appearance order — identical to ``pd.unique`` over the
+    repeated column; ``uniq_terms[term_codes]`` spells them out) instead of
+    an O(postings) repeated object array.  ``positions=True`` adds the flat
+    absolute position stream, posting i's ``tf[i]`` positions in order.
 
+    ZERO per-row iteration: each blob column joins into ONE buffer and
+    decodes in a single vectorized pass; the stored ``n_docs`` (and the
+    decoded ``tf``) give the per-row (per-posting) value counts, so doc ids
+    and positions come back via a segmented cumsum of their gap streams.
+    The 960k profile measured 0.24 s/group for a pandas-frame form vs
+    ~0.05 s for this one (guide §4.2: hand whole batches to vectorized
+    native code, don't round-trip through row-oriented containers)."""
     if len(pdf) == 0:
+        empty = np.empty(0, dtype=np.int64)
         out = {
-            "term_codes": np.empty(0, dtype=np.int64),
+            "term_codes": empty,
             "uniq_terms": np.empty(0, dtype=object),
-            "doc_id": np.empty(0, dtype=np.int64),
-            "tf": np.empty(0, dtype=np.int64),
-            "doc_len": np.empty(0, dtype=np.int64),
+            "doc_id": empty,
+            "tf": empty,
+            "doc_len": empty,
         }
         if include_df:
-            out["df"] = np.empty(0, dtype=np.int64)
+            out["df"] = empty
+        if positions:
+            out["positions"] = empty
         return out
     counts = pdf["n_docs"].to_numpy(dtype=np.int64)
     gaps = varint_decode(b"".join(pdf["doc_gaps"])).astype(np.int64)
-    starts = np.concatenate(([0], np.cumsum(counts)[:-1]))
-    c = np.cumsum(gaps)
-    seg_base = np.where(starts > 0, c[starts - 1], 0)
-    ids = c - np.repeat(seg_base, counts)
     row_codes, uniq_terms = pd.factorize(pdf["term"])
+    tf = varint_decode(b"".join(pdf["tfs"])).astype(np.int64)
     out = {
         "term_codes": np.repeat(row_codes.astype(np.int64), counts),
         "uniq_terms": np.asarray(uniq_terms, dtype=object),
-        "doc_id": ids,
-        "tf": varint_decode(b"".join(pdf["tfs"])).astype(np.int64),
+        "doc_id": _undelta(gaps, counts),
+        "tf": tf,
         "doc_len": varint_decode(b"".join(pdf["doc_lens"])).astype(np.int64),
     }
     if include_df and "df" in pdf.columns:
         out["df"] = np.repeat(pdf["df"].to_numpy(dtype=np.int64), counts)
+    if positions:
+        deltas = varint_decode(b"".join(pdf["positions"])).astype(np.int64)
+        out["positions"] = _undelta(deltas, tf)
     return out
 
 
@@ -568,12 +467,7 @@ def build_index(
     # ONE tokenize pass, TWO shuffles, ZERO joins, ZERO caching:
     #   shuffle 1: explode → groupBy(term, doc_id) postings (doc_len carried)
     #   shuffle 2: repartition by shard for the encode stage
-    # (A one-shuffle variant — raw tokens straight to their shard, postings
-    # aggregated inside the encoder via numpy lexsort — was measured at
-    # 240k docs in round 7: 3.4 s vs 2.85 s warm for this pipeline.  The
-    # JVM map-side combine plus a lighter Arrow transfer beat the saved
-    # exchange; the encoder stays byte-compatible with both input shapes
-    # should the trade flip at a different corpus shape.)
+    # (one-shuffle raw-token build lost, round 7: see OPTIMIZATION_r07.md)
     # Corpus stats (n_docs incl. empty docs + Σdoc_len — consistent with
     # ``operators.postings.corpus_stats`` and the DuckDB oracle) ride the
     # SAME pass via an Observation on the pre-explode tokenized node, so at

@@ -666,7 +666,7 @@ def merge_compact(
         IndexMeta,
         _encode_posting_frame,
         _write_shard,
-        decode_shard_rows,
+        decode_shard_arrays,
         load_index,
     )
     from dataclasses import asdict
@@ -890,14 +890,18 @@ def merge_compact(
     )
     chunk_bits = meta.chunk_bits
 
-    def merge_fn(key, base_pdf: pd.DataFrame, delta_pdf: pd.DataFrame) -> pd.DataFrame:
+    def merge_fn(key, base_pdf, delta_pdf):
         shard = int(key[0])
         t0 = time.monotonic()
-        raw_base = decode_shard_rows(base_pdf)
-        raw_base = raw_base.assign(
-            chunk=np.right_shift(
-                raw_base["doc_id"].to_numpy(dtype=np.int64), chunk_bits
-            )
+        flat = decode_shard_arrays(base_pdf)
+        raw_base = pd.DataFrame(
+            {
+                "term": flat["uniq_terms"][flat["term_codes"]],
+                "chunk": np.right_shift(flat["doc_id"], chunk_bits),
+                "doc_id": flat["doc_id"],
+                "tf": flat["tf"],
+                "doc_len": flat["doc_len"],
+            }
         )
         raw = pd.concat(
             [raw_base, delta_pdf[["term", "chunk", "doc_id", "tf", "doc_len"]]],

@@ -123,3 +123,57 @@ def test_homoglyph_query_permutation(plan):
     a = [(r["doc_id"], round(r["score"], 6)) for r in clean.collect()]
     b = [(r["doc_id"], round(r["score"], 6)) for r in mixed.collect()]
     assert a == b
+
+
+def test_no_index_plan_tokenizes_the_corpus_once(spark, sf_smoke_dir, monkeypatch):
+    """A plan without an index takes its corpus statistics off its raw
+    postings cache: one tokenize across plan open and the first search (a
+    separate ``corpus_stats`` pass made it two)."""
+    from hybrid_sanctions_search_engine_spark.operators import postings
+
+    calls = []
+    tokenize = postings.tokenized_documents
+
+    def spy(*args, **kwargs):
+        calls.append(args)
+        return tokenize(*args, **kwargs)
+
+    monkeypatch.setattr(postings, "tokenized_documents", spy)
+    docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
+    plan = HybridSearchPlan(docs)
+    try:
+        res, _ = plan.search("spark query join window", SearchOpts(top_k=10))
+        assert res.collect()
+    finally:
+        plan.close()
+    assert len(calls) == 1
+
+
+def test_no_index_plan_statistics(spark, sf_smoke_dir, tmp_path):
+    """The no-index plan's (n_docs, avgdl) equal ``corpus_stats`` bit for
+    bit, an empty-text doc included; with a null-text doc they equal
+    ``build_index``'s (the doc counts, at length 0 — ``corpus_stats``
+    averages over the non-null lengths instead)."""
+    from hybrid_sanctions_search_engine_spark.operators.postings import corpus_stats
+    from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
+    from hybrid_sanctions_search_engine_spark.sources.tables import local_frame
+
+    docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
+    docs = docs.select("doc_id", "text")
+    top = docs.agg(F.max("doc_id")).collect()[0][0]
+    extra = "doc_id long, text string"
+    with_empty = docs.unionByName(local_frame(spark, [(top + 1, "")], extra))
+    with_null = with_empty.unionByName(local_frame(spark, [(top + 2, None)], extra))
+
+    def plan_stats(frame):
+        plan = HybridSearchPlan(frame)
+        try:
+            return plan.stats.n_docs, plan.stats.avgdl
+        finally:
+            plan.close()
+
+    for frame in (docs, with_empty):
+        want = corpus_stats(frame)
+        assert plan_stats(frame) == (want.n_docs, want.avgdl)
+    rep = build_index(with_null, str(tmp_path / "idx"), n_shards=2, resume=False)
+    assert plan_stats(with_null) == (rep["n_docs"], rep["avgdl"])

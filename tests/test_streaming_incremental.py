@@ -14,6 +14,10 @@ from hybrid_sanctions_search_engine_spark.streaming.incremental import (
     start_delta_stream,
 )
 
+# a grouped-map body with partial type hints makes PySpark warn (and guess
+# its eval type) at every applyInPandas call
+pytestmark = pytest.mark.filterwarnings("error:Cannot infer the eval type:UserWarning")
+
 SCHEMA = "doc_id long, text string, lang string, source string, n_chars long"
 
 

@@ -11,6 +11,10 @@ from hybrid_sanctions_search_engine_spark.operators.bm25 import bm25_topk
 from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
 from hybrid_sanctions_search_engine_spark.sources.index_io import build_index, load_index
 
+# a grouped-map body with partial type hints makes PySpark warn (and guess
+# its eval type) at every applyInPandas call
+pytestmark = pytest.mark.filterwarnings("error:Cannot infer the eval type:UserWarning")
+
 QUERIES = [
     "spark query join",
     "window",
@@ -792,10 +796,11 @@ def test_single_query_group_scorer_bit_identical_to_chunk_scorer(msm, weighted):
     group, directly and through the in-place ``mapInPandas`` body fed
     cached partitions that mix groups in odd-sized Arrow batches, and
     through that body over the same postings as a raw ``flatten=None``
-    frame partitioned by doc — returns each query's top-k of
-    ``_score_chunks`` per chunk: doc ids, matched-term counts and every
-    bit of the scores.  All sum a doc's terms in row order; a change to
-    either accumulation order breaks the equality."""
+    frame partitioned by doc — returns each query's top-k of a per-chunk
+    reference that sums each doc's contributions in row order with
+    ``np.bincount``: doc ids, matched-term counts and every bit of the
+    scores.  A change to the scorer's accumulation order breaks the
+    equality."""
     import numpy as np
     import pandas as pd
 
@@ -804,7 +809,7 @@ def test_single_query_group_scorer_bit_identical_to_chunk_scorer(msm, weighted):
         make_batch_group_scorer,
         score_pre_grouped,
     )
-    from hybrid_sanctions_search_engine_spark.plans.wand import _score_chunks
+    from hybrid_sanctions_search_engine_spark.operators.similarity import local_topk
     from hybrid_sanctions_search_engine_spark.sources.index_io import (
         decode_shard_arrays,
     )
@@ -831,11 +836,34 @@ def test_single_query_group_scorer_bit_identical_to_chunk_scorer(msm, weighted):
         out = out.sort_values(["score", "doc_id"], ascending=[False, True])
         return out.head(k)[["doc_id", "score", "n_terms_matched"]].reset_index(drop=True)
 
+    def by_chunk(chunk_rows, w, msm_n) -> pd.DataFrame:
+        """One chunk's top-k: every posting's BM25 contribution (times its
+        term's weight), summed per doc in row order."""
+        flat = decode_shard_arrays(chunk_rows, include_df=True)
+        tf = flat["tf"].astype(np.float64)
+        dl = flat["doc_len"].astype(np.float64)
+        df = flat["df"].astype(np.float64)
+        idf = np.log(1.0 + (meta.n_docs - df + 0.5) / (df + 0.5))
+        contrib = idf * (tf * (meta.k1 + 1.0)) / (
+            tf + meta.k1 * (1.0 - meta.b + meta.b * dl / meta.avgdl)
+        )
+        if w is not None:
+            term_w = np.array([w.get(t, 1.0) for t in flat["uniq_terms"]])
+            contrib = contrib * term_w[flat["term_codes"]]
+        uniq, inv = np.unique(flat["doc_id"], return_inverse=True)
+        sums = np.bincount(inv, weights=contrib)
+        counts = np.bincount(inv)
+        qual = counts >= msm_n
+        uniq, sums, counts = uniq[qual], sums[qual], counts[qual]
+        order = local_topk(uniq, sums, k)
+        return pd.DataFrame(
+            {"doc_id": uniq[order], "score": sums[order], "n_terms_matched": counts[order]}
+        )
+
     want = {}
     for q, (ts, w, msm_n) in queries.items():
-        by_chunk = _score_chunks(k, meta, w, min_match=msm_n)
         sub = rows[rows["term"].isin(ts)]
-        want[q] = top([by_chunk((c,), g) for c, g in sub.groupby("chunk", sort=False)], q)
+        want[q] = top([by_chunk(g, w, msm_n) for _, g in sub.groupby("chunk", sort=False)], q)
 
     # a standing plan's cache: groups hashed onto fewer partitions, each
     # partition term-sorted, streamed as 7-row Arrow batches

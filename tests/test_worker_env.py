@@ -254,7 +254,8 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
 
     expected = {
         "operators.fuzzy.dictionary_bloom.<locals>.build",
-        "plans.wand._score_chunks.<locals>.score",
+        # topk_search's chunk groups: the batch scorer on a batch of one
+        "operators.bm25.make_batch_group_scorer.<locals>.score_group",
         # every lexical stage's one in-place body (the batch scorer rides
         # inside it)
         "operators.bm25.score_pre_grouped.<locals>.score",
