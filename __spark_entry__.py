@@ -65,7 +65,7 @@ toks AS (
          list_filter(regexp_split_to_array(lower(text), '[^\\p{L}\\p{N}]+'), t -> t <> '') AS tokens
   FROM documents
 ),
-dl AS (SELECT doc_id, len(tokens) AS doc_len FROM toks),
+dl AS (SELECT doc_id, coalesce(len(tokens), 0) AS doc_len FROM toks),
 post AS (SELECT doc_id, unnest(tokens) AS term FROM toks),
 tfs AS (SELECT term, doc_id, count(*)::INT AS tf FROM post GROUP BY 1, 2)
 """

@@ -7,13 +7,14 @@ this module publishes the equivalent curves for the served ANN layouts —
 recall@k vs ``n_probe`` (IVF) and vs ``refine`` (IVF-PQ, IVF-SQ8) —
 measured against brute-force ground truth on a clustered fixture.
 
-Methodology: the candidate sets are derived from the WRITTEN index's own
-columns (``ivf_cell`` and the codes), loaded once, with the probe
-selection replayed in numpy — semantically identical to
-``knn_ivf_probe`` / ``knn_ivf_pq_probe`` / ``knn_ivf_sq8_probe`` (each
-prunes to those candidates and exact-cosine reranks; the equivalence is
-pinned by ``tests/test_ann_recall.py``), so a 5-dial × 50-query sweep
-costs one index read instead of 250 Spark jobs.
+Methodology: ``reference_topk`` replays a layout's served probe
+(``knn_ivf_probe_many`` / ``knn_ivf_pq_probe_many`` /
+``knn_ivf_sq8_probe_many``) in numpy from the WRITTEN index's own columns
+— the same query prep and probe order (``similarity.probe_queries``), the
+same injected code score, the same (−score, id) tie-breaks and cosine op
+shapes — so a dial sweep reads the index instead of running a Spark job
+per point, and the tests check each probe against it (ids exact, cosines
+at 9 decimals).
 """
 
 from __future__ import annotations
@@ -103,151 +104,90 @@ def brute_force_topk(x: np.ndarray, q: np.ndarray, k: int) -> np.ndarray:
     return out
 
 
-def ivf_recall_curve(
+def reference_topk(
     index_dir: str,
-    x: np.ndarray,
-    queries: np.ndarray,
-    truth: np.ndarray,
-    n_probes: list[int],
+    layout: str,
+    queries: list[tuple[int, list[float]]],
     k: int = 10,
-) -> dict[int, float]:
-    """recall@k vs n_probe, replaying ``knn_ivf_probe``'s candidate selection
-    (nearest-centroid cells by cosine, exact rerank inside) from the written
-    index's cell assignments."""
+    n_probe: int = 3,
+    refine: int = 4,
+) -> dict[int, tuple[np.ndarray, np.ndarray]]:
+    """Per query id, the (ids, cosines) top-k the ``layout`` probe
+    (``ivf`` / ``ivf_pq`` / ``ivf_sq8``; ``ivf`` ignores ``refine``)
+    returns over the index at ``index_dir``, computed in numpy: rows of
+    the query's probed cells, for a coded layout cut to the top
+    ``refine·k`` by the layout's code score (``pq.adc_scorer`` /
+    ``sq.sq8_scorer``, the scorer the probe injects into
+    ``fused_probe.fused_cell_probe_many``), then ranked by exact cosine."""
     import pyarrow.dataset as ds
 
-    meta = _read_meta(index_dir, "_ivf_meta.json")
+    from .similarity import local_topk, probe_queries
+
+    meta = _read_meta(index_dir, f"_{layout}_meta.json")
     cents = np.asarray(meta["centroids"], dtype=np.float64)
+    if layout == "ivf_pq":
+        from .pq import adc_scorer
+
+        books = np.asarray(meta["codebooks"], dtype=np.float64)
+        code_col, prepare = "pq_code", adc_scorer(cents, books)
+    elif layout == "ivf_sq8":
+        from .sq import sq8_scorer
+
+        vmin = np.asarray(meta["vmin"], dtype=np.float64)
+        vmax = np.asarray(meta["vmax"], dtype=np.float64)
+        code_col, prepare = "sq_code", sq8_scorer(vmin, vmax)
+    elif layout == "ivf":
+        code_col = prepare = None
+    else:
+        raise ValueError(f"unknown ANN layout {layout!r}")
+    cols = ["vec_id", "ivf_cell", "embedding"] + ([code_col] if code_col else [])
     tbl = ds.dataset(index_dir, format="parquet", partitioning="hive").to_table(
-        columns=["vec_id", "ivf_cell"]
+        columns=cols
     )
-    vec_ids = np.asarray(tbl["vec_id"], dtype=np.int64)
-    cells = np.asarray(tbl["ivf_cell"], dtype=np.int64)
-    # -1 fill: for a non-contiguous id space, uninitialized slots could
-    # hold garbage equal to a probed cell id and inject phantom candidates
-    # into the measurement (review finding, round 5)
-    cell_of = np.full(vec_ids.max() + 1, -1, dtype=np.int64)
-    cell_of[vec_ids] = cells
-    out: dict[int, float] = {}
-    for n_probe in n_probes:
-        hits = 0
-        for i in range(queries.shape[0]):
-            probe = set(np.argsort(-(cents @ queries[i]))[:n_probe].tolist())
-            cand = np.flatnonzero(np.isin(cell_of, list(probe)))
-            if cand.size == 0:
-                continue
-            s = x[cand] @ queries[i]
-            kk = min(k, cand.size)
-            top = cand[np.lexsort((cand, -s))[:kk]]
-            hits += len(set(top.tolist()) & set(truth[i].tolist()))
-        out[n_probe] = hits / (queries.shape[0] * k)
+    ids = np.asarray(tbl["vec_id"], dtype=np.int64)
+    cell = np.asarray(tbl["ivf_cell"], dtype=np.int64)
+    x = np.asarray(
+        tbl["embedding"].combine_chunks().flatten(), dtype=np.float64
+    ).reshape(len(ids), -1)
+    norms = np.maximum(np.linalg.norm(x, axis=1), 1e-300)
+    prep = probe_queries(queries, cents, n_probe)
+    if prepare is not None:
+        score_masked = prepare(prep)
+        codes = np.frombuffer(
+            b"".join(tbl[code_col].to_pylist()), dtype=np.uint8
+        ).reshape(len(ids), -1)
+    out = {}
+    for qi, qid in enumerate(prep.qids.tolist()):
+        cand = np.flatnonzero(np.isin(cell, prep.cells[qi]))
+        if prepare is not None:
+            s = score_masked(qi, codes[cand], cell[cand])
+            cand = cand[local_topk(ids[cand], s, refine * k)]
+        cos = (x[cand] @ prep.qmat[qi]) / (norms[cand] * prep.qnorms[qi])
+        top = local_topk(ids[cand], cos, k)
+        out[qid] = (ids[cand][top], cos[top])
     return out
 
 
-def ivf_pq_recall_curve(
+def recall_at_k(
     index_dir: str,
-    x: np.ndarray,
+    layout: str,
     queries: np.ndarray,
     truth: np.ndarray,
-    refines: list[int],
-    n_probe: int = 4,
-    k: int = 10,
-) -> dict[int, float]:
-    """recall@k vs the ``refine`` dial at fixed ``n_probe``, replaying
-    ``knn_ivf_pq_probe``'s candidate selection (nearest-centroid cells,
-    ADC top refine·k with the (−score, id) tie-break, exact re-rank) from
-    the written index's own cells/codes — the PQ analogue of
-    ``ivf_recall_curve``, isolating what quantized candidate selection
-    costs vs the IVF-Flat ceiling at the same n_probe."""
-    import pyarrow.dataset as ds
-
-    from .pq import adc_lookup_table
-
-    meta = _read_meta(index_dir, "_ivf_pq_meta.json")
-    cents = np.asarray(meta["centroids"], dtype=np.float64)
-    books = np.asarray(meta["codebooks"], dtype=np.float64)
-    m = books.shape[0]
-    tbl = ds.dataset(index_dir, format="parquet", partitioning="hive").to_table(
-        columns=["vec_id", "ivf_cell", "pq_code"]
+    k: int,
+    n_probe: int,
+    refine: int = 4,
+) -> float:
+    """recall@k of the ``layout`` probe at one dial point: the share of
+    each query's ``truth`` row (``brute_force_topk``) that
+    ``reference_topk`` returns, over all queries (rows of ``queries``)."""
+    tops = reference_topk(
+        index_dir, layout, list(enumerate(queries)), k, n_probe, refine
     )
-    vec_ids = np.asarray(tbl["vec_id"], dtype=np.int64)
-    cells = np.asarray(tbl["ivf_cell"], dtype=np.int64)
-    codes = np.frombuffer(
-        b"".join(c.as_py() for c in tbl["pq_code"]), dtype=np.uint8
-    ).reshape(len(vec_ids), m)
-    cols = np.arange(m)
-    # the probe, ADC scan, and sort are refine-independent — score each
-    # query once and slice the shared ordering per refine
-    hits = {r: 0 for r in refines}
-    for i in range(queries.shape[0]):
-        qn = queries[i] / max(np.linalg.norm(queries[i]), 1e-12)
-        probe = np.argsort(-(cents @ qn))[:n_probe]
-        cand = np.flatnonzero(np.isin(cells, probe))
-        if cand.size == 0:
-            continue
-        lut = adc_lookup_table(queries[i].tolist(), books)
-        # residual coding: add each candidate's per-cell q̂·centroid
-        adc = lut[cols, codes[cand]].sum(axis=1) + (cents @ qn)[cells[cand]]
-        order = np.lexsort((vec_ids[cand], -adc))
-        for refine in refines:
-            ids = vec_ids[cand[order[: refine * k]]]
-            s = x[ids] @ queries[i]
-            kk = min(k, ids.size)
-            top = ids[np.lexsort((ids, -s))[:kk]]
-            hits[refine] += len(set(top.tolist()) & set(truth[i].tolist()))
-    return {r: hits[r] / (queries.shape[0] * k) for r in refines}
-
-
-def ivf_sq8_recall_curve(
-    index_dir: str,
-    x: np.ndarray,
-    queries: np.ndarray,
-    truth: np.ndarray,
-    refines: list[int],
-    n_probe: int = 4,
-    k: int = 10,
-) -> dict[int, float]:
-    """recall@k vs the ``refine`` dial at fixed ``n_probe``, replaying
-    ``knn_ivf_sq8_probe``'s candidate selection (nearest-centroid cells,
-    decoded-dot top refine·k with the (−score, id) tie-break, exact
-    re-rank) from the written index's own cells/codes — the int8 analogue
-    of ``ivf_pq_recall_curve``."""
-    import pyarrow.dataset as ds
-
-    from .sq import _sq8_query_form, _sq8_scores
-
-    meta = _read_meta(index_dir, "_ivf_sq8_meta.json")
-    cents = np.asarray(meta["centroids"], dtype=np.float64)
-    vmin = np.asarray(meta["vmin"], dtype=np.float64)
-    vmax = np.asarray(meta["vmax"], dtype=np.float64)
-    dim = cents.shape[1]
-    tbl = ds.dataset(index_dir, format="parquet", partitioning="hive").to_table(
-        columns=["vec_id", "ivf_cell", "sq_code"]
+    hits = sum(
+        len(set(tops[i][0].tolist()) & set(truth[i].tolist()))
+        for i in range(len(queries))
     )
-    vec_ids = np.asarray(tbl["vec_id"], dtype=np.int64)
-    cells = np.asarray(tbl["ivf_cell"], dtype=np.int64)
-    codes = np.frombuffer(
-        b"".join(c.as_py() for c in tbl["sq_code"]), dtype=np.uint8
-    ).reshape(len(vec_ids), dim)
-    # probe + decoded-dot scan + sort are refine-independent — score each
-    # query once and slice the shared ordering per refine
-    hits = {r: 0 for r in refines}
-    for i in range(queries.shape[0]):
-        qn = queries[i] / max(np.linalg.norm(queries[i]), 1e-12)
-        probe = np.argsort(-(cents @ qn))[:n_probe]
-        cand = np.flatnonzero(np.isin(cells, probe))
-        if cand.size == 0:
-            continue
-        w, b = _sq8_query_form(queries[i].tolist(), vmin, vmax)
-        s = _sq8_scores(codes[cand], w, b)
-        order = np.lexsort((vec_ids[cand], -s))
-        for refine in refines:
-            ids = vec_ids[cand[order[: refine * k]]]
-            cos = x[ids] @ queries[i]
-            kk = min(k, ids.size)
-            top = ids[np.lexsort((ids, -cos))[:kk]]
-            hits[refine] += len(set(top.tolist()) & set(truth[i].tolist()))
-    return {r: hits[r] / (queries.shape[0] * k) for r in refines}
+    return hits / (len(queries) * k)
 
 
 def recall_report(
@@ -299,21 +239,20 @@ def recall_report(
                 write_ivf_sq8_index(emb, sq_dir, n_centroids=n_centroids)
             truth = brute_force_topk(x, q, k)
             out[f"ivf_recall_at_{k}_by_n_probe_{mode}"] = {
-                str(d): round(v, 4)
-                for d, v in ivf_recall_curve(ivf_dir, x, q, truth, n_probes, k).items()
+                str(p): round(recall_at_k(ivf_dir, "ivf", q, truth, k, p), 4)
+                for p in n_probes
             }
-            out[f"ivf_pq_recall_at_{k}_by_refine_{mode}_n_probe_{pq_n_probe}"] = {
-                str(d): round(v, 4)
-                for d, v in ivf_pq_recall_curve(
-                    pq_dir, x, q, truth, pq_refines, pq_n_probe, k
-                ).items()
-            }
-            out[f"ivf_sq8_recall_at_{k}_by_refine_{mode}_n_probe_{pq_n_probe}"] = {
-                str(d): round(v, 4)
-                for d, v in ivf_sq8_recall_curve(
-                    sq_dir, x, q, truth, sq_refines, pq_n_probe, k
-                ).items()
-            }
+            for layout, path, refines in (
+                ("ivf_pq", pq_dir, pq_refines),
+                ("ivf_sq8", sq_dir, sq_refines),
+            ):
+                key = f"{layout}_recall_at_{k}_by_refine_{mode}_n_probe_{pq_n_probe}"
+                out[key] = {
+                    str(r): round(
+                        recall_at_k(path, layout, q, truth, k, pq_n_probe, r), 4
+                    )
+                    for r in refines
+                }
         return out
     finally:
         if workdir is None:

@@ -476,24 +476,36 @@ def batch_query_terms(
     return qid_list, term_to_qidx, msm_arr
 
 
-def score_pre_grouped(score_group):
+def score_pre_grouped(score_group, k: int):
     """The in-place scoring body: a ``mapInPandas`` function over a
     standing cache whose every partition holds ALL the postings of its docs
     (term-sorted within the partition), coalesced into fewer tasks.  Rows
     carry their cached partition id in ``part``; coalescing concatenates
     whole cached partitions, so each partition's rows arrive contiguously
-    and are scored through ``score_group`` (``make_batch_group_scorer``)
-    as soon as the next partition's rows start.  A cached partition is a
-    doc group, so its local top-k per query is exact; per-task memory
-    stays at one cached partition's postings."""
+    and are scored through ``score_group`` (``make_batch_group_scorer``
+    with top ``k``) as soon as the next partition's rows start.  A cached
+    partition is a doc group, so its local top-k per query is exact; the
+    task merges its partitions' tops into one top-k per query under
+    (score desc, doc_id asc) before it yields, so its output is ≤
+    |queries| × k rows however many partitions it coalesced.  Per-task
+    memory stays at one cached partition's postings."""
     import numpy as np
     import pandas as pd
 
     def flush(parts: list) -> pd.DataFrame:
         return score_group(None, pd.concat(parts, ignore_index=True))
 
+    def merged(tops: list) -> pd.DataFrame:
+        out = pd.concat(tops, ignore_index=True)
+        order = np.lexsort(
+            (out["doc_id"].to_numpy(), -out["score"].to_numpy(),
+             out["query_id"].to_numpy())
+        )
+        out = out.iloc[order]
+        return out[(out.groupby("query_id").cumcount() < k).to_numpy()]
+
     def score(batches):
-        held, held_part = [], None
+        held, held_part, tops = [], None, []
         for pdf in batches:
             if pdf.empty:
                 continue
@@ -501,29 +513,33 @@ def score_pre_grouped(score_group):
             cuts = (np.flatnonzero(parts[1:] != parts[:-1]) + 1).tolist()
             for lo, hi in zip([0, *cuts], [*cuts, len(pdf)]):
                 if held and parts[lo] != held_part:
-                    yield flush(held)
+                    tops.append(flush(held))
                     held = []
                 held_part = parts[lo]
                 held.append(pdf.iloc[lo:hi])
         if held:
-            yield flush(held)
+            tops.append(flush(held))
+        if tops:
+            yield merged(tops)
 
     return score
 
 
-def topk_pre_grouped(matched: DataFrame, score_group) -> DataFrame:
-    """Task-local tops (``BATCH_SCORE_SCHEMA``) of ``matched`` — a filter
-    over a standing cache laid out as ``score_pre_grouped`` requires —
-    scored in place: tag ``spark_partition_id()``, ``coalesce`` to
-    ``defaultParallelism``, one ``mapInPandas``.  One job with no exchange,
-    fresh cache or not (``mapInPandas`` requires no distribution), and at
-    most one wave of Python tasks: each costs ~40-60 ms of a core whatever
-    its work, so one wave beats a groupBy over the cache's partitions."""
+def topk_pre_grouped(matched: DataFrame, score_group, k: int) -> DataFrame:
+    """Task-local top-``k`` per query (``BATCH_SCORE_SCHEMA``) of
+    ``matched`` — a filter over a standing cache laid out as
+    ``score_pre_grouped`` requires — scored in place by ``score_group``
+    (built with the same ``k``): tag ``spark_partition_id()``, ``coalesce``
+    to ``defaultParallelism``, one ``mapInPandas``.  One job with no
+    exchange, fresh cache or not (``mapInPandas`` requires no
+    distribution), and at most one wave of Python tasks: each costs ~40-60
+    ms of a core whatever its work, so one wave beats a groupBy over the
+    cache's partitions."""
     par = matched.sparkSession.sparkContext.defaultParallelism
     return (
         matched.withColumn("part", F.spark_partition_id())
         .coalesce(par)
-        .mapInPandas(score_pre_grouped(score_group), BATCH_SCORE_SCHEMA)
+        .mapInPandas(score_pre_grouped(score_group, k), BATCH_SCORE_SCHEMA)
     )
 
 
@@ -575,7 +591,7 @@ def cached_topk_local(
     matched = cached.where(F.col("term").isin(sorted(term_to_qidx))).select(
         *RAW_CACHE_COLS
     )
-    return topk_pre_grouped(matched, score_group)
+    return topk_pre_grouped(matched, score_group, k)
 
 
 def _aggregate_exploded_rows(pdf):

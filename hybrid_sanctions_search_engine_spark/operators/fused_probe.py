@@ -11,13 +11,13 @@ cannot silently miss the other.
 
 Bit-parity contract (the reason the scorer is injected per MASKED block,
 not fused across queries): candidate selection must be bit-identical to
-the corresponding single-query probe, so the scorer must perform the same
-row-local operations on ``codes[mask]`` that the single-query scan
-performs on its batch — never a fused multi-query contraction, whose
-different BLAS summation order drifts the last ulp and flips selection at
-the refine boundary.  Re-ranked cosines follow the
-``knn_bruteforce_many`` convention: 9-decimal parity with exact id sets
-(dgemv bits vary with matrix row count).
+``ann_recall.reference_topk``, which scores each query's candidate rows
+in one block through the same injected scorer, so the scorer must
+perform row-local operations on ``codes[mask]`` — never a fused
+multi-query contraction, whose different BLAS summation order drifts the
+last ulp and flips selection at the refine boundary.  Re-ranked cosines
+follow the ``knn_bruteforce_many`` convention: 9-decimal parity with
+exact id sets (dgemv bits vary with matrix row count).
 """
 
 from __future__ import annotations
@@ -31,20 +31,22 @@ from pyspark.sql import functions as F
 
 from ..sources.tables import local_frame
 from .similarity import (
+    ProbeQueries,
     ProbeRerank,
     local_topk,
     merge_local_topk,
     merge_probe_tops,
     probe_input_cols,
+    probe_queries,
     probe_schema,
     task_rows,
     topk_record_batch,
     vector_rows,
 )
 
-# prepare_scorer(qn) -> score_masked(qi, masked_codes, masked_cells) -> scores
+# prepare_scorer(queries) -> score_masked(qi, masked_codes, masked_cells) -> scores
 PrepareScorer = Callable[
-    [np.ndarray], Callable[[int, np.ndarray, np.ndarray], np.ndarray]
+    [ProbeQueries], Callable[[int, np.ndarray, np.ndarray], np.ndarray]
 ]
 
 
@@ -86,21 +88,9 @@ def fused_cell_probe_many(
     spark = indexed.sparkSession
     if not queries:
         return [] if as_rows else local_frame(spark, [], probe_schema(id_col, rerank))
-    qids = np.asarray([q for q, _ in queries], dtype=np.int64)
-    qmat = np.asarray([v for _, v in queries], dtype=np.float64)
-    qnorms = np.array(
-        [
-            max(float(np.linalg.norm(np.asarray(v, dtype=np.float64))), 1e-300)
-            for _, v in queries
-        ]
-    )
-    qn = qmat / qnorms[:, None]
-    score_masked = prepare_scorer(qn)
-    cells = [
-        np.argsort(-(centroids @ qn[i]))[:n_probe].astype(np.int64)
-        for i in range(len(qids))
-    ]
-    union = sorted({int(c) for cs in cells for c in cs})
+    prep = probe_queries(queries, centroids, n_probe)
+    qids, qmat, qnorms, _, cells, union = prep
+    score_masked = prepare_scorer(prep)
     nq, nsel = len(qids), refine * k
 
     def code_scan(it):

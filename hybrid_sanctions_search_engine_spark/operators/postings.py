@@ -45,9 +45,11 @@ def widen_narrow_scan(docs: DataFrame) -> DataFrame:
 
 
 def tokenized_documents(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """documents + `tokens` (array<string>) + `doc_len` columns, JVM-side."""
+    """documents + `tokens` (array<string>) + `doc_len` columns, JVM-side.
+    A null-text doc has null tokens and counts at length 0, as in
+    ``build_index``'s corpus stats."""
     return docs.withColumn("tokens", spark_index_tokens(F.col(text_col))).withColumn(
-        "doc_len", F.size("tokens")
+        "doc_len", F.coalesce(F.size("tokens"), F.lit(0))
     )
 
 

@@ -15,20 +15,21 @@ Serving is Asymmetric Distance Computation (ADC): per query build an
 ``m × 256`` lookup table of subspace dot products (the query stays
 full-precision — that's the "asymmetric" part), then every candidate's
 approximate cosine is a sum of ``m`` table lookups — a numpy fancy-index
-over the code matrix, no decode, no gemm, and the scan reads ONLY
-``(id, pq_code)`` (column-pruned; asserted in tests).  The exact re-rank
-then touches raw vectors for just the top ``refine·k`` survivors, so
-results converge to exact as ``refine`` grows (parity with
-``knn_bruteforce`` when the candidate set covers the probed cells is
-pinned bit-exact in tests).
+over the code matrix, no decode, no gemm, and the code scan reads ONLY
+``(id, pq_code, ivf_cell)`` (column-pruned; asserted in tests).  The
+exact re-rank then touches raw vectors for just the top ``refine·k``
+survivors, so results converge to exact as ``refine`` grows (parity with
+brute force when the candidate set covers the probed cells is pinned in
+tests).
 
 Layout composes with the existing IVF partitioning
 (``similarity.write_ivf_index``): ``write_ivf_pq_index`` writes
 ``partitionBy(ivf_cell)`` parquet carrying ``(id, pq_code, embedding)`` so
-a probe prunes to ``n_probe`` partition directories, ADC-scans their code
-column, and re-ranks survivors from the same files' vector column via an
-``id IN (...)`` pushed filter.  All numpy stages are Arrow-vectorized;
-nothing here is row-at-a-time Python.
+``knn_ivf_pq_probe_many`` — the layout's one probe; a single query is a
+batch of one — prunes to the probed partition directories, ADC-scans
+their code column, and re-ranks survivors from the same files' vector
+column via an ``id IN (...)`` pushed filter.  All numpy stages are
+Arrow-vectorized; nothing here is row-at-a-time Python.
 
 Codes quantize the RESIDUAL ``x̂ − centroid(cell)`` (FAISS IndexIVFPQ's
 encoding), not the raw vector: on clustered corpora the members of one
@@ -51,12 +52,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.fs import fs_for
-from .similarity import (
-    assign_ivf_cells,
-    knn_bruteforce,
-    local_topk,
-    train_ivf_centroids,
-)
+from .similarity import assign_ivf_cells, train_ivf_centroids
 
 
 def _normalized(x: np.ndarray) -> np.ndarray:
@@ -203,55 +199,30 @@ def adc_lookup_table(query_vec: list[float], codebooks: np.ndarray) -> np.ndarra
     return np.einsum("mkd,md->mk", codebooks, q.reshape(m, dsub))
 
 
-def adc_scan_topn(
-    codes_df: DataFrame,
-    codebooks: np.ndarray,
-    query_vec: list[float],
-    n: int,
-    id_col: str = "vec_id",
-    code_col: str = "pq_code",
-    centroids: np.ndarray | None = None,
-    cell_col: str = "ivf_cell",
-) -> DataFrame:
-    """Approximate top-n by ADC over the code column → (id, adc_score).
+def adc_scorer(centroids: np.ndarray, codebooks: np.ndarray):
+    """The residual ADC code score, as a ``fused_probe.PrepareScorer``:
+    given a batch's ``ProbeQueries``, a ``score_masked(qi, codes, cells)``
+    returning ``q̂·c(cell) + Σ_j lut[j, code_j]`` per row.  The probe and
+    ``ann_recall.reference_topk`` both score through it."""
+    cols = np.arange(codebooks.shape[0])
 
-    mapInPandas emits only each Arrow batch's local top-n (k-bounded, by
-    the compound (−score, id) order so the global merge is exact over the
-    ADC scores); the input is column-pruned to ``(id, code[, cell])`` —
-    the raw vector column never leaves parquet (ReadSchema-asserted in
-    tests; the cell is a hive partition value, not file IO).
+    def prepare(queries):
+        # per-query adc_lookup_table calls and centroid gemvs, NOT one 3-D
+        # einsum / one gemm: a fused contraction can sum in a different
+        # order, so a query's scores would depend on which queries share
+        # its batch, and a last-ulp drift flips candidate selection at the
+        # refine boundary
+        luts = [adc_lookup_table(v, codebooks) for v in queries.qmat]
+        cent_dots = [centroids @ v for v in queries.qn]
 
-    With ``centroids`` (residual-coded index), each row's score adds its
-    cell's ``q̂·centroid`` offset: ``q̂·x̂ ≈ q̂·c + Σ lut[j, code_j]``."""
-    lut = adc_lookup_table(query_vec, codebooks)
-    m = lut.shape[0]
-    cols = np.arange(m)
-    cent_dots = None
-    if centroids is not None:
-        qn = np.asarray(query_vec, dtype=np.float64)
-        qn = qn / max(np.linalg.norm(qn), 1e-12)
-        cent_dots = centroids @ qn
+        def score_masked(
+            qi: int, codes_m: np.ndarray, cell_m: np.ndarray
+        ) -> np.ndarray:
+            return luts[qi][cols, codes_m].sum(axis=1) + cent_dots[qi][cell_m]
 
-    def score(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            codes = np.frombuffer(
-                b"".join(pdf[code_col]), dtype=np.uint8
-            ).reshape(len(pdf), m)
-            s = lut[cols, codes].sum(axis=1)
-            if cent_dots is not None:
-                s = s + cent_dots[pdf[cell_col].to_numpy(dtype=np.int64)]
-            order = local_topk(pdf[id_col].to_numpy(), s, n)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy()[order], "adc_score": s[order]}
-            )
+        return score_masked
 
-    in_cols = [id_col, code_col] + ([cell_col] if cent_dots is not None else [])
-    scored = codes_df.select(*in_cols).mapInPandas(
-        score, f"{id_col} long, adc_score double"
-    )
-    return scored.orderBy(F.desc("adc_score"), F.asc(id_col)).limit(n)
+    return prepare
 
 
 def write_ivf_pq_index(
@@ -315,45 +286,6 @@ def load_ivf_pq_index(spark, path: str) -> tuple[DataFrame, np.ndarray, np.ndarr
     )
 
 
-def knn_ivf_pq_probe(
-    indexed: DataFrame,
-    centroids: np.ndarray,
-    codebooks: np.ndarray,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 3,
-    refine: int = 4,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k over a ``write_ivf_pq_index`` dataset → (id, cos_sim).
-
-    Three stages, each reading only what it needs:
-    1. cell probe — ``ivf_cell IN (...)`` partition pruning (directories).
-    2. ADC scan — byte codes only, approximate top ``refine·k`` candidate
-       ids (k-bounded collect: ``refine·k`` ids, never a corpus-sized
-       driver set).
-    3. exact re-rank — ``id IN (candidates)`` over the SAME pruned
-       partitions' vector column (row-group stats prune on id), exact
-       cosine via ``knn_bruteforce`` (bit-identical scoring to every other
-       vector path).
-
-    ``refine`` is the recall dial: results converge to the IVF-Flat probe
-    as it grows and equal it exactly once ``refine·k`` covers the probed
-    cells (pinned in tests); recall curves on the clustered fixture live
-    in tests/test_pq.py and BENCH.md."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    probe = [int(c) for c in np.argsort(-(centroids @ q))[:n_probe]]
-    cells = indexed.where(F.col("ivf_cell").isin(probe))
-    cand = adc_scan_topn(
-        cells, codebooks, query_vec, refine * k, id_col, centroids=centroids
-    )
-    cand_ids = [r[id_col] for r in cand.collect()]
-    survivors = cells.where(F.col(id_col).isin(cand_ids))
-    return knn_bruteforce(survivors, query_vec, k, id_col, vec_col, arrow=True)
-
-
 def knn_ivf_pq_probe_many(
     indexed: DataFrame,
     centroids: np.ndarray,
@@ -368,66 +300,35 @@ def knn_ivf_pq_probe_many(
     as_rows: bool = False,
     rerank=None,
 ) -> "DataFrame | list[tuple[int, int, float]]":
-    """Batched IVF-PQ probe → (query_id, id, cos_sim): TWO map-only passes
-    for the whole query set (the ``knn_ivf_probe_many`` fused shape,
-    round 6 — the per-(query, doc) fan-out never leaves the Arrow task).
+    """IVF-PQ probe → (query_id, id, cos_sim): TWO map-only passes for
+    the whole query set (the ``knn_ivf_probe_many`` fused shape — the
+    per-(query, doc) fan-out never leaves the Arrow task).
 
     1. ADC pass over the union of all queries' probed cells, reading only
-       ``(id, pq_code, cell)``: each Arrow batch masks every query to ITS
-       probed cells, scores the masked codes against that query's lookup
-       table (one fancy-index sum), and emits the batch-local top
-       ``refine·k``; a driver merge picks each query's global candidates
-       (the collect is task-bounded, never a corpus-sized set).
+       ``(id, pq_code, cell)``: each task masks every query to ITS probed
+       cells, scores the masked codes through ``adc_scorer`` (one
+       fancy-index sum plus the per-cell offset), and emits the task-local
+       top ``refine·k``; a driver merge picks each query's global
+       candidates (the collect is task-bounded, never a corpus-sized set).
     2. exact re-rank pass over ``id IN (∪ candidates)`` from the same
        pruned partitions: per-query gemv with ``cosine_to_query_udf``'s
        dtype ops (float64 tolist, axis-1 norms, 1e-300 clamps, raw-query
-       gemv).  Candidate SELECTION is bit-identical to per-query
-       ``knn_ivf_pq_probe`` (per-query ``adc_lookup_table`` calls — never
-       a fused 3-D einsum — plus the same (−score, id) tie-break), but the
-       re-ranked cosines can differ from the single-query path in the last
-       ulp: BLAS dgemv bits depend on the matrix row count, and here the
-       gemv runs over a masked submatrix of the union-candidate batch
-       rather than one query's own survivor batch.  Parity is therefore
-       pinned at 9 decimals with exact id sets — the same convention as
-       ``knn_bruteforce_many`` (similarity.py) batch↔single tests.
+       gemv).
 
+    Candidate SELECTION is bit-identical to ``ann_recall.reference_topk``
+    (same scorer, same (−score, id) tie-break); its re-ranked cosines
+    agree at 9 decimals with exact id sets (BLAS dgemv bits depend on the
+    matrix row count).  ``refine`` is the recall dial: results converge to
+    the IVF-Flat probe as it grows and equal brute force once the probe
+    covers every cell and ``refine·k`` every row (pinned in tests).
     ``as_rows`` / ``rerank`` pick how the re-ranked tops merge (see
-    ``fused_probe.fused_cell_probe_many``).
-
-    The two-pass engine is shared with the SQ8 batch probe
-    (``fused_probe.fused_cell_probe_many``); only the masked-block scorer
-    below is PQ-specific."""
+    ``fused_probe.fused_cell_probe_many``)."""
     from .fused_probe import fused_cell_probe_many
-
-    m = codebooks.shape[0]
-    cols = np.arange(m)
-
-    def prepare(qn: np.ndarray):
-        nq = qn.shape[0]
-        # per-query adc_lookup_table calls, NOT one 3-D einsum: the fused
-        # contraction can sum in a different order and the resulting
-        # ulp-level ADC drift flips candidate selection at the refine
-        # boundary — parity with the single-query probe requires
-        # bit-identical tables
-        luts = np.stack([adc_lookup_table(v, codebooks) for _, v in queries])
-        # residual coding: per-(query, cell) q̂·centroid offsets, added to
-        # each masked row's lut sum.  Per-query gemv (centroids @ qn[i]),
-        # NOT one fused gemm (qn @ centroids.T): dgemm may sum in a
-        # different order than the single-query probe's dgemv, and a
-        # last-ulp offset drift flips selection — the same hazard as above.
-        cent_dots_all = np.stack([centroids @ qn[i] for i in range(nq)])
-
-        def score_masked(
-            qi: int, codes_m: np.ndarray, cell_m: np.ndarray
-        ) -> np.ndarray:
-            return luts[qi][cols, codes_m].sum(axis=1) + cent_dots_all[qi][cell_m]
-
-        return score_masked
 
     return fused_cell_probe_many(
         indexed, centroids, queries,
-        code_col="pq_code", code_width=m, score_col="adc_score",
-        prepare_scorer=prepare, k=k, n_probe=n_probe, refine=refine,
-        id_col=id_col, vec_col=vec_col, cell_col=cell_col, as_rows=as_rows,
-        rerank=rerank,
+        code_col="pq_code", code_width=codebooks.shape[0], score_col="adc_score",
+        prepare_scorer=adc_scorer(centroids, codebooks), k=k, n_probe=n_probe,
+        refine=refine, id_col=id_col, vec_col=vec_col, cell_col=cell_col,
+        as_rows=as_rows, rerank=rerank,
     )

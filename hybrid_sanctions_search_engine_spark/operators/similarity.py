@@ -12,15 +12,18 @@ equivalents:
     is within a Hamming radius.  Exact cosine re-verifies candidates, so
     results are exact *within the probed buckets* (standard ANN recall
     trade-off).
-  * ``knn_ivf_probe`` / ``knn_ivf_probe_many`` — inverted-file ANN over a
+  * ``knn_ivf_probe_many`` — inverted-file ANN over a
     ``partitionBy(ivf_cell)`` layout (and the quantized ``ivf_pq`` /
-    ``ivf_sq8`` twins in pq.py / sq.py): the layouts a ``HybridSearchPlan``
-    serves (``ANN_KINDS``).
+    ``ivf_sq8`` probes in pq.py / sq.py): the layouts a ``HybridSearchPlan``
+    serves (``ANN_KINDS``).  Each layout has this one probe; a single query
+    is a batch of one, and ``ann_recall.reference_topk`` replays it in
+    numpy as the tests' reference.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import numpy as np
 import pandas as pd
@@ -346,29 +349,6 @@ def assign_ivf_cells(
     return embeddings.withColumn(out_col, cell(F.col(vec_col)))
 
 
-def knn_ivf(
-    embeddings_with_cell: DataFrame,
-    centroids: np.ndarray,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    cell_col: str = "ivf_cell",
-) -> DataFrame:
-    """ANN top-k: probe the ``n_probe`` cells nearest the query, exact cosine
-    inside them. Recall/latency dial = n_probe (n_probe = n_centroids ⇒
-    exact)."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    probe = np.argsort(-(centroids @ q))[:n_probe].tolist()
-    candidates = embeddings_with_cell.where(F.col(cell_col).isin(probe))
-    # arrow=True at every dim: the numpy gemv refine is bit-identical to
-    # the batched probes' gemv on the same candidates
-    return knn_bruteforce(candidates, query_vec, k, id_col, vec_col,
-                          arrow=True)
-
-
 # ---------------------------------------------------------------------------
 # partitioned ANN storage — probes become partition-pruned scans
 # ---------------------------------------------------------------------------
@@ -414,26 +394,34 @@ def load_ivf_index(spark, path: str) -> tuple[DataFrame, np.ndarray]:
     return spark.read.parquet(path), np.asarray(meta["centroids"], dtype=np.float64)
 
 
-def knn_ivf_probe(
-    indexed: DataFrame,
-    centroids: np.ndarray,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k over a ``write_ivf_index`` dataset: the ``ivf_cell IN (...)``
-    predicate on the partition column prunes the scan to n_probe directories
-    (asserted via input_file_name in tests), then exact cosine re-ranks."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    probe = [int(c) for c in np.argsort(-(centroids @ q))[:n_probe]]
-    candidates = indexed.where(F.col("ivf_cell").isin(probe))
-    # arrow=True at every dim: the numpy gemv refine is bit-identical to
-    # the batched probes' gemv on the same candidates
-    return knn_bruteforce(candidates, query_vec, k, id_col, vec_col,
-                          arrow=True)
+class ProbeQueries(NamedTuple):
+    """The query side of an IVF-family probe, prepared once per batch."""
+
+    qids: np.ndarray  # int64 query ids
+    qmat: np.ndarray  # float64 query rows, as given
+    qnorms: np.ndarray  # their 1-D norms, clamped at 1e-300
+    qn: np.ndarray  # the unit query rows
+    cells: list[np.ndarray]  # per query: its n_probe nearest cells, nearest first
+    union: list[int]  # every query's probed cells, sorted
+
+
+def probe_queries(
+    queries: list[tuple[int, list[float]]], centroids: np.ndarray, n_probe: int
+) -> ProbeQueries:
+    """The one place an IVF-family probe decides its query prep and probe
+    order: every ``*_probe_many`` and ``ann_recall.reference_topk`` call
+    it.  A query's norm is its own 1-D ``np.linalg.norm`` (the bits the
+    cosine refine divides by); its cells rank by centroid cosine."""
+    qids = np.asarray([q for q, _ in queries], dtype=np.int64)
+    qmat = np.asarray([v for _, v in queries], dtype=np.float64)
+    qnorms = np.array([max(float(np.linalg.norm(v)), 1e-300) for v in qmat])
+    qn = qmat / qnorms[:, None]
+    cells = [
+        np.argsort(-(centroids @ qn[i]))[:n_probe].astype(np.int64)
+        for i in range(len(qids))
+    ]
+    union = sorted({int(c) for cs in cells for c in cs})
+    return ProbeQueries(qids, qmat, qnorms, qn, cells, union)
 
 
 def knn_ivf_probe_many(
@@ -473,28 +461,14 @@ def knn_ivf_probe_many(
     the same argument ``knn_bruteforce_many`` makes for the exact scan —
     and the task output is ≤ |queries| × k rows.
 
-    Bit-parity: same op shapes as the single-query refine
-    (``cosine_to_query_udf`` / ``knn_bruteforce_many`` — float64 from
-    tolist, axis=1 doc norms, 1-D query norms, one gemv per query, local
-    top-k by (-cos, id) making the merge exact), so
-    search() ≡ search_many() holds on ANN-served plans."""
+    Cosines use ``cosine_to_query_udf``'s op shapes (float64 from tolist,
+    axis=1 doc norms, 1-D query norms, one gemv per query) and the local
+    top-k is taken by (-cos, id), so the merge is exact;
+    ``ann_recall.reference_topk`` replays this probe in numpy."""
     spark = indexed.sparkSession
     if not queries:
         return [] if as_rows else local_frame(spark, [], probe_schema(id_col, rerank))
-    qids = np.asarray([q for q, _ in queries], dtype=np.int64)
-    qmat = np.asarray([v for _, v in queries], dtype=np.float64)
-    qnorms = np.array(
-        [
-            max(float(np.linalg.norm(np.asarray(v, dtype=np.float64))), 1e-300)
-            for _, v in queries
-        ]
-    )
-    qn = qmat / qnorms[:, None]
-    cells = [
-        np.argsort(-(centroids @ qn[i]))[:n_probe].astype(np.int64)
-        for i in range(len(qids))
-    ]
-    union = sorted({int(c) for cs in cells for c in cs})
+    qids, qmat, qnorms, _, cells, union = probe_queries(queries, centroids, n_probe)
     nq, kk = len(qids), k
 
     def score(it):

@@ -22,18 +22,19 @@ is exactly ES's.  Measured curves for both live side by side in BENCH.md;
 the dial trade is: SQ8 reaches IVF-Flat recall at small ``refine`` where
 PQ needs large ``refine``, at 8× the code bytes.
 
-Serving mirrors ``pq.adc_scan_topn``: the candidate scan reads ONLY
-``(id, sq_code)`` (column-pruned, asserted in tests) from the probed
-cells' partition directories; the approximate score is the decoded dot
+Serving is ``knn_ivf_sq8_probe_many``, the layout's one probe (a single
+query is a batch of one), on the IVF-PQ probe's shape: the candidate scan
+reads ONLY ``(id, sq_code, ivf_cell)`` (column-pruned, asserted in tests)
+from the probed cells' partition directories; the approximate score is
+the decoded dot
 
     q̂·x̃ = q̂·vmin + Σ_d q̂_d·scale_d·code_d  =  b + codes·w
 
-computed per Arrow batch as an elementwise multiply-reduce (row-local
-summation order — batch and single-query paths select candidates
-bit-identically regardless of how rows are batched, the property the PQ
-scan gets from its table lookups).  The exact re-rank then reads raw
-vectors for just the ``refine·k`` survivors via ``knn_bruteforce`` — the
-same bit-exact cosine every other vector path emits, so the ladder is
+computed as an elementwise multiply-reduce (row-local summation order —
+candidate selection is bit-identical however rows are batched, the
+property the PQ scan gets from its table lookups).  The exact re-rank
+then reads raw vectors for just the ``refine·k`` survivors with the same
+cosine op shapes every other vector path uses, so the ladder is
 layout-blind.
 """
 
@@ -47,12 +48,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.fs import fs_for
-from .similarity import (
-    assign_ivf_cells,
-    knn_bruteforce,
-    local_topk,
-    train_ivf_centroids,
-)
+from .similarity import assign_ivf_cells, train_ivf_centroids
 
 
 def _normalized(x: np.ndarray) -> np.ndarray:
@@ -132,44 +128,30 @@ def _sq8_query_form(
 def _sq8_scores(codes: np.ndarray, w: np.ndarray, b: float) -> np.ndarray:
     # elementwise multiply + per-row reduce, NOT a BLAS gemv: each row's
     # sum order is row-local, so candidate selection is bit-identical
-    # between the single-query scan and the batched scan's masked rows
+    # between the probe's masked task rows and reference_topk's block
     return (codes * w).sum(axis=1) + b
 
 
-def sq8_scan_topn(
-    codes_df: DataFrame,
-    vmin: np.ndarray,
-    vmax: np.ndarray,
-    query_vec: list[float],
-    n: int,
-    id_col: str = "vec_id",
-    code_col: str = "sq_code",
-) -> DataFrame:
-    """Approximate top-n by decoded-dot over the code column → (id,
-    sq_score).  mapInPandas emits only each Arrow batch's local top-n
-    under the compound (−score, id) order (exact global merge); the input
-    is column-pruned to ``(id, code)`` — the raw vector column never
-    leaves parquet (ReadSchema-asserted in tests)."""
-    w, b = _sq8_query_form(query_vec, vmin, vmax)
-    dim = w.shape[0]
+def sq8_scorer(vmin: np.ndarray, vmax: np.ndarray):
+    """The decoded-dot code score, as a ``fused_probe.PrepareScorer``:
+    given a batch's ``ProbeQueries``, a ``score_masked(qi, codes, cells)``
+    returning ``codes·w + b`` per row (``_sq8_query_form``).  The probe and
+    ``ann_recall.reference_topk`` both score through it."""
 
-    def score(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            codes = np.frombuffer(
-                b"".join(pdf[code_col]), dtype=np.uint8
-            ).reshape(len(pdf), dim)
-            s = _sq8_scores(codes, w, b)
-            order = local_topk(pdf[id_col].to_numpy(), s, n)
-            yield pd.DataFrame(
-                {id_col: pdf[id_col].to_numpy()[order], "sq_score": s[order]}
-            )
+    def prepare(queries):
+        # per-query _sq8_query_form calls, never a fused matrix form: a
+        # query's (w, b) must not depend on which queries share its batch
+        forms = [_sq8_query_form(v, vmin, vmax) for v in queries.qmat]
 
-    scored = codes_df.select(id_col, code_col).mapInPandas(
-        score, f"{id_col} long, sq_score double"
-    )
-    return scored.orderBy(F.desc("sq_score"), F.asc(id_col)).limit(n)
+        def score_masked(
+            qi: int, codes_m: np.ndarray, cell_m: np.ndarray
+        ) -> np.ndarray:
+            w, b = forms[qi]
+            return _sq8_scores(codes_m, w, b)
+
+        return score_masked
+
+    return prepare
 
 
 def write_ivf_sq8_index(
@@ -222,37 +204,6 @@ def load_ivf_sq8_index(
     )
 
 
-def knn_ivf_sq8_probe(
-    indexed: DataFrame,
-    centroids: np.ndarray,
-    vmin: np.ndarray,
-    vmax: np.ndarray,
-    query_vec: list[float],
-    k: int = 10,
-    n_probe: int = 3,
-    refine: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ANN top-k over a ``write_ivf_sq8_index`` dataset → (id, cos_sim).
-
-    The ``knn_ivf_pq_probe`` three-stage shape (partition-pruned cell
-    probe → code-column candidate scan → exact ``id IN`` re-rank), with
-    the int8 decoded-dot in place of ADC table lookups.  ``refine``
-    defaults to 2 (PQ defaults to 4): per-dimension 8-bit quantization
-    noise is ~1e-3 on the cosine, so candidate selection is already
-    near-exact — the dial exists for corpora whose true top-k are packed
-    tighter than the grid (curves in BENCH.md)."""
-    q = np.asarray(query_vec, dtype=np.float64)
-    q = q / max(np.linalg.norm(q), 1e-12)
-    probe = [int(c) for c in np.argsort(-(centroids @ q))[:n_probe]]
-    cells = indexed.where(F.col("ivf_cell").isin(probe))
-    cand = sq8_scan_topn(cells, vmin, vmax, query_vec, refine * k, id_col)
-    cand_ids = [r[id_col] for r in cand.collect()]
-    survivors = cells.where(F.col(id_col).isin(cand_ids))
-    return knn_bruteforce(survivors, query_vec, k, id_col, vec_col, arrow=True)
-
-
 def knn_ivf_sq8_probe_many(
     indexed: DataFrame,
     centroids: np.ndarray,
@@ -268,42 +219,26 @@ def knn_ivf_sq8_probe_many(
     as_rows: bool = False,
     rerank=None,
 ) -> "DataFrame | list[tuple[int, int, float]]":
-    """Batched IVF-SQ8 probe → (query_id, id, cos_sim): the fused
+    """IVF-SQ8 probe → (query_id, id, cos_sim): the fused
     ``knn_ivf_pq_probe_many`` two-pass shape — one map-only code scan over
-    the union of all queries' probed cells (per-query cell mask + decoded
-    dot + batch-local top ``refine·k``, merged on the driver), one
-    exact re-rank pass over the candidate union.  Candidate SELECTION is
-    bit-identical to per-query ``knn_ivf_sq8_probe`` (``_sq8_scores``'s
-    row-local reduce + the (−score, id) tie-break); re-ranked cosines are
-    pinned at 9 decimals with exact id sets — the ``knn_bruteforce_many``
-    convention (dgemv bits vary with matrix row count).  ``as_rows`` /
-    ``rerank`` pick how the re-ranked tops merge.
-
-    The two-pass engine is shared with the PQ batch probe
-    (``fused_probe.fused_cell_probe_many``); only the masked-block scorer
-    below is SQ8-specific."""
+    the union of all queries' probed cells (per-query cell mask +
+    ``sq8_scorer``'s decoded dot + task-local top ``refine·k``, merged on
+    the driver), one exact re-rank pass over the candidate union.
+    Candidate SELECTION is bit-identical to ``ann_recall.reference_topk``
+    (``_sq8_scores``'s row-local reduce + the (−score, id) tie-break);
+    re-ranked cosines agree at 9 decimals with exact id sets — the
+    ``knn_bruteforce_many`` convention (dgemv bits vary with matrix row
+    count).  ``refine`` defaults to 2 (PQ defaults to 4): per-dimension
+    8-bit quantization noise is ~1e-3 on the cosine, so candidate
+    selection is already near-exact — the dial exists for corpora whose
+    true top-k are packed tighter than the grid (curves in BENCH.md).
+    ``as_rows`` / ``rerank`` pick how the re-ranked tops merge."""
     from .fused_probe import fused_cell_probe_many
-
-    dim = centroids.shape[1]
-
-    def prepare(qn: np.ndarray):
-        # per-query _sq8_query_form calls — the same construction as the
-        # single-query scan, never a fused matrix form (lockstep with the
-        # PQ batch path's per-query adc_lookup_table rule)
-        forms = [_sq8_query_form(v, vmin, vmax) for _, v in queries]
-
-        def score_masked(
-            qi: int, codes_m: np.ndarray, cell_m: np.ndarray
-        ) -> np.ndarray:
-            w, b = forms[qi]
-            return _sq8_scores(codes_m, w, b)
-
-        return score_masked
 
     return fused_cell_probe_many(
         indexed, centroids, queries,
-        code_col="sq_code", code_width=dim, score_col="sq_score",
-        prepare_scorer=prepare, k=k, n_probe=n_probe, refine=refine,
-        id_col=id_col, vec_col=vec_col, cell_col=cell_col, as_rows=as_rows,
-        rerank=rerank,
+        code_col="sq_code", code_width=centroids.shape[1], score_col="sq_score",
+        prepare_scorer=sq8_scorer(vmin, vmax), k=k, n_probe=n_probe,
+        refine=refine, id_col=id_col, vec_col=vec_col, cell_col=cell_col,
+        as_rows=as_rows, rerank=rerank,
     )

@@ -389,7 +389,7 @@ def batch_topk_local(
         min_match_per_qidx=msm_arr,
     )
     if pre_grouped:
-        return topk_pre_grouped(matched, score_group)
+        return topk_pre_grouped(matched, score_group, k)
     if n_groups is None:
         n_groups = batch_n_groups(spark, meta)
     grp_key = F.pmod(F.col("chunk"), F.lit(n_groups))

@@ -41,3 +41,28 @@ def sf_smoke_dir():
 @pytest.fixture(scope="session")
 def sf_correct_dir():
     return SF_CORRECT
+
+
+@pytest.fixture
+def collect_read_schemas(spark, monkeypatch):
+    """``run(fn)`` calls ``fn`` and returns the parquet ReadSchema of each
+    frame it collects, in collect order."""
+    import re
+
+    frame_cls = type(spark.range(1))
+    collect = frame_cls.collect
+
+    def run(fn) -> list[str]:
+        schemas = []
+
+        def spy(self):
+            plan = self._jdf.queryExecution().executedPlan().toString()
+            schemas.append(re.search(r"ReadSchema: (\S+)", plan).group(1))
+            return collect(self)
+
+        with monkeypatch.context() as m:
+            m.setattr(frame_cls, "collect", spy)
+            fn()
+        return schemas
+
+    return run

@@ -1,45 +1,59 @@
-"""ANN recall curves: emulation ≡ the real partition-pruned probes, and
-recall floors at the serving defaults.
+"""ANN recall curves: the numpy reference ≡ the served partition-pruned
+probes, and recall floors at the serving defaults.
 
 The reference's ES HNSW layer publishes its ef_search/num_candidates dials
 (``elasticsearch_index_manager.py:209-214``); ``operators.ann_recall``
 publishes the recall@k-vs-dial analogue for IVF (n_probe) and IVF-PQ /
-IVF-SQ8 (refine).  The curve machinery replays probe selection in numpy
-from the written index's own columns — these tests pin (a) that the replay
-is EXACTLY the candidate selection ``knn_ivf_probe`` / ``knn_ivf_pq_probe``
-/ ``knn_ivf_sq8_probe`` perform, and (b) recall floors at the default dials
-on the clustered 384-dim fixture (deterministic seed, so the floors are
-tight), read from one report built once for the module."""
+IVF-SQ8 (refine).  The curves come from ``reference_topk``, a numpy replay
+of each layout's one probe over the written index's own columns — these
+tests pin (a) that the replay returns EXACTLY what ``knn_ivf_probe_many``
+/ ``knn_ivf_pq_probe_many`` / ``knn_ivf_sq8_probe_many`` return, and (b)
+recall floors at the default dials on the clustered 384-dim fixture
+(deterministic seed, so the floors are tight), read from one report built
+once for the module."""
 
 from __future__ import annotations
 
 import numpy as np
-import pandas as pd
 import pytest
 
 from hybrid_sanctions_search_engine_spark.operators.ann_recall import (
-    brute_force_topk,
-    ivf_recall_curve,
     make_clustered_fixture,
     recall_report,
+    reference_topk,
 )
+from hybrid_sanctions_search_engine_spark.sources.tables import local_frame
 
-N, DIM = 4000, 384
+N, DIM, K, N_TIED = 4000, 384, 10, 40
 
 
 @pytest.fixture(scope="module")
 def built(spark, tmp_path_factory):
+    """The three layouts over one clustered fixture, plus ``N_TIED`` copies
+    of an integer-valued vector that is also the last query: its dot
+    products are exact in any summation order, so every copy gets the same
+    code score and the same cosine bits, and both probes must break the
+    tie by id — more copies than ``refine·k``, so the cut falls inside
+    the tie."""
+    from hybrid_sanctions_search_engine_spark.operators.pq import write_ivf_pq_index
     from hybrid_sanctions_search_engine_spark.operators.similarity import (
         write_ivf_index,
     )
-
-    x, q = make_clustered_fixture(n=N, dim=DIM, query_mode="boundary")
-    emb = spark.createDataFrame(
-        pd.DataFrame({"vec_id": np.arange(N, dtype=np.int64), "embedding": list(x)})
+    from hybrid_sanctions_search_engine_spark.operators.sq import (
+        write_ivf_sq8_index,
     )
-    ivf_dir = str(tmp_path_factory.mktemp("ann_recall") / "ivf")
-    write_ivf_index(emb, ivf_dir, n_centroids=16)
-    return x, q, emb, ivf_dir
+
+    x, q = make_clustered_fixture(n=N, dim=DIM, n_queries=4, query_mode="boundary")
+    tied = np.random.default_rng(3).integers(-1, 2, size=DIM).astype(np.float64)
+    rows = list(enumerate(x.tolist())) + [(N + i, tied.tolist()) for i in range(N_TIED)]
+    emb = local_frame(spark, rows, "vec_id long, embedding array<double>")
+    base = tmp_path_factory.mktemp("ann_reference")
+    dirs = {kind: str(base / kind) for kind in ("ivf", "ivf_pq", "ivf_sq8")}
+    write_ivf_index(emb, dirs["ivf"], n_centroids=16)
+    write_ivf_pq_index(emb, dirs["ivf_pq"], n_centroids=16, m=48)
+    write_ivf_sq8_index(emb, dirs["ivf_sq8"], n_centroids=16)
+    queries = [(i, v) for i, v in enumerate(q.tolist())] + [(len(q), tied.tolist())]
+    return dirs, queries
 
 
 @pytest.fixture(scope="module")
@@ -49,90 +63,55 @@ def report(spark):
     return recall_report(spark, n=8000, dim=DIM, n_probes=[1, 2, 3])
 
 
-def test_ivf_replay_matches_real_probe(spark, built):
-    """The numpy replay returns EXACTLY knn_ivf_probe's result ids."""
+def _probe(spark, layout, path, queries, n_probe, refine):
+    from hybrid_sanctions_search_engine_spark.operators.pq import (
+        knn_ivf_pq_probe_many,
+        load_ivf_pq_index,
+    )
     from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        knn_ivf_probe,
+        knn_ivf_probe_many,
         load_ivf_index,
     )
-
-    x, q, _, ivf_dir = built
-    indexed, cents = load_ivf_index(spark, ivf_dir)
-    truth = brute_force_topk(x, q[:3], 10)
-    # recall computed by the curve on these 3 queries ...
-    curve = ivf_recall_curve(ivf_dir, x, q[:3], truth, [2], k=10)
-    # ... must equal recall of the REAL probe's collected ids
-    hits = 0
-    for i in range(3):
-        got = [
-            r["vec_id"]
-            for r in knn_ivf_probe(indexed, cents, q[i].tolist(), k=10, n_probe=2)
-            .collect()
-        ]
-        hits += len(set(got) & set(truth[i].tolist()))
-    assert curve[2] == pytest.approx(hits / 30)
-
-
-def test_ivf_pq_replay_matches_real_probe(spark, built, tmp_path_factory):
-    """The numpy replay (cells → ADC top refine·k → exact re-rank) scores
-    the same recall as the REAL knn_ivf_pq_probe at the same dials."""
-    from hybrid_sanctions_search_engine_spark.operators.ann_recall import (
-        ivf_pq_recall_curve,
-    )
-    from hybrid_sanctions_search_engine_spark.operators.pq import (
-        knn_ivf_pq_probe,
-        load_ivf_pq_index,
-        write_ivf_pq_index,
-    )
-
-    x, q, emb, _ = built
-    pq_dir = str(tmp_path_factory.mktemp("ann_recall_pq") / "ivf_pq")
-    write_ivf_pq_index(emb, pq_dir, n_centroids=16, m=48)
-    indexed, cents, books = load_ivf_pq_index(spark, pq_dir)
-    truth = brute_force_topk(x, q[:3], 10)
-    curve = ivf_pq_recall_curve(pq_dir, x, q[:3], truth, [2], n_probe=2, k=10)
-    hits = 0
-    for i in range(3):
-        got = [
-            r["vec_id"]
-            for r in knn_ivf_pq_probe(
-                indexed, cents, books, q[i].tolist(), k=10, n_probe=2, refine=2
-            ).collect()
-        ]
-        hits += len(set(got) & set(truth[i].tolist()))
-    assert curve[2] == pytest.approx(hits / 30)
-
-
-def test_ivf_sq8_replay_matches_real_probe(spark, built, tmp_path_factory):
-    """The numpy replay (cells → decoded-dot top refine·k → exact re-rank)
-    scores the same recall as the REAL knn_ivf_sq8_probe at the same
-    dials."""
-    from hybrid_sanctions_search_engine_spark.operators.ann_recall import (
-        ivf_sq8_recall_curve,
-    )
     from hybrid_sanctions_search_engine_spark.operators.sq import (
-        knn_ivf_sq8_probe,
+        knn_ivf_sq8_probe_many,
         load_ivf_sq8_index,
-        write_ivf_sq8_index,
     )
 
-    x, q, emb, _ = built
-    sq_dir = str(tmp_path_factory.mktemp("ann_recall_sq") / "ivf_sq8")
-    write_ivf_sq8_index(emb, sq_dir, n_centroids=16)
-    indexed, cents, vmin, vmax = load_ivf_sq8_index(spark, sq_dir)
-    truth = brute_force_topk(x, q[:3], 10)
-    curve = ivf_sq8_recall_curve(sq_dir, x, q[:3], truth, [2], n_probe=2, k=10)
-    hits = 0
-    for i in range(3):
-        got = [
-            r["vec_id"]
-            for r in knn_ivf_sq8_probe(
-                indexed, cents, vmin, vmax, q[i].tolist(),
-                k=10, n_probe=2, refine=2,
-            ).collect()
-        ]
-        hits += len(set(got) & set(truth[i].tolist()))
-    assert curve[2] == pytest.approx(hits / 30)
+    if layout == "ivf":
+        df, cents = load_ivf_index(spark, path)
+        return knn_ivf_probe_many(
+            df, cents, queries, k=K, n_probe=n_probe, as_rows=True
+        )
+    if layout == "ivf_pq":
+        df, cents, books = load_ivf_pq_index(spark, path)
+        return knn_ivf_pq_probe_many(
+            df, cents, books, queries, k=K, n_probe=n_probe, refine=refine,
+            as_rows=True,
+        )
+    df, cents, vmin, vmax = load_ivf_sq8_index(spark, path)
+    return knn_ivf_sq8_probe_many(
+        df, cents, vmin, vmax, queries, k=K, n_probe=n_probe, refine=refine,
+        as_rows=True,
+    )
+
+
+@pytest.mark.parametrize("layout", ["ivf", "ivf_pq", "ivf_sq8"])
+@pytest.mark.parametrize("n_probe,refine", [(1, 1), (4, 3)])
+def test_probe_matches_reference(spark, built, layout, n_probe, refine):
+    """Each layout's one probe returns exactly ``reference_topk``'s ids, in
+    (cos desc, id asc) order, with cosines equal at 9 decimals (dgemv
+    bits vary with the matrix row count); the tied query's top-k is the
+    k smallest ids of its copies."""
+    dirs, queries = built
+    got: dict[int, list] = {qid: [] for qid, _ in queries}
+    for qid, vid, cos in _probe(spark, layout, dirs[layout], queries, n_probe, refine):
+        got[qid].append((vid, round(cos, 9)))
+    want = reference_topk(dirs[layout], layout, queries, K, n_probe, refine)
+    assert set(want) == set(got)
+    for qid, (ids, cos) in want.items():
+        assert got[qid] == list(zip(ids.tolist(), np.round(cos, 9).tolist())), qid
+    tied_qid = queries[-1][0]
+    assert [vid for vid, _ in got[tied_qid]] == list(range(N, N + K))
 
 
 def test_recall_floors_at_default_dials(report):

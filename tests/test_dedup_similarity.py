@@ -106,7 +106,7 @@ def test_knn_ivf_recall(spark):
     from hybrid_sanctions_search_engine_spark.operators.similarity import (
         assign_ivf_cells,
         knn_bruteforce,
-        knn_ivf,
+        knn_ivf_probe_many,
         train_ivf_centroids,
     )
 
@@ -129,7 +129,12 @@ def test_knn_ivf_recall(spark):
 
     q = rows[5][1]  # a member of cluster 0
     exact = [r["vec_id"] for r in knn_bruteforce(emb, q, k=10).collect()]
-    ann = [r["vec_id"] for r in knn_ivf(with_cell, cents, q, k=10, n_probe=1).collect()]
+    ann = [
+        vid
+        for _, vid, _ in knn_ivf_probe_many(
+            with_cell, cents, [(0, q)], k=10, n_probe=1, as_rows=True
+        )
+    ]
     # single-probe IVF recovers the full exact top-10 on well-separated clusters
     assert ann == exact
 
@@ -170,7 +175,7 @@ def test_ivf_partitioned_probe_prunes(spark, tmp_path):
 
     from hybrid_sanctions_search_engine_spark.operators.similarity import (
         knn_bruteforce,
-        knn_ivf_probe,
+        knn_ivf_probe_many,
         load_ivf_index,
         write_ivf_index,
     )
@@ -194,9 +199,11 @@ def test_ivf_partitioned_probe_prunes(spark, tmp_path):
 
     q = rows[7][1]
     n_probe = 1
-    probed = knn_ivf_probe(indexed, loaded_cents, q, k=10, n_probe=n_probe)
+    probed = knn_ivf_probe_many(
+        indexed, loaded_cents, [(0, q)], k=10, n_probe=n_probe, as_rows=True
+    )
     exact = [r["vec_id"] for r in knn_bruteforce(emb, q, k=10).collect()]
-    assert [r["vec_id"] for r in probed.collect()] == exact
+    assert [vid for _, vid, _ in probed] == exact
 
     # physical pruning: every file the probe reads lives in <= n_probe cells
     qn = np.asarray(q) / np.linalg.norm(q)
@@ -304,7 +311,7 @@ def test_filtered_ann_probe_composes_and_keeps_pruning(spark, tmp_path):
 
     from hybrid_sanctions_search_engine_spark.operators.similarity import (
         knn_bruteforce,
-        knn_ivf_probe,
+        knn_ivf_probe_many,
         load_ivf_index,
         write_ivf_index,
     )
@@ -327,11 +334,13 @@ def test_filtered_ann_probe_composes_and_keeps_pruning(spark, tmp_path):
 
     q = rows[7][1]
     filtered = indexed.where(F.col("vec_id") % 3 == 0)
-    probed = knn_ivf_probe(filtered, cents, q, k=10, n_probe=4)
+    probed = knn_ivf_probe_many(
+        filtered, cents, [(0, q)], k=10, n_probe=4, as_rows=True
+    )
     exact = knn_bruteforce(
         emb.where(F.col("vec_id") % 3 == 0), q, k=10
     ).collect()
-    assert [(r["vec_id"], round(r["cos_sim"], 9)) for r in probed.collect()] == [
+    assert [(vid, round(cos, 9)) for _, vid, cos in probed] == [
         (r["vec_id"], round(r["cos_sim"], 9)) for r in exact
     ]
 

@@ -93,8 +93,8 @@ def test_search_many_parity_ivf(spark, corpus, tmp_path):
 
 
 def test_search_many_parity_ivf_pq(spark, corpus, tmp_path):
-    """PQ-backed batched vector stage ≡ per-query knn_ivf_pq_probe path
-    (candidate selection bit-identical, exact re-rank cosines at 9dp)."""
+    """PQ-backed ``search_many`` ≡ ``search()`` per query, a batch of one
+    through the same ``knn_ivf_pq_probe_many`` (scores at 9dp)."""
     from hybrid_sanctions_search_engine_spark.operators.pq import (
         write_ivf_pq_index,
     )
@@ -110,8 +110,8 @@ def test_search_many_parity_ivf_pq(spark, corpus, tmp_path):
 
 
 def test_search_many_parity_ivf_sq8(spark, corpus, tmp_path):
-    """SQ8-backed batched vector stage ≡ per-query knn_ivf_sq8_probe path
-    (int8 candidate scan, exact re-rank cosines at 9dp)."""
+    """SQ8-backed ``search_many`` ≡ ``search()`` per query, a batch of one
+    through the same ``knn_ivf_sq8_probe_many`` (scores at 9dp)."""
     from hybrid_sanctions_search_engine_spark.operators.sq import (
         write_ivf_sq8_index,
     )

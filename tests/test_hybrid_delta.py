@@ -352,7 +352,7 @@ def test_fold_delta_embeddings_ivf(spark, env, ann_copy):
     """After the fold, a plain IVF probe (no delta attached) finds the
     streamed docs; a rerun is a fingerprint no-op (no duplicated rows)."""
     from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        knn_ivf_probe,
+        knn_ivf_probe_many,
         load_ivf_index,
     )
 
@@ -362,12 +362,12 @@ def test_fold_delta_embeddings_ivf(spark, env, ann_copy):
     assert rep["folded_vecs"] == len(DELTA_DOCS)
     df, cents = load_ivf_index(spark, ann_copy)
     assert df.count() == before + len(DELTA_DOCS)
-    hits = knn_ivf_probe(
-        df, cents, pseudo_embedding(DELTA_DOCS[0][1], DIM), k=3,
-        n_probe=len(cents),
-    ).collect()
-    assert hits[0]["vec_id"] == DELTA_DOCS[0][0]
-    assert hits[0]["cos_sim"] == pytest.approx(1.0, abs=1e-9)
+    (_, top, cos), *_ = knn_ivf_probe_many(
+        df, cents, [(0, pseudo_embedding(DELTA_DOCS[0][1], DIM))], k=3,
+        n_probe=len(cents), as_rows=True,
+    )
+    assert top == DELTA_DOCS[0][0]
+    assert cos == pytest.approx(1.0, abs=1e-9)
     # idempotent rerun
     rep2 = fold_delta_embeddings(spark, ann_copy, demb, kind="ivf")
     assert rep2.get("noop")
@@ -379,7 +379,7 @@ def test_fold_delta_embeddings_ivf_pq(spark, env, tmp_path):
     with the STORED codebooks (no retrain), so a plain PQ probe finds the
     streamed doc at exact cosine 1.0 after the re-rank; rerun is a no-op."""
     from hybrid_sanctions_search_engine_spark.operators.pq import (
-        knn_ivf_pq_probe,
+        knn_ivf_pq_probe_many,
         load_ivf_pq_index,
         write_ivf_pq_index,
     )
@@ -393,12 +393,12 @@ def test_fold_delta_embeddings_ivf_pq(spark, env, tmp_path):
     df, cents, books = load_ivf_pq_index(spark, path)
     assert df.count() == before + len(DELTA_DOCS)
     assert df.where(F.col("pq_code").isNull()).count() == 0
-    hits = knn_ivf_pq_probe(
-        df, cents, books, pseudo_embedding(DELTA_DOCS[0][1], DIM), k=3,
-        n_probe=len(cents), refine=8,
-    ).collect()
-    assert hits[0]["vec_id"] == DELTA_DOCS[0][0]
-    assert hits[0]["cos_sim"] == pytest.approx(1.0, abs=1e-9)
+    (_, top, cos), *_ = knn_ivf_pq_probe_many(
+        df, cents, books, [(0, pseudo_embedding(DELTA_DOCS[0][1], DIM))], k=3,
+        n_probe=len(cents), refine=8, as_rows=True,
+    )
+    assert top == DELTA_DOCS[0][0]
+    assert cos == pytest.approx(1.0, abs=1e-9)
     # idempotent rerun
     rep2 = fold_delta_embeddings(spark, path, demb, kind="ivf_pq")
     assert rep2.get("noop")
@@ -436,7 +436,7 @@ def test_fold_delta_embeddings_ivf_sq8(spark, env, tmp_path):
     finds the streamed doc at exact cosine 1.0 after the re-rank; rerun is
     a no-op."""
     from hybrid_sanctions_search_engine_spark.operators.sq import (
-        knn_ivf_sq8_probe,
+        knn_ivf_sq8_probe_many,
         load_ivf_sq8_index,
         write_ivf_sq8_index,
     )
@@ -450,12 +450,12 @@ def test_fold_delta_embeddings_ivf_sq8(spark, env, tmp_path):
     df, cents, vmin, vmax = load_ivf_sq8_index(spark, path)
     assert df.count() == before + len(DELTA_DOCS)
     assert df.where(F.col("sq_code").isNull()).count() == 0
-    hits = knn_ivf_sq8_probe(
-        df, cents, vmin, vmax, pseudo_embedding(DELTA_DOCS[0][1], DIM), k=3,
-        n_probe=len(cents), refine=8,
-    ).collect()
-    assert hits[0]["vec_id"] == DELTA_DOCS[0][0]
-    assert hits[0]["cos_sim"] == pytest.approx(1.0, abs=1e-9)
+    (_, top, cos), *_ = knn_ivf_sq8_probe_many(
+        df, cents, vmin, vmax, [(0, pseudo_embedding(DELTA_DOCS[0][1], DIM))],
+        k=3, n_probe=len(cents), refine=8, as_rows=True,
+    )
+    assert top == DELTA_DOCS[0][0]
+    assert cos == pytest.approx(1.0, abs=1e-9)
     # idempotent rerun
     rep2 = fold_delta_embeddings(spark, path, demb, kind="ivf_sq8")
     assert rep2.get("noop")

@@ -151,10 +151,12 @@ def test_no_index_plan_tokenizes_the_corpus_once(spark, sf_smoke_dir, monkeypatc
 
 def test_no_index_plan_statistics(spark, sf_smoke_dir, tmp_path):
     """The no-index plan's (n_docs, avgdl) equal ``corpus_stats`` bit for
-    bit, an empty-text doc included; with a null-text doc they equal
-    ``build_index``'s (the doc counts, at length 0 — ``corpus_stats``
-    averages over the non-null lengths instead)."""
+    bit, an empty-text doc included; with a null-text doc both equal
+    ``build_index``'s (the doc counts, at length 0), so the DataFrame
+    ``bm25_topk`` scores as the indexed path does."""
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import bm25_topk
     from hybrid_sanctions_search_engine_spark.operators.postings import corpus_stats
+    from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
     from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
     from hybrid_sanctions_search_engine_spark.sources.tables import local_frame
 
@@ -175,5 +177,15 @@ def test_no_index_plan_statistics(spark, sf_smoke_dir, tmp_path):
     for frame in (docs, with_empty):
         want = corpus_stats(frame)
         assert plan_stats(frame) == (want.n_docs, want.avgdl)
-    rep = build_index(with_null, str(tmp_path / "idx"), n_shards=2, resume=False)
+    idx = str(tmp_path / "idx")
+    rep = build_index(with_null, idx, n_shards=2, resume=False)
+    null_stats = corpus_stats(with_null)
+    assert (null_stats.n_docs, null_stats.avgdl) == (rep["n_docs"], rep["avgdl"])
     assert plan_stats(with_null) == (rep["n_docs"], rep["avgdl"])
+    query = "spark query join"
+    got = [(r["doc_id"], round(r["score"], 9)) for r in bm25_topk(with_null, query).collect()]
+    want = [
+        (r["doc_id"], round(r["score"], 9))
+        for r in topk_search(spark, idx, query).collect()
+    ]
+    assert got == want and len(got) == 10

@@ -1,13 +1,12 @@
 """IVF-PQ: product-quantized ANN (operators/pq.py).
 
-Covers: codebook determinism, encode ≡ numpy nearest-centroid, exact
-parity with brute force when the probe+refine cover everything, the
-ADC scan's column pruning (codes only — the 32×-compression point),
-IVF partition pruning, and recall as a function of the refine dial."""
+Covers: codebook determinism, encode ≡ numpy nearest-centroid, parity
+with brute force when the probe+refine cover everything, the ADC scan's
+column pruning (codes only — the 32×-compression point), IVF partition
+pruning, and recall as a function of the refine dial.  The probe is
+checked against ``ann_recall.reference_topk`` in tests/test_ann_recall.py."""
 
-import io
 import re
-from contextlib import redirect_stdout
 
 import numpy as np
 import pytest
@@ -20,9 +19,8 @@ from hybrid_sanctions_search_engine_spark.operators.ann_recall import (
 from hybrid_sanctions_search_engine_spark.operators.pq import (
     _encode_block,
     _normalized,
-    adc_scan_topn,
     encode_pq,
-    knn_ivf_pq_probe,
+    knn_ivf_pq_probe_many,
     load_ivf_pq_index,
     train_pq_codebooks,
     write_ivf_pq_index,
@@ -86,36 +84,38 @@ def test_encode_matches_numpy(spark, pq_fixture):
 
 def test_exact_parity_when_probe_and_refine_cover_all(spark, pq_fixture):
     """n_probe = all cells and refine·k ≥ n ⇒ the PQ probe IS brute force
-    (same ids, bit-identical scores): ADC only ordered candidates, the
-    exact re-rank scored them all through the same arrow cosine."""
+    (same ids, scores at 9 decimals): ADC only ordered candidates, the
+    exact re-rank scored them all with the arrow cosine's op shapes."""
     x, q, df, indexed, cents, books = pq_fixture
     qv = q[0].tolist()
     want = [
-        (r["vec_id"], r["cos_sim"])
+        (r["vec_id"], round(r["cos_sim"], 9))
         for r in knn_bruteforce(df, qv, k=10, arrow=True).collect()
     ]
     got = [
-        (r["vec_id"], r["cos_sim"])
-        for r in knn_ivf_pq_probe(
-            indexed, cents, books, qv, k=10,
-            n_probe=N_CELLS, refine=(N // 10) + 1,
-        ).collect()
+        (vid, round(cos, 9))
+        for _, vid, cos in knn_ivf_pq_probe_many(
+            indexed, cents, books, [(0, qv)], k=10,
+            n_probe=N_CELLS, refine=(N // 10) + 1, as_rows=True,
+        )
     ]
     assert got == want
 
 
-def test_adc_scan_reads_codes_not_vectors(spark, pq_fixture):
-    """The ADC stage's parquet scan must NOT read the raw vector column —
-    that column pruning is the whole memory story at 1B × 384-d."""
+def test_adc_scan_reads_codes_not_vectors(pq_fixture, collect_read_schemas):
+    """The probe's ADC scan must NOT read the raw vector column — that
+    column pruning is the whole memory story at 1B × 384-d; only the
+    re-rank pass reads vectors."""
     x, q, df, indexed, cents, books = pq_fixture
-    cand = adc_scan_topn(indexed, books, q[0].tolist(), n=40, centroids=cents)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        cand.explain(mode="formatted")
-    plan = buf.getvalue()
-    schema = re.search(r"ReadSchema: (.*)", plan).group(1)
-    assert "pq_code" in schema and "vec_id" in schema
-    assert "embedding" not in schema
+    code_scan, rerank = collect_read_schemas(
+        lambda: knn_ivf_pq_probe_many(
+            indexed, cents, books, [(0, q[0].tolist())], k=10, n_probe=4,
+            as_rows=True,
+        )
+    )
+    assert "pq_code" in code_scan and "vec_id" in code_scan
+    assert "embedding" not in code_scan
+    assert "embedding" in rerank and "pq_code" not in rerank
 
 
 def test_probe_prunes_partitions(spark, pq_fixture):
@@ -135,36 +135,6 @@ def test_probe_prunes_partitions(spark, pq_fixture):
     assert cells_read <= set(probe)
 
 
-def test_batch_probe_parity_with_single(spark, pq_fixture):
-    """knn_ivf_pq_probe_many ≡ per-query knn_ivf_pq_probe: same ADC
-    candidate selection (identical lookup tables + (−score, id)
-    tie-break, bit-exact) and re-rank cosines equal at 9 decimals — the
-    knn_bruteforce_many convention; exact bits are unattainable because
-    dgemv output depends on the matrix row count and the batch path
-    gemvs a masked submatrix of the union-candidate batch."""
-    from hybrid_sanctions_search_engine_spark.operators.pq import (
-        knn_ivf_pq_probe_many,
-    )
-
-    x, q, df, indexed, cents, books = pq_fixture
-    queries = [(i, q[i].tolist()) for i in range(5)]
-    batched = knn_ivf_pq_probe_many(
-        indexed, cents, books, queries, k=10, n_probe=4, refine=3
-    )
-    got: dict[int, list] = {qid: [] for qid, _ in queries}
-    for r in batched.collect():
-        got[r["query_id"]].append((r["vec_id"], round(r["cos_sim"], 9)))
-    for qid, qv in queries:
-        want = [
-            (r["vec_id"], round(r["cos_sim"], 9))
-            for r in knn_ivf_pq_probe(
-                indexed, cents, books, qv, k=10, n_probe=4, refine=3
-            ).collect()
-        ]
-        key = lambda t: (-t[1], t[0])
-        assert sorted(got[qid], key=key) == sorted(want, key=key), qid
-
-
 def test_recall_improves_with_refine(spark, pq_fixture):
     """recall@10 vs brute force on the boundary-query regime: the refine
     dial converges the PQ probe toward the IVF-Flat result; at refine=8
@@ -173,18 +143,14 @@ def test_recall_improves_with_refine(spark, pq_fixture):
     truth = brute_force_topk(x, q, k=10)
 
     def recall(refine):
-        hit = tot = 0
-        for qi in range(len(q)):
-            got = {
-                r["vec_id"]
-                for r in knn_ivf_pq_probe(
-                    indexed, cents, books, q[qi].tolist(),
-                    k=10, n_probe=4, refine=refine,
-                ).collect()
-            }
-            hit += len(got & set(truth[qi].tolist()))
-            tot += 10
-        return hit / tot
+        got: dict[int, set] = {qi: set() for qi in range(len(q))}
+        for qi, vid, _ in knn_ivf_pq_probe_many(
+            indexed, cents, books, list(enumerate(q.tolist())),
+            k=10, n_probe=4, refine=refine, as_rows=True,
+        ):
+            got[qi].add(vid)
+        hit = sum(len(got[qi] & set(truth[qi].tolist())) for qi in got)
+        return hit / (10 * len(q))
 
     r1, r8 = recall(1), recall(8)
     assert r8 >= r1

@@ -3,15 +3,14 @@
 The int8 form is what Elasticsearch applies to indexed dense_vector
 fields by default (the reference's mapping,
 elasticsearch_index_manager.py:209-214, sets ``index: True``).  Covers:
-quantizer determinism, encode ≡ numpy grid rounding, exact parity with
-brute force when probe+refine cover everything, the code scan's column
-pruning (codes only — the 4×-IO point), IVF partition pruning, batched ≡
-single probes, and recall as a function of the refine dial (expected to
-saturate far earlier than PQ — per-dim 8-bit noise is ~1e-3 cosine)."""
+quantizer determinism, encode ≡ numpy grid rounding, parity with brute
+force when probe+refine cover everything, the code scan's column pruning
+(codes only — the 4×-IO point), IVF partition pruning, and recall as a
+function of the refine dial (expected to saturate far earlier than PQ —
+per-dim 8-bit noise is ~1e-3 cosine).  The probe is checked against
+``ann_recall.reference_topk`` in tests/test_ann_recall.py."""
 
-import io
 import re
-from contextlib import redirect_stdout
 
 import numpy as np
 import pytest
@@ -25,10 +24,8 @@ from hybrid_sanctions_search_engine_spark.operators.sq import (
     _encode_sq8_block,
     _normalized,
     encode_sq8,
-    knn_ivf_sq8_probe,
     knn_ivf_sq8_probe_many,
     load_ivf_sq8_index,
-    sq8_scan_topn,
     train_sq8_params,
     write_ivf_sq8_index,
 )
@@ -103,37 +100,38 @@ def test_decode_error_bounded(spark, sq_fixture):
 
 def test_exact_parity_when_probe_and_refine_cover_all(spark, sq_fixture):
     """n_probe = all cells and refine·k ≥ n ⇒ the SQ8 probe IS brute force
-    (same ids, bit-identical scores): the code scan only ordered
-    candidates, the exact re-rank scored them all through the same arrow
-    cosine."""
+    (same ids, scores at 9 decimals): the code scan only ordered
+    candidates, the exact re-rank scored them all with the arrow cosine's
+    op shapes."""
     x, q, df, indexed, cents, vmin, vmax = sq_fixture
     qv = q[0].tolist()
     want = [
-        (r["vec_id"], r["cos_sim"])
+        (r["vec_id"], round(r["cos_sim"], 9))
         for r in knn_bruteforce(df, qv, k=10, arrow=True).collect()
     ]
     got = [
-        (r["vec_id"], r["cos_sim"])
-        for r in knn_ivf_sq8_probe(
-            indexed, cents, vmin, vmax, qv, k=10,
-            n_probe=N_CELLS, refine=(N // 10) + 1,
-        ).collect()
+        (vid, round(cos, 9))
+        for _, vid, cos in knn_ivf_sq8_probe_many(
+            indexed, cents, vmin, vmax, [(0, qv)], k=10,
+            n_probe=N_CELLS, refine=(N // 10) + 1, as_rows=True,
+        )
     ]
     assert got == want
 
 
-def test_code_scan_reads_codes_not_vectors(spark, sq_fixture):
-    """The candidate stage's parquet scan must NOT read the raw vector
-    column — the 4×-IO point at 1B × 384-d."""
+def test_code_scan_reads_codes_not_vectors(sq_fixture, collect_read_schemas):
+    """The probe's candidate scan must NOT read the raw vector column —
+    the 4×-IO point at 1B × 384-d; only the re-rank pass reads vectors."""
     x, q, df, indexed, cents, vmin, vmax = sq_fixture
-    cand = sq8_scan_topn(indexed, vmin, vmax, q[0].tolist(), n=40)
-    buf = io.StringIO()
-    with redirect_stdout(buf):
-        cand.explain(mode="formatted")
-    plan = buf.getvalue()
-    schema = re.search(r"ReadSchema: (.*)", plan).group(1)
-    assert "sq_code" in schema and "vec_id" in schema
-    assert "embedding" not in schema
+    code_scan, rerank = collect_read_schemas(
+        lambda: knn_ivf_sq8_probe_many(
+            indexed, cents, vmin, vmax, [(0, q[0].tolist())], k=10,
+            n_probe=4, as_rows=True,
+        )
+    )
+    assert "sq_code" in code_scan and "vec_id" in code_scan
+    assert "embedding" not in code_scan
+    assert "embedding" in rerank and "sq_code" not in rerank
 
 
 def test_probe_prunes_partitions(spark, sq_fixture):
@@ -153,30 +151,6 @@ def test_probe_prunes_partitions(spark, sq_fixture):
     assert cells_read <= set(probe)
 
 
-def test_batch_probe_parity_with_single(spark, sq_fixture):
-    """knn_ivf_sq8_probe_many ≡ per-query knn_ivf_sq8_probe: identical
-    candidate selection (the row-local multiply-reduce score + (−score,
-    id) tie-break is batching-invariant) and re-rank cosines equal at 9
-    decimals — the knn_bruteforce_many convention."""
-    x, q, df, indexed, cents, vmin, vmax = sq_fixture
-    queries = [(i, q[i].tolist()) for i in range(5)]
-    batched = knn_ivf_sq8_probe_many(
-        indexed, cents, vmin, vmax, queries, k=10, n_probe=4, refine=2
-    )
-    got: dict[int, list] = {qid: [] for qid, _ in queries}
-    for r in batched.collect():
-        got[r["query_id"]].append((r["vec_id"], round(r["cos_sim"], 9)))
-    for qid, qv in queries:
-        want = [
-            (r["vec_id"], round(r["cos_sim"], 9))
-            for r in knn_ivf_sq8_probe(
-                indexed, cents, vmin, vmax, qv, k=10, n_probe=4, refine=2
-            ).collect()
-        ]
-        key = lambda t: (-t[1], t[0])
-        assert sorted(got[qid], key=key) == sorted(want, key=key), qid
-
-
 def test_recall_saturates_early(spark, sq_fixture):
     """recall@10 vs brute force on the boundary regime: int8 candidate
     selection should be near the IVF-Flat ceiling already at refine=2 —
@@ -186,18 +160,14 @@ def test_recall_saturates_early(spark, sq_fixture):
     truth = brute_force_topk(x, q, k=10)
 
     def recall(refine):
-        hit = tot = 0
-        for qi in range(len(q)):
-            got = {
-                r["vec_id"]
-                for r in knn_ivf_sq8_probe(
-                    indexed, cents, vmin, vmax, q[qi].tolist(),
-                    k=10, n_probe=4, refine=refine,
-                ).collect()
-            }
-            hit += len(got & set(truth[qi].tolist()))
-            tot += 10
-        return hit / tot
+        got: dict[int, set] = {qi: set() for qi in range(len(q))}
+        for qi, vid, _ in knn_ivf_sq8_probe_many(
+            indexed, cents, vmin, vmax, list(enumerate(q.tolist())),
+            k=10, n_probe=4, refine=refine, as_rows=True,
+        ):
+            got[qi].add(vid)
+        hit = sum(len(got[qi] & set(truth[qi].tolist())) for qi in got)
+        return hit / (10 * len(q))
 
     r2 = recall(2)
     assert r2 >= 0.95, r2

@@ -45,7 +45,7 @@ def test_lsh_and_ivf_384(spark, emb384, tmp_path):
     from hybrid_sanctions_search_engine_spark.functions.vectors import pseudo_embedding
     from hybrid_sanctions_search_engine_spark.operators.similarity import (
         add_lsh_signature,
-        knn_ivf_probe,
+        knn_ivf_probe_many,
         knn_lsh,
         load_ivf_index,
         write_ivf_index,
@@ -60,5 +60,5 @@ def test_lsh_and_ivf_384(spark, emb384, tmp_path):
     write_ivf_index(emb384, path, n_centroids=8, iters=5)
     indexed, cents = load_ivf_index(spark, path)
     assert cents.shape == (8, 384)
-    got = knn_ivf_probe(indexed, cents, q, k=3, n_probe=3).collect()
-    assert got and got[0]["vec_id"] == 3
+    got = knn_ivf_probe_many(indexed, cents, [(0, q)], k=3, n_probe=3, as_rows=True)
+    assert got and got[0][1] == 3

@@ -902,8 +902,8 @@ def test_single_query_group_scorer_bit_identical_to_chunk_scorer(msm, weighted):
 
         by_group = scorer(lambda pdf: decode_shard_arrays(pdf, include_df=True))
         got = [by_group((g,), grp) for g, grp in rows.groupby(rows["chunk"] % n_groups)]
-        served = list(score_pre_grouped(by_group)(iter(batches)))
-        served_raw = list(score_pre_grouped(scorer(None))(iter(raw_batches)))
+        served = list(score_pre_grouped(by_group, k)(iter(batches)))
+        served_raw = list(score_pre_grouped(scorer(None), k)(iter(raw_batches)))
         for q in batch:
             multi = 3 if q == 0 else 2  # multi-term sums
             assert (want[q]["n_terms_matched"] >= multi).sum() > k // 2
@@ -911,6 +911,43 @@ def test_single_query_group_scorer_bit_identical_to_chunk_scorer(msm, weighted):
                 assert res["doc_id"].tolist() == want[q]["doc_id"].tolist()
                 assert res["n_terms_matched"].tolist() == want[q]["n_terms_matched"].tolist()
                 assert np.array_equal(res["score"].to_numpy(), want[q]["score"].to_numpy())
+
+
+def test_pre_grouped_task_output_is_k_bounded():
+    """One task fed several cached partitions yields at most k rows per
+    query: the merge of its partitions' tops under (score desc, doc_id
+    asc), so a coalesced task's output stays task-bounded however many
+    partitions it holds.  Equal tf and doc_len make ties the tie-break
+    must settle."""
+    import numpy as np
+    import pandas as pd
+
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import (
+        make_batch_group_scorer,
+        score_pre_grouped,
+    )
+
+    k, rng = 3, np.random.default_rng(5)
+    rows = [
+        (t, part * 100 + d, int(rng.integers(1, 3)), 10, 40, part)
+        for part in range(4)
+        for d in range(20)
+        for t in ("a", "b")
+        if rng.random() < 0.7
+    ]
+    cache = pd.DataFrame(rows, columns=["term", "doc_id", "tf", "doc_len", "df", "part"])
+    cache = cache.sort_values(["part", "term"], kind="mergesort")
+    scorer = make_batch_group_scorer(
+        {"a": [(0, 1.0)], "b": [(0, 1.0), (1, 0.5)]}, [7, 8], 80, 10.0, 1.2, 0.75, k
+    )
+    batches = [cache.iloc[i:i + 9] for i in range(0, len(cache), 9)]
+    (out,) = score_pre_grouped(scorer, k)(iter(batches))
+    per_part = pd.concat([scorer(None, g) for _, g in cache.groupby("part")])
+    assert (per_part.groupby("query_id").size() > k).all()
+    want = per_part.sort_values(
+        ["query_id", "score", "doc_id"], ascending=[True, False, True]
+    ).groupby("query_id").head(k)
+    assert out.values.tolist() == want.values.tolist()
 
 
 def test_es_min_should_match_rules():
