@@ -532,9 +532,11 @@ def topk_pre_grouped(matched: DataFrame, score_group, k: int) -> DataFrame:
     (built with the same ``k``): tag ``spark_partition_id()``, ``coalesce``
     to ``defaultParallelism``, one ``mapInPandas``.  One job with no
     exchange, fresh cache or not (``mapInPandas`` requires no
-    distribution), and at most one wave of Python tasks: each costs ~40-60
-    ms of a core whatever its work, so one wave beats a groupBy over the
-    cache's partitions."""
+    distribution), and at most one wave of Python tasks.  A Python stage
+    pays the job/task launch path (~33-36 ms at local[4], about a JVM
+    job's floor) plus Arrow feeding of its rows, not a per-task setup, so
+    removing a stage or exchange is the lever; one wave over the cache
+    beats a groupBy that shuffles it."""
     par = matched.sparkSession.sparkContext.defaultParallelism
     return (
         matched.withColumn("part", F.spark_partition_id())

@@ -52,11 +52,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.fs import fs_for
-from .similarity import assign_ivf_cells, train_ivf_centroids
-
-
-def _normalized(x: np.ndarray) -> np.ndarray:
-    return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+from .similarity import (
+    assign_ivf_cells,
+    normalize_rows,
+    train_ivf_centroids,
+    training_sample,
+)
 
 
 def train_pq_codebooks(
@@ -71,11 +72,11 @@ def train_pq_codebooks(
 ) -> np.ndarray:
     """Per-subspace k-means codebooks → ``(m, 2**nbits, dim//m)`` float64.
 
-    Same deterministic bounded-sample discipline as
-    ``similarity.train_ivf_centroids`` (xxhash64-ordered TakeOrdered —
-    uniform on clustered/id-sorted inputs, stable across partition
-    layouts); vectors are L2-normalized BEFORE splitting so the ADC sum of
-    subspace dots approximates cosine directly.  Subspace training is
+    Trains on ``similarity.training_sample`` (the IVF trainer's
+    deterministic bounded sample); vectors are L2-normalized BEFORE
+    splitting so the ADC sum of subspace dots approximates cosine
+    directly.  ``nbits`` (and ``m`` against the centroids' dim) are checked
+    before the sample's Spark job.  Subspace training is
     plain Euclidean Lloyd (minimum reconstruction MSE — the PQ objective)
     with farthest-point init, k_eff = min(2**nbits, n_sample).
 
@@ -88,18 +89,13 @@ def train_pq_codebooks(
     Quantizing the residual spends it on exactly the differences ADC must
     rank, and the identity ``q̂·x̂ = q̂·c + q̂·r`` keeps scoring exact-form:
     the per-cell ``q̂·c`` offset is added at scan time."""
-    rows = (
-        embeddings.select(F.col(vec_col), F.xxhash64(F.col(id_col)).alias("_h"))
-        .orderBy("_h")
-        .limit(sample)
-        .select(vec_col)
-        .collect()
-    )
     if nbits > 8:
         # every scan layers 1 byte/subspace (tobytes/frombuffer uint8);
         # wider codes would silently wrap modulo 256 in _encode_block
         raise ValueError(f"nbits={nbits} unsupported: codes are 1 byte/subspace")
-    x = _normalized(np.array([r[0] for r in rows], dtype=np.float64))
+    if centroids is not None and centroids.shape[1] % m:
+        raise ValueError(f"m={m} must divide dim={centroids.shape[1]}")
+    x = training_sample(embeddings, sample, vec_col, id_col)
     if centroids is not None:
         x = x - centroids[(x @ centroids.T).argmax(axis=1)]
     dim = x.shape[1]
@@ -169,7 +165,7 @@ def encode_pq(
 
         @pandas_udf(BinaryType())
         def code(vs: pd.Series) -> pd.Series:
-            x = _normalized(np.array(vs.tolist(), dtype=np.float64))
+            x = normalize_rows(np.array(vs.tolist(), dtype=np.float64))
             codes = _encode_block(x, books)
             return pd.Series([c.tobytes() for c in codes])
 
@@ -179,7 +175,7 @@ def encode_pq(
 
     @pandas_udf(BinaryType())
     def code_residual(vs: pd.Series, cells: pd.Series) -> pd.Series:
-        x = _normalized(np.array(vs.tolist(), dtype=np.float64))
+        x = normalize_rows(np.array(vs.tolist(), dtype=np.float64))
         r = x - cents[cells.to_numpy(dtype=np.int64)]
         codes = _encode_block(r, books)
         return pd.Series([c.tobytes() for c in codes])

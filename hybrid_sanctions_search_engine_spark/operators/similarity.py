@@ -277,6 +277,34 @@ def knn_lsh(
 # IVF (inverted-file) ANN — the partition-pruned scale path
 # ---------------------------------------------------------------------------
 
+def normalize_rows(x: np.ndarray) -> np.ndarray:
+    """Rows scaled to unit L2 norm (an all-zero row stays zero)."""
+    return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+
+
+def training_sample(
+    embeddings: DataFrame, sample: int, vec_col: str = "embedding",
+    id_col: str = "vec_id",
+) -> np.ndarray:
+    """The ANN trainers' one sample: the first ``sample`` rows in
+    ``xxhash64(id)`` order, L2-normalized, as a float64 ``(n, dim)`` matrix.
+
+    The plan is a TakeOrderedAndProject (a per-partition top-n, then a
+    driver merge — no global sort, no shuffle) that is (a) *uniform* in the
+    hash order — immune to source-clustered / id-sorted inputs that made a
+    bare ``limit()`` pick one cluster's head — and (b) *deterministic*
+    across runs and partition layouts (``limit`` on unordered data is
+    not).  The cap makes training O(sample·dim·iters) at any corpus size."""
+    rows = (
+        embeddings.select(F.col(vec_col), F.xxhash64(F.col(id_col)).alias("_h"))
+        .orderBy("_h")
+        .limit(sample)
+        .select(vec_col)
+        .collect()
+    )
+    return normalize_rows(np.array([r[0] for r in rows], dtype=np.float64))
+
+
 def train_ivf_centroids(
     embeddings: DataFrame,
     n_centroids: int = 16,
@@ -286,25 +314,10 @@ def train_ivf_centroids(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> np.ndarray:
-    """k-means centroids from a bounded driver-side sample (deterministic).
-
-    The sample cap makes this O(sample·dim·iters) regardless of corpus size —
-    the standard IVF training shape (train on a sample, assign everything).
-
-    Sampling orders by ``xxhash64(id)`` and takes the first ``sample`` rows:
-    a TakeOrderedAndProject (no full sort shuffle) that is (a) *uniform* in
-    the hash order — immune to source-clustered / id-sorted inputs that made
-    a bare ``limit()`` pick one cluster's head — and (b) *deterministic*
-    across runs and partition layouts (``limit`` on unordered data is not)."""
-    rows = (
-        embeddings.select(F.col(vec_col), F.xxhash64(F.col(id_col)).alias("_h"))
-        .orderBy("_h")
-        .limit(sample)
-        .select(vec_col)
-        .collect()
-    )
-    x = np.array([r[0] for r in rows], dtype=np.float64)
-    x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+    """k-means centroids from a bounded driver-side sample (deterministic;
+    ``training_sample``) — the standard IVF training shape: train on a
+    sample, assign everything."""
+    x = training_sample(embeddings, sample, vec_col, id_col)
     # farthest-point init (deterministic, k-means++-style): each next seed is
     # the point least similar to its nearest chosen seed — on separated
     # clusters this places exactly one seed per cluster, unlike random choice
@@ -343,7 +356,7 @@ def assign_ivf_cells(
     @pandas_udf(IntegerType())
     def cell(vs: pd.Series) -> pd.Series:
         x = np.array(vs.tolist(), dtype=np.float64)
-        x = x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+        x = normalize_rows(x)
         return pd.Series((x @ cent.T).argmax(axis=1).astype(np.int32))
 
     return embeddings.withColumn(out_col, cell(F.col(vec_col)))

@@ -48,11 +48,12 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.fs import fs_for
-from .similarity import assign_ivf_cells, train_ivf_centroids
-
-
-def _normalized(x: np.ndarray) -> np.ndarray:
-    return x / np.maximum(np.linalg.norm(x, axis=1, keepdims=True), 1e-12)
+from .similarity import (
+    assign_ivf_cells,
+    normalize_rows,
+    train_ivf_centroids,
+    training_sample,
+)
 
 
 def train_sq8_params(
@@ -61,20 +62,12 @@ def train_sq8_params(
     vec_col: str = "embedding",
     id_col: str = "vec_id",
 ) -> tuple[np.ndarray, np.ndarray]:
-    """Per-dimension ``(vmin, vmax)`` over a bounded deterministic sample of
-    L2-normalized vectors — the same xxhash64-ordered TakeOrdered sample
-    discipline as ``similarity.train_ivf_centroids`` (uniform on clustered
-    or id-sorted inputs, stable across partition layouts).  Vectors outside
-    the sampled range encode clipped — the 1/256-step grid absorbs the
-    tail, and the exact re-rank repairs any survivor ranking."""
-    rows = (
-        embeddings.select(F.col(vec_col), F.xxhash64(F.col(id_col)).alias("_h"))
-        .orderBy("_h")
-        .limit(sample)
-        .select(vec_col)
-        .collect()
-    )
-    x = _normalized(np.array([r[0] for r in rows], dtype=np.float64))
+    """Per-dimension ``(vmin, vmax)`` over ``similarity.training_sample``
+    (the IVF trainer's bounded deterministic sample of L2-normalized
+    vectors).  Vectors outside the sampled range encode clipped — the
+    1/256-step grid absorbs the tail, and the exact re-rank repairs any
+    survivor ranking."""
+    x = training_sample(embeddings, sample, vec_col, id_col)
     return x.min(axis=0), x.max(axis=0)
 
 
@@ -109,7 +102,7 @@ def encode_sq8(
 
     @pandas_udf(BinaryType())
     def code(vs: pd.Series) -> pd.Series:
-        x = _normalized(np.array(vs.tolist(), dtype=np.float64))
+        x = normalize_rows(np.array(vs.tolist(), dtype=np.float64))
         codes = _encode_sq8_block(x, lo, hi)
         return pd.Series([c.tobytes() for c in codes])
 

@@ -83,16 +83,14 @@ class IndexMeta:
     # exact corpus token count: lets merge-compaction update avgdl EXACTLY
     # ((total+delta)/(n+new)) instead of reconstructing from the float avgdl
     total_tokens: int = 0
-    # fingerprint of the last delta folded by merge_compact — makes the fold
-    # idempotent even if a caller re-runs after full success
+    # fingerprint (md5 of the sorted file basenames) of the last delta
+    # snapshot merge_compact folded — a record of the fold, not a guard
     last_delta_fp: str = ""
-    # basenames of delta FILES whose postings are folded into the shards but
-    # may not be deleted yet (crash window between the meta commit and the
-    # compact job's file deletion).  Committed atomically WITH the stats in
-    # the same _index_meta.json write, so a rerun that sees new stream
-    # arrivals alongside the old files can exclude the already-folded ones
-    # instead of double-folding them (per-file idempotency; the snapshot
-    # fingerprint above only protects an IDENTICAL delta).
+    # the per-file fold ledger: basenames of delta FILES whose postings are
+    # folded into the shards but may not be deleted yet (the window between
+    # the meta commit and the compact job's file deletion).  Committed in
+    # the same _index_meta.json write as the stats, so a later fold excludes
+    # them instead of folding them twice (sources/fold.py).
     folded_delta_files: list | None = None
 
     @staticmethod
@@ -292,21 +290,20 @@ def _write_shard(
     index_dir: str,
     fs,
     t0: float,
-    filename: str | None = None,
     commit_manifest: bool = True,
 ) -> pd.DataFrame:
     """Write one shard's parquet + commit its manifest; → SUMMARY_SCHEMA row.
 
-    ``filename`` overrides the data file name (dot-prefixed names are
-    invisible to parquet readers — the merge compactor writes there and
-    swaps atomically afterwards); ``commit_manifest=False`` defers the
-    manifest commit to the caller (returned via the json column)."""
+    ``commit_manifest=False`` defers the manifest commit to the caller
+    (returned via the json column): the merge compactor writes its shards
+    under a fold's stage dir and commits their manifests in the fold
+    record."""
     import pyarrow as pa
 
     shard_dir = os.path.join(index_dir, f"shard={shard}")
     fs.makedirs(shard_dir)
     suffix = "" if salt is None else f"-{salt}"
-    data_path = os.path.join(shard_dir, filename or f"data{suffix}.parquet")
+    data_path = os.path.join(shard_dir, f"data{suffix}.parquet")
     # `shard` comes back as the partition-directory column on read
     arrow_schema = pa.schema(
         [

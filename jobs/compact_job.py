@@ -4,18 +4,19 @@
         --index-dir /path/to/index --delta-dir /path/to/delta_postings \
         [--ann-index-dir /path/to/ivf --ann-kind ivf] [--keep-delta]
 
-Merge-based: touched shards decode→merge→re-encode (no corpus
-re-tokenization; see streaming/incremental.py::merge_compact).  The delta
-FILES read by this run (snapshotted up front) are deleted after a successful
-compaction unless --keep-delta; files the stream appends during the run
-survive for the next compaction.
+Snapshots the delta dir's parquet files, folds them with
+streaming/incremental.py::merge_compact (touched shards decode → merge →
+re-encode, no corpus re-tokenization), then deletes exactly those files
+unless --keep-delta; files the stream appends during the run survive for
+the next compaction.  With --ann-index-dir the streamed embeddings under
+<delta-dir>/_embeddings fold into the base ANN layout the same way
+(fold_delta_embeddings), so compacted docs stay visible to the vector
+stage after the overlay is dropped.
 
-With --ann-index-dir, the delta's streamed EMBEDDINGS (written by
-start_delta_stream(encoder=...) under <delta-dir>/_embeddings) fold into the
-base ANN layout too (streaming/incremental.py::fold_delta_embeddings —
-crash-safe staged moves, fingerprint-idempotent), under the same
-snapshot-then-delete discipline, so compacted docs stay visible to the
-vector stage after the overlay is dropped.
+Both folds commit through sources/fold.py's staged commit: a rerun after a
+crash finishes the interrupted fold, and a file the index's ledger lists
+as folded (a crash between the commit and the delete) is never folded
+twice.  An empty delta dir prints {"status": "noop"}.
 """
 
 from __future__ import annotations
@@ -63,9 +64,8 @@ def main() -> None:
     if not files:
         print(json.dumps({"status": "noop", "reason": "empty delta"}))
         return
-    # per-file idempotency: merge_compact consults IndexMeta.folded_delta_files
-    # and excludes files a crashed prior run already folded (they are still
-    # safe to delete below — their postings are in the shards)
+    # files the index's ledger lists (folded by a run that crashed before
+    # its delete) are excluded from the fold and still safe to delete below
     report = merge_compact(spark, args.index_dir, delta_files=files)
     if args.ann_index_dir:
         from hybrid_sanctions_search_engine_spark.streaming.incremental import (
@@ -80,10 +80,6 @@ def main() -> None:
             if f.endswith(".parquet")
         ]
         if emb_files:
-            # per-file idempotency (same contract as the postings fold):
-            # basenames recorded in the ANN meta are excluded from later
-            # folds, so a crash in the delete window below cannot
-            # double-fold them even if the stream appended new files
             report["ann_fold"] = fold_delta_embeddings(
                 spark,
                 args.ann_index_dir,

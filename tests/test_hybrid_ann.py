@@ -189,7 +189,7 @@ def test_removed_ann_layouts_are_rejected(spark, corpus, tmp_path, kind):
             ann_index_dir=str(tmp_path), ann_kind=kind,
         )
     with pytest.raises(ValueError, match="ivf, ivf_pq, ivf_sq8"):
-        fold_delta_embeddings(spark, str(tmp_path), emb, kind=kind)
+        fold_delta_embeddings(spark, str(tmp_path), [], kind=kind)
 
 
 def test_search_through_ann_matches_bruteforce_ladder(ivf_plan, corpus):

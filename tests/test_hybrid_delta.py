@@ -25,6 +25,7 @@ compaction.  This file pins the round-6 contract:
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import numpy as np
 import pytest
@@ -190,8 +191,6 @@ def test_lexical_overlay_still_serves_marker_terms(env, monkeypatch):
     strong and escalated results, for msm 1 and "75%", must equal EXACTLY
     those of ``batch_topk_local``'s shuffle-by-group path over the same
     cache."""
-    from functools import partial
-
     plan = env["plan"]
     res, _ = plan.search("zorblatt", SearchOpts(top_k=5))
     ids = {r["doc_id"] for r in res.collect()}
@@ -348,59 +347,51 @@ def ann_copy(env, tmp_path):
     return dst
 
 
-def test_fold_delta_embeddings_ivf(spark, env, ann_copy):
-    """After the fold, a plain IVF probe (no delta attached) finds the
-    streamed docs; a rerun is a fingerprint no-op (no duplicated rows)."""
-    from hybrid_sanctions_search_engine_spark.operators.similarity import (
-        knn_ivf_probe_many,
-        load_ivf_index,
+def _emb_files(env):
+    """The streamed delta's embeddings parquet files."""
+    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
+        delta_embeddings_dir,
     )
 
-    demb = load_delta_embeddings(spark, env["delta_dir"])
-    before = spark.read.parquet(ann_copy).count()
-    rep = fold_delta_embeddings(spark, ann_copy, demb, kind="ivf")
+    emb_dir = delta_embeddings_dir(env["delta_dir"])
+    return sorted(
+        os.path.join(emb_dir, f) for f in os.listdir(emb_dir) if f.endswith(".parquet")
+    )
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivf_pq", "ivf_sq8"])
+def test_fold_delta_embeddings(spark, env, tmp_path, kind):
+    """Each IVF-family layout folds the streamed vector files: vectors are
+    cell-assigned (and PQ- or int8-coded) with the STORED centroids and
+    codec (no retrain), so a plain probe finds the streamed doc at exact
+    cosine 1.0 after the re-rank; a rerun is a per-file no-op."""
+    from hybrid_sanctions_search_engine_spark.operators import pq, similarity, sq
+
+    write, load, probe, code = {
+        "ivf": (similarity.write_ivf_index, similarity.load_ivf_index,
+                similarity.knn_ivf_probe_many, None),
+        "ivf_pq": (partial(pq.write_ivf_pq_index, m=16), pq.load_ivf_pq_index,
+                   partial(pq.knn_ivf_pq_probe_many, refine=8), "pq_code"),
+        "ivf_sq8": (sq.write_ivf_sq8_index, sq.load_ivf_sq8_index,
+                    partial(sq.knn_ivf_sq8_probe_many, refine=8), "sq_code"),
+    }[kind]
+    path = str(tmp_path / kind)
+    write(env["base_emb"], path, n_centroids=4, iters=6)
+    before = spark.read.parquet(path).count()
+    files = _emb_files(env)
+    rep = fold_delta_embeddings(spark, path, files, kind=kind)
     assert rep["folded_vecs"] == len(DELTA_DOCS)
-    df, cents = load_ivf_index(spark, ann_copy)
+    df, cents, *codec = load(spark, path)
     assert df.count() == before + len(DELTA_DOCS)
-    (_, top, cos), *_ = knn_ivf_probe_many(
-        df, cents, [(0, pseudo_embedding(DELTA_DOCS[0][1], DIM))], k=3,
+    if code:
+        assert df.where(F.col(code).isNull()).count() == 0
+    (_, top, cos), *_ = probe(
+        df, cents, *codec, [(0, pseudo_embedding(DELTA_DOCS[0][1], DIM))], k=3,
         n_probe=len(cents), as_rows=True,
     )
     assert top == DELTA_DOCS[0][0]
     assert cos == pytest.approx(1.0, abs=1e-9)
-    # idempotent rerun
-    rep2 = fold_delta_embeddings(spark, ann_copy, demb, kind="ivf")
-    assert rep2.get("noop")
-    assert spark.read.parquet(ann_copy).count() == before + len(DELTA_DOCS)
-
-
-def test_fold_delta_embeddings_ivf_pq(spark, env, tmp_path):
-    """The PQ layout folds too: delta vectors are cell-assigned AND coded
-    with the STORED codebooks (no retrain), so a plain PQ probe finds the
-    streamed doc at exact cosine 1.0 after the re-rank; rerun is a no-op."""
-    from hybrid_sanctions_search_engine_spark.operators.pq import (
-        knn_ivf_pq_probe_many,
-        load_ivf_pq_index,
-        write_ivf_pq_index,
-    )
-
-    path = str(tmp_path / "ivf_pq_fold")
-    write_ivf_pq_index(env["base_emb"], path, n_centroids=4, m=16, iters=6)
-    demb = load_delta_embeddings(spark, env["delta_dir"])
-    before = spark.read.parquet(path).count()
-    rep = fold_delta_embeddings(spark, path, demb, kind="ivf_pq")
-    assert rep["folded_vecs"] == len(DELTA_DOCS)
-    df, cents, books = load_ivf_pq_index(spark, path)
-    assert df.count() == before + len(DELTA_DOCS)
-    assert df.where(F.col("pq_code").isNull()).count() == 0
-    (_, top, cos), *_ = knn_ivf_pq_probe_many(
-        df, cents, books, [(0, pseudo_embedding(DELTA_DOCS[0][1], DIM))], k=3,
-        n_probe=len(cents), refine=8, as_rows=True,
-    )
-    assert top == DELTA_DOCS[0][0]
-    assert cos == pytest.approx(1.0, abs=1e-9)
-    # idempotent rerun
-    rep2 = fold_delta_embeddings(spark, path, demb, kind="ivf_pq")
+    rep2 = fold_delta_embeddings(spark, path, files, kind=kind)
     assert rep2.get("noop")
     assert spark.read.parquet(path).count() == before + len(DELTA_DOCS)
 
@@ -411,7 +402,6 @@ def test_fold_refuses_pre_residual_pq_index(spark, env, tmp_path):
     raw-coded base rows would permanently mix two incompatible encodings
     in one index directory."""
     import json
-    import os
 
     from hybrid_sanctions_search_engine_spark.operators.pq import (
         write_ivf_pq_index,
@@ -425,86 +415,8 @@ def test_fold_refuses_pre_residual_pq_index(spark, env, tmp_path):
     del meta["residual"]  # simulate the pre-residual index format
     with open(meta_path, "w") as f:
         json.dump(meta, f)
-    demb = load_delta_embeddings(spark, env["delta_dir"])
     with pytest.raises(ValueError, match="pre-residual"):
-        fold_delta_embeddings(spark, path, demb, kind="ivf_pq")
-
-
-def test_fold_delta_embeddings_ivf_sq8(spark, env, tmp_path):
-    """The int8 layout folds too: delta vectors are cell-assigned AND coded
-    with the STORED per-dim quantizer (no retrain), so a plain SQ8 probe
-    finds the streamed doc at exact cosine 1.0 after the re-rank; rerun is
-    a no-op."""
-    from hybrid_sanctions_search_engine_spark.operators.sq import (
-        knn_ivf_sq8_probe_many,
-        load_ivf_sq8_index,
-        write_ivf_sq8_index,
-    )
-
-    path = str(tmp_path / "ivf_sq8_fold")
-    write_ivf_sq8_index(env["base_emb"], path, n_centroids=4, iters=6)
-    demb = load_delta_embeddings(spark, env["delta_dir"])
-    before = spark.read.parquet(path).count()
-    rep = fold_delta_embeddings(spark, path, demb, kind="ivf_sq8")
-    assert rep["folded_vecs"] == len(DELTA_DOCS)
-    df, cents, vmin, vmax = load_ivf_sq8_index(spark, path)
-    assert df.count() == before + len(DELTA_DOCS)
-    assert df.where(F.col("sq_code").isNull()).count() == 0
-    (_, top, cos), *_ = knn_ivf_sq8_probe_many(
-        df, cents, vmin, vmax, [(0, pseudo_embedding(DELTA_DOCS[0][1], DIM))],
-        k=3, n_probe=len(cents), refine=8, as_rows=True,
-    )
-    assert top == DELTA_DOCS[0][0]
-    assert cos == pytest.approx(1.0, abs=1e-9)
-    # idempotent rerun
-    rep2 = fold_delta_embeddings(spark, path, demb, kind="ivf_sq8")
-    assert rep2.get("noop")
-    assert spark.read.parquet(path).count() == before + len(DELTA_DOCS)
-
-
-def test_fold_crash_resume_no_duplicates(spark, env, ann_copy, monkeypatch):
-    """Crash mid-move: a rerun replays only the unfinished moves and the
-    folded index holds each delta vector exactly once."""
-    import hybrid_sanctions_search_engine_spark.sources.fs as fsmod
-
-    demb = load_delta_embeddings(spark, env["delta_dir"])
-    before = spark.read.parquet(ann_copy).count()
-    real_fs_for = fsmod.fs_for
-
-    class CrashingFS:
-        def __init__(self, inner):
-            self._inner = inner
-            self._moves = 0
-
-        def move(self, src, dst):
-            # perform the first move, then crash — at least one file has
-            # landed, the rest (if any) replay from the pending manifest
-            self._moves += 1
-            self._inner.move(src, dst)
-            if self._moves == 1:
-                raise RuntimeError("injected crash mid-move")
-
-        def __getattr__(self, name):
-            return getattr(self._inner, name)
-
-    monkeypatch.setattr(
-        fsmod, "fs_for", lambda p: CrashingFS(real_fs_for(p))
-    )
-    with pytest.raises(RuntimeError, match="injected crash"):
-        fold_delta_embeddings(spark, ann_copy, demb, kind="ivf")
-    monkeypatch.setattr(fsmod, "fs_for", real_fs_for)
-    rep = fold_delta_embeddings(spark, ann_copy, demb, kind="ivf")
-    # the entry replay finalizes the pending manifest BEFORE the same-fp
-    # branch, so the rerun reports the fold as already done (round 6: the
-    # replay moved up so it also covers a fingerprint changed by new
-    # stream appends); either way the moves completed exactly once
-    assert rep.get("noop") or rep.get("resumed")
-    after = spark.read.parquet(ann_copy)
-    assert after.count() == before + len(DELTA_DOCS)
-    # exactly-once per vec_id
-    assert (
-        after.groupBy("vec_id").count().where(F.col("count") > 1).count() == 0
-    )
+        fold_delta_embeddings(spark, path, _emb_files(env), kind="ivf_pq")
 
 
 def _assert_delta_overlay(spark, env, plan):
@@ -580,24 +492,15 @@ def test_delta_overlay_with_no_index_plan(spark, env):
 
 
 def test_fold_file_ledger_excludes_already_folded(spark, env, ann_copy, tmp_path):
-    """Per-file idempotency (round-6 review): folding with delta_files
-    records basenames in the ANN meta; a rerun whose snapshot adds NEW
-    files folds ONLY those, and re-folding the old snapshot is a no-op —
-    set-level fingerprints could alias distinct deltas ({2,3} vs {1,4})."""
-    import os as _os
+    """Per-file idempotency: folding delta_files records their basenames in
+    the ANN meta; a rerun whose snapshot adds NEW files folds ONLY those,
+    re-folding the old snapshot is a no-op, and the ledger ages to the
+    latest snapshot (as merge_compact's does)."""
+    import json
 
     from hybrid_sanctions_search_engine_spark.sources.fs import fs_for
-    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
-        delta_embeddings_dir,
-    )
 
-    emb_dir = delta_embeddings_dir(env["delta_dir"])
-    fs = fs_for(emb_dir)
-    files = [
-        _os.path.join(emb_dir, f)
-        for f in fs.list_files(emb_dir)
-        if f.endswith(".parquet")
-    ]
+    files = _emb_files(env)
     assert files
     before = spark.read.parquet(ann_copy).count()
     rep = fold_delta_embeddings(spark, ann_copy, kind="ivf", delta_files=files)
@@ -608,90 +511,22 @@ def test_fold_file_ledger_excludes_already_folded(spark, env, ann_copy, tmp_path
     rep2 = fold_delta_embeddings(spark, ann_copy, kind="ivf", delta_files=files)
     assert rep2.get("noop") and rep2["files_excluded"]
     assert spark.read.parquet(ann_copy).count() == n1
-    # a NEW file with different vectors (the {1,4}-style second delta that
-    # a count+sum fingerprint could alias) folds, old files stay excluded
+    # a NEW file folds; the old files, deleted by the caller, age out
     extra = str(tmp_path / "extra")
     spark.createDataFrame(
         [(990001, [0.5] * DIM), (990002, [0.25] * DIM)],
         "vec_id long, embedding array<double>",
     ).coalesce(1).write.parquet(extra)
-    new_files = files + [
-        _os.path.join(extra, f)
-        for f in fs_for(extra).list_files(extra)
+    new_files = [
+        os.path.join(extra, f) for f in fs_for(extra).list_files(extra)
         if f.endswith(".parquet")
     ]
-    rep3 = fold_delta_embeddings(
-        spark, ann_copy, kind="ivf", delta_files=new_files
-    )
+    rep3 = fold_delta_embeddings(spark, ann_copy, kind="ivf", delta_files=new_files)
     assert len(rep3["files_folded"]) == 1
     assert rep3["folded_vecs"] == 2
     assert spark.read.parquet(ann_copy).count() == n1 + 2
-
-
-def test_fold_orphaned_pending_replayed_before_new_fold(
-    spark, env, ann_copy, monkeypatch
-):
-    """Crash mid-move of fold A, then the stream appends B (the current
-    fingerprint changes): the next fold must FIRST replay A's pending
-    manifest (finalize its moves, record its files) and then fold only the
-    remainder — never re-stage A's vectors as duplicates."""
-    import hybrid_sanctions_search_engine_spark.sources.fs as fsmod
-    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
-        delta_embeddings_dir,
-    )
-
-    emb_dir = delta_embeddings_dir(env["delta_dir"])
-    files = sorted(
-        os.path.join(emb_dir, f)
-        for f in os.listdir(emb_dir)
-        if f.endswith(".parquet")
-    )
-    assert files
-    before = spark.read.parquet(ann_copy).count()
-    n_delta = spark.read.parquet(*files).count()
-    real_fs_for = fsmod.fs_for
-
-    class CrashingFS:
-        def __init__(self, inner):
-            self._inner = inner
-            self._moves = 0
-
-        def move(self, src, dst):
-            self._moves += 1
-            self._inner.move(src, dst)
-            if self._moves == 1:
-                raise RuntimeError("injected crash mid-move")
-
-        def __getattr__(self, name):
-            return getattr(self._inner, name)
-
-    monkeypatch.setattr(fsmod, "fs_for", lambda p: CrashingFS(real_fs_for(p)))
-    with pytest.raises(RuntimeError, match="injected crash"):
-        fold_delta_embeddings(
-            spark, ann_copy, delta_files=files[:1], kind="ivf"
-        )
-    monkeypatch.setattr(fsmod, "fs_for", real_fs_for)
-
-    # "the stream appended more": fold the FULL snapshot — a different
-    # fingerprint than the crashed fold's
-    fold_delta_embeddings(spark, ann_copy, delta_files=files, kind="ivf")
-    after = spark.read.parquet(ann_copy)
-    assert after.count() == before + n_delta
-    assert (
-        after.groupBy("vec_id").count().where(F.col("count") > 1).count() == 0
-    )
-    # the orphaned pending manifest is gone and the files are recorded
-    leftovers = [
-        f for f in os.listdir(ann_copy) if f.startswith("._fold_pending_")
-    ]
-    assert leftovers == []
-    import json as _json
-
     with open(os.path.join(ann_copy, "_ivf_meta.json")) as fh:
-        meta = _json.load(fh)
-    assert set(meta.get("folded_emb_files", [])) >= {
-        os.path.basename(f) for f in files
-    }
+        assert json.load(fh)["folded_emb_files"] == rep3["files_folded"]
 
 
 def test_attach_embeddings_requires_docs(spark, env, sf_smoke_dir):

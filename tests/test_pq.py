@@ -18,7 +18,6 @@ from hybrid_sanctions_search_engine_spark.operators.ann_recall import (
 )
 from hybrid_sanctions_search_engine_spark.operators.pq import (
     _encode_block,
-    _normalized,
     encode_pq,
     knn_ivf_pq_probe_many,
     load_ivf_pq_index,
@@ -27,6 +26,7 @@ from hybrid_sanctions_search_engine_spark.operators.pq import (
 )
 from hybrid_sanctions_search_engine_spark.operators.similarity import (
     knn_bruteforce,
+    normalize_rows,
 )
 
 N, DIM, N_CELLS, M = 2_000, 384, 16, 48
@@ -77,7 +77,7 @@ def test_encode_matches_numpy(spark, pq_fixture):
     assert len(rows) == 50
     for r in rows:
         assert len(r["pq_code"]) == M  # 48 bytes vs 3072 raw — 32× on disk
-        xn = _normalized(np.array([r["embedding"]], dtype=np.float64))
+        xn = normalize_rows(np.array([r["embedding"]], dtype=np.float64))
         want = _encode_block(xn - cents[r["ivf_cell"]], books)[0]
         assert bytes(r["pq_code"]) == want.tobytes()
 

@@ -22,7 +22,6 @@ from hybrid_sanctions_search_engine_spark.operators.ann_recall import (
 )
 from hybrid_sanctions_search_engine_spark.operators.sq import (
     _encode_sq8_block,
-    _normalized,
     encode_sq8,
     knn_ivf_sq8_probe_many,
     load_ivf_sq8_index,
@@ -31,6 +30,7 @@ from hybrid_sanctions_search_engine_spark.operators.sq import (
 )
 from hybrid_sanctions_search_engine_spark.operators.similarity import (
     knn_bruteforce,
+    normalize_rows,
 )
 
 N, DIM, N_CELLS = 2_000, 384, 16
@@ -78,7 +78,7 @@ def test_encode_matches_numpy(spark, sq_fixture):
     assert len(rows) == 50
     for r in rows:
         assert len(r["sq_code"]) == DIM  # 384 bytes vs 3072 raw — 4× wire/disk
-        xn = _normalized(np.array([r["embedding"]], dtype=np.float64))
+        xn = normalize_rows(np.array([r["embedding"]], dtype=np.float64))
         want = _encode_sq8_block(xn, vmin, vmax)[0]
         assert bytes(r["sq_code"]) == want.tobytes()
 
@@ -90,7 +90,7 @@ def test_decode_error_bounded(spark, sq_fixture):
     from hybrid_sanctions_search_engine_spark.operators.sq import _sq8_scale
 
     x, q, df, indexed, cents, vmin, vmax = sq_fixture
-    xn = _normalized(x[:200])
+    xn = normalize_rows(x[:200])
     codes = _encode_sq8_block(xn, vmin, vmax)
     scale = _sq8_scale(vmin, vmax)
     decoded = vmin + codes * scale

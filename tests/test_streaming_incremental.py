@@ -9,8 +9,8 @@ from pyspark.sql import functions as F
 
 from hybrid_sanctions_search_engine_spark.sources.index_io import build_index, load_index
 from hybrid_sanctions_search_engine_spark.streaming.incremental import (
-    compact_delta,
     load_delta_postings,
+    merge_compact,
     start_delta_stream,
 )
 
@@ -67,6 +67,15 @@ def _write_docs(spark, path, rows):
     spark.createDataFrame(rows, SCHEMA).coalesce(1).write.mode("append").parquet(path)
 
 
+def _delta_files(df, delta_dir):
+    """Append ``df`` to ``delta_dir`` as one parquet file → the dir's
+    parquet files, sorted."""
+    df.coalesce(1).write.mode("append").parquet(delta_dir)
+    return sorted(
+        os.path.join(delta_dir, f) for f in os.listdir(delta_dir) if f.endswith(".parquet")
+    )
+
+
 def test_streaming_overlay_and_compaction(spark, sf_smoke_dir, dirs):
     base_docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
     build_index(base_docs, dirs["index"], n_shards=4, chunk_bits=7)
@@ -103,13 +112,13 @@ def test_streaming_overlay_and_compaction(spark, sf_smoke_dir, dirs):
     # base-only terms still served by base
     assert len(res[2]) == 5
 
-    # compaction folds delta into the base index (only touched shards rebuild)
-    delta_docs = spark.read.parquet(dirs["input"])
-    report = compact_delta(
-        spark, base_docs, delta_docs, dirs["index"], dirs["delta"]
+    # compaction folds the streamed delta files into the touched shards
+    files = sorted(
+        os.path.join(dirs["delta"], f)
+        for f in os.listdir(dirs["delta"]) if f.endswith(".parquet")
     )
-    assert report["shards_compacted"]
-    assert set(report["shards_built"]) == set(report["shards_compacted"])
+    report = merge_compact(spark, dirs["index"], files)
+    assert report["shards_compacted"] and report["new_docs"] == 2
 
     idx, meta = load_index(spark, dirs["index"])
     from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
@@ -118,42 +127,42 @@ def test_streaming_overlay_and_compaction(spark, sf_smoke_dir, dirs):
     assert {r["doc_id"] for r in res3.collect()} == {100001, 100002}
 
 
-def test_merge_compact_rank_identity(spark, sf_smoke_dir, tmp_path):
-    """merge_compact folds delta postings into the base index WITHOUT
+@pytest.mark.parametrize("positions", [False, True])
+def test_merge_compact_rank_identity(spark, sf_smoke_dir, tmp_path, positions):
+    """merge_compact folds delta postings files into the base index WITHOUT
     re-tokenizing the corpus, and the result scores IDENTICALLY to an index
-    built from scratch on base ∪ delta (same n_docs/avgdl/df ⇒ same BM25)."""
-    import os as _os
+    built from scratch on base ∪ delta (same n_docs/avgdl/df ⇒ same BM25).
+    A positions index keeps its position streams: every phrase contract
+    matches the rebuild too, and delta files without positions are
+    refused."""
+    from hybrid_sanctions_search_engine_spark.operators.postings import build_postings
+    from hybrid_sanctions_search_engine_spark.plans.wand import phrase_search, topk_search
+    from hybrid_sanctions_search_engine_spark.sources.index_io import IndexMeta
 
-    from pyspark.sql import functions as F
-
-    from hybrid_sanctions_search_engine_spark.operators.postings import (
-        build_postings,
-    )
-    from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
-    from hybrid_sanctions_search_engine_spark.sources.index_io import (
-        IndexMeta,
-        build_index,
-        load_index,
-    )
-    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
-        merge_compact,
-    )
-
-    docs = spark.read.parquet(_os.path.join(sf_smoke_dir, "documents.parquet"))
+    docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
     base_docs = docs.where(F.col("doc_id") % 5 != 0)
     delta_docs = docs.where(F.col("doc_id") % 5 == 0)
 
     merged_dir = str(tmp_path / "merged_idx")
-    build_index(base_docs, merged_dir, n_shards=4, chunk_bits=6, resume=False)
-    delta_postings = build_postings(delta_docs, positions=False)
-    report = merge_compact(spark, merged_dir, delta_postings)
+    build_index(base_docs, merged_dir, n_shards=4, chunk_bits=6, resume=False,
+                store_positions=positions)
+    if positions:
+        bare = _delta_files(build_postings(delta_docs, positions=False),
+                            str(tmp_path / "bare_delta"))
+        with pytest.raises(ValueError, match=r"build_postings\(positions=True\)"):
+            merge_compact(spark, merged_dir, bare)
+    files = _delta_files(build_postings(delta_docs, positions=positions),
+                         str(tmp_path / "delta"))
+    report = merge_compact(spark, merged_dir, files)
     assert report["new_docs"] > 0 and report["shards_compacted"]
 
     scratch_dir = str(tmp_path / "scratch_idx")
-    build_index(docs, scratch_dir, n_shards=4, chunk_bits=6, resume=False)
+    build_index(docs, scratch_dir, n_shards=4, chunk_bits=6, resume=False,
+                store_positions=positions)
 
     m_meta = IndexMeta.load(merged_dir)
     s_meta = IndexMeta.load(scratch_dir)
+    assert m_meta.has_positions == positions
     assert m_meta.n_docs == s_meta.n_docs
     assert m_meta.total_tokens == s_meta.total_tokens
     assert m_meta.avgdl == s_meta.avgdl  # exact, thanks to total_tokens
@@ -161,40 +170,28 @@ def test_merge_compact_rank_identity(spark, sf_smoke_dir, tmp_path):
     m_idx, _ = load_index(spark, merged_dir)
     s_idx, _ = load_index(spark, scratch_dir)
     for q in ["spark query join", "window", "scan merge sort hash agg", "the"]:
-        got = [
-            (r["doc_id"], round(r["score"], 9), r["n_terms_matched"])
-            for r in topk_search(spark, merged_dir, q, k=15,
-                                 index_df=m_idx, meta=m_meta).collect()
-        ]
-        want = [
-            (r["doc_id"], round(r["score"], 9), r["n_terms_matched"])
-            for r in topk_search(spark, scratch_dir, q, k=15,
-                                 index_df=s_idx, meta=s_meta).collect()
-        ]
+        got, want = (
+            [(r["doc_id"], round(r["score"], 9), r["n_terms_matched"])
+             for r in topk_search(spark, d, q, k=15, index_df=i, meta=m).collect()]
+            for d, i, m in [(merged_dir, m_idx, m_meta), (scratch_dir, s_idx, s_meta)]
+        )
         assert got == want, q
+    if positions:
+        for phrase, kw in [
+            ("spark query", {}), ("query join", {"slop": 1}),
+            ("join query", {"slop": 1, "ordered": False}),
+            ("spark join", {"slop": 1, "lucene": True}),
+        ]:
+            got, want = (
+                sorted(tuple(r) for r in phrase_search(spark, d, phrase, **kw).collect())
+                for d in (merged_dir, scratch_dir)
+            )
+            assert got == want and got, (phrase, kw)
 
     # postings parity: identical total postings across both indexes
     m_total = m_idx.agg(F.sum("n_docs")).collect()[0][0]
     s_total = s_idx.agg(F.sum("n_docs")).collect()[0][0]
     assert m_total == s_total
-
-
-def test_compacting_manifest_invalidates_resume(tmp_path):
-    """A shard left with status='compacting' (crash mid-swap) is NOT treated
-    as complete — build_index(resume=True) would rebuild it."""
-    import json
-    import os as _os
-
-    from hybrid_sanctions_search_engine_spark.sources.index_io import (
-        completed_shards,
-    )
-
-    idx = tmp_path / "crash_idx"
-    for s, status in [(0, "complete"), (1, "compacting"), (2, "complete")]:
-        d = idx / f"shard={s}"
-        d.mkdir(parents=True)
-        (d / "_manifest.json").write_text(json.dumps({"status": status, "shard": s}))
-    assert completed_shards(str(idx), 3) == [0, 2]
 
 
 def test_two_wave_merge_compact(spark, sf_smoke_dir, tmp_path):
@@ -223,9 +220,10 @@ def test_two_wave_merge_compact(spark, sf_smoke_dir, tmp_path):
     wave2 = docs.where(F.col("doc_id") % 3 == 2)
 
     merged_dir = str(tmp_path / "two_wave_idx")
+    delta_dir = str(tmp_path / "two_wave_delta")
     build_index(base, merged_dir, n_shards=4, chunk_bits=6, resume=False)
-    merge_compact(spark, merged_dir, build_postings(wave1, positions=False))
-    merge_compact(spark, merged_dir, build_postings(wave2, positions=False))
+    merge_compact(spark, merged_dir, _delta_files(build_postings(wave1, positions=False), delta_dir))
+    merge_compact(spark, merged_dir, _delta_files(build_postings(wave2, positions=False), delta_dir))
 
     scratch_dir = str(tmp_path / "two_wave_scratch")
     build_index(docs, scratch_dir, n_shards=4, chunk_bits=6, resume=False)
@@ -248,82 +246,6 @@ def test_two_wave_merge_compact(spark, sf_smoke_dir, tmp_path):
                                  index_df=s_idx, meta=s_meta).collect()
         ]
         assert got == want, q
-
-
-def test_merge_compact_rerun_is_idempotent(spark, sf_smoke_dir, tmp_path):
-    """Crash-recovery matrix for the swap protocol: (a) rerun after a crash
-    before the IndexMeta commit (shards already finalized) must NOT re-fold
-    the delta; (b) a shard left status='compacting' with the same
-    fingerprint and no pending dot-file is finalized, not re-merged;
-    (c) rerun after full success is a fingerprint no-op."""
-    import json
-    import os as _os
-    from dataclasses import asdict
-
-    from pyspark.sql import functions as F
-
-    from hybrid_sanctions_search_engine_spark.operators.postings import (
-        build_postings,
-    )
-    from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
-    from hybrid_sanctions_search_engine_spark.sources.index_io import (
-        IndexMeta,
-        build_index,
-        load_index,
-    )
-    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
-        merge_compact,
-    )
-
-    docs = spark.read.parquet(_os.path.join(sf_smoke_dir, "documents.parquet"))
-    base_docs = docs.where(F.col("doc_id") % 4 != 0)
-    delta_docs = docs.where(F.col("doc_id") % 4 == 0)
-    delta = build_postings(delta_docs, positions=False)
-
-    idx_dir = str(tmp_path / "rerun_idx")
-    build_index(base_docs, idx_dir, n_shards=4, chunk_bits=6, resume=False)
-    pre_meta = IndexMeta.load(idx_dir)
-    merge_compact(spark, idx_dir, delta)
-    good_meta = IndexMeta.load(idx_dir)
-    fp = good_meta.last_delta_fp
-    assert fp
-
-    def topk(q="spark query join"):
-        i, m = load_index(spark, idx_dir)
-        return [
-            (r["doc_id"], round(r["score"], 9))
-            for r in topk_search(spark, idx_dir, q, k=10, index_df=i, meta=m).collect()
-        ]
-
-    want = topk()
-
-    # (c) rerun after success: fingerprint no-op, nothing changes
-    rep = merge_compact(spark, idx_dir, delta)
-    assert rep.get("noop") and rep["new_docs"] == 0
-    assert IndexMeta.load(idx_dir) == good_meta and topk() == want
-
-    # (a) crash before the meta commit: restore the PRE-merge meta while the
-    # shards stay merged+finalized; rerun must skip all merging yet fix meta
-    with open(_os.path.join(idx_dir, "_index_meta.json"), "w") as fh:
-        json.dump(asdict(pre_meta), fh)
-    rep = merge_compact(spark, idx_dir, delta)
-    assert rep["shards_compacted"] == []  # nothing re-merged
-    assert IndexMeta.load(idx_dir) == good_meta and topk() == want
-
-    # (b) a shard crashed between replace and final commit: manifest says
-    # 'compacting' with the right fp, dot-file gone, data already merged
-    s = rep.get("already_swapped_probe", None)
-    shard_dirs = [d for d in _os.listdir(idx_dir) if d.startswith("shard=")]
-    victim = _os.path.join(idx_dir, shard_dirs[0])
-    with open(_os.path.join(victim, "_manifest.json"), "w") as fh:
-        json.dump({"status": "compacting", "shard": 0, "delta_fp": fp}, fh)
-    with open(_os.path.join(idx_dir, "_index_meta.json"), "w") as fh:
-        json.dump(asdict(pre_meta), fh)
-    rep = merge_compact(spark, idx_dir, delta)
-    mf = json.load(open(_os.path.join(victim, "_manifest.json")))
-    assert mf["status"] == "complete" and mf.get("recovered")
-    assert IndexMeta.load(idx_dir).n_docs == good_meta.n_docs
-    assert topk() == want
 
 
 def test_per_file_fold_idempotency(spark, sf_smoke_dir, tmp_path):
@@ -402,95 +324,6 @@ def test_per_file_fold_idempotency(spark, sf_smoke_dir, tmp_path):
     # a rerun with everything already folded is a per-file no-op
     rep3 = merge_compact(spark, idx_dir, delta_files=all_files)
     assert rep3["noop"] and rep3["files_folded"] == []
-
-
-def test_half_finished_object_store_swap(spark, sf_smoke_dir, tmp_path):
-    """ADVICE r2: on object stores fs.move is copy+delete; a crash in between
-    leaves BOTH the new data.parquet and the tmp file.  The recovery pre-pass
-    must compare data.parquet against the size+rows recorded in the
-    'compacting' manifest: match ⇒ swap finished (finalize, delete tmp, no
-    re-merge); mismatch ⇒ original data intact (safe re-merge)."""
-    import json
-    import shutil as _sh
-    import os as _os
-    from dataclasses import asdict
-
-    from pyspark.sql import functions as F
-
-    from hybrid_sanctions_search_engine_spark.operators.postings import build_postings
-    from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
-    from hybrid_sanctions_search_engine_spark.sources.index_io import IndexMeta
-    from hybrid_sanctions_search_engine_spark.streaming.incremental import merge_compact
-
-    docs = spark.read.parquet(_os.path.join(sf_smoke_dir, "documents.parquet"))
-    base_docs = docs.where(F.col("doc_id") % 4 != 0)
-    delta = build_postings(
-        docs.where(F.col("doc_id") % 4 == 0), positions=False
-    )
-
-    idx_dir = str(tmp_path / "swap_idx")
-    build_index(base_docs, idx_dir, n_shards=4, chunk_bits=6, resume=False)
-    pre_meta = IndexMeta.load(idx_dir)
-    # keep pristine pre-merge copies of every shard
-    backup = str(tmp_path / "swap_backup")
-    _sh.copytree(idx_dir, backup)
-
-    merge_compact(spark, idx_dir, delta)
-    good_meta = IndexMeta.load(idx_dir)
-    fp = good_meta.last_delta_fp
-
-    def topk(q="spark query join"):
-        return [
-            (r["doc_id"], round(r["score"], 9))
-            for r in topk_search(spark, idx_dir, q, k=10).collect()
-        ]
-
-    want = topk()
-    victim = _os.path.join(idx_dir, "shard=0")
-    final_mf = json.load(open(_os.path.join(victim, "_manifest.json")))
-    merged_data = _os.path.join(victim, "data.parquet")
-
-    # --- case 1: copy landed, tmp delete pending -------------------------
-    _sh.copyfile(merged_data, _os.path.join(victim, ".tmp-merge.parquet"))
-    json.dump(
-        {
-            "status": "compacting",
-            "shard": 0,
-            "delta_fp": fp,
-            "merged_bytes": final_mf["bytes"],
-            "merged_rows": final_mf["chunks"],
-        },
-        open(_os.path.join(victim, "_manifest.json"), "w"),
-    )
-    json.dump(asdict(pre_meta), open(_os.path.join(idx_dir, "_index_meta.json"), "w"))
-    rep = merge_compact(spark, idx_dir, delta)
-    assert 0 in rep["shards_recovered"] and 0 not in rep["shards_compacted"]
-    assert not _os.path.exists(_os.path.join(victim, ".tmp-merge.parquet"))
-    mf = json.load(open(_os.path.join(victim, "_manifest.json")))
-    assert mf["status"] == "complete"
-    assert IndexMeta.load(idx_dir).n_docs == good_meta.n_docs
-    assert topk() == want
-
-    # --- case 2: replace never ran (original data intact) ----------------
-    _sh.copyfile(merged_data, _os.path.join(victim, ".tmp-merge.parquet"))
-    _sh.copyfile(_os.path.join(backup, "shard=0", "data.parquet"), merged_data)
-    assert _os.path.getsize(merged_data) != final_mf["bytes"]  # states differ
-    json.dump(
-        {
-            "status": "compacting",
-            "shard": 0,
-            "delta_fp": fp,
-            "merged_bytes": final_mf["bytes"],
-            "merged_rows": final_mf["chunks"],
-        },
-        open(_os.path.join(victim, "_manifest.json"), "w"),
-    )
-    json.dump(asdict(pre_meta), open(_os.path.join(idx_dir, "_index_meta.json"), "w"))
-    rep = merge_compact(spark, idx_dir, delta)
-    assert 0 in rep["shards_compacted"]  # genuinely re-merged
-    mf = json.load(open(_os.path.join(victim, "_manifest.json")))
-    assert mf["status"] == "complete"
-    assert topk() == want
 
 
 def test_search_many_with_delta_parity(spark, sf_smoke_dir, tmp_path):
@@ -712,12 +545,14 @@ def test_interleaved_lineage_folds_never_lose_updates(tmp_path):
     writes lose nothing (each lineage owns its manifest file — the old
     shared-file read-modify-write dropped one side's fold when commits
     interleaved), per-lineage replay guards stay independent, and the
-    compaction subtraction ledger applies once per fingerprint."""
+    committed compaction subtraction ledger is subtracted at read time."""
     import os as _os
 
+    from hybrid_sanctions_search_engine_spark.sources.fs import fs_for
     from hybrid_sanctions_search_engine_spark.streaming.incremental import (
+        DELTA_STATS_SUB_FILE,
         _fold_delta_stats,
-        _subtract_delta_stats,
+        _subtracted_stats,
         load_delta_stats,
     )
 
@@ -733,9 +568,8 @@ def test_interleaved_lineage_folds_never_lose_updates(tmp_path):
     n, avgdl = load_delta_stats(d)
     assert n == 10 + 20 + 5 + 7 + 8
     assert avgdl == (100 + 200 + 50 + 70 + 80) / n
-    # compaction subtracts once per fingerprint, even on rerun
-    _subtract_delta_stats(d, "fp-1", 30, 300)
-    _subtract_delta_stats(d, "fp-1", 30, 300)  # rerun after crash: no-op
+    # a compaction's fold record commits the ledger it precomputed
+    fs_for(d).commit_json(_os.path.join(d, DELTA_STATS_SUB_FILE), _subtracted_stats(d, 30, 300))
     n2, avgdl2 = load_delta_stats(d)
     assert n2 == 50 - 30
     assert avgdl2 == (500 - 300) / 20
@@ -750,219 +584,16 @@ def test_interleaved_lineage_folds_never_lose_updates(tmp_path):
     assert load_delta_stats(d) == (n2, avgdl2)
 
 
-def test_subtraction_ledger_keeps_all_fingerprints(tmp_path):
-    """Round-6 ADVICE fix: a crash-rerun of a compaction whose fingerprint
-    had rotated out of the old 64-entry window double-subtracted its stats.
-    The ledger now keeps every fp — replaying an OLD compaction after 100
-    newer ones must be a no-op."""
-    from hybrid_sanctions_search_engine_spark.sources.fs import fs_for
-    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
-        DELTA_STATS_SUB_FILE,
-        _subtract_delta_stats,
-    )
+def test_aliasing_delta_files_both_fold(spark, sf_smoke_dir, tmp_path):
+    """Two delta files whose contents alias — docs {2,3} and {1,4} with
+    equal doc_len totals share count+tokens+id_sum — are two folds: the
+    fold fingerprint and ledger are file basenames, so folding the
+    snapshot [a, b] after [a] folds b, never a silent no-op."""
+    from hybrid_sanctions_search_engine_spark.operators.postings import build_postings
 
-    d = str(tmp_path)
-    _subtract_delta_stats(d, "fp-old", 10, 100)
-    for i in range(100):
-        _subtract_delta_stats(d, f"fp-{i}", 1, 10)
-    _subtract_delta_stats(d, "fp-old", 10, 100)  # crash rerun
-    sub = fs_for(d).read_json(os.path.join(d, DELTA_STATS_SUB_FILE))
-    assert sub["n_docs"] == 110 and sub["total_len"] == 1100
-    assert len(sub["fps"]) == 101
-
-
-def test_merge_compact_recovers_crashed_fold_before_meta_commit(
-    spark, sf_smoke_dir, tmp_path
-):
-    """Crash AFTER every shard swapped+finalized for delta A but BEFORE the
-    IndexMeta commit, then the stream appends B: the rerun over {A, B} must
-    recognize the foreign shard fingerprints (recorded delta_files still in
-    the snapshot, absent from folded_delta_files), finalize fold A on its
-    own snapshot, and fold only B — never re-merge A into shards that
-    already contain its postings."""
-    import json as _json
-    import os as _os
-
-    from hybrid_sanctions_search_engine_spark.operators.postings import (
-        build_postings,
-    )
-    from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
-    from hybrid_sanctions_search_engine_spark.sources.index_io import IndexMeta
-    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
-        DELTA_STATS_SUB_FILE,
-        merge_compact,
-    )
-
-    docs = spark.read.parquet(_os.path.join(sf_smoke_dir, "documents.parquet"))
-    base_docs = docs.where(F.col("doc_id") % 3 == 0)
-    wave1_docs = docs.where(F.col("doc_id") % 3 == 1)
-    wave2_docs = docs.where(F.col("doc_id") % 3 == 2)
-
-    idx_dir = str(tmp_path / "rc_idx")
-    delta_dir = str(tmp_path / "rc_delta")
-    build_index(base_docs, idx_dir, n_shards=4, chunk_bits=6, resume=False)
-
-    def delta_files():
-        return sorted(
-            _os.path.join(delta_dir, f)
-            for f in _os.listdir(delta_dir)
-            if f.endswith(".parquet")
-        )
-
-    meta_path = _os.path.join(idx_dir, "_index_meta.json")
-    with open(meta_path) as fh:
-        pre_meta = fh.read()
-
-    build_postings(wave1_docs, positions=False).coalesce(1).write.mode(
-        "append"
-    ).parquet(delta_dir)
-    wave1_files = delta_files()
-    merge_compact(spark, idx_dir, delta_files=wave1_files)
-    # simulate the crash: shard manifests are final (delta_fp = fold A),
-    # but the IndexMeta commit and the stats subtraction never happened
-    with open(meta_path, "w") as fh:
-        fh.write(pre_meta)
-    sub_path = _os.path.join(delta_dir, DELTA_STATS_SUB_FILE)
-    if _os.path.exists(sub_path):
-        _os.remove(sub_path)
-
-    build_postings(wave2_docs, positions=False).coalesce(1).write.mode(
-        "append"
-    ).parquet(delta_dir)
-    all_files = delta_files()
-    rep = merge_compact(spark, idx_dir, delta_files=all_files)
-    assert not rep.get("noop")
-
-    # the index must equal a from-scratch build over ALL docs (A folded
-    # exactly once, B folded)
-    scratch = str(tmp_path / "rc_scratch")
-    build_index(docs, scratch, n_shards=4, chunk_bits=6, resume=False)
-    m, s = IndexMeta.load(idx_dir), IndexMeta.load(scratch)
-    assert (m.n_docs, m.total_tokens) == (s.n_docs, s.total_tokens)
-    for q in ["spark query join", "window"]:
-        got = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in topk_search(spark, idx_dir, q, k=10).collect()
-        ]
-        want = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in topk_search(spark, scratch, q, k=10).collect()
-        ]
-        assert got == want, q
-    # both folds' stats left the delta manifest side
-    with open(sub_path) as fh:
-        sub = _json.load(fh)
-    assert len(sub["fps"]) == 2
-
-
-def test_recovery_recursion_preserves_prior_fold_ledger(
-    spark, sf_smoke_dir, tmp_path
-):
-    """A COMPLETED fold A whose files are still in the delta dir (crash in
-    the delete window), then fold B crashes before ITS meta commit, then C
-    arrives.  The rerun's recovery recursion re-runs fold B on B's subset
-    snapshot — its ledger commit must PRESERVE A's entry (the old code
-    intersected the ledger with the subset snapshot, dropping A, and the
-    full-snapshot redo then re-merged A's postings into shards that
-    already contain them — silent double-fold)."""
-    import json as _json
-    import os as _os
-
-    from hybrid_sanctions_search_engine_spark.operators.postings import (
-        build_postings,
-    )
-    from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
-    from hybrid_sanctions_search_engine_spark.sources.index_io import IndexMeta
-    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
-        DELTA_STATS_SUB_FILE,
-        merge_compact,
-    )
-
-    docs = spark.read.parquet(_os.path.join(sf_smoke_dir, "documents.parquet"))
-    base_docs = docs.where(F.col("doc_id") % 4 == 0)
-    waves = [docs.where(F.col("doc_id") % 4 == r) for r in (1, 2, 3)]
-
-    idx_dir = str(tmp_path / "dl_idx")
-    delta_dir = str(tmp_path / "dl_delta")
-    build_index(base_docs, idx_dir, n_shards=4, chunk_bits=6, resume=False)
-
-    def delta_files():
-        return sorted(
-            _os.path.join(delta_dir, f)
-            for f in _os.listdir(delta_dir)
-            if f.endswith(".parquet")
-        )
-
-    meta_path = _os.path.join(idx_dir, "_index_meta.json")
-    sub_path = _os.path.join(delta_dir, DELTA_STATS_SUB_FILE)
-
-    # fold A COMPLETES (meta records A in folded_delta_files) but its file
-    # is never deleted from the delta dir
-    build_postings(waves[0], positions=False).coalesce(1).write.mode(
-        "append"
-    ).parquet(delta_dir)
-    merge_compact(spark, idx_dir, delta_files=delta_files())
-    assert IndexMeta.load(idx_dir).folded_delta_files
-
-    # snapshot the post-A state, then fold B and crash before ITS meta
-    # commit (shard manifests final for B, meta + stats ledger restored)
-    with open(meta_path) as fh:
-        post_a_meta = fh.read()
-    with open(sub_path) as fh:
-        post_a_sub = fh.read()
-    build_postings(waves[1], positions=False).coalesce(1).write.mode(
-        "append"
-    ).parquet(delta_dir)
-    merge_compact(spark, idx_dir, delta_files=delta_files())
-    with open(meta_path, "w") as fh:
-        fh.write(post_a_meta)
-    with open(sub_path, "w") as fh:
-        fh.write(post_a_sub)
-
-    # C arrives; the rerun over {A, B, C} must recover fold B and fold C
-    # exactly once each, never re-merging A
-    build_postings(waves[2], positions=False).coalesce(1).write.mode(
-        "append"
-    ).parquet(delta_dir)
-    rep = merge_compact(spark, idx_dir, delta_files=delta_files())
-    assert not rep.get("noop")
-
-    scratch = str(tmp_path / "dl_scratch")
-    build_index(docs, scratch, n_shards=4, chunk_bits=6, resume=False)
-    m, s = IndexMeta.load(idx_dir), IndexMeta.load(scratch)
-    assert (m.n_docs, m.total_tokens) == (s.n_docs, s.total_tokens)
-    for q in ["spark query join", "window"]:
-        got = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in topk_search(spark, idx_dir, q, k=10).collect()
-        ]
-        want = [
-            (r["doc_id"], round(r["score"], 9))
-            for r in topk_search(spark, scratch, q, k=10).collect()
-        ]
-        assert got == want, q
-
-
-def test_merge_compact_fp_distinguishes_aliasing_deltas(
-    spark, sf_smoke_dir, tmp_path
-):
-    """{2,3} and {1,4} with equal doc_len totals share count+tokens+id_sum;
-    the xxhash64 digest in the fingerprint must keep the second fold from
-    becoming a silent noop."""
-    import os as _os
-
-    from hybrid_sanctions_search_engine_spark.operators.postings import (
-        build_postings,
-    )
-    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
-        merge_compact,
-    )
-
-    docs = spark.read.parquet(_os.path.join(sf_smoke_dir, "documents.parquet"))
-    base_docs = docs.where(F.col("doc_id") >= 100)
-    idx_dir = str(tmp_path / "alias_idx")
-    build_index(base_docs, idx_dir, n_shards=4, chunk_bits=6, resume=False)
-
+    docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
+    idx_dir, delta_dir = str(tmp_path / "alias_idx"), str(tmp_path / "alias_delta")
+    build_index(docs.where(F.col("doc_id") >= 100), idx_dir, n_shards=4, chunk_bits=6)
     rows_a = [
         (2, "alpha beta gamma", "en", "synthetic", 16),
         (3, "delta epsilon zeta", "en", "synthetic", 18),
@@ -971,86 +602,15 @@ def test_merge_compact_fp_distinguishes_aliasing_deltas(
         (1, "alpha beta gamma", "en", "synthetic", 16),
         (4, "delta epsilon zeta", "en", "synthetic", 18),
     ]
-    delta_a = build_postings(spark.createDataFrame(rows_a, SCHEMA), positions=False)
-    delta_b = build_postings(spark.createDataFrame(rows_b, SCHEMA), positions=False)
-    rep_a = merge_compact(spark, idx_dir, delta_a)
+    files_a = _delta_files(
+        build_postings(spark.createDataFrame(rows_a, SCHEMA), positions=False), delta_dir
+    )
+    rep_a = merge_compact(spark, idx_dir, files_a)
     assert rep_a["new_docs"] == 2
-    rep_b = merge_compact(spark, idx_dir, delta_b)
+    files_ab = _delta_files(
+        build_postings(spark.createDataFrame(rows_b, SCHEMA), positions=False), delta_dir
+    )
+    rep_b = merge_compact(spark, idx_dir, files_ab)
     assert not rep_b.get("noop") and rep_b["new_docs"] == 2
-
-
-def test_merge_compact_subtracts_before_meta_commit(
-    spark, sf_smoke_dir, tmp_path
-):
-    """The stats subtraction runs BEFORE the IndexMeta commit, so every
-    crash window converges on rerun: a crash between the two re-enters the
-    fold path (shards already complete → skipped), re-calls the
-    fp-idempotent subtraction (no double-subtract), and commits the meta.
-    An interleaved bare-DataFrame fold must also PRESERVE the per-file
-    ledger (committing None would make a later files rerun re-fold
-    everything)."""
-    import json as _json
-    import os as _os
-
-    from hybrid_sanctions_search_engine_spark.operators.postings import (
-        build_postings,
-    )
-    from hybrid_sanctions_search_engine_spark.sources.index_io import IndexMeta
-    from hybrid_sanctions_search_engine_spark.streaming.incremental import (
-        DELTA_STATS_SUB_FILE,
-        merge_compact,
-    )
-
-    docs = spark.read.parquet(_os.path.join(sf_smoke_dir, "documents.parquet"))
-    base_docs = docs.where(F.col("doc_id") % 2 == 0)
-    wave_docs = docs.where(F.col("doc_id") % 2 == 1)
-    idx_dir = str(tmp_path / "sub_idx")
-    delta_dir = str(tmp_path / "sub_delta")
-    build_index(base_docs, idx_dir, n_shards=4, chunk_bits=6, resume=False)
-    meta_path = _os.path.join(idx_dir, "_index_meta.json")
-    with open(meta_path) as fh:
-        pre_meta = fh.read()
-    build_postings(wave_docs, positions=False).coalesce(1).write.mode(
-        "append"
-    ).parquet(delta_dir)
-    files = sorted(
-        _os.path.join(delta_dir, f)
-        for f in _os.listdir(delta_dir)
-        if f.endswith(".parquet")
-    )
-    rep = merge_compact(spark, idx_dir, delta_files=files)
-    sub_path = _os.path.join(delta_dir, DELTA_STATS_SUB_FILE)
-    with open(sub_path) as fh:
-        sub1 = _json.load(fh)
-    assert sub1["n_docs"] == rep["new_docs"]
-    meta_after = IndexMeta.load(idx_dir)
-
-    # crash between the subtraction and the meta commit: restore the old
-    # meta, keep the subtraction ledger — the rerun must re-complete the
-    # fold without subtracting twice
-    with open(meta_path, "w") as fh:
-        fh.write(pre_meta)
-    rerun = merge_compact(spark, idx_dir, delta_files=files)
-    assert not rerun.get("noop")
-    with open(sub_path) as fh:
-        sub2 = _json.load(fh)
-    assert sub2 == sub1  # fp-idempotent: no double subtraction
-    m = IndexMeta.load(idx_dir)
-    assert (m.n_docs, m.total_tokens) == (
-        meta_after.n_docs,
-        meta_after.total_tokens,
-    )
-
-    # interleaved bare-DataFrame fold preserves the per-file ledger
-    extra = build_postings(
-        spark.createDataFrame(
-            [(700001, "omicron sigma tau", "en", "synthetic", 17)], SCHEMA
-        ),
-        positions=False,
-    )
-    merge_compact(spark, idx_dir, extra)
-    assert set(IndexMeta.load(idx_dir).folded_delta_files or []) == {
-        _os.path.basename(f) for f in files
-    }
-    rerun2 = merge_compact(spark, idx_dir, delta_files=files)
-    assert rerun2.get("noop")
+    assert rep_b["files_excluded"] == rep_a["files_folded"]
+    assert rep_b["n_docs"] == docs.where(F.col("doc_id") >= 100).count() + 4
