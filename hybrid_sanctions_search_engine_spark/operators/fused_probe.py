@@ -5,9 +5,9 @@
 scored against one query (ADC table lookups + per-cell centroid offsets
 vs the int8 decoded dot).  Everything else — the per-query cell probe,
 the union-pruned map-only candidate scan, the driver candidate merge,
-and the exact re-rank pass (which can carry the rerank inputs) — is one shape,
-factored here so a fix to either path (tie-breaks, empty-candidate edges)
-cannot silently miss the other.
+and the exact re-rank pass (which can also run the L9/L10 rerank) — is
+one shape, factored here so a fix to either path (tie-breaks,
+empty-candidate edges) cannot silently miss the other.
 
 Bit-parity contract (the reason the scorer is injected per MASKED block,
 not fused across queries): candidate selection must be bit-identical to
@@ -83,7 +83,7 @@ def fused_cell_probe_many(
        dtype ops (float64 tolist, axis-1 norms, 1e-300 clamps, raw-query
        gemv).  ``as_rows`` / ``rerank`` pick how its task-local tops
        merge, exactly as in ``similarity.knn_ivf_probe_many``: with
-       ``rerank`` they come back un-merged carrying the rerank inputs.
+       ``rerank`` they come back un-merged, reranked in their tasks.
     """
     spark = indexed.sparkSession
     if not queries:

@@ -16,12 +16,18 @@ machinery:
     0.2·es_norm + 0.5·edit_ratio + 0.3·word_jaccard, ×0.7 penalty when
     edit_ratio < 0.6, drop below 0.4/0.5 threshold.
   * anchor extraction (``hybrid_search_service.py:1032-1089``): the DoB
-    and ID anchors of a query, which the vector leg's anchor multiplier
-    looks for in each candidate (``plans.hybrid._rerank_frame``).
+    and ID anchors of a query (``extract_anchors``).
+  * the vector leg's L9 fuzz rerank (``hybrid_search_service.py:990-1030``)
+    and L10 anchor multiplier as one Python kernel,
+    ``rerank_row``, which each vector probe task runs over its own
+    task-local top-k rows (``similarity.topk_record_batch``): the doc text
+    never leaves the task.  ``rapidfuzz_rerank_expr`` stays as its JVM
+    reference, which the tests compare it against row for row.
   * tier boosts (``elasticsearch_adapters.py:447-466``).
 
-Everything is built-in Spark functions — fully codegen'd — except two
-Arrow Python stages: partial_ratio and the Bloom filter build.
+Everything else is built-in Spark functions — fully codegen'd — except the
+Arrow Python stages: the rerank kernel, the partial_ratio UDF and the Bloom
+filter build.
 """
 
 from __future__ import annotations
@@ -284,32 +290,36 @@ def similarity_blend(
     )
 
 
-def partial_ratio_series(left: "pd.Series", right: "pd.Series") -> "pd.Series":
+def partial_ratio(s1: str | None, s2: str | None) -> float:
     """Best-window similarity of the shorter string inside the longer — the
     canonical fuzzywuzzy/rapidfuzz ``partial_ratio`` algorithm (matching
     blocks seed candidate windows; each window scored with a sequence
-    ratio).  Pure stdlib difflib, deterministic (autojunk off)."""
-    import pandas as pd
+    ratio), case-folded, None read as "".  Pure stdlib difflib,
+    deterministic (autojunk off)."""
     from difflib import SequenceMatcher
 
-    def pr(s1: str, s2: str) -> float:
-        s1, s2 = (s1 or "").lower(), (s2 or "").lower()
-        if not s1 or not s2:
-            return 1.0 if s1 == s2 else 0.0
-        shorter, longer = (s1, s2) if len(s1) <= len(s2) else (s2, s1)
-        m = SequenceMatcher(None, shorter, longer, autojunk=False)
-        best = 0.0
-        for i, j, _n in m.get_matching_blocks():
-            start = max(j - i, 0)
-            window = longer[start : start + len(shorter)]
-            r = SequenceMatcher(None, shorter, window, autojunk=False).ratio()
-            if r > best:
-                best = r
-            if best == 1.0:
-                break
-        return best
+    s1, s2 = (s1 or "").lower(), (s2 or "").lower()
+    if not s1 or not s2:
+        return 1.0 if s1 == s2 else 0.0
+    shorter, longer = (s1, s2) if len(s1) <= len(s2) else (s2, s1)
+    m = SequenceMatcher(None, shorter, longer, autojunk=False)
+    best = 0.0
+    for i, j, _n in m.get_matching_blocks():
+        start = max(j - i, 0)
+        window = longer[start : start + len(shorter)]
+        r = SequenceMatcher(None, shorter, window, autojunk=False).ratio()
+        if r > best:
+            best = r
+        if best == 1.0:
+            break
+    return best
 
-    return pd.Series([pr(a, b) for a, b in zip(left, right)])
+
+def partial_ratio_series(left: "pd.Series", right: "pd.Series") -> "pd.Series":
+    """``partial_ratio`` row by row over two string Series."""
+    import pandas as pd
+
+    return pd.Series([partial_ratio(a, b) for a, b in zip(left, right)])
 
 
 def similarity_blend_full(
@@ -330,12 +340,6 @@ def similarity_blend_full(
     partial_ratio (quadratic substring alignment) runs as an Arrow pandas
     UDF over the already-pruned candidate pairs — the one place Python is
     allowed, per the repo rule."""
-    from pyspark.sql.pandas.functions import pandas_udf
-    from pyspark.sql.types import DoubleType
-
-    @pandas_udf(DoubleType())
-    def partial_udf(a, b):
-        return partial_ratio_series(a, b)
 
     def _lev_ratio(p, q):
         return 1.0 - F.levenshtein(p, q) / F.greatest(
@@ -359,7 +363,7 @@ def similarity_blend_full(
     )
     blend = (
         char_ratio * 0.3
-        + partial_udf(F.col(left_col), F.col(right_col)) * 0.25
+        + partial_ratio_col(F.col(left_col), F.col(right_col)) * 0.25
         + token_sort_ratio * 0.25
         + token_set_ratio * 0.2
     )
@@ -410,9 +414,12 @@ def rapidfuzz_rerank_expr(
     (per-row query text): fuzz = max(ratio, partial_ratio,
     token_sort_ratio) on a 0-100 scale; score ×1.2 when fuzz > 80, ×1.1
     when fuzz > 60.  ratio/token_sort are JVM Columns; ``partial_col`` is
-    ``partial_ratio_series(query, text)`` in [0, 1] — the Arrow UDF over a
-    (small) candidate set (``partial_ratio_col``), or a column a probe task
-    already computed for its own top-k rows (the vector leg)."""
+    ``partial_ratio_series(query, text)`` in [0, 1] (``partial_ratio_col``).
+
+    The JVM reference of the L9 rerank: the tests compare ``rerank_row``
+    (what the serving vector leg computes inside its probe tasks) against
+    it row for row, as they compare the batch scorer against ``bm25_topk``.
+    No plan serves through it."""
     q = F.lower(query_col)
     t = F.lower(F.col(text_col))
     ratio = (
@@ -433,6 +440,90 @@ def rapidfuzz_rerank_expr(
     return candidates.withColumn("fuzz_score", fuzz).withColumn(
         score_col, boosted
     )
+
+
+# Java's ``\s`` (no UNICODE_CHARACTER_CLASS), what ``F.split(c, r"\s+")``
+# splits on: Python's ``\s`` also matches NBSP, U+2003, \x1c-\x1f, ...
+_JAVA_WS = re.compile(r"[ \t\n\x0b\f\r]+")
+
+
+def levenshtein(a: str, b: str) -> int:
+    """Code-point Levenshtein distance, ``F.levenshtein``'s: Hyyrö's
+    bit-parallel form of Myers' algorithm, one Python int bit per code
+    point of ``a`` — a few int ops per code point of ``b``."""
+    if not a or not b:
+        return len(a) + len(b)
+    peq: dict[str, int] = {}
+    for i, c in enumerate(a):
+        peq[c] = peq.get(c, 0) | (1 << i)
+    mask = (1 << len(a)) - 1
+    high = 1 << (len(a) - 1)
+    vp, vn, dist = mask, 0, len(a)
+    for c in b:
+        eq = peq.get(c, 0)
+        xv = eq | vn
+        xh = (((eq & vp) + vp) ^ vp) | eq
+        hp = vn | ~(xh | vp)
+        hn = vp & xh
+        if hp & high:
+            dist += 1
+        elif hn & high:
+            dist -= 1
+        hp = (hp << 1) | 1
+        hn <<= 1
+        vp = (hn | ~(xv | hp)) & mask
+        vn = hp & xv
+    return dist
+
+
+def fuzz_boost(query: str, text: str) -> float:
+    """The L9 factor ``rapidfuzz_rerank_expr`` multiplies a score by: 1.2
+    when fuzz = max(ratio, partial·100, token_sort) > 80, 1.1 when > 60,
+    else 1.0.  Only the class of fuzz matters, so two exact shortcuts skip
+    Levenshtein calls: a ratio whose length bound
+    ``(1 − |la−lb|/max(la,lb,1))·100`` (≥ the ratio, in floats too) cannot
+    lift fuzz into a higher class is not computed, and the rest are not
+    either once fuzz > 80 (the partial ratio, the costliest, runs last)."""
+    q, t = query.lower(), text.lower()
+    fuzz = 0.0
+    for a, b in (
+        (q, t),
+        (" ".join(sorted(_JAVA_WS.split(q))), " ".join(sorted(_JAVA_WS.split(t)))),
+    ):
+        m = max(len(a), len(b), 1)
+        if (1.0 - abs(len(a) - len(b)) / m) * 100.0 <= (80.0 if fuzz > 60 else 60.0):
+            continue
+        # rapidfuzz_rerank_expr's ratio, op for op
+        fuzz = max(fuzz, (1.0 - levenshtein(a, b) / m) * 100.0)
+        if fuzz > 80:
+            return 1.2
+    fuzz = max(fuzz, partial_ratio(query, text) * 100.0)
+    return 1.2 if fuzz > 80 else 1.1 if fuzz > 60 else 1.0
+
+
+def rerank_row(
+    query: str,
+    text: str | None,
+    cos: float,
+    anchors: tuple[list[str], list[str]],
+    fuzz: bool,
+) -> tuple[float, float]:
+    """One vector hit's (score, anchor_mult): the L9 fuzz rerank of its
+    cosine (``fuzz``; ``fuzz_boost``) and the L10 multiplier — ×1.2 when
+    the doc text holds one of the query's dates, ×1.1 when it holds one of
+    its ids (``extract_anchors``), by substring.  Bit for bit what
+    ``rapidfuzz_rerank_expr`` over ``partial_ratio_col`` and the JVM anchor
+    expression give; a null text leaves the cosine and a multiplier of
+    1.0.  Module-level, so a probe task calling it imports the package in
+    its worker (``functions/worker_env.py``)."""
+    if text is None:
+        return cos, 1.0
+    score = cos * fuzz_boost(query, text) if fuzz else cos
+    dates, ids = anchors
+    mult = (1.2 if any(d in text for d in dates) else 1.0) * (
+        1.1 if any(i in text for i in ids) else 1.0
+    )
+    return score, mult
 
 
 # ---------------------------------------------------------------------------

@@ -34,7 +34,7 @@ from pyspark.sql import functions as F
 from ..functions.vectors import cosine_col
 from ..sources.fs import fs_for
 from ..sources.tables import local_frame
-from .fuzzy import partial_ratio_series
+from .fuzzy import rerank_row
 
 # the ANN layouts a HybridSearchPlan serves (``ann_kind``) and
 # ``streaming.incremental.fold_delta_embeddings`` folds into
@@ -458,10 +458,10 @@ def knn_ivf_probe_many(
     order) is picked by the arguments:
 
       * ``rerank`` given: none — the un-merged task-local tops come back
-        lazily, each row carrying the rerank inputs (``ProbeRerank``; the
-        probed frame must hold the doc-text columns).  The caller projects
-        the rerank in the JVM and merges on the driver with
-        ``merge_local_topk``, so probe + rerank is one job, no exchange.
+        lazily, each row reranked in its task (``ProbeRerank``; the probed
+        frame must hold the doc-text columns).  The caller collects them
+        and merges on the driver with ``merge_local_topk``, so probe +
+        rerank is one job, no exchange.
       * ``as_rows=True``: on the driver, returning the merged
         (query_id, id, cos_sim) tuples (the collect is ≤ tasks ×
         |queries| × k rows — task-bounded, never corpus-sized).
@@ -568,43 +568,41 @@ def merge_probe_tops(
     )
 
 
-# -- probe task output: task-local top-k rows, optionally with rerank inputs
+# -- probe task output: task-local top-k rows, optionally reranked in the task
 
 # the doc-text columns a standing plan joins into its IVF-family ANN cache
-# (and its delta embeddings), so a probe task emits its hits' text itself
+# (and its delta embeddings), so a probe task reranks its hits itself
 DOC_TEXT_COL = "doc_text"
 HAS_DOC_COL = "has_doc"
 
 
 @dataclass(frozen=True)
 class ProbeRerank:
-    """The rerank inputs a probe task attaches to its task-local top-k
-    rows: per query id its text and L10 anchors (dates, ids), and whether
-    the L9 fuzz rerank is on (``partial``: the task computes
-    ``partial_ratio_series`` of query text vs doc text for those rows).
+    """The rerank inputs of a probe whose tasks rerank their own task-local
+    top-k rows (``fuzzy.rerank_row``): per query id its text and L10
+    anchors (dates, ids), and whether the L9 fuzz rerank is on (``fuzz``).
     The probed frame must carry ``DOC_TEXT_COL`` and ``HAS_DOC_COL`` (null
     where the vector has no doc row)."""
 
     qtext: dict[int, str]
     anchors: dict[int, tuple[list[str], list[str]]]
-    partial: bool
+    fuzz: bool
 
 
 def probe_schema(id_col: str, rerank: ProbeRerank | None) -> str:
-    """The DDL schema of a probe's task-local top-k rows."""
+    """The DDL schema of a probe's task-local top-k rows.  With ``rerank``
+    each row carries its reranked score, anchor multiplier and whether its
+    vector has a doc row — no string column: the doc text stays in the
+    task."""
     base = f"query_id long, {id_col} long, cos_sim double"
     if rerank is None:
         return base
-    return (
-        f"{base}, partial double, qtext string, qdates array<string>, "
-        f"qid_anchors array<string>, {DOC_TEXT_COL} string, "
-        f"{HAS_DOC_COL} boolean"
-    )
+    return f"{base}, score double, anchor_mult double, {HAS_DOC_COL} boolean"
 
 
 def probe_input_cols(cols: list[str], rerank: ProbeRerank | None) -> list[str]:
     """A probe's input columns: the scorer's, plus the doc text when the
-    rows carry rerank inputs — every other consumer leaves it unread."""
+    task reranks its rows — every other consumer leaves it unread."""
     return [*cols, DOC_TEXT_COL, HAS_DOC_COL] if rerank is not None else cols
 
 
@@ -628,44 +626,30 @@ def topk_record_batch(
 ) -> pa.RecordBatch:
     """A probe task's top-k rows as one Arrow batch (``probe_schema``).
     ``picks`` holds per query (query id, the positions ``local_topk``
-    selected in ``rows``, their cosines).  With ``rerank`` only those
-    rows' text is taken from ``rows``, so the task makes Python strings
-    for its local top-k alone."""
+    selected in ``rows``, their cosines).  With ``rerank`` the task reranks
+    those rows itself (``fuzzy.rerank_row``), so it makes Python strings
+    for its local top-k alone and emits none."""
     qid = np.concatenate(
         [np.full(pos.size, q, dtype=np.int64) for q, pos, _ in picks]
     )
     pos = np.concatenate([p for _, p, _ in picks])
+    cos = np.concatenate([c for _, _, c in picks])
     cols = {
         "query_id": pa.array(qid, pa.int64()),
         id_col: pa.array(ids[pos], pa.int64()),
-        "cos_sim": pa.array(np.concatenate([c for _, _, c in picks]), pa.float64()),
+        "cos_sim": pa.array(cos, pa.float64()),
     }
     if rerank is not None:
         at = pa.array(pos, pa.int64())
-        text = rows.column(DOC_TEXT_COL).take(at).combine_chunks()
-        qs = qid.tolist()
-        qtext = [rerank.qtext[q] for q in qs]
-        if rerank.partial:
-            partial = pa.array(
-                partial_ratio_series(
-                    pd.Series(qtext, dtype=object),
-                    pd.Series(text.to_pylist(), dtype=object),
-                ).to_numpy(dtype=np.float64),
-                pa.float64(),
-            )
-        else:
-            partial = pa.nulls(len(qs), pa.float64())
+        texts = rows.column(DOC_TEXT_COL).take(at).to_pylist()
+        scored = [
+            rerank_row(rerank.qtext[q], t, c, rerank.anchors[q], rerank.fuzz)
+            for q, t, c in zip(qid.tolist(), texts, cos.tolist())
+        ]
         cols.update(
-            partial=partial,
-            qtext=pa.array(qtext, pa.string()),
-            qdates=pa.array([rerank.anchors[q][0] for q in qs], pa.list_(pa.string())),
-            qid_anchors=pa.array(
-                [rerank.anchors[q][1] for q in qs], pa.list_(pa.string())
-            ),
-            **{
-                DOC_TEXT_COL: text,
-                HAS_DOC_COL: rows.column(HAS_DOC_COL).take(at).combine_chunks(),
-            },
+            score=pa.array([s for s, _ in scored], pa.float64()),
+            anchor_mult=pa.array([m for _, m in scored], pa.float64()),
+            **{HAS_DOC_COL: rows.column(HAS_DOC_COL).take(at).combine_chunks()},
         )
     return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 

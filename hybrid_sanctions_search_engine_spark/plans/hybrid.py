@@ -101,34 +101,6 @@ def _with_doc_text(vectors: DataFrame, docs: DataFrame, text_col: str) -> DataFr
     return vectors.join(text, "vec_id", "left")
 
 
-def _rerank_frame(local: DataFrame, opts: SearchOpts) -> DataFrame:
-    """The L9 rerank and L10 anchor multiplier as JVM expressions over a
-    probe's reranking rows (``similarity.probe_schema``) → (query_id,
-    doc_id, score, cos_sim, anchor_mult, ``HAS_DOC_COL``)."""
-    from ..operators.fuzzy import rapidfuzz_rerank_expr
-
-    df = local.withColumnRenamed("vec_id", "doc_id").withColumn(
-        "score", F.col("cos_sim")
-    )
-    if opts.rapidfuzz_rerank:
-        df = rapidfuzz_rerank_expr(
-            df, F.col("qtext"), F.col("partial"), text_col=DOC_TEXT_COL,
-            score_col="score",
-        )
-    # dob ×1.2, id ×1.1 when the doc text contains a query anchor; empty
-    # anchor arrays make both exists() false
-    text = F.col(DOC_TEXT_COL)
-    anchor_mult = F.when(
-        F.exists(F.col("qdates"), lambda d: text.contains(d)), F.lit(1.2)
-    ).otherwise(F.lit(1.0)) * F.when(
-        F.exists(F.col("qid_anchors"), lambda i: text.contains(i)), F.lit(1.1)
-    ).otherwise(F.lit(1.0))
-    return df.select(
-        "query_id", "doc_id", "score", "cos_sim",
-        anchor_mult.alias("anchor_mult"), HAS_DOC_COL,
-    )
-
-
 def _timed_into(trace: dict, name: str, fn, lock=None):
     """Wrap ``fn`` so its wall time (ms) lands in ``trace[name]``.
 
@@ -183,7 +155,7 @@ def _fuse(
     if use_vector:
         # post-boosts on vector-fallback hits (hybrid_search_service.py:
         # 1248-1260): cosine > 0.7 ⇒ ×1.3, > 0.5 ⇒ ×1.1, then the L10
-        # anchor multiplier the probe evaluated in-cluster — applied here,
+        # anchor multiplier the probe tasks computed — applied here,
         # so the gate above sees the pre-boost score
         vector_best: dict[int, float] = {}
         for r in vec_rows:
@@ -786,8 +758,9 @@ class HybridSearchPlan:
         """Stage 3 for a query set → per query id its k-bounded vector rows
         (doc_id, score, cos_sim, anchor_mult): the cosine top-k, the L9
         fuzz rerank folded into ``score`` and the L10 anchor multiplier —
-        evaluated in-cluster, so no document text reaches the driver (at
-        web scale a 100-query × k × ~100 KB-doc collect would be ~100 MB).
+        evaluated inside the probe tasks, so no document text leaves them
+        (at web scale a 100-query × k × ~100 KB-doc collect would be
+        ~100 MB).
         The one vector leg of every call shape: ``search()`` serves a batch
         of one.  ``cancel``: an abandoned speculation submits no further
         job once it is set."""
@@ -815,19 +788,18 @@ class HybridSearchPlan:
 
     def _probe_vector_rows(self, qvecs, qtext, anchors, opts, need_text, cancel):
         """The plan's probe over its text-carrying vector cache, and the
-        exact gemv over the delta's: each probe task emits its local top-k
-        with the rows' text, query text, anchors and partial ratio; the
-        rerank/anchor projection (``_rerank_frame``) runs on that output in
-        the same job and drops the text before the collect; the driver
-        merges the local tops by (cos desc, doc asc), keeps k, and only then
-        drops hits with no doc row — the inner-join semantics of a doc-text
-        join (such a hit vanishes; the (k+1)-th does not replace it)."""
+        exact gemv over the delta's: each probe task reranks its own local
+        top-k (``fuzzy.rerank_row``: the L9 fuzz boost and the L10 anchor
+        multiplier) and emits no text; the driver merges the collected
+        local tops by (cos desc, doc asc), keeps k, and only then drops
+        hits with no doc row — the inner-join semantics of a doc-text join
+        (such a hit vanishes; the (k+1)-th does not replace it)."""
         k = opts.top_k
         rerank = (
             ProbeRerank(
                 qtext={q: qtext[q] for q, _ in qvecs},
                 anchors=anchors,
-                partial=opts.rapidfuzz_rerank,
+                fuzz=opts.rapidfuzz_rerank,
             )
             if need_text
             else None
@@ -852,14 +824,8 @@ class HybridSearchPlan:
         local = parts[0]
         for part in parts[1:]:
             local = local.unionByName(part)
-        merged = merge_local_topk(
-            (
-                (r["query_id"], r["doc_id"], r["cos_sim"], r["score"],
-                 r["anchor_mult"], r[HAS_DOC_COL])
-                for r in _rerank_frame(local, opts).collect()
-            ),
-            k,
-        )
+        # rows (query_id, vec_id, cos_sim, score, anchor_mult, has_doc)
+        merged = merge_local_topk(local.collect(), k)
         return [(q, d, s, c, m) for q, d, c, s, m, has_doc in merged if has_doc]
 
     # -- the ladder -------------------------------------------------------

@@ -39,9 +39,10 @@ def start_delta_stream(
     encoder=None,
 ):
     """File-source streaming job: new parquet files of documents → delta
-    postings (term, doc_id, tf, doc_len). Stateless (no watermark needed —
-    postings are append-only facts); exactly-once via the checkpointed file
-    sink.
+    postings (term, doc_id, tf, doc_len, positions) — ``build_postings``'
+    rows, which ``merge_compact`` folds into an index with or without
+    positions.  Stateless (no watermark needed — postings are append-only
+    facts); exactly-once via the checkpointed file sink.
 
     ``encoder`` (round 6 — the reference's overlay covers its VECTOR index,
     ``watchlist_index_service.py:85-222``, so delta docs must reach the
@@ -63,7 +64,7 @@ def start_delta_stream(
         os.path.abspath(checkpoint_dir).encode()
     ).hexdigest()[:16]
     stream = spark.readStream.schema(schema).parquet(input_dir)
-    from ..operators.postings import tokenized_documents
+    from ..operators.postings import build_postings
 
     # per-microbatch tf aggregation happens in foreachBatch (stateless global
     # agg is not allowed in append mode; per-batch is exact because a doc's
@@ -87,13 +88,9 @@ def start_delta_stream(
         if batch_id <= _lineage_last_batch_id(delta_dir, lineage_key):
             return  # fully committed by a prior attempt
         batch_df = batch_df.persist()
-        toks = tokenized_documents(batch_df, text_col)
-        postings = (
-            toks.select("doc_id", "doc_len", F.explode("tokens").alias("term"))
-            .groupBy("term", "doc_id", "doc_len")
-            .agg(F.count("*").cast("int").alias("tf"))
-            .persist()
-        )
+        # the index build's aggregation, positions included, so
+        # merge_compact folds these files into a positions index too
+        postings = build_postings(batch_df, text_col, positions=True).persist()
 
         def _land(df, dest_dir: str, prefix: str) -> None:
             stage = os.path.join(dest_dir, f".stage-{prefix}")

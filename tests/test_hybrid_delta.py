@@ -170,7 +170,7 @@ def test_stream_writes_encoder_exact_embeddings(spark, env):
         assert rows[doc_id] == enc.encode_one(text), doc_id
     # the postings read must NOT see the _embeddings subdir
     post = load_delta_postings(spark, env["delta_dir"])
-    assert set(post.columns) == {"term", "doc_id", "doc_len", "tf"}
+    assert set(post.columns) == {"term", "doc_id", "doc_len", "tf", "positions"}
 
 
 def test_vector_stage_reaches_delta_docs(env):

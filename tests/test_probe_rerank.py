@@ -3,12 +3,17 @@ lexical job merges its local tops on the driver — both must return exactly
 what the windowed compositions they replace returned.
 
 * Vector leg: every plan — IVF-family or no-index — caches each vector's
-  doc text, so the probe task emits its local top-k with text, query text,
-  anchors and the partial ratio, and the driver merges.  The oracle is the
-  windowed composition: per-query windowed hits ⋈ the doc store (base ∪
-  delta) → ``rapidfuzz_rerank_expr`` with the partial-ratio UDF → anchor
+  doc text, so each probe task reranks its own local top-k
+  (``fuzzy.rerank_row``: the L9 fuzz boost and the L10 anchor multiplier)
+  and emits no text; the driver merges.  The oracle is the windowed
+  composition: per-query windowed hits ⋈ the doc store (base ∪ delta) →
+  ``rapidfuzz_rerank_expr`` with the partial-ratio UDF → the JVM anchor
   multiplier.  Rows must agree in ids, score bits, ``cos_sim`` and
   ``anchor_mult``.
+* The kernel alone: ``rerank_row`` row for row against the same JVM
+  expressions over hand-picked edge cases (case mapping, Java's ``\\s``,
+  empty strings, scores on the 60 / 80 class bounds), and its Levenshtein
+  against a DP without Spark.
 * Lexical leg: ``merge_local_topk`` over ``batch_topk_local`` must equal
   ``batch_topk_indexed``'s windowed rows in ids, score bits and order.
 """
@@ -19,12 +24,14 @@ import os
 
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.types import StringType
 
 from hybrid_sanctions_search_engine_spark.functions.vectors import pseudo_embedding
 from hybrid_sanctions_search_engine_spark.operators.fuzzy import (
     extract_anchors,
     partial_ratio_col,
     rapidfuzz_rerank_expr,
+    rerank_row,
 )
 from hybrid_sanctions_search_engine_spark.operators.similarity import (
     ProbeRerank,
@@ -113,6 +120,16 @@ def plans(spark, corpus, tmp_path_factory):
         plan.close()
 
 
+def _jvm_anchor_mult(text):
+    """The L10 multiplier as a JVM expression over (qdates, qid_anchors):
+    dob ×1.2, id ×1.1 when ``text`` contains a query anchor."""
+    return F.when(
+        F.exists(F.col("qdates"), lambda d: text.contains(d)), F.lit(1.2)
+    ).otherwise(F.lit(1.0)) * F.when(
+        F.exists(F.col("qid_anchors"), lambda i: text.contains(i)), F.lit(1.1)
+    ).otherwise(F.lit(1.0))
+
+
 def _windowed_hits(plan, qvecs):
     """Per-query windowed top-k (query_id, doc_id, cos_sim): the plan's
     probe with its default (windowed) merge, unioned with the delta's and
@@ -168,16 +185,11 @@ def _oracle_rows(spark, plan, queries, opts):
                 partial_ratio_col(F.col("qtext"), F.col("text")),
                 text_col="text",
             )
-        mult = F.when(
-            F.exists(F.col("qdates"), lambda d: F.col("text").contains(d)), F.lit(1.2)
-        ).otherwise(F.lit(1.0)) * F.when(
-            F.exists(F.col("qid_anchors"), lambda i: F.col("text").contains(i)),
-            F.lit(1.1),
-        ).otherwise(F.lit(1.0))
         rows = [
             tuple(r)
             for r in with_text.select(
-                "query_id", "doc_id", "score", "cos_sim", mult.alias("anchor_mult")
+                "query_id", "doc_id", "score", "cos_sim",
+                _jvm_anchor_mult(F.col("text")).alias("anchor_mult"),
             ).collect()
         ]
     out = {q: [] for q in qtext}
@@ -242,13 +254,176 @@ def test_empty_query_batch(plans, kind):
     qvecs = [(q, pseudo_embedding(t, DIM)) for q, t in qtext.items()]
     rerank = ProbeRerank(
         qtext=qtext, anchors={q: extract_anchors(t) for q, t in qtext.items()},
-        partial=True,
+        fuzz=True,
     )
     assert plan._probe([], k=K, as_rows=True) == []
     for rr in (None, rerank):
         empty = plan._probe([], k=K, rerank=rr)
         assert empty.schema == plan._probe(qvecs, k=K, rerank=rr).schema
         assert empty.collect() == []
+    # the probe tasks rerank: no doc text reaches the JVM past them, nor
+    # the driver
+    assert not [
+        f.name for f in empty.schema.fields if isinstance(f.dataType, StringType)
+    ]
+    assert empty.columns == [
+        "query_id", "vec_id", "cos_sim", "score", "anchor_mult", "has_doc"
+    ]
+
+
+# (query, doc text) edge cases for the rerank kernel; each row is also run
+# with a ±anchors variant.  Near-threshold rows: 10 distinct letters, the
+# query upper-cased, with 0-4 substitutions give ratio = partial = 100 /
+# 90 / 80 / 70 / 60 exactly.
+_BASE10 = "abcdefghij"
+KERNEL_CASES = [
+    ("ИВАН ПЕТРОВ", "иван петров 1970-01-01"),
+    ("Іван ПЕТРЕНКО", "іван петренко"),
+    ("ΟΔΟΣ ΣΟΦΙΑΣ", "οδος σοφιας"),
+    ("ΟΔΟΣ ΣΟΦΙΑΣ", "οδοσ σοφιασ"),
+    ("ΣΑΣ. Σ", "σας. σ"),
+    ("İSTANBUL İLİ", "istanbul ili"),
+    ("İSTANBUL", "i̇stanbul"),
+    ("STRAẞE 5", "straße 5"),
+    ("STRAẞE", "strasse"),
+    ("ivan\tpetrov", "petrov ivan"),
+    ("ivan\npetrov", "petrov\r\nivan"),
+    ("  ivan petrov  ", "ivan petrov"),
+    ("\tpetrov ivan\n", " ivan\x0bpetrov\f"),
+    # Java's \s does not match NBSP or U+2003, Python's does
+    ("petrov\u00a0ivan", "ivan petrov"),
+    ("petrov\u2003ivan", "ivan petrov"),
+    ("ivan petrov", "petrov\u00a0ivan"),
+    ("", "ivan petrov"),
+    ("", ""),
+    ("ivan", ""),
+    ("   ", "ivan"),
+    # short docs: ratio > 80 decides before the partial ratio runs
+    ("ivan petrov", "ivan petrov"),
+    ("ivan petrov", "ivan petrow"),
+    ("ab", "ab"),
+    ("ab", "ba"),
+    ("a", "b"),
+    ("ivanov ivan petrovich", "ivanov irina"),
+    ("ivanov ivan petrovich", "completely unrelated words"),
+    ("olga", "passport 1234567890 customer order data olga ivanova"),
+    ("ivan petrov", "ivan petrov born 1970-01-01 passport 1234567890"),
+    ("spark query join window", "ivan petrova born 01.02.1980 spark query join window"),
+    *[
+        (_BASE10.upper(), "".join("xyzw"[i] if i < n else c for i, c in enumerate(_BASE10)))
+        for n in range(5)
+    ],
+    ("abcde", "abxde"),
+    ("abcde", "abxye"),
+    ("abcdefghijklmno", "abcdefghijklmnoxyz"),
+    ("abcdefghijklmno", "abcdefghijkl"),
+    ("ivan", None),
+]
+_KERNEL_ANCHORS = (["1970-01-01", "01.02.1980"], ["1234567890"])
+
+
+def _kernel_rows():
+    """(row id, query, text, cos, (dates, ids)) for every case × {no
+    anchors, anchors}."""
+    out = []
+    for i, (q, t) in enumerate(KERNEL_CASES):
+        for j, anchors in enumerate((([], []), _KERNEL_ANCHORS)):
+            out.append((2 * i + j, q, t, 0.5 + 0.01 * i, anchors))
+    return out
+
+
+@pytest.mark.parametrize("fuzz", [True, False], ids=["fuzz", "anchors-only"])
+def test_rerank_kernel_equals_jvm_expressions(spark, fuzz):
+    """``rerank_row`` gives, row for row and bit for bit, the (score,
+    anchor_mult) of ``rapidfuzz_rerank_expr`` over ``partial_ratio_col``
+    and the JVM anchor multiplier."""
+    rows = _kernel_rows()
+    frame = local_frame(
+        spark,
+        [(r, q, t, c, a[0], a[1]) for r, q, t, c, a in rows],
+        "rid long, qtext string, text string, score double, "
+        "qdates array<string>, qid_anchors array<string>",
+    )
+    cos = {r: c for r, _, _, c, _ in rows}
+    if fuzz:
+        frame = rapidfuzz_rerank_expr(
+            frame, F.col("qtext"), partial_ratio_col(F.col("qtext"), F.col("text"))
+        )
+    else:
+        frame = frame.withColumn("fuzz_score", F.lit(None).cast("double"))
+    want = {
+        r["rid"]: (r["score"], r["mult"], r["fuzz_score"])
+        for r in frame.select(
+            "rid", "score", "fuzz_score", _jvm_anchor_mult(F.col("text")).alias("mult")
+        ).collect()
+    }
+    got = {r: rerank_row(q, t, c, a, fuzz) for r, q, t, c, a in rows}
+    assert got == {r: w[:2] for r, w in want.items()}
+    assert {w[1] for w in want.values()} == {1.0, 1.1, 1.2, 1.2 * 1.1}
+    if fuzz:
+        # the case is live: all three classes, fuzz exactly on both class
+        # bounds, and the Java-\s rows do not token-sort to a match
+        classes = {
+            round(w[0] / cos[r], 9) for r, w in want.items() if w[2] is not None
+        }
+        assert classes == {1.0, 1.1, 1.2}
+        fuzz_at = {w[2] for w in want.values()}
+        assert {60.0, 80.0} <= fuzz_at
+        java_ws = [
+            2 * KERNEL_CASES.index((f"petrov{sp}ivan", "ivan petrov"))
+            for sp in ("\u00a0", "\u2003")
+        ]
+        assert all(want[r][2] <= 80 for r in java_ws)
+
+
+def _dp_levenshtein(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def test_levenshtein_equals_dp():
+    """The bit-parallel Levenshtein equals the textbook DP over random
+    code-point strings (astral and combining code points included), both
+    ways round, across the 64-bit word boundary."""
+    import random
+
+    from hybrid_sanctions_search_engine_spark.operators.fuzzy import levenshtein
+
+    rng = random.Random(7)
+    alphabet = "abcйцΣςİ \u0307\U0001F600"
+    for _ in range(3000):
+        a, b = (
+            "".join(rng.choice(alphabet) for _ in range(rng.randint(0, n)))
+            for n in (12, 90)
+        )
+        want = _dp_levenshtein(a, b)
+        assert levenshtein(a, b) == want == levenshtein(b, a), (a, b)
+
+
+def test_plans_do_not_serve_through_the_jvm_rerank():
+    """``rapidfuzz_rerank_expr`` is the JVM reference the tests compare the
+    kernel against: no serving plan uses it."""
+    import ast
+    import pathlib
+
+    import hybrid_sanctions_search_engine_spark.plans as plans_pkg
+
+    hits = []
+    for path in pathlib.Path(plans_pkg.__file__).parent.glob("*.py"):
+        for node in ast.walk(ast.parse(path.read_text())):
+            names = (
+                [a.name for a in node.names] if isinstance(node, ast.ImportFrom)
+                else [node.attr] if isinstance(node, ast.Attribute)
+                else [node.id] if isinstance(node, ast.Name) else []
+            )
+            if "rapidfuzz_rerank_expr" in names:
+                hits.append(f"{path.name}:{node.lineno}")
+    assert not hits
 
 
 @pytest.fixture(scope="module")

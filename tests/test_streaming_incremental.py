@@ -127,6 +127,56 @@ def test_streaming_overlay_and_compaction(spark, sf_smoke_dir, dirs):
     assert {r["doc_id"] for r in res3.collect()} == {100001, 100002}
 
 
+def test_streamed_delta_folds_into_positions_index(spark, sf_smoke_dir, tmp_path):
+    """The stream writes ``build_postings``' rows, positions included, so
+    ``merge_compact`` folds a streamed delta into a positions index, and
+    every phrase contract then matches a ``build_index`` rebuild of
+    base ∪ streamed docs."""
+    from hybrid_sanctions_search_engine_spark.plans.wand import phrase_search
+
+    base_docs = spark.read.parquet(
+        os.path.join(sf_smoke_dir, "documents.parquet")
+    ).select("doc_id", "text")
+    index_dir, scratch_dir = str(tmp_path / "index"), str(tmp_path / "scratch")
+    build_index(base_docs, index_dir, n_shards=4, chunk_bits=6, resume=False,
+                store_positions=True)
+    streamed = [
+        (200001, "spark query join window in a streamed doc", "en", "stream", 41),
+        (200002, "window join query spark query join again", "en", "stream", 40),
+    ]
+    input_dir, delta_dir = str(tmp_path / "input"), str(tmp_path / "delta")
+    _write_docs(spark, input_dir, streamed)
+    q = start_delta_stream(
+        spark, input_dir, delta_dir, str(tmp_path / "ckpt"), SCHEMA
+    )
+    q.awaitTermination(120)
+    assert "positions" in load_delta_postings(spark, delta_dir).columns
+    files = sorted(
+        os.path.join(delta_dir, f) for f in os.listdir(delta_dir)
+        if f.endswith(".parquet")
+    )
+    report = merge_compact(spark, index_dir, files)
+    assert report["new_docs"] == 2
+
+    all_docs = base_docs.unionByName(
+        spark.createDataFrame(streamed, SCHEMA).select("doc_id", "text")
+    )
+    build_index(all_docs, scratch_dir, n_shards=4, chunk_bits=6, resume=False,
+                store_positions=True)
+    streamed_ids = {d for d, *_ in streamed}
+    for phrase, kw in [
+        ("spark query", {}), ("query join", {"slop": 1}),
+        ("join query", {"slop": 1, "ordered": False}),
+        ("spark join", {"slop": 1, "lucene": True}),
+    ]:
+        got, want = (
+            sorted(tuple(r) for r in phrase_search(spark, d, phrase, **kw).collect())
+            for d in (index_dir, scratch_dir)
+        )
+        assert got == want, (phrase, kw)
+        assert streamed_ids & {r[0] for r in got}, (phrase, kw)
+
+
 @pytest.mark.parametrize("positions", [False, True])
 def test_merge_compact_rank_identity(spark, sf_smoke_dir, tmp_path, positions):
     """merge_compact folds delta postings files into the base index WITHOUT
