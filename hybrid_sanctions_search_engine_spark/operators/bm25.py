@@ -20,6 +20,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StringType, StructType
 
 from ..sources.tables import local_frame
 from .postings import CorpusStats, build_postings, corpus_stats, doc_lengths
@@ -238,7 +239,13 @@ def bm25_topk_multi(
     )
 
 
-BATCH_SCORE_SCHEMA = "query_id long, doc_id long, score double, n_terms_matched int"
+BATCH_SCORE_SCHEMA = (
+    StructType().add("query_id", LongType()).add("doc_id", LongType())
+    .add("score", DoubleType()).add("n_terms_matched", IntegerType())
+)
+# a scorer given ``FuzzyQueries`` also reports the terms it read: one row per
+# term with ``term`` set (its other fields 0); score rows carry a null term
+FUZZY_SCORE_SCHEMA = StructType([*BATCH_SCORE_SCHEMA.fields]).add("term", StringType())
 
 
 def group_partitioned(df: DataFrame, key, n: int) -> DataFrame:
@@ -267,6 +274,7 @@ def make_batch_group_scorer(
     flatten=None,
     target_acc_bytes: int = 64 << 20,
     min_match_per_qidx=None,
+    fuzzy=None,
 ):
     """Per-doc-group batch scorer for ``applyInPandas``: accumulates a dense
     (local docs × queries) BM25 score matrix with one 2-D scatter-add per
@@ -291,7 +299,15 @@ def make_batch_group_scorer(
     computed once and reused across blocks, and the scatter order per
     column is unchanged, so results are bit-identical to the single-block
     shape — a 10k-query batch simply walks more blocks instead of
-    allocating a docs × 10k matrix."""
+    allocating a docs × 10k matrix.
+
+    ``fuzzy``: an ``operators.fuzzy.FuzzyQueries`` whose query ids are in
+    ``qid_list``.  Each group expands those queries over the terms it
+    holds (``FuzzyQueries.expand``), scores the expanded terms at their
+    edit-ratio weights beside ``term_to_qidx``, and reports the terms
+    (``FUZZY_SCORE_SCHEMA``).  Until a query's cap binds, a term's weight
+    depends on the term and the query alone, so the rows equal an
+    override of the driver-side expansion, bit for bit."""
     import numpy as np
     import pandas as pd
 
@@ -307,8 +323,10 @@ def make_batch_group_scorer(
         else np.ones(nq, dtype=np.int32)
     )
 
-    def score_group(key, pdf):
-        empty = pd.DataFrame(
+    qidx_of = {qid: i for i, qid in enumerate(qid_list)}
+
+    def no_rows():
+        return pd.DataFrame(
             {
                 "query_id": np.array([], dtype=np.int64),
                 "doc_id": np.array([], dtype=np.int64),
@@ -316,41 +334,63 @@ def make_batch_group_scorer(
                 "n_terms_matched": np.array([], dtype=np.int32),
             }
         )
+
+    def score_group(key, pdf):
         flat = flatten(pdf) if flatten is not None else pdf
-        if isinstance(flat, dict):
-            # numpy-native flatten (sources.index_io.decode_shard_arrays):
-            # terms arrive as integer codes — no O(postings) object column,
-            # integer == masks instead of per-row string comparisons
-            ids = flat["doc_id"]
-            if ids.size == 0:
-                return empty
-            tf = flat["tf"].astype(np.float64)
-            dl = flat["doc_len"].astype(np.float64)
-            dfv = flat["df"].astype(np.float64)
-            term_codes = flat["term_codes"]
-            uniq_terms = flat["uniq_terms"]
-        else:
-            if flat.empty:
-                return empty
-            ids = flat["doc_id"].to_numpy(dtype=np.int64)
-            tf = flat["tf"].to_numpy(dtype=np.float64)
-            dl = flat["doc_len"].to_numpy(dtype=np.float64)
-            dfv = flat["df"].to_numpy(dtype=np.float64)
-            # factorize once (one hash pass) — iterating pd.unique + an
-            # object-equality mask per term cost ~15× more at 250k rows;
-            # first-appearance order matches pd.unique, so the per-cell
-            # float accumulation order (and thus every bit of the sums)
-            # is unchanged
+        if not isinstance(flat, dict):
+            # raw posting rows: factorize the terms once (one hash pass) —
+            # iterating pd.unique + an object-equality mask per term cost
+            # ~15× more at 250k rows; first-appearance order matches
+            # pd.unique, so the per-cell float accumulation order (and thus
+            # every bit of the sums) is unchanged
             term_codes, uniq_terms = pd.factorize(flat["term"])
+            flat = {
+                "term_codes": term_codes,
+                "uniq_terms": np.asarray(uniq_terms, dtype=object),
+                **{c: flat[c].to_numpy() for c in ("doc_id", "tf", "doc_len", "df")},
+            }
+        # numpy-native rows (sources.index_io.decode_shard_arrays): terms
+        # are integer codes — no O(postings) object column, integer ==
+        # masks instead of per-row string comparisons
+        out = score_rows(flat)
+        if fuzzy is None:
+            return out
+        seen = flat["uniq_terms"]
+        report = pd.DataFrame(
+            {
+                "query_id": np.zeros(len(seen), dtype=np.int64),
+                "doc_id": np.zeros(len(seen), dtype=np.int64),
+                "score": np.zeros(len(seen), dtype=np.float64),
+                "n_terms_matched": np.zeros(len(seen), dtype=np.int32),
+                "term": seen,
+            }
+        )
+        return pd.concat([out.assign(term=None), report], ignore_index=True)
+
+    def score_rows(flat):
+        ids = flat["doc_id"].astype(np.int64)
+        if ids.size == 0:
+            return no_rows()
+        tf = flat["tf"].astype(np.float64)
+        dl = flat["doc_len"].astype(np.float64)
+        dfv = flat["df"].astype(np.float64)
+        term_codes = flat["term_codes"]
+        uniq_terms = flat["uniq_terms"]
         docs_local = np.unique(ids)
         pos = np.searchsorted(docs_local, ids)
         idf = np.log(1.0 + (n_docs_f - dfv + 0.5) / (dfv + 0.5))
         contrib = idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
+        expanded: dict[str, list[tuple[int, float]]] = {}
+        if fuzzy is not None:
+            for (qid, t), w in fuzzy.expand(uniq_terms)[0].items():
+                expanded.setdefault(t, []).append((qidx_of[qid], w))
         # per-term posting rows + per-term (query columns, weights) — built
         # once, reused by every column block
         term_info = []
         for ci in range(len(uniq_terms)):
-            qws = term_to_qidx.get(uniq_terms[ci])
+            qws = term_to_qidx.get(uniq_terms[ci], []) + expanded.get(
+                uniq_terms[ci], []
+            )
             if not qws:
                 continue
             m = np.flatnonzero(term_codes == ci)
@@ -406,7 +446,7 @@ def make_batch_group_scorer(
                 out_s.append(acc[bi, order])
                 out_n.append(cnt[bi, order])
         if not out_q:
-            return empty
+            return no_rows()
         return pd.DataFrame(
             {
                 "query_id": np.concatenate(out_q),
@@ -423,6 +463,7 @@ def batch_query_terms(
     queries: list[tuple[int, str]],
     query_terms_override: list[tuple[int, str, float]] | None = None,
     min_should_match: int | str = 1,
+    fuzzy=None,
 ) -> tuple[list[int], dict, list[int] | None] | None:
     """A query set's batch-scorer inputs → (qid_list, term_to_qidx,
     per-query minimum matched-term counts or None), or None when no query
@@ -439,16 +480,21 @@ def batch_query_terms(
     distinct-term count) applies only to the tokenized ``queries``: an
     override id's per-doc count tallies matched expansion VARIANTS, not
     query terms, so override-only calls reject it and override ids keep
-    minimum 1."""
+    minimum 1.
+
+    ``fuzzy`` (``operators.fuzzy.FuzzyQueries``): query ids whose terms the
+    scorer's tasks expand themselves — appended to ``qid_list`` under the
+    override rules, with no entry in ``term_to_qidx``."""
     from ..functions.tokenize import py_index_tokens
 
     tokens = {qid: list(dict.fromkeys(py_index_tokens(q))) for qid, q in queries}
     triples = [(qid, t, 1.0) for qid, _ in queries for t in tokens[qid]]
     qid_list = [qid for qid, _ in queries]
-    if query_terms_override is not None:
-        ovr = list(query_terms_override)
-        ovr_qids = list(dict.fromkeys(q for q, _, _ in ovr))
-        if set(ovr_qids) & set(qid_list):
+    ovr = list(query_terms_override or [])
+    ovr_qids = list(dict.fromkeys(q for q, _, _ in ovr))
+    fz_qids = [q for q, ts in fuzzy.queries if ts] if fuzzy is not None else []
+    if ovr_qids or fz_qids:
+        if set(ovr_qids + fz_qids) & set(qid_list):
             raise ValueError(
                 "fused batch: override query ids must be disjoint from "
                 "tokenized query ids"
@@ -458,8 +504,8 @@ def batch_query_terms(
                 "min_should_match cannot combine with query_terms_override"
             )
         triples += ovr
-        qid_list += ovr_qids
-    if not triples:
+        qid_list += ovr_qids + fz_qids
+    if not triples and not fz_qids:
         return None
     qidx = {qid: i for i, qid in enumerate(qid_list)}
     term_to_qidx: dict[str, list[tuple[int, float]]] = {}
@@ -487,7 +533,8 @@ def score_pre_grouped(score_group, k: int):
     partition is a doc group, so its local top-k per query is exact; the
     task merges its partitions' tops into one top-k per query under
     (score desc, doc_id asc) before it yields, so its output is ≤
-    |queries| × k rows however many partitions it coalesced.  Per-task
+    |queries| × k rows however many partitions it coalesced (plus, from a
+    ``fuzzy`` scorer, one report row per distinct term read).  Per-task
     memory stays at one cached partition's postings."""
     import numpy as np
     import pandas as pd
@@ -497,12 +544,18 @@ def score_pre_grouped(score_group, k: int):
 
     def merged(tops: list) -> pd.DataFrame:
         out = pd.concat(tops, ignore_index=True)
+        reports = None
+        if "term" in out.columns:
+            is_report = out["term"].notna().to_numpy()
+            reports = out[is_report].drop_duplicates("term")
+            out = out[~is_report]
         order = np.lexsort(
             (out["doc_id"].to_numpy(), -out["score"].to_numpy(),
              out["query_id"].to_numpy())
         )
         out = out.iloc[order]
-        return out[(out.groupby("query_id").cumcount() < k).to_numpy()]
+        out = out[(out.groupby("query_id").cumcount() < k).to_numpy()]
+        return out if reports is None else pd.concat([out, reports])
 
     def score(batches):
         held, held_part, tops = [], None, []
@@ -525,7 +578,9 @@ def score_pre_grouped(score_group, k: int):
     return score
 
 
-def topk_pre_grouped(matched: DataFrame, score_group, k: int) -> DataFrame:
+def topk_pre_grouped(
+    matched: DataFrame, score_group, k: int, schema: StructType = BATCH_SCORE_SCHEMA
+) -> DataFrame:
     """Task-local top-``k`` per query (``BATCH_SCORE_SCHEMA``) of
     ``matched`` — a filter over a standing cache laid out as
     ``score_pre_grouped`` requires — scored in place by ``score_group``
@@ -536,12 +591,13 @@ def topk_pre_grouped(matched: DataFrame, score_group, k: int) -> DataFrame:
     pays the job/task launch path (~33-36 ms at local[4], about a JVM
     job's floor) plus Arrow feeding of its rows, not a per-task setup, so
     removing a stage or exchange is the lever; one wave over the cache
-    beats a groupBy that shuffles it."""
+    beats a groupBy that shuffles it.  ``schema``: ``FUZZY_SCORE_SCHEMA``
+    for a scorer built with ``fuzzy``."""
     par = matched.sparkSession.sparkContext.defaultParallelism
     return (
         matched.withColumn("part", F.spark_partition_id())
         .coalesce(par)
-        .mapInPandas(score_pre_grouped(score_group, k), BATCH_SCORE_SCHEMA)
+        .mapInPandas(score_pre_grouped(score_group, k), schema)
     )
 
 
@@ -573,6 +629,7 @@ def cached_topk_local(
     avgdl: float,
     query_terms_override: list[tuple[int, str, float]] | None = None,
     min_should_match: int | str = 1,
+    fuzzy=None,
     k1: float = K1,
     b: float = B,
 ) -> DataFrame:
@@ -581,19 +638,23 @@ def cached_topk_local(
     n_terms_matched), ≤ tasks × |queries| × k rows, un-merged (the caller
     merges them, ``similarity.merge_local_topk``).  The raw twin of
     ``plans.wand.batch_topk_local(pre_grouped=True)``: same inputs
-    (``batch_query_terms``), same scorer, no varint decode."""
-    spec = batch_query_terms(queries, query_terms_override, min_should_match)
+    (``batch_query_terms``, ``fuzzy`` included), same scorer, no varint
+    decode."""
+    schema = BATCH_SCORE_SCHEMA if fuzzy is None else FUZZY_SCORE_SCHEMA
+    spec = batch_query_terms(queries, query_terms_override, min_should_match, fuzzy)
     if spec is None:
-        return local_frame(cached.sparkSession, [], BATCH_SCORE_SCHEMA)
+        return local_frame(cached.sparkSession, [], schema)
     qid_list, term_to_qidx, msm_arr = spec
     score_group = make_batch_group_scorer(
         term_to_qidx, qid_list, n_docs, avgdl, k1, b, k,
-        min_match_per_qidx=msm_arr,
+        min_match_per_qidx=msm_arr, fuzzy=fuzzy,
     )
-    matched = cached.where(F.col("term").isin(sorted(term_to_qidx))).select(
-        *RAW_CACHE_COLS
-    )
-    return topk_pre_grouped(matched, score_group, k)
+    cond = F.col("term").isin(sorted(term_to_qidx)) if term_to_qidx else None
+    if fuzzy is not None:
+        fz = fuzzy.candidate_filter()
+        cond = fz if cond is None else cond | fz
+    matched = cached.where(cond).select(*RAW_CACHE_COLS)
+    return topk_pre_grouped(matched, score_group, k, schema)
 
 
 def _aggregate_exploded_rows(pdf):

@@ -7,10 +7,20 @@ machinery:
     prefix-bucketed dictionary join + ``F.levenshtein`` filter (no cross
     join: candidates must share the 2-char prefix, exactly like ES's
     prefix_length pruning — at web scale this join hits one dictionary
-    bucket per query term).  A serving plan above its in-RAM dictionary
-    cap fetches the candidates of many query terms in one filter
-    (``fuzzy_candidate_probe``) and prunes absent AC terms with a Bloom
-    filter of the dictionary (``dictionary_bloom``).
+    bucket per query term).  The serving ladder expands through ONE
+    function, ``expand_terms``.  Below its in-RAM dictionary cap the driver
+    runs it over the collected dictionary.  Above the cap there is no
+    separate candidate job: the scoring job reads the cached postings that
+    pass ``FuzzyQueries.candidate_filter()`` (a batch-stat-prunable
+    ``startswith`` per prefix bucket AND the Levenshtein test), and each
+    task expands the queries over the terms it read, scores them, and
+    reports them.  Every dictionary term is a term of those caches, so the
+    union of the reports is a superset of every query term's candidates;
+    while no query term has more candidates than ``max_expansions`` no cap
+    binds anywhere and the job's tops are exact, and otherwise the driver
+    caps the union with the same function and re-scores only those queries.
+    AC terms absent from the dictionary are pruned with a Bloom filter of
+    it (``dictionary_bloom``).
   * verification + score normalization (``hybrid_search_service.py:2354-2409``):
     edit-distance cap (≤3 below 15 chars, len/5 above), score =
     0.2·es_norm + 0.5·edit_ratio + 0.3·word_jaccard, ×0.7 penalty when
@@ -26,14 +36,16 @@ machinery:
   * tier boosts (``elasticsearch_adapters.py:447-466``).
 
 Everything else is built-in Spark functions — fully codegen'd — except the
-Arrow Python stages: the rerank kernel, the partial_ratio UDF and the Bloom
-filter build.
+Arrow Python stages: the rerank kernel, the in-task fuzzy expansion, the
+partial_ratio UDF and the Bloom filter build.
 """
 
 from __future__ import annotations
 
 import re
 from collections.abc import Iterable
+from dataclasses import dataclass
+from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
@@ -66,40 +78,108 @@ def fuzzy_term_candidates(
     )
 
 
-def fuzzy_candidate_probe(
-    dictionary: DataFrame, query_terms: Iterable[str], max_edits: int = 1
-) -> list[str]:
-    """Every dictionary term within ``max_edits`` of some query term in that
-    query term's prefix bucket (``q[:2]``, or ``q[:1]`` for a 1-char term —
-    ``fuzzy_term_candidates``' buckets), as one narrow filter job.
+def expand_terms(
+    queries: Iterable[tuple[int, Iterable[str]]],
+    dict_terms: Iterable[str],
+    max_edits: int = 1,
+    max_expansions: int = 20,
+) -> tuple[dict[tuple[int, str], float], set[int]]:
+    """The fuzzy expansion of (query_id, query terms) pairs over
+    ``dict_terms`` → ({(query_id, term): term_weight}, the query ids whose
+    expansion cap bound).  Per distinct query term ``q``: the terms within
+    ``max_edits`` in its prefix bucket (``q[:2]``, or ``q[:1]`` for a
+    1-char term — ``fuzzy_term_candidates``' buckets), ranked by (edit
+    asc, term asc), capped at ``max_expansions`` and weighted by edit
+    ratio ``1 − d / max(len(term), len(q))``; a term reached from several
+    query terms keeps its best weight.  A query id is in the second set
+    when one of its terms had more candidates than the cap.
 
-    The candidates are a superset of each query term's capped expansion, so
-    ranking and capping them on the driver gives the same rows as ranking
-    the whole dictionary.  One literal prefix → query-terms map per prefix
-    length keeps the filter a map lookup plus a few Levenshtein calls per
-    dictionary row, whatever the number of query terms."""
-    by_len: dict[int, dict[str, set[str]]] = {}
-    for q in set(query_terms):
-        plen = min(len(q), 2)
-        by_len.setdefault(plen, {}).setdefault(q[:plen], set()).add(q)
-    if not by_len:
-        return []
-    term = F.col("term")
-    cond = None
-    for plen, buckets in sorted(by_len.items()):
-        prefix_map = F.create_map(
-            *(
-                c
-                for pfx, qs in sorted(buckets.items())
-                for c in (F.lit(pfx), F.array(*map(F.lit, sorted(qs))))
+    ``dict_terms`` is the whole dictionary or any superset of the
+    candidates (duplicates allowed) — the result is the same.  The one
+    expansion: the driver runs it over the in-RAM dictionary, a scoring
+    task over the candidate terms it reads (``FuzzyQueries``), and the
+    driver again over the union of those reports.  Pinned against
+    ``fuzzy_term_candidates`` by tests/test_hybrid_batch.py."""
+    queries = [(qid, list(dict.fromkeys(ts))) for qid, ts in queries]
+    # q[:min(len(q), 2)] is q[:2]: a 1-char term's bucket key is the term
+    bucket: dict[str, set[str]] = {q[:2]: set() for _, ts in queries for q in ts}
+    for t in dict_terms:
+        if t[:2] in bucket:
+            bucket[t[:2]].add(t)
+        if len(t) > 1 and t[:1] in bucket:
+            bucket[t[:1]].add(t)
+    weights: dict[tuple[int, str], float] = {}
+    bound: set[int] = set()
+    for qid, ts in queries:
+        for q in ts:
+            scored = sorted(
+                (d, t)
+                for t in bucket[q[:2]]
+                if abs(len(t) - len(q)) <= max_edits
+                and (d := levenshtein(t, q)) <= max_edits
             )
-        )
-        hit = F.exists(
-            prefix_map[F.substring(term, 1, plen)],
-            lambda q: F.levenshtein(term, q) <= max_edits,
-        )
-        cond = hit if cond is None else cond | hit
-    return [r["term"] for r in dictionary.where(cond).select("term").collect()]
+            if len(scored) > max_expansions:
+                bound.add(qid)
+            for d, t in scored[:max_expansions]:
+                w = 1.0 - d / max(len(t), len(q))
+                if weights.get((qid, t), -1.0) < w:
+                    weights[(qid, t)] = w
+    return weights, bound
+
+
+@dataclass(frozen=True)
+class FuzzyQueries:
+    """The fuzzy stage of a query set — (query_id, distinct query terms)
+    pairs under ``max_edits`` / ``max_expansions`` — for a scoring job to
+    expand inside its own tasks when the dictionary does not fit the
+    driver.  The job reads the cached postings that pass
+    ``candidate_filter()``; each task runs ``expand`` over the terms it
+    read, scores the expanded terms at their weights, and reports those
+    terms.  Every candidate of every query term is a dictionary term, so
+    it reaches some task; the union of the reports is the candidate
+    superset the driver caps with the same ``expand``."""
+
+    queries: tuple[tuple[int, tuple[str, ...]], ...]
+    max_edits: int = 1
+    max_expansions: int = 20
+
+    def expand(
+        self, terms: Iterable[str]
+    ) -> tuple[dict[tuple[int, str], float], set[int]]:
+        """``expand_terms`` of these queries over ``terms``."""
+        return expand_terms(self.queries, terms, self.max_edits, self.max_expansions)
+
+    def candidate_filter(self) -> Column:
+        """The JVM filter of the candidate rows: a prefix test per query
+        bucket — ``startswith``, which the term-sorted caches' per-batch
+        min/max stats prune on — ANDed with ``exists(prefix_map[
+        substring(term, 1, plen)], q -> levenshtein(term, q) <= e)``, one
+        literal prefix → query-terms map per prefix length (1-char terms
+        keep their ``q[:1]`` bucket).  A map lookup and a few Levenshtein
+        calls per surviving row, whatever the number of query terms."""
+        by_len: dict[int, dict[str, set[str]]] = {}
+        for _, ts in self.queries:
+            for q in ts:
+                by_len.setdefault(len(q[:2]), {}).setdefault(q[:2], set()).add(q)
+        term = F.col("term")
+        prefixes = sorted(p for buckets in by_len.values() for p in buckets)
+        in_bucket = reduce(Column.__or__, (term.startswith(p) for p in prefixes))
+        hits = []
+        for plen, buckets in sorted(by_len.items()):
+            prefix_map = F.create_map(
+                *(
+                    c
+                    for pfx, qs in sorted(buckets.items())
+                    for c in (F.lit(pfx), F.array(*map(F.lit, sorted(qs))))
+                )
+            )
+            hits.append(
+                F.exists(
+                    prefix_map[F.substring(term, 1, plen)],
+                    lambda q: F.levenshtein(term, q) <= self.max_edits,
+                )
+            )
+        return in_bucket & reduce(Column.__or__, hits)
 
 
 # ---------------------------------------------------------------------------

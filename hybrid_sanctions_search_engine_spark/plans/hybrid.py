@@ -30,9 +30,10 @@ from functools import partial
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import DoubleType, IntegerType, LongType, StructType
 
 from ..operators.bm25 import cached_topk_local, raw_postings_cache
-from ..operators.fuzzy import dictionary_bloom, fuzzy_candidate_probe
+from ..operators.fuzzy import FuzzyQueries, dictionary_bloom, expand_terms
 from ..operators.postings import CorpusStats, build_postings, term_doc_freq
 from ..operators.similarity import (
     ANN_KINDS,
@@ -46,6 +47,15 @@ from ..sources.tables import local_frame
 from .wand import batch_topk_local, query_terms
 
 _SPEC_GROUP_SEQ = itertools.count()
+
+# the result frames' schemas, built once: a DDL string is parsed through
+# the JVM (``StructType.fromDDL``) on every call
+SEARCH_SCHEMA = StructType().add("doc_id", LongType()).add("score", DoubleType())
+SEARCH_MANY_SCHEMA = (
+    StructType().add("query_id", LongType()).add("doc_id", LongType())
+    .add("score", DoubleType()).add("rank", IntegerType())
+)
+VECTOR_STAGE_SCHEMA = StructType([*SEARCH_SCHEMA.fields]).add("cos_sim", DoubleType())
 
 
 @dataclass
@@ -532,8 +542,8 @@ class HybridSearchPlan:
     # was costing 1.7-1.9 s of Spark job floors per batch under stage
     # contention at 960k (round-6 profile).  Above it (a web-scale term
     # dictionary does not fit one process) the plan keeps a Bloom filter of
-    # the dictionary for AC pruning and fetches fuzzy candidates through one
-    # narrow filter job (operators.fuzzy.fuzzy_candidate_probe).
+    # the dictionary for AC pruning, and the fuzzy scoring job finds and
+    # weights its own candidates (``_fuzzy_leg``).
     driver_expansion_max_terms = 50_000
 
     def _driver_dictionary(self) -> list[str] | None:
@@ -570,59 +580,6 @@ class HybridSearchPlan:
             return None
         return self._driver_dict_set
 
-    def _expand_terms_driver(
-        self, qids: list[int], qtext: dict[int, str], opts: SearchOpts,
-        dict_terms: list[str],
-    ) -> list[dict]:
-        """The fuzzy expansion → rows (query_id, term, term_weight): per
-        distinct query term, the ``dict_terms`` within ``fuzzy_max_edits``
-        in its prefix bucket (``fuzzy_term_candidates``' ``q[:2]``), capped
-        at ``fuzzy_max_expansions`` by (edit asc, term asc), weighted by
-        edit ratio; a term reached from several query terms keeps its best
-        weight.  ``dict_terms`` is the whole dictionary or any superset of
-        the candidates (``_expand_terms_batch``) — the rows are the same.
-        Pinned against ``fuzzy_term_candidates`` by
-        tests/test_hybrid_batch.py."""
-        buckets: dict[str, list[str]] = {}
-        buckets1: dict[str, list[str]] = {}
-        for t in dict_terms:
-            buckets.setdefault(t[:2], []).append(t)
-            buckets1.setdefault(t[:1], []).append(t)
-
-        def lev(a: str, b: str) -> int:
-            if len(a) < len(b):
-                a, b = b, a
-            prev = list(range(len(b) + 1))
-            for i, ca in enumerate(a, 1):
-                cur = [i]
-                for j, cb in enumerate(b, 1):
-                    cur.append(
-                        min(prev[j] + 1, cur[j - 1] + 1,
-                            prev[j - 1] + (ca != cb))
-                    )
-                prev = cur
-            return prev[-1]
-
-        out: dict[tuple[int, str], float] = {}
-        for qid in qids:
-            for qt in dict.fromkeys(query_terms(qtext[qid])):
-                plen = min(len(qt), 2)
-                cand = (buckets if plen == 2 else buckets1).get(qt[:plen], [])
-                scored = sorted(
-                    (d, term)
-                    for term in cand
-                    if (d := lev(term, qt)) <= opts.fuzzy_max_edits
-                )
-                for d, term in scored[: opts.fuzzy_max_expansions]:
-                    w = 1.0 - d / max(len(term), len(qt))
-                    key = (qid, term)
-                    if key not in out or w > out[key]:
-                        out[key] = w
-        return [
-            {"query_id": q, "term": t, "term_weight": w}
-            for (q, t), w in out.items()
-        ]
-
     def close(self) -> None:
         """Release the plan's persisted frames (the lexical caches, the
         dictionary, the vector caches).  Results already returned by
@@ -657,24 +614,52 @@ class HybridSearchPlan:
                 (r["doc_id"], r["score"], r["cos_sim"])
                 for r in self._vector_stage_batch([0], {0: query}, opts)[0]
             ],
-            "doc_id long, score double, cos_sim double",
+            VECTOR_STAGE_SCHEMA,
         )
 
-    def _expand_terms_batch(
-        self, qids: list[int], qtext: dict[int, str], opts: SearchOpts
-    ) -> list[dict]:
-        """Fuzzy dictionary expansion for a query set → rows (query_id,
-        term, term_weight), through ``_expand_terms_driver`` over the
-        in-RAM dictionary — or, above the cap, over the candidates one
-        narrow probe job fetches for all the set's query terms."""
+    def _fuzzy_leg(
+        self, qids: list[int], qtext: dict[int, str], opts: SearchOpts, off: int = 0
+    ) -> tuple[list[tuple[int, str, float]] | None, FuzzyQueries | None, str]:
+        """The fuzzy stage of ``qids`` (ids shifted by ``off``) as
+        ``_lexical_tops`` inputs → (override, fuzzy, how).  Below the
+        dictionary cap: the driver's ``expand_terms`` rows as override
+        triples (how = "driver").  Above it: a ``FuzzyQueries`` the job's
+        tasks expand themselves, finished by ``_rescore_capped`` (how =
+        "in_job").  None where there is nothing to score."""
+        qterms = [(q + off, tuple(dict.fromkeys(query_terms(qtext[q])))) for q in qids]
         dict_terms = self._driver_dictionary()
         if dict_terms is None:
-            dict_terms = fuzzy_candidate_probe(
-                self._expansion_dictionary(),
-                (t for qid in qids for t in query_terms(qtext[qid])),
-                opts.fuzzy_max_edits,
+            qterms = tuple((q, ts) for q, ts in qterms if ts)
+            fuzzy = (
+                FuzzyQueries(qterms, opts.fuzzy_max_edits, opts.fuzzy_max_expansions)
+                if qterms
+                else None
             )
-        return self._expand_terms_driver(qids, qtext, opts, dict_terms)
+            return None, fuzzy, "in_job"
+        weights, _ = expand_terms(
+            qterms, dict_terms, opts.fuzzy_max_edits, opts.fuzzy_max_expansions
+        )
+        return [(q, t, w) for (q, t), w in weights.items()] or None, None, "driver"
+
+    def _rescore_capped(
+        self, fuzzy: FuzzyQueries, seen: set[str], targets: list[int], off: int, k: int
+    ) -> dict[int, list[tuple[int, float]]]:
+        """Finish an in-job expansion → the re-scored top-k (doc_id, score)
+        of the ``targets`` (ids shifted by ``off``) whose cap binds.
+        ``seen``, the tasks' term reports, holds every candidate, so
+        ``fuzzy.expand(seen)`` is the dictionary-wide capped expansion.  A
+        query none of whose terms has more than ``max_expansions``
+        candidates was capped in no task, so the job's rows stand; the
+        others are scored again at their capped expansion (one more job)."""
+        weights, bound = fuzzy.expand(seen)
+        redo = bound & {q + off for q in targets}
+        if not redo:
+            return {}
+        override = [(q, t, w) for (q, t), w in weights.items() if q in redo]
+        rows: dict[int, list[tuple[int, float]]] = {q - off: [] for q in redo}
+        for q, doc, sc in self._lexical_tops([], k, override)[0]:
+            rows[q - off].append((doc, sc))
+        return rows
 
     def _lexical_tops(
         self,
@@ -682,65 +667,60 @@ class HybridSearchPlan:
         k: int,
         override: list[tuple[int, str, float]] | None = None,
         msm: int | str = 1,
-    ) -> list[tuple[int, int, float]]:
+        fuzzy: FuzzyQueries | None = None,
+    ) -> tuple[list[tuple[int, int, float]], set[str]]:
         """Every lexical stage's scoring: ONE job over the plan's standing
-        lexical caches → each query id's exact top-k (query_id, doc_id,
-        score) over base ∪ delta.  ``entries`` are tokenized (the AC
-        stage, ``msm`` its minimum_should_match); ``override`` adds
-        weighted (query_id, term, weight) ids (the fuzzy stage, fused into
-        the same job when both are given — ``operators.bm25.
-        batch_query_terms``).  Each cache — the base (the pre-grouped
-        compressed index, or the raw postings ⋈ df cache) and, while
-        attached, the delta's raw cache — is scored in place under its own
-        corpus statistics (the reference overlay semantics); the job
-        collects their task-local tops, and the driver keeps the best score
-        per (query, doc) and each query's k, so the job plans no
+        lexical caches → (each query id's exact top-k (query_id, doc_id,
+        score) over base ∪ delta, the terms ``fuzzy``'s tasks reported).
+        ``entries`` are tokenized (the AC stage, ``msm`` its
+        minimum_should_match); ``override`` adds weighted (query_id, term,
+        weight) ids and ``fuzzy`` ids the tasks expand themselves (the
+        fuzzy stage, fused into the same job when given with entries —
+        ``operators.bm25.batch_query_terms``).  Each cache — the base (the
+        pre-grouped compressed index, or the raw postings ⋈ df cache) and,
+        while attached, the delta's raw cache — is scored in place under
+        its own corpus statistics (the reference overlay semantics); the
+        job collects their task-local tops, and the driver keeps the best
+        score per (query, doc) and each query's k, so the job plans no
         exchange."""
+        cols = ["query_id", "doc_id", "score"] + (["term"] if fuzzy else [])
         local = None
         for score in (self._score_base, self._score_delta):
             if score is None:
                 continue
             part = score(
                 entries, k=k, query_terms_override=override,
-                min_should_match=msm,
-            ).select("query_id", "doc_id", "score")
+                min_should_match=msm, fuzzy=fuzzy,
+            ).select(*cols)
             local = part if local is None else local.unionByName(part)
         best: dict[tuple[int, int], float] = {}
-        for q, doc, sc in local.collect():
-            if (q, doc) not in best or sc > best[(q, doc)]:
+        seen: set[str] = set()
+        for q, doc, sc, *term in local.collect():
+            if term and term[0] is not None:
+                seen.add(term[0])
+            elif (q, doc) not in best or sc > best[(q, doc)]:
                 best[(q, doc)] = sc
-        return merge_local_topk(((q, d, s) for (q, d), s in best.items()), k)
+        return merge_local_topk(((q, d, s) for (q, d), s in best.items()), k), seen
 
     def _fuzzy_tops(
-        self,
-        targets: list[int],
-        qtext: dict[int, str],
-        opts: SearchOpts,
-        expanded: list[dict] | None = None,
-        cancel=None,
-    ) -> dict[int, list[tuple[int, float]]]:
-        """Stage 2 for a query set → per query id its top-k (doc_id,
-        score): the fuzzy expansion (``expanded``, when a speculative
-        expansion already produced it), each expanded term scored at its
-        edit-ratio weight through ``_lexical_tops``.  ``cancel``: an
-        abandoned speculation submits no job once it is set."""
+        self, targets: list[int], qtext: dict[int, str], opts: SearchOpts
+    ) -> tuple[dict[int, list[tuple[int, float]]], str, int]:
+        """Stage 2 for a query set → (per query id its top-k (doc_id,
+        score), how the expansion was served, the number of queries
+        re-scored): one ``_lexical_tops`` job over the ``_fuzzy_leg``,
+        each expanded term scored at its edit-ratio weight; above the cap,
+        a second job only for queries whose expansion cap binds."""
         rows: dict[int, list[tuple[int, float]]] = {q: [] for q in targets}
-        if not targets:
-            return rows
-        if expanded is None:
-            expanded = self._expand_terms_batch(targets, qtext, opts)
-        if cancel is not None and cancel.is_set():
-            return rows
-        tset = set(targets)
-        override = [
-            (r["query_id"], r["term"], float(r["term_weight"]))
-            for r in expanded
-            if r["query_id"] in tset
-        ]
-        if override:
-            for q, doc, sc in self._lexical_tops([], opts.top_k, override=override):
+        override, fuzzy, how = self._fuzzy_leg(targets, qtext, opts)
+        redo = {}
+        if override or fuzzy:
+            tops, seen = self._lexical_tops([], opts.top_k, override, fuzzy=fuzzy)
+            for q, doc, sc in tops:
                 rows[q].append((doc, sc))
-        return rows
+            if fuzzy is not None:
+                redo = self._rescore_capped(fuzzy, seen, targets, 0, opts.top_k)
+                rows.update(redo)
+        return rows, how, len(redo)
 
     # -- batched vector leg ---------------------------------------------
 
@@ -834,9 +814,12 @@ class HybridSearchPlan:
         self, query: str, opts: SearchOpts | None = None
     ) -> tuple[DataFrame, list[SearchTraceStep]]:
         """Run the adaptive ladder on one query → (results (doc_id, score),
-        trace): ``search_many``'s ladder on a batch of one."""
+        trace): ``search_many``'s ladder on a batch of one.  The FUZZY
+        step's meta records how the expansion was served ("driver": the
+        in-RAM dictionary; "in_job": the scoring job's own tasks) and
+        whether the capped re-score ran."""
         opts = opts or SearchOpts()
-        tops, stages, escalating, ms = self._ladder([(0, query)], opts)
+        tops, stages, escalating, ms, fuzzy_how = self._ladder([(0, query)], opts)
         top, use_vector = tops[0]
 
         def step(name: str, scores: list[float], took: str, meta=None):
@@ -847,7 +830,12 @@ class HybridSearchPlan:
         ac = step("AC", [s for _, s in stages["AC"][0]], "ac_ms")
         trace = [ac]
         if escalating:
-            trace.append(step("FUZZY", [s for _, s in stages["FUZZY"][0]], "fuzzy_ms"))
+            trace.append(
+                step(
+                    "FUZZY", [s for _, s in stages["FUZZY"][0]], "fuzzy_ms",
+                    {"expansion": fuzzy_how, "rescored": ms["fuzzy_rescored"] > 0},
+                )
+            )
             if self._have_vectors:
                 trace.append(
                     step(
@@ -865,7 +853,7 @@ class HybridSearchPlan:
         result = local_frame(
             self.docs.sparkSession,
             [{"doc_id": d, "score": s} for d, s in top],
-            "doc_id long, score double",
+            SEARCH_SCHEMA,
         )
         return result, trace
 
@@ -874,15 +862,17 @@ class HybridSearchPlan:
     ) -> tuple[DataFrame, dict[int, dict]]:
         """The whole query set through the adaptive ladder in a BOUNDED number
         of Spark jobs (the reference's msearch shape, S7) instead of ~6 jobs
-        per query.  On an indexed plan with an in-RAM dictionary and an
-        IVF vector index that is TWO jobs, neither with an exchange: the
-        fused AC+fuzzy scoring job and the vector probe that reranks inside
-        its tasks; both collect task-local tops the driver merges.
-        ``search()`` is this ladder on a batch of one; returns ((query_id,
-        doc_id, score, rank), {query_id: meta}), and publishes the call's
-        per-stage wall times as ``self.last_batch_trace``."""
+        per query.  On an indexed plan with an IVF vector index that is TWO
+        jobs, neither with an exchange: the fused AC+fuzzy scoring job and
+        the vector probe that reranks inside its tasks; both collect
+        task-local tops the driver merges.  Above the in-RAM dictionary
+        cap, a query whose fuzzy expansion cap binds costs one re-score
+        job more.  ``search()`` is this ladder on a batch of one; returns
+        ((query_id, doc_id, score, rank), {query_id: meta}), and publishes
+        the call's per-stage wall times, and ``fuzzy_rescored`` (how many
+        queries the capped re-score served), as ``self.last_batch_trace``."""
         opts = opts or SearchOpts()
-        tops, _, escalating, ms = self._ladder(queries, opts)
+        tops, _, escalating, ms, _ = self._ladder(queries, opts)
         eset = set(escalating)
         out_rows = []
         meta: dict[int, dict] = {}
@@ -894,30 +884,29 @@ class HybridSearchPlan:
                 )
             meta[qid] = {"escalated": qid in eset, "vector_fallback_used": use_vector}
         self.last_batch_trace = ms
-        result = local_frame(
-            self.docs.sparkSession,
-            out_rows, "query_id long, doc_id long, score double, rank int"
-        )
+        result = local_frame(self.docs.sparkSession, out_rows, SEARCH_MANY_SCHEMA)
         return result, meta
 
     def _ladder(self, queries: list[tuple[int, str]], opts: SearchOpts):
         """The ladder for a query set → (per query id (top-k (doc_id,
         score), vector used), per stage name the per-query-id stage rows,
-        the escalating query ids, per-stage wall times in ms).
+        the escalating query ids, per-stage wall times in ms with the
+        ``fuzzy_rescored`` count, how the fuzzy expansion was served or
+        None).
 
         Speculation only when the set holds more than one query: then the
-        fuzzy expansion — and with it the fuzzy scoring — and, on an
-        ANN-served plan, the vector probe depend on the query texts only,
-        not on the AC outcome, so they run for ALL queries beside the AC
-        job and are kept for the escalating subset afterwards (per-query
-        results are independent, so the rows are identical).  With the
-        in-RAM dictionary the expansion is driver-only (~ms) and the fuzzy
-        scoring rides in the AC job itself (disjoint query-id spaces).  A
-        single query stays lazy: it builds no expansion and no driver
-        dictionary before AC and fuses nothing, so a strong query is one
-        job — speculating it cost a strong ``single_zipf`` query 910 ms
-        instead of 237.  The brute-force vector fallback is never
-        speculated: it scans the corpus."""
+        fuzzy stage and, on an ANN-served plan, the vector probe depend on
+        the query texts only, not on the AC outcome, so they run for ALL
+        queries beside the AC job and are kept for the escalating subset
+        afterwards (per-query results are independent, so the rows are
+        identical).  The fuzzy scoring rides in the AC job itself (disjoint
+        query-id spaces): with the in-RAM dictionary as the driver's
+        expansion (~ms), above the cap as ids the job's tasks expand over
+        the candidate rows they read.  A single query stays lazy: it builds
+        no expansion and no driver dictionary before AC and fuses nothing,
+        so a strong query is one job — speculating it cost a strong
+        ``single_zipf`` query 910 ms instead of 237.  The brute-force vector
+        fallback is never speculated: it scans the corpus."""
         import threading
         import time
 
@@ -935,12 +924,6 @@ class HybridSearchPlan:
         qtext = dict(queries)
         qids = [qid for qid, _ in queries]
         speculate = opts.enable_escalation and len(queries) > 1
-        fuse_lex = speculate and self._driver_dictionary() is not None
-        expanded: list = []
-        if fuse_lex:
-            t_exp = time.monotonic()
-            expanded = self._expand_terms_batch(qids, qtext, opts)
-            trace["expansion_ms"] = (time.monotonic() - t_exp) * 1000
 
         # a speculative stage runs under its OWN job group (job groups are
         # thread-local, and it has its own thread) so an abandoned one can
@@ -962,21 +945,6 @@ class HybridSearchPlan:
             return _Async(_timed_into(trace, f"{name}_ms", run, lock=trace_lock))
 
         fz_fut = vec_fut = None
-        if speculate and not fuse_lex:
-            # above the in-RAM cap the expansion is one candidate-probe job
-            exp_fut = _Async(
-                _timed_into(
-                    trace, "expansion_ms",
-                    lambda: self._expand_terms_batch(qids, qtext, opts),
-                    lock=trace_lock,
-                )
-            )
-            fz_fut = speculative(
-                "fuzzy",
-                lambda: self._fuzzy_tops(
-                    qids, qtext, opts, exp_fut.result(), spec_cancel
-                ),
-            )
         if speculate and self.ann_index_dir is not None:
             vec_fut = speculative(
                 "vector",
@@ -996,6 +964,17 @@ class HybridSearchPlan:
                 entries.append((next_id, folded))
                 variant_of[next_id] = qid
                 next_id += 1
+        max_entry = max((q for q, _ in entries), default=0)
+        # the speculative fuzzy leg: its ids ride above every entry id
+        # (shifted past negative query ids too), so the fused job's rows
+        # split back
+        override = fuzzy = fuzzy_how = None
+        fz_off = 0
+        if speculate:
+            t_exp = time.monotonic()
+            fz_off = max_entry + 1 - min(0, min(qids))
+            override, fuzzy, fuzzy_how = self._fuzzy_leg(qids, qtext, opts, fz_off)
+            trace["expansion_ms"] = (time.monotonic() - t_exp) * 1000
         # driver-dictionary pruning, once the dictionary view exists: an
         # entry with no dictionary-present term — or an unattainable
         # resolved minimum_should_match — has no postings anywhere, so it
@@ -1014,25 +993,15 @@ class HybridSearchPlan:
                 ) <= present
 
             run_entries = [e for e in entries if _runnable(e[1])]
-        max_entry = max((q for q, _ in entries), default=0)
-        override = None
-        fz_off = 0
-        if expanded:
-            # fuzzy ids ride above every entry id (shifted past negative
-            # query ids too), so the fused job's rows split back
-            fz_off = max_entry + 1 - min(0, min(qids))
-            override = [
-                (r["query_id"] + fz_off, r["term"], float(r["term_weight"]))
-                for r in expanded
-            ]
-        lex = (
+        lex, seen = (
             self._lexical_tops(
                 run_entries, k, override,
-                # override-only: msm is moot (and rejected by contract)
+                # fuzzy-only: msm is moot (and rejected by contract)
                 opts.min_should_match if run_entries else 1,
+                fuzzy,
             )
-            if run_entries or override
-            else []
+            if run_entries or override or fuzzy
+            else ([], set())
         )
         entry_rows: dict[int, list[tuple[int, float]]] = {q: [] for q, _ in entries}
         fused_fz: dict[int, list[tuple[int, float]]] = {q: [] for q in qids}
@@ -1084,8 +1053,20 @@ class HybridSearchPlan:
             )
         fz_rows: dict[int, list[tuple[int, float]]] = {}
         vec_rows: dict[int, list[dict]] = {}
+        rescored = 0
         if escalating:
-            fz_all = fused_fz if fz_fut is None else fz_fut.result()
+            if fz_fut is not None:
+                fz_all, fuzzy_how, rescored = fz_fut.result()
+            else:
+                fz_all = fused_fz
+                if fuzzy is not None:
+                    # the escalating queries whose expansion cap bound in
+                    # the fused job, scored again at their capped expansion
+                    t_fz = time.monotonic()
+                    redo = self._rescore_capped(fuzzy, seen, escalating, fz_off, k)
+                    trace["fuzzy_ms"] = (time.monotonic() - t_fz) * 1000
+                    fz_all.update(redo)
+                    rescored = len(redo)
             fz_rows = {q: fz_all.get(q, []) for q in escalating}
             if vec_fut is not None:
                 vec_all = vec_fut.result()
@@ -1103,10 +1084,11 @@ class HybridSearchPlan:
             for qid in qids
         }
         with trace_lock:
+            trace["fuzzy_rescored"] = rescored
             trace["total_ms"] = (time.monotonic() - t_start) * 1000
             ms = {
                 name: v for name, v in trace.items()
                 if escalating or name.removesuffix("_ms") not in spec_groups
             }
         stages = {"AC": ac_rows, "FUZZY": fz_rows, "SEMANTIC": vec_rows}
-        return tops, stages, escalating, ms
+        return tops, stages, escalating, ms, fuzzy_how

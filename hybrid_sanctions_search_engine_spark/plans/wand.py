@@ -45,6 +45,7 @@ from pyspark.sql.types import (
 from ..functions.tokenize import py_index_tokens
 from ..operators.bm25 import (
     BATCH_SCORE_SCHEMA,
+    FUZZY_SCORE_SCHEMA,
     es_min_should_match,
     group_partitioned,
     make_batch_group_scorer,
@@ -333,6 +334,7 @@ def batch_topk_local(
     query_terms_override: list[tuple[int, str, float]] | None = None,
     min_should_match: int | str = 1,
     pre_grouped: bool = False,
+    fuzzy=None,
 ) -> DataFrame:
     """Many queries' task-local top-k over the COMPRESSED index (the
     serving shape ``operators.bm25.batch_topk`` provides over raw
@@ -361,7 +363,10 @@ def batch_topk_local(
     ``query_terms_override`` / ``min_should_match``: explicit weighted
     (query_id, term, weight) triples beside or instead of the tokenized
     ``queries``, and the ES minimum_should_match of the tokenized ones
-    (``operators.bm25.batch_query_terms`` holds the rules).
+    (``operators.bm25.batch_query_terms`` holds the rules).  ``fuzzy``
+    (``operators.fuzzy.FuzzyQueries``) adds query ids the scoring tasks
+    expand themselves over the candidate rows they read; the output then
+    also carries their term reports (``FUZZY_SCORE_SCHEMA``).
 
     ``pre_grouped``: every partition of ``index_df`` holds whole chunks (a
     standing plan caches its index on ``pmod(chunk, batch_n_groups(…))``,
@@ -373,30 +378,35 @@ def batch_topk_local(
 
     if index_df is None or meta is None:
         index_df, meta = load_index(spark, index_dir)
-    spec = batch_query_terms(queries, query_terms_override, min_should_match)
+    schema = BATCH_SCORE_SCHEMA if fuzzy is None else FUZZY_SCORE_SCHEMA
+    spec = batch_query_terms(queries, query_terms_override, min_should_match, fuzzy)
     if spec is None:
-        return local_frame(spark, [], BATCH_SCORE_SCHEMA)
+        return local_frame(spark, [], schema)
     qid_list, term_to_qidx, msm_arr = spec
-    all_terms = sorted(term_to_qidx)
-    shard_of = _shard_of_terms(all_terms, meta.n_shards)
-    shards = sorted(set(shard_of.values()))
-    matched = index_df.where(
-        F.col("shard").isin(shards) & F.col("term").isin(all_terms)
-    ).select(*SCORE_COLS)
+    # the exact terms' rows, pruned to their shards, and fuzzy's candidates
+    cond = None
+    if term_to_qidx:
+        all_terms = sorted(term_to_qidx)
+        shards = sorted(set(_shard_of_terms(all_terms, meta.n_shards).values()))
+        cond = F.col("shard").isin(shards) & F.col("term").isin(all_terms)
+    if fuzzy is not None:
+        fz = fuzzy.candidate_filter()
+        cond = fz if cond is None else cond | fz
+    matched = index_df.where(cond).select(*SCORE_COLS)
     score_group = make_batch_group_scorer(
         term_to_qidx, qid_list, meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
         flatten=lambda pdf: decode_shard_arrays(pdf, include_df=True),
-        min_match_per_qidx=msm_arr,
+        min_match_per_qidx=msm_arr, fuzzy=fuzzy,
     )
     if pre_grouped:
-        return topk_pre_grouped(matched, score_group, k)
+        return topk_pre_grouped(matched, score_group, k, schema)
     if n_groups is None:
         n_groups = batch_n_groups(spark, meta)
     grp_key = F.pmod(F.col("chunk"), F.lit(n_groups))
     return (
         group_partitioned(matched, grp_key, n_groups)
         .groupBy(grp_key.alias("grp"))
-        .applyInPandas(score_group, BATCH_SCORE_SCHEMA)
+        .applyInPandas(score_group, schema)
     )
 
 

@@ -160,3 +160,48 @@ def test_term_bloom_built_on_workers_matches_driver(spark):
     bloom_add(want, terms, bloom.m)
     assert np.array_equal(bloom.bits, want)
     assert all(t in bloom for t in terms)
+
+
+def test_expansion_over_task_subsets_is_exact_until_the_cap_binds():
+    """The in-job fuzzy stage's argument, Spark-free: each scoring task
+    runs ``expand_terms`` over the terms it read, a subset of the
+    dictionary.  For every query the full-dictionary expansion does not
+    report as capped, each task's rows are the full expansion's rows for
+    that task's terms, weights bit-equal, and the tasks together give
+    all of them; over the union of the tasks' terms the driver gets the
+    full-dictionary result back, capped queries included."""
+    import random
+
+    from hybrid_sanctions_search_engine_spark.operators.fuzzy import expand_terms
+
+    rng = random.Random(5)
+    alpha = "abcdé"
+    n_capped = 0
+    for _ in range(200):
+        words = sorted({
+            "".join(rng.choice(alpha) for _ in range(rng.randint(1, 5)))
+            for _ in range(rng.randint(5, 120))
+        })
+        queries = [
+            (qid, ["".join(rng.choice(alpha + "f") for _ in range(rng.randint(1, 4)))
+                   for _ in range(rng.randint(1, 3))])
+            for qid in range(4)
+        ]
+        cap = rng.choice([1, 2, 20])
+        full, capped = expand_terms(queries, words, 1, cap)
+        n_capped += bool(capped)
+        tasks = [[] for _ in range(3)]
+        for w in words:
+            tasks[rng.randrange(3)].append(w)
+        seen = set()
+        merged: dict = {}
+        for terms in tasks:
+            local, _ = expand_terms(queries, terms, 1, cap)
+            seen.update(terms)
+            for (q, t), wt in local.items():
+                if q not in capped:
+                    assert full[(q, t)] == wt
+                    merged[(q, t)] = wt
+        assert merged == {k: v for k, v in full.items() if k[0] not in capped}
+        assert expand_terms(queries, seen, 1, cap) == (full, capped)
+    assert n_capped > 20  # the cap binds in a good share of the cases

@@ -1,9 +1,8 @@
 """Batched msearch ladder (`search_many`) ≡ per-query `search()`.
 
 The batched path runs the whole query set through the adaptive ladder in a
-bounded number of Spark jobs (one AC batch, one fuzzy expansion + one fuzzy
-scoring, one vector batch); per-query semantics must be IDENTICAL to the
-sequential ladder — same stage formulas, same gating, same boosts, same
+bounded number of Spark jobs (one fused AC+fuzzy batch, one vector batch);
+per-query semantics must be IDENTICAL to the sequential ladder — same stage formulas, same gating, same boosts, same
 tie-breaks.
 """
 
@@ -279,13 +278,19 @@ def _reference_expansion(plan, queries, opts) -> set:
 
 
 def test_driver_expansion_twin_of_spark_path(spark, corpus):
-    """The fuzzy expansion is one driver function fed the in-RAM dictionary
-    below ``driver_expansion_max_terms`` and the candidate probe's terms
-    above it.  Both sides of the cap must give EXACTLY the rows of
+    """The fuzzy expansion is one function, ``expand_terms``.  Below
+    ``driver_expansion_max_terms`` the driver runs it over the in-RAM
+    dictionary; above it the scoring job's tasks run it over the candidate
+    rows they read and report those terms, and the driver runs it again
+    over their union.  Both sides must give EXACTLY the rows of
     ``fuzzy_term_candidates`` run per query term — same candidates, same
     caps (also when ``fuzzy_max_expansions`` = 1 binds), same weights to
-    the last bit — and ``search()`` / ``search_many()`` the same results,
-    or a plan crossing the cap would silently change its answers."""
+    the last bit.  ``search()`` / ``search_many()`` must serve the same
+    results on both sides of the dictionary cap, at both expansion caps and
+    both minimum_should_match settings, or a plan crossing the cap would
+    silently change its answers.  Above the dictionary cap, a query whose
+    expansion cap binds is served by the re-score; one that does not bind
+    is served by the one job alone."""
     docs, _ = corpus
     dense_docs, dense_queries = _dense_word_docs(spark, seed=11)
     extra = [(6, "s qurey sparc sparc")]  # a 1-char and a duplicate term
@@ -293,42 +298,52 @@ def test_driver_expansion_twin_of_spark_path(spark, corpus):
         (HybridSearchPlan(docs), QUERIES + extra),
         (HybridSearchPlan(dense_docs), dense_queries),
     ]
-    as_set = lambda rows: {
-        (r["query_id"], r["term"], r["term_weight"]) for r in rows
-    }
 
     def expansions(plan, queries, opts, cap):
         plan.driver_expansion_max_terms = cap
         plan._driver_dict = ...
-        rows = plan._expand_terms_batch(
+        override, fuzzy, how = plan._fuzzy_leg(
             [q for q, _ in queries], dict(queries), opts
         )
-        assert (plan._driver_dictionary() is None) == (cap == 0)
-        return as_set(rows)
+        if cap == 0:
+            assert (override, how) == (None, "in_job")
+            # the terms the scoring job's tasks reported, expanded again
+            _, seen = plan._lexical_tops([], opts.top_k, fuzzy=fuzzy)
+            return {(q, t, w) for (q, t), w in fuzzy.expand(seen)[0].items()}
+        assert (fuzzy, how) == (None, "driver")
+        return set(override)
 
-    def served(plan, queries, cap):
+    def served(plan, queries, cap, max_expansions):
+        """Every result row; each batch's re-scored query count; per single
+        call, (query id, how its expansion was served, re-scored)."""
         plan.driver_expansion_max_terms = cap
         plan._driver_dict = ...
         plan._driver_dictionary()
-        out = []
+        out, batches, singles = [], [], []
         for msm in (1, "75%"):
-            opts = SearchOpts(top_k=5, min_should_match=msm)
+            # every query escalates, so each call runs its fuzzy stage
+            opts = SearchOpts(
+                top_k=5, min_should_match=msm, escalation_threshold=1e9,
+                fuzzy_max_expansions=max_expansions,
+            )
             out.append(sorted(
                 tuple(r) for r in plan.search_many(queries, opts)[0].collect()
             ))
-            out += [
-                [tuple(r) for r in plan.search(text, opts)[0].collect()]
-                for _, text in queries
-            ]
-        return out
+            batches.append(plan.last_batch_trace["fuzzy_rescored"])
+            for qid, text in queries:
+                res, trace = plan.search(text, opts)
+                out.append([tuple(r) for r in res.collect()])
+                fz = next(t for t in trace if t.stage == "FUZZY")
+                singles.append((qid, fz.meta["expansion"], fz.meta["rescored"]))
+        return out, batches, singles
 
     try:
         for plan, queries in cases:
             rows = []
             for opts in (SearchOpts(), SearchOpts(fuzzy_max_expansions=1)):
                 in_ram = expansions(plan, queries, opts, cap=50_000)
-                probed = expansions(plan, queries, opts, cap=0)
-                assert in_ram == probed == _reference_expansion(plan, queries, opts)
+                in_job = expansions(plan, queries, opts, cap=0)
+                assert in_ram == in_job == _reference_expansion(plan, queries, opts)
                 rows.append(in_ram)
             assert rows[0]  # non-trivial comparison
         # on the dense dictionary the 1-char query term "e" expands through
@@ -336,9 +351,27 @@ def test_driver_expansion_twin_of_spark_path(spark, corpus):
         one_char = [{t for q, t, _ in r if q == 9} for r in rows]
         assert len(one_char[0]) > 1 and len(one_char[1]) == 1
         assert len(rows[0]) > len(rows[1])
-        plan, queries = cases[0]
-        assert served(plan, queries, 50_000) == served(plan, queries, 0)
-        assert isinstance(plan._dict_present_set(), TermBloom)
+
+        for plan, queries in cases:
+            for max_expansions in (20, 1):
+                in_ram, ram_batches, ram_singles = served(
+                    plan, queries, 50_000, max_expansions
+                )
+                in_job, job_batches, job_singles = served(
+                    plan, queries, 0, max_expansions
+                )
+                assert in_ram == in_job, (queries, max_expansions)
+                assert {h[1:] for h in ram_singles} == {("driver", False)}
+                assert set(ram_batches) == {0}
+                assert {h[1] for h in job_singles} == {"in_job"}
+                rescored = {q for q, _, redo in job_singles if redo}
+                if plan is cases[1][0] and max_expansions == 1:
+                    # "e" has more candidates than the cap: the re-score
+                    # serves it, alone and in the batch
+                    assert 9 in rescored and min(job_batches) > 0, job_singles
+                if max_expansions == 20:
+                    assert not rescored and set(job_batches) == {0}
+        assert isinstance(cases[0][0]._dict_present_set(), TermBloom)
     finally:
         for plan, _ in cases:
             plan.close()

@@ -180,7 +180,7 @@ def test_strong_search_runs_one_job(spark, plan, ivf_index_plan, shape, monkeypa
     """A strong single ``search()`` is the ladder on a batch of one, which
     never speculates: exactly 1 job, the in-place AC scoring, on an indexed
     plan, on a no-index plan, and above the in-RAM dictionary cap — where
-    it builds no Bloom filter and runs no candidate probe."""
+    it builds no Bloom filter and runs no fuzzy job."""
     target = plan if shape == "no-index" else ivf_index_plan
     opts = SearchOpts(top_k=5)
     query = "spark query join window"
@@ -228,14 +228,10 @@ def test_fresh_plan_first_batch_scores_in_place(
         fresh.close()
 
 
-def test_typo_search_above_cap_runs_probe_and_scoring_only(
-    spark, tmp_path_factory, sf_smoke_dir, monkeypatch
-):
-    """Above the in-RAM dictionary cap, with the Bloom filter built, an
-    escalated typo'd ``search()`` runs exactly 2 jobs: the fuzzy candidate
-    probe — one narrow filter over the cached dictionary, no exchange — and
-    the in-place fuzzy scoring.  The AC stage submits none."""
-    from hybrid_sanctions_search_engine_spark.plans import hybrid
+@pytest.fixture(scope="module")
+def above_cap_plan(spark, sf_smoke_dir, tmp_path_factory):
+    """An indexed plan with no vector index, above its in-RAM dictionary
+    cap, its Bloom filter built."""
     from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
 
     docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
@@ -243,47 +239,59 @@ def test_typo_search_above_cap_runs_probe_and_scoring_only(
     build_index(docs, index_dir, n_shards=2, chunk_bits=7)
     plan = HybridSearchPlan(docs, index_dir=index_dir)
     plan.driver_expansion_max_terms = 0
+    assert plan._driver_dictionary() is None
+    yield plan
+    plan.close()
+
+
+def _assert_in_job_fuzzy_plan(plans: list[str]) -> None:
+    """One collect, whose plan filters the index cache's scan by the
+    fuzzy candidate predicate and plans no exchange."""
+    assert len(plans) == 1, plans
+    assert "levenshtein" in plans[0] and "InMemoryTableScan" in plans[0], plans
+    assert "Exchange" not in plans[0], plans
+
+
+def test_typo_search_above_cap_runs_one_job(spark, above_cap_plan, monkeypatch):
+    """Above the in-RAM dictionary cap, with the Bloom filter built, an
+    escalated typo'd ``search()`` runs exactly 1 job: the in-place fuzzy
+    scoring, whose tasks find and weight their own candidates — the
+    ``levenshtein`` candidate filter over the index cache's scan, no
+    exchange.  The AC stage submits none."""
+    plan = above_cap_plan
     query = "sparc qurey"
+    assert not any(t in plan._dict_present_set() for t in query.split())
+    plan.search(query, SearchOpts(top_k=5))  # fills the index cache
+    out = {}
+    n, plans, _ = _counted_inline(
+        spark, monkeypatch,
+        lambda: out.update(trace=plan.search(query, SearchOpts(top_k=5))[1]),
+    )
+    assert [t.stage for t in out["trace"]] == ["AC", "FUZZY", "HYBRID"]
+    assert out["trace"][1].hits > 0
+    assert out["trace"][1].meta == {"expansion": "in_job", "rescored": False}
+    assert n == 1, plans
+    _assert_in_job_fuzzy_plan(plans)
 
-    class Inline:
-        """``_Async`` on the calling thread, inside the job group."""
 
-        def __init__(self, fn):
-            self._out = fn()
-
-        def result(self):
-            return self._out
-
-    monkeypatch.setattr(hybrid, "_Async", Inline)
-    frame_cls = type(spark.range(1))
-    collect = frame_cls.collect
-    plans, columns = [], []
-
-    def spy(self):
-        plans.append(self._jdf.queryExecution().executedPlan().toString())
-        columns.append(self.columns)
-        return collect(self)
-
-    try:
-        assert plan._driver_dictionary() is None
-        assert not any(t in plan._dict_present_set() for t in query.split())
-        plan.search(query, SearchOpts(top_k=5))  # fills the index cache
-        monkeypatch.setattr(frame_cls, "collect", spy)
-        out = {}
-        n = _jobs_run_by(
-            spark, lambda: out.update(trace=plan.search(query, SearchOpts(top_k=5))[1])
-        )
-        monkeypatch.undo()
-        assert [t.stage for t in out["trace"]] == ["AC", "FUZZY", "HYBRID"]
-        assert out["trace"][1].hits > 0
-        assert n == 2
-        # the probe's plan above the cached dictionary (whose own lineage,
-        # the groupBy, ran once when the cache filled)
-        probe = [p.split("InMemoryRelation")[0] for p in plans if "levenshtein" in p]
-        assert len(probe) == 1, plans
-        assert "InMemoryTableScan" in probe[0] and "Exchange" not in probe[0], probe
-    finally:
-        plan.close()
+def test_typo_search_many_above_cap_runs_one_job(spark, above_cap_plan, monkeypatch):
+    """Above the in-RAM dictionary cap, an escalated ``search_many`` batch
+    on a plan with no vector index runs exactly 1 job: the AC entries and
+    every query's speculative fuzzy stage fused in one in-place scoring
+    job, its tasks expanding the fuzzy ids over the candidate rows they
+    read."""
+    plan = above_cap_plan
+    queries = [(1, "sparc qurey"), (2, "spark query join window"), (3, "merge sortt")]
+    opts = SearchOpts(top_k=5)
+    plan.search_many(queries, opts)  # fills the index cache
+    out = {}
+    n, plans, _ = _counted_inline(
+        spark, monkeypatch, lambda: out.update(meta=plan.search_many(queries, opts)[1])
+    )
+    assert out["meta"][1]["escalated"] and not out["meta"][2]["escalated"]
+    assert plan.last_batch_trace["fuzzy_rescored"] == 0
+    assert n == 1, plans
+    _assert_in_job_fuzzy_plan(plans)
 
 
 def _tagged_jobs(spark, fn) -> int:
