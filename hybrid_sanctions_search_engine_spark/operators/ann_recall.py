@@ -121,7 +121,7 @@ def reference_topk(
     ``fused_probe.fused_cell_probe_many``), then ranked by exact cosine."""
     import pyarrow.dataset as ds
 
-    from .similarity import local_topk, probe_queries
+    from .similarity import local_topk, probe_queries, row_cosines
 
     meta = _read_meta(index_dir, f"_{layout}_meta.json")
     cents = np.asarray(meta["centroids"], dtype=np.float64)
@@ -162,7 +162,7 @@ def reference_topk(
         if prepare is not None:
             s = score_masked(qi, codes[cand], cell[cand])
             cand = cand[local_topk(ids[cand], s, refine * k)]
-        cos = (x[cand] @ prep.qmat[qi]) / (norms[cand] * prep.qnorms[qi])
+        cos = row_cosines(x[cand], norms[cand], prep.qmat[qi], prep.qnorms[qi])
         top = local_topk(ids[cand], cos, k)
         out[qid] = (ids[cand][top], cos[top])
     return out

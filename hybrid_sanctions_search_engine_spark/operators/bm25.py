@@ -18,11 +18,15 @@ Scoring (Lucene BM25, the reference engine's default):
 
 from __future__ import annotations
 
+from dataclasses import dataclass
+from functools import partial
+from typing import Any
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StringType, StructType
 
-from ..sources.tables import local_frame
+from ..sources.tables import local_frame, serving_tasks
 from .postings import CorpusStats, build_postings, corpus_stats, doc_lengths
 from .similarity import local_topk
 
@@ -263,6 +267,23 @@ def group_partitioned(df: DataFrame, key, n: int) -> DataFrame:
     return df.repartition(n, key)
 
 
+@dataclass(frozen=True)
+class GroupScoreSpec:
+    """The inputs of a batch group scorer (``make_batch_group_scorer``)."""
+
+    term_to_qidx: dict
+    qid_list: list
+    n_docs: float
+    avgdl: float
+    k1: float
+    b: float
+    k: int
+    flatten: Any
+    target_acc_bytes: int
+    min_match_per_qidx: list | None
+    fuzzy: Any
+
+
 def make_batch_group_scorer(
     term_to_qidx: dict,
     qid_list: list[int],
@@ -289,9 +310,9 @@ def make_batch_group_scorer(
     62 s at 960k docs for 100 queries; this shape: ~4 s of numpy).
 
     ``flatten``: optional adapter from the group's rows to flat postings —
-    the compressed-index paths pass ``sources.index_io.decode_shard_arrays``
-    (a dict of arrays); raw (term, doc_id, tf, doc_len, df) posting frames
-    pass None.
+    the compressed-index paths pass ``partial(decode_shard_arrays,
+    include_df=True)`` (``sources.index_io``; a dict of arrays); raw
+    (term, doc_id, tf, doc_len, df) posting frames pass None.
 
     Memory is BOUNDED regardless of batch size: the dense accumulator is
     built per query-column BLOCK sized so 8 B × local docs × block ≤
@@ -307,156 +328,179 @@ def make_batch_group_scorer(
     edit-ratio weights beside ``term_to_qidx``, and reports the terms
     (``FUZZY_SCORE_SCHEMA``).  Until a query's cap binds, a term's weight
     depends on the term and the query alone, so the rows equal an
-    override of the driver-side expansion, bit for bit."""
+    override of the driver-side expansion, bit for bit.
+
+    The scorer is ``score_doc_group`` bound to a plain-data ``GroupScoreSpec``
+    by ``functools.partial``: cloudpickle ships a module-level function by
+    reference, where a nested closure is pickled by value on every job
+    (~15 ms of ``cloudpickle.dumps`` per lexical job, most of it in its
+    submodule scan)."""
+    return partial(
+        score_doc_group,
+        GroupScoreSpec(
+            term_to_qidx, list(qid_list), float(n_docs), float(avgdl), k1, b, k,
+            flatten, target_acc_bytes,
+            None if min_match_per_qidx is None else list(min_match_per_qidx),
+            fuzzy,
+        ),
+    )
+
+
+def _no_score_rows():
     import numpy as np
     import pandas as pd
 
-    qids_np = np.asarray(qid_list, dtype=np.int64)
-    nq = len(qid_list)
-    n_docs_f = float(n_docs)
-    kk = k
+    return pd.DataFrame(
+        {
+            "query_id": np.array([], dtype=np.int64),
+            "doc_id": np.array([], dtype=np.int64),
+            "score": np.array([], dtype=np.float64),
+            "n_terms_matched": np.array([], dtype=np.int32),
+        }
+    )
+
+
+def score_doc_group(spec: GroupScoreSpec, key, pdf):
+    """One doc group's local top-k per query under ``spec`` (see
+    ``make_batch_group_scorer``)."""
+    import numpy as np
+    import pandas as pd
+
+    flat = spec.flatten(pdf) if spec.flatten is not None else pdf
+    if not isinstance(flat, dict):
+        # raw posting rows: factorize the terms once (one hash pass) —
+        # iterating pd.unique + an object-equality mask per term cost
+        # ~15× more at 250k rows
+        term_codes, uniq_terms = pd.factorize(flat["term"])
+        flat = {
+            "term_codes": term_codes,
+            "uniq_terms": np.asarray(uniq_terms, dtype=object),
+            **{c: flat[c].to_numpy() for c in ("doc_id", "tf", "doc_len", "df")},
+        }
+    # numpy-native rows (sources.index_io.decode_shard_arrays): terms
+    # are integer codes — no O(postings) object column, integer ==
+    # masks instead of per-row string comparisons
+    out = _score_rows(spec, flat)
+    if spec.fuzzy is None:
+        return out
+    seen = flat["uniq_terms"]
+    report = pd.DataFrame(
+        {
+            "query_id": np.zeros(len(seen), dtype=np.int64),
+            "doc_id": np.zeros(len(seen), dtype=np.int64),
+            "score": np.zeros(len(seen), dtype=np.float64),
+            "n_terms_matched": np.zeros(len(seen), dtype=np.int32),
+            "term": seen,
+        }
+    )
+    return pd.concat([out.assign(term=None), report], ignore_index=True)
+
+
+def _score_rows(spec: GroupScoreSpec, flat: dict):
+    import numpy as np
+    import pandas as pd
+
+    ids = flat["doc_id"].astype(np.int64)
+    if ids.size == 0:
+        return _no_score_rows()
+    k1, b, kk = spec.k1, spec.b, spec.k
+    qids_np = np.asarray(spec.qid_list, dtype=np.int64)
+    nq = len(spec.qid_list)
     # per-query minimum matched-term count (ES minimum_should_match,
     # resolved per query by the caller) — defaults to 1 everywhere
     msm_np = (
-        np.asarray(min_match_per_qidx, dtype=np.int32)
-        if min_match_per_qidx is not None
+        np.asarray(spec.min_match_per_qidx, dtype=np.int32)
+        if spec.min_match_per_qidx is not None
         else np.ones(nq, dtype=np.int32)
     )
-
-    qidx_of = {qid: i for i, qid in enumerate(qid_list)}
-
-    def no_rows():
-        return pd.DataFrame(
-            {
-                "query_id": np.array([], dtype=np.int64),
-                "doc_id": np.array([], dtype=np.int64),
-                "score": np.array([], dtype=np.float64),
-                "n_terms_matched": np.array([], dtype=np.int32),
-            }
+    tf = flat["tf"].astype(np.float64)
+    dl = flat["doc_len"].astype(np.float64)
+    dfv = flat["df"].astype(np.float64)
+    term_codes = flat["term_codes"]
+    uniq_terms = flat["uniq_terms"]
+    docs_local = np.unique(ids)
+    pos = np.searchsorted(docs_local, ids)
+    idf = np.log(1.0 + (spec.n_docs - dfv + 0.5) / (dfv + 0.5))
+    contrib = idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / spec.avgdl))
+    expanded: dict[str, list[tuple[int, float]]] = {}
+    if spec.fuzzy is not None:
+        qidx_of = {qid: i for i, qid in enumerate(spec.qid_list)}
+        for (qid, t), w in spec.fuzzy.expand(uniq_terms)[0].items():
+            expanded.setdefault(t, []).append((qidx_of[qid], w))
+    # per-term posting rows + per-term (query columns, weights) — built
+    # once, reused by every column block.  Terms go in SORTED order, not
+    # code order: a (doc, query) cell sums its terms' contributions in
+    # this order, so the bits of a sum over ≥ 3 terms are the same however
+    # the rows arrived — one cached partition or several in one flush
+    term_info = []
+    for ci in np.argsort(uniq_terms, kind="stable").tolist():
+        qws = spec.term_to_qidx.get(uniq_terms[ci], []) + expanded.get(
+            uniq_terms[ci], []
         )
-
-    def score_group(key, pdf):
-        flat = flatten(pdf) if flatten is not None else pdf
-        if not isinstance(flat, dict):
-            # raw posting rows: factorize the terms once (one hash pass) —
-            # iterating pd.unique + an object-equality mask per term cost
-            # ~15× more at 250k rows; first-appearance order matches
-            # pd.unique, so the per-cell float accumulation order (and thus
-            # every bit of the sums) is unchanged
-            term_codes, uniq_terms = pd.factorize(flat["term"])
-            flat = {
-                "term_codes": term_codes,
-                "uniq_terms": np.asarray(uniq_terms, dtype=object),
-                **{c: flat[c].to_numpy() for c in ("doc_id", "tf", "doc_len", "df")},
-            }
-        # numpy-native rows (sources.index_io.decode_shard_arrays): terms
-        # are integer codes — no O(postings) object column, integer ==
-        # masks instead of per-row string comparisons
-        out = score_rows(flat)
-        if fuzzy is None:
-            return out
-        seen = flat["uniq_terms"]
-        report = pd.DataFrame(
-            {
-                "query_id": np.zeros(len(seen), dtype=np.int64),
-                "doc_id": np.zeros(len(seen), dtype=np.int64),
-                "score": np.zeros(len(seen), dtype=np.float64),
-                "n_terms_matched": np.zeros(len(seen), dtype=np.int32),
-                "term": seen,
-            }
-        )
-        return pd.concat([out.assign(term=None), report], ignore_index=True)
-
-    def score_rows(flat):
-        ids = flat["doc_id"].astype(np.int64)
-        if ids.size == 0:
-            return no_rows()
-        tf = flat["tf"].astype(np.float64)
-        dl = flat["doc_len"].astype(np.float64)
-        dfv = flat["df"].astype(np.float64)
-        term_codes = flat["term_codes"]
-        uniq_terms = flat["uniq_terms"]
-        docs_local = np.unique(ids)
-        pos = np.searchsorted(docs_local, ids)
-        idf = np.log(1.0 + (n_docs_f - dfv + 0.5) / (dfv + 0.5))
-        contrib = idf * (tf * (k1 + 1.0)) / (tf + k1 * (1.0 - b + b * dl / avgdl))
-        expanded: dict[str, list[tuple[int, float]]] = {}
-        if fuzzy is not None:
-            for (qid, t), w in fuzzy.expand(uniq_terms)[0].items():
-                expanded.setdefault(t, []).append((qidx_of[qid], w))
-        # per-term posting rows + per-term (query columns, weights) — built
-        # once, reused by every column block
-        term_info = []
-        for ci in range(len(uniq_terms)):
-            qws = term_to_qidx.get(uniq_terms[ci], []) + expanded.get(
-                uniq_terms[ci], []
-            )
-            if not qws:
+        if not qws:
+            continue
+        m = np.flatnonzero(term_codes == ci)
+        cols = np.asarray([qi for qi, _ in qws], dtype=np.intp)
+        wts = np.asarray([w for _, w in qws], dtype=np.float64)
+        term_info.append((pos[m], contrib[m], cols, wts))
+    nrows = docs_local.size
+    qblock = max(1, min(nq, spec.target_acc_bytes // max(8 * nrows, 1)))
+    out_q, out_d, out_s, out_n = [], [], [], []
+    for b0 in range(0, nq, qblock):
+        b1 = min(b0 + qblock, nq)
+        bw = b1 - b0
+        # TRANSPOSED accumulator (queries × docs): each (term, query)
+        # update writes one CONTIGUOUS row slice instead of a
+        # column-strided scatter — the strided 2-D form was the
+        # dominant per-group cost once decoding went numpy-native
+        # (102 ms vs ~15 ms per 252k-posting group measured).  Per
+        # (doc, query) cell the accumulation order is unchanged
+        # (term_info order; within a group a (term, doc) pair appears
+        # once), so the float sums are bit-identical.
+        acc = np.zeros((bw, nrows), dtype=np.float64)
+        cnt = np.zeros((bw, nrows), dtype=np.int32)
+        for p, c, cols, wts in term_info:
+            sel = (cols >= b0) & (cols < b1)
+            if not sel.any():
                 continue
-            m = np.flatnonzero(term_codes == ci)
-            cols = np.asarray([qi for qi, _ in qws], dtype=np.intp)
-            wts = np.asarray([w for _, w in qws], dtype=np.float64)
-            term_info.append((pos[m], contrib[m], cols, wts))
-        nrows = docs_local.size
-        qblock = max(1, min(nq, target_acc_bytes // max(8 * nrows, 1)))
-        out_q, out_d, out_s, out_n = [], [], [], []
-        for b0 in range(0, nq, qblock):
-            b1 = min(b0 + qblock, nq)
-            bw = b1 - b0
-            # TRANSPOSED accumulator (queries × docs): each (term, query)
-            # update writes one CONTIGUOUS row slice instead of a
-            # column-strided scatter — the strided 2-D form was the
-            # dominant per-group cost once decoding went numpy-native
-            # (102 ms vs ~15 ms per 252k-posting group measured).  Per
-            # (doc, query) cell the accumulation order is unchanged
-            # (term_info order; within a group a (term, doc) pair appears
-            # once), so the float sums are bit-identical.
-            acc = np.zeros((bw, nrows), dtype=np.float64)
-            cnt = np.zeros((bw, nrows), dtype=np.int32)
-            for p, c, cols, wts in term_info:
-                sel = (cols >= b0) & (cols < b1)
-                if not sel.any():
-                    continue
-                for bc, w in zip((cols[sel] - b0).tolist(), wts[sel].tolist()):
-                    # weight-1.0 (exact AC terms): skip the elementwise
-                    # multiply — same bits, no temp array
-                    acc[bc, p] += c if w == 1.0 else c * w
-                    cnt[bc, p] += 1
-            # vectorized per-query top-k: one matrix partition finds each
-            # query row's k-th matched score; only the ≥k-th candidates (k
-            # + ties, a handful) get the exact (-score, doc) lexsort.
-            # "matched" = cnt ≥ that query's minimum_should_match.
-            msm_blk = msm_np[b0:b1]
-            s_masked = np.where(cnt >= msm_blk[:, None], acc, -np.inf)
-            if nrows > kk:
-                kth = np.partition(s_masked, nrows - kk, axis=1)[:, nrows - kk]
-            else:
-                kth = np.full(bw, -np.inf)
-            for bi in range(bw):
-                cand = np.flatnonzero(
-                    (s_masked[bi] >= kth[bi]) & (cnt[bi] >= msm_blk[bi])
-                )
-                if cand.size == 0:
-                    continue
-                d = docs_local[cand]
-                s = acc[bi, cand]
-                order = cand[local_topk(d, s, kk)]
-                out_q.append(np.full(order.size, qids_np[b0 + bi]))
-                out_d.append(docs_local[order])
-                out_s.append(acc[bi, order])
-                out_n.append(cnt[bi, order])
-        if not out_q:
-            return no_rows()
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "score": np.concatenate(out_s),
-                "n_terms_matched": np.concatenate(out_n).astype(np.int32),
-            }
-        )
-
-    return score_group
+            for bc, w in zip((cols[sel] - b0).tolist(), wts[sel].tolist()):
+                # weight-1.0 (exact AC terms): skip the elementwise
+                # multiply — same bits, no temp array
+                acc[bc, p] += c if w == 1.0 else c * w
+                cnt[bc, p] += 1
+        # vectorized per-query top-k: one matrix partition finds each
+        # query row's k-th matched score; only the ≥k-th candidates (k
+        # + ties, a handful) get the exact (-score, doc) lexsort.
+        # "matched" = cnt ≥ that query's minimum_should_match.
+        msm_blk = msm_np[b0:b1]
+        s_masked = np.where(cnt >= msm_blk[:, None], acc, -np.inf)
+        if nrows > kk:
+            kth = np.partition(s_masked, nrows - kk, axis=1)[:, nrows - kk]
+        else:
+            kth = np.full(bw, -np.inf)
+        for bi in range(bw):
+            cand = np.flatnonzero(
+                (s_masked[bi] >= kth[bi]) & (cnt[bi] >= msm_blk[bi])
+            )
+            if cand.size == 0:
+                continue
+            d = docs_local[cand]
+            s = acc[bi, cand]
+            order = cand[local_topk(d, s, kk)]
+            out_q.append(np.full(order.size, qids_np[b0 + bi]))
+            out_d.append(docs_local[order])
+            out_s.append(acc[bi, order])
+            out_n.append(cnt[bi, order])
+    if not out_q:
+        return _no_score_rows()
+    return pd.DataFrame(
+        {
+            "query_id": np.concatenate(out_q),
+            "doc_id": np.concatenate(out_d),
+            "score": np.concatenate(out_s),
+            "n_terms_matched": np.concatenate(out_n).astype(np.int32),
+        }
+    )
 
 
 def batch_query_terms(
@@ -522,81 +566,112 @@ def batch_query_terms(
     return qid_list, term_to_qidx, msm_arr
 
 
+# a task flushes its held cached partitions to the scorer once they hold
+# this many postings: the per-task memory bound of the in-place body
+FLUSH_POSTINGS = 1 << 16
+
+
 def score_pre_grouped(score_group, k: int):
     """The in-place scoring body: a ``mapInPandas`` function over a
     standing cache whose every partition holds ALL the postings of its docs
     (term-sorted within the partition), coalesced into fewer tasks.  Rows
     carry their cached partition id in ``part``; coalescing concatenates
-    whole cached partitions, so each partition's rows arrive contiguously
-    and are scored through ``score_group`` (``make_batch_group_scorer``
-    with top ``k``) as soon as the next partition's rows start.  A cached
-    partition is a doc group, so its local top-k per query is exact; the
-    task merges its partitions' tops into one top-k per query under
-    (score desc, doc_id asc) before it yields, so its output is ≤
-    |queries| × k rows however many partitions it coalesced (plus, from a
-    ``fuzzy`` scorer, one report row per distinct term read).  Per-task
-    memory stays at one cached partition's postings."""
+    whole cached partitions, so each partition's rows arrive contiguously.
+    A task holds whole partitions and hands them to ``score_group``
+    (``make_batch_group_scorer`` with top ``k``) together, at the first
+    partition boundary where the held rows reach ``FLUSH_POSTINGS``
+    postings (a shard row counts its ``n_docs``, a raw row one), and at
+    its end: per-partition flushing paid the scorer's pandas/numpy set-up
+    (~1–3 ms) once per cached partition.  Partitions are never split, and
+    one larger than the budget flushes alone; a flush is a union of doc
+    groups, so its local top-k per query is exact.  The task merges its
+    flushes' tops into one top-k per query under (score desc, doc_id asc)
+    before it yields, so its output is ≤ |queries| × k rows however many
+    partitions it coalesced (plus, from a ``fuzzy`` scorer, one report row
+    per distinct term read).  Per-task memory stays near ``FLUSH_POSTINGS``
+    postings plus one cached partition.  A module-level body bound by
+    ``functools.partial``, so it pickles by reference."""
+    return partial(score_in_place, score_group, k, FLUSH_POSTINGS)
+
+
+def _merged_tops(tops: list, k: int):
     import numpy as np
     import pandas as pd
 
-    def flush(parts: list) -> pd.DataFrame:
-        return score_group(None, pd.concat(parts, ignore_index=True))
+    out = pd.concat(tops, ignore_index=True)
+    reports = None
+    if "term" in out.columns:
+        is_report = out["term"].notna().to_numpy()
+        reports = out[is_report].drop_duplicates("term")
+        out = out[~is_report]
+    order = np.lexsort(
+        (out["doc_id"].to_numpy(), -out["score"].to_numpy(),
+         out["query_id"].to_numpy())
+    )
+    out = out.iloc[order]
+    out = out[(out.groupby("query_id").cumcount() < k).to_numpy()]
+    return out if reports is None else pd.concat([out, reports])
 
-    def merged(tops: list) -> pd.DataFrame:
-        out = pd.concat(tops, ignore_index=True)
-        reports = None
-        if "term" in out.columns:
-            is_report = out["term"].notna().to_numpy()
-            reports = out[is_report].drop_duplicates("term")
-            out = out[~is_report]
-        order = np.lexsort(
-            (out["doc_id"].to_numpy(), -out["score"].to_numpy(),
-             out["query_id"].to_numpy())
-        )
-        out = out.iloc[order]
-        out = out[(out.groupby("query_id").cumcount() < k).to_numpy()]
-        return out if reports is None else pd.concat([out, reports])
 
-    def score(batches):
-        held, held_part, tops = [], None, []
-        for pdf in batches:
-            if pdf.empty:
-                continue
-            parts = pdf["part"].to_numpy()
-            cuts = (np.flatnonzero(parts[1:] != parts[:-1]) + 1).tolist()
-            for lo, hi in zip([0, *cuts], [*cuts, len(pdf)]):
-                if held and parts[lo] != held_part:
-                    tops.append(flush(held))
-                    held = []
-                held_part = parts[lo]
-                held.append(pdf.iloc[lo:hi])
-        if held:
-            tops.append(flush(held))
-        if tops:
-            yield merged(tops)
+def score_in_place(score_group, k: int, flush_postings: int, batches):
+    """``score_pre_grouped``'s body over one task's Arrow batches: ``held``
+    holds whole partitions, ``cur`` the partition still streaming in."""
+    import numpy as np
+    import pandas as pd
 
-    return score
+    held, held_n, cur, cur_n, cur_part, tops = [], 0, [], 0, None, []
+
+    def flush(frames):
+        tops.append(score_group(None, pd.concat(frames, ignore_index=True)))
+
+    for pdf in batches:
+        if pdf.empty:
+            continue
+        parts = pdf["part"].to_numpy()
+        sizes = pdf["n_docs"].to_numpy() if "n_docs" in pdf.columns else None
+        cuts = (np.flatnonzero(parts[1:] != parts[:-1]) + 1).tolist()
+        for lo, hi in zip([0, *cuts], [*cuts, len(pdf)]):
+            if cur and parts[lo] != cur_part:
+                held, held_n, cur, cur_n = held + cur, held_n + cur_n, [], 0
+                if held_n >= flush_postings:
+                    flush(held)
+                    held, held_n = [], 0
+            cur_part = parts[lo]
+            cur.append(pdf.iloc[lo:hi])
+            cur_n += hi - lo if sizes is None else int(sizes[lo:hi].sum())
+            if held and cur_n >= flush_postings:
+                # an outsized partition flushes alone
+                flush(held)
+                held, held_n = [], 0
+    if held or cur:
+        flush(held + cur)
+    if tops:
+        yield _merged_tops(tops, k)
 
 
 def topk_pre_grouped(
-    matched: DataFrame, score_group, k: int, schema: StructType = BATCH_SCORE_SCHEMA
+    matched: DataFrame,
+    score_group,
+    k: int,
+    tasks: int,
+    schema: StructType = BATCH_SCORE_SCHEMA,
 ) -> DataFrame:
     """Task-local top-``k`` per query (``BATCH_SCORE_SCHEMA``) of
     ``matched`` — a filter over a standing cache laid out as
     ``score_pre_grouped`` requires — scored in place by ``score_group``
     (built with the same ``k``): tag ``spark_partition_id()``, ``coalesce``
-    to ``defaultParallelism``, one ``mapInPandas``.  One job with no
-    exchange, fresh cache or not (``mapInPandas`` requires no
-    distribution), and at most one wave of Python tasks.  A Python stage
-    pays the job/task launch path (~33-36 ms at local[4], about a JVM
-    job's floor) plus Arrow feeding of its rows, not a per-task setup, so
-    removing a stage or exchange is the lever; one wave over the cache
-    beats a groupBy that shuffles it.  ``schema``: ``FUZZY_SCORE_SCHEMA``
-    for a scorer built with ``fuzzy``."""
-    par = matched.sparkSession.sparkContext.defaultParallelism
+    to ``tasks``, one ``mapInPandas``.  One job with no exchange, fresh
+    cache or not (``mapInPandas`` requires no distribution), and one wave
+    of ``tasks`` Python tasks.  ``tasks`` comes from the cache's size
+    (``sources.tables.serving_tasks``): each Python task pays a fixed
+    floor (~45 ms at local[4] before its input stream ends, whatever it
+    holds), so a cache under 4 MB is scored by one task and leaves the
+    other cores to the job beside it (the speculative vector probe), while
+    a 960k-doc index still fills every core.  ``schema``:
+    ``FUZZY_SCORE_SCHEMA`` for a scorer built with ``fuzzy``."""
     return (
         matched.withColumn("part", F.spark_partition_id())
-        .coalesce(par)
+        .coalesce(tasks)
         .mapInPandas(score_pre_grouped(score_group, k), schema)
     )
 
@@ -632,6 +707,7 @@ def cached_topk_local(
     fuzzy=None,
     k1: float = K1,
     b: float = B,
+    tasks: int | None = None,
 ) -> DataFrame:
     """Many queries' task-local top-k over a ``raw_postings_cache``, scored
     in place under the given corpus statistics → (query_id, doc_id, score,
@@ -639,7 +715,9 @@ def cached_topk_local(
     merges them, ``similarity.merge_local_topk``).  The raw twin of
     ``plans.wand.batch_topk_local(pre_grouped=True)``: same inputs
     (``batch_query_terms``, ``fuzzy`` included), same scorer, no varint
-    decode."""
+    decode.  ``tasks``: the job's task count (a standing plan sizes it
+    once, from the materialized cache); default ``serving_tasks`` of
+    ``cached``."""
     schema = BATCH_SCORE_SCHEMA if fuzzy is None else FUZZY_SCORE_SCHEMA
     spec = batch_query_terms(queries, query_terms_override, min_should_match, fuzzy)
     if spec is None:
@@ -654,7 +732,9 @@ def cached_topk_local(
         fz = fuzzy.candidate_filter()
         cond = fz if cond is None else cond | fz
     matched = cached.where(cond).select(*RAW_CACHE_COLS)
-    return topk_pre_grouped(matched, score_group, k, schema)
+    if tasks is None:
+        tasks = serving_tasks(cached.sparkSession, cached)
+    return topk_pre_grouped(matched, score_group, k, tasks, schema)
 
 
 def _aggregate_exploded_rows(pdf):

@@ -16,8 +16,8 @@ in one block through the same injected scorer, so the scorer must
 perform row-local operations on ``codes[mask]`` — never a fused
 multi-query contraction, whose different BLAS summation order drifts the
 last ulp and flips selection at the refine boundary.  Re-ranked cosines
-follow the ``knn_bruteforce_many`` convention: 9-decimal parity with
-exact id sets (dgemv bits vary with matrix row count).
+are row-local too (``similarity.row_cosines``), so they do not depend on
+which rows share a task.
 """
 
 from __future__ import annotations
@@ -39,6 +39,7 @@ from .similarity import (
     probe_input_cols,
     probe_queries,
     probe_schema,
+    row_cosines,
     task_rows,
     topk_record_batch,
     vector_rows,
@@ -79,9 +80,9 @@ def fused_cell_probe_many(
        two window exchanges per probe were pure stage floors; collects
        stay ≤ tasks·|queries|·refine·k rows, never corpus-sized).
     2. exact re-rank pass over ``id IN (∪ candidates)`` from the same
-       pruned partitions: per-query gemv with ``cosine_to_query_udf``'s
-       dtype ops (float64 tolist, axis-1 norms, 1e-300 clamps, raw-query
-       gemv).  ``as_rows`` / ``rerank`` pick how its task-local tops
+       pruned partitions: per-query ``row_cosines`` with
+       ``cosine_to_query_udf``'s dtype ops (float64 tolist, axis-1 norms,
+       1e-300 clamps, raw query).  ``as_rows`` / ``rerank`` pick how its task-local tops
        merge, exactly as in ``similarity.knn_ivf_probe_many``: with
        ``rerank`` they come back un-merged, reranked in their tasks.
     """
@@ -159,7 +160,7 @@ def fused_cell_probe_many(
             sel = np.flatnonzero(np.isin(ids, mine))
             if not sel.size:
                 continue
-            cos = (x[sel] @ qmat[qi]) / (norms[sel] * qnorms[qi])
+            cos = row_cosines(x[sel], norms[sel], qmat[qi], qnorms[qi])
             top = local_topk(ids[sel], cos, k)
             picks.append((int(qids[qi]), sel[top], cos[top]))
         if picks:

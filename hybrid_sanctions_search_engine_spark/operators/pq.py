@@ -307,14 +307,13 @@ def knn_ivf_pq_probe_many(
        top ``refine·k``; a driver merge picks each query's global
        candidates (the collect is task-bounded, never a corpus-sized set).
     2. exact re-rank pass over ``id IN (∪ candidates)`` from the same
-       pruned partitions: per-query gemv with ``cosine_to_query_udf``'s
-       dtype ops (float64 tolist, axis-1 norms, 1e-300 clamps, raw-query
-       gemv).
+       pruned partitions: per-query ``similarity.row_cosines`` with
+       ``cosine_to_query_udf``'s dtype ops (float64 tolist, axis-1 norms,
+       1e-300 clamps, raw query).
 
-    Candidate SELECTION is bit-identical to ``ann_recall.reference_topk``
-    (same scorer, same (−score, id) tie-break); its re-ranked cosines
-    agree at 9 decimals with exact id sets (BLAS dgemv bits depend on the
-    matrix row count).  ``refine`` is the recall dial: results converge to
+    Candidate SELECTION and the re-ranked cosines are bit-identical to
+    ``ann_recall.reference_topk`` (same scorer, same (−score, id)
+    tie-break, row-local cosines).  ``refine`` is the recall dial: results converge to
     the IVF-Flat probe as it grows and equal brute force once the probe
     covers every cell and ``refine·k`` every row (pinned in tests).
     ``as_rows`` / ``rerank`` pick how the re-ranked tops merge (see

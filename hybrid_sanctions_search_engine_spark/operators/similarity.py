@@ -51,6 +51,19 @@ def vector_rows(vectors: pd.Series) -> tuple[np.ndarray, np.ndarray]:
     return x, np.maximum(np.linalg.norm(x, axis=1), 1e-300)
 
 
+def row_cosines(
+    x: np.ndarray, norms: np.ndarray, q: np.ndarray, qnorm: float
+) -> np.ndarray:
+    """Cosines of ``x``'s rows (``vector_rows`` norms) to one query ``q``
+    (its 1-D norm ``qnorm``), each row's dot product summed by einsum's
+    row-local loop, NOT a BLAS gemv: a gemv's bits depend on where a row
+    sits in the matrix (its kernel blocking), so a vector's cosine would
+    change with the rows that share its task, and so with the partition
+    count of the cache.  Every cosine scorer calls this, so a vector's
+    cosine is the same bits in any task, batch or reference."""
+    return np.einsum("ij,j->i", x, q) / (norms * qnorm)
+
+
 def cosine_to_query_udf(query_vec: list[float]):
     """Arrow UDF scoring a whole batch against one query: ``X @ q / (|X||q|)``.
 
@@ -67,7 +80,7 @@ def cosine_to_query_udf(query_vec: list[float]):
     @pandas_udf(DoubleType())
     def cos(vs: pd.Series) -> pd.Series:
         x, norms = vector_rows(vs)
-        return pd.Series((x @ q) / (norms * qn))
+        return pd.Series(row_cosines(x, norms, q, qn))
 
     return cos
 
@@ -124,12 +137,12 @@ def knn_bruteforce_many(
     k-th score keep the smallest id, same as ``knn_bruteforce``).
     ``as_rows`` / ``rerank`` pick the merge as in ``knn_ivf_probe_many``.
 
-    Scoring loops one ``X @ q`` gemv per query instead of a single
-    ``X @ Q.T`` gemm on purpose: the gemv path is bit-identical to
-    ``cosine_to_query_udf`` (same dtype conversion, same clamp), so
-    ``search_many`` reproduces ``search()``'s scores exactly — the parity
-    tests compare at 9 decimals.  At |queries| ≤ a few hundred the gemv loop
-    is within ~2× of gemm and both are scan-dominated."""
+    Scoring loops one ``row_cosines`` per query instead of a single
+    ``X @ Q.T`` gemm on purpose: a row's cosine is then bit-identical to
+    ``cosine_to_query_udf``'s (same dtype conversion, same clamp, a
+    row-local dot), whatever batch, task or query set it is scored in.
+    At |queries| ≤ a few hundred the per-query loop is within ~2× of gemm
+    and both are scan-dominated."""
     spark = embeddings.sparkSession
     if not queries:
         return [] if as_rows else local_frame(spark, [], probe_schema(id_col, rerank))
@@ -149,7 +162,7 @@ def knn_bruteforce_many(
             ids = pdf[id_col].to_numpy(dtype=np.int64)
             picks = []
             for qi in range(nq):
-                cos = (x @ qmat[qi]) / (norms * qnorms[qi])
+                cos = row_cosines(x, norms, qmat[qi], qnorms[qi])
                 top = local_topk(ids, cos, kk)
                 picks.append((int(qids[qi]), top, cos[top]))
             yield topk_record_batch(rows, picks, ids, id_col, rerank)
@@ -267,8 +280,8 @@ def knn_lsh(
     qsig = lsh_signature_of(query_vec, dim, n_planes, seed)
     hamming = F.bit_count(F.col(sig_col).bitwiseXOR(F.lit(qsig)))
     candidates = embeddings_with_sig.where(hamming <= max_hamming)
-    # arrow=True at every dim: the numpy gemv refine is bit-identical to
-    # the batched probes' gemv on the same candidates
+    # arrow=True at every dim: the numpy refine (``row_cosines``) is
+    # bit-identical to the batched probes' on the same candidates
     return knn_bruteforce(candidates, query_vec, k, id_col, vec_col,
                           arrow=True)
 
@@ -475,7 +488,8 @@ def knn_ivf_probe_many(
     and the task output is ≤ |queries| × k rows.
 
     Cosines use ``cosine_to_query_udf``'s op shapes (float64 from tolist,
-    axis=1 doc norms, 1-D query norms, one gemv per query) and the local
+    axis=1 doc norms, 1-D query norms, one ``row_cosines`` per query),
+    so a cosine's bits do not depend on the task it ran in, and the local
     top-k is taken by (-cos, id), so the merge is exact;
     ``ann_recall.reference_topk`` replays this probe in numpy."""
     spark = indexed.sparkSession
@@ -486,7 +500,7 @@ def knn_ivf_probe_many(
 
     def score(it):
         # the task's Arrow batches as one table FIRST: the nq-query
-        # mask+gemv loop then runs once per TASK instead of once per
+        # mask+cosine loop then runs once per TASK instead of once per
         # ~10k-row batch (identical per-row float ops, so results are
         # bit-equal; memory stays bounded by the task's partition)
         task = task_rows(it, [id_col, vec_col, cell_col])
@@ -503,7 +517,7 @@ def knn_ivf_probe_many(
             if not probe:
                 continue
             sel = np.flatnonzero(np.isin(cell, np.asarray(probe, dtype=np.int64)))
-            cos = (x[sel] @ qmat[qi]) / (norms[sel] * qnorms[qi])
+            cos = row_cosines(x[sel], norms[sel], qmat[qi], qnorms[qi])
             top = local_topk(ids[sel], cos, kk)
             picks.append((int(qids[qi]), sel[top], cos[top]))
         if picks:

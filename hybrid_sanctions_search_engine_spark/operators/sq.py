@@ -218,10 +218,8 @@ def knn_ivf_sq8_probe_many(
     ``sq8_scorer``'s decoded dot + task-local top ``refine·k``, merged on
     the driver), one exact re-rank pass over the candidate union.
     Candidate SELECTION is bit-identical to ``ann_recall.reference_topk``
-    (``_sq8_scores``'s row-local reduce + the (−score, id) tie-break);
-    re-ranked cosines agree at 9 decimals with exact id sets — the
-    ``knn_bruteforce_many`` convention (dgemv bits vary with matrix row
-    count).  ``refine`` defaults to 2 (PQ defaults to 4): per-dimension
+    (``_sq8_scores``'s row-local reduce + the (−score, id) tie-break), and
+    so are the re-ranked cosines (``similarity.row_cosines``).  ``refine`` defaults to 2 (PQ defaults to 4): per-dimension
     8-bit quantization noise is ~1e-3 on the cosine, so candidate
     selection is already near-exact — the dial exists for corpora whose
     true top-k are packed tighter than the grid (curves in BENCH.md).

@@ -43,7 +43,7 @@ from ..operators.similarity import (
     knn_bruteforce_many,
     merge_local_topk,
 )
-from ..sources.tables import local_frame
+from ..sources.tables import local_frame, serving_tasks
 from .wand import batch_topk_local, query_terms
 
 _SPEC_GROUP_SEQ = itertools.count()
@@ -100,15 +100,20 @@ class SearchOpts:
     enable_anchor_boost: bool = True
 
 
-def _with_doc_text(vectors: DataFrame, docs: DataFrame, text_col: str) -> DataFrame:
+def _with_doc_text(
+    vectors: DataFrame, docs: DataFrame, text_col: str
+) -> tuple[DataFrame, int]:
     """``vectors`` left-joined with each vec_id's doc text
-    (``DOC_TEXT_COL``; ``HAS_DOC_COL`` is null where no doc row exists)."""
+    (``DOC_TEXT_COL``; ``HAS_DOC_COL`` is null where no doc row exists),
+    and the task count of a probe over it: ``serving_tasks`` of the
+    vectors plus the doc text."""
     text = docs.select(
         F.col("doc_id").alias("vec_id"),
         F.col(text_col).alias(DOC_TEXT_COL),
         F.lit(True).alias(HAS_DOC_COL),
     )
-    return vectors.join(text, "vec_id", "left")
+    tasks = serving_tasks(vectors.sparkSession, vectors, text)
+    return vectors.join(text, "vec_id", "left"), tasks
 
 
 def _timed_into(trace: dict, name: str, fn, lock=None):
@@ -311,7 +316,6 @@ class HybridSearchPlan:
         self.ann_df = None
         self.ann_centroids = None
         self._probe = None
-        n_parts = spark.sparkContext.defaultParallelism
         if ann_index_dir is not None:
             if ann_kind == "ivf":
                 from ..operators.similarity import knn_ivf_probe_many, load_ivf_index
@@ -337,12 +341,12 @@ class HybridSearchPlan:
                 probe = partial(knn_ivf_sq8_probe_many, refine=ann_refine)
             # range-partitioned and sorted on the cell, the cached batches
             # stay cell-clustered — the ivf_cell IN (...) filter still
-            # skips them by min/max stats — and the probe runs at most
-            # defaultParallelism tasks
+            # skips them by min/max stats — and the probe runs one task per
+            # partition, sized by the cache's bytes (``serving_tasks``)
+            ann_df, tasks = _with_doc_text(ann_df, docs, text_col)
             self.ann_df = (
-                _with_doc_text(ann_df, docs, text_col)
-                .repartitionByRange(
-                    min(n_parts, len(self.ann_centroids)), "ivf_cell"
+                ann_df.repartitionByRange(
+                    min(tasks, len(self.ann_centroids)), "ivf_cell"
                 )
                 .sortWithinPartitions("ivf_cell", "vec_id")
                 .persist()
@@ -352,11 +356,8 @@ class HybridSearchPlan:
                 n_probe=ann_n_probe,
             )
         elif embeddings is not None:
-            self.ann_df = (
-                _with_doc_text(embeddings, docs, text_col)
-                .coalesce(n_parts)
-                .persist()
-            )
+            ann_df, tasks = _with_doc_text(embeddings, docs, text_col)
+            self.ann_df = ann_df.coalesce(tasks).persist()
             self._probe = partial(knn_bruteforce_many, self.ann_df)
         # the lexical stages' one scorer, bound here for the plan's layout:
         # ``_score_base(entries, k=, query_terms_override=,
@@ -369,6 +370,8 @@ class HybridSearchPlan:
             from .wand import batch_n_groups
 
             self.index_df, self.index_meta = load_index(spark, index_dir)
+            # the scoring job's task count, from the shard bytes on disk
+            tasks = serving_tasks(spark, self.index_df)
             # the compressed index, cached on its chunk groups (whole chunks
             # per partition; the shuffle is paid once, at materialization)
             # and term-sorted, so the term IN (...) filter prunes cached
@@ -388,7 +391,7 @@ class HybridSearchPlan:
             self.postings = None
             self._score_base = partial(
                 batch_topk_local, spark, index_dir, index_df=self.index_df,
-                meta=self.index_meta, pre_grouped=True,
+                meta=self.index_meta, pre_grouped=True, tasks=tasks,
             )
             lexical = self.index_df
         else:
@@ -406,9 +409,11 @@ class HybridSearchPlan:
             self.stats: CorpusStats = CorpusStats(
                 n_docs=n_docs, avgdl=float(total) / max(n_docs, 1)
             )
+            # sized from the materialized cache's in-memory bytes
             self._score_base = partial(
                 cached_topk_local, self.postings,
                 n_docs=self.stats.n_docs, avgdl=self.stats.avgdl,
+                tasks=serving_tasks(spark, self.postings),
             )
             lexical = self.postings
         self.dictionary = (
@@ -490,9 +495,10 @@ class HybridSearchPlan:
         self.delta_postings = delta_postings
         self.delta_embeddings = delta_embeddings
         if delta_embeddings is not None:
-            self._delta_ann = _with_doc_text(
+            delta_ann, tasks = _with_doc_text(
                 delta_embeddings, delta_docs, self.text_col
-            ).persist()
+            )
+            self._delta_ann = delta_ann.coalesce(tasks).persist()
         if delta_stats is None and delta_postings is not None:
             row = (
                 delta_postings.select("doc_id", "doc_len")
@@ -512,6 +518,7 @@ class HybridSearchPlan:
             self._score_delta = partial(
                 cached_topk_local, self._delta_cache,
                 n_docs=int(delta_stats[0]), avgdl=float(delta_stats[1] or 1.0),
+                tasks=serving_tasks(delta_postings.sparkSession, delta_postings),
             )
             # fuzzy expansion must see delta-only terms; df ride-along keeps
             # the dictionary schema (expansion ranks by edit distance only)

@@ -30,6 +30,8 @@ tests/test_wand.py.
 
 from __future__ import annotations
 
+from functools import partial
+
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
@@ -51,7 +53,7 @@ from ..operators.bm25 import (
     make_batch_group_scorer,
 )
 from ..sources.index_io import IndexMeta, decode_shard_arrays, load_index
-from ..sources.tables import local_frame
+from ..sources.tables import local_frame, serving_tasks
 
 RESULT_SCHEMA = StructType(
     [
@@ -138,7 +140,7 @@ def topk_search(
     score_fn = make_batch_group_scorer(
         {t: [(0, weights.get(t, 1.0))] for t in dict.fromkeys(terms)},
         [0], meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
-        flatten=lambda pdf: decode_shard_arrays(pdf, include_df=True),
+        flatten=partial(decode_shard_arrays, include_df=True),
         min_match_per_qidx=[msm_n],
     )
 
@@ -301,6 +303,7 @@ def batch_topk_indexed(
     query_terms_override: list[tuple[int, str, float]] | None = None,
     min_should_match: int | str = 1,
     pre_grouped: bool = False,
+    tasks: int | None = None,
 ) -> DataFrame:
     """Many queries in ONE job over the COMPRESSED index →
     (query_id, doc_id, score, rank, n_terms_matched), rank ≤ k per query:
@@ -313,7 +316,7 @@ def batch_topk_indexed(
     local = batch_topk_local(
         spark, index_dir, queries, k=k, index_df=index_df, meta=meta,
         n_groups=n_groups, query_terms_override=query_terms_override,
-        min_should_match=min_should_match, pre_grouped=pre_grouped,
+        min_should_match=min_should_match, pre_grouped=pre_grouped, tasks=tasks,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -335,6 +338,7 @@ def batch_topk_local(
     min_should_match: int | str = 1,
     pre_grouped: bool = False,
     fuzzy=None,
+    tasks: int | None = None,
 ) -> DataFrame:
     """Many queries' task-local top-k over the COMPRESSED index (the
     serving shape ``operators.bm25.batch_topk`` provides over raw
@@ -371,9 +375,11 @@ def batch_topk_local(
     ``pre_grouped``: every partition of ``index_df`` holds whole chunks (a
     standing plan caches its index on ``pmod(chunk, batch_n_groups(…))``,
     term-sorted).  The cache is then scored in place
-    (``operators.bm25.topk_pre_grouped``): one job, no exchange, at most
-    ``defaultParallelism`` Python tasks, and ``n_groups`` plays no part.
-    Without it the matched rows shuffle to ``n_groups`` chunk groups."""
+    (``operators.bm25.topk_pre_grouped``): one job, no exchange, ``tasks``
+    Python tasks (a standing plan sizes them once from the shard bytes on
+    disk; default ``sources.tables.serving_tasks`` of ``index_df``), and
+    ``n_groups`` plays no part.  Without it the matched rows shuffle to
+    ``n_groups`` chunk groups."""
     from ..operators.bm25 import batch_query_terms, topk_pre_grouped
 
     if index_df is None or meta is None:
@@ -395,11 +401,13 @@ def batch_topk_local(
     matched = index_df.where(cond).select(*SCORE_COLS)
     score_group = make_batch_group_scorer(
         term_to_qidx, qid_list, meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
-        flatten=lambda pdf: decode_shard_arrays(pdf, include_df=True),
+        flatten=partial(decode_shard_arrays, include_df=True),
         min_match_per_qidx=msm_arr, fuzzy=fuzzy,
     )
     if pre_grouped:
-        return topk_pre_grouped(matched, score_group, k, schema)
+        if tasks is None:
+            tasks = serving_tasks(spark, index_df)
+        return topk_pre_grouped(matched, score_group, k, tasks, schema)
     if n_groups is None:
         n_groups = batch_n_groups(spark, meta)
     grp_key = F.pmod(F.col("chunk"), F.lit(n_groups))

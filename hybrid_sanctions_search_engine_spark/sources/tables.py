@@ -71,6 +71,38 @@ def local_frame(
     return spark.createDataFrame(table, struct)
 
 
+def fan_out(n_bytes: int, open_cost: int, parallelism: int) -> int:
+    """Task count for a job over ``n_bytes`` of input, by the rule Spark
+    sizes file splits with: one task per ``open_cost`` bytes
+    (``spark.sql.files.openCostInBytes``), at least 1, at most
+    ``parallelism``.  Monotone in ``n_bytes``."""
+    return max(1, min(parallelism, -(-int(n_bytes) // max(int(open_cost), 1))))
+
+
+def frame_bytes(df: DataFrame) -> int:
+    """Spark's own size statistic of ``df``'s optimized plan, with no job:
+    a file scan's bytes on disk, a materialized cache's in-memory bytes,
+    else the optimizer's estimate (``spark.sql.defaultSizeInBytes`` where
+    it has none)."""
+    return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
+
+
+def serving_tasks(spark: SparkSession, *frames: DataFrame) -> int:
+    """The task count of a serving job over a cache built from ``frames``:
+    ``fan_out`` of their summed ``frame_bytes`` under the session's
+    ``openCostInBytes`` and ``defaultParallelism``.  A Python task pays a
+    fixed floor before its work starts (~45 ms for a zero-row
+    ``mapInPandas`` task at local[4]), so a small cache is scored by one
+    task, and a job beside it keeps the other cores; a corpus of tens of
+    MB gets every core, as before."""
+    open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
+    return fan_out(
+        sum(frame_bytes(f) for f in frames),
+        open_cost,
+        spark.sparkContext.defaultParallelism,
+    )
+
+
 def write_bucketed(
     df: DataFrame,
     table_name: str,

@@ -141,7 +141,6 @@ def _windowed_hits(plan, qvecs):
     )
     if plan.delta_embeddings is not None:
         # the delta's cached embeddings, so both sides score the same rows
-        # in the same batches (gemv bits depend on the batch)
         dhits = knn_bruteforce_many(plan._delta_ann, qvecs, k=K).select(
             "query_id", F.col("vec_id").alias("doc_id"), "cos_sim"
         )

@@ -695,8 +695,9 @@ def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
     ``pmod(chunk)``-partitioned cache, whatever the call shape: the scoring
     frames of an AC entry set, a weighted (fuzzy) set and a fused set plan
     no exchange between the cached scan and the Python scorer — before the
-    cache is materialized too — each runs as one job of at most
-    ``defaultParallelism`` Python tasks, and an escalated ``search()`` runs
+    cache is materialized too — each runs as one job of exactly the task
+    count the fan-out rule gives its shard bytes (one: the smoke index is
+    far below one ``openCostInBytes``), and an escalated ``search()`` runs
     exactly one job per lexical stage.  A cold ``topk_search`` over the
     parquet index still shuffles by chunk (the negative control)."""
     from hybrid_sanctions_search_engine_spark.plans import hybrid
@@ -705,8 +706,15 @@ def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
         SearchOpts,
     )
 
-    docs, index_dir, _, _ = corpus
+    from hybrid_sanctions_search_engine_spark.sources.tables import (
+        fan_out,
+        frame_bytes,
+    )
+
+    docs, index_dir, idx, _ = corpus
     par = spark.sparkContext.defaultParallelism
+    want_tasks = fan_out(frame_bytes(idx), 4 << 20, par)
+    assert want_tasks == 1
     opts = SearchOpts(top_k=5, escalation_threshold=1e9)
     plan = HybridSearchPlan(docs, index_dir=index_dir)
     weighted = [(7, "spark", 0.8), (7, "query", 0.6)]
@@ -730,7 +738,7 @@ def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
             below = _scorer_input(df)
             assert "Exchange" not in below and "Coalesce" in below, below
             jobs, tasks = _jobs_and_tasks(spark, df.collect)
-            assert jobs == 1 and 0 < tasks <= par, (jobs, tasks)
+            assert jobs == 1 and tasks == want_tasks, (jobs, tasks)
 
         class Inline:
             """``_Async`` on the calling thread, inside the job group."""
@@ -948,6 +956,92 @@ def test_pre_grouped_task_output_is_k_bounded():
         ["query_id", "score", "doc_id"], ascending=[True, False, True]
     ).groupby("query_id").head(k)
     assert out.values.tolist() == want.values.tolist()
+
+
+def test_pre_grouped_flushes_by_posting_budget(monkeypatch):
+    """The in-place body hands the scorer whole cached partitions together
+    until they hold ``FLUSH_POSTINGS`` postings: many small partitions
+    cost ⌈postings / budget⌉ scorer calls with rows identical to
+    per-partition flushing (budget 0), a partition larger than the budget
+    is never split and flushes alone, and a shard row counts its
+    ``n_docs`` postings."""
+    import math
+    from functools import partial
+
+    import numpy as np
+    import pandas as pd
+
+    from hybrid_sanctions_search_engine_spark.operators import bm25
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import (
+        make_batch_group_scorer,
+        score_pre_grouped,
+    )
+    from hybrid_sanctions_search_engine_spark.sources.index_io import (
+        decode_shard_arrays,
+    )
+
+    assert bm25.FLUSH_POSTINGS == 1 << 16
+    k, rng = 4, np.random.default_rng(11)
+
+    def raw_cache(sizes):
+        """Raw posting rows: ``sizes[p]`` postings in partition p (two
+        terms per doc)."""
+        rows, doc = [], 0
+        for part, n in enumerate(sizes):
+            for _ in range(n // 2):
+                for t in ("a", "b"):
+                    rows.append((t, doc, int(rng.integers(1, 4)), 12, 30, part))
+                doc += 1
+        cache = pd.DataFrame(rows, columns=["term", "doc_id", "tf", "doc_len", "df", "part"])
+        return cache.sort_values(["part", "term"], kind="mergesort")
+
+    scorer = make_batch_group_scorer(
+        {"a": [(0, 1.0)], "b": [(0, 0.5), (1, 1.0)]}, [3, 4], 900, 12.0, 1.2, 0.75, k
+    )
+
+    def served(cache, budget, score=scorer):
+        calls = []
+
+        def counting(key, pdf):
+            calls.append(pdf)
+            return score(key, pdf)
+
+        batches = [cache.iloc[i:i + 13] for i in range(0, len(cache), 13)]
+        monkeypatch.setattr(bm25, "FLUSH_POSTINGS", budget)
+        (out,) = score_pre_grouped(counting, k)(iter(batches))
+        return out.values.tolist(), calls
+
+    small = raw_cache([50] * 40)
+    per_part, calls = served(small, 0)
+    assert len(calls) == 40
+    for budget in (100, 200, 1000):
+        got, calls = served(small, budget)
+        assert len(calls) == math.ceil(len(small) / budget)
+        assert got == per_part
+    # an outsized partition (after held ones, then at the front)
+    for sizes, want in (([50] * 2 + [600] + [50] * 4, [100, 600, 200]),
+                        ([600] + [50] * 4, [600, 200])):
+        cache = raw_cache(sizes)
+        got, calls = served(cache, 200)
+        assert [len(c) for c in calls] == want
+        assert got == served(cache, 0)[0]
+
+    # shard rows: a row counts its n_docs postings
+    rows, meta = _zipf_shard_rows(seed=3, n_docs=2000, vocab=200, chunk_bits=5)
+    rows = rows[rows["term"].isin(["t1", "t3", "t9"])]
+    cached = rows.assign(part=rows["chunk"] % 16).sort_values(
+        ["part", "term"], kind="mergesort"
+    )
+    decoded = make_batch_group_scorer(
+        {"t1": [(0, 1.0)], "t3": [(0, 1.0)], "t9": [(0, 0.7)]}, [0],
+        meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
+        flatten=partial(decode_shard_arrays, include_df=True),
+    )
+    budget = int(cached["n_docs"].sum()) // 5
+    got, calls = served(cached, budget, decoded)
+    assert got == served(cached, 0, decoded)[0]
+    assert 1 < len(calls) < 16
+    assert all(c["n_docs"].sum() >= budget for c in calls[:-1])
 
 
 def test_es_min_should_match_rules():

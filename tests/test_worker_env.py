@@ -220,7 +220,8 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
     wrap = pyspark.sql.udf._wrap_function
 
     def spy(sc, func, returnType=None):
-        shipped.setdefault(f"{func.__module__}.{func.__qualname__}", func)
+        body = getattr(func, "func", func)  # a partial: its bound function
+        shipped.setdefault(f"{body.__module__}.{body.__qualname__}", func)
         return wrap(sc, func, returnType)
 
     monkeypatch.setattr(pyspark.sql.udf, "_wrap_function", spy)
@@ -255,10 +256,10 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
     expected = {
         "operators.fuzzy.dictionary_bloom.<locals>.build",
         # topk_search's chunk groups: the batch scorer on a batch of one
-        "operators.bm25.make_batch_group_scorer.<locals>.score_group",
+        "operators.bm25.score_doc_group",
         # every lexical stage's one in-place body (the batch scorer rides
-        # inside it)
-        "operators.bm25.score_pre_grouped.<locals>.score",
+        # inside it); both are module-level, bound by functools.partial
+        "operators.bm25.score_in_place",
         # the batched vector leg's Arrow-map bodies: each emits its task's
         # top-k with the rerank inputs (text, query text, partial ratio)
         "operators.similarity.knn_ivf_probe_many.<locals>.score",
