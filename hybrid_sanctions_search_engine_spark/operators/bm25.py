@@ -653,22 +653,28 @@ def topk_pre_grouped(
     matched: DataFrame,
     score_group,
     k: int,
-    tasks: int,
+    cache_bytes: int,
+    n_queries: int,
     schema: StructType = BATCH_SCORE_SCHEMA,
 ) -> DataFrame:
     """Task-local top-``k`` per query (``BATCH_SCORE_SCHEMA``) of
-    ``matched`` — a filter over a standing cache laid out as
-    ``score_pre_grouped`` requires — scored in place by ``score_group``
-    (built with the same ``k``): tag ``spark_partition_id()``, ``coalesce``
-    to ``tasks``, one ``mapInPandas``.  One job with no exchange, fresh
-    cache or not (``mapInPandas`` requires no distribution), and one wave
-    of ``tasks`` Python tasks.  ``tasks`` comes from the cache's size
-    (``sources.tables.serving_tasks``): each Python task pays a fixed
-    floor (~45 ms at local[4] before its input stream ends, whatever it
-    holds), so a cache under 4 MB is scored by one task and leaves the
-    other cores to the job beside it (the speculative vector probe), while
-    a 960k-doc index still fills every core.  ``schema``:
-    ``FUZZY_SCORE_SCHEMA`` for a scorer built with ``fuzzy``."""
+    ``matched`` — a filter over a standing cache of ``cache_bytes`` laid
+    out as ``score_pre_grouped`` requires — scored in place by
+    ``score_group`` (built with the same ``k`` for ``n_queries`` query
+    ids): tag ``spark_partition_id()``, ``coalesce`` to the job's task
+    count, one ``mapInPandas``.  One job with no exchange, fresh cache or
+    not (``mapInPandas`` requires no distribution), and one wave of Python
+    tasks.  The task count is ``sources.tables.serving_tasks`` of the
+    cache's bytes once per query id: the scorer's work is postings ×
+    queries, and with no column statistics a query's term filter is taken
+    to keep its whole input, as Spark's own size estimate takes a filter.
+    Each Python task pays a fixed floor (~45 ms at local[4] before its
+    input stream ends, whatever it holds), so a 16-query batch on a
+    0.1 MB index is one task and leaves the other cores to the job beside
+    it (the speculative vector probe), a 100-query batch on a 3 MB index
+    fills every core, and so does a 960k-doc index for one query.
+    ``schema``: ``FUZZY_SCORE_SCHEMA`` for a scorer built with ``fuzzy``."""
+    tasks = serving_tasks(matched.sparkSession, cache_bytes * max(n_queries, 1))
     return (
         matched.withColumn("part", F.spark_partition_id())
         .coalesce(tasks)
@@ -707,7 +713,7 @@ def cached_topk_local(
     fuzzy=None,
     k1: float = K1,
     b: float = B,
-    tasks: int | None = None,
+    cache_bytes: int,
 ) -> DataFrame:
     """Many queries' task-local top-k over a ``raw_postings_cache``, scored
     in place under the given corpus statistics → (query_id, doc_id, score,
@@ -715,9 +721,9 @@ def cached_topk_local(
     merges them, ``similarity.merge_local_topk``).  The raw twin of
     ``plans.wand.batch_topk_local(pre_grouped=True)``: same inputs
     (``batch_query_terms``, ``fuzzy`` included), same scorer, no varint
-    decode.  ``tasks``: the job's task count (a standing plan sizes it
-    once, from the materialized cache); default ``serving_tasks`` of
-    ``cached``."""
+    decode.  ``cache_bytes``: the cache's size, which with the query count
+    sizes the job (``topk_pre_grouped``); a standing plan measures it once
+    per cache."""
     schema = BATCH_SCORE_SCHEMA if fuzzy is None else FUZZY_SCORE_SCHEMA
     spec = batch_query_terms(queries, query_terms_override, min_should_match, fuzzy)
     if spec is None:
@@ -732,9 +738,9 @@ def cached_topk_local(
         fz = fuzzy.candidate_filter()
         cond = fz if cond is None else cond | fz
     matched = cached.where(cond).select(*RAW_CACHE_COLS)
-    if tasks is None:
-        tasks = serving_tasks(cached.sparkSession, cached)
-    return topk_pre_grouped(matched, score_group, k, tasks, schema)
+    return topk_pre_grouped(
+        matched, score_group, k, cache_bytes, len(qid_list), schema
+    )
 
 
 def _aggregate_exploded_rows(pdf):

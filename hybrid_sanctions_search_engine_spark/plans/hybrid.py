@@ -43,7 +43,7 @@ from ..operators.similarity import (
     knn_bruteforce_many,
     merge_local_topk,
 )
-from ..sources.tables import local_frame, serving_tasks
+from ..sources.tables import frame_bytes, local_frame, serving_tasks
 from .wand import batch_topk_local, query_terms
 
 _SPEC_GROUP_SEQ = itertools.count()
@@ -106,13 +106,15 @@ def _with_doc_text(
     """``vectors`` left-joined with each vec_id's doc text
     (``DOC_TEXT_COL``; ``HAS_DOC_COL`` is null where no doc row exists),
     and the task count of a probe over it: ``serving_tasks`` of the
-    vectors plus the doc text."""
+    vectors' plus the doc text's bytes."""
     text = docs.select(
         F.col("doc_id").alias("vec_id"),
         F.col(text_col).alias(DOC_TEXT_COL),
         F.lit(True).alias(HAS_DOC_COL),
     )
-    tasks = serving_tasks(vectors.sparkSession, vectors, text)
+    tasks = serving_tasks(
+        vectors.sparkSession, frame_bytes(vectors) + frame_bytes(text)
+    )
     return vectors.join(text, "vec_id", "left"), tasks
 
 
@@ -366,12 +368,10 @@ class HybridSearchPlan:
         # docs, term-sorted — scored in place, one job with no exchange
         # (``operators.bm25.topk_pre_grouped``); ``_lexical_tops`` runs it
         if index_dir is not None:
-            from ..sources.index_io import load_index
+            from ..sources.index_io import index_bytes, load_index
             from .wand import batch_n_groups
 
             self.index_df, self.index_meta = load_index(spark, index_dir)
-            # the scoring job's task count, from the shard bytes on disk
-            tasks = serving_tasks(spark, self.index_df)
             # the compressed index, cached on its chunk groups (whole chunks
             # per partition; the shuffle is paid once, at materialization)
             # and term-sorted, so the term IN (...) filter prunes cached
@@ -391,7 +391,8 @@ class HybridSearchPlan:
             self.postings = None
             self._score_base = partial(
                 batch_topk_local, spark, index_dir, index_df=self.index_df,
-                meta=self.index_meta, pre_grouped=True, tasks=tasks,
+                meta=self.index_meta, pre_grouped=True,
+                cache_bytes=index_bytes(index_dir),
             )
             lexical = self.index_df
         else:
@@ -409,11 +410,11 @@ class HybridSearchPlan:
             self.stats: CorpusStats = CorpusStats(
                 n_docs=n_docs, avgdl=float(total) / max(n_docs, 1)
             )
-            # sized from the materialized cache's in-memory bytes
+            # sized by the materialized cache's in-memory bytes
             self._score_base = partial(
                 cached_topk_local, self.postings,
                 n_docs=self.stats.n_docs, avgdl=self.stats.avgdl,
-                tasks=serving_tasks(spark, self.postings),
+                cache_bytes=frame_bytes(self.postings),
             )
             lexical = self.postings
         self.dictionary = (
@@ -518,7 +519,7 @@ class HybridSearchPlan:
             self._score_delta = partial(
                 cached_topk_local, self._delta_cache,
                 n_docs=int(delta_stats[0]), avgdl=float(delta_stats[1] or 1.0),
-                tasks=serving_tasks(delta_postings.sparkSession, delta_postings),
+                cache_bytes=frame_bytes(delta_postings),
             )
             # fuzzy expansion must see delta-only terms; df ride-along keeps
             # the dictionary schema (expansion ranks by edit distance only)

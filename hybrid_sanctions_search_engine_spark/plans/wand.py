@@ -52,8 +52,13 @@ from ..operators.bm25 import (
     group_partitioned,
     make_batch_group_scorer,
 )
-from ..sources.index_io import IndexMeta, decode_shard_arrays, load_index
-from ..sources.tables import local_frame, serving_tasks
+from ..sources.index_io import (
+    IndexMeta,
+    decode_shard_arrays,
+    index_bytes,
+    load_index,
+)
+from ..sources.tables import local_frame
 
 RESULT_SCHEMA = StructType(
     [
@@ -303,7 +308,6 @@ def batch_topk_indexed(
     query_terms_override: list[tuple[int, str, float]] | None = None,
     min_should_match: int | str = 1,
     pre_grouped: bool = False,
-    tasks: int | None = None,
 ) -> DataFrame:
     """Many queries in ONE job over the COMPRESSED index →
     (query_id, doc_id, score, rank, n_terms_matched), rank ≤ k per query:
@@ -316,7 +320,7 @@ def batch_topk_indexed(
     local = batch_topk_local(
         spark, index_dir, queries, k=k, index_df=index_df, meta=meta,
         n_groups=n_groups, query_terms_override=query_terms_override,
-        min_should_match=min_should_match, pre_grouped=pre_grouped, tasks=tasks,
+        min_should_match=min_should_match, pre_grouped=pre_grouped,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -338,7 +342,7 @@ def batch_topk_local(
     min_should_match: int | str = 1,
     pre_grouped: bool = False,
     fuzzy=None,
-    tasks: int | None = None,
+    cache_bytes: int | None = None,
 ) -> DataFrame:
     """Many queries' task-local top-k over the COMPRESSED index (the
     serving shape ``operators.bm25.batch_topk`` provides over raw
@@ -375,11 +379,11 @@ def batch_topk_local(
     ``pre_grouped``: every partition of ``index_df`` holds whole chunks (a
     standing plan caches its index on ``pmod(chunk, batch_n_groups(…))``,
     term-sorted).  The cache is then scored in place
-    (``operators.bm25.topk_pre_grouped``): one job, no exchange, ``tasks``
-    Python tasks (a standing plan sizes them once from the shard bytes on
-    disk; default ``sources.tables.serving_tasks`` of ``index_df``), and
-    ``n_groups`` plays no part.  Without it the matched rows shuffle to
-    ``n_groups`` chunk groups."""
+    (``operators.bm25.topk_pre_grouped``): one job, no exchange, its task
+    count sized by ``cache_bytes`` (the index's shard bytes on disk,
+    ``sources.index_io.index_bytes``, which a standing plan reads once)
+    and the query count, and ``n_groups`` plays no part.  Without it the
+    matched rows shuffle to ``n_groups`` chunk groups."""
     from ..operators.bm25 import batch_query_terms, topk_pre_grouped
 
     if index_df is None or meta is None:
@@ -405,9 +409,11 @@ def batch_topk_local(
         min_match_per_qidx=msm_arr, fuzzy=fuzzy,
     )
     if pre_grouped:
-        if tasks is None:
-            tasks = serving_tasks(spark, index_df)
-        return topk_pre_grouped(matched, score_group, k, tasks, schema)
+        if cache_bytes is None:
+            cache_bytes = index_bytes(index_dir)
+        return topk_pre_grouped(
+            matched, score_group, k, cache_bytes, len(qid_list), schema
+        )
     if n_groups is None:
         n_groups = batch_n_groups(spark, meta)
     grp_key = F.pmod(F.col("chunk"), F.lit(n_groups))

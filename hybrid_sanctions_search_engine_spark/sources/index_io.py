@@ -644,3 +644,22 @@ def load_index(spark: SparkSession, index_dir: str) -> tuple[DataFrame, IndexMet
     meta = IndexMeta.load(index_dir)
     df = spark.read.schema(SHARD_SCHEMA).parquet(index_dir)
     return df, meta
+
+
+def index_bytes(index_dir: str) -> int:
+    """The index's shard bytes on disk: the summed size of its shard data
+    files (the size Spark's file scan of the index reports), read from the
+    file system with no Spark call.  A lexical job over the index, or over
+    a standing cache of it, is sized by this figure
+    (``plans.wand.batch_topk_local``)."""
+    fs = fs_for(index_dir)
+    total = 0
+    for shard in fs.list_files(index_dir):
+        if shard.startswith("shard="):
+            d = os.path.join(index_dir, shard)
+            total += sum(
+                fs.getsize(os.path.join(d, f))
+                for f in fs.list_files(d)
+                if f.endswith(".parquet") and not f.startswith(("_", "."))
+            )
+    return total

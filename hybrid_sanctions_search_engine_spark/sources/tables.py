@@ -87,20 +87,18 @@ def frame_bytes(df: DataFrame) -> int:
     return int(str(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()))
 
 
-def serving_tasks(spark: SparkSession, *frames: DataFrame) -> int:
-    """The task count of a serving job over a cache built from ``frames``:
-    ``fan_out`` of their summed ``frame_bytes`` under the session's
-    ``openCostInBytes`` and ``defaultParallelism``.  A Python task pays a
-    fixed floor before its work starts (~45 ms for a zero-row
-    ``mapInPandas`` task at local[4]), so a small cache is scored by one
-    task, and a job beside it keeps the other cores; a corpus of tens of
-    MB gets every core, as before."""
+def serving_tasks(spark: SparkSession, n_bytes: int) -> int:
+    """The task count of a serving job over ``n_bytes`` of input:
+    ``fan_out`` under the session's ``openCostInBytes`` and
+    ``defaultParallelism``.  A Python task pays a fixed floor before its
+    work starts (~45 ms for a zero-row ``mapInPandas`` task at local[4]),
+    so a small job runs as one task, and a job beside it keeps the other
+    cores; a corpus of tens of MB gets every core, as before.  A vector
+    probe's input is its cache (``frame_bytes`` of the vectors plus the doc
+    text); a lexical job's is its cache once per query it scores
+    (``operators.bm25.topk_pre_grouped``)."""
     open_cost = spark._jsparkSession.sessionState().conf().filesOpenCostInBytes()
-    return fan_out(
-        sum(frame_bytes(f) for f in frames),
-        open_cost,
-        spark.sparkContext.defaultParallelism,
-    )
+    return fan_out(n_bytes, open_cost, spark.sparkContext.defaultParallelism)
 
 
 def write_bucketed(

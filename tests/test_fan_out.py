@@ -3,7 +3,9 @@
 * The rule (``sources.tables.fan_out``): one task per
   ``spark.sql.files.openCostInBytes`` of input, at least 1, at most
   ``defaultParallelism`` — Spark's own file-split sizing.  A small cache is
-  scored by one task; a 960k-doc index fills every core.
+  scored by one task; a 960k-doc index fills every core.  A lexical job's
+  input is its cache once per query id it scores, so a large batch on a
+  mid-size index is split too.
 * Results do not depend on the task count: a lexical job scored by one
   task (every cached partition in one flush) returns the same score bits
   as one scored by ``defaultParallelism`` tasks — over the compressed
@@ -15,6 +17,7 @@
 
 from __future__ import annotations
 
+from contextlib import contextmanager
 from functools import partial
 
 import numpy as np
@@ -34,9 +37,14 @@ from hybrid_sanctions_search_engine_spark.operators.similarity import (
     row_cosines,
 )
 from hybrid_sanctions_search_engine_spark.plans.hybrid import HybridSearchPlan
-from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
+from hybrid_sanctions_search_engine_spark.sources.index_io import (
+    build_index,
+    index_bytes,
+    load_index,
+)
 from hybrid_sanctions_search_engine_spark.sources.tables import (
     fan_out,
+    frame_bytes,
     local_frame,
     serving_tasks,
 )
@@ -65,19 +73,28 @@ def test_fan_out_rule():
         assert counts[0] == 1 and max(counts) == par
 
 
-def test_serving_tasks_reads_the_session(spark):
-    """The byte unit is the session's ``openCostInBytes``: a tiny frame is
-    one task, and every core once the unit is one byte."""
-    frame = spark.range(1000)
-    par = spark.sparkContext.defaultParallelism
+@contextmanager
+def _open_cost(spark, n_bytes: int):
+    """The session's ``openCostInBytes`` set to ``n_bytes`` for the block."""
     key = "spark.sql.files.openCostInBytes"
     old = spark.conf.get(key)
-    assert serving_tasks(spark, frame) == 1
-    spark.conf.set(key, "1")
+    spark.conf.set(key, str(n_bytes))
     try:
-        assert serving_tasks(spark, frame, frame) == par
+        yield
     finally:
         spark.conf.set(key, old)
+
+
+def test_serving_tasks_reads_the_session(spark):
+    """The byte unit is the session's ``openCostInBytes``: a tiny frame's
+    bytes (Spark's statistic, no job) are one task, and every core once
+    the unit is one byte."""
+    n = frame_bytes(spark.range(1000))
+    par = spark.sparkContext.defaultParallelism
+    assert par < n < OPEN_COST
+    assert serving_tasks(spark, n) == 1
+    with _open_cost(spark, 1):
+        assert serving_tasks(spark, n) == par
 
 
 def test_row_cosines_are_row_local():
@@ -179,12 +196,15 @@ FUZZY = FuzzyQueries(
 
 
 def _lexical_rows(score, tasks: int):
-    """Every matched doc's row per query (k above the corpus size)."""
+    """Every matched doc's row per query (k above the corpus size), from a
+    job of ``tasks`` tasks."""
     k = 2000
-    rows = score(
+    frame = score(
         ENTRIES, k=k, query_terms_override=OVERRIDE, min_should_match=1,
-        fuzzy=FUZZY, tasks=tasks,
-    ).collect()
+        fuzzy=FUZZY,
+    )
+    assert frame.rdd.getNumPartitions() == tasks
+    rows = frame.collect()
     tops = merge_local_topk(
         [(r["query_id"], r["doc_id"], r["score"], r["n_terms_matched"])
          for r in rows if r["term"] is None],
@@ -205,7 +225,8 @@ def test_lexical_scores_identical_across_task_counts(spark, lexical_plans, cache
     )
     assert by_part and 0 not in {r["p"] for r in by_part}  # the trap is set
     one, one_terms = _lexical_rows(score, 1)
-    wide, wide_terms = _lexical_rows(score, par)
+    with _open_cost(spark, 1):
+        wide, wide_terms = _lexical_rows(score, par)
     # multi-term sums: a term-order change would show in their last bits
     assert sum(1 for *_, n in one if n >= 3) > 100
     assert {q for q, *_ in one} == {1, 2, 7, 9}
@@ -214,13 +235,34 @@ def test_lexical_scores_identical_across_task_counts(spark, lexical_plans, cache
     assert one == wide  # exact: ids, score bits, matched-term counts
 
 
-def test_plan_sizes_its_lexical_caches(lexical_plans):
-    """The standing plans bind the rule's count: one task for these
-    KB-sized caches, base and delta alike."""
+def test_lexical_job_size_counts_its_queries(spark, lexical_plans):
+    """A standing plan measures each lexical cache once — the index by its
+    shard bytes on disk, the delta by its postings' bytes — and a lexical
+    job's input is that figure once per query id: a few ids over these
+    KB-sized caches are one task, base and delta alike, and under a unit of
+    1.5 index sizes one query is one task, two are two, and a large batch
+    fills every core."""
+    par = spark.sparkContext.defaultParallelism
     plan = lexical_plans["index"]
-    assert plan._score_base.keywords["tasks"] == 1
-    assert plan._score_delta.keywords["tasks"] == 1
-    assert lexical_plans["raw"]._score_base.keywords["tasks"] == 1
+    n_bytes = plan._score_base.keywords["cache_bytes"]
+    # the file system's figure is the one Spark's file scan reports
+    scan, _ = load_index(spark, plan.index_dir)
+    assert n_bytes == index_bytes(plan.index_dir) == frame_bytes(scan)
+    assert plan._score_delta.keywords["cache_bytes"] == frame_bytes(plan.delta_postings)
+
+    def width(score, n_queries):
+        entries = [(q, "yak zeta") for q in range(n_queries)]
+        return score(entries, k=5).rdd.getNumPartitions()
+
+    raw = lexical_plans["raw"]
+    for score in (plan._score_base, plan._score_delta, raw._score_base):
+        assert width(score, len(ENTRIES)) == 1
+    unit = n_bytes * 3 // 2
+    with _open_cost(spark, unit):
+        counts = [width(plan._score_base, n) for n in (1, 2, 3, 4 * par)]
+    assert counts[:2] == [1, min(2, par)] and counts[-1] == par
+    assert counts == sorted(counts)
+    assert counts[2] == fan_out(3 * n_bytes, unit, par)
 
 
 # -- vector leg: a 1-partition cache vs a defaultParallelism one ----------

@@ -467,9 +467,9 @@ def test_windowed_text_join_composition_runs_more_jobs(spark, ivf_index_plan, mo
     windowed lexical tops, and windowed probe hits joined with the query
     table and the doc store — plans exchanges and broadcasts and runs more
     than 2 jobs for the same batch.  It runs at the width it had then,
-    ``defaultParallelism`` scoring tasks: over the fixture's one-task
-    fan-out a window needs no exchange (one partition is clustered by
-    any key)."""
+    ``defaultParallelism`` scoring tasks (a one-byte ``openCostInBytes``):
+    over the fixture's one-task fan-out a window needs no exchange (one
+    partition is clustered by any key)."""
     from pyspark.sql import functions as F
 
     from hybrid_sanctions_search_engine_spark.operators.similarity import (
@@ -487,7 +487,6 @@ def test_windowed_text_join_composition_runs_more_jobs(spark, ivf_index_plan, mo
         batch_topk_indexed(
             spark, plan.index_dir, ANCHOR_QUERIES, k=5, index_df=plan.index_df,
             meta=plan.index_meta, n_groups=plan._idx_n_groups, pre_grouped=True,
-            tasks=spark.sparkContext.defaultParallelism,
         ).collect()
         hits = knn_ivf_probe_many(
             plan.ann_df, plan.ann_centroids,
@@ -498,7 +497,13 @@ def test_windowed_text_join_composition_runs_more_jobs(spark, ivf_index_plan, mo
             F.broadcast(hits.join(F.broadcast(qmeta), "query_id")), "doc_id"
         ).collect()
 
-    n, plans, _ = _counted_inline(spark, monkeypatch, windowed)
+    key = "spark.sql.files.openCostInBytes"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "1")
+    try:
+        n, plans, _ = _counted_inline(spark, monkeypatch, windowed)
+    finally:
+        spark.conf.set(key, old)
     assert n > 2, plans
     assert any("Exchange hashpartitioning" in p for p in plans), plans
     assert any("BroadcastExchange" in p for p in plans), plans

@@ -696,8 +696,9 @@ def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
     frames of an AC entry set, a weighted (fuzzy) set and a fused set plan
     no exchange between the cached scan and the Python scorer — before the
     cache is materialized too — each runs as one job of exactly the task
-    count the fan-out rule gives its shard bytes (one: the smoke index is
-    far below one ``openCostInBytes``), and an escalated ``search()`` runs
+    count the fan-out rule gives its shard bytes once per query id (one:
+    three times the smoke index is far below one ``openCostInBytes``), and
+    an escalated ``search()`` runs
     exactly one job per lexical stage.  A cold ``topk_search`` over the
     parquet index still shuffles by chunk (the negative control)."""
     from hybrid_sanctions_search_engine_spark.plans import hybrid
@@ -705,15 +706,13 @@ def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
         HybridSearchPlan,
         SearchOpts,
     )
+    from hybrid_sanctions_search_engine_spark.sources.index_io import index_bytes
+    from hybrid_sanctions_search_engine_spark.sources.tables import fan_out
 
-    from hybrid_sanctions_search_engine_spark.sources.tables import (
-        fan_out,
-        frame_bytes,
-    )
-
-    docs, index_dir, idx, _ = corpus
+    docs, index_dir, _, _ = corpus
     par = spark.sparkContext.defaultParallelism
-    want_tasks = fan_out(frame_bytes(idx), 4 << 20, par)
+    # the shapes score at most three query ids
+    want_tasks = fan_out(3 * index_bytes(index_dir), 4 << 20, par)
     assert want_tasks == 1
     opts = SearchOpts(top_k=5, escalation_threshold=1e9)
     plan = HybridSearchPlan(docs, index_dir=index_dir)
