@@ -1247,8 +1247,8 @@ ORDER BY d.id_a, d.id_b
 
 def entry(spark: SparkSession) -> DataFrame:
     """Flagship (north rule): build the compressed sharded inverted index
-    over the sf0.001 corpus, then serve BM25 top-10 through block-max WAND
-    over it — rank- and value-identical to the declarative DataFrame plan
+    over the sf0.001 corpus, then serve BM25 top-10 off it through the one
+    in-place BM25 body (``plans.wand.topk_search``) — rank- and value-identical to the declarative DataFrame plan
     (tests/test_wand.py), same output schema as q_bm25_topk."""
     import atexit
     import shutil

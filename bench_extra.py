@@ -203,7 +203,7 @@ def main() -> None:
         for d in (big_idx, big_ann, pq_dir, sq_dir):
             shutil.rmtree(d, ignore_errors=True)
 
-    # --- one-shot wand over the sf index ----------------------------------
+    # --- topk_search (the one in-place pass) over the sf index -------------
     small_idx = tempfile.mkdtemp(prefix="bx_sidx_")
     try:
         build_index(docs, small_idx, n_shards=8, chunk_bits=9, resume=False)

@@ -10,7 +10,7 @@ Layout:
     functions/   vectorized scalar functions (normalize, tokenize, hashes, vectors)
     operators/   DataFrame operators (postings, bm25, fuzzy, fusion, dedup, similarity)
     sources/     table loaders + sharded index writer with resumable manifests
-    plans/       driver-side query plans (hybrid escalation ladder, block-max WAND)
+    plans/       driver-side query plans (hybrid escalation ladder, indexed BM25 top-k)
     streaming/   incremental index maintenance (delta overlay)
 """
 

@@ -6,9 +6,12 @@ no custom similarity, ``elasticsearch_index_manager.py:103-260``), exact term
 match, multi-field dis-max, phrase adjacency, edge-ngram prefix and wildcard
 match (``elasticsearch_adapters.py:172-255``).
 
-Everything here is JVM-side Column arithmetic — no Python UDFs — so Catalyst
-keeps the whole plan in codegen, pushes the ``term IN (...)`` predicate into
-the postings scan, and plans the final top-k as TakeOrderedAndProject.
+The reference operators (``bm25_topk``, ``bm25_topk_multi``, the phrase,
+prefix and wildcard matchers) are JVM-side Column arithmetic — no Python
+UDFs — so Catalyst keeps the plan in codegen, pushes the ``term IN (...)``
+predicate into the postings scan, and plans the final top-k as
+TakeOrderedAndProject.  The serving top-k (``topk_pre_grouped``) is one
+numpy body over doc groups; every batched and indexed BM25 call runs it.
 
 Scoring (Lucene BM25, the reference engine's default):
     idf(t)      = ln(1 + (N - df + 0.5) / (df + 0.5))
@@ -26,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StringType, StructType
 
-from ..sources.tables import local_frame, serving_tasks
+from ..sources.tables import frame_bytes, local_frame, serving_tasks
 from .postings import CorpusStats, build_postings, corpus_stats, doc_lengths
 from .similarity import local_topk
 
@@ -253,17 +256,17 @@ FUZZY_SCORE_SCHEMA = StructType([*BATCH_SCORE_SCHEMA.fields]).add("term", String
 
 
 def group_partitioned(df: DataFrame, key, n: int) -> DataFrame:
-    """Pin the partitioning of a CPU-heavy ``applyInPandas`` group stage.
+    """Pin the partitioning of a CPU-heavy grouped-map Python stage (the
+    phrase matcher, ``plans.wand.batch_phrase_search``).
 
-    AQE's partition coalescing is byte-based: the scorer's shuffle input is
-    small compressed postings, so AQE happily collapses the n_groups-way
-    shuffle into ONE post-shuffle partition and the whole scoring stage
-    runs single-threaded (measured on the 100-query × 960k-doc batch:
+    AQE's partition coalescing is byte-based: the stage's shuffle input is
+    small compressed postings, so AQE happily collapses an n-way shuffle
+    into ONE post-shuffle partition and the whole stage runs
+    single-threaded (measured on a 100-query × 960k-doc scoring batch:
     11.5 s plain groupBy vs 1.7 s with this explicit repartition — AQE
     does not coalesce user-specified repartitions).  The repartition's
     hash partitioning on the group key satisfies the groupBy's required
-    distribution, so the plan still contains exactly one exchange
-    (asserted in tests/test_wand.py)."""
+    distribution, so the plan still contains exactly one exchange."""
     return df.repartition(n, key)
 
 
@@ -297,17 +300,13 @@ def make_batch_group_scorer(
     min_match_per_qidx=None,
     fuzzy=None,
 ):
-    """Per-doc-group batch scorer for ``applyInPandas``: accumulates a dense
+    """Batch scorer over a union of whole doc groups (the in-place body,
+    ``score_pre_grouped``, hands it one flush at a time): accumulates a dense
     (local docs × queries) BM25 score matrix with one 2-D scatter-add per
     distinct term (each entry in ``term_to_qidx[t]`` is ``(query_idx,
     weight)``), finds every column's k-th matched score with a single matrix
     partition, and emits only the local top-k per query.  Groups must
     partition the doc space, so per-group top-k is exact.
-
-    This replaces the JVM shape (broadcast (query,term) join → per-(query,
-    doc) hash aggregate), which materializes ~|queries| × |corpus| groups —
-    the round-2 batch path's scale wall (215M joined rows / 92M groups /
-    62 s at 960k docs for 100 queries; this shape: ~4 s of numpy).
 
     ``flatten``: optional adapter from the group's rows to flat postings —
     the compressed-index paths pass ``partial(decode_shard_arrays,
@@ -361,8 +360,9 @@ def _no_score_rows():
 
 
 def score_doc_group(spec: GroupScoreSpec, key, pdf):
-    """One doc group's local top-k per query under ``spec`` (see
-    ``make_batch_group_scorer``)."""
+    """A flush of whole doc groups' local top-k per query under ``spec``
+    (see ``make_batch_group_scorer``).  ``key``, a grouped-map key, is
+    ignored: the in-place body passes None."""
     import numpy as np
     import pandas as pd
 
@@ -504,15 +504,16 @@ def _score_rows(spec: GroupScoreSpec, flat: dict):
 
 
 def batch_query_terms(
-    queries: list[tuple[int, str]],
+    queries: list[tuple[int, "str | list[str]"]],
     query_terms_override: list[tuple[int, str, float]] | None = None,
     min_should_match: int | str = 1,
     fuzzy=None,
 ) -> tuple[list[int], dict, list[int] | None] | None:
     """A query set's batch-scorer inputs → (qid_list, term_to_qidx,
     per-query minimum matched-term counts or None), or None when no query
-    has a term.  ``queries`` are tokenized, each distinct term at weight
-    1.0; ``query_terms_override`` adds explicit (query_id, term, weight)
+    has a term.  ``queries`` are tokenized (a query given as a term list is
+    taken verbatim), each distinct term at weight 1.0;
+    ``query_terms_override`` adds explicit (query_id, term, weight)
     triples — an expanded term contributes at its edit-ratio discount.
 
     When BOTH are given (the fused AC+fuzzy shape — one scan and decode
@@ -531,7 +532,10 @@ def batch_query_terms(
     override rules, with no entry in ``term_to_qidx``."""
     from ..functions.tokenize import py_index_tokens
 
-    tokens = {qid: list(dict.fromkeys(py_index_tokens(q))) for qid, q in queries}
+    tokens = {
+        qid: list(dict.fromkeys(py_index_tokens(q) if isinstance(q, str) else q))
+        for qid, q in queries
+    }
     triples = [(qid, t, 1.0) for qid, _ in queries for t in tokens[qid]]
     qid_list = [qid for qid, _ in queries]
     ovr = list(query_terms_override or [])
@@ -572,25 +576,25 @@ FLUSH_POSTINGS = 1 << 16
 
 
 def score_pre_grouped(score_group, k: int):
-    """The in-place scoring body: a ``mapInPandas`` function over a
-    standing cache whose every partition holds ALL the postings of its docs
-    (term-sorted within the partition), coalesced into fewer tasks.  Rows
-    carry their cached partition id in ``part``; coalescing concatenates
-    whole cached partitions, so each partition's rows arrive contiguously.
-    A task holds whole partitions and hands them to ``score_group``
-    (``make_batch_group_scorer`` with top ``k``) together, at the first
-    partition boundary where the held rows reach ``FLUSH_POSTINGS``
-    postings (a shard row counts its ``n_docs``, a raw row one), and at
-    its end: per-partition flushing paid the scorer's pandas/numpy set-up
-    (~1–3 ms) once per cached partition.  Partitions are never split, and
-    one larger than the budget flushes alone; a flush is a union of doc
-    groups, so its local top-k per query is exact.  The task merges its
-    flushes' tops into one top-k per query under (score desc, doc_id asc)
-    before it yields, so its output is ≤ |queries| × k rows however many
-    partitions it coalesced (plus, from a ``fuzzy`` scorer, one report row
-    per distinct term read).  Per-task memory stays near ``FLUSH_POSTINGS``
-    postings plus one cached partition.  A module-level body bound by
-    ``functools.partial``, so it pickles by reference."""
+    """The in-place scoring body: a ``mapInPandas`` function over a frame
+    whose every partition holds ALL the postings of its docs (a standing
+    cache, or a one-off repartition of the matched rows), coalesced into
+    fewer tasks.  Rows carry their partition id in ``part``; coalescing
+    concatenates whole partitions, so each partition's rows arrive
+    contiguously.  A task holds whole partitions and hands them to
+    ``score_group`` (``make_batch_group_scorer`` with top ``k``) together,
+    at the first partition boundary where the held rows reach
+    ``FLUSH_POSTINGS`` postings (a shard row counts its ``n_docs``, a raw
+    row one), and at its end: per-partition flushing paid the scorer's
+    pandas/numpy set-up (~1–3 ms) once per cached partition.  Partitions are
+    never split, and one larger than the budget flushes alone; a flush is a
+    union of doc groups, so its local top-k per query is exact.  The task
+    merges its flushes' tops into one top-k per query under (score desc,
+    doc_id asc) before it yields, so its output is ≤ |queries| × k rows
+    however many partitions it coalesced (plus, from a ``fuzzy`` scorer,
+    one report row per distinct term read).  Per-task memory stays near
+    ``FLUSH_POSTINGS`` postings plus one cached partition.  A module-level
+    body bound by ``functools.partial``, so it pickles by reference."""
     return partial(score_in_place, score_group, k, FLUSH_POSTINGS)
 
 
@@ -658,14 +662,16 @@ def topk_pre_grouped(
     schema: StructType = BATCH_SCORE_SCHEMA,
 ) -> DataFrame:
     """Task-local top-``k`` per query (``BATCH_SCORE_SCHEMA``) of
-    ``matched`` — a filter over a standing cache of ``cache_bytes`` laid
-    out as ``score_pre_grouped`` requires — scored in place by
-    ``score_group`` (built with the same ``k`` for ``n_queries`` query
-    ids): tag ``spark_partition_id()``, ``coalesce`` to the job's task
-    count, one ``mapInPandas``.  One job with no exchange, fresh cache or
-    not (``mapInPandas`` requires no distribution), and one wave of Python
-    tasks.  The task count is ``sources.tables.serving_tasks`` of the
-    cache's bytes once per query id: the scorer's work is postings ×
+    ``matched`` — rows laid out as ``score_pre_grouped`` requires, from an
+    input of ``cache_bytes`` — scored in place by ``score_group`` (built
+    with the same ``k`` for ``n_queries`` query ids): tag
+    ``spark_partition_id()``, ``coalesce`` to the job's task count, one
+    ``mapInPandas``, and one wave of Python tasks.  ``mapInPandas``
+    requires no distribution, so a filter over a standing cache is scored
+    with no exchange, fresh cache or not; a one-off frame brings the one
+    exchange that laid it out (``plans.wand.chunk_groups``,
+    ``doc_groups``).  The task count is ``sources.tables.serving_tasks``
+    of the input's bytes once per query id: the scorer's work is postings ×
     queries, and with no column statistics a query's term filter is taken
     to keep its whole input, as Spark's own size estimate takes a filter.
     Each Python task pays a fixed floor (~45 ms at local[4] before its
@@ -685,20 +691,23 @@ def topk_pre_grouped(
 RAW_CACHE_COLS = ["term", "doc_id", "tf", "doc_len", "df"]
 
 
+def doc_groups(rows: DataFrame) -> DataFrame:
+    """The raw opener: ``rows`` hash-partitioned by doc_id to
+    ``defaultParallelism``, so a partition holds every row of its docs —
+    the layout ``topk_pre_grouped`` scores in place."""
+    par = rows.sparkSession.sparkContext.defaultParallelism
+    return rows.repartition(par, "doc_id")
+
+
 def raw_postings_cache(postings: DataFrame, df: DataFrame) -> DataFrame:
     """A standing raw postings cache: ``postings`` (term, doc_id, tf,
-    doc_len) ⋈ the (term, df) table, hash-partitioned by doc_id to
-    ``defaultParallelism`` and term-sorted within partitions — the layout
-    ``topk_pre_grouped`` scores in place (a partition holds every posting
-    of its docs).  Persisted; the first scoring job materializes it."""
-    par = postings.sparkSession.sparkContext.defaultParallelism
-    return (
+    doc_len) ⋈ the (term, df) table, opened by ``doc_groups`` and
+    term-sorted within partitions.  Persisted; the first scoring job
+    materializes it."""
+    return doc_groups(
         postings.select("term", "doc_id", "tf", "doc_len")
         .join(df.select("term", "df"), "term")
-        .repartition(par, "doc_id")
-        .sortWithinPartitions("term")
-        .persist()
-    )
+    ).sortWithinPartitions("term").persist()
 
 
 def cached_topk_local(
@@ -715,13 +724,15 @@ def cached_topk_local(
     b: float = B,
     cache_bytes: int,
 ) -> DataFrame:
-    """Many queries' task-local top-k over a ``raw_postings_cache``, scored
-    in place under the given corpus statistics → (query_id, doc_id, score,
-    n_terms_matched), ≤ tasks × |queries| × k rows, un-merged (the caller
-    merges them, ``similarity.merge_local_topk``).  The raw twin of
-    ``plans.wand.batch_topk_local(pre_grouped=True)``: same inputs
+    """Many queries' task-local top-k over raw postings laid out by
+    ``doc_groups`` (a ``raw_postings_cache``, or ``batch_topk``'s one-off
+    frame), scored in place under the given corpus statistics →
+    (query_id, doc_id, score, n_terms_matched), ≤ tasks × |queries| × k
+    rows, un-merged (the caller merges them,
+    ``similarity.merge_local_topk``, or ranks them in a window).  The raw
+    twin of ``plans.wand.batch_topk_local``: same inputs
     (``batch_query_terms``, ``fuzzy`` included), same scorer, no varint
-    decode.  ``cache_bytes``: the cache's size, which with the query count
+    decode.  ``cache_bytes``: the input's size, which with the query count
     sizes the job (``topk_pre_grouped``); a standing plan measures it once
     per cache."""
     schema = BATCH_SCORE_SCHEMA if fuzzy is None else FUZZY_SCORE_SCHEMA
@@ -743,48 +754,6 @@ def cached_topk_local(
     )
 
 
-def _aggregate_exploded_rows(pdf):
-    """Raw exploded token rows (term, doc_id, doc_len, df) → the numpy
-    dict shape ``make_batch_group_scorer`` consumes, with tf computed by a
-    run-length pass after an in-task lexsort.  Groups partition the doc
-    space and carry every matched term of their docs, so the in-task tf
-    equals the global (term, doc_id) aggregation — this removes the
-    groupBy exchange from ``batch_topk``'s inline path (the exploded rows
-    were already moving through the doc-group repartition anyway)."""
-    import numpy as np
-    import pandas as pd
-
-    if pdf.empty:
-        return {
-            "term_codes": np.empty(0, dtype=np.int64),
-            "uniq_terms": np.empty(0, dtype=object),
-            "doc_id": np.empty(0, dtype=np.int64),
-            "tf": np.empty(0, dtype=np.int64),
-            "doc_len": np.empty(0, dtype=np.int64),
-            "df": np.empty(0, dtype=np.int64),
-        }
-    codes, uniq = pd.factorize(pdf["term"])
-    ids = pdf["doc_id"].to_numpy(dtype=np.int64)
-    dls = pdf["doc_len"].to_numpy(dtype=np.int64)
-    dfv = pdf["df"].to_numpy(dtype=np.int64)
-    order = np.lexsort((ids, codes))
-    cs, is_ = codes[order], ids[order]
-    newpost = np.empty(cs.size, dtype=bool)
-    newpost[0] = True
-    newpost[1:] = (cs[1:] != cs[:-1]) | (is_[1:] != is_[:-1])
-    starts = np.flatnonzero(newpost)
-    tf = np.diff(np.append(starts, cs.size))
-    sel = order[starts]
-    return {
-        "term_codes": cs[starts].astype(np.int64),
-        "uniq_terms": np.asarray(uniq, dtype=object),
-        "doc_id": ids[sel],
-        "tf": tf.astype(np.int64),
-        "doc_len": dls[sel],
-        "df": dfv[sel],
-    }
-
-
 def batch_topk(
     docs: DataFrame,
     queries: list[tuple[int, str]],
@@ -792,113 +761,65 @@ def batch_topk(
     text_col: str = "text",
     k1: float = K1,
     b: float = B,
-    postings: DataFrame | None = None,
     stats: CorpusStats | None = None,
-    n_groups: int | None = None,
     min_should_match: int | str = 1,
 ) -> DataFrame:
-    """Many queries in ONE job (the reference's msearch, S7): the (query_id,
-    term) set scores against the postings inside per-doc-group Arrow tasks
-    (``make_batch_group_scorer``), then a per-query window ranks the
-    n_groups × nq × k local winners → (query_id, doc_id, score, rank ≤ k).
+    """Many queries in ONE job over raw documents (the reference's
+    msearch, S7) → (query_id, doc_id, score, rank ≤ k, n_terms_matched).
+
+    The query terms' token rows are hash-partitioned by doc_id
+    (``doc_groups``, the layout of ``raw_postings_cache``) and counted into
+    (term, doc_id, doc_len, tf) postings by a JVM aggregate, which the
+    doc_id partitioning already satisfies (no second exchange).  Joined
+    with each term's df, the frame is scored in place by
+    ``cached_topk_local``, and a per-query window ranks the local tops.
+    The job is sized by the corpus scan's bytes (``frame_bytes(docs)``).
 
     ``min_should_match`` follows ES semantics, resolved PER QUERY against
-    its own distinct-term count (``es_min_should_match``).
-
-    This is the scale-correct serving shape for Spark: per-query latency is
-    job-bound (~100ms floor), but a thousand queries cost one job — the
-    reference query set runs amortized, not sequentially — and the
-    query×doc fan-out never reaches a JVM aggregate (it lives in a numpy
-    block per task; see make_batch_group_scorer).
-    """
-    from ..functions.tokenize import py_index_tokens
+    its own distinct-term count (``es_min_should_match``)."""
     from pyspark.sql import Window
 
-    inline_postings = postings is None
+    from ..functions.tokenize import py_index_tokens, spark_index_tokens
+    from .postings import tokenized_documents
+
+    spark = docs.sparkSession
+    all_terms = sorted({t for _, q in queries for t in py_index_tokens(q)})
+    if not all_terms:
+        return local_frame(
+            spark, [],
+            "query_id long, doc_id long, score double, rank int, n_terms_matched int",
+        )
     if stats is None:
         stats = corpus_stats(docs, text_col)
-    spark = docs.sparkSession
-    pairs = [
-        (qid, t)
-        for qid, q in queries
-        for t in dict.fromkeys(py_index_tokens(q))
-    ]
-    out_schema = "query_id long, doc_id long, score double, rank int, n_terms_matched int"
-    if not pairs:
-        return local_frame(spark, [], out_schema)
-    all_terms = sorted({t for _, t in pairs})
-    qid_list = [qid for qid, _ in queries]
-    qidx = {qid: i for i, qid in enumerate(qid_list)}
-    term_to_qidx: dict[str, list[tuple[int, float]]] = {}
-    for qid, t in pairs:
-        term_to_qidx.setdefault(t, []).append((qidx[qid], 1.0))
-    if n_groups is None:
-        n_groups = max(32, spark.sparkContext.defaultParallelism * 2)
-
-    # df side table: for inline postings the old broadcast aggregate over
-    # the postings subtree duplicated the whole tokenize + (term, doc_id)
-    # aggregation pipeline; df = |docs containing term| needs neither —
-    # explode the DISTINCT tokens per doc and count (map-side combined,
-    # shuffles ≤ |terms| rows per partition).  A term window instead would
-    # serialize: ≤ |query terms| distinct keys coalesce to ~1 partition.
-    # Cached/precomputed postings keep the direct aggregate over them.
-    flatten = None
-    if inline_postings:
-        from ..functions.tokenize import spark_index_tokens
-        from .postings import tokenized_documents
-
-        tdf = (
-            docs.select(
-                F.explode(
-                    F.array_distinct(spark_index_tokens(F.col(text_col)))
-                ).alias("term")
-            )
-            .where(F.col("term").isin(all_terms))
-            .groupBy("term")
-            .agg(F.count("*").cast("double").alias("df"))
+    # df = |docs containing term|: explode each doc's DISTINCT tokens and
+    # count (map-side combined, ≤ |terms| rows per partition), broadcast
+    tdf = (
+        docs.select(
+            F.explode(F.array_distinct(spark_index_tokens(F.col(text_col)))).alias("term")
         )
-        # inline path skips the (term, doc_id) aggregation EXCHANGE: raw
-        # exploded rows go straight through the doc-group repartition and
-        # tf is a run-length pass inside the scorer task (groups hold every
-        # matched row of their docs, so the in-task tf is the global tf)
-        exploded = tokenized_documents(docs, text_col).select(
-            "doc_id", "doc_len", F.explode("tokens").alias("term")
-        )
-        flat = (
-            exploded.where(F.col("term").isin(all_terms))
-            .join(F.broadcast(tdf), "term")
-            .select("term", "doc_id", "doc_len", "df")
-        )
-        flatten = _aggregate_exploded_rows
-    else:
-        matched = postings.where(F.col("term").isin(all_terms))
-        tdf = matched.groupBy("term").agg(
-            F.count("*").cast("double").alias("df")
-        )
-        flat = matched.join(F.broadcast(tdf), "term").select(
-            "term", "doc_id", "tf", "doc_len", "df"
-        )
-    n_terms_of = {
-        qid: len(dict.fromkeys(py_index_tokens(q))) for qid, q in queries
-    }
-    msm_arr = [
-        es_min_should_match(min_should_match, n_terms_of[qid])
-        for qid in qid_list
-    ]
-    scorer = make_batch_group_scorer(
-        term_to_qidx, qid_list, stats.n_docs, stats.avgdl, k1, b, k,
-        flatten=flatten,
-        min_match_per_qidx=msm_arr,
+        .where(F.col("term").isin(all_terms))
+        .groupBy("term")
+        .agg(F.count("*").alias("df"))
     )
-    grp_key = F.pmod(F.col("doc_id"), F.lit(n_groups))
-    local_topk = (
-        group_partitioned(flat, grp_key, n_groups)
-        .groupBy(grp_key.alias("grp"))
-        .applyInPandas(scorer, BATCH_SCORE_SCHEMA)
+    tokens = (
+        tokenized_documents(docs, text_col)
+        .select("doc_id", "doc_len", F.explode("tokens").alias("term"))
+        .where(F.col("term").isin(all_terms))
+    )
+    postings = (
+        doc_groups(tokens)
+        .groupBy("term", "doc_id", "doc_len")
+        .agg(F.count("*").alias("tf"))
+        .join(F.broadcast(tdf), "term")
+    )
+    local = cached_topk_local(
+        postings, queries, k, n_docs=stats.n_docs, avgdl=stats.avgdl,
+        min_should_match=min_should_match, k1=k1, b=b,
+        cache_bytes=frame_bytes(docs),
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
-        local_topk.withColumn("rank", F.row_number().over(w))
+        local.withColumn("rank", F.row_number().over(w))
         .where(F.col("rank") <= k)
         .select("query_id", "doc_id", "score", "rank", "n_terms_matched")
     )

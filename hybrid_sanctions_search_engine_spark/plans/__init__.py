@@ -1,1 +1,1 @@
-"""Driver-side query plans: block-max pruned top-k BM25, hybrid escalation."""
+"""Driver-side query plans: indexed top-k BM25, hybrid escalation."""

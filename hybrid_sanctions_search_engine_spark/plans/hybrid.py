@@ -369,19 +369,16 @@ class HybridSearchPlan:
         # (``operators.bm25.topk_pre_grouped``); ``_lexical_tops`` runs it
         if index_dir is not None:
             from ..sources.index_io import index_bytes, load_index
-            from .wand import batch_n_groups
+            from .wand import chunk_groups
 
             self.index_df, self.index_meta = load_index(spark, index_dir)
-            # the compressed index, cached on its chunk groups (whole chunks
-            # per partition; the shuffle is paid once, at materialization)
+            # the compressed index, cached through the scorer's own opener
+            # (whole chunks per partition; the shuffle is paid once, at
+            # materialization, and the opener takes the cache as it is)
             # and term-sorted, so the term IN (...) filter prunes cached
             # batches by min/max stats (guide §2.4/§6)
-            self._idx_n_groups = batch_n_groups(spark, self.index_meta)
             self.index_df = (
-                self.index_df.repartition(
-                    self._idx_n_groups,
-                    F.pmod(F.col("chunk"), F.lit(self._idx_n_groups)),
-                )
+                chunk_groups(spark, self.index_meta, self.index_df)
                 .sortWithinPartitions("term")
                 .persist()
             )
@@ -391,8 +388,7 @@ class HybridSearchPlan:
             self.postings = None
             self._score_base = partial(
                 batch_topk_local, spark, index_dir, index_df=self.index_df,
-                meta=self.index_meta, pre_grouped=True,
-                cache_bytes=index_bytes(index_dir),
+                meta=self.index_meta, cache_bytes=index_bytes(index_dir),
             )
             lexical = self.index_df
         else:
@@ -410,11 +406,11 @@ class HybridSearchPlan:
             self.stats: CorpusStats = CorpusStats(
                 n_docs=n_docs, avgdl=float(total) / max(n_docs, 1)
             )
-            # sized by the materialized cache's in-memory bytes
+            # sized by the corpus scan's bytes, as a one-off batch_topk is
             self._score_base = partial(
                 cached_topk_local, self.postings,
                 n_docs=self.stats.n_docs, avgdl=self.stats.avgdl,
-                cache_bytes=frame_bytes(self.postings),
+                cache_bytes=frame_bytes(docs),
             )
             lexical = self.postings
         self.dictionary = (

@@ -1,4 +1,4 @@
-"""Top-k BM25 over the compressed shard index with block-max pruning.
+"""Top-k BM25 and phrase match over the compressed shard index.
 
 Query lifecycle (mirrors the reference's AC search stage — the posting-list
 join inside Elasticsearch, ``elasticsearch_adapters.py:428-484`` — re-expressed
@@ -7,22 +7,21 @@ over our own index):
  1. tokenize the query; map terms → shard ids driver-side (same xxhash64 the
     build used) → the parquet scan prunes to |terms| shard directories and,
     via term-sorted row-group stats, to the matching rows only.
- 2. compute per-(doc-id-range) chunk upper bounds from the stored block-max
-    arrays — *metadata only*, no posting decode (JVM `array_max` + groupBy).
- 3. score the most promising chunks first to establish the top-k threshold θ,
-    then prune every remaining chunk whose upper bound < θ — exact: a pruned
-    chunk cannot contain a doc scoring above θ.  This is block-max WAND
-    pruning applied at chunk granularity (per-posting pivoting inside a chunk
-    is unnecessary because chunk scoring is a vectorized numpy accumulation).
- 4. surviving chunks are scored in parallel (`applyInPandas` per chunk:
-    ``sources.index_io.decode_shard_arrays`` decodes the rows, and
-    ``operators.bm25.make_batch_group_scorer`` on a batch of one sums the
-    float64 contributions and keeps the local top-k), then merged with a
-    global TakeOrderedAndProject.  A standing plan scores its cached index
-    in place instead, every query shape through
-    ``batch_topk_local(pre_grouped=True)``.  Phrase queries decode position
-    streams through the same reader; a single phrase is a batch of one
-    (``batch_phrase_search``).
+ 2. open the matched rows with ``chunk_groups``, so every partition holds
+    whole chunks: one shuffle over the parquet index, none over a standing
+    cache built by the same opener.
+ 3. score each partition in place (``operators.bm25.topk_pre_grouped``:
+    ``sources.index_io.decode_shard_arrays`` decodes the rows and
+    ``operators.bm25.make_batch_group_scorer`` sums the float64
+    contributions and keeps each query's local top-k).  Chunks partition
+    the doc space, so the local tops merge exactly.  A single query is a
+    batch of one (``topk_search``).
+
+No chunk is skipped by a score bound.  Block-max θ-pruning (an upper-bound
+probe, a seed round, then the surviving chunks) lost to this one pass at
+every corpus size measured, up to 1M Zipf docs (DESIGN_100TB.md, "Pruning
+regime").  Phrase queries decode position streams through the same reader;
+a single phrase is a batch of one (``batch_phrase_search``).
 
 Rank-identity vs the uncompressed DataFrame BM25 plan is asserted in
 tests/test_wand.py.
@@ -37,7 +36,6 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import (
-    DoubleType,
     IntegerType,
     LongType,
     StructField,
@@ -48,9 +46,10 @@ from ..functions.tokenize import py_index_tokens
 from ..operators.bm25 import (
     BATCH_SCORE_SCHEMA,
     FUZZY_SCORE_SCHEMA,
-    es_min_should_match,
+    batch_query_terms,
     group_partitioned,
     make_batch_group_scorer,
+    topk_pre_grouped,
 )
 from ..sources.index_io import (
     IndexMeta,
@@ -60,21 +59,16 @@ from ..sources.index_io import (
 )
 from ..sources.tables import local_frame
 
-RESULT_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("score", DoubleType()),
-        StructField("n_terms_matched", IntegerType()),
-    ]
-)
 
-
-def _shard_of_terms(terms: list[str], n_shards: int) -> dict[str, int]:
-    """Driver-side pmod(xxhash64(term), n_shards) — bit-compatible pure-Python
-    XXH64 (tests/test_xxhash.py), so query routing costs zero Spark jobs."""
+def _term_filter(terms: list[str], meta: IndexMeta):
+    """The shard rows of ``terms``: their shard directories, routed
+    driver-side by pmod(xxhash64(term), n_shards) — bit-compatible
+    pure-Python XXH64 (tests/test_xxhash.py), so routing costs zero Spark
+    jobs — then the terms."""
     from ..functions.xxhash import shard_of_term
 
-    return {t: shard_of_term(t, n_shards) for t in terms}
+    shards = sorted({shard_of_term(t, meta.n_shards) for t in terms})
+    return F.col("shard").isin(shards) & F.col("term").isin(terms)
 
 
 # the posting columns the scorers decode (the shard rows' block metadata and
@@ -91,210 +85,75 @@ def topk_search(
     index_dir: str,
     query: str | list[str],
     k: int = 10,
-    seed_chunks: int = 4,
     index_df: DataFrame | None = None,
     meta: IndexMeta | None = None,
-    term_weights: dict[str, float] | None = None,
-    max_driver_chunks: int = 4096,
     stats_out: dict | None = None,
     min_should_match: int | str = 1,
-    one_shot_chunks: int = 64,
 ) -> DataFrame:
     """Exact top-k BM25 over the compressed index → (doc_id, score,
-    n_terms_matched) ordered (score desc, doc_id asc).
+    n_terms_matched) ordered (score desc, doc_id asc), a lazy frame:
+    ``batch_topk_local`` on a batch of one, then the best ``k`` of its
+    task-local tops.
 
-    ``min_should_match``: ES semantics (``operators.bm25.
-    es_min_should_match``) — applied inside the chunk scorers, so the k
-    results all match at least the resolved number of query terms.
+    A ``str`` query is tokenized; a ``list[str]`` is scored verbatim.
+    ``min_should_match`` (ES semantics, ``operators.bm25.
+    es_min_should_match``) resolves against the distinct-term count.
 
-    ``max_driver_chunks`` caps how many chunk-UB rows the driver may hold
-    (constant, corpus-independent); past the cap, pruning runs in-cluster.
-
-    ``term_weights`` scales each term's stored contribution (the fuzzy
-    stage's edit-ratio discounts); chunk upper bounds stay valid because
-    weights are ≤ 1.
-
-    ``stats_out``: pass a dict to receive pruning telemetry —
-    ``chunks_total`` (candidate chunks), ``chunks_scored`` (seed +
-    survivors actually decoded), ``theta`` (the k-th seed score used as
-    the pruning threshold).  Drives the Zipf-corpus pruning-effectiveness
-    bench (uniform corpora measure ~100% survival; see BENCH.md)."""
+    ``stats_out`` does not change the result.  A dict passed here receives
+    ``chunks_total`` (the chunks holding a query term, counted by one
+    metadata-only job) and ``chunks_scored``, which equals it: no chunk is
+    pruned."""
     if index_df is None or meta is None:
         index_df, meta = load_index(spark, index_dir)
-    terms = query_terms(query) if isinstance(query, str) else list(query)
-    if not terms:
-        return local_frame(spark, [], RESULT_SCHEMA)
-    shard_of = _shard_of_terms(terms, meta.n_shards)
-    shards = sorted(set(shard_of.values()))
-
-    matched = index_df.where(
-        F.col("shard").isin(shards) & F.col("term").isin(terms)
-    )
-
-    # msm_n resolved against the DISTINCT term count: n_terms_matched
-    # tallies distinct terms, and ES counts each duplicate clause as
-    # matched — a duplicate-token query resolved against the duplicate-
-    # inclusive count over-filtered (possibly to empty) and diverged from
-    # the batch paths
-    msm_n = es_min_should_match(min_should_match, len(dict.fromkeys(terms)))
-    par = spark.sparkContext.defaultParallelism
-    # the batch scorer on a batch of one (query id 0): chunks partition the
-    # doc space, so each chunk group's local top-k is exact, and the
-    # minimum_should_match filter runs before it
-    weights = term_weights or {}
-    score_fn = make_batch_group_scorer(
-        {t: [(0, weights.get(t, 1.0))] for t in dict.fromkeys(terms)},
-        [0], meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
-        flatten=partial(decode_shard_arrays, include_df=True),
-        min_match_per_qidx=[msm_n],
-    )
-
-    def score(rows: DataFrame, n_parts: int) -> DataFrame:
-        # explicit AQE-exempt partitioning: the decode+score work per chunk
-        # is CPU-bound, so byte-based AQE coalescing must not serialize it
-        # (operators.bm25.group_partitioned)
-        return (
-            group_partitioned(rows.select(*SCORE_COLS), F.col("chunk"), n_parts)
-            .groupBy("chunk")
-            .applyInPandas(score_fn, BATCH_SCORE_SCHEMA)
-            .drop("query_id")
+    if stats_out is not None:
+        terms = query_terms(query) if isinstance(query, str) else list(query)
+        n = index_df.where(_term_filter(terms, meta)).select("chunk").distinct().count()
+        stats_out.update(chunks_total=n, chunks_scored=n)
+    return (
+        batch_topk_local(
+            spark, index_dir, [(0, query)], k=k, index_df=index_df, meta=meta,
+            min_should_match=min_should_match,
         )
-
-    # metadata-only fast path: when the WHOLE index has at most
-    # one_shot_chunks chunks (dense-id estimate from IndexMeta), every
-    # query's candidate set fits the one-shot bound — skip the UB probe
-    # job entirely and score all matched chunks in ONE job (exact: the
-    # pruning-free upper bound; the probe + θ machinery only ever SKIPS
-    # work).  Callers asking for pruning telemetry (stats_out) keep the
-    # probing path.
-    est_chunks = max(1, int(meta.n_docs) >> meta.chunk_bits)
-    if stats_out is None and est_chunks <= max(seed_chunks * 2, one_shot_chunks):
-        scored = score(matched, max(1, min(est_chunks, par * 2)))
-        return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
-
-    # Chunk upper bounds from block metadata only (no binary decode), kept
-    # IN THE CLUSTER: chunk count grows linearly with the corpus
-    # (doc_id >> chunk_bits ⇒ ~15M chunks at 10^12 docs), so the driver only
-    # ever collects a bounded head of the UB ranking — never the full frame.
-    # UB per (term, chunk) = idf(df) · f(max over blocks tf, min over blocks
-    # dl): BM25's tf-part is monotone ↑tf ↓dl, so this bounds every posting
-    # (row-level max/min is a hair looser than per-block f but keeps the
-    # whole expression in whole-stage codegen — array_max/array_min are
-    # native functions; a zip_with lambda here runs interpreted per row).
-    # The (1+1e-12) inflation absorbs JVM-vs-numpy 1-ulp log() differences
-    # so the bound can never under-estimate a numpy-computed score.
-    k1, b = meta.k1, meta.b
-    n_docs_f, avgdl = float(meta.n_docs), float(meta.avgdl)
-    idf = F.log(
-        F.lit(1.0) + (F.lit(n_docs_f) - F.col("df") + 0.5) / (F.col("df") + 0.5)
+        .select("doc_id", "score", "n_terms_matched")
+        .orderBy(F.desc("score"), F.asc("doc_id"))
+        .limit(k)
     )
-    max_tf = F.array_max("block_max_tf").cast("double")
-    min_dl = F.array_min("block_min_dl").cast("double")
-    tf_part = (max_tf * (k1 + 1.0)) / (
-        max_tf + k1 * (1.0 - b + b * min_dl / avgdl)
-    )
-    term_ub = idf * tf_part * F.lit(1.0 + 1e-12)
-    if term_weights is not None:
-        # weights are ≤ 1 multipliers on a term's contribution; scale the
-        # bound identically so pruning stays exact under weighted scoring
-        wmap = F.create_map(
-            *[F.lit(x) for kv in term_weights.items() for x in kv]
-        )
-        term_ub = term_ub * F.coalesce(wmap[F.col("term")], F.lit(1.0))
-    ubs_df = (
-        matched.select("chunk", term_ub.alias("term_ub"))
-        .groupBy("chunk")
-        .agg(F.sum("term_ub").alias("ub"))
-    )
-    # bounded probe: TakeOrderedAndProject of at most max_driver_chunks+1 UB
-    # rows — a CONSTANT cap (~tens of KB), never O(corpus).  When the whole
-    # UB ranking fits under the cap (every sandbox/moderate index), seeding
-    # and θ-pruning run driver-side with zero extra Spark jobs; only beyond
-    # the cap does the semi-join in-cluster path engage (10^12-doc regime,
-    # ~15M chunks — the frame then never leaves the executors).
-    probe = (
-        ubs_df.orderBy(F.desc("ub"), F.asc("chunk"))
-        .limit(max_driver_chunks + 1)
-        .collect()
-    )
-    if not probe:
-        return local_frame(spark, [], RESULT_SCHEMA)
-
-    def run(chunks: list[int]) -> DataFrame:
-        return score(
-            matched.where(F.col("chunk").isin(chunks)),
-            max(1, min(len(chunks), par * 2)),
-        )
-
-    # the probe saw the COMPLETE UB ranking iff it wasn't truncated at the
-    # cap — only then may driver-side shortcuts assume full knowledge
-    complete = len(probe) <= max_driver_chunks
-    if complete and len(probe) <= max(seed_chunks * 2, one_shot_chunks):
-        # small candidate set: two-phase pruning can't beat its own extra
-        # job round-trips — decoding ≤ one_shot_chunks chunks in ONE job is
-        # cheaper than seed-collect + θ-prune + survivor job even at 0%
-        # survival (each job pays a scheduling floor; the sf0.1 index is 12
-        # chunks and ran three sequential jobs per query).  Exactness is
-        # untouched: scoring every candidate chunk is the pruning-free
-        # upper bound.  Zipf-scale indexes (hundreds of chunks) keep the
-        # two-phase θ path below.
-        if stats_out is not None:
-            stats_out.update(
-                chunks_total=len(probe), chunks_scored=len(probe), theta=None
-            )
-        return (
-            run([int(r["chunk"]) for r in probe])
-            .orderBy(F.desc("score"), F.asc("doc_id"))
-            .limit(k)
-        )
-
-    seed = [int(r["chunk"]) for r in probe[:seed_chunks]]
-    seed_res = run(seed).orderBy(F.desc("score"), F.asc("doc_id")).limit(k).collect()
-    theta = seed_res[-1]["score"] if len(seed_res) >= k else float("-inf")
-
-    # θ pruning: exact — a pruned chunk cannot contain a doc scoring above θ;
-    # ties at θ are kept for the doc_id tiebreak.
-    if complete:
-        # complete UB ranking in hand: prune with a plain isin filter
-        survivors = [
-            int(r["chunk"])
-            for r in probe[seed_chunks:]
-            if float(r["ub"]) >= theta
-        ]
-        if stats_out is not None:
-            stats_out.update(
-                chunks_total=len(probe),
-                chunks_scored=len(seed) + len(survivors),
-                theta=theta if theta != float("-inf") else None,
-            )
-        rest = run(survivors) if survivors else None
-    else:
-        # truncated ranking: θ-prune as a DataFrame filter + semi-join so the
-        # O(chunks) frame stays in the cluster
-        if stats_out is not None:
-            # counts stay in-cluster here by design; only θ is known
-            stats_out.update(chunks_total=None, chunks_scored=None, theta=theta)
-        survivor_chunks = ubs_df.where(
-            (F.col("ub") >= theta) & ~F.col("chunk").isin(seed)
-        ).select("chunk")
-        rest = score(matched.join(survivor_chunks, "chunk", "left_semi"), par * 2)
-    all_res = local_frame(spark, seed_res, RESULT_SCHEMA)
-    if rest is not None:
-        all_res = all_res.unionByName(rest)
-    return all_res.orderBy(F.desc("score"), F.asc("doc_id")).limit(k)
 
 
 def batch_n_groups(spark: SparkSession, meta: IndexMeta) -> int:
-    """The batched scorer's doc-group count — one formula shared by
-    ``batch_topk_indexed`` and standing plans that pre-partition their
-    cached index on ``pmod(chunk, n_groups)`` so the per-query-batch
-    shuffle disappears (see ``HybridSearchPlan``)."""
+    """The chunk-group count of ``chunk_groups``: twice the cores, at least
+    32, capped by the index's chunk count (dense-id estimate) — a group
+    beyond it is an EMPTY partition, and the explicit repartition launches a
+    task for each — and at least 8."""
     n_groups = max(32, spark.sparkContext.defaultParallelism * 2)
-    # cap by the index's chunk count (dense-id estimate): pmod groups
-    # beyond it are EMPTY partitions, and the explicit repartition
-    # launches a task for each — pure overhead at small scale
     est_chunks = max(1, int(meta.n_docs) >> meta.chunk_bits)
     return max(8, min(n_groups, est_chunks))
+
+
+def chunk_groups(spark: SparkSession, meta: IndexMeta, rows: DataFrame) -> DataFrame:
+    """The one opener of the indexed BM25 body: shard ``rows`` hash-
+    partitioned on ``pmod(chunk, batch_n_groups(spark, meta))``, so each
+    partition holds whole chunks — every posting of its docs — as
+    ``operators.bm25.topk_pre_grouped`` requires.
+
+    A standing plan caches its index through this opener.  ``rows`` that
+    a filter, projection or local sort derives from such a repartition
+    (the plan's cache) are returned as they are: a second repartition
+    would cost no shuffle (EnsureRequirements drops it), but AQE would
+    re-plan every scoring job to drop it (~10 ms a job).  Over the
+    parquet index (``load_index``) it is one shuffle of the matched rows,
+    exempt from AQE's coalescing."""
+    node = rows._jdf.queryExecution().analyzed()
+    while node.nodeName() in ("Project", "Filter") or (
+        node.nodeName() == "Sort" and not getattr(node, "global")()
+    ):
+        node = node.child()
+    if node.nodeName() == "RepartitionByExpression" and (
+        node.partitionExpressions().head().sql().startswith("pmod(chunk, ")
+    ):
+        return rows
+    n = batch_n_groups(spark, meta)
+    return rows.repartition(n, F.pmod(F.col("chunk"), F.lit(n)))
 
 
 def batch_topk_indexed(
@@ -314,13 +173,16 @@ def batch_topk_indexed(
     ``batch_topk_local``'s task-local tops under a per-query window
     (score desc, doc_id asc).  A caller that collects anyway merges the
     local tops on the driver instead (``similarity.merge_local_topk``) and
-    skips the window's exchange."""
+    skips the window's exchange.
+
+    ``n_groups`` and ``pre_grouped`` have no effect: ``chunk_groups``
+    sizes the groups, and opens a standing cache as it is."""
     from pyspark.sql import Window
 
     local = batch_topk_local(
         spark, index_dir, queries, k=k, index_df=index_df, meta=meta,
-        n_groups=n_groups, query_terms_override=query_terms_override,
-        min_should_match=min_should_match, pre_grouped=pre_grouped,
+        query_terms_override=query_terms_override,
+        min_should_match=min_should_match,
     )
     w = Window.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
     return (
@@ -333,59 +195,43 @@ def batch_topk_indexed(
 def batch_topk_local(
     spark: SparkSession,
     index_dir: str,
-    queries: list[tuple[int, str]],
+    queries: list[tuple[int, "str | list[str]"]],
     k: int = 10,
     index_df: DataFrame | None = None,
     meta: IndexMeta | None = None,
-    n_groups: int | None = None,
     query_terms_override: list[tuple[int, str, float]] | None = None,
     min_should_match: int | str = 1,
-    pre_grouped: bool = False,
     fuzzy=None,
     cache_bytes: int | None = None,
 ) -> DataFrame:
     """Many queries' task-local top-k over the COMPRESSED index (the
     serving shape ``operators.bm25.batch_topk`` provides over raw
     documents, minus its corpus re-tokenize): shard+term-pruned scan →
-    per-chunk-group numpy scoring (one dense (local docs × queries)
-    accumulator per task, local top-k per query) →
-    (query_id, doc_id, score, n_terms_matched), ≤ n_groups × |queries| × k
+    ``chunk_groups`` → per-task numpy scoring in place
+    (``operators.bm25.topk_pre_grouped``: one dense (local docs × queries)
+    accumulator per flush, local top-k per query) →
+    (query_id, doc_id, score, n_terms_matched), ≤ tasks × |queries| × k
     rows, un-merged.  Chunks partition the doc space, so each query's
     global top-k is exactly the top k of its local rows.
-
-    The round-2 shape (decode → broadcast (query, term) join → JVM
-    per-(query, doc) hash aggregate) materialized ~|queries| × |corpus|
-    aggregation groups — 215M joined rows / 92M groups / 62 s at 960k docs
-    for a 100-query batch.  Scoring inside the Arrow task keeps the
-    query×doc fan-out in numpy slice-adds and ships only n_groups × nq × k
-    rows out (same 960k-doc batch: 73 s → ~4 s).
 
     Scores use the same BM25 formula and stored df as the JVM path; sums run
     in a different float order (per-term numpy accumulation vs hash-agg
     arrival order), so equality with the document-side plan holds to ~1e-12
     relative, not bit-exactly.
 
-    Memory note: the accumulator is dense in the query set (8 B × local docs
-    × nq per task) — split query sets of many thousands into sub-batches.
-
-    ``query_terms_override`` / ``min_should_match``: explicit weighted
-    (query_id, term, weight) triples beside or instead of the tokenized
-    ``queries``, and the ES minimum_should_match of the tokenized ones
+    ``index_df``: the parquet index, or a standing cache built by
+    ``chunk_groups`` (one exchange for the first, none for the second).
+    ``queries`` / ``query_terms_override`` / ``min_should_match``: the
+    tokenized (or, given as a term list, verbatim) queries, explicit
+    weighted (query_id, term, weight) triples beside or instead of them,
+    and the ES minimum_should_match of the tokenized ones
     (``operators.bm25.batch_query_terms`` holds the rules).  ``fuzzy``
     (``operators.fuzzy.FuzzyQueries``) adds query ids the scoring tasks
     expand themselves over the candidate rows they read; the output then
     also carries their term reports (``FUZZY_SCORE_SCHEMA``).
-
-    ``pre_grouped``: every partition of ``index_df`` holds whole chunks (a
-    standing plan caches its index on ``pmod(chunk, batch_n_groups(…))``,
-    term-sorted).  The cache is then scored in place
-    (``operators.bm25.topk_pre_grouped``): one job, no exchange, its task
-    count sized by ``cache_bytes`` (the index's shard bytes on disk,
-    ``sources.index_io.index_bytes``, which a standing plan reads once)
-    and the query count, and ``n_groups`` plays no part.  Without it the
-    matched rows shuffle to ``n_groups`` chunk groups."""
-    from ..operators.bm25 import batch_query_terms, topk_pre_grouped
-
+    ``cache_bytes``: the index's shard bytes (``sources.index_io.
+    index_bytes``, read here when not given), which with the query count
+    sizes the job."""
     if index_df is None or meta is None:
         index_df, meta = load_index(spark, index_dir)
     schema = BATCH_SCORE_SCHEMA if fuzzy is None else FUZZY_SCORE_SCHEMA
@@ -394,33 +240,20 @@ def batch_topk_local(
         return local_frame(spark, [], schema)
     qid_list, term_to_qidx, msm_arr = spec
     # the exact terms' rows, pruned to their shards, and fuzzy's candidates
-    cond = None
-    if term_to_qidx:
-        all_terms = sorted(term_to_qidx)
-        shards = sorted(set(_shard_of_terms(all_terms, meta.n_shards).values()))
-        cond = F.col("shard").isin(shards) & F.col("term").isin(all_terms)
+    cond = _term_filter(sorted(term_to_qidx), meta) if term_to_qidx else None
     if fuzzy is not None:
         fz = fuzzy.candidate_filter()
         cond = fz if cond is None else cond | fz
-    matched = index_df.where(cond).select(*SCORE_COLS)
+    matched = chunk_groups(spark, meta, index_df.where(cond).select(*SCORE_COLS))
     score_group = make_batch_group_scorer(
         term_to_qidx, qid_list, meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
         flatten=partial(decode_shard_arrays, include_df=True),
         min_match_per_qidx=msm_arr, fuzzy=fuzzy,
     )
-    if pre_grouped:
-        if cache_bytes is None:
-            cache_bytes = index_bytes(index_dir)
-        return topk_pre_grouped(
-            matched, score_group, k, cache_bytes, len(qid_list), schema
-        )
-    if n_groups is None:
-        n_groups = batch_n_groups(spark, meta)
-    grp_key = F.pmod(F.col("chunk"), F.lit(n_groups))
-    return (
-        group_partitioned(matched, grp_key, n_groups)
-        .groupBy(grp_key.alias("grp"))
-        .applyInPandas(score_group, schema)
+    if cache_bytes is None:
+        cache_bytes = index_bytes(index_dir)
+    return topk_pre_grouped(
+        matched, score_group, k, cache_bytes, len(qid_list), schema
     )
 
 
@@ -597,11 +430,7 @@ def batch_phrase_search(
     if not qterms:
         return local_frame(spark, [], BATCH_PHRASE_SCHEMA)
     all_terms = sorted({t for _, ts in qterms for t in ts})
-    shard_of = _shard_of_terms(all_terms, meta.n_shards)
-    shards = sorted(set(shard_of.values()))
-    matched = index_df.where(
-        F.col("shard").isin(shards) & F.col("term").isin(all_terms)
-    )
+    matched = index_df.where(_term_filter(all_terms, meta))
     chunk_bits = meta.chunk_bits
 
     def match_many(key, pdf):

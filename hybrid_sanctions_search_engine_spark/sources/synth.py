@@ -1,11 +1,12 @@
 """Deterministic synthetic corpora beyond the harness tables.
 
 The harness ``documents`` table draws terms nearly UNIFORMLY — measured in
-round 3, 99.9% of chunks survive block-max θ-pruning there, because every
+round 3, 99.9% of chunks survived block-max θ-pruning there, because every
 chunk's upper bound is about the same (BENCH.md).  Real web text is
-Zipfian: a few giant posting lists and a long tail, which is exactly the
-regime block-max WAND exists for.  This module synthesizes a seeded Zipf
-corpus so pruning effectiveness can be MEASURED instead of asserted.
+Zipfian: a few giant posting lists and a long tail, the regime block-max
+WAND exists for.  This module synthesizes a seeded Zipf corpus so such
+choices are MEASURED instead of asserted (θ-pruning lost to the one
+in-place BM25 pass on it; DESIGN_100TB.md, "Pruning regime").
 
 Generation is distributed (mapInPandas over ``spark.range`` — numpy per
 Arrow batch, no driver materialization) and fully deterministic: every

@@ -37,7 +37,7 @@ from hybrid_sanctions_search_engine_spark.plans.hybrid import (
     HybridSearchPlan,
     SearchOpts,
 )
-from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
+from hybrid_sanctions_search_engine_spark.sources.index_io import build_index, load_index
 from hybrid_sanctions_search_engine_spark.streaming.incremental import (
     fold_delta_embeddings,
     load_delta_embeddings,
@@ -189,8 +189,8 @@ def test_lexical_overlay_still_serves_marker_terms(env, monkeypatch):
 
     The base side of the overlay is scored in place on the plan's cache;
     strong and escalated results, for msm 1 and "75%", must equal EXACTLY
-    those of ``batch_topk_local``'s shuffle-by-group path over the same
-    cache."""
+    those of the same scorer over the cold parquet index (one repartition
+    by chunk group, no cache)."""
     plan = env["plan"]
     res, _ = plan.search("zorblatt", SearchOpts(top_k=5))
     ids = {r["doc_id"] for r in res.collect()}
@@ -236,10 +236,9 @@ def test_lexical_overlay_still_serves_marker_terms(env, monkeypatch):
     monkeypatch.undo()
     plan._driver_dict = ...
 
-    # the plan's bound base scorer, patched back to the shuffle path
-    monkeypatch.setattr(
-        plan, "_score_base", partial(plan._score_base, pre_grouped=False)
-    )
+    # the plan's bound base scorer, pointed at the cold parquet index
+    cold, _ = load_index(plan.index_df.sparkSession, plan.index_dir)
+    monkeypatch.setattr(plan, "_score_base", partial(plan._score_base, index_df=cold))
     assert in_place == served()
 
 

@@ -70,12 +70,15 @@ def test_index_backed_plan_matches_dataframe_plan(
 
     The index-backed plan scores its lexical stages in place on its cache;
     strong and escalated results, for msm 1 and "75%", must equal EXACTLY
-    those of ``batch_topk_local``'s shuffle-by-group path over the same
-    cache."""
+    those of the same scorer over the cold parquet index (one repartition
+    by chunk group, no cache)."""
     import os
     from functools import partial
 
-    from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
+    from hybrid_sanctions_search_engine_spark.sources.index_io import (
+        build_index,
+        load_index,
+    )
 
     docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
     index_dir = str(tmp_path_factory.mktemp("hybrid_idx"))
@@ -108,9 +111,10 @@ def test_index_backed_plan_matches_dataframe_plan(
 
     in_place = served()
     assert any("FUZZY" not in stages for stages, _ in in_place)
-    # the plan's bound base scorer, patched back to the shuffle path
+    # the plan's bound base scorer, pointed at the cold parquet index
+    cold, _ = load_index(spark, index_dir)
     monkeypatch.setattr(
-        plan_idx, "_score_base", partial(plan_idx._score_base, pre_grouped=False)
+        plan_idx, "_score_base", partial(plan_idx._score_base, index_df=cold)
     )
     assert in_place == served()
 

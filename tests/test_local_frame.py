@@ -486,7 +486,7 @@ def test_windowed_text_join_composition_runs_more_jobs(spark, ivf_index_plan, mo
     def windowed():
         batch_topk_indexed(
             spark, plan.index_dir, ANCHOR_QUERIES, k=5, index_df=plan.index_df,
-            meta=plan.index_meta, n_groups=plan._idx_n_groups, pre_grouped=True,
+            meta=plan.index_meta,
         ).collect()
         hits = knn_ivf_probe_many(
             plan.ann_df, plan.ann_centroids,

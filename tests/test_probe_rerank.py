@@ -461,12 +461,16 @@ LEX_CASES = {
 
 
 @pytest.mark.parametrize("case", sorted(LEX_CASES))
-def test_lexical_local_tops_merge_equals_window(spark, tie_index, case):
+def test_lexical_local_tops_merge_equals_window(spark, tie_index, case, monkeypatch):
+    from hybrid_sanctions_search_engine_spark.operators import bm25
     from hybrid_sanctions_search_engine_spark.plans.wand import (
         batch_topk_indexed,
         batch_topk_local,
     )
 
+    # four scoring tasks, whatever the cores and this tiny index's size,
+    # so the driver merge meets more task-local rows than it keeps
+    monkeypatch.setattr(bm25, "serving_tasks", lambda spark, n_bytes: 4)
     index_dir, idx, meta = tie_index
     kw = dict(k=K, index_df=idx, meta=meta, **LEX_CASES[case])
     queries = kw.pop("queries")

@@ -105,10 +105,10 @@ def test_scoring_identity_with_positions_index(spark, pos_corpus):
 
 
 def test_topk_collect_is_bounded(spark, sf_smoke_dir, tmp_path_factory, monkeypatch):
-    """The driver must never collect an O(corpus) frame: with chunk_bits=2
-    the index has ~10× more chunks than the default fixture, yet every
-    ``collect()`` during topk_search stays bounded by the seed/probe/k
-    constants (this guards the in-cluster θ-pruning design)."""
+    """The driver never collects an O(corpus) frame: with chunk_bits=2 the
+    index has ~10× more chunks than the default fixture, yet every
+    ``collect()`` of a topk_search call, its pruning telemetry included,
+    holds at most k rows — and the call still equals the reference."""
     import os as _os
 
     index_dir = str(tmp_path_factory.mktemp("wand_many_chunks"))
@@ -131,29 +131,21 @@ def test_topk_collect_is_bounded(spark, sf_smoke_dir, tmp_path_factory, monkeypa
         return rows
 
     monkeypatch.setattr(DataFrame, "collect", spy_collect)
-    k, seed_chunks, cap = 10, 4, 8
-    # cap < chunk count forces the in-cluster semi-join path: the driver may
-    # hold at most cap+1 UB rows even though the index has far more chunks
-    res = topk_search(spark, index_dir, "spark query join", k=k,
-                      seed_chunks=seed_chunks, index_df=idx, meta=meta,
-                      max_driver_chunks=cap)
+    k, stats = 10, {}
+    got = [
+        (r["doc_id"], round(r["score"], 9))
+        for r in topk_search(spark, index_dir, "spark query join", k=k,
+                             index_df=idx, meta=meta, stats_out=stats).collect()
+    ]
     monkeypatch.undo()
-    assert res.count() <= k
-    bound = max(k, cap + 1)
-    assert collected_sizes and max(collected_sizes) <= bound
-
-    # rank identity must hold on BOTH pruning paths
-    in_cluster = [
+    assert collected_sizes and max(collected_sizes) <= k
+    # nothing is pruned: every candidate chunk is scored
+    assert 0 < stats["chunks_scored"] == stats["chunks_total"] <= n_chunks
+    want = [
         (r["doc_id"], round(r["score"], 9))
-        for r in topk_search(spark, index_dir, "spark query join", k=k,
-                             index_df=idx, meta=meta, max_driver_chunks=cap).collect()
+        for r in bm25_topk(docs, "spark query join", k=k).collect()
     ]
-    driver_side = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in topk_search(spark, index_dir, "spark query join", k=k,
-                             index_df=idx, meta=meta).collect()
-    ]
-    assert in_cluster == driver_side
+    assert got == want
 
 
 def test_batch_topk_indexed_identity(spark, corpus):
@@ -180,24 +172,6 @@ def test_batch_topk_indexed_identity(spark, corpus):
                                     index_df=idx, meta=meta).collect()
     )
     assert got == want
-
-
-@pytest.mark.parametrize("query", QUERIES)
-def test_both_pruning_paths_identical(spark, corpus, query):
-    """In-cluster semi-join pruning (forced via a tiny driver cap) returns
-    exactly what driver-side pruning returns, for every standard query."""
-    docs, index_dir, idx, meta = corpus
-    a = [
-        (r["doc_id"], round(r["score"], 9), r["n_terms_matched"])
-        for r in topk_search(spark, index_dir, query, k=10,
-                             index_df=idx, meta=meta, max_driver_chunks=1).collect()
-    ]
-    b = [
-        (r["doc_id"], round(r["score"], 9), r["n_terms_matched"])
-        for r in topk_search(spark, index_dir, query, k=10,
-                             index_df=idx, meta=meta).collect()
-    ]
-    assert a == b
 
 
 @pytest.mark.parametrize(
@@ -600,55 +574,70 @@ def test_batch_phrase_unordered_parity(spark, pos_corpus):
 
 
 def test_batch_scorer_partitioning_pinned(spark, corpus):
-    """The scorer's explicit repartition must (a) satisfy the groupBy's
-    required distribution — exactly ONE exchange between scan and the
-    Arrow scorer — and (b) keep the stage at n_groups partitions so AQE's
-    byte-based coalescing can't serialize the CPU-heavy scoring (measured
-    11.5 s → 1.7 s on a 100-query × 960k-doc batch)."""
+    """One-off calls open their rows with one explicit repartition: in the
+    executed plan after the job ran (AQE's final plan), exactly ONE
+    exchange sits between the scan and the Python scorer — on
+    ``pmod(chunk, n)`` over the parquet index (``chunk_groups``), on doc_id
+    over raw documents (``doc_groups``; the tf aggregate above it needs no
+    second one) — in the REPARTITION_BY_NUM form AQE's byte-based
+    coalescing leaves alone, so it can't serialize the CPU-heavy scoring
+    (measured 11.5 s → 1.7 s on a 100-query × 960k-doc batch)."""
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import batch_topk
     from hybrid_sanctions_search_engine_spark.plans.wand import batch_topk_indexed
 
     docs, index_dir, idx, meta = corpus
     batch = [(1, "spark query"), (2, "table scan")]
-    df = batch_topk_indexed(spark, index_dir, batch, k=5, index_df=idx, meta=meta)
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    scorer_pos = plan.find("FlatMapGroupsInPandas")
-    assert scorer_pos >= 0, plan
-    below = plan[scorer_pos:]
-    # one exchange feeds the scorer (the explicit repartition); no second
-    # exchange re-shuffles between it and the groupBy
-    assert below.count("Exchange hashpartitioning") == 1, below
-    assert "REPARTITION_BY_NUM" in below, below  # AQE-exempt form
+    frames = [
+        ("(pmod(chunk", batch_topk_indexed(spark, index_dir, batch, k=5, index_df=idx, meta=meta)),
+        ("(pmod(chunk", topk_search(spark, index_dir, "spark query", k=5, index_df=idx, meta=meta)),
+        ("(doc_id", batch_topk(docs, batch, k=5)),
+    ]
+    for key, df in frames:
+        df.collect()
+        below = _scorer_input(df, scan="FileScan")
+        assert below.count("Exchange") == 1, below
+        assert f"Exchange hashpartitioning{key}" in below, below
+        assert "REPARTITION_BY_NUM" in below, below
 
 
 def test_pre_grouped_scorer_plans_zero_exchanges(spark, corpus):
-    """``pre_grouped=True`` over a standing plan's cached
-    ``pmod(chunk, batch_n_groups)`` layout scores the cache in place: NO
-    exchange between the cached scan and the Arrow scorer — on a fresh,
-    unmaterialized cache too, as ``mapInPandas`` requires no distribution.
-    The shuffle-by-group path (``pre_grouped=False``) over the same cache
-    plans its exchange (the negative control), and both return the same
-    rows."""
+    """Over a standing plan's cache, built by the scorer's own opener
+    (``chunk_groups``), the scorer's input plans NO exchange between the
+    cached scan and the Python scorer — before the job, on a fresh cache
+    that this job fills, and in AQE's final plan after it: the opener
+    returns cache-derived rows as they are, not even planning a
+    repartition that AQE would drop (that re-planning cost ~10 ms a job).
+    Over the cold ``load_index`` frame the same call plans exactly one
+    exchange (the negative control), and both return the same rows."""
     from hybrid_sanctions_search_engine_spark.plans.hybrid import HybridSearchPlan
-    from hybrid_sanctions_search_engine_spark.plans.wand import batch_topk_indexed
+    from hybrid_sanctions_search_engine_spark.plans.wand import (
+        SCORE_COLS,
+        batch_topk_indexed,
+        chunk_groups,
+    )
 
-    docs, index_dir, _, _ = corpus
+    docs, index_dir, _, meta = corpus
     plan = HybridSearchPlan(docs, index_dir=index_dir)
+    cold, _ = load_index(spark, index_dir)
     batch = [(1, "spark query"), (2, "table scan")]
 
-    def below_scorer(pre_grouped):
+    def scored(index_df, scan):
         df = batch_topk_indexed(
-            spark, index_dir, batch, k=5, index_df=plan.index_df,
-            meta=plan.index_meta, n_groups=plan._idx_n_groups,
-            pre_grouped=pre_grouped,
+            spark, index_dir, batch, k=5, index_df=index_df, meta=plan.index_meta,
         )
-        return df, _scorer_input(df)
+        before = _scorer_input(df, scan)
+        rows = sorted(df.collect())
+        return rows, before, _scorer_input(df, scan)
 
     try:
-        df, below = below_scorer(True)
-        assert "Exchange" not in below and "Coalesce" in below, below
-        want, shuffled = below_scorer(False)
-        assert "Exchange hashpartitioning" in shuffled, shuffled
-        assert sorted(df.collect()) == sorted(want.collect())
+        cached = plan.index_df.where("term = 'spark'").select(*SCORE_COLS)
+        assert chunk_groups(spark, meta, cached) is cached
+        rows, before, after = scored(plan.index_df, "InMemoryTableScan")
+        for below in (before, after):
+            assert "Exchange" not in below and "Coalesce" in below, below
+        want, _, after = scored(cold, "FileScan")
+        assert after.count("Exchange") == 1, after
+        assert rows == want
     finally:
         plan.close()
 
@@ -695,12 +684,13 @@ def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
     ``pmod(chunk)``-partitioned cache, whatever the call shape: the scoring
     frames of an AC entry set, a weighted (fuzzy) set and a fused set plan
     no exchange between the cached scan and the Python scorer — before the
-    cache is materialized too — each runs as one job of exactly the task
-    count the fan-out rule gives its shard bytes once per query id (one:
-    three times the smoke index is far below one ``openCostInBytes``), and
-    an escalated ``search()`` runs
-    exactly one job per lexical stage.  A cold ``topk_search`` over the
-    parquet index still shuffles by chunk (the negative control)."""
+    cache is materialized too, and in the plan the job ran — each runs as
+    one job of exactly the task count the fan-out rule gives its shard
+    bytes once per query id (one: three times the smoke index is far below
+    one ``openCostInBytes``), and an
+    escalated ``search()`` runs exactly one job per lexical stage.  The
+    same frames over the cold parquet index run exactly one exchange, the
+    opener's repartition by chunk group (the negative control)."""
     from hybrid_sanctions_search_engine_spark.plans import hybrid
     from hybrid_sanctions_search_engine_spark.plans.hybrid import (
         HybridSearchPlan,
@@ -723,14 +713,18 @@ def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
         dict(entries=[(1, "spark query join"), (2, "sort")], override=weighted, msm=1),
     ]
 
-    def frame(entries, override, msm):
+    def frame(entries, override, msm, **kw):
         return plan._score_base(
-            entries, k=5, query_terms_override=override, min_should_match=msm
+            entries, k=5, query_terms_override=override, min_should_match=msm,
+            **kw,
         )
 
     try:
         for shape in shapes:  # a fresh plan: building a frame submits no job
-            assert "Exchange" not in _scorer_input(frame(**shape))
+            df = frame(**shape)
+            assert "Exchange" not in _scorer_input(df)
+            df.collect()  # the first job fills the cache
+            assert "Exchange" not in _scorer_input(df)
         plan.index_df.count()
         for shape in shapes:
             df = frame(**shape)
@@ -756,10 +750,13 @@ def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
         )
         assert [t.stage for t in out["trace"]] == ["AC", "FUZZY", "HYBRID"]
         assert jobs == 2
+        cold, _ = load_index(spark, index_dir)
+        for shape in shapes:
+            df = frame(**shape, index_df=cold)
+            df.collect()
+            assert _scorer_input(df, scan="FileScan").count("Exchange") == 1
     finally:
         plan.close()
-    cold = topk_search(spark, index_dir, "spark query join", k=5)
-    assert "Exchange hashpartitioning" in _scorer_input(cold, scan="FileScan")
 
 
 def _zipf_shard_rows(seed: int, n_docs: int, vocab: int, chunk_bits: int):

@@ -255,10 +255,9 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
 
     expected = {
         "operators.fuzzy.dictionary_bloom.<locals>.build",
-        # topk_search's chunk groups: the batch scorer on a batch of one
-        "operators.bm25.score_doc_group",
-        # every lexical stage's one in-place body (the batch scorer rides
-        # inside it); both are module-level, bound by functools.partial
+        # every lexical stage's and topk_search's one in-place body (the
+        # batch scorer, score_doc_group, rides inside it); both are
+        # module-level, bound by functools.partial
         "operators.bm25.score_in_place",
         # the batched vector leg's Arrow-map bodies: each emits its task's
         # top-k with the rerank inputs (text, query text, partial ratio)

@@ -1,21 +1,18 @@
-"""Block-max θ-pruning effectiveness on a Zipfian corpus.
+"""Exact top-k BM25 on a Zipfian corpus.
 
-The harness documents table is near-uniform, where every chunk's upper
-bound ties and pruning provably cannot help (99.9% survival measured in
-round 3 — BENCH.md).  Real web text is Zipfian; these tests pin, on a
-seeded Zipf corpus (sources/synth.py), that
-
-  * pruned top-k is RANK-IDENTICAL to exhaustive scoring (exactness is
-    corpus-independent, but assert it in the regime where pruning actually
-    fires), and
-  * for the canonical WAND-winning shape — a ubiquitous term + a rare,
-    high-idf term — θ from the seed chunks prunes most candidate chunks.
+Real web text is Zipfian (the harness documents table is near-uniform).
+On a seeded Zipf corpus (sources/synth.py) these tests pin that the
+indexed ``topk_search`` — one in-place pass over every candidate chunk —
+equals the Column-expression reference ``bm25_topk`` at 9 decimals, for
+the shapes a score bound would have favoured (a ubiquitous term plus a
+rare, high-idf one) and the ones it would not.  Block-max θ-pruning, which these
+shapes once exercised, lost to that one pass at every size measured and is
+gone (DESIGN_100TB.md, "Pruning regime").
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from hybrid_sanctions_search_engine_spark.sources.synth import zipf_documents
 
@@ -68,52 +65,21 @@ def test_corpus_is_deterministic_and_zipfian(spark):
 
 @pytest.mark.parametrize(
     "query",
-    ["w1 w9000", "w0 w2 w15000", "w4000 w11000", "w3"],
+    ["w1 w9000", "w0 w2 w15000", "w4000 w11000", "w3", "w0 w1"],
 )
-def test_pruned_rank_identical_to_exhaustive(spark, zipf_index, query):
+def test_topk_search_equals_reference(spark, zipf_index, query):
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import bm25_topk
     from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
 
-    _, index_dir, idx, meta = zipf_index
-    pruned = [
-        (r["doc_id"], round(r["score"], 9))
+    docs, index_dir, idx, meta = zipf_index
+    want = [
+        (r["doc_id"], round(r["score"], 9), r["n_terms_matched"])
+        for r in bm25_topk(docs, query, k=10).collect()
+    ]
+    got = [
+        (r["doc_id"], round(r["score"], 9), r["n_terms_matched"])
         for r in topk_search(
             spark, index_dir, query, k=10, index_df=idx, meta=meta
         ).collect()
     ]
-    exhaustive = [
-        (r["doc_id"], round(r["score"], 9))
-        for r in topk_search(
-            spark, index_dir, query, k=10, index_df=idx, meta=meta,
-            seed_chunks=10**6,  # forces the single-pass score-everything path
-        ).collect()
-    ]
-    assert pruned == exhaustive, query
-
-
-def test_pruning_bites_on_zipf(spark, zipf_index):
-    """Ubiquitous + rare query: chunks holding only the ubiquitous term
-    bound below θ and are skipped — the block-max WAND regime."""
-    from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
-
-    _, index_dir, idx, meta = zipf_index
-    # θ needs k rare-term hits in the seed: the rare term's postings sit
-    # one-per-chunk, so seed_chunks must exceed k (seed 8, k 5) — the
-    # standard WAND dynamic, not a corpus artifact
-    stats: dict = {}
-    topk_search(
-        spark, index_dir, "w1 w9000", k=5, seed_chunks=8, index_df=idx,
-        meta=meta, stats_out=stats,
-    ).collect()
-    assert stats["chunks_total"] > 100  # the ubiquitous term reaches ~all chunks
-    survival = stats["chunks_scored"] / stats["chunks_total"]
-    assert survival < 0.15, stats
-    # even an all-ubiquitous query prunes on Zipf text: per-chunk max-tf
-    # variance (Poisson tails of the head terms) separates the bounds, so
-    # θ from the best chunks skips ordinary ones — measured 9/313 here.
-    # Only a tf-UNIFORM corpus (the harness table) defeats pruning.
-    stats2: dict = {}
-    topk_search(
-        spark, index_dir, "w0 w1", k=5, seed_chunks=8, index_df=idx,
-        meta=meta, stats_out=stats2,
-    ).collect()
-    assert stats2["chunks_scored"] / stats2["chunks_total"] < 0.5
+    assert got == want, query
