@@ -499,16 +499,18 @@ def main() -> None:
             zidx, zmeta = load_index(spark, zdir)
             zcache = chunk_groups(spark, zmeta, zidx).sortWithinPartitions("term").persist()
             zcache.count()
-            stats: dict = {}
+            stats: dict = {}  # this call also warms the cold frame
             topk_search(spark, zdir, "w1 w9000", k=5, index_df=zidx,
                         meta=zmeta, stats_out=stats).collect()
             t0 = time.monotonic()
             topk_search(spark, zdir, "w1 w9000", k=5, index_df=zidx,
                         meta=zmeta).collect()
             cold_sec = time.monotonic() - t0
-            t0 = time.monotonic()
-            topk_search(spark, zdir, "w1 w9000", k=5, index_df=zcache,
-                        meta=zmeta).collect()
+            # one warm call per frame before its timed one
+            for _ in range(2):
+                t0 = time.monotonic()
+                topk_search(spark, zdir, "w1 w9000", k=5, index_df=zcache,
+                            meta=zmeta).collect()
             cached_sec = time.monotonic() - t0
             extra["zipf_pruning"] = {
                 "n_docs": 60_000,
