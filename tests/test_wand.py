@@ -174,6 +174,35 @@ def test_batch_topk_indexed_identity(spark, corpus):
     assert got == want
 
 
+@pytest.fixture(scope="module")
+def standing_plan(corpus):
+    from hybrid_sanctions_search_engine_spark.plans.hybrid import HybridSearchPlan
+
+    docs, index_dir, _, _ = corpus
+    plan = HybridSearchPlan(docs, index_dir=index_dir)
+    yield plan
+    plan.close()
+
+
+@pytest.mark.parametrize("query", QUERIES)
+def test_cache_and_cold_index_identical(spark, corpus, standing_plan, query):
+    """``topk_search`` over a standing plan's cache (built by the opener, so
+    scored in place) returns exactly what it returns over the cold parquet
+    index (repartitioned by the opener), scores bit for bit, for every
+    standard query."""
+    _, index_dir, idx, meta = corpus
+    plan = standing_plan
+
+    def rows(index_df, meta):
+        return [
+            (r["doc_id"], r["score"], r["n_terms_matched"])
+            for r in topk_search(spark, index_dir, query, k=10,
+                                 index_df=index_df, meta=meta).collect()
+        ]
+
+    assert rows(plan.index_df, plan.index_meta) == rows(idx, meta)
+
+
 @pytest.mark.parametrize(
     "phrase,slop",
     [

@@ -83,3 +83,46 @@ def test_topk_search_equals_reference(spark, zipf_index, query):
         ).collect()
     ]
     assert got == want, query
+
+
+def test_stats_out_counts_every_candidate_chunk(spark, zipf_index):
+    """``stats_out`` prunes nothing and changes nothing: for a ubiquitous +
+    rare query it reports every chunk holding a query term — counted here
+    from the raw postings, ``doc_id >> chunk_bits`` — as scored, a ``str``
+    query and its ``list[str]`` tokens report alike, and the call still
+    equals the reference."""
+    from pyspark.sql import functions as F
+
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import bm25_topk
+    from hybrid_sanctions_search_engine_spark.operators.postings import build_postings
+    from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
+
+    docs, index_dir, idx, meta = zipf_index
+    want_chunks = (
+        build_postings(docs, positions=False)
+        .where(F.col("term").isin("w1", "w9000"))
+        .select(F.shiftright("doc_id", meta.chunk_bits).alias("chunk"))
+        .distinct()
+        .count()
+    )
+    stats: dict = {}
+    got = [
+        (r["doc_id"], round(r["score"], 9))
+        for r in topk_search(
+            spark, index_dir, "w1 w9000", k=5, index_df=idx, meta=meta,
+            stats_out=stats,
+        ).collect()
+    ]
+    assert stats == {"chunks_total": want_chunks, "chunks_scored": want_chunks}
+    assert want_chunks > 100  # the ubiquitous term reaches ~all chunks
+    listed: dict = {}
+    topk_search(
+        spark, index_dir, ["w1", "w9000"], k=5, index_df=idx, meta=meta,
+        stats_out=listed,
+    )
+    assert listed == stats
+    want = [
+        (r["doc_id"], round(r["score"], 9))
+        for r in bm25_topk(docs, "w1 w9000", k=5).collect()
+    ]
+    assert got == want
