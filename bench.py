@@ -12,6 +12,7 @@ import json
 import os
 import re
 import shutil
+import statistics
 import sys
 import tempfile
 import time
@@ -235,7 +236,9 @@ def main() -> None:
         )
 
         # indexed batch serving (no corpus re-tokenize): first run pays
-        # codegen, the warm run is the standing-cluster serving number
+        # codegen, the warm runs are the standing-cluster serving number —
+        # the leg is the median of 7 in-process warm calls (one call's
+        # spread across processes was wider than the effects it judged)
         from hybrid_sanctions_search_engine_spark.plans.wand import (
             batch_topk_indexed,
         )
@@ -243,12 +246,17 @@ def main() -> None:
         batch_topk_indexed(
             spark, index_dir, batch100, k=10, index_df=idx, meta=meta
         ).collect()
-        timed(
-            "q_batch_100_indexed_warm",
-            lambda: batch_topk_indexed(
+        warm = []
+        for _ in range(7):
+            t0 = time.monotonic()
+            batch_topk_indexed(
                 spark, index_dir, batch100, k=10, index_df=idx, meta=meta
-            ).collect(),
-        )
+            ).collect()
+            warm.append(round(time.monotonic() - t0, 4))
+        timings["q_batch_100_indexed_warm"] = statistics.median(warm)
+        extra["q_batch_100_indexed_warm_repeats"] = {
+            "sec": warm, "median_sec": statistics.median(warm),
+        }
         extra["amortized_ms_per_query_indexed_warm"] = round(
             timings["q_batch_100_indexed_warm"] * 1000 / 100, 2
         )

@@ -3,11 +3,11 @@
 Reproduces the reference's lexical retrieval semantics (SURVEY.md §2.3) on
 Spark: Lucene-default BM25 (k1=1.2, b=0.75 — the reference's ES mappings set
 no custom similarity, ``elasticsearch_index_manager.py:103-260``), exact term
-match, multi-field dis-max, phrase adjacency, edge-ngram prefix and wildcard
+match, multi-field dis-max, phrase adjacency, prefix completion and wildcard
 match (``elasticsearch_adapters.py:172-255``).
 
 The reference operators (``bm25_topk``, ``bm25_topk_multi``, the phrase,
-prefix and wildcard matchers) are JVM-side Column arithmetic — no Python
+completion and wildcard matchers) are JVM-side Column arithmetic — no Python
 UDFs — so Catalyst keeps the plan in codegen, pushes the ``term IN (...)``
 predicate into the postings scan, and plans the final top-k as
 TakeOrderedAndProject.  The serving top-k (``topk_pre_grouped``) is one
@@ -22,14 +22,14 @@ Scoring (Lucene BM25, the reference engine's default):
 from __future__ import annotations
 
 from dataclasses import dataclass
-from functools import partial
+from functools import cache, partial
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StringType, StructType
 
-from ..sources.tables import frame_bytes, local_frame, serving_tasks
+from ..sources.tables import frame_bytes, local_frame, serving_tasks, sql_in
 from .postings import CorpusStats, build_postings, corpus_stats, doc_lengths
 from .similarity import local_topk
 
@@ -653,6 +653,13 @@ def score_in_place(score_group, k: int, flush_postings: int, batches):
         yield _merged_tops(tops, k)
 
 
+@cache
+def _partition_id() -> Column:
+    """``spark_partition_id()``, built once per process: a session-free
+    expression, and building it costs py4j round trips per call."""
+    return F.spark_partition_id()
+
+
 def topk_pre_grouped(
     matched: DataFrame,
     score_group,
@@ -682,7 +689,7 @@ def topk_pre_grouped(
     ``schema``: ``FUZZY_SCORE_SCHEMA`` for a scorer built with ``fuzzy``."""
     tasks = serving_tasks(matched.sparkSession, cache_bytes * max(n_queries, 1))
     return (
-        matched.withColumn("part", F.spark_partition_id())
+        matched.withColumn("part", _partition_id())
         .coalesce(tasks)
         .mapInPandas(score_pre_grouped(score_group, k), schema)
     )
@@ -701,9 +708,9 @@ def doc_groups(rows: DataFrame) -> DataFrame:
 
 def raw_postings_cache(postings: DataFrame, df: DataFrame) -> DataFrame:
     """A standing raw postings cache: ``postings`` (term, doc_id, tf,
-    doc_len) ⋈ the (term, df) table, opened by ``doc_groups`` and
-    term-sorted within partitions.  Persisted; the first scoring job
-    materializes it."""
+    doc_len) ⋈ the (term, df) table — ``RAW_CACHE_COLS``, the scorer's own
+    projection — opened by ``doc_groups`` and term-sorted within
+    partitions.  Persisted; the first scoring job materializes it."""
     return doc_groups(
         postings.select("term", "doc_id", "tf", "doc_len")
         .join(df.select("term", "df"), "term")
@@ -726,7 +733,9 @@ def cached_topk_local(
 ) -> DataFrame:
     """Many queries' task-local top-k over raw postings laid out by
     ``doc_groups`` (a ``raw_postings_cache``, or ``batch_topk``'s one-off
-    frame), scored in place under the given corpus statistics →
+    frame; ``RAW_CACHE_COLS`` only), filtered by one predicate string
+    (``sources.tables.sql_in``: no per-term py4j round trip) and scored in
+    place under the given corpus statistics →
     (query_id, doc_id, score, n_terms_matched), ≤ tasks × |queries| × k
     rows, un-merged (the caller merges them,
     ``similarity.merge_local_topk``, or ranks them in a window).  The raw
@@ -744,13 +753,12 @@ def cached_topk_local(
         term_to_qidx, qid_list, n_docs, avgdl, k1, b, k,
         min_match_per_qidx=msm_arr, fuzzy=fuzzy,
     )
-    cond = F.col("term").isin(sorted(term_to_qidx)) if term_to_qidx else None
+    cond = sql_in("term", sorted(term_to_qidx)) if term_to_qidx else None
     if fuzzy is not None:
         fz = fuzzy.candidate_filter()
-        cond = fz if cond is None else cond | fz
-    matched = cached.where(cond).select(*RAW_CACHE_COLS)
+        cond = fz if cond is None else f"({cond}) OR ({fz})"
     return topk_pre_grouped(
-        matched, score_group, k, cache_bytes, len(qid_list), schema
+        cached.where(cond), score_group, k, cache_bytes, len(qid_list), schema
     )
 
 
@@ -811,6 +819,7 @@ def batch_topk(
         .groupBy("term", "doc_id", "doc_len")
         .agg(F.count("*").alias("tf"))
         .join(F.broadcast(tdf), "term")
+        .select(*RAW_CACHE_COLS)
     )
     local = cached_topk_local(
         postings, queries, k, n_docs=stats.n_docs, avgdl=stats.avgdl,
@@ -1018,25 +1027,6 @@ def _phrase_match_lucene(base, phrase_terms, slop, _within_slop):
         )
     return current.where(F.size("cand") > 0).select(
         "doc_id", F.size("cand").alias("n_occurrences")
-    )
-
-
-def prefix_match_terms(
-    postings: DataFrame, prefix: str, min_len: int = 2, max_len: int = 20
-) -> DataFrame:
-    """Edge-ngram prefix semantics (analyzer min 2 / max 20 grams,
-    ``elasticsearch_index_manager.py:296-315``): all index terms extending
-    ``prefix``. Rather than materializing edge-ngrams at index time (×10
-    index bloat at web scale), the same result comes from a range predicate
-    on the term dictionary — sargable on a term-sorted index."""
-    p = prefix.lower()
-    if len(p) < min_len:
-        return postings.where(F.lit(False)).select("term").distinct()
-    return (
-        postings.where(F.col("term").startswith(p) & (F.length("term") >= min_len))
-        .where(F.length(F.lit(p)) <= max_len)
-        .select("term")
-        .distinct()
     )
 
 

@@ -27,9 +27,8 @@ from typing import Callable
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
 
-from ..sources.tables import local_frame
+from ..sources.tables import local_frame, sql_in
 from .similarity import (
     ProbeQueries,
     ProbeRerank,
@@ -129,7 +128,7 @@ def fused_cell_probe_many(
                 }
             )
 
-    pruned = indexed.where(F.col(cell_col).isin(union))
+    pruned = indexed.where(sql_in(cell_col, union))
     local = pruned.select(id_col, code_col, cell_col).mapInPandas(
         code_scan, f"query_id long, {id_col} long, {score_col} double"
     )
@@ -167,7 +166,7 @@ def fused_cell_probe_many(
             yield topk_record_batch(rows, picks, ids, id_col, rerank)
 
     scored = (
-        pruned.where(F.col(id_col).isin(union_ids))
+        pruned.where(sql_in(id_col, union_ids))
         .select(*probe_input_cols([id_col, vec_col], rerank))
         .mapInArrow(rerank_pass, probe_schema(id_col, rerank))
     )

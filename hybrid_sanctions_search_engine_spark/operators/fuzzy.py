@@ -45,10 +45,11 @@ from __future__ import annotations
 import re
 from collections.abc import Iterable
 from dataclasses import dataclass
-from functools import reduce
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+
+from ..sources.tables import sql_literal
 
 # ---------------------------------------------------------------------------
 # L6: fuzzy candidate generation (prefix-bucketed Levenshtein join)
@@ -149,37 +150,35 @@ class FuzzyQueries:
         """``expand_terms`` of these queries over ``terms``."""
         return expand_terms(self.queries, terms, self.max_edits, self.max_expansions)
 
-    def candidate_filter(self) -> Column:
-        """The JVM filter of the candidate rows: a prefix test per query
-        bucket — ``startswith``, which the term-sorted caches' per-batch
-        min/max stats prune on — ANDed with ``exists(prefix_map[
+    def candidate_filter(self) -> str:
+        """The predicate text of the candidate rows: a prefix test per
+        query bucket — ``startswith``, which the term-sorted caches'
+        per-batch min/max stats prune on — ANDed with ``exists(prefix_map[
         substring(term, 1, plen)], q -> levenshtein(term, q) <= e)``, one
         literal prefix → query-terms map per prefix length (1-char terms
         keep their ``q[:1]`` bucket).  A map lookup and a few Levenshtein
-        calls per surviving row, whatever the number of query terms."""
+        calls per surviving row, whatever the number of query terms.  One
+        string (literals in ``sources.tables.sql_literal``'s form), so
+        building it costs the driver no py4j round trip."""
         by_len: dict[int, dict[str, set[str]]] = {}
         for _, ts in self.queries:
             for q in ts:
                 by_len.setdefault(len(q[:2]), {}).setdefault(q[:2], set()).add(q)
-        term = F.col("term")
         prefixes = sorted(p for buckets in by_len.values() for p in buckets)
-        in_bucket = reduce(Column.__or__, (term.startswith(p) for p in prefixes))
+        in_bucket = " OR ".join(
+            f"startswith(term, {sql_literal(p)})" for p in prefixes
+        )
         hits = []
         for plen, buckets in sorted(by_len.items()):
-            prefix_map = F.create_map(
-                *(
-                    c
-                    for pfx, qs in sorted(buckets.items())
-                    for c in (F.lit(pfx), F.array(*map(F.lit, sorted(qs))))
-                )
+            prefix_map = ", ".join(
+                f"{sql_literal(pfx)}, array({', '.join(map(sql_literal, sorted(qs)))})"
+                for pfx, qs in sorted(buckets.items())
             )
             hits.append(
-                F.exists(
-                    prefix_map[F.substring(term, 1, plen)],
-                    lambda q: F.levenshtein(term, q) <= self.max_edits,
-                )
+                f"exists(map({prefix_map})[substring(term, 1, {plen})], "
+                f"q -> levenshtein(term, q) <= {int(self.max_edits)})"
             )
-        return in_bucket & reduce(Column.__or__, hits)
+        return f"({in_bucket}) AND ({' OR '.join(hits)})"
 
 
 # ---------------------------------------------------------------------------

@@ -33,7 +33,7 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_col
 from ..sources.fs import fs_for
-from ..sources.tables import local_frame
+from ..sources.tables import local_frame, sql_in
 from .fuzzy import rerank_row
 
 # the ANN layouts a HybridSearchPlan serves (``ann_kind``) and
@@ -524,7 +524,7 @@ def knn_ivf_probe_many(
             yield topk_record_batch(rows, picks, ids, id_col, rerank)
 
     local = (
-        indexed.where(F.col(cell_col).isin(union))
+        indexed.where(sql_in(cell_col, union))
         .select(*probe_input_cols([id_col, vec_col, cell_col], rerank))
         .mapInArrow(score, probe_schema(id_col, rerank))
     )

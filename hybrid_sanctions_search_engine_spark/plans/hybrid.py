@@ -44,7 +44,7 @@ from ..operators.similarity import (
     merge_local_topk,
 )
 from ..sources.tables import frame_bytes, local_frame, serving_tasks
-from .wand import batch_topk_local, query_terms
+from .wand import index_topk_local, query_terms
 
 _SPEC_GROUP_SEQ = itertools.count()
 
@@ -366,10 +366,12 @@ class HybridSearchPlan:
         # min_should_match=)`` → task-local tops over a STANDING cache
         # partitioned so that each partition holds every posting of its
         # docs, term-sorted — scored in place, one job with no exchange
-        # (``operators.bm25.topk_pre_grouped``); ``_lexical_tops`` runs it
+        # (``operators.bm25.topk_pre_grouped``); ``_lexical_tops`` runs it.
+        # It is bound to the scorer's projection of the cache, built here
+        # once: a call adds one predicate string to it
         if index_dir is not None:
             from ..sources.index_io import index_bytes, load_index
-            from .wand import chunk_groups
+            from .wand import chunk_groups, index_rows
 
             self.index_df, self.index_meta = load_index(spark, index_dir)
             # the compressed index, cached through the scorer's own opener
@@ -387,7 +389,8 @@ class HybridSearchPlan:
             )
             self.postings = None
             self._score_base = partial(
-                batch_topk_local, spark, index_dir, index_df=self.index_df,
+                index_topk_local,
+                index_rows(spark, self.index_meta, self.index_df),
                 meta=self.index_meta, cache_bytes=index_bytes(index_dir),
             )
             lexical = self.index_df
@@ -684,22 +687,20 @@ class HybridSearchPlan:
         pre-grouped compressed index, or the raw postings ⋈ df cache) and,
         while attached, the delta's raw cache — is scored in place under
         its own corpus statistics (the reference overlay semantics); the
-        job collects their task-local tops, and the driver keeps the best
-        score per (query, doc) and each query's k, so the job plans no
+        job collects their task-local tops as the scorers emit them
+        (``BATCH_SCORE_SCHEMA``, or ``FUZZY_SCORE_SCHEMA`` with ``fuzzy``),
+        unioned only while a delta is attached, and the driver keeps the
+        best score per (query, doc) and each query's k, so the job plans no
         exchange."""
-        cols = ["query_id", "doc_id", "score"] + (["term"] if fuzzy else [])
-        local = None
-        for score in (self._score_base, self._score_delta):
-            if score is None:
-                continue
-            part = score(
-                entries, k=k, query_terms_override=override,
-                min_should_match=msm, fuzzy=fuzzy,
-            ).select(*cols)
-            local = part if local is None else local.unionByName(part)
+        kw = dict(
+            k=k, query_terms_override=override, min_should_match=msm, fuzzy=fuzzy
+        )
+        local = self._score_base(entries, **kw)
+        if self._score_delta is not None:
+            local = local.union(self._score_delta(entries, **kw))
         best: dict[tuple[int, int], float] = {}
         seen: set[str] = set()
-        for q, doc, sc, *term in local.collect():
+        for q, doc, sc, _n, *term in local.collect():
             if term and term[0] is not None:
                 seen.add(term[0])
             elif (q, doc) not in best or sc > best[(q, doc)]:

@@ -4,12 +4,14 @@ Query lifecycle (mirrors the reference's AC search stage — the posting-list
 join inside Elasticsearch, ``elasticsearch_adapters.py:428-484`` — re-expressed
 over our own index):
 
- 1. tokenize the query; map terms → shard ids driver-side (same xxhash64 the
-    build used) → the parquet scan prunes to |terms| shard directories and,
-    via term-sorted row-group stats, to the matching rows only.
- 2. open the matched rows with ``chunk_groups``, so every partition holds
-    whole chunks: one shuffle over the parquet index, none over a standing
-    cache built by the same opener.
+ 1. open the index's scored columns with ``chunk_groups`` once per index
+    frame (``index_rows``), so every partition holds whole chunks: one
+    shuffle over the parquet index, none over a standing cache built by the
+    same opener.
+ 2. tokenize the query; map terms → shard ids driver-side (same xxhash64 the
+    build used) → one predicate string (``_term_filter``) that the parquet
+    scan prunes to |terms| shard directories and, via term-sorted row-group
+    stats, to the matching rows only (a cached scan, by batch stats).
  3. score each partition in place (``operators.bm25.topk_pre_grouped``:
     ``sources.index_io.decode_shard_arrays`` decodes the rows and
     ``operators.bm25.make_batch_group_scorer`` sums the float64
@@ -57,18 +59,18 @@ from ..sources.index_io import (
     index_bytes,
     load_index,
 )
-from ..sources.tables import local_frame
+from ..sources.tables import local_frame, sql_in
 
 
-def _term_filter(terms: list[str], meta: IndexMeta):
-    """The shard rows of ``terms``: their shard directories, routed
-    driver-side by pmod(xxhash64(term), n_shards) — bit-compatible
-    pure-Python XXH64 (tests/test_xxhash.py), so routing costs zero Spark
-    jobs — then the terms."""
+def _term_filter(terms: list[str], meta: IndexMeta) -> str:
+    """The predicate text of the shard rows of ``terms``: their shard
+    directories, routed driver-side by pmod(xxhash64(term), n_shards) —
+    bit-compatible pure-Python XXH64 (tests/test_xxhash.py), so routing
+    costs zero Spark jobs — then the terms."""
     from ..functions.xxhash import shard_of_term
 
     shards = sorted({shard_of_term(t, meta.n_shards) for t in terms})
-    return F.col("shard").isin(shards) & F.col("term").isin(terms)
+    return f"{sql_in('shard', shards)} AND {sql_in('term', terms)}"
 
 
 # the posting columns the scorers decode (the shard rows' block metadata and
@@ -141,8 +143,10 @@ def chunk_groups(spark: SparkSession, meta: IndexMeta, rows: DataFrame) -> DataF
     (the plan's cache) are returned as they are: a second repartition
     would cost no shuffle (EnsureRequirements drops it), but AQE would
     re-plan every scoring job to drop it (~10 ms a job).  Over the
-    parquet index (``load_index``) it is one shuffle of the matched rows,
-    exempt from AQE's coalescing."""
+    parquet index (``load_index``) it is one shuffle of the matched rows
+    (a filter above it is pushed below it), exempt from AQE's coalescing.
+    The walk costs py4j round trips, so it runs once per index frame
+    (``index_rows``), never per call."""
     node = rows._jdf.queryExecution().analyzed()
     while node.nodeName() in ("Project", "Filter") or (
         node.nodeName() == "Sort" and not getattr(node, "global")()
@@ -192,6 +196,17 @@ def batch_topk_indexed(
     )
 
 
+def index_rows(spark: SparkSession, meta: IndexMeta, index_df: DataFrame) -> DataFrame:
+    """The rows the indexed scorer reads: ``index_df``'s ``SCORE_COLS``
+    opened by ``chunk_groups`` — built once per index frame (a standing
+    plan builds its cache's once, and ``chunk_groups`` takes the cache as
+    it is).  Each call filters it with one predicate string
+    (``index_topk_local``); the term filter's ``shard`` column, outside the
+    projection, resolves below it, so a parquet scan still prunes shard
+    directories."""
+    return chunk_groups(spark, meta, index_df.select(*SCORE_COLS))
+
+
 def batch_topk_local(
     spark: SparkSession,
     index_dir: str,
@@ -206,21 +221,49 @@ def batch_topk_local(
 ) -> DataFrame:
     """Many queries' task-local top-k over the COMPRESSED index (the
     serving shape ``operators.bm25.batch_topk`` provides over raw
-    documents, minus its corpus re-tokenize): shard+term-pruned scan →
-    ``chunk_groups`` → per-task numpy scoring in place
+    documents, minus its corpus re-tokenize): ``index_topk_local`` over
+    ``index_rows`` of ``index_df`` — the parquet index (one exchange), or
+    a standing cache built by ``chunk_groups`` (none) — loaded from
+    ``index_dir`` when not given.  ``cache_bytes``: the index's shard
+    bytes (``sources.index_io.index_bytes``, read here when not given)."""
+    if index_df is None or meta is None:
+        index_df, meta = load_index(spark, index_dir)
+    if cache_bytes is None:
+        cache_bytes = index_bytes(index_dir)
+    return index_topk_local(
+        index_rows(spark, meta, index_df), queries, k, meta=meta,
+        query_terms_override=query_terms_override,
+        min_should_match=min_should_match, fuzzy=fuzzy, cache_bytes=cache_bytes,
+    )
+
+
+def index_topk_local(
+    rows: DataFrame,
+    queries: list[tuple[int, "str | list[str]"]],
+    k: int = 10,
+    *,
+    meta: IndexMeta,
+    query_terms_override: list[tuple[int, str, float]] | None = None,
+    min_should_match: int | str = 1,
+    fuzzy=None,
+    cache_bytes: int,
+) -> DataFrame:
+    """The indexed BM25 body: ``rows`` (``index_rows``) filtered by one
+    predicate string — the exact terms' rows, pruned to their shards, OR
+    fuzzy's candidates — then scored in place per task
     (``operators.bm25.topk_pre_grouped``: one dense (local docs × queries)
     accumulator per flush, local top-k per query) →
     (query_id, doc_id, score, n_terms_matched), ≤ tasks × |queries| × k
     rows, un-merged.  Chunks partition the doc space, so each query's
-    global top-k is exactly the top k of its local rows.
+    global top-k is exactly the top k of its local rows.  The call's py4j
+    round trips do not grow with its queries or terms: they all ride in
+    the predicate text.
 
     Scores use the same BM25 formula and stored df as the JVM path; sums run
     in a different float order (per-term numpy accumulation vs hash-agg
     arrival order), so equality with the document-side plan holds to ~1e-12
     relative, not bit-exactly.
 
-    ``index_df``: the parquet index, or a standing cache built by
-    ``chunk_groups`` (one exchange for the first, none for the second).
     ``queries`` / ``query_terms_override`` / ``min_should_match``: the
     tokenized (or, given as a term list, verbatim) queries, explicit
     weighted (query_id, term, weight) triples beside or instead of them,
@@ -229,31 +272,24 @@ def batch_topk_local(
     (``operators.fuzzy.FuzzyQueries``) adds query ids the scoring tasks
     expand themselves over the candidate rows they read; the output then
     also carries their term reports (``FUZZY_SCORE_SCHEMA``).
-    ``cache_bytes``: the index's shard bytes (``sources.index_io.
-    index_bytes``, read here when not given), which with the query count
+    ``cache_bytes``: the index's shard bytes, which with the query count
     sizes the job."""
-    if index_df is None or meta is None:
-        index_df, meta = load_index(spark, index_dir)
     schema = BATCH_SCORE_SCHEMA if fuzzy is None else FUZZY_SCORE_SCHEMA
     spec = batch_query_terms(queries, query_terms_override, min_should_match, fuzzy)
     if spec is None:
-        return local_frame(spark, [], schema)
+        return local_frame(rows.sparkSession, [], schema)
     qid_list, term_to_qidx, msm_arr = spec
-    # the exact terms' rows, pruned to their shards, and fuzzy's candidates
     cond = _term_filter(sorted(term_to_qidx), meta) if term_to_qidx else None
     if fuzzy is not None:
         fz = fuzzy.candidate_filter()
-        cond = fz if cond is None else cond | fz
-    matched = chunk_groups(spark, meta, index_df.where(cond).select(*SCORE_COLS))
+        cond = fz if cond is None else f"({cond}) OR ({fz})"
     score_group = make_batch_group_scorer(
         term_to_qidx, qid_list, meta.n_docs, meta.avgdl, meta.k1, meta.b, k,
         flatten=partial(decode_shard_arrays, include_df=True),
         min_match_per_qidx=msm_arr, fuzzy=fuzzy,
     )
-    if cache_bytes is None:
-        cache_bytes = index_bytes(index_dir)
     return topk_pre_grouped(
-        matched, score_group, k, cache_bytes, len(qid_list), schema
+        rows.where(cond), score_group, k, cache_bytes, len(qid_list), schema
     )
 
 

@@ -8,6 +8,7 @@ column pruning) at test scale.
 from __future__ import annotations
 
 import os
+from numbers import Integral
 from typing import Any, Iterable
 
 import pyarrow as pa
@@ -69,6 +70,34 @@ def local_frame(
         schema=arrow_schema,
     )
     return spark.createDataFrame(table, struct)
+
+
+def sql_literal(value: str | int) -> str:
+    """``value`` as Spark SQL literal text: a string as
+    ``CAST(X'<utf-8 hex>' AS STRING)``, an integer as its digits.
+
+    A serving frame is one ``DataFrame.where(<text>)`` call, where a
+    ``Column`` predicate costs the driver py4j round trips per literal
+    (``F.lit``, ``isin``'s list).  The hex form puts no quote or backslash
+    in front of the parser, so a term reads back byte for byte under both
+    settings of ``spark.sql.parser.escapedStringLiterals`` (a backslash-
+    escaped ``'…'`` literal, and Spark's raw ``r'…'`` one, lost rows under
+    ``true``); constant folding turns the cast into a plain string literal,
+    so an ``IN`` list of them plans the ``INSET`` filter ``isin`` plans,
+    pushed into a cached scan."""
+    if isinstance(value, str):
+        return f"CAST(X'{value.encode('utf-8').hex()}' AS STRING)"
+    if isinstance(value, Integral) and not isinstance(value, bool):
+        return str(int(value))
+    raise TypeError(f"no SQL literal form for {type(value).__name__}: {value!r}")
+
+
+def sql_in(column: str, values: Iterable[str | int]) -> str:
+    """The predicate text ``column IN (<literals>)`` (``sql_literal``), or
+    ``false`` for no values, as ``Column.isin([])`` is."""
+    lits = ", ".join(map(sql_literal, values))
+    name = column.replace("`", "``")
+    return f"`{name}` IN ({lits})" if lits else "false"
 
 
 def fan_out(n_bytes: int, open_cost: int, parallelism: int) -> int:

@@ -37,6 +37,7 @@ from hybrid_sanctions_search_engine_spark.plans.hybrid import (
     HybridSearchPlan,
     SearchOpts,
 )
+from hybrid_sanctions_search_engine_spark.plans.wand import index_rows
 from hybrid_sanctions_search_engine_spark.sources.index_io import build_index, load_index
 from hybrid_sanctions_search_engine_spark.streaming.incremental import (
     fold_delta_embeddings,
@@ -237,8 +238,13 @@ def test_lexical_overlay_still_serves_marker_terms(env, monkeypatch):
     plan._driver_dict = ...
 
     # the plan's bound base scorer, pointed at the cold parquet index
-    cold, _ = load_index(plan.index_df.sparkSession, plan.index_dir)
-    monkeypatch.setattr(plan, "_score_base", partial(plan._score_base, index_df=cold))
+    spark = plan.index_df.sparkSession
+    cold, meta = load_index(spark, plan.index_dir)
+    base = plan._score_base
+    monkeypatch.setattr(
+        plan, "_score_base",
+        partial(base.func, index_rows(spark, meta, cold), **base.keywords),
+    )
     assert in_place == served()
 
 

@@ -75,6 +75,7 @@ def test_index_backed_plan_matches_dataframe_plan(
     import os
     from functools import partial
 
+    from hybrid_sanctions_search_engine_spark.plans.wand import index_rows
     from hybrid_sanctions_search_engine_spark.sources.index_io import (
         build_index,
         load_index,
@@ -112,9 +113,11 @@ def test_index_backed_plan_matches_dataframe_plan(
     in_place = served()
     assert any("FUZZY" not in stages for stages, _ in in_place)
     # the plan's bound base scorer, pointed at the cold parquet index
-    cold, _ = load_index(spark, index_dir)
+    cold, meta = load_index(spark, index_dir)
+    base = plan_idx._score_base
     monkeypatch.setattr(
-        plan_idx, "_score_base", partial(plan_idx._score_base, index_df=cold)
+        plan_idx, "_score_base",
+        partial(base.func, index_rows(spark, meta, cold), **base.keywords),
     )
     assert in_place == served()
 

@@ -720,11 +720,14 @@ def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
     escalated ``search()`` runs exactly one job per lexical stage.  The
     same frames over the cold parquet index run exactly one exchange, the
     opener's repartition by chunk group (the negative control)."""
+    from functools import partial
+
     from hybrid_sanctions_search_engine_spark.plans import hybrid
     from hybrid_sanctions_search_engine_spark.plans.hybrid import (
         HybridSearchPlan,
         SearchOpts,
     )
+    from hybrid_sanctions_search_engine_spark.plans.wand import index_rows
     from hybrid_sanctions_search_engine_spark.sources.index_io import index_bytes
     from hybrid_sanctions_search_engine_spark.sources.tables import fan_out
 
@@ -742,10 +745,9 @@ def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
         dict(entries=[(1, "spark query join"), (2, "sort")], override=weighted, msm=1),
     ]
 
-    def frame(entries, override, msm, **kw):
-        return plan._score_base(
+    def frame(entries, override, msm, score=None):
+        return (score or plan._score_base)(
             entries, k=5, query_terms_override=override, min_should_match=msm,
-            **kw,
         )
 
     try:
@@ -779,9 +781,11 @@ def test_lexical_stages_score_the_cache_in_place(spark, corpus, monkeypatch):
         )
         assert [t.stage for t in out["trace"]] == ["AC", "FUZZY", "HYBRID"]
         assert jobs == 2
-        cold, _ = load_index(spark, index_dir)
+        cold, meta = load_index(spark, index_dir)
+        base = plan._score_base
+        cold_base = partial(base.func, index_rows(spark, meta, cold), **base.keywords)
         for shape in shapes:
-            df = frame(**shape, index_df=cold)
+            df = frame(**shape, score=cold_base)
             df.collect()
             assert _scorer_input(df, scan="FileScan").count("Exchange") == 1
     finally:
