@@ -29,7 +29,15 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType, LongType, StringType, StructType
 
-from ..sources.tables import frame_bytes, local_frame, serving_tasks, sql_in
+from ..sources.tables import (
+    Standing,
+    frame_bytes,
+    frame_of,
+    local_frame,
+    serving_map,
+    serving_tasks,
+    sql_in,
+)
 from .postings import CorpusStats, build_postings, corpus_stats, doc_lengths
 from .similarity import local_topk
 
@@ -595,7 +603,7 @@ def score_pre_grouped(score_group, k: int):
     one report row per distinct term read).  Per-task memory stays near
     ``FLUSH_POSTINGS`` postings plus one cached partition.  A module-level
     body bound by ``functools.partial``, so it pickles by reference."""
-    return partial(score_in_place, score_group, k, FLUSH_POSTINGS)
+    return partial(score_in_place, (score_group, k, FLUSH_POSTINGS))
 
 
 def _merged_tops(tops: list, k: int):
@@ -617,12 +625,16 @@ def _merged_tops(tops: list, k: int):
     return out if reports is None else pd.concat([out, reports])
 
 
-def score_in_place(score_group, k: int, flush_postings: int, batches):
-    """``score_pre_grouped``'s body over one task's Arrow batches: ``held``
-    holds whole partitions, ``cur`` the partition still streaming in."""
+def score_in_place(spec: tuple, batches):
+    """The lexical jobs' one body, over one task's Arrow batches under a
+    call's spec ``(score_group, k, flush_postings)`` — bound by
+    ``score_pre_grouped``, or shipped per call to a standing map
+    (``sources.tables.StandingMap``).  ``held`` holds whole partitions,
+    ``cur`` the partition still streaming in."""
     import numpy as np
     import pandas as pd
 
+    score_group, k, flush_postings = spec
     held, held_n, cur, cur_n, cur_part, tops = [], 0, [], 0, None, []
 
     def flush(frames):
@@ -653,46 +665,39 @@ def score_in_place(score_group, k: int, flush_postings: int, batches):
         yield _merged_tops(tops, k)
 
 
-@cache
-def _partition_id() -> Column:
-    """``spark_partition_id()``, built once per process: a session-free
-    expression, and building it costs py4j round trips per call."""
-    return F.spark_partition_id()
-
-
 def topk_pre_grouped(
-    matched: DataFrame,
+    rows: "DataFrame | Standing",
+    where: str,
     score_group,
     k: int,
     cache_bytes: int,
     n_queries: int,
     schema: StructType = BATCH_SCORE_SCHEMA,
 ) -> DataFrame:
-    """Task-local top-``k`` per query (``BATCH_SCORE_SCHEMA``) of
-    ``matched`` — rows laid out as ``score_pre_grouped`` requires, from an
-    input of ``cache_bytes`` — scored in place by ``score_group`` (built
-    with the same ``k`` for ``n_queries`` query ids): tag
-    ``spark_partition_id()``, ``coalesce`` to the job's task count, one
-    ``mapInPandas``, and one wave of Python tasks.  ``mapInPandas``
-    requires no distribution, so a filter over a standing cache is scored
-    with no exchange, fresh cache or not; a one-off frame brings the one
-    exchange that laid it out (``plans.wand.chunk_groups``,
-    ``doc_groups``).  The task count is ``sources.tables.serving_tasks``
-    of the input's bytes once per query id: the scorer's work is postings ×
+    """Task-local top-``k`` per query (``BATCH_SCORE_SCHEMA``) of ``rows``
+    filtered by the predicate text ``where`` — rows laid out as
+    ``score_pre_grouped`` requires, from an input of ``cache_bytes`` —
+    scored in place by ``score_group`` (built with the same ``k`` for
+    ``n_queries`` query ids): tag ``spark_partition_id()``, ``coalesce`` to
+    the job's task count, one ``mapInPandas`` of ``score_in_place``, and one
+    wave of Python tasks.  Over a ``Standing`` cache the map and its UDF are
+    built once (``sources.tables.StandingMap``) and the call ships only its
+    spec: collect the frame with ``sources.tables.collect_frame``.
+    ``mapInPandas`` requires no distribution, so a filter over a standing
+    cache is scored with no exchange, fresh cache or not; a one-off frame
+    brings the one exchange that laid it out (``plans.wand.chunk_groups``,
+    ``doc_groups``).  The task count is ``sources.tables.serving_tasks`` of
+    the input's bytes once per query id: the scorer's work is postings ×
     queries, and with no column statistics a query's term filter is taken
     to keep its whole input, as Spark's own size estimate takes a filter.
-    Each Python task pays a fixed floor (~45 ms at local[4] before its
-    input stream ends, whatever it holds), so a 16-query batch on a
+    Each Python task pays a fixed start-up floor, so a 16-query batch on a
     0.1 MB index is one task and leaves the other cores to the job beside
     it (the speculative vector probe), a 100-query batch on a 3 MB index
     fills every core, and so does a 960k-doc index for one query.
     ``schema``: ``FUZZY_SCORE_SCHEMA`` for a scorer built with ``fuzzy``."""
-    tasks = serving_tasks(matched.sparkSession, cache_bytes * max(n_queries, 1))
-    return (
-        matched.withColumn("part", _partition_id())
-        .coalesce(tasks)
-        .mapInPandas(score_pre_grouped(score_group, k), schema)
-    )
+    tasks = serving_tasks(frame_of(rows).sparkSession, cache_bytes * max(n_queries, 1))
+    smap = serving_map(rows, None, score_in_place, schema, partitioned=True)
+    return smap.frame((score_group, k, FLUSH_POSTINGS), where, tasks)
 
 
 RAW_CACHE_COLS = ["term", "doc_id", "tf", "doc_len", "df"]
@@ -718,7 +723,7 @@ def raw_postings_cache(postings: DataFrame, df: DataFrame) -> DataFrame:
 
 
 def cached_topk_local(
-    cached: DataFrame,
+    cached: "DataFrame | Standing",
     queries: list[tuple[int, str]],
     k: int = 10,
     *,
@@ -732,8 +737,9 @@ def cached_topk_local(
     cache_bytes: int,
 ) -> DataFrame:
     """Many queries' task-local top-k over raw postings laid out by
-    ``doc_groups`` (a ``raw_postings_cache``, or ``batch_topk``'s one-off
-    frame; ``RAW_CACHE_COLS`` only), filtered by one predicate string
+    ``doc_groups`` (a ``raw_postings_cache`` — a plan's as a ``Standing`` —
+    or ``batch_topk``'s one-off frame; ``RAW_CACHE_COLS`` only), filtered
+    by one predicate string
     (``sources.tables.sql_in``: no per-term py4j round trip) and scored in
     place under the given corpus statistics →
     (query_id, doc_id, score, n_terms_matched), ≤ tasks × |queries| × k
@@ -747,7 +753,7 @@ def cached_topk_local(
     schema = BATCH_SCORE_SCHEMA if fuzzy is None else FUZZY_SCORE_SCHEMA
     spec = batch_query_terms(queries, query_terms_override, min_should_match, fuzzy)
     if spec is None:
-        return local_frame(cached.sparkSession, [], schema)
+        return local_frame(frame_of(cached).sparkSession, [], schema)
     qid_list, term_to_qidx, msm_arr = spec
     score_group = make_batch_group_scorer(
         term_to_qidx, qid_list, n_docs, avgdl, k1, b, k,
@@ -758,7 +764,7 @@ def cached_topk_local(
         fz = fuzzy.candidate_filter()
         cond = fz if cond is None else f"({cond}) OR ({fz})"
     return topk_pre_grouped(
-        cached.where(cond), score_group, k, cache_bytes, len(qid_list), schema
+        cached, cond, score_group, k, cache_bytes, len(qid_list), schema
     )
 
 

@@ -22,13 +22,21 @@ which rows share a task.
 
 from __future__ import annotations
 
-from typing import Callable
+from functools import partial
+from typing import Callable, NamedTuple
 
 import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
-from ..sources.tables import local_frame, sql_in
+from ..sources.tables import (
+    Standing,
+    collect_frame,
+    frame_of,
+    local_frame,
+    serving_map,
+    sql_in,
+)
 from .similarity import (
     ProbeQueries,
     ProbeRerank,
@@ -51,7 +59,7 @@ PrepareScorer = Callable[
 
 
 def fused_cell_probe_many(
-    indexed: DataFrame,
+    indexed: "DataFrame | Standing",
     centroids: np.ndarray,
     queries: list[tuple[int, list[float]]],
     code_col: str,
@@ -72,9 +80,9 @@ def fused_cell_probe_many(
 
     1. code scan over the union of all queries' probed cells, reading only
        ``(id, code, cell)``: each task masks every query to ITS probed
-       cells, scores the masked codes via ``prepare_scorer``'s closure,
-       and emits the task-local top ``refine·k`` under the (−score, id)
-       tie-break; a DRIVER-side merge picks each query's global candidates
+       cells, scores the masked codes via the scorer ``prepare_scorer``
+       builds in the task, and emits the task-local top ``refine·k``
+       under the (−score, id) tie-break; a DRIVER-side merge picks each query's global candidates
        under the same total order the former window produced (round 7 —
        two window exchanges per probe were pure stage floors; collects
        stay ≤ tasks·|queries|·refine·k rows, never corpus-sized).
@@ -84,56 +92,28 @@ def fused_cell_probe_many(
        1e-300 clamps, raw query).  ``as_rows`` / ``rerank`` pick how its task-local tops
        merge, exactly as in ``similarity.knn_ivf_probe_many``: with
        ``rerank`` they come back un-merged, reranked in their tasks.
+
+    Each pass is a map of ``indexed`` (``sources.tables.serving_map``):
+    over a ``Standing`` cache both are built once, ``prepare_scorer`` (the
+    index's constants) riding in the code scan's body, and a call ships
+    its queries and candidates as its spec.
     """
-    spark = indexed.sparkSession
     if not queries:
+        spark = frame_of(indexed).sparkSession
         return [] if as_rows else local_frame(spark, [], probe_schema(id_col, rerank))
     prep = probe_queries(queries, centroids, n_probe)
-    qids, qmat, qnorms, _, cells, union = prep
-    score_masked = prepare_scorer(prep)
-    nq, nsel = len(qids), refine * k
-
-    def code_scan(it):
-        # concatenate the task's Arrow batches first (one nq-loop per TASK;
-        # per-row scoring ops unchanged, so candidate selection stays
-        # bit-identical — the per-masked-block scorer contract)
-        pdfs = [pdf for pdf in it if not pdf.empty]
-        if not pdfs:
-            return
-        pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
-        codes = np.frombuffer(
-            b"".join(pdf[code_col]), dtype=np.uint8
-        ).reshape(len(pdf), code_width)
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        cell = pdf[cell_col].to_numpy(dtype=np.int64)
-        batch_cells = set(int(c) for c in np.unique(cell))
-        out_q, out_i, out_s = [], [], []
-        for qi in range(nq):
-            probe = [c for c in cells[qi] if int(c) in batch_cells]
-            if not probe:
-                continue
-            mask = np.isin(cell, np.asarray(probe, dtype=np.int64))
-            s = score_masked(qi, codes[mask], cell[mask])
-            idsm = ids[mask]
-            top = local_topk(idsm, s, nsel)
-            out_q.append(np.full(top.size, qids[qi]))
-            out_i.append(idsm[top])
-            out_s.append(s[top])
-        if out_q:
-            yield pd.DataFrame(
-                {
-                    "query_id": np.concatenate(out_q),
-                    id_col: np.concatenate(out_i),
-                    score_col: np.concatenate(out_s),
-                }
-            )
-
-    pruned = indexed.where(sql_in(cell_col, union))
-    local = pruned.select(id_col, code_col, cell_col).mapInPandas(
-        code_scan, f"query_id long, {id_col} long, {score_col} double"
+    nsel = refine * k
+    cell_filter = sql_in(cell_col, prep.union)
+    scan = serving_map(
+        indexed, [id_col, code_col, cell_col], partial(code_scan_task, prepare_scorer),
+        f"query_id long, {id_col} long, {score_col} double",
+    )
+    local = scan.frame(
+        CodeScanSpec(prep, nsel, code_col, code_width, id_col, cell_col, score_col),
+        cell_filter,
     )
     cand_merged = merge_local_topk(
-        ((r["query_id"], r[id_col], r[score_col]) for r in local.collect()),
+        ((r["query_id"], r[id_col], r[score_col]) for r in collect_frame(local)),
         nsel,
     )
     cand: dict[int, set] = {}
@@ -143,33 +123,107 @@ def fused_cell_probe_many(
     cand_arr = {
         qid: np.asarray(sorted(s), dtype=np.int64) for qid, s in cand.items()
     }
-
-    def rerank_pass(it):
-        task = task_rows(it, [id_col, vec_col])
-        if task is None:
-            return
-        rows, pdf = task
-        x, norms = vector_rows(pdf[vec_col])
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        picks = []
-        for qi in range(nq):
-            mine = cand_arr.get(int(qids[qi]))
-            if mine is None:
-                continue
-            sel = np.flatnonzero(np.isin(ids, mine))
-            if not sel.size:
-                continue
-            cos = row_cosines(x[sel], norms[sel], qmat[qi], qnorms[qi])
-            top = local_topk(ids[sel], cos, k)
-            picks.append((int(qids[qi]), sel[top], cos[top]))
-        if picks:
-            yield topk_record_batch(rows, picks, ids, id_col, rerank)
-
-    scored = (
-        pruned.where(sql_in(id_col, union_ids))
-        .select(*probe_input_cols([id_col, vec_col], rerank))
-        .mapInArrow(rerank_pass, probe_schema(id_col, rerank))
+    refine_map = serving_map(
+        indexed, probe_input_cols([id_col, vec_col], rerank), rerank_task,
+        probe_schema(id_col, rerank), arrow=True,
+    )
+    scored = refine_map.frame(
+        RerankSpec(
+            prep.qids, prep.qmat, prep.qnorms, cand_arr, k, id_col, vec_col, rerank
+        ),
+        f"{cell_filter} AND {sql_in(id_col, union_ids)}",
     )
     if rerank is not None:
         return scored
     return merge_probe_tops(scored, k, id_col, as_rows)
+
+
+class CodeScanSpec(NamedTuple):
+    """A code scan's spec: the batch's ``ProbeQueries``, how many
+    candidates each query keeps per task, and the columns."""
+
+    queries: ProbeQueries
+    nsel: int
+    code_col: str
+    code_width: int
+    id_col: str
+    cell_col: str
+    score_col: str
+
+
+def code_scan_task(prepare_scorer: PrepareScorer, spec: CodeScanSpec, batches):
+    """Pass 1's body: the task's batches concatenated first (one query loop
+    per TASK; per-row scoring ops unchanged, so candidate selection stays
+    bit-identical — the per-masked-block scorer contract), then each
+    query's masked codes scored through ``prepare_scorer``'s scorer (built
+    here from the spec's queries) and their task-local top ``nsel``."""
+    pdfs = [pdf for pdf in batches if not pdf.empty]
+    if not pdfs:
+        return
+    pdf = pd.concat(pdfs, ignore_index=True) if len(pdfs) > 1 else pdfs[0]
+    queries, nsel = spec.queries, spec.nsel
+    score_masked = prepare_scorer(queries)
+    codes = np.frombuffer(
+        b"".join(pdf[spec.code_col]), dtype=np.uint8
+    ).reshape(len(pdf), spec.code_width)
+    ids = pdf[spec.id_col].to_numpy(dtype=np.int64)
+    cell = pdf[spec.cell_col].to_numpy(dtype=np.int64)
+    batch_cells = set(int(c) for c in np.unique(cell))
+    out_q, out_i, out_s = [], [], []
+    for qi in range(len(queries.qids)):
+        probe = [c for c in queries.cells[qi] if int(c) in batch_cells]
+        if not probe:
+            continue
+        mask = np.isin(cell, np.asarray(probe, dtype=np.int64))
+        s = score_masked(qi, codes[mask], cell[mask])
+        idsm = ids[mask]
+        top = local_topk(idsm, s, nsel)
+        out_q.append(np.full(top.size, queries.qids[qi]))
+        out_i.append(idsm[top])
+        out_s.append(s[top])
+    if out_q:
+        yield pd.DataFrame(
+            {
+                "query_id": np.concatenate(out_q),
+                spec.id_col: np.concatenate(out_i),
+                spec.score_col: np.concatenate(out_s),
+            }
+        )
+
+
+class RerankSpec(NamedTuple):
+    """Pass 2's spec: the queries (ids, rows, 1-D norms), each query's
+    candidate ids, k, the columns and the rerank inputs."""
+
+    qids: np.ndarray
+    qmat: np.ndarray
+    qnorms: np.ndarray
+    cand: dict
+    k: int
+    id_col: str
+    vec_col: str
+    rerank: "ProbeRerank | None"
+
+
+def rerank_task(spec: RerankSpec, batches):
+    """Pass 2's body: each query's exact cosines over its candidates in the
+    task, and their local top-k (reranked with ``rerank``)."""
+    task = task_rows(batches, [spec.id_col, spec.vec_col])
+    if task is None:
+        return
+    rows, pdf = task
+    x, norms = vector_rows(pdf[spec.vec_col])
+    ids = pdf[spec.id_col].to_numpy(dtype=np.int64)
+    picks = []
+    for qi in range(len(spec.qids)):
+        mine = spec.cand.get(int(spec.qids[qi]))
+        if mine is None:
+            continue
+        sel = np.flatnonzero(np.isin(ids, mine))
+        if not sel.size:
+            continue
+        cos = row_cosines(x[sel], norms[sel], spec.qmat[qi], spec.qnorms[qi])
+        top = local_topk(ids[sel], cos, spec.k)
+        picks.append((int(spec.qids[qi]), sel[top], cos[top]))
+    if picks:
+        yield topk_record_batch(rows, picks, ids, spec.id_col, spec.rerank)

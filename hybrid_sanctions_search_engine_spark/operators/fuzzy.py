@@ -558,11 +558,12 @@ def levenshtein(a: str, b: str) -> int:
 def fuzz_boost(query: str, text: str) -> float:
     """The L9 factor ``rapidfuzz_rerank_expr`` multiplies a score by: 1.2
     when fuzz = max(ratio, partial·100, token_sort) > 80, 1.1 when > 60,
-    else 1.0.  Only the class of fuzz matters, so two exact shortcuts skip
-    Levenshtein calls: a ratio whose length bound
-    ``(1 − |la−lb|/max(la,lb,1))·100`` (≥ the ratio, in floats too) cannot
-    lift fuzz into a higher class is not computed, and the rest are not
-    either once fuzz > 80 (the partial ratio, the costliest, runs last)."""
+    else 1.0.  Only the class of fuzz matters, so exact shortcuts skip
+    work: a ratio whose length bound ``(1 − |la−lb|/max(la,lb,1))·100`` (≥
+    the ratio, in floats too) cannot lift fuzz into a higher class is not
+    computed, nothing more is once fuzz > 80, and the partial ratio (the
+    costliest, last) scores only the windows that could lift the class
+    (``_partial_lifts``)."""
     q, t = query.lower(), text.lower()
     fuzz = 0.0
     for a, b in (
@@ -576,8 +577,52 @@ def fuzz_boost(query: str, text: str) -> float:
         fuzz = max(fuzz, (1.0 - levenshtein(a, b) / m) * 100.0)
         if fuzz > 80:
             return 1.2
-    fuzz = max(fuzz, partial_ratio(query, text) * 100.0)
+    fuzz = _partial_lifts(q, t, fuzz)
     return 1.2 if fuzz > 80 else 1.1 if fuzz > 60 else 1.0
+
+
+def _partial_lifts(s1: str, s2: str, fuzz: float) -> float:
+    """max(``fuzz``, ``partial_ratio(s1, s2)``·100) as far as its class
+    (> 80, > 60) goes, for lower-cased ``s1``, ``s2``: ``partial_ratio``'s
+    windows, each window start scored once, and no window scored once
+    fuzz > 80.  A window is skipped when the upper bounds of its
+    ``ratio()`` that ``SequenceMatcher`` itself offers — ``real_quick_ratio``
+    (the lengths) and ``quick_ratio`` (the shared character counts), the
+    same ``2·M/T`` float — cannot cross the next class boundary; both are
+    computed here without building a matcher for the window.  The class
+    equals ``partial_ratio``'s (tests/test_fuzzy.py checks it on seeded
+    pairs)."""
+    from collections import Counter
+    from difflib import SequenceMatcher
+
+    if not s1 or not s2:
+        return max(fuzz, 100.0 if s1 == s2 else 0.0)
+    shorter, longer = (s1, s2) if len(s1) <= len(s2) else (s2, s1)
+    la, have = len(shorter), Counter(shorter)
+    done: set[int] = set()
+    blocks = SequenceMatcher(None, shorter, longer, autojunk=False).get_matching_blocks()
+    for i, j, _n in blocks:
+        start = max(j - i, 0)
+        if start in done:
+            continue
+        done.add(start)
+        bound = 80.0 if fuzz > 60 else 60.0
+        window = longer[start : start + la]
+        total = la + len(window)
+        if 2.0 * min(la, len(window)) / total * 100.0 <= bound:
+            continue
+        avail, common = dict(have), 0
+        for ch in window:
+            if avail.get(ch, 0) > 0:
+                avail[ch] -= 1
+                common += 1
+        if 2.0 * common / total * 100.0 <= bound:
+            continue
+        r = SequenceMatcher(None, shorter, window, autojunk=False).ratio()
+        fuzz = max(fuzz, r * 100.0)
+        if fuzz > 80:
+            break
+    return fuzz
 
 
 def rerank_row(

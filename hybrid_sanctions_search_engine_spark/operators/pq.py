@@ -45,6 +45,7 @@ partition value already in the pruned scan — no extra IO).
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -199,26 +200,27 @@ def adc_scorer(centroids: np.ndarray, codebooks: np.ndarray):
     """The residual ADC code score, as a ``fused_probe.PrepareScorer``:
     given a batch's ``ProbeQueries``, a ``score_masked(qi, codes, cells)``
     returning ``q̂·c(cell) + Σ_j lut[j, code_j]`` per row.  The probe and
-    ``ann_recall.reference_topk`` both score through it."""
-    cols = np.arange(codebooks.shape[0])
+    ``ann_recall.reference_topk`` both score through it.  A partial of a
+    module-level function over the index's arrays, so a standing cache
+    keeps one probe map for it (``sources.tables.Standing``)."""
+    return partial(adc_prepare, centroids, codebooks)
 
-    def prepare(queries):
-        # per-query adc_lookup_table calls and centroid gemvs, NOT one 3-D
-        # einsum / one gemm: a fused contraction can sum in a different
-        # order, so a query's scores would depend on which queries share
-        # its batch, and a last-ulp drift flips candidate selection at the
-        # refine boundary
-        luts = [adc_lookup_table(v, codebooks) for v in queries.qmat]
-        cent_dots = [centroids @ v for v in queries.qn]
 
-        def score_masked(
-            qi: int, codes_m: np.ndarray, cell_m: np.ndarray
-        ) -> np.ndarray:
-            return luts[qi][cols, codes_m].sum(axis=1) + cent_dots[qi][cell_m]
+def adc_prepare(centroids: np.ndarray, codebooks: np.ndarray, queries):
+    # per-query adc_lookup_table calls and centroid gemvs, NOT one 3-D
+    # einsum / one gemm: a fused contraction can sum in a different
+    # order, so a query's scores would depend on which queries share
+    # its batch, and a last-ulp drift flips candidate selection at the
+    # refine boundary
+    luts = [adc_lookup_table(v, codebooks) for v in queries.qmat]
+    cent_dots = [centroids @ v for v in queries.qn]
+    return partial(adc_score_masked, luts, cent_dots, np.arange(codebooks.shape[0]))
 
-        return score_masked
 
-    return prepare
+def adc_score_masked(
+    luts, cent_dots, cols, qi: int, codes_m: np.ndarray, cell_m: np.ndarray
+):
+    return luts[qi][cols, codes_m].sum(axis=1) + cent_dots[qi][cell_m]
 
 
 def write_ivf_pq_index(

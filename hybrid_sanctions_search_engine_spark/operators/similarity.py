@@ -33,7 +33,14 @@ from pyspark.sql import functions as F
 
 from ..functions.vectors import cosine_col
 from ..sources.fs import fs_for
-from ..sources.tables import local_frame, sql_in
+from ..sources.tables import (
+    Standing,
+    collect_frame,
+    frame_of,
+    local_frame,
+    serving_map,
+    sql_in,
+)
 from .fuzzy import rerank_row
 
 # the ANN layouts a HybridSearchPlan serves (``ann_kind``) and
@@ -113,7 +120,7 @@ def knn_bruteforce(
 
 
 def knn_bruteforce_many(
-    embeddings: DataFrame,
+    embeddings: "DataFrame | Standing",
     queries: list[tuple[int, list[float]]],
     k: int = 10,
     id_col: str = "vec_id",
@@ -143,36 +150,53 @@ def knn_bruteforce_many(
     row-local dot), whatever batch, task or query set it is scored in.
     At |queries| ≤ a few hundred the per-query loop is within ~2× of gemm
     and both are scan-dominated."""
-    spark = embeddings.sparkSession
     if not queries:
+        spark = frame_of(embeddings).sparkSession
         return [] if as_rows else local_frame(spark, [], probe_schema(id_col, rerank))
     qids = np.asarray([q for q, _ in queries], dtype=np.int64)
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     qnorms = np.maximum(np.linalg.norm(qmat, axis=1), 1e-300)
-    nq = len(qids)
-    kk = k
-
-    def score_batches(it):
-        for batch in it:
-            task = task_rows([batch], [id_col, vec_col])
-            if task is None:
-                continue
-            rows, pdf = task
-            x, norms = vector_rows(pdf[vec_col])
-            ids = pdf[id_col].to_numpy(dtype=np.int64)
-            picks = []
-            for qi in range(nq):
-                cos = row_cosines(x, norms, qmat[qi], qnorms[qi])
-                top = local_topk(ids, cos, kk)
-                picks.append((int(qids[qi]), top, cos[top]))
-            yield topk_record_batch(rows, picks, ids, id_col, rerank)
-
-    local = embeddings.select(
-        *probe_input_cols([id_col, vec_col], rerank)
-    ).mapInArrow(score_batches, probe_schema(id_col, rerank))
+    smap = serving_map(
+        embeddings, probe_input_cols([id_col, vec_col], rerank),
+        bruteforce_task, probe_schema(id_col, rerank), arrow=True,
+    )
+    local = smap.frame(
+        BruteForceSpec(qids, qmat, qnorms, k, id_col, vec_col, rerank)
+    )
     if rerank is not None:
         return local
     return merge_probe_tops(local, k, id_col, as_rows)
+
+
+class BruteForceSpec(NamedTuple):
+    """A ``knn_bruteforce_many`` call's spec: its queries (ids, rows, 1-D
+    norms), k, the columns and the rerank inputs."""
+
+    qids: np.ndarray
+    qmat: np.ndarray
+    qnorms: np.ndarray
+    k: int
+    id_col: str
+    vec_col: str
+    rerank: "ProbeRerank | None"
+
+
+def bruteforce_task(spec: BruteForceSpec, batches):
+    """``knn_bruteforce_many``'s body: each Arrow batch scored against every
+    query, its local top-k per query emitted (reranked with ``rerank``)."""
+    for batch in batches:
+        task = task_rows([batch], [spec.id_col, spec.vec_col])
+        if task is None:
+            continue
+        rows, pdf = task
+        x, norms = vector_rows(pdf[spec.vec_col])
+        ids = pdf[spec.id_col].to_numpy(dtype=np.int64)
+        picks = []
+        for qi in range(len(spec.qids)):
+            cos = row_cosines(x, norms, spec.qmat[qi], spec.qnorms[qi])
+            top = local_topk(ids, cos, spec.k)
+            picks.append((int(spec.qids[qi]), top, cos[top]))
+        yield topk_record_batch(rows, picks, ids, spec.id_col, spec.rerank)
 
 
 def knn_filtered(
@@ -451,7 +475,7 @@ def probe_queries(
 
 
 def knn_ivf_probe_many(
-    indexed: DataFrame,
+    indexed: "DataFrame | Standing",
     centroids: np.ndarray,
     queries: list[tuple[int, list[float]]],
     k: int = 10,
@@ -492,45 +516,63 @@ def knn_ivf_probe_many(
     so a cosine's bits do not depend on the task it ran in, and the local
     top-k is taken by (-cos, id), so the merge is exact;
     ``ann_recall.reference_topk`` replays this probe in numpy."""
-    spark = indexed.sparkSession
     if not queries:
+        spark = frame_of(indexed).sparkSession
         return [] if as_rows else local_frame(spark, [], probe_schema(id_col, rerank))
     qids, qmat, qnorms, _, cells, union = probe_queries(queries, centroids, n_probe)
-    nq, kk = len(qids), k
-
-    def score(it):
-        # the task's Arrow batches as one table FIRST: the nq-query
-        # mask+cosine loop then runs once per TASK instead of once per
-        # ~10k-row batch (identical per-row float ops, so results are
-        # bit-equal; memory stays bounded by the task's partition)
-        task = task_rows(it, [id_col, vec_col, cell_col])
-        if task is None:
-            return
-        rows, pdf = task
-        x, norms = vector_rows(pdf[vec_col])
-        ids = pdf[id_col].to_numpy(dtype=np.int64)
-        cell = pdf[cell_col].to_numpy(dtype=np.int64)
-        batch_cells = set(int(c) for c in np.unique(cell))
-        picks = []
-        for qi in range(nq):
-            probe = [c for c in cells[qi] if int(c) in batch_cells]
-            if not probe:
-                continue
-            sel = np.flatnonzero(np.isin(cell, np.asarray(probe, dtype=np.int64)))
-            cos = row_cosines(x[sel], norms[sel], qmat[qi], qnorms[qi])
-            top = local_topk(ids[sel], cos, kk)
-            picks.append((int(qids[qi]), sel[top], cos[top]))
-        if picks:
-            yield topk_record_batch(rows, picks, ids, id_col, rerank)
-
-    local = (
-        indexed.where(sql_in(cell_col, union))
-        .select(*probe_input_cols([id_col, vec_col, cell_col], rerank))
-        .mapInArrow(score, probe_schema(id_col, rerank))
+    smap = serving_map(
+        indexed, probe_input_cols([id_col, vec_col, cell_col], rerank),
+        ivf_probe_task, probe_schema(id_col, rerank), arrow=True,
+    )
+    local = smap.frame(
+        IvfProbeSpec(qids, qmat, qnorms, cells, k, id_col, vec_col, cell_col, rerank),
+        sql_in(cell_col, union),
     )
     if rerank is not None:
         return local
     return merge_probe_tops(local, k, id_col, as_rows)
+
+
+class IvfProbeSpec(NamedTuple):
+    """A ``knn_ivf_probe_many`` call's spec: its queries (ids, rows, 1-D
+    norms, probed cells), k, the columns and the rerank inputs."""
+
+    qids: np.ndarray
+    qmat: np.ndarray
+    qnorms: np.ndarray
+    cells: list
+    k: int
+    id_col: str
+    vec_col: str
+    cell_col: str
+    rerank: "ProbeRerank | None"
+
+
+def ivf_probe_task(spec: IvfProbeSpec, batches):
+    """``knn_ivf_probe_many``'s body: the task's Arrow batches as one table
+    FIRST, so the per-query mask+cosine loop runs once per TASK instead of
+    once per ~10k-row batch (identical per-row float ops, so results are
+    bit-equal; memory stays bounded by the task's partition), then each
+    query's local top-k over the rows of its probed cells."""
+    task = task_rows(batches, [spec.id_col, spec.vec_col, spec.cell_col])
+    if task is None:
+        return
+    rows, pdf = task
+    x, norms = vector_rows(pdf[spec.vec_col])
+    ids = pdf[spec.id_col].to_numpy(dtype=np.int64)
+    cell = pdf[spec.cell_col].to_numpy(dtype=np.int64)
+    batch_cells = set(int(c) for c in np.unique(cell))
+    picks = []
+    for qi in range(len(spec.qids)):
+        probe = [c for c in spec.cells[qi] if int(c) in batch_cells]
+        if not probe:
+            continue
+        sel = np.flatnonzero(np.isin(cell, np.asarray(probe, dtype=np.int64)))
+        cos = row_cosines(x[sel], norms[sel], spec.qmat[qi], spec.qnorms[qi])
+        top = local_topk(ids[sel], cos, spec.k)
+        picks.append((int(spec.qids[qi]), sel[top], cos[top]))
+    if picks:
+        yield topk_record_batch(rows, picks, ids, spec.id_col, spec.rerank)
 
 
 def local_topk(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
@@ -569,7 +611,7 @@ def merge_probe_tops(
     (a frame; one exchange)."""
     if as_rows:
         return merge_local_topk(
-            ((r["query_id"], r[id_col], r["cos_sim"]) for r in local.collect()),
+            ((r["query_id"], r[id_col], r["cos_sim"]) for r in collect_frame(local)),
             k,
         )
     from pyspark.sql import Window

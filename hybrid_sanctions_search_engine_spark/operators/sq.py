@@ -41,6 +41,7 @@ layout-blind.
 from __future__ import annotations
 
 import os
+from functools import partial
 
 import numpy as np
 import pandas as pd
@@ -129,22 +130,22 @@ def sq8_scorer(vmin: np.ndarray, vmax: np.ndarray):
     """The decoded-dot code score, as a ``fused_probe.PrepareScorer``:
     given a batch's ``ProbeQueries``, a ``score_masked(qi, codes, cells)``
     returning ``codes·w + b`` per row (``_sq8_query_form``).  The probe and
-    ``ann_recall.reference_topk`` both score through it."""
+    ``ann_recall.reference_topk`` both score through it.  A partial of a
+    module-level function over the index's arrays, so a standing cache
+    keeps one probe map for it (``sources.tables.Standing``)."""
+    return partial(sq8_prepare, vmin, vmax)
 
-    def prepare(queries):
-        # per-query _sq8_query_form calls, never a fused matrix form: a
-        # query's (w, b) must not depend on which queries share its batch
-        forms = [_sq8_query_form(v, vmin, vmax) for v in queries.qmat]
 
-        def score_masked(
-            qi: int, codes_m: np.ndarray, cell_m: np.ndarray
-        ) -> np.ndarray:
-            w, b = forms[qi]
-            return _sq8_scores(codes_m, w, b)
+def sq8_prepare(vmin: np.ndarray, vmax: np.ndarray, queries):
+    # per-query _sq8_query_form calls, never a fused matrix form: a
+    # query's (w, b) must not depend on which queries share its batch
+    forms = [_sq8_query_form(v, vmin, vmax) for v in queries.qmat]
+    return partial(sq8_score_masked, forms)
 
-        return score_masked
 
-    return prepare
+def sq8_score_masked(forms, qi: int, codes_m: np.ndarray, cell_m: np.ndarray):
+    w, b = forms[qi]
+    return _sq8_scores(codes_m, w, b)
 
 
 def write_ivf_sq8_index(

@@ -43,7 +43,14 @@ from ..operators.similarity import (
     knn_bruteforce_many,
     merge_local_topk,
 )
-from ..sources.tables import frame_bytes, local_frame, serving_tasks
+from ..sources.tables import (
+    Standing,
+    collect_frame,
+    frame_bytes,
+    local_frame,
+    release_specs,
+    serving_tasks,
+)
 from .wand import index_topk_local, query_terms
 
 _SPEC_GROUP_SEQ = itertools.count()
@@ -224,6 +231,8 @@ class _Async:
                 self._out = fn()
             except BaseException as e:  # noqa: BLE001 — re-raised in result()
                 self._exc = e
+            finally:
+                release_specs()
 
         self._thread = threading.Thread(target=run, daemon=True)
         self._thread.start()
@@ -354,13 +363,13 @@ class HybridSearchPlan:
                 .persist()
             )
             self._probe = partial(
-                probe, self.ann_df, self.ann_centroids, *layout,
+                probe, Standing(self.ann_df), self.ann_centroids, *layout,
                 n_probe=ann_n_probe,
             )
         elif embeddings is not None:
             ann_df, tasks = _with_doc_text(embeddings, docs, text_col)
             self.ann_df = ann_df.coalesce(tasks).persist()
-            self._probe = partial(knn_bruteforce_many, self.ann_df)
+            self._probe = partial(knn_bruteforce_many, Standing(self.ann_df))
         # the lexical stages' one scorer, bound here for the plan's layout:
         # ``_score_base(entries, k=, query_terms_override=,
         # min_should_match=)`` → task-local tops over a STANDING cache
@@ -368,7 +377,8 @@ class HybridSearchPlan:
         # docs, term-sorted — scored in place, one job with no exchange
         # (``operators.bm25.topk_pre_grouped``); ``_lexical_tops`` runs it.
         # It is bound to the scorer's projection of the cache, built here
-        # once: a call adds one predicate string to it
+        # once as a ``Standing``, whose map and UDF are built on first use:
+        # a call adds one predicate string and ships its spec
         if index_dir is not None:
             from ..sources.index_io import index_bytes, load_index
             from .wand import chunk_groups, index_rows
@@ -390,7 +400,7 @@ class HybridSearchPlan:
             self.postings = None
             self._score_base = partial(
                 index_topk_local,
-                index_rows(spark, self.index_meta, self.index_df),
+                Standing(index_rows(spark, self.index_meta, self.index_df)),
                 meta=self.index_meta, cache_bytes=index_bytes(index_dir),
             )
             lexical = self.index_df
@@ -411,7 +421,7 @@ class HybridSearchPlan:
             )
             # sized by the corpus scan's bytes, as a one-off batch_topk is
             self._score_base = partial(
-                cached_topk_local, self.postings,
+                cached_topk_local, Standing(self.postings),
                 n_docs=self.stats.n_docs, avgdl=self.stats.avgdl,
                 cache_bytes=frame_bytes(docs),
             )
@@ -424,8 +434,10 @@ class HybridSearchPlan:
         self.delta_stats: tuple[int, float] | None = None
         self.delta_embeddings: DataFrame | None = None
         # delta_embeddings ⟕ delta_docs' text, cached while attached (the
-        # delta twin of the text-carrying ``ann_df``)
+        # delta twin of the text-carrying ``ann_df``), and the exact probe
+        # bound over it
         self._delta_ann: DataFrame | None = None
+        self._delta_probe = None
         # the delta's raw postings ⋈ df cache and its bound scorer, while
         # attached
         self._delta_cache: DataFrame | None = None
@@ -488,6 +500,7 @@ class HybridSearchPlan:
             if df is not None:
                 df.unpersist()
         self._fuzzy_dict = self._delta_cache = self._delta_ann = None
+        self._delta_probe = None
         self._score_delta = None
         self._driver_dict = ...  # invalidate the driver-side FST-style cache
         self._driver_dict_set = None
@@ -499,6 +512,7 @@ class HybridSearchPlan:
                 delta_embeddings, delta_docs, self.text_col
             )
             self._delta_ann = delta_ann.coalesce(tasks).persist()
+            self._delta_probe = partial(knn_bruteforce_many, Standing(self._delta_ann))
         if delta_stats is None and delta_postings is not None:
             row = (
                 delta_postings.select("doc_id", "doc_len")
@@ -516,7 +530,7 @@ class HybridSearchPlan:
                 delta_postings.groupBy("term").agg(F.count("*").alias("df")),
             )
             self._score_delta = partial(
-                cached_topk_local, self._delta_cache,
+                cached_topk_local, Standing(self._delta_cache),
                 n_docs=int(delta_stats[0]), avgdl=float(delta_stats[1] or 1.0),
                 cache_bytes=frame_bytes(delta_postings),
             )
@@ -700,7 +714,7 @@ class HybridSearchPlan:
             local = local.union(self._score_delta(entries, **kw))
         best: dict[tuple[int, int], float] = {}
         seen: set[str] = set()
-        for q, doc, sc, _n, *term in local.collect():
+        for q, doc, sc, _n, *term in collect_frame(local):
             if term and term[0] is not None:
                 seen.add(term[0])
             elif (q, doc) not in best or sc > best[(q, doc)]:
@@ -731,7 +745,7 @@ class HybridSearchPlan:
 
     @property
     def _have_vectors(self) -> bool:
-        return self._probe is not None or self._delta_ann is not None
+        return self._probe is not None or self._delta_probe is not None
 
     def _vector_stage_batch(
         self,
@@ -793,10 +807,10 @@ class HybridSearchPlan:
         parts = []
         if self._probe is not None:
             parts.append(self._probe(qvecs, **kw))
-        if self._delta_ann is not None:
+        if self._delta_probe is not None:
             # exact batched gemv over the delta (ids disjoint from the
             # base), merged with the base under the same order
-            parts.append(knn_bruteforce_many(self._delta_ann, qvecs, **kw))
+            parts.append(self._delta_probe(qvecs, **kw))
         if rerank is None:
             return [
                 (q, d, c, c, 1.0)
@@ -805,12 +819,13 @@ class HybridSearchPlan:
                 )
             ]
         if cancel is not None and cancel.is_set():
+            release_specs()
             return []  # abandoned: don't submit the final job
         local = parts[0]
         for part in parts[1:]:
             local = local.unionByName(part)
         # rows (query_id, vec_id, cos_sim, score, anchor_mult, has_doc)
-        merged = merge_local_topk(local.collect(), k)
+        merged = merge_local_topk(collect_frame(local), k)
         return [(q, d, s, c, m) for q, d, c, s, m, has_doc in merged if has_doc]
 
     # -- the ladder -------------------------------------------------------

@@ -59,7 +59,7 @@ from ..sources.index_io import (
     index_bytes,
     load_index,
 )
-from ..sources.tables import local_frame, sql_in
+from ..sources.tables import Standing, frame_of, local_frame, sql_in
 
 
 def _term_filter(terms: list[str], meta: IndexMeta) -> str:
@@ -238,7 +238,7 @@ def batch_topk_local(
 
 
 def index_topk_local(
-    rows: DataFrame,
+    rows: "DataFrame | Standing",
     queries: list[tuple[int, "str | list[str]"]],
     k: int = 10,
     *,
@@ -248,9 +248,10 @@ def index_topk_local(
     fuzzy=None,
     cache_bytes: int,
 ) -> DataFrame:
-    """The indexed BM25 body: ``rows`` (``index_rows``) filtered by one
-    predicate string — the exact terms' rows, pruned to their shards, OR
-    fuzzy's candidates — then scored in place per task
+    """The indexed BM25 body: ``rows`` (``index_rows``; a standing plan's
+    as a ``sources.tables.Standing``) filtered by one predicate string —
+    the exact terms' rows, pruned to their shards, OR fuzzy's candidates —
+    then scored in place per task
     (``operators.bm25.topk_pre_grouped``: one dense (local docs × queries)
     accumulator per flush, local top-k per query) →
     (query_id, doc_id, score, n_terms_matched), ≤ tasks × |queries| × k
@@ -277,7 +278,7 @@ def index_topk_local(
     schema = BATCH_SCORE_SCHEMA if fuzzy is None else FUZZY_SCORE_SCHEMA
     spec = batch_query_terms(queries, query_terms_override, min_should_match, fuzzy)
     if spec is None:
-        return local_frame(rows.sparkSession, [], schema)
+        return local_frame(frame_of(rows).sparkSession, [], schema)
     qid_list, term_to_qidx, msm_arr = spec
     cond = _term_filter(sorted(term_to_qidx), meta) if term_to_qidx else None
     if fuzzy is not None:
@@ -289,7 +290,7 @@ def index_topk_local(
         min_match_per_qidx=msm_arr, fuzzy=fuzzy,
     )
     return topk_pre_grouped(
-        rows.where(cond), score_group, k, cache_bytes, len(qid_list), schema
+        rows, cond, score_group, k, cache_bytes, len(qid_list), schema
     )
 
 

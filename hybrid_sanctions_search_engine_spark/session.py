@@ -7,9 +7,31 @@ AQE stays on so skewed shuffle partitions get split at runtime.
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
+
+# a Unix socket path ``<dir>/.<uuid4>.sock`` must fit the 107 bytes of
+# ``sun_path``: 64 bytes of directory at most
+_SOCKET_DIR_MAX = 64
+
+
+def _socket_dir() -> str:
+    """A private directory for the Python workers' Unix domain sockets,
+    short enough for any socket path in it, removed at exit: under the
+    temp directory, or under ``/tmp`` where that path is too long (a
+    benchmark's ``TMPDIR`` grows with its checkout path)."""
+    base = tempfile.gettempdir()
+    # mkdtemp adds "/sfts-" and 8 random characters
+    if len(os.fsencode(base)) + 14 > _SOCKET_DIR_MAX:
+        base = "/tmp"
+    path = tempfile.mkdtemp(prefix="sfts-", dir=base)
+    atexit.register(shutil.rmtree, path, True)
+    return path
 
 
 def get_spark(app_name: str = "hybrid-fulltext-spark", cores: int | None = None) -> SparkSession:
@@ -42,4 +64,10 @@ def get_spark(app_name: str = "hybrid-fulltext-spark", cores: int | None = None)
     )
     if local_dir:
         builder = builder.config("spark.local.dir", local_dir)
+    if SparkContext._active_spark_context is None:
+        # the driver ↔ Python worker streams over Unix domain sockets: on
+        # loopback TCP a small task's input stalled ~40 ms (delayed ACK)
+        builder = builder.config(
+            "spark.python.unix.domain.socket.enabled", "true"
+        ).config("spark.python.unix.domain.socket.dir", _socket_dir())
     return builder.getOrCreate()

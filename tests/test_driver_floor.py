@@ -17,6 +17,18 @@ literals in ``sources.tables.sql_literal``'s hex form.  The pins here:
   ``spark.sql.parser.escapedStringLiterals``, and the served top-k and the
   fuzzy candidate rows equal their ``isin`` / ``Column`` references;
 * no serving module builds an ``isin`` predicate again (AST guard).
+
+Every serving job is a standing map (``sources.tables.StandingMap``): its
+projection and UDF column are built once per cache, and a call ships only
+its spec, in a job-local property.  The pins here:
+
+* an absolute ceiling on the py4j count of a warm escalated
+  ``search_many`` per plan shape, and no UDF built during one;
+* no spec property survives a call; two standing frames built on one
+  thread read their own specs; two threads ship their own;
+* a 100-query 384-d IVF batch (a spec of ~0.4 MB) serves the rows of the
+  one-off probe, which binds its spec into the UDF instead;
+* no ``mapInPandas`` / ``mapInArrow`` call outside the helper (AST guard).
 """
 
 from __future__ import annotations
@@ -309,6 +321,45 @@ def test_search_many_py4j_calls_do_not_grow_with_the_batch(
     assert counts["small"] == counts["big"], counts
 
 
+# the py4j commands of a warm escalated ``search_many`` (rerank on), per
+# plan shape, as measured with every serving job on a standing map — a few
+# over, for call-site bookkeeping.  A rebuilt UDF costs ~45, a re-selected
+# probe input ~25.
+PY4J_CEILING = {"ivf": 54, "sq8": 65, "no_index": 52, "above_cap": 42}
+
+
+@pytest.mark.parametrize("shape", ["ivf", "sq8", "no_index", "above_cap"])
+def test_search_many_py4j_ceiling(spark, floor_plans, shape, monkeypatch):
+    """A warm escalated ``search_many`` stays under its shape's py4j
+    ceiling and builds no UDF: each standing map's column was built by the
+    first call, and a call only ships its spec and plans its job."""
+    import pyspark.sql.udf
+
+    plans, words = floor_plans
+    plan = plans[shape]
+    opts = SearchOpts(top_k=5, escalation_threshold=1e9)
+    batch = [
+        (q, " ".join(words[(3 + 5 * q + j) % len(words)] for j in range(3)))
+        for q in range(16)
+    ]
+    plan.search_many(batch, opts)  # builds the maps, fills the caches
+    built = []
+    wrap = pyspark.sql.udf._wrap_function
+
+    def spy(sc, func, returnType=None):
+        built.append(func)
+        return wrap(sc, func, returnType)
+
+    out = {}
+    monkeypatch.setattr(pyspark.sql.udf, "_wrap_function", spy)
+    calls = _py4j_calls(
+        spark, monkeypatch, lambda: out.update(meta=plan.search_many(batch, opts)[1])
+    )
+    assert all(m["escalated"] for m in out["meta"].values())
+    assert built == []
+    assert calls <= PY4J_CEILING[shape], calls
+
+
 def _cached_scan_filters(df) -> str:
     """The pushed filters of ``df``'s InMemoryTableScan."""
     text = df._jdf.queryExecution().executedPlan().toString()
@@ -358,10 +409,12 @@ SERVING = {
 }
 
 
-def _isin_calls(path: str, functions: set[str] | None) -> list[tuple[int, str]]:
-    """(line, enclosing function) of each ``<expr>.isin(...)`` call in
-    ``path`` (within ``functions`` when given) — numpy's ``np.isin`` on
-    task-side arrays excepted."""
+def _method_calls(
+    path: str, methods: set[str], functions: set[str] | None
+) -> list[tuple[int, str]]:
+    """(line, enclosing top-level function) of each ``<expr>.<method>(...)``
+    call in ``path`` for a method in ``methods`` (within ``functions`` when
+    given) — numpy's ``np.<method>`` on task-side arrays excepted."""
     with open(path, encoding="utf-8") as f:
         tree = ast.parse(f.read())
     found = []
@@ -372,7 +425,7 @@ def _isin_calls(path: str, functions: set[str] | None) -> list[tuple[int, str]]:
         if (
             isinstance(node, ast.Call)
             and isinstance(node.func, ast.Attribute)
-            and node.func.attr == "isin"
+            and node.func.attr in methods
             and not (isinstance(node.func.value, ast.Name) and node.func.value.id == "np")
             and (functions is None or fn in functions)
         ):
@@ -382,6 +435,10 @@ def _isin_calls(path: str, functions: set[str] | None) -> list[tuple[int, str]]:
 
     visit(tree, None)
     return found
+
+
+def _isin_calls(path: str, functions: set[str] | None) -> list[tuple[int, str]]:
+    return _method_calls(path, {"isin"}, functions)
 
 
 def test_no_isin_in_serving_frames():
@@ -408,3 +465,297 @@ def test_isin_guard_sees_a_column_isin(tmp_path):
     )
     assert _isin_calls(str(src), {"serve"}) == [(3, "serve")]
     assert _isin_calls(str(src), None) == [(3, "serve"), (5, "reference")]
+
+
+# the modules whose serving jobs run through ``sources.tables.StandingMap``:
+# all of ``plans/`` and the serving operators, the dictionary's Bloom
+# filter build (one job per attach, not per call) excepted
+MAP_SERVING = ("plans", "operators/bm25.py", "operators/similarity.py",
+               "operators/fused_probe.py", "operators/pq.py", "operators/sq.py",
+               "operators/fuzzy.py")
+MAP_EXEMPT = {"operators/fuzzy.py": {"dictionary_bloom"}}
+
+
+def _map_calls(path: str, exempt: set[str]) -> list[tuple[int, str]]:
+    return [
+        (line, fn)
+        for line, fn in _method_calls(path, {"mapInPandas", "mapInArrow"}, None)
+        if fn not in exempt
+    ]
+
+
+def test_no_map_udf_outside_the_standing_helper():
+    """A serving job plans its Python stage through the standing helper:
+    a ``mapInPandas`` / ``mapInArrow`` call rebuilds its UDF (~45 py4j
+    round trips) on every call."""
+    root = os.path.dirname(pkg.__file__)
+    files = []
+    for rel in MAP_SERVING:
+        path = os.path.join(root, rel)
+        assert os.path.exists(path), rel
+        if os.path.isdir(path):
+            files += sorted(
+                os.path.join(rel, f) for f in os.listdir(path) if f.endswith(".py")
+            )
+        else:
+            files.append(rel)
+    calls = {
+        rel: _map_calls(os.path.join(root, rel), MAP_EXEMPT.get(rel, set()))
+        for rel in files
+    }
+    assert {rel: c for rel, c in calls.items() if c} == {}
+    # the exemption is live: the Bloom build still calls mapInPandas
+    assert _method_calls(
+        os.path.join(root, "operators/fuzzy.py"), {"mapInPandas"}, {"dictionary_bloom"}
+    )
+
+
+def test_map_guard_sees_a_map_call(tmp_path):
+    """The guard's negative control: a ``mapInArrow`` call in any function
+    is reported, one in an exempt function is not."""
+    src = tmp_path / "mod.py"
+    src.write_text(
+        "def serve(df, body):\n"
+        "    return df.mapInArrow(body, 'x long')\n"
+        "def build(df, body):\n"
+        "    return df.mapInPandas(body, 'x long')\n"
+    )
+    assert _map_calls(str(src), set()) == [(2, "serve"), (4, "build")]
+    assert _map_calls(str(src), {"build"}) == [(2, "serve")]
+
+
+# -- spec hygiene ---------------------------------------------------------------
+
+
+def _spec_props(spark) -> list[str]:
+    """The spec properties the calling thread holds."""
+    from hybrid_sanctions_search_engine_spark.sources.tables import SPEC_PREFIX
+
+    props = spark.sparkContext._jsc.sc().getLocalProperties()
+    return sorted(
+        str(k) for k in props.stringPropertyNames() if str(k).startswith(SPEC_PREFIX)
+    )
+
+
+@pytest.mark.parametrize("shape", ["ivf", "sq8", "no_index", "above_cap"])
+def test_no_spec_property_survives_a_call(spark, floor_plans, shape, monkeypatch):
+    """An escalated ``search_many`` ships specs (the lexical job's on this
+    thread) and releases every one: none is left on the calling thread,
+    nor on the speculative vector thread when it ends."""
+    from hybrid_sanctions_search_engine_spark.plans import hybrid
+    from hybrid_sanctions_search_engine_spark.sources.tables import StandingMap
+
+    plans, words = floor_plans
+    plan = plans[shape]
+    shipped, left_on_threads = [], []
+    frame = StandingMap.frame
+
+    def spy(self, spec, *a, **kw):
+        shipped.append(self.key)
+        return frame(self, spec, *a, **kw)
+
+    class Async(hybrid._Async):
+        """``_Async`` that records the spec properties its thread holds
+        once its function returns."""
+
+        def __init__(self, fn):
+            def run():
+                try:
+                    return fn()
+                finally:
+                    hybrid.release_specs()
+                    left_on_threads.append(_spec_props(spark))
+
+            super().__init__(run)
+
+    monkeypatch.setattr(StandingMap, "frame", spy)
+    monkeypatch.setattr(hybrid, "_Async", Async)
+    opts = SearchOpts(top_k=5, escalation_threshold=1e9)
+    batch = [(q, f"{words[q]} {words[(q + 11) % len(words)]}") for q in range(8)]
+    _, meta = plan.search_many(batch, opts)
+    assert all(m["escalated"] for m in meta.values())
+    assert shipped and all(shipped)
+    assert _spec_props(spark) == []
+    assert bool(left_on_threads) == plan._have_vectors
+    assert all(p == [] for p in left_on_threads), left_on_threads
+
+
+def _raw_tops(spark, rows) -> dict[int, list]:
+    from hybrid_sanctions_search_engine_spark.operators.similarity import (
+        merge_local_topk,
+    )
+
+    out: dict[int, list] = {}
+    for q, doc, sc in merge_local_topk(((r[0], r[1], r[2]) for r in rows), 5):
+        out.setdefault(q, []).append((doc, sc))
+    return out
+
+
+def test_two_standing_frames_on_one_thread_read_their_own_specs(spark, floor_plans):
+    """Base ∪ delta builds two standing frames before it collects their
+    union: each map ships its spec under its own key, so each frame scores
+    its own queries — the rows of each collected alone."""
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import cached_topk_local
+    from hybrid_sanctions_search_engine_spark.sources.tables import (
+        Standing,
+        collect_frame,
+    )
+
+    plans, words = floor_plans
+    plan = plans["no_index"]
+    stats = dict(n_docs=plan.stats.n_docs, avgdl=plan.stats.avgdl, cache_bytes=1)
+    left, right = Standing(plan.postings), Standing(plan.postings)
+    n = len(words)
+    qa = [(q, f"{words[q]} {words[(q + 7) % n]}") for q in range(4)]
+    qb = [(100 + q, f"{words[(q + 11) % n]} {words[(q + 17) % n]}") for q in range(4)]
+    alone_a = _raw_tops(spark, collect_frame(cached_topk_local(left, qa, 5, **stats)))
+    alone_b = _raw_tops(spark, collect_frame(cached_topk_local(right, qb, 5, **stats)))
+    assert set(alone_a) == {0, 1, 2, 3} and set(alone_b) == {100, 101, 102, 103}
+    fa = cached_topk_local(left, qa, 5, **stats)
+    fb = cached_topk_local(right, qb, 5, **stats)
+    both = _raw_tops(spark, collect_frame(fa.union(fb)))
+    assert both == {**alone_a, **alone_b}
+    assert _spec_props(spark) == []
+
+
+def test_threads_ship_their_own_specs(spark, floor_plans):
+    """The AC thread and the speculative vector thread each ship their own
+    spec — also through one map: a spec property is per thread.  Each
+    thread builds its frame, both wait, then each collects: the rows are
+    each thread's own, and each thread ends holding no spec."""
+    import threading
+
+    from hybrid_sanctions_search_engine_spark.operators.similarity import ProbeRerank
+    from hybrid_sanctions_search_engine_spark.sources.tables import collect_frame
+
+    plans, words = floor_plans
+    plan = plans["ivf"]
+    n = len(words)
+    lex = {
+        "a": [(q, f"{words[q]} {words[(q + 9) % n]}") for q in range(4)],
+        "b": [(q, f"{words[(q + 13) % n]}") for q in range(4)],
+    }
+    texts = {q: f"{words[q + 3]} {words[(q + 19) % n]}" for q in range(4)}
+    qvecs = [(q, plan.encoder.encode_one(t)) for q, t in texts.items()]
+    rerank = ProbeRerank(qtext=texts, anchors={q: ([], []) for q in texts}, fuzz=True)
+
+    def lexical(name):
+        return lambda: plan._score_base(lex[name], k=5)
+
+    def vector():
+        return plan._probe(qvecs, k=5, as_rows=False, rerank=rerank)
+
+    jobs = {"a": lexical("a"), "b": lexical("b"), "v": vector}
+    want = {name: sorted(collect_frame(make())) for name, make in jobs.items()}
+    for pair in (("a", "v"), ("a", "b")):
+        got, held, errors = {}, {}, []
+        built = threading.Barrier(2, timeout=120)
+        collected = threading.Barrier(2, timeout=120)
+
+        def run(name):
+            try:
+                frame = jobs[name]()
+                built.wait()
+                if name == pair[0]:
+                    got[name] = sorted(collect_frame(frame))
+                    collected.wait()
+                else:
+                    collected.wait()  # the other thread collected (and released)
+                    got[name] = sorted(collect_frame(frame))
+                held[name] = _spec_props(spark)
+            except BaseException as e:  # noqa: BLE001 — reported below
+                errors.append(e)
+                built.abort()
+                collected.abort()
+
+        threads = [threading.Thread(target=run, args=(n,)) for n in pair]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=300)
+        assert not any(t.is_alive() for t in threads)
+        assert not errors, errors
+        assert got == {n: want[n] for n in pair}
+        assert held == {n: [] for n in pair}
+
+
+@pytest.fixture(scope="module")
+def wide_ivf_plan(spark, sf_smoke_dir, tmp_path_factory):
+    """An indexed plan with a 384-d IVF vector index."""
+    from hybrid_sanctions_search_engine_spark.operators.similarity import write_ivf_index
+    from hybrid_sanctions_search_engine_spark.sources.index_io import build_index
+
+    docs = spark.read.parquet(os.path.join(sf_smoke_dir, "documents.parquet"))
+    root = tmp_path_factory.mktemp("wide_ivf")
+    build_index(docs, str(root / "index"), n_shards=2, chunk_bits=7)
+    emb = local_frame(
+        spark,
+        [
+            (r["doc_id"], pseudo_embedding(r["text"], 384))
+            for r in docs.select("doc_id", "text").limit(300).collect()
+        ],
+        "vec_id long, embedding array<double>",
+    )
+    write_ivf_index(emb, str(root / "ivf"), n_centroids=16, iters=8)
+    plan = HybridSearchPlan(
+        docs, embedding_dim=384, index_dir=str(root / "index"),
+        ann_index_dir=str(root / "ivf"), ann_kind="ivf", ann_n_probe=3,
+    )
+    yield plan
+    plan.close()
+
+
+def test_wide_ivf_batch_serves_through_its_spec(spark, wide_ivf_plan, monkeypatch):
+    """A 100-query 384-d IVF batch ships a spec of ~0.4 MB: the standing
+    probe returns exactly the rows of the one-off probe over the same
+    index (its spec bound into the UDF), and the batch's fused results
+    equal ``search()``'s on a sample of its queries."""
+    from hybrid_sanctions_search_engine_spark.operators.similarity import (
+        ProbeRerank,
+        knn_ivf_probe_many,
+        merge_local_topk,
+    )
+    from hybrid_sanctions_search_engine_spark.sources import tables
+
+    plan = wide_ivf_plan
+    words = [
+        r["term"]
+        for r in plan.dictionary.orderBy(F.desc("df"), "term").limit(150).collect()
+    ]
+    texts = {
+        q: f"{words[q % len(words)]} {words[(7 * q + 3) % len(words)]}"
+        for q in range(100)
+    }
+    qvecs = [(q, plan.encoder.encode_one(t)) for q, t in texts.items()]
+    rerank = ProbeRerank(qtext=texts, anchors={q: ([], []) for q in texts}, fuzz=True)
+    sizes = []
+    encode = tables.encode_spec
+    def spy(spec):
+        text = encode(spec)
+        sizes.append(len(text))
+        return text
+
+    monkeypatch.setattr(tables, "encode_spec", spy)
+    standing = merge_local_topk(
+        tables.collect_frame(plan._probe(qvecs, k=5, as_rows=False, rerank=rerank)), 5
+    )
+    monkeypatch.undo()
+    assert sizes and max(sizes) > 300_000, sizes
+    # the same cache as a plain frame: a one-off map
+    ref_frame = knn_ivf_probe_many(
+        plan.ann_df, plan.ann_centroids, qvecs, k=5, n_probe=3, rerank=rerank,
+    )
+    reference = merge_local_topk(ref_frame.collect(), 5)
+    assert standing == reference
+    assert {q for q, *_ in standing} == set(texts)
+    opts = SearchOpts(top_k=5, escalation_threshold=1e9)
+    tops, meta = plan.search_many(list(texts.items()), opts)
+    assert all(m["escalated"] for m in meta.values())
+    batch_rows = sorted(
+        (r["query_id"], r["rank"], r["doc_id"], r["score"]) for r in tops.collect()
+    )
+    for q in (0, 37, 99):
+        single, _ = plan.search(texts[q], opts)
+        assert [(r["doc_id"], r["score"]) for r in single.collect()] == [
+            (doc, score) for qq, _, doc, score in batch_rows if qq == q
+        ]

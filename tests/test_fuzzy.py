@@ -205,3 +205,93 @@ def test_expansion_over_task_subsets_is_exact_until_the_cap_binds():
         assert merged == {k: v for k, v in full.items() if k[0] not in capped}
         assert expand_terms(queries, seen, 1, cap) == (full, capped)
     assert n_capped > 20  # the cap binds in a good share of the cases
+
+
+def _pairs(seed: int, n: int) -> list[tuple[str, str]]:
+    """Seeded (query, text) pairs: typos, substrings, equal strings, empty
+    strings, upper case, Cyrillic and unrelated text."""
+    import random
+
+    rng = random.Random(seed)
+    alphabets = ("abcdefghij klmno", "абвгдеёжзий клмн", "aбcдeф ghij", "ab ")
+    out = []
+    while len(out) < n:
+        alpha = rng.choice(alphabets)
+        base = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 24))).strip()
+        kind = rng.randrange(7)
+        if kind == 0:  # typos
+            chars = list(base)
+            for _ in range(rng.randint(1, 3)):
+                if chars:
+                    chars[rng.randrange(len(chars))] = rng.choice(alpha)
+            other = "".join(chars)
+        elif kind == 1:  # a substring, inside more text
+            lo = rng.randint(0, len(base))
+            other = base[lo : rng.randint(lo, len(base))]
+            base = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 8))) + base
+        elif kind == 2:
+            other = base
+        elif kind == 3:
+            other = ""
+        elif kind == 4:
+            other = base.upper()
+        elif kind == 5:  # the query inside a longer, edited text
+            other = (
+                "".join(rng.choice(alpha) for _ in range(rng.randint(0, 30)))
+                + base[: rng.randint(0, len(base))]
+                + "".join(rng.choice(alpha) for _ in range(rng.randint(0, 30)))
+            )
+        else:
+            other = "".join(rng.choice(alpha) for _ in range(rng.randint(0, 40)))
+        out.append((base, other) if rng.random() < 0.5 else (other, base))
+    return out
+
+
+def _reference_fuzz_boost(query: str, text: str) -> float:
+    """``rapidfuzz_rerank_expr``'s L9 factor with every ratio computed in
+    full: ratio, ``partial_ratio`` and token-sort ratio, no shortcut."""
+    import re
+
+    from hybrid_sanctions_search_engine_spark.operators.fuzzy import (
+        levenshtein,
+        partial_ratio,
+    )
+
+    ws = re.compile(r"[ \t\n\x0b\f\r]+")
+    q, t = query.lower(), text.lower()
+    qs, ts = " ".join(sorted(ws.split(q))), " ".join(sorted(ws.split(t)))
+    fuzz = max(
+        (1.0 - levenshtein(q, t) / max(len(q), len(t), 1)) * 100.0,
+        partial_ratio(query, text) * 100.0,
+        (1.0 - levenshtein(qs, ts) / max(len(qs), len(ts), 1)) * 100.0,
+    )
+    return 1.2 if fuzz > 80 else 1.1 if fuzz > 60 else 1.0
+
+
+def test_fuzz_boost_class_equals_the_full_ratios():
+    """``fuzz_boost`` computes only the class of fuzz (it skips windows of
+    the partial ratio that cannot lift it, and stops at > 80): over 12k
+    seeded pairs its factor equals the factor of the fully computed
+    ratios, and ``_partial_lifts``' class equals ``partial_ratio``'s from
+    either starting class."""
+    from hybrid_sanctions_search_engine_spark.operators.fuzzy import (
+        _partial_lifts,
+        fuzz_boost,
+        partial_ratio,
+    )
+
+    def cls(f):
+        return 2 if f > 80 else 1 if f > 60 else 0
+
+    pairs = _pairs(11, 12_000)
+    seen = {1.0: 0, 1.1: 0, 1.2: 0}
+    for query, text in pairs:
+        want = _reference_fuzz_boost(query, text)
+        assert fuzz_boost(query, text) == want, (query, text)
+        seen[want] += 1
+        full = partial_ratio(query, text) * 100.0
+        for start in (0.0, 70.0):
+            got = _partial_lifts(query.lower(), text.lower(), start)
+            assert cls(got) == cls(max(start, full)), (query, text, start)
+    # every class is exercised
+    assert min(seen.values()) > 500, seen

@@ -214,13 +214,18 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
     from hybrid_sanctions_search_engine_spark.functions.vectors import pseudo_embedding
     from hybrid_sanctions_search_engine_spark.plans.hybrid import SearchOpts
     from hybrid_sanctions_search_engine_spark.plans.wand import topk_search
-    from hybrid_sanctions_search_engine_spark.sources.tables import local_frame
+    from hybrid_sanctions_search_engine_spark.sources.tables import (
+        local_frame,
+        standing_task,
+    )
 
     shipped = {}
     wrap = pyspark.sql.udf._wrap_function
 
     def spy(sc, func, returnType=None):
         body = getattr(func, "func", func)  # a partial: its bound function
+        if body is standing_task:  # a standing map's UDF: the body it runs
+            body = getattr(func.args[1], "func", func.args[1])
         shipped.setdefault(f"{body.__module__}.{body.__qualname__}", func)
         return wrap(sc, func, returnType)
 
@@ -256,15 +261,16 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
     expected = {
         "operators.fuzzy.dictionary_bloom.<locals>.build",
         # every lexical stage's and topk_search's one in-place body (the
-        # batch scorer, score_doc_group, rides inside it); both are
-        # module-level, bound by functools.partial
+        # batch scorer, score_doc_group, rides in its spec): module-level,
+        # run by a standing map's ``standing_task`` or bound to a one-off
+        # call's spec by functools.partial
         "operators.bm25.score_in_place",
-        # the batched vector leg's Arrow-map bodies: each emits its task's
-        # top-k with the rerank inputs (text, query text, partial ratio)
-        "operators.similarity.knn_ivf_probe_many.<locals>.score",
-        "operators.similarity.knn_bruteforce_many.<locals>.score_batches",
-        "operators.fused_probe.fused_cell_probe_many.<locals>.rerank_pass",
-        "operators.fused_probe.fused_cell_probe_many.<locals>.code_scan",
+        # the batched vector leg's module-level Arrow-map bodies: each
+        # emits its task's top-k, reranked in the task
+        "operators.similarity.ivf_probe_task",
+        "operators.similarity.bruteforce_task",
+        "operators.fused_probe.rerank_task",
+        "operators.fused_probe.code_scan_task",
     }
     assert {f"{PKG}.{name}" for name in expected} <= set(shipped), sorted(shipped)
     missing = [
@@ -326,3 +332,68 @@ def test_search_many_collects_are_k_bounded(spark, served, monkeypatch, rerank):
         if max(per_query.values(), default=0) > tasks * opts.top_k
     ]
     assert not over, over
+
+
+_INPUT_WAIT = """
+import json, os, statistics
+from hybrid_sanctions_search_engine_spark.session import get_spark
+
+spark = get_spark("input-wait", cores=2)
+
+
+def body(batches):
+    import time
+
+    import pyarrow as pa
+
+    from hybrid_sanctions_search_engine_spark.operators.similarity import local_topk
+
+    assert local_topk  # the package import: the worker's zip check
+    t0 = time.perf_counter()
+    n = sum(b.num_rows for b in batches)
+    yield pa.RecordBatch.from_pydict({"ms": [(time.perf_counter() - t0) * 1e3], "n": [n]})
+
+
+frame = spark.range(10, numPartitions=1).mapInArrow(body, "ms double, n long")
+frame.collect()  # starts the worker
+rows = [frame.collect()[0] for _ in range(15)]
+conf = spark.sparkContext.getConf()
+print(json.dumps({
+    "waits": [r["ms"] for r in rows],
+    "rows": [r["n"] for r in rows],
+    "uds": conf.get("spark.python.unix.domain.socket.enabled"),
+    "dir": conf.get("spark.python.unix.domain.socket.dir"),
+}))
+spark.stop()
+"""
+
+
+def test_small_task_input_wait_over_unix_sockets(tmp_path):
+    """A session from ``get_spark`` streams to its Python workers over
+    Unix domain sockets: a 10-row ``mapInArrow`` task waits well under a
+    millisecond for its input, where loopback TCP stalled it ~40 ms
+    (delayed ACK).  Under a temp directory of more than 100 characters —
+    a benchmark's ``TMPDIR`` grows with its checkout path — the sockets go
+    to a short private directory, removed at exit."""
+    import json
+    import statistics
+
+    long_tmp = tmp_path / ("t" * 100)
+    long_tmp.mkdir()
+    assert len(str(long_tmp)) >= 100
+    env = {
+        **os.environ,
+        "PYTHONPATH": REPO,
+        "TMPDIR": str(long_tmp),
+        "SPARK_DRIVER_MEM": "1g",
+        "PYSPARK_SUBMIT_ARGS": f"--driver-java-options -Djava.io.tmpdir={long_tmp} pyspark-shell",
+    }
+    out = subprocess.run(
+        [sys.executable, "-c", _INPUT_WAIT], env=env, capture_output=True,
+        check=True, timeout=300,
+    )
+    got = json.loads(out.stdout.decode().strip().splitlines()[-1])
+    assert got["uds"] == "true"
+    assert len(got["dir"]) <= 64 and not os.path.exists(got["dir"])
+    assert got["rows"] == [10] * 15
+    assert statistics.median(got["waits"]) < 10.0, got["waits"]
