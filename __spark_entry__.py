@@ -152,7 +152,8 @@ def q_phrase_match(spark: SparkSession, sf: str) -> DataFrame:
 def q_phrase_slop(spark: SparkSession, sf: str) -> DataFrame:
     """Sloppy phrase (anchored contract, slop=2) — the reference's watchlist
     adapter queries match_phrase with slop (elasticsearch_watchlist_adapter
-    .py:218-229); operators/bm25.py:phrase_match documents the semantics."""
+    .py:218-229); operators/bm25.py's phrase section documents the
+    semantics, implemented once by ``_phrase_intersect``."""
     return bm25_ops.phrase_match(
         _docs(spark, sf), ["table", "value", "row"], slop=2
     )
@@ -164,7 +165,7 @@ def q_phrase_slop_unordered(spark: SparkSession, sf: str) -> DataFrame:
 
     - mode='symmetric' — ES-style unordered slop (term i in the SYMMETRIC
       window [p+i-slop, p+i+slop]; operators/bm25.py::phrase_match
-      ordered=False).
+      ordered=False, the same intersect as the indexed path).
     - mode='lucene' — exact Lucene span-budget semantics (round-6; the
       doc matches iff some alignment's offset-adjusted span
       max(p_i−i)−min(p_i−i) ≤ slop, i.e. SloppyPhraseMatcher's
@@ -205,10 +206,10 @@ def q_webpage_extract(spark: SparkSession, sf: str) -> DataFrame:
 
 def q_phrase_msearch(spark: SparkSession, sf: str) -> DataFrame:
     """Batched phrase serving (msearch shape): several phrases in ONE job
-    over a positions-enabled compressed index — each chunk task decodes the
-    union of needed position streams once and runs every phrase's intersect
-    chain over the shared decode (plans/wand.py::batch_phrase_search;
-    anchored slop=1 contract)."""
+    over a positions-enabled compressed index — the matched rows opened by
+    chunk group, each flush of whole groups decoded once and every phrase's
+    intersect run over the shared decode (plans/wand.py::batch_phrase_search
+    → operators/bm25.py::phrase_in_place; anchored slop=1 contract)."""
     import atexit
     import hashlib
     import shutil

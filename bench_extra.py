@@ -10,7 +10,7 @@ steal number can't salvage a mixed window):
   * the fused lexical job, the IVF probe, and the rerank text probe in
     isolation;
   * the entry-query shapes the round restructured (bm25_topk multi-mode,
-    phrase map-aggregation, minhash single-job, simhash cached-fingerprint,
+    phrase in-place body, minhash single-job, simhash cached-fingerprint,
     one-shot wand).
 
 Prints ONE JSON line.  Scale comes from $SPARK_GRAFT_SF_DIR /

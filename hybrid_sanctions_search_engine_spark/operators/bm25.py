@@ -6,12 +6,15 @@ no custom similarity, ``elasticsearch_index_manager.py:103-260``), exact term
 match, multi-field dis-max, phrase adjacency, prefix completion and wildcard
 match (``elasticsearch_adapters.py:172-255``).
 
-The reference operators (``bm25_topk``, ``bm25_topk_multi``, the phrase,
+The reference operators (``bm25_topk``, ``bm25_topk_multi``, the
 completion and wildcard matchers) are JVM-side Column arithmetic — no Python
 UDFs — so Catalyst keeps the plan in codegen, pushes the ``term IN (...)``
 predicate into the postings scan, and plans the final top-k as
 TakeOrderedAndProject.  The serving top-k (``topk_pre_grouped``) is one
 numpy body over doc groups; every batched and indexed BM25 call runs it.
+Phrase matching is one numpy body too (``phrase_in_place``), over raw
+documents (``phrase_match``) and over a positions index
+(``plans.wand.batch_phrase_search``).
 
 Scoring (Lucene BM25, the reference engine's default):
     idf(t)      = ln(1 + (N - df + 0.5) / (df + 0.5))
@@ -23,7 +26,7 @@ from __future__ import annotations
 
 from dataclasses import dataclass
 from functools import cache, partial
-from typing import Any
+from typing import Any, NamedTuple
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -261,21 +264,6 @@ BATCH_SCORE_SCHEMA = (
 # a scorer given ``FuzzyQueries`` also reports the terms it read: one row per
 # term with ``term`` set (its other fields 0); score rows carry a null term
 FUZZY_SCORE_SCHEMA = StructType([*BATCH_SCORE_SCHEMA.fields]).add("term", StringType())
-
-
-def group_partitioned(df: DataFrame, key, n: int) -> DataFrame:
-    """Pin the partitioning of a CPU-heavy grouped-map Python stage (the
-    phrase matcher, ``plans.wand.batch_phrase_search``).
-
-    AQE's partition coalescing is byte-based: the stage's shuffle input is
-    small compressed postings, so AQE happily collapses an n-way shuffle
-    into ONE post-shuffle partition and the whole stage runs
-    single-threaded (measured on a 100-query × 960k-doc scoring batch:
-    11.5 s plain groupBy vs 1.7 s with this explicit repartition — AQE
-    does not coalesce user-specified repartitions).  The repartition's
-    hash partitioning on the group key satisfies the groupBy's required
-    distribution, so the plan still contains exactly one exchange."""
-    return df.repartition(n, key)
 
 
 @dataclass(frozen=True)
@@ -589,19 +577,15 @@ def score_pre_grouped(score_group, k: int):
     cache, or a one-off repartition of the matched rows), coalesced into
     fewer tasks.  Rows carry their partition id in ``part``; coalescing
     concatenates whole partitions, so each partition's rows arrive
-    contiguously.  A task holds whole partitions and hands them to
-    ``score_group`` (``make_batch_group_scorer`` with top ``k``) together,
-    at the first partition boundary where the held rows reach
-    ``FLUSH_POSTINGS`` postings (a shard row counts its ``n_docs``, a raw
-    row one), and at its end: per-partition flushing paid the scorer's
-    pandas/numpy set-up (~1–3 ms) once per cached partition.  Partitions are
-    never split, and one larger than the budget flushes alone; a flush is a
+    contiguously.  A task hands ``score_group`` (``make_batch_group_scorer``
+    with top ``k``) each ``partition_flushes`` flush of whole partitions
+    (``FLUSH_POSTINGS`` postings): per-partition flushing paid the scorer's
+    pandas/numpy set-up (~1–3 ms) once per cached partition.  A flush is a
     union of doc groups, so its local top-k per query is exact.  The task
     merges its flushes' tops into one top-k per query under (score desc,
     doc_id asc) before it yields, so its output is ≤ |queries| × k rows
     however many partitions it coalesced (plus, from a ``fuzzy`` scorer,
-    one report row per distinct term read).  Per-task memory stays near
-    ``FLUSH_POSTINGS`` postings plus one cached partition.  A module-level
+    one report row per distinct term read).  A module-level
     body bound by ``functools.partial``, so it pickles by reference."""
     return partial(score_in_place, (score_group, k, FLUSH_POSTINGS))
 
@@ -625,21 +609,21 @@ def _merged_tops(tops: list, k: int):
     return out if reports is None else pd.concat([out, reports])
 
 
-def score_in_place(spec: tuple, batches):
-    """The lexical jobs' one body, over one task's Arrow batches under a
-    call's spec ``(score_group, k, flush_postings)`` — bound by
-    ``score_pre_grouped``, or shipped per call to a standing map
-    (``sources.tables.StandingMap``).  ``held`` holds whole partitions,
-    ``cur`` the partition still streaming in."""
+def partition_flushes(batches, flush_postings: int):
+    """One task's pandas batches of a ``part``-tagged frame (each cached
+    partition's rows contiguous, as ``coalesce`` concatenates them) as
+    flushes of WHOLE partitions: the held partitions go out together at the
+    first partition boundary where they reach ``flush_postings`` postings
+    (a shard row counts its ``n_docs``, a raw row one), and at the end.  A
+    partition is never split, and one larger than the budget flushes
+    alone.  The one per-task memory bound of the in-place bodies
+    (``score_in_place``, ``phrase_in_place``): about ``flush_postings``
+    postings plus one partition.  ``held`` holds whole partitions, ``cur``
+    the partition still streaming in."""
     import numpy as np
     import pandas as pd
 
-    score_group, k, flush_postings = spec
-    held, held_n, cur, cur_n, cur_part, tops = [], 0, [], 0, None, []
-
-    def flush(frames):
-        tops.append(score_group(None, pd.concat(frames, ignore_index=True)))
-
+    held, held_n, cur, cur_n, cur_part = [], 0, [], 0, None
     for pdf in batches:
         if pdf.empty:
             continue
@@ -650,17 +634,27 @@ def score_in_place(spec: tuple, batches):
             if cur and parts[lo] != cur_part:
                 held, held_n, cur, cur_n = held + cur, held_n + cur_n, [], 0
                 if held_n >= flush_postings:
-                    flush(held)
+                    yield pd.concat(held, ignore_index=True)
                     held, held_n = [], 0
             cur_part = parts[lo]
             cur.append(pdf.iloc[lo:hi])
             cur_n += hi - lo if sizes is None else int(sizes[lo:hi].sum())
             if held and cur_n >= flush_postings:
                 # an outsized partition flushes alone
-                flush(held)
+                yield pd.concat(held, ignore_index=True)
                 held, held_n = [], 0
     if held or cur:
-        flush(held + cur)
+        yield pd.concat(held + cur, ignore_index=True)
+
+
+def score_in_place(spec: tuple, batches):
+    """The lexical jobs' one body, over one task's Arrow batches under a
+    call's spec ``(score_group, k, flush_postings)`` — bound by
+    ``score_pre_grouped``, or shipped per call to a standing map
+    (``sources.tables.StandingMap``): each ``partition_flushes`` flush
+    scored, the tops merged."""
+    score_group, k, flush_postings = spec
+    tops = [score_group(None, pdf) for pdf in partition_flushes(batches, flush_postings)]
     if tops:
         yield _merged_tops(tops, k)
 
@@ -840,150 +834,61 @@ def batch_topk(
     )
 
 
-def phrase_match(
-    docs: DataFrame,
-    phrase_terms: list[str],
-    text_col: str = "text",
-    postings: DataFrame | None = None,
-    slop: int = 0,
-    ordered: bool = True,
-    lucene: bool = False,
-) -> DataFrame:
-    """doc_ids containing the phrase (ES match_phrase; reference query at
-    ``elasticsearch_adapters.py:206-216``, and the watchlist adapter's
-    slop=1 variant at ``elasticsearch_watchlist_adapter.py:218-229``).
+# -- phrase match ---------------------------------------------------------------
+#
+# The phrase contracts (ES match_phrase; the reference's query at
+# ``elasticsearch_adapters.py:206-216``, and the watchlist adapter's slop=1
+# variant at ``elasticsearch_watchlist_adapter.py:218-229``), implemented
+# once, by ``_phrase_intersect``, for both entry points (``phrase_match``
+# over raw documents, ``plans.wand.batch_phrase_search`` over a positions
+# index) and mirrored by the contract's DuckDB oracles:
+#
+# - anchored (default): an occurrence is a position ``p`` of term 0 such
+#   that every later term ``i`` appears somewhere in ``[p+i, p+i+slop]`` —
+#   each term may lag its exact slot by at most ``slop`` extra positions.
+#   slop=0 is exact adjacency.
+# - ``ordered=False`` (ES-style sloppy phrase, which permits reordering at
+#   slop ≥ 2): term i's window becomes symmetric, ``[p+i-slop, p+i+slop]``,
+#   so an adjacent transposition ("b a" for phrase "a b") matches at
+#   slop=2, exactly like Lucene's SloppyPhraseMatcher on two terms.  A
+#   strict superset of the anchored matches at the same slop.  (Per-term
+#   windows are a documented approximation; for the exact budget see
+#   ``lucene=True``.)
+# - ``lucene=True`` (exact Lucene doc-match semantics; ``ordered`` is then
+#   ignored): SloppyPhraseMatcher accepts an alignment (one position ``p_i``
+#   per term) when its matchLength — the SPAN of the offset-adjusted
+#   positions, ``max_i(p_i − i) − min_i(p_i − i)`` — is ≤ slop.  That
+#   reduces to an anchored check whose anchor ranges over EVERY term's
+#   adjusted positions: the doc matches iff some ``s ∈ ⋃_i {p − i : p ∈
+#   positions(term_i)}`` has every term ``i`` present in ``[s+i,
+#   s+i+slop]`` (s = the min adjusted position of a witnessing alignment;
+#   conversely any such s yields an alignment of span ≤ slop).  Anchors can
+#   be NEGATIVE ("b a" for phrase "a b" witnesses s=−1 at slop=2).  A
+#   repeated term also needs Lucene's distinct positions: its windows are
+#   equal-width with sorted starts, so a system of distinct representatives
+#   exists iff Hall's condition holds on contiguous offset runs —
+#   ``|P_t ∩ [s+i_a, s+i_b+slop]| ≥ b−a+1`` for every offset pair (exact:
+#   overlapping runs' window unions are single intervals, and split runs
+#   follow from their components; ``_repeated_term_runs``).
+#
+# At the same slop: ordered ⊆ lucene ⊆ unordered.  ``n_occurrences`` counts
+# distinct anchors (one documented deviation from Lucene proper, NOT
+# affecting doc sets: counts follow the anchor contract rather than
+# Lucene's greedy phraseFreq).  tests/test_wand.py checks both entry points
+# against a brute-force alignment enumerator for all three contracts.
 
-    ``slop`` semantics (anchored, documented contract shared with the
-    indexed path and the DuckDB oracle): an occurrence is a position ``p``
-    of term 0 such that every later term ``i`` appears somewhere in
-    ``[p+i, p+i+slop]`` — each term may lag its exact slot by at most
-    ``slop`` extra positions.  slop=0 is exact adjacency.
+BATCH_PHRASE_SCHEMA = (
+    StructType().add("query_id", LongType()).add("doc_id", LongType())
+    .add("n_occurrences", IntegerType())
+)
 
-    ``ordered=False`` (ES-style sloppy phrase, which permits reordering at
-    slop ≥ 2): term i's window becomes symmetric, ``[p+i-slop, p+i+slop]``
-    — each term may be displaced at most ``slop`` positions from its exact
-    slot in EITHER direction, so an adjacent transposition ("b a" for
-    phrase "a b") matches at slop=2, exactly like Lucene's
-    SloppyPhraseMatcher on two terms.  A strict superset of the anchored
-    ordered matches at the same slop.  (Per-term windows are a documented
-    approximation; for the exact budget see ``lucene=True``.)
-
-    ``lucene=True`` (exact Lucene doc-match semantics): Lucene's
-    SloppyPhraseMatcher accepts an alignment (one position ``p_i`` per
-    term) when its matchLength — the SPAN of the offset-adjusted
-    positions, ``max_i(p_i − i) − min_i(p_i − i)`` — is ≤ slop.  That
-    criterion reduces to an anchored check where the anchor ranges over
-    EVERY term's adjusted positions: the doc matches iff some
-    ``s ∈ ⋃_i {p − i : p ∈ positions(term_i)}`` has every term ``i``
-    present in ``[s+i, s+i+slop]`` (s = the min adjusted position of a
-    witnessing alignment; conversely any such s yields an alignment of
-    span ≤ slop).  At the same slop: ordered ⊆ lucene ⊆ unordered
-    (property-tested).  ``n_occurrences`` counts distinct anchors s.
-    ``ordered`` is ignored when lucene=True (the span budget inherently
-    admits reordering once slop ≥ 2).  Phrases with REPEATED terms get
-    Lucene's distinct-position requirement too: for each repeated term the
-    windows are equal-width with sorted starts, so a system of distinct
-    representatives exists iff Hall's condition holds on contiguous offset
-    runs — ``|P_t ∩ [s+i_a, s+i_b+slop]| ≥ b−a+1`` for every offset pair
-    (exact: overlapping runs' window unions are single intervals, and
-    split runs follow from their components) — a per-anchor count filter
-    (cross-checked against a brute-force alignment oracle in
-    tests/test_wand.py).  One documented deviation from Lucene proper,
-    NOT affecting doc sets: occurrence COUNTS follow the distinct-anchor
-    contract rather than Lucene's greedy phraseFreq.
-
-    Positions-list intersection: start from term 0's positions and
-    successively keep only positions p with p+i(+d) present in term i's
-    list — all JVM array expressions (`F.filter` + `array_contains`), no
-    UDF.
-    """
-    if not phrase_terms:
-        raise ValueError("empty phrase")
-    if slop < 0:
-        raise ValueError("slop must be >= 0")
-    # ONE corpus pass for every phrase shape: per-term position arrays
-    # arrive as a per-doc map (term → positions) built by two aggregations,
-    # and each term's pos_i column is a map lookup — the former per-term
-    # join chain re-evaluated the whole postings subtree (a full tokenize +
-    # positions aggregation) once per distinct term (guide §2.4).  Docs
-    # missing any distinct term drop via the map-size filter, exactly like
-    # the old inner joins.  When ``postings`` is supplied, only its matched
-    # rows aggregate into the map (no corpus re-scan either way).
-    uniq_terms = list(dict.fromkeys(phrase_terms))
-    if postings is None:
-        from .postings import tokenized_documents
-
-        per_term = (
-            tokenized_documents(docs, text_col)
-            .select("doc_id", F.posexplode("tokens").alias("pos", "term"))
-            .where(F.col("term").isin(uniq_terms))
-            .groupBy("doc_id", "term")
-            .agg(F.sort_array(F.collect_list("pos")).alias("positions"))
-        )
-    else:
-        per_term = postings.where(F.col("term").isin(uniq_terms)).select(
-            "doc_id", "term", "positions"
-        )
-    base = (
-        per_term.groupBy("doc_id")
-        .agg(
-            F.map_from_entries(
-                F.collect_list(F.struct("term", "positions"))
-            ).alias("_pm")
-        )
-        .where(F.size("_pm") == len(uniq_terms))
-    )
-    for i, term in enumerate(phrase_terms):
-        base = base.withColumn(f"pos_{i}", F.element_at("_pm", F.lit(term)))
-    base = base.drop("_pm")
-    lo = -slop if (not ordered and not lucene) else 0
-
-    def _within_slop(pos_col: str, offset: int):
-        def pred(p):
-            cond = F.array_contains(F.col(pos_col), p + F.lit(offset + lo))
-            for d in range(lo + 1, slop + 1):
-                cond = cond | F.array_contains(
-                    F.col(pos_col), p + F.lit(offset + d)
-                )
-            return cond
-
-        return pred
-
-    if lucene:
-        return _phrase_match_lucene(base, phrase_terms, slop, _within_slop)
-    current = base.withColumn("cand", F.col("pos_0"))
-    for i in range(1, len(phrase_terms)):
-        current = current.withColumn(
-            "cand", F.filter(F.col("cand"), _within_slop(f"pos_{i}", i))
-        )
-    return (
-        current.where(F.size("cand") > 0)
-        .select("doc_id", F.size("cand").alias("n_occurrences"))
-    )
-
-
-def _shift_by(i: int):
-    """Closure factory (NOT a default-arg lambda — Spark counts lambda
-    parameters) mapping a position to its offset-adjusted value p − i."""
-    return lambda p: p - F.lit(i)
-
-
-def _hall_count_pred(pos_col: str, lo_off: int, hi_off: int, need: int):
-    """Closure factory: anchor s survives iff ≥ ``need`` positions of
-    ``pos_col`` fall in [s+lo_off, s+hi_off] (one Hall run of a repeated
-    term's window family)."""
-
-    def pred(s):
-        def in_run(p):
-            return (p >= s + F.lit(lo_off)) & (p <= s + F.lit(hi_off))
-
-        return F.size(F.filter(F.col(pos_col), in_run)) >= F.lit(need)
-
-    return pred
+# a position key is ``local doc << 40 | position``: positions < 2^40, and a
+# flush's dense local doc index < 2^23
+_PHRASE_POS_BITS = 40
 
 
 def _repeated_term_runs(phrase_terms: list[str], slop: int):
-    """(pos_col_index, run_lo_offset, run_hi_offset, need) Hall checks for
+    """(first_offset, run_lo_offset, run_hi_offset, need) Hall checks for
     every repeated term's contiguous offset runs (empty for distinct-term
     phrases — the common case pays nothing)."""
     by_term: dict[str, list[int]] = {}
@@ -991,49 +896,188 @@ def _repeated_term_runs(phrase_terms: list[str], slop: int):
         by_term.setdefault(t, []).append(i)
     runs = []
     for offs in by_term.values():
-        if len(offs) < 2:
-            continue
         for a in range(len(offs)):
             for b in range(a + 1, len(offs)):
-                runs.append(
-                    (offs[0], offs[a], offs[b] + slop, b - a + 1)
-                )
+                runs.append((offs[0], offs[a], offs[b] + slop, b - a + 1))
     return runs
 
 
-def _phrase_match_lucene(base, phrase_terms, slop, _within_slop):
-    """Exact-Lucene span-budget phrase match (see ``phrase_match`` for the
-    contract derivation).  Anchors = distinct offset-adjusted positions of
-    ALL terms; an anchor survives iff every term i (term 0 included) has a
-    position in [s+i, s+i+slop], and — for repeated terms — Hall's
-    condition grants a distinct position per slot.  Anchors can be
-    NEGATIVE (phrase "a b" over text "b a" at slop=2 witnesses s=−1:
-    'a'∈[−1,1] via 1, 'b'∈[0,2] via 0) — array algebra handles that for
-    free; the packed-key indexed twin (plans/wand.py::_phrase_intersect)
-    needs a bias for it.
+def _phrase_intersect(
+    per_term: dict, ordered_terms: list[str], slop: int,
+    ordered: bool = True, lucene: bool = False,
+):
+    """Anchor keys of one phrase's occurrences under the contracts above
+    (None when a term has no keys), from ``per_term``: each term's packed
+    ``doc << _PHRASE_POS_BITS | position`` keys, unique.  Shift each
+    term's keys by its offset (and its window's displacements) and
+    intersect.  A shift that borrows below a document's position 0 makes a
+    key no anchor can match (anchors are real positions), so no masking is
+    needed.
 
-    ``base``: one row per candidate doc with ``pos_0 .. pos_{n-1}``
-    per-term position columns (repeated terms share an array), built by
-    ``phrase_match``'s single-pass map aggregation."""
-    current = base
-    shifted = [
-        F.transform(F.col(f"pos_{i}"), _shift_by(i))
-        for i in range(len(phrase_terms))
-    ]
-    cand = F.array_distinct(F.concat(*shifted)) if len(shifted) > 1 else shifted[0]
-    current = current.withColumn("cand", cand)
-    for i in range(len(phrase_terms)):
-        current = current.withColumn(
-            "cand", F.filter(F.col("cand"), _within_slop(f"pos_{i}", i))
+    ``lucene``: anchors come from EVERY term's adjusted positions, and
+    every term — term 0 included — must land in [s+i, s+i+slop].  Negative
+    anchors would borrow into the doc bits, so all key arithmetic carries a
+    ``+(n_terms−1+slop)`` position bias: biased pos ≥ pos−(n−1)+bias = slop
+    ≥ the largest displacement d, so neither the anchors nor the ``−d``
+    expansions underflow position 0 of their doc.  Repeated terms then pass
+    the Hall-run counts (searchsorted range counts over the term's sorted
+    keys).  Returned keys keep the bias: callers read only ``key >>
+    _PHRASE_POS_BITS``."""
+    import numpy as np
+
+    if any(t not in per_term for t in ordered_terms):
+        return None
+    if not lucene:
+        lo = -slop if not ordered else 0
+        keys = per_term[ordered_terms[0]]
+        for offset, t in enumerate(ordered_terms[1:], start=1):
+            kt = per_term[t] - offset  # (doc << 40) | (pos - offset)
+            if slop:
+                kt = np.unique(np.concatenate([kt - d for d in range(lo, slop + 1)]))
+            keys = np.intersect1d(keys, kt, assume_unique=True)
+            if keys.size == 0:
+                break
+        return keys
+    bias = len(ordered_terms) - 1 + slop
+    adj = [per_term[t] - offset + bias for offset, t in enumerate(ordered_terms)]
+    keys = np.unique(np.concatenate(adj)) if len(adj) > 1 else adj[0]
+    for kt in adj:
+        if slop:
+            kt = np.unique(np.concatenate([kt - d for d in range(slop + 1)]))
+        keys = np.intersect1d(keys, kt, assume_unique=True)
+        if keys.size == 0:
+            return keys
+    pos_mask = (np.int64(1) << _PHRASE_POS_BITS) - 1
+    for first_off, lo_off, hi_off, need in _repeated_term_runs(ordered_terms, slop):
+        kt = np.sort(per_term[ordered_terms[first_off]])
+        doc_base = keys & ~pos_mask
+        # anchor key k = (doc << bits) | (s + bias); count raw positions of
+        # the term in [s+lo_off, s+hi_off], clamped to the doc's own
+        # position range so negative bounds can't borrow into doc bits
+        lo = np.maximum(keys - bias + lo_off, doc_base)
+        hi = np.maximum(keys - bias + hi_off, doc_base - 1)
+        cnt = np.searchsorted(kt, hi, side="right") - np.searchsorted(kt, lo, side="left")
+        keys = keys[cnt >= need]
+        if keys.size == 0:
+            break
+    return keys
+
+
+class PhraseSpec(NamedTuple):
+    """A phrase call's spec (``phrase_in_place``).  ``flatten``: shard rows
+    → ``decode_shard_arrays(positions=True)`` arrays, or None for raw
+    (doc_id, term, pos) rows."""
+
+    phrases: list  # (query_id, terms)
+    slop: int
+    ordered: bool
+    lucene: bool
+    flatten: Any
+    flush_postings: int
+
+
+def phrase_in_place(spec: PhraseSpec, batches):
+    """The phrase jobs' one body, over one task's batches of a frame laid
+    out as ``score_pre_grouped`` requires (every partition holds all the
+    matched positions of its docs) → (query_id, doc_id, n_occurrences).
+    In each ``partition_flushes`` flush every position is keyed by its
+    doc's DENSE local index (``np.unique(..., return_inverse=True)``: a raw
+    doc id ≥ 2^23 shifted by 40 bits overflows int64), the keys are split
+    per term, and each phrase's ``_phrase_intersect`` runs over them.  A
+    flush holds every position of its docs, so its matches are exact."""
+    import numpy as np
+    import pandas as pd
+
+    for pdf in partition_flushes(batches, spec.flush_postings):
+        flat = spec.flatten(pdf) if spec.flatten is not None else pdf
+        if isinstance(flat, dict):
+            tf = flat["tf"]
+            doc = np.repeat(flat["doc_id"], tf)
+            codes = np.repeat(flat["term_codes"], tf)
+            uniq_terms, pos = flat["uniq_terms"], flat["positions"]
+        else:
+            codes, uniq_terms = pd.factorize(flat["term"])
+            doc, pos = flat["doc_id"].to_numpy(), flat["pos"].to_numpy()
+        docs, local = np.unique(doc, return_inverse=True)
+        if docs.size >> (63 - _PHRASE_POS_BITS):
+            raise ValueError(f"{docs.size} docs in one phrase flush overflow the keys")
+        keys = (local.astype(np.int64) << _PHRASE_POS_BITS) | pos.astype(np.int64)
+        cuts = np.cumsum(np.bincount(codes, minlength=len(uniq_terms)))[:-1]
+        per_term = dict(
+            zip(list(uniq_terms), np.split(keys[np.argsort(codes, kind="stable")], cuts))
         )
-    for col_i, lo_off, hi_off, need in _repeated_term_runs(phrase_terms, slop):
-        current = current.withColumn(
-            "cand",
-            F.filter(F.col("cand"), _hall_count_pred(f"pos_{col_i}", lo_off, hi_off, need)),
-        )
-    return current.where(F.size("cand") > 0).select(
-        "doc_id", F.size("cand").alias("n_occurrences")
+        out = []
+        for qid, terms in spec.phrases:
+            hits = _phrase_intersect(per_term, terms, spec.slop, spec.ordered, spec.lucene)
+            if hits is None or hits.size == 0:
+                continue
+            at, counts = np.unique(hits >> _PHRASE_POS_BITS, return_counts=True)
+            out.append(
+                pd.DataFrame(
+                    {
+                        "query_id": np.full(at.size, qid, dtype=np.int64),
+                        "doc_id": docs[at].astype(np.int64),
+                        "n_occurrences": counts.astype(np.int32),
+                    }
+                )
+            )
+        if out:
+            yield pd.concat(out, ignore_index=True)
+
+
+def phrase_in_place_frame(
+    rows: DataFrame,
+    phrases: list[tuple[int, list[str]]],
+    slop: int,
+    ordered: bool,
+    lucene: bool,
+    flatten,
+    n_bytes: int,
+) -> DataFrame:
+    """(query_id, doc_id, n_occurrences) of ``phrases`` over ``rows`` laid
+    out by an opener (``doc_groups``, ``plans.wand.chunk_groups``): tag
+    ``spark_partition_id()``, coalesce to ``serving_tasks`` of ``n_bytes``
+    once per phrase, one ``mapInPandas`` of ``phrase_in_place``."""
+    tasks = serving_tasks(rows.sparkSession, n_bytes * max(len(phrases), 1))
+    smap = serving_map(rows, None, phrase_in_place, BATCH_PHRASE_SCHEMA, partitioned=True)
+    spec = PhraseSpec(
+        [(q, list(ts)) for q, ts in phrases], slop, ordered, lucene, flatten,
+        FLUSH_POSTINGS,
     )
+    return smap.frame(spec, None, tasks)
+
+
+def phrase_match(
+    docs: DataFrame,
+    phrase_terms: list[str],
+    text_col: str = "text",
+    slop: int = 0,
+    ordered: bool = True,
+    lucene: bool = False,
+) -> DataFrame:
+    """doc_ids containing the phrase → (doc_id, n_occurrences), under the
+    anchored, symmetric (``ordered=False``) or exact-Lucene (``lucene``)
+    ``slop`` contract (see the phrase section's comment).
+
+    The documents' tokens are posexploded into (doc_id, term, pos) rows,
+    filtered by one predicate string to the phrase's terms, opened by
+    ``doc_groups`` (one exchange) and matched in place by the body
+    ``plans.wand.batch_phrase_search`` runs over a positions index
+    (``phrase_in_place``), sized by the corpus scan's bytes."""
+    from .postings import tokenized_documents
+
+    if not phrase_terms:
+        raise ValueError("empty phrase")
+    if slop < 0:
+        raise ValueError("slop must be >= 0")
+    rows = doc_groups(
+        tokenized_documents(docs, text_col)
+        .select("doc_id", F.posexplode("tokens").alias("pos", "term"))
+        .where(sql_in("term", sorted(set(phrase_terms))))
+    )
+    return phrase_in_place_frame(
+        rows, [(0, list(phrase_terms))], slop, ordered, lucene, None, frame_bytes(docs),
+    ).drop("query_id")
 
 
 def complete_prefix(

@@ -22,8 +22,10 @@ over our own index):
 No chunk is skipped by a score bound.  Block-max θ-pruning (an upper-bound
 probe, a seed round, then the surviving chunks) lost to this one pass at
 every corpus size measured, up to 1M Zipf docs (DESIGN_100TB.md, "Pruning
-regime").  Phrase queries decode position streams through the same reader;
-a single phrase is a batch of one (``batch_phrase_search``).
+regime").  Phrase queries open their matched rows the same way and run the
+one phrase body (``operators.bm25.phrase_in_place``, shared with the raw
+``phrase_match``); a single phrase is a batch of one
+(``batch_phrase_search``).
 
 Rank-identity vs the uncompressed DataFrame BM25 plan is asserted in
 tests/test_wand.py.
@@ -33,24 +35,17 @@ from __future__ import annotations
 
 from functools import partial
 
-import numpy as np
-import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import (
-    IntegerType,
-    LongType,
-    StructField,
-    StructType,
-)
 
 from ..functions.tokenize import py_index_tokens
 from ..operators.bm25 import (
+    BATCH_PHRASE_SCHEMA,
     BATCH_SCORE_SCHEMA,
     FUZZY_SCORE_SCHEMA,
     batch_query_terms,
-    group_partitioned,
     make_batch_group_scorer,
+    phrase_in_place_frame,
     topk_pre_grouped,
 )
 from ..sources.index_io import (
@@ -294,112 +289,8 @@ def index_topk_local(
     )
 
 
-BATCH_PHRASE_SCHEMA = StructType(
-    [
-        StructField("query_id", LongType()),
-        StructField("doc_id", LongType()),
-        StructField("n_occurrences", IntegerType()),
-    ]
-)
-
-
-_PHRASE_POS_BITS = 40  # positions < 2^40 — far beyond any document length
-
-
-def _decode_position_keys(pdf: pd.DataFrame, chunk_base: int) -> dict:
-    """Per-term packed ``(doc_id − chunk_base) << 40 | position`` key arrays
-    for one chunk group's rows, ascending (docs ascend within a row,
-    positions within a posting), from one ``decode_shard_arrays`` pass.
-
-    Within one chunk a local doc id fits in ``chunk_bits`` bits, so a
-    phrase occurrence is a key present for EVERY term after the term's
-    offset shift — one ``np.intersect1d`` chain per chunk
-    (``_phrase_intersect``), no per-candidate-doc Python loop.  Shard rows
-    are keyed (term, chunk), so each term has one row here and its keys
-    are one contiguous run of the stream."""
-    flat = decode_shard_arrays(pdf, positions=True)
-    tf = flat["tf"]
-    local = np.repeat(flat["doc_id"] - chunk_base, tf)
-    keys = (local << _PHRASE_POS_BITS) | flat["positions"]
-    cuts = np.cumsum(np.bincount(np.repeat(flat["term_codes"], tf)))[:-1]
-    return dict(zip(flat["uniq_terms"].tolist(), np.split(keys, cuts)))
-
-
-def _phrase_intersect(
-    per_term: dict, ordered_terms: list[str], slop: int,
-    ordered: bool = True, lucene: bool = False,
-) -> "np.ndarray | None":
-    """Anchor keys of phrase occurrences: a phrase occurrence at (doc, p)
-    needs term i within [p + i, p + i + slop] (ordered contract) or the
-    symmetric [p + i − slop, p + i + slop] (``ordered=False``, ES-style
-    reordering) — shift each term's keys by its offset (and the slop
-    window's extra displacements) and intersect.  A shift that borrows
-    below a document's position 0 produces a key no anchor can match
-    (anchors are real positions), so no masking is needed.
-
-    ``lucene=True`` (exact span-budget contract, see
-    operators/bm25.py::phrase_match): anchors are drawn from EVERY term's
-    offset-adjusted positions, and every term — term 0 included — must
-    land in [s+i, s+i+slop].  Adjusted positions can be NEGATIVE ("b a"
-    for phrase "a b" witnesses s=−1 at slop=2), which would borrow into
-    the packed doc-id bits, so all key arithmetic carries a
-    ``+(n_terms−1+slop)`` position bias: biased pos ≥ pos−(n−1)+B = slop
-    ≥ the largest window displacement d, so neither the anchors nor the
-    ``−d`` expansions ever underflow position 0 of their doc.  Repeated
-    phrase terms additionally pass Lucene's distinct-position requirement
-    via per-anchor Hall-run counts (searchsorted range counts over the
-    term's sorted keys; see operators/bm25.py::phrase_match).  Returned
-    keys keep the bias (callers only use ``key >> pos_bits``, unaffected
-    since biased positions stay ≪ 2^pos_bits)."""
-    if any(t not in per_term for t in ordered_terms):
-        return None
-    if lucene:
-        from ..operators.bm25 import _repeated_term_runs
-
-        bias = len(ordered_terms) - 1 + slop
-        adj = [
-            per_term[t] - offset + bias
-            for offset, t in enumerate(ordered_terms)
-        ]
-        keys = np.unique(np.concatenate(adj)) if len(adj) > 1 else adj[0]
-        for kt in adj:
-            if slop:
-                kt = np.unique(
-                    np.concatenate([kt - d for d in range(0, slop + 1)])
-                )
-            keys = np.intersect1d(keys, kt, assume_unique=True)
-            if keys.size == 0:
-                return keys
-        pos_mask = (np.int64(1) << _PHRASE_POS_BITS) - 1
-        for first_off, lo_off, hi_off, need in _repeated_term_runs(
-            ordered_terms, slop
-        ):
-            kt = np.sort(per_term[ordered_terms[first_off]])
-            doc_base = keys & ~pos_mask
-            # anchor key k = (doc << bits) | (s + bias); count raw positions
-            # of the term in [s+lo_off, s+hi_off], clamped to the doc's own
-            # position range so negative bounds can't borrow into doc bits
-            lo = np.maximum(keys - bias + lo_off, doc_base)
-            hi = np.maximum(keys - bias + hi_off, doc_base - 1)
-            cnt = np.searchsorted(kt, hi, side="right") - np.searchsorted(
-                kt, lo, side="left"
-            )
-            keys = keys[cnt >= need]
-            if keys.size == 0:
-                return keys
-        return keys
-    lo = -slop if not ordered else 0
-    keys = per_term[ordered_terms[0]]
-    for offset, t in enumerate(ordered_terms[1:], start=1):
-        kt = per_term[t] - offset  # (doc << 40) | (pos - offset)
-        if slop:
-            kt = np.unique(
-                np.concatenate([kt - d for d in range(lo, slop + 1)])
-            )
-        keys = np.intersect1d(keys, kt, assume_unique=True)
-        if keys.size == 0:
-            return keys
-    return keys
+# the shard columns the phrase body decodes (``decode_shard_arrays(positions=True)``)
+PHRASE_COLS = ["term", "chunk", "n_docs", "doc_gaps", "tfs", "doc_lens", "positions"]
 
 
 def phrase_search(
@@ -413,19 +304,13 @@ def phrase_search(
     lucene: bool = False,
 ) -> DataFrame:
     """Phrase match over a positions-enabled compressed index
-    → (doc_id, n_occurrences).  Same shard/row-group pruning as topk_search;
-    adjacency (or the anchored ``slop`` window / symmetric ``ordered=False``
-    window / exact-Lucene span budget ``lucene=True`` — see
-    ``operators.bm25.phrase_match`` for the three contracts; the
-    reference's watchlist adapter queries with slop=1,
-    ``elasticsearch_watchlist_adapter.py:218-229``) verified from the
-    varint position streams per chunk.
+    → (doc_id, n_occurrences), under the anchored, symmetric
+    (``ordered=False``) or exact-Lucene (``lucene``) ``slop`` contract of
+    ``operators.bm25.phrase_match`` (the reference's watchlist adapter
+    queries with slop=1, ``elasticsearch_watchlist_adapter.py:218-229``).
 
     A single phrase is a batch of one: ``batch_phrase_search`` with the
-    query id dropped, ordered by ``doc_id``.
-
-    Rank-identity vs the DataFrame ``operators.bm25.phrase_match`` is
-    asserted in tests/test_wand.py (slop 0, 1, 2; all three contracts)."""
+    query id dropped, ordered by ``doc_id``."""
     return batch_phrase_search(
         spark, index_dir, [(0, phrase)], index_df=index_df, meta=meta,
         slop=slop, ordered=ordered, lucene=lucene,
@@ -444,14 +329,13 @@ def batch_phrase_search(
 ) -> DataFrame:
     """Many phrases in ONE job (the msearch shape for phrase queries — the
     reference's watchlist adapter issues match_phrase per request;
-    ``elasticsearch_watchlist_adapter.py:218-229``): the scan prunes to the
-    UNION of all phrases' shards/terms, each chunk task decodes every needed
-    term's position keys ONCE, and every phrase's intersect chain runs over
-    the shared decode → (query_id, doc_id, n_occurrences).
-
-    ``phrase_search`` is this on a batch of one; a batch costs one job and
-    one decode for all its phrases instead of a job and a decode per
-    phrase."""
+    ``elasticsearch_watchlist_adapter.py:218-229``) → (query_id, doc_id,
+    n_occurrences), ordered by (query_id, doc_id).  The scan prunes to the
+    UNION of all phrases' shards and terms (``_term_filter``),
+    ``chunk_groups`` opens the matched rows, and the phrase body
+    (``operators.bm25.phrase_in_place``, sized by the index's shard bytes
+    once per phrase) decodes each flush's position streams once for every
+    phrase's intersect."""
     if index_df is None or meta is None:
         index_df, meta = load_index(spark, index_dir)
     if not meta.has_positions:
@@ -467,43 +351,10 @@ def batch_phrase_search(
     if not qterms:
         return local_frame(spark, [], BATCH_PHRASE_SCHEMA)
     all_terms = sorted({t for _, ts in qterms for t in ts})
-    matched = index_df.where(_term_filter(all_terms, meta))
-    chunk_bits = meta.chunk_bits
-
-    def match_many(key, pdf):
-        chunk_base = int(key[0]) << chunk_bits
-        per_term = _decode_position_keys(pdf, chunk_base)
-        out_q, out_d, out_n = [], [], []
-        for qid, ts in qterms:
-            keys = _phrase_intersect(per_term, ts, slop, ordered, lucene)
-            if keys is None or keys.size == 0:
-                continue
-            docs, counts = np.unique(keys >> _PHRASE_POS_BITS, return_counts=True)
-            out_q.append(np.full(docs.size, qid, dtype=np.int64))
-            out_d.append(docs + chunk_base)
-            out_n.append(counts.astype(np.int32))
-        if not out_q:
-            return pd.DataFrame(
-                {"query_id": [], "doc_id": [], "n_occurrences": []}
-            ).astype(
-                {"query_id": np.int64, "doc_id": np.int64,
-                 "n_occurrences": np.int32}
-            )
-        return pd.DataFrame(
-            {
-                "query_id": np.concatenate(out_q),
-                "doc_id": np.concatenate(out_d),
-                "n_occurrences": np.concatenate(out_n),
-            }
-        )
-
-    est_chunks = max(1, int(meta.n_docs) >> meta.chunk_bits)
-    n_parts = max(
-        8, min(spark.sparkContext.defaultParallelism * 2, est_chunks)
+    rows = chunk_groups(
+        spark, meta, index_df.where(_term_filter(all_terms, meta)).select(*PHRASE_COLS)
     )
-    return (
-        group_partitioned(matched, F.col("chunk"), n_parts)
-        .groupBy("chunk")
-        .applyInPandas(match_many, BATCH_PHRASE_SCHEMA)
-        .orderBy("query_id", "doc_id")
-    )
+    return phrase_in_place_frame(
+        rows, qterms, slop, ordered, lucene,
+        partial(decode_shard_arrays, positions=True), index_bytes(index_dir),
+    ).orderBy("query_id", "doc_id")

@@ -404,7 +404,7 @@ SERVING = {
     "plans/wand.py": None,
     "operators/similarity.py": None,
     "operators/fused_probe.py": None,
-    "operators/bm25.py": {"cached_topk_local", "topk_pre_grouped"},
+    "operators/bm25.py": {"cached_topk_local", "topk_pre_grouped", "phrase_match"},
     "operators/fuzzy.py": {"candidate_filter"},
 }
 
@@ -469,7 +469,8 @@ def test_isin_guard_sees_a_column_isin(tmp_path):
 
 # the modules whose serving jobs run through ``sources.tables.StandingMap``:
 # all of ``plans/`` and the serving operators, the dictionary's Bloom
-# filter build (one job per attach, not per call) excepted
+# filter build (one job per attach, not per call) excepted.  A grouped
+# ``applyInPandas`` is not allowed either: it brings an exchange of its own
 MAP_SERVING = ("plans", "operators/bm25.py", "operators/similarity.py",
                "operators/fused_probe.py", "operators/pq.py", "operators/sq.py",
                "operators/fuzzy.py")
@@ -479,15 +480,17 @@ MAP_EXEMPT = {"operators/fuzzy.py": {"dictionary_bloom"}}
 def _map_calls(path: str, exempt: set[str]) -> list[tuple[int, str]]:
     return [
         (line, fn)
-        for line, fn in _method_calls(path, {"mapInPandas", "mapInArrow"}, None)
+        for line, fn in _method_calls(
+            path, {"mapInPandas", "mapInArrow", "applyInPandas"}, None
+        )
         if fn not in exempt
     ]
 
 
 def test_no_map_udf_outside_the_standing_helper():
     """A serving job plans its Python stage through the standing helper:
-    a ``mapInPandas`` / ``mapInArrow`` call rebuilds its UDF (~45 py4j
-    round trips) on every call."""
+    a ``mapInPandas`` / ``mapInArrow`` / ``applyInPandas`` call rebuilds
+    its UDF (~45 py4j round trips) on every call."""
     root = os.path.dirname(pkg.__file__)
     files = []
     for rel in MAP_SERVING:
@@ -511,17 +514,20 @@ def test_no_map_udf_outside_the_standing_helper():
 
 
 def test_map_guard_sees_a_map_call(tmp_path):
-    """The guard's negative control: a ``mapInArrow`` call in any function
-    is reported, one in an exempt function is not."""
+    """The guard's negative control: a ``mapInArrow`` or grouped
+    ``applyInPandas`` call in any function is reported, one in an exempt
+    function is not."""
     src = tmp_path / "mod.py"
     src.write_text(
         "def serve(df, body):\n"
         "    return df.mapInArrow(body, 'x long')\n"
         "def build(df, body):\n"
         "    return df.mapInPandas(body, 'x long')\n"
+        "def match(df, body):\n"
+        "    return df.groupBy('chunk').applyInPandas(body, 'x long')\n"
     )
-    assert _map_calls(str(src), set()) == [(2, "serve"), (4, "build")]
-    assert _map_calls(str(src), {"build"}) == [(2, "serve")]
+    assert _map_calls(str(src), set()) == [(2, "serve"), (4, "build"), (6, "match")]
+    assert _map_calls(str(src), {"build"}) == [(2, "serve"), (6, "match")]
 
 
 # -- spec hygiene ---------------------------------------------------------------

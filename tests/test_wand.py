@@ -64,24 +64,6 @@ def pos_corpus(spark, sf_smoke_dir, tmp_path_factory):
     return docs, index_dir, idx, meta
 
 
-@pytest.mark.parametrize(
-    "phrase", [["key", "order"], ["fast", "key", "order"], ["merge", "sort"], ["zz", "qq"]]
-)
-def test_phrase_identity_vs_dataframe(spark, pos_corpus, phrase):
-    from hybrid_sanctions_search_engine_spark.operators.bm25 import phrase_match
-    from hybrid_sanctions_search_engine_spark.plans.wand import phrase_search
-
-    docs, index_dir, idx, meta = pos_corpus
-    expected = sorted(
-        (r["doc_id"], r["n_occurrences"]) for r in phrase_match(docs, phrase).collect()
-    )
-    got = sorted(
-        (r["doc_id"], r["n_occurrences"])
-        for r in phrase_search(spark, index_dir, phrase, index_df=idx, meta=meta).collect()
-    )
-    assert got == expected
-
-
 def test_phrase_requires_positions(spark, corpus):
     from hybrid_sanctions_search_engine_spark.plans.wand import phrase_search
 
@@ -203,40 +185,6 @@ def test_cache_and_cold_index_identical(spark, corpus, standing_plan, query):
     assert rows(plan.index_df, plan.index_meta) == rows(idx, meta)
 
 
-@pytest.mark.parametrize(
-    "phrase,slop",
-    [
-        (["table", "value"], 1),
-        (["table", "value", "row"], 1),
-        (["table", "value", "row"], 2),
-        (["key", "order"], 2),
-    ],
-)
-def test_phrase_slop_identity_vs_dataframe(spark, pos_corpus, phrase, slop):
-    """Sloppy phrase: indexed packed-key path ≡ DataFrame positions path
-    under the anchored slop contract, and slop strictly widens the match
-    set (slop=0 matches ⊆ slop=s matches)."""
-    from hybrid_sanctions_search_engine_spark.operators.bm25 import phrase_match
-    from hybrid_sanctions_search_engine_spark.plans.wand import phrase_search
-
-    docs, index_dir, idx, meta = pos_corpus
-    expected = sorted(
-        (r["doc_id"], r["n_occurrences"])
-        for r in phrase_match(docs, phrase, slop=slop).collect()
-    )
-    got = sorted(
-        (r["doc_id"], r["n_occurrences"])
-        for r in phrase_search(
-            spark, index_dir, phrase, index_df=idx, meta=meta, slop=slop
-        ).collect()
-    )
-    assert got == expected
-    exact_docs = {
-        r["doc_id"] for r in phrase_match(docs, phrase, slop=0).collect()
-    }
-    assert exact_docs <= {d for d, _ in expected}
-
-
 def test_phrase_slop_semantics_unit(spark):
     """Pin the anchored contract on a hand-built doc: in 'a x b y c' with
     phrase [a,b,c] anchored at p=0, b sits at slot+1 and c at slot+2 — so
@@ -291,40 +239,6 @@ def test_batch_phrase_parity(spark, pos_corpus, slop):
             ).collect()
         )
         assert sorted(got[qid]) == want, (qid, p, slop)
-
-
-@pytest.mark.parametrize(
-    "phrase,slop",
-    [
-        (["table", "value"], 2),
-        (["table", "value", "row"], 1),
-        (["table", "value", "row"], 2),
-    ],
-)
-def test_phrase_unordered_identity_vs_dataframe(spark, pos_corpus, phrase, slop):
-    """ES-style unordered slop: indexed packed-key path ≡ DataFrame
-    positions path under the symmetric-window contract, and the unordered
-    match set is a superset of the ordered one at the same slop."""
-    from hybrid_sanctions_search_engine_spark.operators.bm25 import phrase_match
-    from hybrid_sanctions_search_engine_spark.plans.wand import phrase_search
-
-    docs, index_dir, idx, meta = pos_corpus
-    expected = sorted(
-        (r["doc_id"], r["n_occurrences"])
-        for r in phrase_match(docs, phrase, slop=slop, ordered=False).collect()
-    )
-    got = sorted(
-        (r["doc_id"], r["n_occurrences"])
-        for r in phrase_search(
-            spark, index_dir, phrase, index_df=idx, meta=meta,
-            slop=slop, ordered=False,
-        ).collect()
-    )
-    assert got == expected
-    ordered_docs = {
-        r["doc_id"] for r in phrase_match(docs, phrase, slop=slop).collect()
-    }
-    assert ordered_docs <= {d for d, _ in expected}
 
 
 def test_phrase_unordered_semantics_unit(spark):
@@ -394,59 +308,28 @@ def test_phrase_lucene_semantics_unit(spark):
     assert 3 in match(["a", "b", "c"], 4, lucene=True)
 
 
-@pytest.mark.parametrize(
-    "phrase,slop",
-    [
-        (["table", "value"], 2),
-        (["order", "key"], 2),
-        (["table", "value", "row"], 1),
-        (["table", "value", "row"], 2),
-    ],
-)
-def test_phrase_lucene_identity_vs_dataframe(spark, pos_corpus, phrase, slop):
-    """Exact-Lucene span contract: indexed packed-key path (biased-anchor
-    arithmetic) ≡ DataFrame positions path, counts included; and the
-    subset chain ordered ⊆ lucene ⊆ unordered holds at the same slop
-    (provable from the window algebra — a span-≤-slop alignment embeds in
-    the symmetric windows of any of its term-0 choices, and an anchored
-    match has span ≤ slop by construction)."""
-    from hybrid_sanctions_search_engine_spark.operators.bm25 import phrase_match
-    from hybrid_sanctions_search_engine_spark.plans.wand import phrase_search
-
-    docs, index_dir, idx, meta = pos_corpus
-    expected = sorted(
-        (r["doc_id"], r["n_occurrences"])
-        for r in phrase_match(docs, phrase, slop=slop, lucene=True).collect()
-    )
-    got = sorted(
-        (r["doc_id"], r["n_occurrences"])
-        for r in phrase_search(
-            spark, index_dir, phrase, index_df=idx, meta=meta,
-            slop=slop, lucene=True,
-        ).collect()
-    )
-    assert got == expected
-    lucene_docs = {d for d, _ in expected}
-    ordered_docs = {
-        r["doc_id"] for r in phrase_match(docs, phrase, slop=slop).collect()
-    }
-    unordered_docs = {
-        r["doc_id"]
-        for r in phrase_match(docs, phrase, slop=slop, ordered=False).collect()
-    }
-    assert ordered_docs <= lucene_docs <= unordered_docs
-
-
-def _brute_lucene_anchors(tokens, phrase, slop):
-    """Independent brute-force oracle for the exact-Lucene contract:
-    enumerate alignments (one position per phrase slot, windows
-    [s+i, s+i+slop], DISTINCT positions within a repeated term's slots)
-    for every candidate anchor s in the adjusted-position union."""
+def _brute_anchors(tokens, phrase, slop, mode):
+    """Independent brute-force oracle of the three phrase contracts: the
+    anchors of ``phrase`` in ``tokens`` at ``slop``.  ``ordered`` and
+    ``symmetric`` anchor on term 0's positions p and need every later term
+    i in [p+i, p+i+slop] or [p+i−slop, p+i+slop]; ``lucene`` enumerates
+    alignments (one position per phrase slot, windows [s+i, s+i+slop],
+    DISTINCT positions within a repeated term's slots) for every candidate
+    anchor s in the adjusted-position union."""
     from itertools import product
 
     pos = {t: [i for i, x in enumerate(tokens) if x == t] for t in set(phrase)}
     if any(not pos[t] for t in phrase):
         return set()
+    if mode != "lucene":
+        lo = -slop if mode == "symmetric" else 0
+        return {
+            p for p in pos[phrase[0]]
+            if all(
+                any(p + i + lo <= q <= p + i + slop for q in pos[t])
+                for i, t in enumerate(phrase) if i
+            )
+        }
     cand = {p - i for i, t in enumerate(phrase) for p in pos[t]}
     valid = set()
     for s in cand:
@@ -464,6 +347,103 @@ def _brute_lucene_anchors(tokens, phrase, slop):
                 valid.add(s)
                 break
     return valid
+
+
+def _brute_counts(doc_tokens, phrase, slop, mode) -> dict:
+    """{doc_id: n_occurrences} of the brute-force oracle."""
+    out = {}
+    for doc_id, tokens in doc_tokens:
+        anchors = _brute_anchors(tokens, phrase, slop, mode)
+        if anchors:
+            out[doc_id] = len(anchors)
+    return out
+
+
+PHRASE_MODES = {
+    "ordered": {},
+    "symmetric": {"ordered": False},
+    "lucene": {"lucene": True},
+}
+
+
+def _both_paths(spark, docs, index_dir, idx, meta, phrase, slop, mode):
+    """{doc_id: n_occurrences} of ``phrase_match`` and of ``phrase_search``."""
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import phrase_match
+    from hybrid_sanctions_search_engine_spark.plans.wand import phrase_search
+
+    kw = dict(slop=slop, **PHRASE_MODES[mode])
+    raw = {
+        r["doc_id"]: r["n_occurrences"]
+        for r in phrase_match(docs, phrase, **kw).collect()
+    }
+    indexed = {
+        r["doc_id"]: r["n_occurrences"]
+        for r in phrase_search(
+            spark, index_dir, phrase, index_df=idx, meta=meta, **kw
+        ).collect()
+    }
+    return raw, indexed
+
+
+@pytest.fixture(scope="module")
+def pos_tokens(pos_corpus):
+    """(doc_id, tokens) of the positions fixture, tokenized by Spark."""
+    from hybrid_sanctions_search_engine_spark.operators.postings import (
+        tokenized_documents,
+    )
+
+    docs = pos_corpus[0]
+    return [
+        (r["doc_id"], r["tokens"] or [])
+        for r in tokenized_documents(docs).select("doc_id", "tokens").collect()
+    ]
+
+
+@pytest.mark.parametrize("mode", sorted(PHRASE_MODES))
+@pytest.mark.parametrize(
+    "phrase,slop",
+    [
+        (["key", "order"], 0),
+        (["fast", "key", "order"], 0),
+        (["merge", "sort"], 0),
+        (["zz", "qq"], 0),
+        (["table", "value"], 1),
+        (["table", "value"], 2),
+        (["order", "key"], 2),
+        (["table", "value", "row"], 1),
+        (["table", "value", "row"], 2),
+        (["key", "order"], 2),
+    ],
+)
+def test_phrase_paths_match_brute_force(
+    spark, pos_corpus, pos_tokens, phrase, slop, mode
+):
+    """Both phrase entry points — ``phrase_match`` over the documents and
+    ``phrase_search`` over the positions index — equal the brute-force
+    oracle on the fixture corpus under every contract, counts included."""
+    docs, index_dir, idx, meta = pos_corpus
+    want = _brute_counts(pos_tokens, phrase, slop, mode)
+    raw, indexed = _both_paths(spark, docs, index_dir, idx, meta, phrase, slop, mode)
+    assert raw == want
+    assert indexed == want
+
+
+@pytest.mark.parametrize(
+    "phrase,slop",
+    [(["table", "value"], 2), (["table", "value", "row"], 2), (["key", "order"], 2)],
+)
+def test_phrase_contracts_nest(pos_tokens, phrase, slop):
+    """At the same slop the contracts nest — exact ⊆ ordered ⊆ lucene ⊆
+    symmetric, the ordered set non-empty on the fixture (provable from
+    the window algebra: a span-≤-slop alignment embeds in the symmetric
+    windows of any of its term-0 choices, and an anchored match has span
+    ≤ slop by construction)."""
+    exact = set(_brute_counts(pos_tokens, phrase, 0, "ordered"))
+    ordered, lucene, symmetric = (
+        set(_brute_counts(pos_tokens, phrase, slop, m))
+        for m in ("ordered", "lucene", "symmetric")
+    )
+    assert ordered and exact <= ordered <= lucene <= symmetric
 
 
 def test_phrase_lucene_repeated_terms_unit(spark):
@@ -493,6 +473,25 @@ def test_phrase_lucene_repeated_terms_unit(spark):
     assert match(["a", "b", "a"], 0).get(4) == 2
 
 
+@pytest.fixture(scope="module")
+def random_phrase_corpus(spark, tmp_path_factory):
+    """A seeded random corpus over a 4-letter vocabulary (repeats, gaps,
+    transpositions), its positions index and its tokens."""
+    import random
+
+    rng = random.Random(20260817)
+    rows = [
+        (i, " ".join(rng.choice("a a b b c x".split()) for _ in range(rng.randint(1, 8))))
+        for i in range(60)
+    ]
+    docs = spark.createDataFrame(rows, "doc_id long, text string")
+    index_dir = str(tmp_path_factory.mktemp("random_phrase_idx"))
+    build_index(docs, index_dir, n_shards=2, chunk_bits=5, store_positions=True)
+    idx, meta = load_index(spark, index_dir)
+    return docs, index_dir, idx, meta, [(i, t.split()) for i, t in rows]
+
+
+@pytest.mark.parametrize("mode", sorted(PHRASE_MODES))
 @pytest.mark.parametrize(
     "phrase,slop",
     [
@@ -504,46 +503,16 @@ def test_phrase_lucene_repeated_terms_unit(spark):
         (["b", "a"], 3),
     ],
 )
-def test_phrase_lucene_brute_force_cross_check(spark, tmp_path, phrase, slop):
-    """Both lucene-mode paths ≡ an independent brute-force alignment
-    enumerator (distinct positions for repeated slots) over a seeded
-    random corpus — anchors counted, not just doc sets."""
-    import random
-
-    from hybrid_sanctions_search_engine_spark.operators.bm25 import phrase_match
-    from hybrid_sanctions_search_engine_spark.plans.wand import phrase_search
-    from hybrid_sanctions_search_engine_spark.sources.index_io import (
-        build_index,
-        load_index,
-    )
-
-    rng = random.Random(20260817)
-    rows = [
-        (i, " ".join(rng.choice("a a b b c x".split()) for _ in range(rng.randint(1, 8))))
-        for i in range(60)
-    ]
-    docs = spark.createDataFrame(rows, "doc_id long, text string")
-    expected = {}
-    for doc_id, text in rows:
-        anchors = _brute_lucene_anchors(text.split(), phrase, slop)
-        if anchors:
-            expected[doc_id] = len(anchors)
-    got_df = {
-        r["doc_id"]: r["n_occurrences"]
-        for r in phrase_match(docs, phrase, slop=slop, lucene=True).collect()
-    }
-    assert got_df == expected
-    index_dir = str(tmp_path / "idx")
-    build_index(docs, index_dir, n_shards=2, chunk_bits=5, store_positions=True)
-    idx, meta = load_index(spark, index_dir)
-    got_idx = {
-        r["doc_id"]: r["n_occurrences"]
-        for r in phrase_search(
-            spark, index_dir, phrase, index_df=idx, meta=meta,
-            slop=slop, lucene=True,
-        ).collect()
-    }
-    assert got_idx == expected
+def test_phrase_brute_force_cross_check(spark, random_phrase_corpus, phrase, slop, mode):
+    """Both phrase paths ≡ the independent brute-force oracle over a
+    seeded random corpus, under every contract — anchors counted, not just
+    doc sets."""
+    docs, index_dir, idx, meta, doc_tokens = random_phrase_corpus
+    want = _brute_counts(doc_tokens, phrase, slop, mode)
+    assert want
+    raw, indexed = _both_paths(spark, docs, index_dir, idx, meta, phrase, slop, mode)
+    assert raw == want
+    assert indexed == want
 
 
 def test_batch_phrase_lucene_parity(spark, pos_corpus):
@@ -602,27 +571,44 @@ def test_batch_phrase_unordered_parity(spark, pos_corpus):
         assert sorted(got[qid]) == want, (qid, p)
 
 
-def test_batch_scorer_partitioning_pinned(spark, corpus):
+def test_batch_scorer_partitioning_pinned(spark, corpus, pos_corpus):
     """One-off calls open their rows with one explicit repartition: in the
     executed plan after the job ran (AQE's final plan), exactly ONE
-    exchange sits between the scan and the Python scorer — on
-    ``pmod(chunk, n)`` over the parquet index (``chunk_groups``), on doc_id
-    over raw documents (``doc_groups``; the tf aggregate above it needs no
-    second one) — in the REPARTITION_BY_NUM form AQE's byte-based
+    exchange sits between the scan and the Python stage — on
+    ``pmod(chunk, n)`` over the parquet index (``chunk_groups``: BM25 and
+    phrase search), on doc_id over raw documents (``doc_groups``: BM25,
+    where the tf aggregate above it needs no second one, and
+    ``phrase_match``) — in the REPARTITION_BY_NUM form AQE's byte-based
     coalescing leaves alone, so it can't serialize the CPU-heavy scoring
-    (measured 11.5 s → 1.7 s on a 100-query × 960k-doc batch)."""
-    from hybrid_sanctions_search_engine_spark.operators.bm25 import batch_topk
-    from hybrid_sanctions_search_engine_spark.plans.wand import batch_topk_indexed
+    (measured 11.5 s → 1.7 s on a 100-query × 960k-doc batch).  The Python
+    stage is the in-place ``MapInPandas`` body, never a grouped map."""
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import (
+        batch_topk,
+        phrase_match,
+    )
+    from hybrid_sanctions_search_engine_spark.plans.wand import (
+        batch_phrase_search,
+        batch_topk_indexed,
+        phrase_search,
+    )
 
     docs, index_dir, idx, meta = corpus
+    _, pos_dir, pos_idx, pos_meta = pos_corpus
     batch = [(1, "spark query"), (2, "table scan")]
+    phrases = [(1, "key order"), (2, "table value row")]
     frames = [
         ("(pmod(chunk", batch_topk_indexed(spark, index_dir, batch, k=5, index_df=idx, meta=meta)),
         ("(pmod(chunk", topk_search(spark, index_dir, "spark query", k=5, index_df=idx, meta=meta)),
         ("(doc_id", batch_topk(docs, batch, k=5)),
+        ("(pmod(chunk", phrase_search(spark, pos_dir, "key order", index_df=pos_idx, meta=pos_meta)),
+        ("(pmod(chunk", batch_phrase_search(
+            spark, pos_dir, phrases, index_df=pos_idx, meta=pos_meta, slop=2, lucene=True,
+        )),
+        ("(doc_id", phrase_match(docs, ["key", "order"], slop=1)),
     ]
     for key, df in frames:
         df.collect()
+        assert "FlatMapGroupsInPandas" not in df._jdf.queryExecution().executedPlan().toString()
         below = _scorer_input(df, scan="FileScan")
         assert below.count("Exchange") == 1, below
         assert f"Exchange hashpartitioning{key}" in below, below
@@ -673,14 +659,12 @@ def test_pre_grouped_scorer_plans_zero_exchanges(spark, corpus):
 
 def _scorer_input(df, scan: str = "InMemoryTableScan") -> str:
     """The executed plan from the Python scorer node down to the scan."""
-    import re
-
     text = df._jdf.queryExecution().executedPlan().toString()
-    m = re.search(r"(FlatMapGroups|Map)InPandas", text)
-    assert m, text
-    end = text.find(scan, m.start())
-    assert end > m.start(), text
-    return text[m.start():end]
+    start = text.find("MapInPandas")
+    assert start >= 0, text
+    end = text.find(scan, start)
+    assert end > start, text
+    return text[start:end]
 
 
 def _jobs_and_tasks(spark, fn) -> tuple[int, int]:
@@ -1071,6 +1055,89 @@ def test_pre_grouped_flushes_by_posting_budget(monkeypatch):
     assert got == served(cached, 0, decoded)[0]
     assert 1 < len(calls) < 16
     assert all(c["n_docs"].sum() >= budget for c in calls[:-1])
+
+
+def test_phrase_body_raw_and_shard_feeds_agree():
+    """Spark-free pin of the one phrase body (``phrase_in_place``): raw
+    (doc_id, term, pos) rows and encoded shard rows of one seeded corpus,
+    each fed as one batch and as odd-sized batches that split cached
+    partitions under a small flush budget, give the brute-force oracle's
+    rows under every contract — counts included, a negative Lucene anchor
+    ("b a" for phrase "a b" at slop 2) among them.  The doc ids start at
+    2^23, where a raw ``doc_id << 40`` overflows int64: only the dense
+    per-flush remap packs them."""
+    from functools import partial
+
+    import numpy as np
+    import pandas as pd
+
+    from hybrid_sanctions_search_engine_spark.operators.bm25 import (
+        PhraseSpec,
+        partition_flushes,
+        phrase_in_place,
+    )
+    from hybrid_sanctions_search_engine_spark.sources.index_io import (
+        _encode_posting_frame,
+        decode_shard_arrays,
+    )
+
+    rng = np.random.default_rng(19)
+    base = 1 << 23
+    doc_tokens = [
+        (base + 3 * i + int(rng.integers(0, 3)),
+         [str(t) for t in rng.choice(list("aabbcx"), int(rng.integers(1, 12)))])
+        for i in range(300)
+    ] + [(base + 5000, ["b", "a"])]
+    raw = pd.DataFrame(
+        [(d, t, p) for d, toks in doc_tokens for p, t in enumerate(toks)],
+        columns=["doc_id", "term", "pos"],
+    )
+    raw = raw.assign(part=raw["doc_id"] % 7).sort_values("part", kind="mergesort")
+    post = (
+        raw.groupby(["term", "doc_id"])["pos"].agg(list).rename("positions").reset_index()
+    )
+    lens = {d: len(toks) for d, toks in doc_tokens}
+    post = post.assign(
+        tf=post["positions"].str.len(),
+        doc_len=post["doc_id"].map(lens),
+        chunk=post["doc_id"].to_numpy() >> 4,
+    )
+    shards, _, _ = _encode_posting_frame(post, shard=0, store_positions=True)
+    shards = shards.assign(part=shards["chunk"] % 5).sort_values(
+        ["part", "term"], kind="mergesort"
+    )
+    phrases = [
+        (1, ["a", "b"]), (2, ["b", "a"]), (3, ["a", "b", "a"]), (4, ["a", "a"]),
+        (5, ["a", "b", "c"]), (6, ["c", "zz"]),
+    ]
+    feeds = {
+        "raw": (raw, None, 7, 40),
+        "shard": (shards, partial(decode_shard_arrays, positions=True), 3, 60),
+    }
+    for rows, _, size, budget in feeds.values():
+        batches = [rows.iloc[i:i + size] for i in range(0, len(rows), size)]
+        assert len(list(partition_flushes(iter(batches), budget))) > 2
+
+    for slop, mode in ((0, "ordered"), (1, "ordered"), (2, "symmetric"),
+                       (2, "lucene"), (3, "lucene")):
+        want = sorted(
+            (q, d, n)
+            for q, ts in phrases
+            for d, n in _brute_counts(doc_tokens, ts, slop, mode).items()
+        )
+        assert want
+        if mode == "lucene" and slop == 2:
+            assert (1, base + 5000, 1) in want
+        kw = PHRASE_MODES[mode]
+        for rows, flatten, size, budget in feeds.values():
+            batches = [rows.iloc[i:i + size] for i in range(0, len(rows), size)]
+            for feed, flush in (([rows], 1 << 30), (batches, budget)):
+                spec = PhraseSpec(
+                    phrases, slop, kw.get("ordered", True), kw.get("lucene", False),
+                    flatten, flush,
+                )
+                out = pd.concat(list(phrase_in_place(spec, iter(feed))))
+                assert sorted(map(tuple, out.values.tolist())) == want, (slop, mode)
 
 
 def test_es_min_should_match_rules():
