@@ -152,7 +152,7 @@ def reference_topk(
     norms = np.maximum(np.linalg.norm(x, axis=1), 1e-300)
     prep = probe_queries(queries, cents, n_probe)
     if prepare is not None:
-        score_masked = prepare(prep)
+        score_masked = prepare(prep.qmat)
         codes = np.frombuffer(
             b"".join(tbl[code_col].to_pylist()), dtype=np.uint8
         ).reshape(len(ids), -1)

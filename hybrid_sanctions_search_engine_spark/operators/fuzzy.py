@@ -30,7 +30,7 @@ machinery:
   * the vector leg's L9 fuzz rerank (``hybrid_search_service.py:990-1030``)
     and L10 anchor multiplier as one Python kernel,
     ``rerank_row``, which each vector probe task runs over its own
-    task-local top-k rows (``similarity.topk_record_batch``): the doc text
+    task-local top-k rows (``similarity.probe_task``): the doc text
     never leaves the task.  ``rapidfuzz_rerank_expr`` stays as its JVM
     reference, which the tests compare it against row for row.
   * tier boosts (``elasticsearch_adapters.py:447-466``).

@@ -198,7 +198,7 @@ def adc_lookup_table(query_vec: list[float], codebooks: np.ndarray) -> np.ndarra
 
 def adc_scorer(centroids: np.ndarray, codebooks: np.ndarray):
     """The residual ADC code score, as a ``fused_probe.PrepareScorer``:
-    given a batch's ``ProbeQueries``, a ``score_masked(qi, codes, cells)``
+    given the query rows (``ProbeSpec.qmat``), a ``score_masked(qi, codes, cells)``
     returning ``q̂·c(cell) + Σ_j lut[j, code_j]`` per row.  The probe and
     ``ann_recall.reference_topk`` both score through it.  A partial of a
     module-level function over the index's arrays, so a standing cache
@@ -206,14 +206,15 @@ def adc_scorer(centroids: np.ndarray, codebooks: np.ndarray):
     return partial(adc_prepare, centroids, codebooks)
 
 
-def adc_prepare(centroids: np.ndarray, codebooks: np.ndarray, queries):
+def adc_prepare(centroids: np.ndarray, codebooks: np.ndarray, qmat: np.ndarray):
     # per-query adc_lookup_table calls and centroid gemvs, NOT one 3-D
     # einsum / one gemm: a fused contraction can sum in a different
     # order, so a query's scores would depend on which queries share
     # its batch, and a last-ulp drift flips candidate selection at the
-    # refine boundary
-    luts = [adc_lookup_table(v, codebooks) for v in queries.qmat]
-    cent_dots = [centroids @ v for v in queries.qn]
+    # refine boundary.  A unit query row is the row over its own clamped
+    # norm, as ``similarity.probe_queries`` ranks the cells with
+    luts = [adc_lookup_table(v, codebooks) for v in qmat]
+    cent_dots = [centroids @ (v / max(float(np.linalg.norm(v)), 1e-300)) for v in qmat]
     return partial(adc_score_masked, luts, cent_dots, np.arange(codebooks.shape[0]))
 
 

@@ -23,6 +23,7 @@ equivalents:
 from __future__ import annotations
 
 from dataclasses import dataclass
+from functools import partial
 from typing import NamedTuple
 
 import numpy as np
@@ -138,10 +139,10 @@ def knn_bruteforce_many(
     (``crossJoin(queries)`` + a per-query window) materializes
     |corpus| × |queries| rows through a shuffle — the exact per-(query, doc)
     fan-out CLAUDE.md bans for BM25.  Here the fan-out never leaves the Arrow
-    task: each record batch is scored against the whole query matrix in
-    numpy and only the batch-local top-k per query is emitted (by the
-    compound (-cos, id) order, so the global merge is EXACT — ties at the
-    k-th score keep the smallest id, same as ``knn_bruteforce``).
+    task: ``probe_task`` scores each record batch against every query in
+    numpy and emits only the task-local top-k per query (by the compound
+    (-cos, id) order, so the global merge is EXACT — ties at the k-th
+    score keep the smallest id, same as ``knn_bruteforce``).
     ``as_rows`` / ``rerank`` pick the merge as in ``knn_ivf_probe_many``.
 
     Scoring loops one ``row_cosines`` per query instead of a single
@@ -153,50 +154,8 @@ def knn_bruteforce_many(
     if not queries:
         spark = frame_of(embeddings).sparkSession
         return [] if as_rows else local_frame(spark, [], probe_schema(id_col, rerank))
-    qids = np.asarray([q for q, _ in queries], dtype=np.int64)
-    qmat = np.asarray([v for _, v in queries], dtype=np.float64)
-    qnorms = np.maximum(np.linalg.norm(qmat, axis=1), 1e-300)
-    smap = serving_map(
-        embeddings, probe_input_cols([id_col, vec_col], rerank),
-        bruteforce_task, probe_schema(id_col, rerank), arrow=True,
-    )
-    local = smap.frame(
-        BruteForceSpec(qids, qmat, qnorms, k, id_col, vec_col, rerank)
-    )
-    if rerank is not None:
-        return local
-    return merge_probe_tops(local, k, id_col, as_rows)
-
-
-class BruteForceSpec(NamedTuple):
-    """A ``knn_bruteforce_many`` call's spec: its queries (ids, rows, 1-D
-    norms), k, the columns and the rerank inputs."""
-
-    qids: np.ndarray
-    qmat: np.ndarray
-    qnorms: np.ndarray
-    k: int
-    id_col: str
-    vec_col: str
-    rerank: "ProbeRerank | None"
-
-
-def bruteforce_task(spec: BruteForceSpec, batches):
-    """``knn_bruteforce_many``'s body: each Arrow batch scored against every
-    query, its local top-k per query emitted (reranked with ``rerank``)."""
-    for batch in batches:
-        task = task_rows([batch], [spec.id_col, spec.vec_col])
-        if task is None:
-            continue
-        rows, pdf = task
-        x, norms = vector_rows(pdf[spec.vec_col])
-        ids = pdf[spec.id_col].to_numpy(dtype=np.int64)
-        picks = []
-        for qi in range(len(spec.qids)):
-            cos = row_cosines(x, norms, spec.qmat[qi], spec.qnorms[qi])
-            top = local_topk(ids, cos, spec.k)
-            picks.append((int(spec.qids[qi]), top, cos[top]))
-        yield topk_record_batch(rows, picks, ids, spec.id_col, spec.rerank)
+    spec = probe_queries(queries).spec(k, id_col, vec_col, rerank=rerank)
+    return probe_result(probe_frame(embeddings, spec), k, id_col, as_rows, rerank)
 
 
 def knn_filtered(
@@ -445,33 +404,40 @@ def load_ivf_index(spark, path: str) -> tuple[DataFrame, np.ndarray]:
 
 
 class ProbeQueries(NamedTuple):
-    """The query side of an IVF-family probe, prepared once per batch."""
+    """The query side of a vector probe, prepared once per call."""
 
     qids: np.ndarray  # int64 query ids
     qmat: np.ndarray  # float64 query rows, as given
     qnorms: np.ndarray  # their 1-D norms, clamped at 1e-300
-    qn: np.ndarray  # the unit query rows
     cells: list[np.ndarray]  # per query: its n_probe nearest cells, nearest first
     union: list[int]  # every query's probed cells, sorted
 
+    def spec(self, k, id_col, col, key_col=None, keys=None, rerank=None) -> "ProbeSpec":
+        """The call's ``ProbeSpec``: of the queries it ships only what the
+        tasks read (ids, rows, norms)."""
+        return ProbeSpec(self.qids, self.qmat, self.qnorms, k, id_col, col, key_col, keys, rerank)
+
 
 def probe_queries(
-    queries: list[tuple[int, list[float]]], centroids: np.ndarray, n_probe: int
+    queries: list[tuple[int, list[float]]],
+    centroids: np.ndarray | None = None,
+    n_probe: int = 0,
 ) -> ProbeQueries:
-    """The one place an IVF-family probe decides its query prep and probe
+    """The one place a vector probe decides its query prep and probe
     order: every ``*_probe_many`` and ``ann_recall.reference_topk`` call
     it.  A query's norm is its own 1-D ``np.linalg.norm`` (the bits the
-    cosine refine divides by); its cells rank by centroid cosine."""
+    cosine refine divides by); its cells rank by centroid cosine (none
+    without ``centroids``: the exact scan)."""
     qids = np.asarray([q for q, _ in queries], dtype=np.int64)
     qmat = np.asarray([v for _, v in queries], dtype=np.float64)
     qnorms = np.array([max(float(np.linalg.norm(v)), 1e-300) for v in qmat])
     qn = qmat / qnorms[:, None]
     cells = [
         np.argsort(-(centroids @ qn[i]))[:n_probe].astype(np.int64)
-        for i in range(len(qids))
+        for i in range(len(qids) if centroids is not None else 0)
     ]
     union = sorted({int(c) for cs in cells for c in cs})
-    return ProbeQueries(qids, qmat, qnorms, qn, cells, union)
+    return ProbeQueries(qids, qmat, qnorms, cells, union)
 
 
 def knn_ivf_probe_many(
@@ -487,9 +453,10 @@ def knn_ivf_probe_many(
     rerank: ProbeRerank | None = None,
 ) -> "DataFrame | list[tuple[int, int, float]]":
     """Batched IVF ANN probe in ONE map-only pass (round 6): each Arrow
-    task of the pruned union-of-cells scan scores every query against only
-    the rows in THAT query's probed cells (an in-task cell mask) and emits
-    the task-local top-k per query.
+    task of the pruned union-of-cells scan streams its record batches
+    through ``probe_task``, scoring every query against only the rows in
+    THAT query's probed cells (an in-batch cell mask), and emits the
+    task-local top-k per query.
 
     The merge to each query's exact global top-k (same (cos desc, id asc)
     order) is picked by the arguments:
@@ -519,60 +486,107 @@ def knn_ivf_probe_many(
     if not queries:
         spark = frame_of(indexed).sparkSession
         return [] if as_rows else local_frame(spark, [], probe_schema(id_col, rerank))
-    qids, qmat, qnorms, _, cells, union = probe_queries(queries, centroids, n_probe)
-    smap = serving_map(
-        indexed, probe_input_cols([id_col, vec_col, cell_col], rerank),
-        ivf_probe_task, probe_schema(id_col, rerank), arrow=True,
-    )
-    local = smap.frame(
-        IvfProbeSpec(qids, qmat, qnorms, cells, k, id_col, vec_col, cell_col, rerank),
-        sql_in(cell_col, union),
-    )
-    if rerank is not None:
-        return local
-    return merge_probe_tops(local, k, id_col, as_rows)
+    prep = probe_queries(queries, centroids, n_probe)
+    spec = prep.spec(k, id_col, vec_col, cell_col, prep.cells, rerank)
+    local = probe_frame(indexed, spec, sql_in(cell_col, prep.union))
+    return probe_result(local, k, id_col, as_rows, rerank)
 
 
-class IvfProbeSpec(NamedTuple):
-    """A ``knn_ivf_probe_many`` call's spec: its queries (ids, rows, 1-D
-    norms, probed cells), k, the columns and the rerank inputs."""
+# -- the one probe body: a task's batches streamed through a running top-k
+
+class ProbeSpec(NamedTuple):
+    """A vector probe call's spec, ``probe_task``'s input
+    (``ProbeQueries.spec``): the query ids, rows and norms, how many rows
+    each query keeps per task (``k``), the id column, the scored column
+    (vectors, or byte codes), the rows each query scores — those whose
+    ``key_col`` value is in ``keys[qi]`` (its probed cells, or its
+    candidate ids), every row when ``keys`` is None — and the rerank
+    inputs."""
 
     qids: np.ndarray
     qmat: np.ndarray
     qnorms: np.ndarray
-    cells: list
     k: int
     id_col: str
-    vec_col: str
-    cell_col: str
+    col: str
+    key_col: str | None
+    keys: list | None  # per query: an int array or list
     rerank: "ProbeRerank | None"
 
 
-def ivf_probe_task(spec: IvfProbeSpec, batches):
-    """``knn_ivf_probe_many``'s body: the task's Arrow batches as one table
-    FIRST, so the per-query mask+cosine loop runs once per TASK instead of
-    once per ~10k-row batch (identical per-row float ops, so results are
-    bit-equal; memory stays bounded by the task's partition), then each
-    query's local top-k over the rows of its probed cells."""
-    task = task_rows(batches, [spec.id_col, spec.vec_col, spec.cell_col])
-    if task is None:
-        return
-    rows, pdf = task
-    x, norms = vector_rows(pdf[spec.vec_col])
-    ids = pdf[spec.id_col].to_numpy(dtype=np.int64)
-    cell = pdf[spec.cell_col].to_numpy(dtype=np.int64)
-    batch_cells = set(int(c) for c in np.unique(cell))
-    picks = []
-    for qi in range(len(spec.qids)):
-        probe = [c for c in spec.cells[qi] if int(c) in batch_cells]
-        if not probe:
+def cosine_scorer(spec: ProbeSpec):
+    """``probe_task``'s cosine scorer: per batch the ``vector_rows`` of its
+    vectors, then per query the ``row_cosines`` of its selected rows."""
+
+    def batch_scorer(batch: pa.RecordBatch):
+        x, norms = vector_rows(batch.column(spec.col).to_pandas())
+        return lambda qi, sel: row_cosines(x[sel], norms[sel], spec.qmat[qi], spec.qnorms[qi])
+
+    return batch_scorer
+
+
+def probe_task(spec: ProbeSpec, batches, scorer=cosine_scorer):
+    """Every vector probe's ``mapInArrow`` body: the task's Arrow batches
+    streamed through one running top-k per query.  ``scorer(spec)`` is
+    called once per task; what it returns is called once per batch and
+    gives ``score(qi, sel)``, query ``qi``'s scores of the batch's rows
+    ``sel``.  Each batch's ``local_topk`` of a query's rows is merged
+    into the query's running top ``k`` under (score desc, id asc).
+    The merge is exact and every scorer is row-local, so the tops are bit
+    for bit those of the task's whole input in one block, at any batch
+    size.  A task holds one batch plus |queries| × k rows: only the
+    survivors' ``probe_carried_cols`` values leave their batch.  With
+    ``rerank`` the final tops are reranked (``fuzzy.rerank_row``) and
+    emitted with no text; the output is ≤ |queries| × k rows."""
+    k = spec.k
+    carried = probe_carried_cols(spec.rerank)
+    score_batch = scorer(spec)
+    tops: dict[int, tuple] = {}  # query index -> (ids, scores, {col: values})
+    for batch in batches:
+        if not batch.num_rows:
             continue
-        sel = np.flatnonzero(np.isin(cell, np.asarray(probe, dtype=np.int64)))
-        cos = row_cosines(x[sel], norms[sel], spec.qmat[qi], spec.qnorms[qi])
-        top = local_topk(ids[sel], cos, spec.k)
-        picks.append((int(spec.qids[qi]), sel[top], cos[top]))
-    if picks:
-        yield topk_record_batch(rows, picks, ids, spec.id_col, spec.rerank)
+        score = score_batch(batch)
+        ids = batch.column(spec.id_col).to_numpy()
+        keys = None if spec.keys is None else batch.column(spec.key_col).to_numpy()
+        rows = np.arange(batch.num_rows)
+        for qi in range(len(spec.qids)):
+            sel = (
+                slice(None) if keys is None
+                else np.flatnonzero(np.isin(keys, spec.keys[qi]))
+            )
+            pos = rows[sel]
+            if not pos.size:
+                continue
+            s = score(qi, sel)
+            top = local_topk(ids[pos], s, k)
+            pos = pos[top]
+            new = (ids[pos], s[top], {c: batch.column(c).take(pos) for c in carried})
+            if qi in tops:
+                old = tops[qi]
+                cat_ids = np.concatenate([old[0], new[0]])
+                cat_s = np.concatenate([old[1], new[1]])
+                keep = local_topk(cat_ids, cat_s, k)
+                new = (cat_ids[keep], cat_s[keep], {
+                    c: pa.concat_arrays([old[2][c], new[2][c]]).take(keep)
+                    for c in carried
+                })
+            tops[qi] = new
+    if tops:
+        yield topk_record_batch(spec, tops)
+
+
+def probe_frame(
+    rows: "DataFrame | Standing", spec: ProbeSpec, where: str | None = None,
+    scorer=None,
+) -> DataFrame:
+    """``spec``'s task-local tops over ``rows`` as a lazy frame: one
+    ``mapInArrow`` of ``probe_task`` (with ``scorer``, default cosines)
+    over the columns it reads, filtered by the predicate text ``where``."""
+    key = [] if spec.key_col is None else [spec.key_col]
+    cols = [*dict.fromkeys([spec.id_col, spec.col, *key]), *probe_carried_cols(spec.rerank)]
+    body = probe_task if scorer is None else partial(probe_task, scorer=scorer)
+    schema = probe_schema(spec.id_col, spec.rerank)
+    return serving_map(rows, cols, body, schema, arrow=True).frame(spec, where)
 
 
 def local_topk(ids: np.ndarray, scores: np.ndarray, k: int) -> np.ndarray:
@@ -602,18 +616,20 @@ def merge_local_topk(rows, k: int) -> list[tuple]:
     return out
 
 
-def merge_probe_tops(
-    local: DataFrame, k: int, id_col: str, as_rows: bool
+def probe_result(
+    local: DataFrame, k: int, id_col: str, as_rows: bool,
+    rerank: "ProbeRerank | None",
 ) -> "DataFrame | list[tuple[int, int, float]]":
-    """Each query's exact top-k of a probe's task-local tops ``local``
-    (query_id, id, cos_sim) under (cos desc, id asc): merged on the driver
-    (``as_rows``: the rows, no further job) or as a lazy per-query window
+    """A probe's answer from its task-local tops ``local`` (query_id, id,
+    score, ...): with ``rerank`` the tops themselves, lazily (the caller
+    merges them with ``merge_local_topk``); else each query's exact top-k
+    under (score desc, id asc), merged on the driver (``as_rows``: the
+    rows, no further job) or as a lazy per-query window over ``cos_sim``
     (a frame; one exchange)."""
+    if rerank is not None:
+        return local
     if as_rows:
-        return merge_local_topk(
-            ((r["query_id"], r[id_col], r["cos_sim"]) for r in collect_frame(local)),
-            k,
-        )
+        return merge_local_topk((tuple(r[:3]) for r in collect_frame(local)), k)
     from pyspark.sql import Window
 
     w = Window.partitionBy("query_id").orderBy(F.desc("cos_sim"), F.asc(id_col))
@@ -644,6 +660,13 @@ class ProbeRerank:
     anchors: dict[int, tuple[list[str], list[str]]]
     fuzz: bool
 
+    @property
+    def needs_text(self) -> bool:
+        """Whether a row's rerank reads its doc text: the fuzz rerank is
+        on, or a query carries anchors.  Without, ``rerank_row`` keeps the
+        cosine and a multiplier of 1.0, and the probe reads no text."""
+        return self.fuzz or any(d or i for d, i in self.anchors.values())
+
 
 def probe_schema(id_col: str, rerank: ProbeRerank | None) -> str:
     """The DDL schema of a probe's task-local top-k rows.  With ``rerank``
@@ -656,56 +679,47 @@ def probe_schema(id_col: str, rerank: ProbeRerank | None) -> str:
     return f"{base}, score double, anchor_mult double, {HAS_DOC_COL} boolean"
 
 
-def probe_input_cols(cols: list[str], rerank: ProbeRerank | None) -> list[str]:
-    """A probe's input columns: the scorer's, plus the doc text when the
-    task reranks its rows — every other consumer leaves it unread."""
-    return [*cols, DOC_TEXT_COL, HAS_DOC_COL] if rerank is not None else cols
+def probe_carried_cols(rerank: ProbeRerank | None) -> list[str]:
+    """The input columns a probe task keeps for its survivors: none
+    without ``rerank``; with it whether the vector has a doc row, and its
+    text when the rerank reads it — every other consumer leaves the text
+    unread."""
+    if rerank is None:
+        return []
+    return [DOC_TEXT_COL, HAS_DOC_COL] if rerank.needs_text else [HAS_DOC_COL]
 
 
-def task_rows(batches, cols: list[str]) -> tuple[pa.Table, pd.DataFrame] | None:
-    """A ``mapInArrow`` task's input batches as one Arrow table, plus a
-    pandas frame of the scorer's ``cols`` (the doc text stays Arrow), or
-    None when the task has no rows."""
-    batches = [b for b in batches if b.num_rows]
-    if not batches:
-        return None
-    rows = pa.Table.from_batches(batches)
-    return rows, rows.select(cols).to_pandas()
-
-
-def topk_record_batch(
-    rows: pa.Table,
-    picks: list[tuple[int, np.ndarray, np.ndarray]],
-    ids: np.ndarray,
-    id_col: str,
-    rerank: ProbeRerank | None,
-) -> pa.RecordBatch:
-    """A probe task's top-k rows as one Arrow batch (``probe_schema``).
-    ``picks`` holds per query (query id, the positions ``local_topk``
-    selected in ``rows``, their cosines).  With ``rerank`` the task reranks
-    those rows itself (``fuzzy.rerank_row``), so it makes Python strings
-    for its local top-k alone and emits none."""
+def topk_record_batch(spec: ProbeSpec, tops: dict[int, tuple]) -> pa.RecordBatch:
+    """A probe task's final tops as one Arrow batch (``probe_schema``):
+    ``tops`` holds per query index its (ids, scores, carried columns).
+    With ``rerank`` the task reranks those rows itself
+    (``fuzzy.rerank_row``), so it makes Python strings for its top-k alone
+    and emits none."""
+    order = sorted(tops)
     qid = np.concatenate(
-        [np.full(pos.size, q, dtype=np.int64) for q, pos, _ in picks]
+        [np.full(tops[qi][0].size, spec.qids[qi], np.int64) for qi in order]
     )
-    pos = np.concatenate([p for _, p, _ in picks])
-    cos = np.concatenate([c for _, _, c in picks])
+    score = np.concatenate([tops[qi][1] for qi in order])
     cols = {
         "query_id": pa.array(qid, pa.int64()),
-        id_col: pa.array(ids[pos], pa.int64()),
-        "cos_sim": pa.array(cos, pa.float64()),
+        spec.id_col: pa.array(np.concatenate([tops[qi][0] for qi in order]), pa.int64()),
+        "cos_sim": pa.array(score, pa.float64()),
     }
+    rerank = spec.rerank
     if rerank is not None:
-        at = pa.array(pos, pa.int64())
-        texts = rows.column(DOC_TEXT_COL).take(at).to_pylist()
+        carried = {
+            c: pa.concat_arrays([tops[qi][2][c] for qi in order])
+            for c in probe_carried_cols(rerank)
+        }
+        text = carried[DOC_TEXT_COL].to_pylist() if DOC_TEXT_COL in carried else [None] * qid.size
         scored = [
             rerank_row(rerank.qtext[q], t, c, rerank.anchors[q], rerank.fuzz)
-            for q, t, c in zip(qid.tolist(), texts, cos.tolist())
+            for q, t, c in zip(qid.tolist(), text, score.tolist())
         ]
         cols.update(
             score=pa.array([s for s, _ in scored], pa.float64()),
             anchor_mult=pa.array([m for _, m in scored], pa.float64()),
-            **{HAS_DOC_COL: rows.column(HAS_DOC_COL).take(at).combine_chunks()},
+            **{HAS_DOC_COL: carried[HAS_DOC_COL]},
         )
     return pa.RecordBatch.from_arrays(list(cols.values()), names=list(cols))
 

@@ -128,7 +128,7 @@ def _sq8_scores(codes: np.ndarray, w: np.ndarray, b: float) -> np.ndarray:
 
 def sq8_scorer(vmin: np.ndarray, vmax: np.ndarray):
     """The decoded-dot code score, as a ``fused_probe.PrepareScorer``:
-    given a batch's ``ProbeQueries``, a ``score_masked(qi, codes, cells)``
+    given the query rows (``ProbeSpec.qmat``), a ``score_masked(qi, codes, cells)``
     returning ``codes·w + b`` per row (``_sq8_query_form``).  The probe and
     ``ann_recall.reference_topk`` both score through it.  A partial of a
     module-level function over the index's arrays, so a standing cache
@@ -136,10 +136,10 @@ def sq8_scorer(vmin: np.ndarray, vmax: np.ndarray):
     return partial(sq8_prepare, vmin, vmax)
 
 
-def sq8_prepare(vmin: np.ndarray, vmax: np.ndarray, queries):
+def sq8_prepare(vmin: np.ndarray, vmax: np.ndarray, qmat: np.ndarray):
     # per-query _sq8_query_form calls, never a fused matrix form: a
     # query's (w, b) must not depend on which queries share its batch
-    forms = [_sq8_query_form(v, vmin, vmax) for v in queries.qmat]
+    forms = [_sq8_query_form(v, vmin, vmax) for v in qmat]
     return partial(sq8_score_masked, forms)
 
 

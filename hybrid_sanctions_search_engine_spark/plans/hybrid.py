@@ -769,64 +769,50 @@ class HybridSearchPlan:
         if not (targets and self._have_vectors):
             return vec_rows
         qvecs = [(q, self.encoder.encode_one(qtext[q])) for q in targets]
-        anchors = {
-            q: extract_anchors(qtext[q]) if opts.enable_anchor_boost else ([], [])
-            for q in targets
-        }
-        # rerank-free fast path: with the fuzz rerank off and no query
-        # carrying anchors, the text could only give anchor_mult = 1.0 and
-        # an unchanged score — the rows skip it
-        need_text = opts.rapidfuzz_rerank or any(d or i for d, i in anchors.values())
+        rerank = ProbeRerank(
+            qtext={q: qtext[q] for q in targets},
+            anchors={
+                q: extract_anchors(qtext[q]) if opts.enable_anchor_boost else ([], [])
+                for q in targets
+            },
+            fuzz=opts.rapidfuzz_rerank,
+        )
         for q, doc, score, cos, mult in self._probe_vector_rows(
-            qvecs, qtext, anchors, opts, need_text, cancel
+            qvecs, rerank, opts.top_k, cancel
         ):
             vec_rows[q].append(
                 {"doc_id": doc, "score": score, "cos_sim": cos, "anchor_mult": mult}
             )
         return vec_rows
 
-    def _probe_vector_rows(self, qvecs, qtext, anchors, opts, need_text, cancel):
+    def _probe_vector_rows(self, qvecs, rerank, k, cancel):
         """The plan's probe over its text-carrying vector cache, and the
-        exact gemv over the delta's: each probe task reranks its own local
+        exact scan over the delta's: each probe task reranks its own local
         top-k (``fuzzy.rerank_row``: the L9 fuzz boost and the L10 anchor
-        multiplier) and emits no text; the driver merges the collected
-        local tops by (cos desc, doc asc), keeps k, and only then drops
-        hits with no doc row — the inner-join semantics of a doc-text join
-        (such a hit vanishes; the (k+1)-th does not replace it)."""
-        k = opts.top_k
-        rerank = (
-            ProbeRerank(
-                qtext={q: qtext[q] for q, _ in qvecs},
-                anchors=anchors,
-                fuzz=opts.rapidfuzz_rerank,
-            )
-            if need_text
-            else None
-        )
-        kw = dict(k=k, as_rows=rerank is None, rerank=rerank)
-        parts = []
-        if self._probe is not None:
-            parts.append(self._probe(qvecs, **kw))
-        if self._delta_probe is not None:
-            # exact batched gemv over the delta (ids disjoint from the
-            # base), merged with the base under the same order
-            parts.append(self._delta_probe(qvecs, **kw))
-        if rerank is None:
-            return [
-                (q, d, c, c, 1.0)
-                for q, d, c in merge_local_topk(
-                    (row for part in parts for row in part), k
-                )
-            ]
+        multiplier) and emits no text; the driver collects both probes'
+        local tops in one job, merges them by (cos desc, doc asc), keeps k,
+        and only then drops hits with no doc row — the inner-join
+        semantics of a doc-text join (such a hit vanishes; the (k+1)-th
+        does not replace it).  A rerank that reads no text (the fuzz
+        rerank off, no query anchors) leaves each row's cosine as its
+        score and a multiplier of 1.0, and keeps every hit."""
+        local = None
+        for probe in (self._probe, self._delta_probe):
+            if probe is not None:
+                # the delta's ids are disjoint from the base's: one merge
+                # under the same order equals a rebuilt index's probe
+                part = probe(qvecs, k=k, rerank=rerank)
+                local = part if local is None else local.unionByName(part)
         if cancel is not None and cancel.is_set():
             release_specs()
             return []  # abandoned: don't submit the final job
-        local = parts[0]
-        for part in parts[1:]:
-            local = local.unionByName(part)
         # rows (query_id, vec_id, cos_sim, score, anchor_mult, has_doc)
         merged = merge_local_topk(collect_frame(local), k)
-        return [(q, d, s, c, m) for q, d, c, s, m, has_doc in merged if has_doc]
+        return [
+            (q, d, s, c, m)
+            for q, d, c, s, m, has_doc in merged
+            if has_doc or not rerank.needs_text
+        ]
 
     # -- the ladder -------------------------------------------------------
 

@@ -307,9 +307,15 @@ def vector_plans(spark, tmp_path_factory):
         plan.close()
 
 
+@pytest.mark.parametrize("batch", [None, 64], ids=["default-batch", "batch-64"])
 @pytest.mark.parametrize("kind", ["ivf", "ivf_pq", "ivf_sq8", "bruteforce"])
 @pytest.mark.parametrize("rerank", [True, False], ids=["rerank", "rerank-free"])
-def test_vector_probe_identical_across_partition_counts(spark, vector_plans, kind, rerank):
+def test_vector_probe_identical_across_partition_counts(
+    spark, vector_plans, kind, rerank, batch
+):
+    """Also across Arrow batch sizes: ``batch`` rows per record batch
+    (``maxRecordsPerBatch``; None keeps the session's) streams a task's
+    input through the probe body's running top-k in several batches."""
     par = spark.sparkContext.defaultParallelism
     plan = vector_plans[kind]
     # the plan's own cache: one partition for a few hundred small vectors
@@ -341,6 +347,110 @@ def test_vector_probe_identical_across_partition_counts(spark, vector_plans, kin
         out = fn(qvecs, k=K, as_rows=not rerank, rerank=probe_rerank)
         return merge_local_topk(out.collect(), K) if rerank else out
 
-    one, wide = probe(plan.ann_df), probe(wide_df)
+    one = probe(plan.ann_df)  # the session's batch size
     assert len(one) == len(VQUERIES) * K
-    assert one == wide  # exact: ids, cosines, reranked scores, anchor mults
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    old = spark.conf.get(key)
+    if batch is not None:
+        spark.conf.set(key, str(batch))
+    try:
+        # exact: ids, cosines, reranked scores, anchor mults
+        assert probe(plan.ann_df) == one
+        assert probe(wide_df) == one
+    finally:
+        spark.conf.set(key, old)
+
+
+class _TrackedBatches:
+    """An iterator of record batches that asserts, at each pull, that
+    every batch handed out two or more pulls earlier has been freed."""
+
+    def __init__(self, batches):
+        self._batches = iter(batches)
+        self.refs: list = []
+
+    def __iter__(self):
+        return self
+
+    def __next__(self):
+        import gc
+        import weakref
+
+        gc.collect()
+        for i, ref in enumerate(self.refs[:-1]):
+            assert ref() is None, f"batch {i} alive at pull {len(self.refs)}"
+        batch = next(self._batches)
+        self.refs.append(weakref.ref(batch))
+        return batch
+
+
+@pytest.mark.parametrize("layout", ["ivf", "bruteforce", "refine", "sq8"])
+@pytest.mark.parametrize("rerank", [True, False], ids=["rerank", "rerank-free"])
+def test_probe_task_frees_each_batch(layout, rerank):
+    """Spark-free: the probe body keeps no input batch past the next
+    pull (a task holds one batch plus its running tops), and its output
+    over many small batches equals one batch's, bit for bit."""
+    import pyarrow as pa
+
+    from hybrid_sanctions_search_engine_spark.operators.fused_probe import (
+        code_scorer,
+    )
+    from hybrid_sanctions_search_engine_spark.operators.similarity import (
+        probe_queries,
+        probe_task,
+    )
+    from hybrid_sanctions_search_engine_spark.operators.sq import sq8_scorer
+
+    rng = np.random.default_rng(5)
+    n = 600
+    texts = [_doc_text(rng, d, rare=d % 7 == 0) for d in range(n)]
+    x = np.array([pseudo_embedding(t, DIM) for t in texts])
+    x[50:70] = x[49]  # a tie block: equal cosines keep the smallest ids
+    cents = x[rng.choice(n, 6, replace=False)]
+    cells = (x @ cents.T).argmax(axis=1)
+    rows = pa.table({
+        "vec_id": pa.array(rng.permutation(n), pa.int64()),
+        "embedding": pa.array(list(x), pa.list_(pa.float64())),
+        "ivf_cell": pa.array(cells, pa.int32()),
+        "sq_code": pa.array(
+            [r.tobytes() for r in rng.integers(0, 256, (n, DIM), dtype=np.uint8)]
+        ),
+        "doc_text": pa.array([None if d % 9 == 0 else t for d, t in enumerate(texts)]),
+        "has_doc": pa.array([None if d % 9 == 0 else True for d in range(n)]),
+    })
+    qvecs = [(q, pseudo_embedding(t, DIM)) for q, t in VQUERIES] + [(99, list(x[49]))]
+    prep = probe_queries(qvecs, cents, 3)
+    qtext = {**dict(VQUERIES), 99: "fresh query"}
+    probe_rerank = (
+        ProbeRerank(qtext, {q: extract_anchors(t) for q, t in qtext.items()}, fuzz=True)
+        if rerank
+        else None
+    )
+    scorer = {}
+    if layout == "ivf":
+        spec = prep.spec(K, "vec_id", "embedding", "ivf_cell", prep.cells, probe_rerank)
+    elif layout == "bruteforce":
+        spec = prep.spec(K, "vec_id", "embedding", rerank=probe_rerank)
+    elif layout == "refine":
+        keys = [rng.choice(n, 40, replace=False).astype(np.int64) for _ in prep.qids]
+        spec = prep.spec(K, "vec_id", "embedding", "vec_id", keys, probe_rerank)
+    else:
+        vmin, vmax = x.min(axis=0), x.max(axis=0)
+        spec = prep.spec(3 * K, "vec_id", "sq_code", "ivf_cell", prep.cells)
+        scorer = {"scorer": partial(code_scorer, sq8_scorer(vmin, vmax), DIM)}
+
+    def run(batches):
+        return [
+            tuple(r.values())
+            for out in probe_task(spec, batches, **scorer)
+            for r in out.to_pylist()
+        ]
+
+    whole = run(iter(rows.to_batches()))
+    assert whole
+    # each batch made at its pull: a list of batches would hold them all
+    tracked = _TrackedBatches(
+        b for i in range(0, n, 37) for b in rows.slice(i, 37).to_batches()
+    )
+    assert run(tracked) == whole
+    assert len(tracked.refs) == -(-n // 37)

@@ -265,12 +265,10 @@ def test_serving_udf_bodies_import_the_package(spark, served, monkeypatch):
         # run by a standing map's ``standing_task`` or bound to a one-off
         # call's spec by functools.partial
         "operators.bm25.score_in_place",
-        # the batched vector leg's module-level Arrow-map bodies: each
+        # every vector probe's one module-level Arrow-map body (the code
+        # scan's ``fused_probe.code_scorer`` rides in its partial): it
         # emits its task's top-k, reranked in the task
-        "operators.similarity.ivf_probe_task",
-        "operators.similarity.bruteforce_task",
-        "operators.fused_probe.rerank_task",
-        "operators.fused_probe.code_scan_task",
+        "operators.similarity.probe_task",
     }
     assert {f"{PKG}.{name}" for name in expected} <= set(shipped), sorted(shipped)
     missing = [
